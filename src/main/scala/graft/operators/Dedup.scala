@@ -827,7 +827,7 @@ object Dedup {
       .write.mode("overwrite").partitionBy("ib").parquet(s"$path/docs")
     // an all-empty corpus writes no part files and the derived re-read has
     // no schema to infer — refuse loudly like TextIndex.write does
-    val back = try spark.read.parquet(s"$path/docs")
+    val back = try IndexRelation.read(spark, s"$path/docs")
       catch { case e: org.apache.spark.sql.AnalysisException =>
         throw new IllegalArgumentException(
           "refusing to index an empty corpus (no documents written)", e) }
@@ -908,24 +908,18 @@ object Dedup {
     val nB = m.nBuckets.toLong
     val norm = lower(regexp_replace(trim(col(textCol)), "\\s+", " "))
     // the batch is small by contract — one tokenizing pass, materialized
-    // once, feeds all three appends + the stats check. Default is persist
-    // + finally-unpersist (a localCheckpoint here would leak unreleasable
-    // blocks across streaming micro-batches — the round-7 fix); the stats
-    // `head()` below scans every partition, so the cache is fully
-    // populated before the appends and the UDF-heavy enrichment is never
-    // recomputed. The system property keeps the pre-fix localCheckpoint
-    // variant reachable for A/B timing ([[graft.DedupAb]]) only.
-    val enrichedBase = survivors.select(col(idCol).cast("long").as("doc_id"),
+    // once, feeds all three appends + the stats check. Persisted and
+    // unpersisted in `finally` (a localCheckpoint here would leak
+    // unreleasable blocks across streaming micro-batches — the round-7
+    // fix); the stats `head()` below scans every partition, so the cache
+    // is fully populated before the appends and the UDF-heavy enrichment
+    // is never recomputed.
+    val enriched = survivors.select(col(idCol).cast("long").as("doc_id"),
         md5(norm).as("content_hash"),
         TextFns.minhashSig(m.shingleN, m.k)(
           TextFns.tokens(lower(col(textCol)))).as("sig"),
         TextFns.wordShingles(col(textCol), m.shingleN).as("shingles"))
-    val viaCheckpoint =
-      System.getProperty("graft.dedup.append.materialize", "persist") ==
-        "localCheckpoint"
-    val enriched =
-      if (viaCheckpoint) enrichedBase.localCheckpoint(true)
-      else enrichedBase.persist()
+      .persist()
     try {
       val s = enriched.agg(min(col("doc_id")), max(col("doc_id")),
         sum(when(col("doc_id").isNull, 1).otherwise(0)), count(lit(1)),
@@ -984,7 +978,7 @@ object Dedup {
       writeIndexMeta(spark, path, m.shingleN, m.k, m.bands, m.nBuckets,
         s.getLong(1), m.nDocs + s.getLong(3), Some(candRange), candFp)
       clearPendingMarker(spark, path)
-    } finally if (!viaCheckpoint) enriched.unpersist()
+    } finally enriched.unpersist()
   }
 
   private def pendingMarkerPath(path: String) =
@@ -1014,7 +1008,14 @@ object Dedup {
     * neither needed nor available, so compaction costs one index-sized
     * read+write, not a corpus re-tokenization.
     *
-    * Staged for crash safety: all three relations rewrite into
+    * Only relations with a multi-file bucket are rewritten (each whole);
+    * a relation whose buckets already hold one file each costs one
+    * listing and no job. An index that is compact throughout — e.g.
+    * right after [[removeFromSignatureIndex]] — returns without any Spark
+    * job and without touching the meta (the pending-append refusal still
+    * runs first).
+    *
+    * Staged for crash safety: the rewritten relations land in
     * `_compact_tmp/` first, then swap in (delete old, rename new) and
     * re-assert the meta LAST. A crash before the first swap leaves the
     * live index untouched; a crash mid-swap is detectable (missing
@@ -1022,7 +1023,8 @@ object Dedup {
     */
   def compactSignatureIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit =
-    rewriteSignatureIndex(spark, path, identity, removed = () => 0L)
+    rewriteSignatureIndex(spark, path, compactOnly = true, identity,
+      removed = () => 0L)
 
   /** Remove documents from a signature index — the takedown/right-to-be-
     * forgotten maintenance pass. Same staged rewrite as
@@ -1051,10 +1053,10 @@ object Dedup {
     // refusal still fires before anything destructive, because the swap
     // phase only starts once every overlapped job (this one included)
     // has completed.
-    rewriteSignatureIndex(spark, path,
+    rewriteSignatureIndex(spark, path, compactOnly = false,
       rel => rel.join(ids, Seq("doc_id"), "left_anti"),
       removed = () => {
-        val stats = spark.read.parquet(s"$path/docs")
+        val stats = IndexRelation.read(spark, s"$path/docs")
           .join(ids.withColumn("__drop", lit(1)), Seq("doc_id"), "left")
           .agg(count(lit(1)).as("total"),
             sum(coalesce(col("__drop"), lit(0))).as("present")).head()
@@ -1068,36 +1070,49 @@ object Dedup {
       })
   }
 
-  /** Shared staged rewrite: all three relations pass through `transform`
-    * into `_compact_tmp/`, then swap in (delete old, rename new) with the
-    * meta re-asserted LAST. A crash before the first swap leaves the live
+  private val SigRelations = Seq("docs", "postings", "hashes")
+
+  /** Shared staged rewrite: the relations pass through `transform` into
+    * `_compact_tmp/`, then swap in (delete old, rename new) with the meta
+    * re-asserted LAST. A crash before the first swap leaves the live
     * index untouched; a crash mid-swap is detectable (missing relation
-    * dir) and recoverable from `_compact_tmp` or by rebuild.
+    * dir) and recoverable from `_compact_tmp` or by rebuild. A failure
+    * before the swap (a rewrite job, or the `removed` refusal) deletes
+    * `_compact_tmp` and rethrows. With `compactOnly`, relations whose
+    * buckets each hold one file are left alone, and an index with none
+    * left to rewrite returns before any job.
     */
   private def rewriteSignatureIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, transform: DataFrame => DataFrame,
+      path: String, compactOnly: Boolean, transform: DataFrame => DataFrame,
       removed: () => Long): Unit = {
-    val m = readIndexMeta(spark, path)
+    val m = readIndexMeta(spark, path) // the pending-marker refusal comes first
+    val rels =
+      if (!compactOnly) SigRelations
+      else SigRelations.filter(r => IndexRelation.needsCompaction(spark, s"$path/$r"))
+    if (rels.isEmpty) return
     val conf = spark.sparkContext.hadoopConfiguration
     val tmp = s"$path/_compact_tmp"
-    // the three relation rewrites are independent reads of disjoint live
-    // dirs into disjoint tmp dirs, and the removed-count thunk only reads
-    // the live docs/ — all four overlapped (JobPar, §2.6); the swap phase
-    // below stays sequential and only runs once all four landed (a thunk
-    // refusal therefore still precedes anything destructive: tmp is
-    // written but the LIVE index is untouched, exactly the pre-first-swap
-    // crash state the scaladoc already documents as safe)
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
+    // the relation rewrites are independent reads of disjoint live dirs
+    // into disjoint tmp dirs, and the removed-count thunk only reads the
+    // live docs/ — all overlapped (JobPar, §2.6); the swap phase below
+    // stays sequential and only runs once all of them landed (a thunk
+    // refusal therefore still precedes anything destructive, and leaves
+    // the LIVE index untouched)
     @volatile var nRemoved = 0L
-    JobPar.run((Seq("docs", "postings", "hashes").map { rel => () => {
+    try JobPar.run((rels.map { rel => () => {
       val bucketCol = rel match {
         case "docs" => "ib"; case "postings" => "kb"; case _ => "hb"
       }
-      transform(spark.read.parquet(s"$path/$rel"))
+      transform(IndexRelation.read(spark, s"$path/$rel"))
         .repartition(col(bucketCol))
         .write.mode("overwrite").partitionBy(bucketCol).parquet(s"$tmp/$rel")
     }} :+ (() => { nRemoved = removed() })): _*)
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    for (rel <- Seq("docs", "postings", "hashes")) {
+    catch { case e: Throwable =>
+      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+      throw e
+    }
+    for (rel <- rels) {
       val live = new org.apache.hadoop.fs.Path(path, rel)
       fs.delete(live, true)
       require(fs.rename(new org.apache.hadoop.fs.Path(s"$tmp/$rel"), live),
@@ -1163,9 +1178,12 @@ object Dedup {
     *    then the probe-side `maxBucket` cap bounds the damage).
     *
     * Compaction cannot fix skew (the bucket function is the problem),
-    * so rebucket dominates when both fire. Cost: one driver-side FS
-    * listing (≤ 3·nBuckets directories) plus one column-pruned count
-    * over `postings/` — safe after every append at any corpus size.
+    * so rebucket dominates when both fire. Cost: one driver-side bucket
+    * census (≤ 3·nBuckets directory listings — the same census
+    * [[compactSignatureIndex]] uses, so compacting an index this reports
+    * as one file per bucket costs one listing and no job) plus one
+    * column-pruned count over `postings/`, read with its schema declared
+    * (no inference job) — safe after every append at any corpus size.
     */
   case class SigIndexMaintenance(fileTrigger: Boolean, skewTrigger: Boolean,
     action: String, maxFilesPerBucket: Long, nFiles: Long,
@@ -1177,21 +1195,11 @@ object Dedup {
     require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
     require(skewThreshold > 1.0, s"skewThreshold $skewThreshold must be > 1")
     val m = readIndexMeta(spark, path) // also enforces the pending-marker refusal
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var maxFiles = 0L
-    var nFiles = 0L
-    for (rel <- Seq("docs", "postings", "hashes")) {
-      val dir = new org.apache.hadoop.fs.Path(s"$path/$rel")
-      for (b <- fs.listStatus(dir) if b.isDirectory) {
-        val n = fs.listStatus(b.getPath)
-          .count(f => f.isFile && !f.getPath.getName.startsWith("_")
-            && !f.getPath.getName.startsWith(".")).toLong
-        nFiles += n
-        if (n > maxFiles) maxFiles = n
-      }
-    }
-    val occ = spark.read.parquet(s"$path/postings")
+    val counts = SigRelations.flatMap(rel =>
+      IndexRelation.bucketFileCounts(spark, s"$path/$rel"))
+    val maxFiles = counts.maxOption.getOrElse(0).toLong
+    val nFiles = counts.map(_.toLong).sum
+    val occ = IndexRelation.read(spark, s"$path/postings")
       .groupBy(col("kb")).agg(count(lit(1)).as("n"))
       .agg(coalesce(max(col("n")), lit(0L)),
         coalesce(sum(col("n")), lit(0L))).head()
@@ -1312,7 +1320,7 @@ object Dedup {
       .unionByName(batch.filter(col("__h").isNull).select(col("doc_id")))
     // touched hash buckets came with the fused stats agg — no second job
     val hbList: Seq[Long] = s.getSeq[Long](5)
-    val exHashes = spark.read.parquet(s"$indexPath/hashes")
+    val exHashes = IndexRelation.read(spark, s"$indexPath/hashes")
       .filter(col("hb").isin(hbList: _*))
       .select(col("content_hash").as("__h"))
     // exactSurv and bandKeys checkpoint LAZILY: the kbList collect below
@@ -1331,7 +1339,7 @@ object Dedup {
       .withColumn("kb", pmod(col("key"), lit(nB)))
       .localCheckpoint(false)
     val kbList = bandKeys.select(col("kb")).distinct().as[Long].collect()
-    val exPost = spark.read.parquet(s"$indexPath/postings")
+    val exPost = IndexRelation.read(spark, s"$indexPath/postings")
       .filter(col("kb").isin(kbList: _*))
       .join(broadcast(bandKeys.select(col("key")).distinct()), Seq("key"), "left_semi")
     val exCnt = exPost.groupBy(col("key")).agg(count(lit(1)).as("__ce"))
@@ -1364,7 +1372,7 @@ object Dedup {
     // docs/ partitions holding candidate ids; batch-side from the batch.
     val ibList = pairs.filter(col("id1") <= m.maxId)
       .select(pmod(col("id1"), lit(nB)).as("ib")).distinct().as[Long].collect()
-    val exSh = spark.read.parquet(s"$indexPath/docs")
+    val exSh = IndexRelation.read(spark, s"$indexPath/docs")
       .filter(col("ib").isin(ibList: _*))
       .select(col("doc_id").as("__id"), col("shingles").as("__sh"))
     val shingled = exSh.unionByName(

@@ -634,7 +634,7 @@ object Similarity {
     // stats from the WRITTEN relation (m longs/row), so maxId/nVecs
     // describe exactly what a probe will see — same discipline as
     // Dedup.writeSignatureIndex's read-back
-    val stats = spark.read.parquet(s"$path/codes")
+    val stats = IndexRelation.read(spark, s"$path/codes")
       .agg(coalesce(max(col(idCol)), lit(Long.MinValue)).as("maxId"),
         count(lit(1)).as("n")).head()
     require(stats.getLong(1) > 0, "writeIvfPqIndex: refusing to index an " +
@@ -1120,10 +1120,16 @@ object Similarity {
     * append adds a file per touched list. Staged for crash safety
     * (rewrite into `_compact_tmp/`, swap, meta re-asserted LAST), same
     * shape as the signature index's compaction.
+    *
+    * Codes whose lists already hold one file each — e.g. right after
+    * [[removeFromIvfPqIndex]] — cost one listing and no job: compaction
+    * returns without rewriting or touching the meta, once the
+    * pending-marker and stale `_codes_old` refusals have passed.
     */
   def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit =
-    rewriteIvfPqIndex(spark, path, identity, removed = () => 0L)
+    rewriteIvfPqIndex(spark, path, compactOnly = true, identity,
+      removed = () => 0L)
 
   /** Remove vectors from a persisted IVF-PQ index — takedown. Also
     * compacts (same staged rewrite). `nVecs` decrements by the ids
@@ -1140,13 +1146,13 @@ object Similarity {
         dropIds.schema(idCol).dataType.simpleString)
     val ids = broadcast(
       dropIds.select(col(idCol).cast("long").as("__drop_id")).distinct())
-    val live = spark.read.parquet(s"$path/codes")
+    val live = IndexRelation.read(spark, s"$path/codes")
     // the codes relation is exactly (id, pq_codes) partitioned by ivf_list
     val liveIdCol = live.columns.filterNot(Set("ivf_list", "pq_codes")).head
     // present-count agg rides as a THUNK so the rewrite overlaps it with
     // the tmp rewrite (round-20, §2.6 — both only read the live codes);
     // the refuse-to-empty check still precedes the destructive swap
-    rewriteIvfPqIndex(spark, path,
+    rewriteIvfPqIndex(spark, path, compactOnly = false,
       rel => rel.join(ids, rel(liveIdCol) === ids("__drop_id"), "left_anti"),
       removed = () => {
         val stats = live
@@ -1162,8 +1168,12 @@ object Similarity {
       })
   }
 
+  /** Staged rewrite shared by compaction and removal. With `compactOnly`,
+    * codes whose lists each hold one file are left alone (no job); the
+    * refusals — pending marker, stale stash — run before that shortcut.
+    */
   private def rewriteIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, transform: DataFrame => DataFrame,
+      path: String, compactOnly: Boolean, transform: DataFrame => DataFrame,
       removed: () => Long): Unit = {
     val meta = readIvfPqMeta(spark, path)
     val conf = spark.sparkContext.hadoopConfiguration
@@ -1181,12 +1191,14 @@ object Similarity {
         s"$path: stale _codes_old present — a previous compact/remove " +
           "crashed mid-swap. Recover codes/ from it (or delete it if " +
           "codes/ is intact), then retry.")
+    if (compactOnly && !IndexRelation.needsCompaction(spark, liveP.toString))
+      return
     // tmp rewrite ∥ removed-count thunk (round-20, §2.6): independent
     // reads of the live codes; a thunk refusal fires before the swap and
     // deletes the now-worthless tmp, leaving the live index untouched
     @volatile var nRemoved = 0L
     try graft.operators.JobPar.run(
-      () => transform(spark.read.parquet(s"$path/codes"))
+      () => transform(IndexRelation.read(spark, s"$path/codes"))
         .repartition(col("ivf_list"))
         .write.mode("overwrite").partitionBy("ivf_list")
         .parquet(s"$tmp/codes"),
@@ -1225,7 +1237,7 @@ object Similarity {
     val query = rotQuery(permQuery(rawQuery, meta.perm), meta.rot)
     val probed = nearestListIds(query, meta.centroids, nProbe)
     if (!meta.residual) {
-      val codes = spark.read.parquet(s"$path/codes")
+      val codes = IndexRelation.read(spark, s"$path/codes")
         .filter(col("ivf_list").isin(probed: _*))
         .select(col(idCol), col("pq_codes"))
       return pqSearchCodes(codes, idCol, meta.donors, query, k, meta.m)
@@ -1255,7 +1267,7 @@ object Similarity {
       while (j < cs.length) { s += bt.value((lst, j, cs(j))); j += 1 }
       s
     }
-    spark.read.parquet(s"$path/codes")
+    IndexRelation.read(spark, s"$path/codes")
       .filter(col("ivf_list").isin(probed: _*))
       .select(col(idCol), adc(col("ivf_list"), col("pq_codes")).as("adc"))
       .orderBy(col("adc").asc, col(idCol).asc)
@@ -1970,7 +1982,7 @@ object Similarity {
     */
   def ivfPqListStats(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    spark.read.parquet(s"$path/codes")
+    IndexRelation.read(spark, s"$path/codes")
       .groupBy(col("ivf_list").cast("long").as("ivf_list"))
       .agg(count(lit(1)).as("n"))
 
@@ -2125,7 +2137,7 @@ object Similarity {
         (qid, s)
       }.toSeq
     }
-    val scored = spark.read.parquet(s"$path/codes")
+    val scored = IndexRelation.read(spark, s"$path/codes")
       .filter(col("ivf_list").isin(allLists: _*))
       .select(col(idCol), col("ivf_list").cast("long").as("__lst"),
         col("pq_codes"))

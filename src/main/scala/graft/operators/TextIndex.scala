@@ -222,9 +222,15 @@ object TextIndex {
     * batches the per-probe open cost creeps up). Staged for crash safety
     * exactly like the signature index: rewrite into `_compact_tmp`, swap,
     * re-assert stats LAST.
+    *
+    * An index whose buckets already hold one file each — e.g. right after
+    * [[remove]] — costs one listing and no job: it returns without
+    * rewriting or touching the stats, once the pending-marker and stale
+    * `_old` stash refusals have passed.
     */
   def compact(spark: SparkSession, path: String): Unit =
-    rewriteIndex(spark, path, identity, removed = () => (0L, 0L))
+    rewriteIndex(spark, path, compactOnly = true, identity,
+      removed = () => (0L, 0L))
 
   /** The maintenance verdict for a rolling text index — the same
     * "telemetry → one decision" shape as the IVF-PQ and signature
@@ -241,8 +247,11 @@ object TextIndex {
     *    disproportionate data. Action: rebuild with more buckets
     *    (compaction cannot move terms between buckets).
     *
-    * Cost: one driver-side FS listing (≤ nBuckets directories) plus one
-    * column-pruned count over the postings — safe after every append.
+    * Cost: one driver-side bucket census (≤ nBuckets directory listings
+    * — the same census [[compact]] uses, so compacting an index this
+    * reports as one file per bucket costs one listing and no job) plus
+    * one column-pruned count over the postings, read with their schema
+    * declared (no inference job) — safe after every append.
     */
   case class TextIndexMaintenance(fileTrigger: Boolean, skewTrigger: Boolean,
     action: String, maxFilesPerBucket: Long, nFiles: Long,
@@ -254,19 +263,10 @@ object TextIndex {
     require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
     require(skewThreshold > 1.0, s"skewThreshold $skewThreshold must be > 1")
     val st = readStats(spark, path) // also enforces the pending-marker refusal
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var maxFiles = 0L
-    var nFiles = 0L
-    for (b <- fs.listStatus(new org.apache.hadoop.fs.Path(path))
-        if b.isDirectory) {
-      val n = fs.listStatus(b.getPath)
-        .count(f => f.isFile && !f.getPath.getName.startsWith("_")
-          && !f.getPath.getName.startsWith(".")).toLong
-      nFiles += n
-      if (n > maxFiles) maxFiles = n
-    }
-    val occ = spark.read.parquet(path)
+    val counts = IndexRelation.bucketFileCounts(spark, path)
+    val maxFiles = counts.maxOption.getOrElse(0).toLong
+    val nFiles = counts.map(_.toLong).sum
+    val occ = IndexRelation.read(spark, path)
       .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
       .agg(coalesce(max(col("n")), lit(0L)),
         coalesce(sum(col("n")), lit(0L))).head()
@@ -299,10 +299,10 @@ object TextIndex {
     // the present-docs/dl agg rides as a THUNK so the rewrite overlaps it
     // with the tmp rewrite (round-20, §2.6) — both read only the live
     // index; the refuse-to-empty check still precedes the swap
-    rewriteIndex(spark, path,
+    rewriteIndex(spark, path, compactOnly = false,
       rel => rel.join(ids, Seq("doc_id"), "left_anti"),
       removed = () => {
-        val present = spark.read.parquet(path)
+        val present = IndexRelation.read(spark, path)
           .select(col("doc_id"), col("dl")).distinct()
           .join(ids, Seq("doc_id"), "left_semi")
           .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
@@ -310,47 +310,55 @@ object TextIndex {
       })
   }
 
+  /** Staged rewrite shared by [[compact]] and [[remove]]. With
+    * `compactOnly`, an index whose buckets each hold one file is left
+    * alone (no job); the refusals — pending marker, stale stash — run
+    * before that shortcut and before any rewrite.
+    */
   private def rewriteIndex(spark: SparkSession, path: String,
-      transform: DataFrame => DataFrame,
+      compactOnly: Boolean, transform: DataFrame => DataFrame,
       removed: () => (Long, Long)): Unit = {
     val st = readStats(spark, path)
     val conf = spark.sparkContext.hadoopConfiguration
-    val tmp = s"${path}_compact_tmp"
-    // tmp rewrite and the removed-stats thunk are independent reads of the
-    // LIVE index — overlapped (JobPar, §2.6); nothing destructive happens
-    // until both landed and the refusal below has passed (a refusal leaves
-    // the live index untouched and deletes the now-worthless tmp)
-    @volatile var removedDocs = 0L
-    @volatile var removedDl = 0L
-    JobPar.run(
-      () => transform(spark.read.parquet(path))
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(tmp),
-      () => { val r = removed(); removedDocs = r._1; removedDl = r._2 })
-    val n2 = st.n - removedDocs
+    val tmp = new org.apache.hadoop.fs.Path(s"${path}_compact_tmp")
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    if (!(n2 > 0)) {
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      throw new IllegalArgumentException(
-        "requirement failed: TextIndex.remove would remove every indexed " +
-          "document — delete the index and TextIndex.write a new corpus " +
-          "instead")
-    }
     val live = new org.apache.hadoop.fs.Path(path)
     val stash = new org.apache.hadoop.fs.Path(s"${path}_old")
     // a surviving stash means a PRIOR rewrite crashed mid-swap — renaming
     // onto an existing dir would nest the live copy INSIDE it and the swap
     // would proceed over polluted state, so refuse (mirrors the
-    // pending-marker refusal): recover or delete the stash first
+    // pending-marker refusal): recover or delete the stash first. Checked
+    // BEFORE the rewrite, which would otherwise be wasted.
     if (fs.exists(stash))
       throw new IllegalStateException(
         s"$path: stale ${path}_old present — a previous compact/remove " +
           "crashed mid-swap. Recover the index from it (or delete it if " +
           s"$path is intact), then retry.")
+    if (compactOnly && !IndexRelation.needsCompaction(spark, path)) return
+    // tmp rewrite and the removed-stats thunk are independent reads of the
+    // LIVE index — overlapped (JobPar, §2.6); nothing destructive happens
+    // until both landed and the refusal below has passed (a failure or a
+    // refusal leaves the live index untouched and deletes the tmp)
+    @volatile var removedDocs = 0L
+    @volatile var removedDl = 0L
+    try JobPar.run(
+      () => transform(IndexRelation.read(spark, path))
+        .repartition(col("bucket"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(tmp.toString),
+      () => { val r = removed(); removedDocs = r._1; removedDl = r._2 })
+    catch { case e: Throwable => fs.delete(tmp, true); throw e }
+    val n2 = st.n - removedDocs
+    if (!(n2 > 0)) {
+      fs.delete(tmp, true)
+      throw new IllegalArgumentException(
+        "requirement failed: TextIndex.remove would remove every indexed " +
+          "document — delete the index and TextIndex.write a new corpus " +
+          "instead")
+    }
     // swap: live → stash, tmp → live, stats re-asserted onto the new dir,
     // stash deleted last. A crash mid-swap leaves a recoverable copy.
     require(fs.rename(live, stash), s"compact: could not stage $path aside")
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp), live),
+    require(fs.rename(tmp, live),
       s"compact: rename into place failed — recover from ${path}_old")
     writeStats(spark, path, n2,
       if (removedDocs == 0) st.avgdl
@@ -373,7 +381,7 @@ object TextIndex {
           org.apache.spark.unsafe.types.UTF8String.fromString(t),
           org.apache.spark.sql.types.StringType, 42L), nBuckets))
       .distinct
-    val hits = spark.read.parquet(path)
+    val hits = IndexRelation.read(spark, path)
       .filter(col("bucket").isin(buckets: _*))
       .filter(col("term").isin(terms: _*))
     val dfreq = hits.groupBy(col("term"))
@@ -435,7 +443,7 @@ object TextIndex {
           org.apache.spark.unsafe.types.UTF8String.fromString(t),
           org.apache.spark.sql.types.StringType, 42L), nBuckets))
       .distinct
-    val hits = spark.read.parquet(path)
+    val hits = IndexRelation.read(spark, path)
       .filter(col("bucket").isin(buckets: _*))
       .filter(col("term").isin(terms: _*))
     val dfreq = hits.groupBy(col("term"))

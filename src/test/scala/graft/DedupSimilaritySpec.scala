@@ -488,6 +488,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
     for (rel <- Seq("docs", "postings", "hashes"))
       assert(parts(rel).values.max == 1,
         s"compaction must leave one file per bucket in $rel: ${parts(rel)}")
+    // the compacted index is compact: compacting it again is free
+    IndexCheck.assertFreeCompaction(idx)(Dedup.compactSignatureIndex(spark, idx))
     val after = Dedup.dedupIncrementalIndexed(batch2, idx, "doc_id", "text",
       threshold = 0.6).select("doc_id").as[Long].collect().toSet
     assert(after == before && before == Set(21L),
@@ -535,6 +537,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
         existing.select("doc_id"), "doc_id")
     }
     assert(e.getMessage.contains("every indexed document"), e.getMessage)
+    // the refusal leaves no staging debris behind
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(idx, "_compact_tmp")),
+      "a refused removal must delete _compact_tmp")
   }
 
   test("dedupCorpusTransitiveBy keeps the best-scoring cluster member") {
@@ -695,6 +700,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .iterator().asScala.filter(_.toString.endsWith(".parquet"))
       .toSeq.groupBy(_.getParent).map(_._2.size).max
     assert(maxFiles == 1, s"compaction must leave one file per list, got $maxFiles")
+    IndexCheck.assertFreeCompaction(idxRoll)(Similarity.compactIvfPqIndex(spark, idxRoll))
     // takedown: drop ids 0..9 plus ids that were never indexed — nVecs
     // must fall by the 10 ACTUALLY removed (never by request cardinality)
     Similarity.removeFromIvfPqIndex(spark, idxRoll,

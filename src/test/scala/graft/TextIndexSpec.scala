@@ -244,6 +244,8 @@ class TextIndexSpec extends AnyFunSuite {
       maxFilesPerBucket = 2)
     assert(!compacted.fileTrigger && compacted.action == "none",
       compacted.toString)
+    assert(compacted.maxFilesPerBucket == 1, compacted.toString)
+    IndexCheck.assertFreeCompaction(path)(TextIndex.compact(spark, path))
 
     // skew: one hot term dominating the postings concentrates one bucket
     val hotPath = java.nio.file.Files.createTempDirectory("tix7")
