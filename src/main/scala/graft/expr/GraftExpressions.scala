@@ -451,11 +451,21 @@ case class MinhashSigExpr(child: Expression, shingleN: Int, k: Int)
   * to Seq[Double] and re-entered the interpreter per row; on a 100 TB ANN
   * scan that conversion is the scan). The codebook (ids + vectors) is
   * baked into the expression — centroid counts are nLists-bounded and
-  * tiny, the same data the UDF closed over via a broadcast.
+  * tiny, the same data the UDF closed over via a broadcast. Equality and
+  * hash (cached, as TreeNode caches its own) are by codebook CONTENT (an
+  * `Array` field compares by reference), so equal expressions
+  * canonicalize together and CSE can share them.
   */
 case class NearestCentroidIdExpr(child: Expression, ids: Array[Long],
     vecs: Array[Array[Double]])
   extends UnaryExpression with Serializable {
+
+  override def equals(o: Any): Boolean = o match {
+    case e: NearestCentroidIdExpr => child == e.child &&
+      Codebook.same(ids, vecs, e.ids, e.vecs)
+    case _ => false
+  }
+  override lazy val hashCode: Int = Codebook.hash(child, ids, vecs, 0)
 
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
@@ -485,6 +495,13 @@ case class NearestCentroidIdsExpr(child: Expression, ids: Array[Long],
     vecs: Array[Array[Double]], nProbe: Int)
   extends UnaryExpression with Serializable {
 
+  override def equals(o: Any): Boolean = o match {
+    case e: NearestCentroidIdsExpr => child == e.child && nProbe == e.nProbe &&
+      Codebook.same(ids, vecs, e.ids, e.vecs)
+    case _ => false
+  }
+  override lazy val hashCode: Int = Codebook.hash(child, ids, vecs, nProbe)
+
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
 
@@ -503,6 +520,19 @@ case class NearestCentroidIdsExpr(child: Expression, ids: Array[Long],
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
   override def prettyName: String = "nearest_centroids"
+}
+
+/** Content equality and hash of a literal (ids, vectors) codebook. */
+private object Codebook {
+  def same(ids: Array[Long], vecs: Array[Array[Double]],
+      ids2: Array[Long], vecs2: Array[Array[Double]]): Boolean =
+    java.util.Arrays.equals(ids, ids2) && java.util.Arrays.deepEquals(
+      vecs.asInstanceOf[Array[AnyRef]], vecs2.asInstanceOf[Array[AnyRef]])
+
+  def hash(child: Expression, ids: Array[Long], vecs: Array[Array[Double]],
+      extra: Int): Int =
+    (child, java.util.Arrays.hashCode(ids),
+      java.util.Arrays.deepHashCode(vecs.asInstanceOf[Array[AnyRef]]), extra).##
 }
 
 /** Native codegen form of the 60-bit SimHash kernel. */

@@ -607,10 +607,10 @@ object Dedup {
     while (it < maxIters && !converged) {
       val nbrMin = edges.join(labels, edges("dst") === labels("id"))
         .groupBy(col("src")).agg(min(col("comp")).as("__nbr"))
-      // __old rides along so convergence is a filter on the checkpointed
+      // __prev rides along so convergence is a filter on the checkpointed
       // result — not a separate next⋈labels join+count job per round
       val stepped = labels.join(nbrMin, labels("id") === nbrMin("src"), "left")
-        .select(col("id"), col("comp").as("__old"),
+        .select(col("id"), col("comp").as("__prev"),
           least(col("comp"), coalesce(col("__nbr"), col("comp"))).as("comp"))
       // pointer jump: comp := label(comp). Doubles propagation distance
       // per round — O(log diameter) rounds instead of O(diameter), the
@@ -625,10 +625,10 @@ object Dedup {
       val next = stepped.as("a")
         .join(stepped.select(col("id").as("__cid"), col("comp").as("__ccomp")),
           col("comp") === col("__cid"), "left")
-        .select(col("id"), col("__old"),
+        .select(col("id"), col("__prev"),
           least(col("comp"), coalesce(col("__ccomp"), col("comp"))).as("comp"))
         .localCheckpoint(false) // materialized by the count below
-      val changed = next.filter(col("comp") =!= col("__old")).count()
+      val changed = next.filter(col("comp") =!= col("__prev")).count()
       labels = next.select(col("id"), col("comp"))
       converged = changed == 0
       it += 1
@@ -827,7 +827,7 @@ object Dedup {
       .write.mode("overwrite").partitionBy("ib").parquet(s"$path/docs")
     // an all-empty corpus writes no part files and the derived re-read has
     // no schema to infer — refuse loudly like TextIndex.write does
-    val back = try IndexRelation.read(spark, s"$path/docs")
+    val back = try IndexStore.read(spark, s"$path/docs")
       catch { case e: org.apache.spark.sql.AnalysisException =>
         throw new IllegalArgumentException(
           "refusing to index an empty corpus (no documents written)", e) }
@@ -852,48 +852,25 @@ object Dedup {
         back.agg(coalesce(max(col("doc_id")), lit(Long.MinValue)).as("maxId"),
           count(lit(1)).as("n")).head())
     require(stats.getLong(1) > 0, "refusing to index an empty corpus")
-    writeIndexMeta(spark, path, shingleN, k, bands, nBuckets,
-      stats.getLong(0), stats.getLong(1))
-    // a full rebuild is the documented recovery from a crashed append —
-    // clear any stale pending marker so the fresh index is probe-able
-    clearPendingMarker(spark, path)
+    val store = sigStore(spark, path)
+    store.writeSidecar(SigIndexMeta(shingleN, k, bands, nBuckets,
+      stats.getLong(0), stats.getLong(1), None, None).json)
+    store.reset() // a full rebuild is the documented crash recovery
   }
 
-  private def writeIndexMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, shingleN: Int, k: Int, bands: Int, nBuckets: Int,
-      maxId: Long, nDocs: Long,
-      last: Option[(Long, Long, Long)] = None,
-      lastFp: Option[Long] = None): Unit = {
-    val lastJson = last
-      .map { case (mn, mx, c) => s""","lastMin":$mn,"lastMax":$mx,"lastN":$c""" }
-      .getOrElse("") +
-      lastFp.map(f => s""","lastFp":$f""").getOrElse("")
-    val sidecar = s"""{"shingleN":$shingleN,"k":$k,"bands":$bands,""" +
-      s""""nBuckets":$nBuckets,"maxId":$maxId,"nDocs":$nDocs$lastJson}"""
-    val p = new org.apache.hadoop.fs.Path(path, "_dedup_index_meta.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(sidecar.getBytes("UTF-8")) finally os.close()
-  }
+  /** The signature index's relations (dir, bucket column) under [[IndexStore]]. */
+  private def sigStore(spark: org.apache.spark.sql.SparkSession, path: String) =
+    IndexStore(spark, path, "_dedup_index_meta.json", "writeSignatureIndex",
+      Seq("docs" -> "ib", "postings" -> "kb", "hashes" -> "hb")
+        .map { case (rel, b) => s"$path/$rel" -> b })
 
   /** Append the already-deduplicated SURVIVORS of an ingestion batch
     * (the output of [[dedupIncrementalIndexed]]) to an existing
     * signature index — the post-probe step that makes the index the
     * corpus' rolling identity: the next batch probes existing ∪ survivors
     * with no rebuild. Survivor ids must continue the monotone sequence
-    * (checked against the index meta).
-    *
-    * Crash safety via a PENDING-APPEND MARKER: because the meta's
-    * maxId/nDocs update LAST, a crash after some relation appends but
-    * before the meta write would leave maxId at its OLD value — and a
-    * retried append of the same batch would then PASS the monotone check
-    * and silently double-insert. So a `_pending_append.json` sidecar
-    * (carrying the batch id range) is written BEFORE the first relation
-    * append and deleted only AFTER the meta write; every index entry
-    * point ([[readIndexMeta]]) refuses to touch an index whose marker is
-    * still present. Recovery: rebuild with [[writeSignatureIndex]], or
-    * remove the marked id range with a manual anti-join rewrite, then
-    * delete the marker.
+    * (checked against the index meta). Crash safety: the pending-append
+    * marker of [[IndexStore]].
     */
   def appendToSignatureIndex(survivors: DataFrame, idCol: String,
       textCol: String, path: String,
@@ -904,7 +881,8 @@ object Dedup {
         .isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"appendToSignatureIndex requires a numeric id column: $idCol is " +
         survivors.schema(idCol).dataType.simpleString)
-    val m = readIndexMeta(spark, path)
+    val store = sigStore(spark, path)
+    val m = SigIndexMeta.parse(path, store.readSidecarForUpdate())
     val nB = m.nBuckets.toLong
     val norm = lower(regexp_replace(trim(col(textCol)), "\\s+", " "))
     // the batch is small by contract — one tokenizing pass, materialized
@@ -950,10 +928,7 @@ object Dedup {
       require(s.getLong(0) > m.maxId,
         s"appendToSignatureIndex requires monotone ids: index maxId=${m.maxId} " +
           s">= min(batch)=${s.getLong(0)} — renumber (or rebuild the index)")
-      // marker FIRST: if we crash anywhere between here and the meta write,
-      // the marker survives and readIndexMeta refuses the index instead of
-      // letting a retried append double-insert (see scaladoc)
-      writePendingMarker(spark, path, s.getLong(0), s.getLong(1), s.getLong(3))
+      store.writeMarker(s.getLong(0), s.getLong(1), s.getLong(3))
       // bucket-clustered appends (see writeSignatureIndex): one file per
       // touched bucket per batch, not tasks×buckets. The three relation
       // appends read the SAME populated cache and are mutually
@@ -975,29 +950,11 @@ object Dedup {
           .withColumn("hb", pmod(xxhash64(col("content_hash")), lit(nB)))
           .repartition(col("hb"))
           .write.mode("append").partitionBy("hb").parquet(s"$path/hashes"))
-      writeIndexMeta(spark, path, m.shingleN, m.k, m.bands, m.nBuckets,
-        s.getLong(1), m.nDocs + s.getLong(3), Some(candRange), candFp)
-      clearPendingMarker(spark, path)
+      store.writeSidecar(m.copy(maxId = s.getLong(1),
+        nDocs = m.nDocs + s.getLong(3), last = Some(candRange),
+        lastFp = candFp).json)
+      store.clearMarker()
     } finally enriched.unpersist()
-  }
-
-  private def pendingMarkerPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_pending_append.json")
-
-  private def writePendingMarker(spark: org.apache.spark.sql.SparkSession,
-      path: String, minId: Long, maxId: Long, n: Long): Unit = {
-    val p = pendingMarkerPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(
-      s"""{"minId":$minId,"maxId":$maxId,"n":$n}""".getBytes("UTF-8"))
-    finally os.close()
-  }
-
-  private def clearPendingMarker(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val p = pendingMarkerPath(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
   }
 
   /** Rewrite a signature index in place so every bucket holds ONE file
@@ -1013,13 +970,7 @@ object Dedup {
     * listing and no job. An index that is compact throughout — e.g.
     * right after [[removeFromSignatureIndex]] — returns without any Spark
     * job and without touching the meta (the pending-append refusal still
-    * runs first).
-    *
-    * Staged for crash safety: the rewritten relations land in
-    * `_compact_tmp/` first, then swap in (delete old, rename new) and
-    * re-assert the meta LAST. A crash before the first swap leaves the
-    * live index untouched; a crash mid-swap is detectable (missing
-    * relation dir) and recoverable from `_compact_tmp` or by rebuild.
+    * runs first). Crash safety: the staged rewrite of [[IndexStore]].
     */
   def compactSignatureIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit =
@@ -1056,7 +1007,7 @@ object Dedup {
     rewriteSignatureIndex(spark, path, compactOnly = false,
       rel => rel.join(ids, Seq("doc_id"), "left_anti"),
       removed = () => {
-        val stats = IndexRelation.read(spark, s"$path/docs")
+        val stats = IndexStore.read(spark, s"$path/docs")
           .join(ids.withColumn("__drop", lit(1)), Seq("doc_id"), "left")
           .agg(count(lit(1)).as("total"),
             sum(coalesce(col("__drop"), lit(0))).as("present")).head()
@@ -1070,95 +1021,51 @@ object Dedup {
       })
   }
 
-  private val SigRelations = Seq("docs", "postings", "hashes")
-
-  /** Shared staged rewrite: the relations pass through `transform` into
-    * `_compact_tmp/`, then swap in (delete old, rename new) with the meta
-    * re-asserted LAST. A crash before the first swap leaves the live
-    * index untouched; a crash mid-swap is detectable (missing relation
-    * dir) and recoverable from `_compact_tmp` or by rebuild. A failure
-    * before the swap (a rewrite job, or the `removed` refusal) deletes
-    * `_compact_tmp` and rethrows. With `compactOnly`, relations whose
-    * buckets each hold one file are left alone, and an index with none
-    * left to rewrite returns before any job.
-    */
+  /** The staged rewrite of [[IndexStore]] over all three relations;
+    * the meta keeps everything but nDocs, which drops by `removed`. */
   private def rewriteSignatureIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, compactOnly: Boolean, transform: DataFrame => DataFrame,
-      removed: () => Long): Unit = {
-    val m = readIndexMeta(spark, path) // the pending-marker refusal comes first
-    val rels =
-      if (!compactOnly) SigRelations
-      else SigRelations.filter(r => IndexRelation.needsCompaction(spark, s"$path/$r"))
-    if (rels.isEmpty) return
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tmp = s"$path/_compact_tmp"
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    // the relation rewrites are independent reads of disjoint live dirs
-    // into disjoint tmp dirs, and the removed-count thunk only reads the
-    // live docs/ — all overlapped (JobPar, §2.6); the swap phase below
-    // stays sequential and only runs once all of them landed (a thunk
-    // refusal therefore still precedes anything destructive, and leaves
-    // the LIVE index untouched)
-    @volatile var nRemoved = 0L
-    try JobPar.run((rels.map { rel => () => {
-      val bucketCol = rel match {
-        case "docs" => "ib"; case "postings" => "kb"; case _ => "hb"
-      }
-      transform(IndexRelation.read(spark, s"$path/$rel"))
-        .repartition(col(bucketCol))
-        .write.mode("overwrite").partitionBy(bucketCol).parquet(s"$tmp/$rel")
-    }} :+ (() => { nRemoved = removed() })): _*)
-    catch { case e: Throwable =>
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      throw e
+      removed: () => Long): Unit =
+    sigStore(spark, path).rewrite(compactOnly, transform, removed) { (raw, n) =>
+      val m = SigIndexMeta.parse(path, raw)
+      m.copy(nDocs = math.max(0L, m.nDocs - n)).json
     }
-    for (rel <- rels) {
-      val live = new org.apache.hadoop.fs.Path(path, rel)
-      fs.delete(live, true)
-      require(fs.rename(new org.apache.hadoop.fs.Path(s"$tmp/$rel"), live),
-        s"signature-index rewrite: rename of $rel failed — recover the " +
-          s"rewritten copy from $tmp or rebuild with writeSignatureIndex")
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    writeIndexMeta(spark, path, m.shingleN, m.k, m.bands, m.nBuckets,
-      m.maxId, math.max(0L, m.nDocs - nRemoved), m.last, m.lastFp)
-  }
 
   private case class SigIndexMeta(shingleN: Int, k: Int, bands: Int,
-    nBuckets: Int, maxId: Long, nDocs: Long,
-    last: Option[(Long, Long, Long)], lastFp: Option[Long])
-
-  private def readIndexMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): SigIndexMeta = {
-    val p = new org.apache.hadoop.fs.Path(path, "_dedup_index_meta.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // every entry point (probe / append / compact / remove) funnels
-    // through here — a pending-append marker means a prior append died
-    // between its relation writes and its meta write, so the meta can no
-    // longer be trusted to arm the monotone double-insert guard
-    if (fs.exists(pendingMarkerPath(path)))
-      throw new IllegalStateException(
-        s"$path: _pending_append.json present — a previous append crashed " +
-          "before committing its meta. Rebuild with writeSignatureIndex " +
-          "(or remove the marked id range manually), then delete the marker.")
-    val in = fs.open(p)
-    val raw = try {
-      val len = fs.getFileStatus(p).getLen.toInt
-      val buf = new Array[Byte](len); in.readFully(0, buf); new String(buf, "UTF-8")
-    } finally in.close()
-    def num(key: String): Long =
-      ("\"" + key + "\":(-?[0-9]+)").r.findFirstMatchIn(raw)
-        .map(_.group(1).toLong)
-        .getOrElse(throw new IllegalStateException(s"$path: no '$key' in index meta"))
-    def optLong(key: String): Option[Long] =
-      ("\"" + key + "\":(-?[0-9]+)").r.findFirstMatchIn(raw)
-        .map(_.group(1).toLong)
-    SigIndexMeta(num("shingleN").toInt, num("k").toInt, num("bands").toInt,
-      num("nBuckets").toInt, num("maxId"), num("nDocs"),
-      for (mn <- optLong("lastMin"); mx <- optLong("lastMax");
-        c <- optLong("lastN")) yield (mn, mx, c),
-      optLong("lastFp"))
+      nBuckets: Int, maxId: Long, nDocs: Long,
+      last: Option[(Long, Long, Long)], lastFp: Option[Long]) {
+    def json: String = {
+      val lastJson = last
+        .map { case (mn, mx, c) => s""","lastMin":$mn,"lastMax":$mx,"lastN":$c""" }
+        .getOrElse("") +
+        lastFp.map(f => s""","lastFp":$f""").getOrElse("")
+      s"""{"shingleN":$shingleN,"k":$k,"bands":$bands,""" +
+        s""""nBuckets":$nBuckets,"maxId":$maxId,"nDocs":$nDocs$lastJson}"""
+    }
   }
+
+  private object SigIndexMeta {
+    def parse(path: String, raw: String): SigIndexMeta = {
+      def num(key: String): Long =
+        ("\"" + key + "\":(-?[0-9]+)").r.findFirstMatchIn(raw)
+          .map(_.group(1).toLong)
+          .getOrElse(throw new IllegalStateException(s"$path: no '$key' in index meta"))
+      def optLong(key: String): Option[Long] =
+        ("\"" + key + "\":(-?[0-9]+)").r.findFirstMatchIn(raw)
+          .map(_.group(1).toLong)
+      SigIndexMeta(num("shingleN").toInt, num("k").toInt, num("bands").toInt,
+        num("nBuckets").toInt, num("maxId"), num("nDocs"),
+        for (mn <- optLong("lastMin"); mx <- optLong("lastMax");
+          c <- optLong("lastN")) yield (mn, mx, c),
+        optLong("lastFp"))
+    }
+  }
+
+  /** The meta of a readable index — [[IndexStore.readSidecar]]'s
+    * refusals (pending marker, mid-swap crash) guard every entry point. */
+  private def readIndexMeta(spark: org.apache.spark.sql.SparkSession,
+      path: String): SigIndexMeta =
+    SigIndexMeta.parse(path, sigStore(spark, path).readSidecar())
 
   /** The maintenance verdict for a rolling signature index — the same
     * "telemetry → one decision" shape as the IVF-PQ index's
@@ -1195,11 +1102,11 @@ object Dedup {
     require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
     require(skewThreshold > 1.0, s"skewThreshold $skewThreshold must be > 1")
     val m = readIndexMeta(spark, path) // also enforces the pending-marker refusal
-    val counts = SigRelations.flatMap(rel =>
-      IndexRelation.bucketFileCounts(spark, s"$path/$rel"))
+    val counts = sigStore(spark, path).relations.flatMap(r =>
+      IndexStore.bucketFileCounts(spark, r._1))
     val maxFiles = counts.maxOption.getOrElse(0).toLong
     val nFiles = counts.map(_.toLong).sum
-    val occ = IndexRelation.read(spark, s"$path/postings")
+    val occ = IndexStore.read(spark, s"$path/postings")
       .groupBy(col("kb")).agg(count(lit(1)).as("n"))
       .agg(coalesce(max(col("n")), lit(0L)),
         coalesce(sum(col("n")), lit(0L))).head()
@@ -1320,7 +1227,7 @@ object Dedup {
       .unionByName(batch.filter(col("__h").isNull).select(col("doc_id")))
     // touched hash buckets came with the fused stats agg — no second job
     val hbList: Seq[Long] = s.getSeq[Long](5)
-    val exHashes = IndexRelation.read(spark, s"$indexPath/hashes")
+    val exHashes = IndexStore.read(spark, s"$indexPath/hashes")
       .filter(col("hb").isin(hbList: _*))
       .select(col("content_hash").as("__h"))
     // exactSurv and bandKeys checkpoint LAZILY: the kbList collect below
@@ -1339,7 +1246,7 @@ object Dedup {
       .withColumn("kb", pmod(col("key"), lit(nB)))
       .localCheckpoint(false)
     val kbList = bandKeys.select(col("kb")).distinct().as[Long].collect()
-    val exPost = IndexRelation.read(spark, s"$indexPath/postings")
+    val exPost = IndexStore.read(spark, s"$indexPath/postings")
       .filter(col("kb").isin(kbList: _*))
       .join(broadcast(bandKeys.select(col("key")).distinct()), Seq("key"), "left_semi")
     val exCnt = exPost.groupBy(col("key")).agg(count(lit(1)).as("__ce"))
@@ -1372,7 +1279,7 @@ object Dedup {
     // docs/ partitions holding candidate ids; batch-side from the batch.
     val ibList = pairs.filter(col("id1") <= m.maxId)
       .select(pmod(col("id1"), lit(nB)).as("ib")).distinct().as[Long].collect()
-    val exSh = IndexRelation.read(spark, s"$indexPath/docs")
+    val exSh = IndexStore.read(spark, s"$indexPath/docs")
       .filter(col("ib").isin(ibList: _*))
       .select(col("doc_id").as("__id"), col("shingles").as("__sh"))
     val shingled = exSh.unionByName(

@@ -21,12 +21,11 @@ package graft.operators
   * caller, so UI labels and cancellation behave as before.
   *
   * On CALLER interrupt the outstanding futures are cancelled with
-  * interruption (`cancel(true)` + `shutdownNow`) and the pool is drained
-  * for a bounded grace period before the interrupt is re-asserted and
-  * rethrown — so an interrupt does not silently leave thunks running
-  * past the call either. A thunk that ignores thread interruption for
-  * longer than the grace period is abandoned (documented escape hatch:
-  * Spark actions respond to interrupts at their next job boundary).
+  * interruption and the call then waits for EVERY thunk to finish before
+  * it re-asserts the interrupt and rethrows — it never returns while a
+  * thunk still runs, so a caller's cleanup (e.g. [[IndexStore]] deleting
+  * its rewrite tmp) cannot race a live writer. Spark actions respond to
+  * the interrupt at their next job wait.
   */
 private[graft] object JobPar {
   def run(thunks: (() => Unit)*): Unit = {
@@ -54,10 +53,13 @@ private[graft] object JobPar {
       }
       if (interrupted) {
         pool.shutdownNow()
-        // drain in-flight thunks (bounded): the interrupt flag is clear
-        // here (the catch above consumed it), so awaitTermination waits
-        try { pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS); () }
-        catch { case _: InterruptedException => () }
+        // a cancelled future reports done at once, but its thread may
+        // still be inside the thunk: wait for the pool itself, however
+        // often the caller is interrupted again meanwhile
+        var drained = false
+        while (!drained)
+          try drained = pool.awaitTermination(1, java.util.concurrent.TimeUnit.HOURS)
+          catch { case _: InterruptedException => () }
         Thread.currentThread().interrupt()
       }
       if (err != null) throw err

@@ -634,7 +634,7 @@ object Similarity {
     // stats from the WRITTEN relation (m longs/row), so maxId/nVecs
     // describe exactly what a probe will see — same discipline as
     // Dedup.writeSignatureIndex's read-back
-    val stats = IndexRelation.read(spark, s"$path/codes")
+    val stats = IndexStore.read(spark, s"$path/codes")
       .agg(coalesce(max(col(idCol)), lit(Long.MinValue)).as("maxId"),
         count(lit(1)).as("n")).head()
     require(stats.getLong(1) > 0, "writeIvfPqIndex: refusing to index an " +
@@ -643,18 +643,18 @@ object Similarity {
     // meanQuantErr) — what append errors are compared against
     val baseErr = meanQuantErr(clean, vecCol, centroids, donors, m,
       residual, assignGroups)
-    writeIvfPqMeta(spark, path, m, centroids, donors,
-      stats.getLong(0), stats.getLong(1), residual, assignGroups,
-      baseErr = baseErr, perm = perm, rot = opqRotationOpt)
-    // a full rebuild is the documented recovery from a crashed append or
-    // rewrite — clear any stale pending marker / rewrite stash / orphaned
-    // rewrite tmp so the fresh index is probe-able and compactable
-    clearIvfPqPendingMarker(spark, path)
-    val stash = new org.apache.hadoop.fs.Path(path, "_codes_old")
-    val sfs = stash.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    sfs.delete(stash, true)
-    sfs.delete(new org.apache.hadoop.fs.Path(path, "_compact_tmp"), true)
+    val store = ivfPqStore(spark, path)
+    store.writeSidecar(IvfPqMeta(m, stats.getLong(0), stats.getLong(1),
+      residual, assignGroups, centroids, donors, None, None, baseErr, Nil,
+      perm, opqRotationOpt).json)
+    store.reset() // a full rebuild is the documented crash recovery
   }
+
+  /** The IVF-PQ index as an [[IndexStore]]: one relation, `codes/`. */
+  private def ivfPqStore(spark: org.apache.spark.sql.SparkSession,
+      path: String) =
+    IndexStore(spark, path, "_ivfpq_meta.json", "writeIvfPqIndex",
+      Seq(s"$path/codes" -> "ivf_list"))
 
   /** Build a persisted IVF-PQ index from a TRAINED OPQ model
     * ([[graft.functions.EmbeddingStats.opqTrain]]): the rotation goes to
@@ -888,143 +888,102 @@ object Similarity {
       meta.baseErr, meta.appendErrs)
   }
 
-  private def writeIvfPqMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, m: Int, centroids: Array[(Long, Array[Double])],
-      donors: Array[(Long, Array[Double])], maxId: Long, nVecs: Long,
-      residual: Boolean, assignGroups: Int,
-      last: Option[(Long, Long, Long)] = None,
-      lastFp: Option[Long] = None,
-      baseErr: Double = Double.NaN,
-      appendErrs: Seq[Double] = Nil,
-      perm: Option[Array[Int]] = None,
-      rot: Option[Array[Array[Double]]] = None): Unit = {
-    def enc(arr: Array[(Long, Array[Double])]): String = arr
-      .map { case (id, v) => s"""{"id":$id,"v":${v.mkString("[", ",", "]")}}""" }
-      .mkString("[", ",", "]")
-    val lastJson = last
-      .map { case (mn, mx, c) => s""""lastMin":$mn,"lastMax":$mx,"lastN":$c,""" }
-      .getOrElse("") +
-      lastFp.map(f => s""""lastFp":$f,""").getOrElse("")
-    // drift telemetry (NaN baseErr = pre-telemetry index, field omitted)
-    val driftJson = (if (baseErr.isNaN) "" else s""""baseErr":$baseErr,""") +
-      (if (appendErrs.isEmpty) ""
-       else s""""appendErrs":${appendErrs.mkString("[", ",", "]")},""") +
-      perm.map(p => s""""perm":${p.mkString("[", ",", "]")},""").getOrElse("") +
-      rot.map(r => s""""rot":${r.map(_.mkString("[", ",", "]"))
-        .mkString("[", ",", "]")},""").getOrElse("")
-    val sidecar = s"""{"m":$m,"nLists":${centroids.length},""" +
-      s""""nCodes":${donors.length},"maxId":$maxId,"nVecs":$nVecs,""" +
-      s""""residual":$residual,"assignGroups":$assignGroups,$lastJson""" +
-      driftJson +
-      s""""centroids":${enc(centroids)},"donors":${enc(donors)}}"""
-    val p = new org.apache.hadoop.fs.Path(path, "_ivfpq_meta.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(sidecar.getBytes("UTF-8")) finally os.close()
-  }
-
-  private def ivfPqPendingMarkerPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_pending_append.json")
-
-  private def writeIvfPqPendingMarker(spark: org.apache.spark.sql.SparkSession,
-      path: String, minId: Long, maxId: Long, n: Long): Unit = {
-    val p = ivfPqPendingMarkerPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(
-      s"""{"minId":$minId,"maxId":$maxId,"n":$n}""".getBytes("UTF-8"))
-    finally os.close()
-  }
-
-  private def clearIvfPqPendingMarker(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val p = ivfPqPendingMarkerPath(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
-  }
-
   private case class IvfPqMeta(m: Int, maxId: Long, nVecs: Long,
-    residual: Boolean, assignGroups: Int,
-    centroids: Array[(Long, Array[Double])],
-    donors: Array[(Long, Array[Double])],
-    last: Option[(Long, Long, Long)], lastFp: Option[Long],
-    baseErr: Double, appendErrs: Seq[Double],
-    perm: Option[Array[Int]],
-    rot: Option[Array[Array[Double]]])
-
-  private def readIvfPqMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): IvfPqMeta = {
-    val p = new org.apache.hadoop.fs.Path(path, "_ivfpq_meta.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // every entry point (probe / append / compact / remove) funnels
-    // through here — a pending-append marker means a prior append died
-    // between its codes write and its meta write, so the meta can no
-    // longer be trusted to arm the monotone double-insert guard
-    if (fs.exists(ivfPqPendingMarkerPath(path)))
-      throw new IllegalStateException(
-        s"$path: _pending_append.json present — a previous append crashed " +
-          "before committing its meta. Rebuild with writeIvfPqIndex (or " +
-          "remove the marked id range manually), then delete the marker.")
-    val in = fs.open(p)
-    val raw = try {
-      val len = fs.getFileStatus(p).getLen.toInt
-      val buf = new Array[Byte](len); in.readFully(0, buf); new String(buf, "UTF-8")
-    } finally in.close()
-    def long(key: String): Long =
-      ("\"" + key + "\":(-?[0-9]+)").r.findFirstMatchIn(raw)
-        .getOrElse(throw new IllegalStateException(
-          s"$path: no '$key' in _ivfpq_meta.json"))
-        .group(1).toLong
-    val m = long("m").toInt
-    def arr(key: String): Array[(Long, Array[Double])] = {
-      // entries are {"id":N,"v":[...]} objects; the section runs from its
-      // key to the other section's key (or end of file)
-      val start = raw.indexOf("\"" + key + "\":")
-      require(start >= 0, s"$path: no '$key' in _ivfpq_meta.json")
-      val stops = Seq("\"centroids\":", "\"donors\":")
-        .map(k2 => raw.indexOf(k2, start + key.length + 3)).filter(_ > start)
-      val stop = if (stops.isEmpty) raw.length else stops.min
-      "\\{\"id\":(-?[0-9]+),\"v\":\\[([-0-9.,eE]+)\\]\\}".r
-        .findAllMatchIn(raw.substring(start, stop))
-        .map(mm => (mm.group(1).toLong, mm.group(2).split(",").map(_.toDouble)))
-        .toArray
+      residual: Boolean, assignGroups: Int,
+      centroids: Array[(Long, Array[Double])],
+      donors: Array[(Long, Array[Double])],
+      last: Option[(Long, Long, Long)], lastFp: Option[Long],
+      baseErr: Double, appendErrs: Seq[Double],
+      perm: Option[Array[Int]],
+      rot: Option[Array[Array[Double]]]) {
+    def json: String = {
+      def enc(arr: Array[(Long, Array[Double])]): String = arr
+        .map { case (id, v) => s"""{"id":$id,"v":${v.mkString("[", ",", "]")}}""" }
+        .mkString("[", ",", "]")
+      val lastJson = last
+        .map { case (mn, mx, c) => s""""lastMin":$mn,"lastMax":$mx,"lastN":$c,""" }
+        .getOrElse("") +
+        lastFp.map(f => s""""lastFp":$f,""").getOrElse("")
+      // drift telemetry (NaN baseErr = pre-telemetry index, field omitted)
+      val driftJson = (if (baseErr.isNaN) "" else s""""baseErr":$baseErr,""") +
+        (if (appendErrs.isEmpty) ""
+         else s""""appendErrs":${appendErrs.mkString("[", ",", "]")},""") +
+        perm.map(p => s""""perm":${p.mkString("[", ",", "]")},""").getOrElse("") +
+        rot.map(r => s""""rot":${r.map(_.mkString("[", ",", "]"))
+          .mkString("[", ",", "]")},""").getOrElse("")
+      s"""{"m":$m,"nLists":${centroids.length},""" +
+        s""""nCodes":${donors.length},"maxId":$maxId,"nVecs":$nVecs,""" +
+        s""""residual":$residual,"assignGroups":$assignGroups,$lastJson""" +
+        driftJson +
+        s""""centroids":${enc(centroids)},"donors":${enc(donors)}}"""
     }
-    val centroids = arr("centroids")
-    val donors = arr("donors")
-    require(centroids.nonEmpty && donors.nonEmpty,
-      s"$path: empty centroids/donors in _ivfpq_meta.json")
-    val residual = "\"residual\":(true|false)".r.findFirstMatchIn(raw)
-      .exists(_.group(1) == "true")
-    val assignGroups = "\"assignGroups\":([0-9]+)".r.findFirstMatchIn(raw)
-      .map(_.group(1).toInt).getOrElse(0)
-    def optLong(key: String): Option[Long] =
-      ("\"" + key + "\":(-?[0-9]+)").r.findFirstMatchIn(raw)
-        .map(_.group(1).toLong)
-    val last = for (mn <- optLong("lastMin"); mx <- optLong("lastMax");
-      c <- optLong("lastN")) yield (mn, mx, c)
-    val baseErr = "\"baseErr\":([-+0-9.eE]+)".r.findFirstMatchIn(raw)
-      .map(_.group(1).toDouble).getOrElse(Double.NaN)
-    val appendErrs = "\"appendErrs\":\\[([^\\]]*)\\]".r.findFirstMatchIn(raw)
-      .map(_.group(1).trim).filter(_.nonEmpty)
-      .map(_.split(",").map(_.toDouble).toSeq).getOrElse(Seq.empty)
-    val perm = "\"perm\":\\[([^\\]]*)\\]".r.findFirstMatchIn(raw)
-      .map(_.group(1).trim).filter(_.nonEmpty)
-      .map(_.split(",").map(_.toInt))
-    // rot is a NESTED array — scan from its key to the closing "]]"
-    val rot = {
-      val key = "\"rot\":[["
-      val start = raw.indexOf(key)
-      if (start < 0) None
-      else {
-        val stop = raw.indexOf("]]", start)
-        require(stop > start, s"$path: unterminated 'rot' in _ivfpq_meta.json")
-        Some(raw.substring(start + key.length, stop)
-          .split("\\],\\[").map(_.split(",").map(_.toDouble)))
-      }
-    }
-    IvfPqMeta(m, long("maxId"), long("nVecs"), residual, assignGroups,
-      centroids, donors, last, optLong("lastFp"), baseErr, appendErrs, perm,
-      rot)
   }
+
+  private object IvfPqMeta {
+    def parse(path: String, raw: String): IvfPqMeta = {
+      def long(key: String): Long =
+        ("\"" + key + "\":(-?[0-9]+)").r.findFirstMatchIn(raw)
+          .getOrElse(throw new IllegalStateException(
+            s"$path: no '$key' in _ivfpq_meta.json"))
+          .group(1).toLong
+      val m = long("m").toInt
+      def arr(key: String): Array[(Long, Array[Double])] = {
+        // entries are {"id":N,"v":[...]} objects; the section runs from its
+        // key to the other section's key (or end of file)
+        val start = raw.indexOf("\"" + key + "\":")
+        require(start >= 0, s"$path: no '$key' in _ivfpq_meta.json")
+        val stops = Seq("\"centroids\":", "\"donors\":")
+          .map(k2 => raw.indexOf(k2, start + key.length + 3)).filter(_ > start)
+        val stop = if (stops.isEmpty) raw.length else stops.min
+        "\\{\"id\":(-?[0-9]+),\"v\":\\[([-0-9.,eE]+)\\]\\}".r
+          .findAllMatchIn(raw.substring(start, stop))
+          .map(mm => (mm.group(1).toLong, mm.group(2).split(",").map(_.toDouble)))
+          .toArray
+      }
+      val centroids = arr("centroids")
+      val donors = arr("donors")
+      require(centroids.nonEmpty && donors.nonEmpty,
+        s"$path: empty centroids/donors in _ivfpq_meta.json")
+      val residual = "\"residual\":(true|false)".r.findFirstMatchIn(raw)
+        .exists(_.group(1) == "true")
+      val assignGroups = "\"assignGroups\":([0-9]+)".r.findFirstMatchIn(raw)
+        .map(_.group(1).toInt).getOrElse(0)
+      def optLong(key: String): Option[Long] =
+        ("\"" + key + "\":(-?[0-9]+)").r.findFirstMatchIn(raw)
+          .map(_.group(1).toLong)
+      val last = for (mn <- optLong("lastMin"); mx <- optLong("lastMax");
+        c <- optLong("lastN")) yield (mn, mx, c)
+      val baseErr = "\"baseErr\":([-+0-9.eE]+)".r.findFirstMatchIn(raw)
+        .map(_.group(1).toDouble).getOrElse(Double.NaN)
+      val appendErrs = "\"appendErrs\":\\[([^\\]]*)\\]".r.findFirstMatchIn(raw)
+        .map(_.group(1).trim).filter(_.nonEmpty)
+        .map(_.split(",").map(_.toDouble).toSeq).getOrElse(Seq.empty)
+      val perm = "\"perm\":\\[([^\\]]*)\\]".r.findFirstMatchIn(raw)
+        .map(_.group(1).trim).filter(_.nonEmpty)
+        .map(_.split(",").map(_.toInt))
+      // rot is a NESTED array — scan from its key to the closing "]]"
+      val rot = {
+        val key = "\"rot\":[["
+        val start = raw.indexOf(key)
+        if (start < 0) None
+        else {
+          val stop = raw.indexOf("]]", start)
+          require(stop > start, s"$path: unterminated 'rot' in _ivfpq_meta.json")
+          Some(raw.substring(start + key.length, stop)
+            .split("\\],\\[").map(_.split(",").map(_.toDouble)))
+        }
+      }
+      IvfPqMeta(m, long("maxId"), long("nVecs"), residual, assignGroups,
+        centroids, donors, last, optLong("lastFp"), baseErr, appendErrs, perm,
+        rot)
+    }
+  }
+
+  /** The meta of a readable index — [[IndexStore.readSidecar]]'s
+    * refusals (pending marker, mid-swap crash) guard every entry point. */
+  private def readIvfPqMeta(spark: org.apache.spark.sql.SparkSession,
+      path: String): IvfPqMeta =
+    IvfPqMeta.parse(path, ivfPqStore(spark, path).readSidecar())
 
   /** Append a batch of NEW vectors to a persisted IVF-PQ index with the
     * build-time codebooks FROZEN (the FAISS serving contract: appends
@@ -1033,13 +992,8 @@ object Similarity {
     * PQ-encode, append one file per touched list — so rolling ingestion
     * costs O(batch), never O(corpus). Batch ids must continue the
     * monotone sequence (`min(batch) > meta.maxId`), the same
-    * never-reuse-ids contract as the signature index.
-    *
-    * Crash safety mirrors [[graft.operators.Dedup.appendToSignatureIndex]]:
-    * a `_pending_append.json` marker is written BEFORE the codes append
-    * and deleted only AFTER the meta write; [[readIvfPqMeta]] refuses an
-    * index whose marker is present, so a crashed append can never be
-    * silently retried into a double-insert.
+    * never-reuse-ids contract as the signature index. Crash safety: the
+    * pending-append marker of [[IndexStore]].
     */
   def appendToIvfPqIndex(newVecs: DataFrame, idCol: String, vecCol: String,
       path: String): Unit = {
@@ -1048,7 +1002,8 @@ object Similarity {
         .isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"appendToIvfPqIndex requires a numeric id column: $idCol is " +
         newVecs.schema(idCol).dataType.simpleString)
-    val meta = readIvfPqMeta(spark, path)
+    val store = ivfPqStore(spark, path)
+    val meta = IvfPqMeta.parse(path, store.readSidecarForUpdate())
     // balanced index: the batch joins the index's permuted space here
     val clean = applyRot(applyPerm(newVecs.filter(col(vecCol).isNotNull)
       .select(col(idCol).cast("long").as(idCol),
@@ -1081,7 +1036,7 @@ object Similarity {
     // marker FIRST (see scaladoc); list-clustered append: one file per
     // touched list per batch, not tasks×lists. Residual indexes re-use
     // the fused assign-subtract-encode pass (meta.donors ARE residuals).
-    writeIvfPqPendingMarker(spark, path, s.getLong(0), s.getLong(1), s.getLong(3))
+    store.writeMarker(s.getLong(0), s.getLong(1), s.getLong(3))
     val coded =
       if (meta.residual) {
         val encR = residualEncodeUdf(spark, meta.centroids, meta.donors,
@@ -1107,24 +1062,21 @@ object Similarity {
         .write.mode("append").partitionBy("ivf_list").parquet(s"$path/codes"),
       () => batchErr = meanQuantErr(clean, "__v", meta.centroids,
         meta.donors, meta.m, meta.residual, meta.assignGroups))
-    writeIvfPqMeta(spark, path, meta.m, meta.centroids, meta.donors,
-      s.getLong(1), meta.nVecs + s.getLong(3), meta.residual,
-      meta.assignGroups, Some(range), Some(fp), baseErr = meta.baseErr,
-      appendErrs = (meta.appendErrs :+ batchErr).takeRight(64),
-      perm = meta.perm, rot = meta.rot)
-    clearIvfPqPendingMarker(spark, path)
+    store.writeSidecar(meta.copy(maxId = s.getLong(1),
+      nVecs = meta.nVecs + s.getLong(3), last = Some(range), lastFp = Some(fp),
+      appendErrs = (meta.appendErrs :+ batchErr).takeRight(64)).json)
+    store.clearMarker()
   }
 
   /** Rewrite the codes relation so every coarse list holds ONE file again
     * — the maintenance pass for a long-lived rolling index where each
-    * append adds a file per touched list. Staged for crash safety
-    * (rewrite into `_compact_tmp/`, swap, meta re-asserted LAST), same
-    * shape as the signature index's compaction.
+    * append adds a file per touched list, staged as every [[IndexStore]]
+    * rewrite.
     *
     * Codes whose lists already hold one file each — e.g. right after
     * [[removeFromIvfPqIndex]] — cost one listing and no job: compaction
     * returns without rewriting or touching the meta, once the
-    * pending-marker and stale `_codes_old` refusals have passed.
+    * pending-marker and stale stash refusals have passed.
     */
   def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit =
@@ -1146,7 +1098,7 @@ object Similarity {
         dropIds.schema(idCol).dataType.simpleString)
     val ids = broadcast(
       dropIds.select(col(idCol).cast("long").as("__drop_id")).distinct())
-    val live = IndexRelation.read(spark, s"$path/codes")
+    val live = IndexStore.read(spark, s"$path/codes")
     // the codes relation is exactly (id, pq_codes) partitioned by ivf_list
     val liveIdCol = live.columns.filterNot(Set("ivf_list", "pq_codes")).head
     // present-count agg rides as a THUNK so the rewrite overlaps it with
@@ -1168,60 +1120,15 @@ object Similarity {
       })
   }
 
-  /** Staged rewrite shared by compaction and removal. With `compactOnly`,
-    * codes whose lists each hold one file are left alone (no job); the
-    * refusals — pending marker, stale stash — run before that shortcut.
-    */
+  /** The [[IndexStore]] rewrite shared by compaction and removal; the
+    * meta keeps everything but nVecs, which drops by `removed`. */
   private def rewriteIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, compactOnly: Boolean, transform: DataFrame => DataFrame,
-      removed: () => Long): Unit = {
-    val meta = readIvfPqMeta(spark, path)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tmp = s"$path/_compact_tmp"
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    val liveP = new org.apache.hadoop.fs.Path(path, "codes")
-    val stash = new org.apache.hadoop.fs.Path(path, "_codes_old")
-    // a surviving stash means a PRIOR rewrite crashed mid-swap — renaming
-    // onto an existing dir would nest the source inside it, so refuse
-    // (mirrors the pending-marker refusal) until it is recovered/deleted.
-    // Checked BEFORE the corpus rewrite below: refusing after it would
-    // waste the full index-sized pass and strand the tmp copy.
-    if (fs.exists(stash))
-      throw new IllegalStateException(
-        s"$path: stale _codes_old present — a previous compact/remove " +
-          "crashed mid-swap. Recover codes/ from it (or delete it if " +
-          "codes/ is intact), then retry.")
-    if (compactOnly && !IndexRelation.needsCompaction(spark, liveP.toString))
-      return
-    // tmp rewrite ∥ removed-count thunk (round-20, §2.6): independent
-    // reads of the live codes; a thunk refusal fires before the swap and
-    // deletes the now-worthless tmp, leaving the live index untouched
-    @volatile var nRemoved = 0L
-    try graft.operators.JobPar.run(
-      () => transform(IndexRelation.read(spark, s"$path/codes"))
-        .repartition(col("ivf_list"))
-        .write.mode("overwrite").partitionBy("ivf_list")
-        .parquet(s"$tmp/codes"),
-      () => { nRemoved = removed() })
-    catch { case e: Throwable =>
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      throw e
+      removed: () => Long): Unit =
+    ivfPqStore(spark, path).rewrite(compactOnly, transform, removed) { (raw, n) =>
+      val meta = IvfPqMeta.parse(path, raw)
+      meta.copy(nVecs = math.max(0L, meta.nVecs - n)).json
     }
-    // stash-aside swap (same as TextIndex.rewriteIndex): live → stash,
-    // tmp → live, stash deleted LAST, so a crash at any point leaves a
-    // recoverable full copy — never a meta with no codes
-    require(fs.rename(liveP, stash),
-      s"ivfpq-index rewrite: could not stage $path/codes aside")
-    require(fs.rename(new org.apache.hadoop.fs.Path(s"$tmp/codes"), liveP),
-      s"ivfpq-index rewrite: rename of codes failed — recover the live " +
-        s"copy from $path/_codes_old or the rewritten one from $tmp")
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    writeIvfPqMeta(spark, path, meta.m, meta.centroids, meta.donors,
-      meta.maxId, math.max(0L, meta.nVecs - nRemoved), meta.residual,
-      meta.assignGroups, meta.last, meta.lastFp, baseErr = meta.baseErr,
-      appendErrs = meta.appendErrs, perm = meta.perm, rot = meta.rot)
-    fs.delete(stash, true)
-  }
 
   /** Probe a persisted IVF-PQ index: sidecar codebooks → driver-side
     * probe-list choice → partition-pruned scan of `codes/` (check
@@ -1237,7 +1144,7 @@ object Similarity {
     val query = rotQuery(permQuery(rawQuery, meta.perm), meta.rot)
     val probed = nearestListIds(query, meta.centroids, nProbe)
     if (!meta.residual) {
-      val codes = IndexRelation.read(spark, s"$path/codes")
+      val codes = IndexStore.read(spark, s"$path/codes")
         .filter(col("ivf_list").isin(probed: _*))
         .select(col(idCol), col("pq_codes"))
       return pqSearchCodes(codes, idCol, meta.donors, query, k, meta.m)
@@ -1267,7 +1174,7 @@ object Similarity {
       while (j < cs.length) { s += bt.value((lst, j, cs(j))); j += 1 }
       s
     }
-    IndexRelation.read(spark, s"$path/codes")
+    IndexStore.read(spark, s"$path/codes")
       .filter(col("ivf_list").isin(probed: _*))
       .select(col(idCol), adc(col("ivf_list"), col("pq_codes")).as("adc"))
       .orderBy(col("adc").asc, col(idCol).asc)
@@ -1982,7 +1889,7 @@ object Similarity {
     */
   def ivfPqListStats(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    IndexRelation.read(spark, s"$path/codes")
+    IndexStore.read(spark, s"$path/codes")
       .groupBy(col("ivf_list").cast("long").as("ivf_list"))
       .agg(count(lit(1)).as("n"))
 
@@ -2137,7 +2044,7 @@ object Similarity {
         (qid, s)
       }.toSeq
     }
-    val scored = IndexRelation.read(spark, s"$path/codes")
+    val scored = IndexStore.read(spark, s"$path/codes")
       .filter(col("ivf_list").isin(allLists: _*))
       .select(col(idCol), col("ivf_list").cast("long").as("__lst"),
         col("pq_codes"))

@@ -27,11 +27,9 @@ import graft.functions.TextFns
   * ROLLING lifecycle (mirrors the signature index): [[append]] adds an
   * ingestion batch under the monotone-id contract, updating N/avgdl
   * exactly; [[compact]] rewrites each bucket to one file; [[remove]] is
-  * the takedown pass. [[append]] is crash-safe via a
-  * `_pending_append.json` marker written before the postings append and
-  * cleared after the stats commit — every entry point refuses while it
-  * exists (a crash between the two would otherwise leave stats that
-  * can't arm the double-append guard).
+  * the takedown pass. Crash safety, for all of them: [[IndexStore]] —
+  * the stats sidecar is the commit record, and the index stages its
+  * rewrites BESIDE itself (the postings dir is the index root).
   */
 object TextIndex {
 
@@ -57,13 +55,15 @@ object TextIndex {
       (n0, statsRow.getDouble(1),
         if (statsRow.isNullAt(2)) Long.MinValue else statsRow.getLong(2))
     } finally base.unpersist() // even on the empty-corpus refusal
-    writeStats(spark, path, n, avgdl, nBuckets, maxId)
-    clearPendingMarker(spark, path) // rebuild is the crash recovery path
-    // ... for crashed rewrites too: drop any stale stash dir
-    val stash = new org.apache.hadoop.fs.Path(s"${path}_old")
-    stash.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(stash, true)
+    val store = textStore(spark, path)
+    store.writeSidecar(Stats(n, avgdl, nBuckets, maxId, None, None).json)
+    store.reset() // a full rebuild is the documented crash recovery
   }
+
+  /** The index as an [[IndexStore]]: one relation, the root itself. */
+  private def textStore(spark: SparkSession, path: String) =
+    IndexStore(spark, path, "_text_index_stats.json", "TextIndex.write",
+      Seq(path -> "bucket"))
 
   /** The shared postings shape: exploded term counts plus one sentinel
     * posting (term "", tf 0) per zero-token doc, bucket-clustered before
@@ -85,60 +85,37 @@ object TextIndex {
   }
 
   private case class Stats(n: Double, avgdl: Double, nBuckets: Int,
-    maxId: Long, last: Option[(Long, Long, Long)], lastFp: Option[Long])
-
-  private def writeStats(spark: SparkSession, path: String, n: Double,
-      avgdl: Double, nBuckets: Int, maxId: Long,
-      last: Option[(Long, Long, Long)] = None,
-      lastFp: Option[Long] = None): Unit = {
-    val lastJson = last
-      .map { case (mn, mx, c) => s""","lastMin":$mn,"lastMax":$mx,"lastN":$c""" }
-      .getOrElse("") +
-      lastFp.map(f => s""","lastFp":$f""").getOrElse("")
-    val sidecar =
+      maxId: Long, last: Option[(Long, Long, Long)], lastFp: Option[Long]) {
+    def json: String = {
+      val lastJson = last
+        .map { case (mn, mx, c) => s""","lastMin":$mn,"lastMax":$mx,"lastN":$c""" }
+        .getOrElse("") +
+        lastFp.map(f => s""","lastFp":$f""").getOrElse("")
       s"""{"n":$n,"avgdl":$avgdl,"nBuckets":$nBuckets,"maxId":$maxId$lastJson}"""
-    val p = new org.apache.hadoop.fs.Path(path, "_text_index_stats.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(sidecar.getBytes("UTF-8")) finally os.close()
+    }
   }
 
-  private def pendingMarkerPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_pending_append.json")
-
-  private def clearPendingMarker(spark: SparkSession, path: String): Unit = {
-    val p = pendingMarkerPath(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
+  private object Stats {
+    def parse(path: String, raw: String): Stats = {
+      def num(key: String): Double =
+        ("\"" + key + "\":([-0-9.eE]+)").r.findFirstMatchIn(raw)
+          .map(_.group(1).toDouble)
+          .getOrElse(throw new IllegalStateException(s"$path: no '$key' in stats"))
+      def optLong(key: String): Option[Long] =
+        ("\"" + key + "\":(-?[0-9]+)").r.findFirstMatchIn(raw)
+          .map(_.group(1).toLong)
+      Stats(num("n"), num("avgdl"), num("nBuckets").toInt,
+        // pre-rolling sidecars have no maxId: treat as unavailable — append
+        // refuses with a rebuild hint, search never needs it
+        optLong("maxId").getOrElse(Long.MaxValue),
+        for (mn <- optLong("lastMin"); mx <- optLong("lastMax");
+          c <- optLong("lastN")) yield (mn, mx, c),
+        optLong("lastFp"))
+    }
   }
 
-  private def readStats(spark: SparkSession, path: String): Stats = {
-    val p = new org.apache.hadoop.fs.Path(path, "_text_index_stats.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(pendingMarkerPath(path)))
-      throw new IllegalStateException(
-        s"$path: _pending_append.json present — a previous append crashed " +
-          "before committing its stats. Rebuild with TextIndex.write, then " +
-          "delete the marker.")
-    val in = fs.open(p)
-    val raw = try {
-      val len = fs.getFileStatus(p).getLen.toInt
-      val buf = new Array[Byte](len); in.readFully(0, buf); new String(buf, "UTF-8")
-    } finally in.close()
-    def num(key: String): Double =
-      ("\"" + key + "\":([-0-9.eE]+)").r.findFirstMatchIn(raw)
-        .map(_.group(1).toDouble)
-        .getOrElse(throw new IllegalStateException(s"$path: no '$key' in stats"))
-    def optLong(key: String): Option[Long] =
-      ("\"" + key + "\":(-?[0-9]+)").r.findFirstMatchIn(raw)
-        .map(_.group(1).toLong)
-    Stats(num("n"), num("avgdl"), num("nBuckets").toInt,
-      // pre-rolling sidecars have no maxId: treat as unavailable — append
-      // refuses with a rebuild hint, search never needs it
-      optLong("maxId").getOrElse(Long.MaxValue),
-      for (mn <- optLong("lastMin"); mx <- optLong("lastMax");
-        c <- optLong("lastN")) yield (mn, mx, c),
-      optLong("lastFp"))
-  }
+  private def readStats(spark: SparkSession, path: String): Stats =
+    Stats.parse(path, textStore(spark, path).readSidecar())
 
   /** Append an ingestion batch to an existing index — the rolling form
     * that keeps BM25 serving without rebuilds. Batch ids must continue
@@ -162,7 +139,8 @@ object TextIndex {
         .isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"TextIndex.append requires a numeric id column: $idCol is " +
         docs.schema(idCol).dataType.simpleString)
-    val st = readStats(spark, path)
+    val store = textStore(spark, path)
+    val st = Stats.parse(path, store.readSidecarForUpdate())
     require(st.maxId != Long.MaxValue,
       s"$path: stats sidecar predates the rolling contract (no maxId) — " +
         "rebuild with TextIndex.write before appending")
@@ -197,36 +175,25 @@ object TextIndex {
       require(s.getLong(0) > st.maxId,
         s"TextIndex.append requires monotone ids: index maxId=${st.maxId} >= " +
           s"min(batch)=${s.getLong(0)} — renumber (or rebuild the index)")
-      writePendingMarker(spark, path, s.getLong(0), s.getLong(1), s.getLong(3))
+      store.writeMarker(s.getLong(0), s.getLong(1), s.getLong(3))
       writePostings(base, path, st.nBuckets, mode = "append")
       val nb = s.getLong(3).toDouble
-      writeStats(spark, path, st.n + nb,
+      store.writeSidecar(Stats(st.n + nb,
         (st.n * st.avgdl + s.getLong(4)) / (st.n + nb), st.nBuckets,
-        s.getLong(1), Some(range), Some(fp))
-      clearPendingMarker(spark, path)
+        s.getLong(1), Some(range), Some(fp)).json)
+      store.clearMarker()
     } finally base.unpersist()
-  }
-
-  private def writePendingMarker(spark: SparkSession, path: String,
-      minId: Long, maxId: Long, n: Long): Unit = {
-    val p = pendingMarkerPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(
-      s"""{"minId":$minId,"maxId":$maxId,"n":$n}""".getBytes("UTF-8"))
-    finally os.close()
   }
 
   /** Rewrite every bucket to one file — the maintenance pass after many
     * [[append]]s (each adds ≤1 file per touched bucket; after hundreds of
-    * batches the per-probe open cost creeps up). Staged for crash safety
-    * exactly like the signature index: rewrite into `_compact_tmp`, swap,
-    * re-assert stats LAST.
+    * batches the per-probe open cost creeps up), staged as every
+    * [[IndexStore]] rewrite.
     *
     * An index whose buckets already hold one file each — e.g. right after
     * [[remove]] — costs one listing and no job: it returns without
     * rewriting or touching the stats, once the pending-marker and stale
-    * `_old` stash refusals have passed.
+    * stash refusals have passed.
     */
   def compact(spark: SparkSession, path: String): Unit =
     rewriteIndex(spark, path, compactOnly = true, identity,
@@ -263,10 +230,10 @@ object TextIndex {
     require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
     require(skewThreshold > 1.0, s"skewThreshold $skewThreshold must be > 1")
     val st = readStats(spark, path) // also enforces the pending-marker refusal
-    val counts = IndexRelation.bucketFileCounts(spark, path)
+    val counts = IndexStore.bucketFileCounts(spark, path)
     val maxFiles = counts.maxOption.getOrElse(0).toLong
     val nFiles = counts.map(_.toLong).sum
-    val occ = IndexRelation.read(spark, path)
+    val occ = IndexStore.read(spark, path)
       .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
       .agg(coalesce(max(col("n")), lit(0L)),
         coalesce(sum(col("n")), lit(0L))).head()
@@ -302,7 +269,7 @@ object TextIndex {
     rewriteIndex(spark, path, compactOnly = false,
       rel => rel.join(ids, Seq("doc_id"), "left_anti"),
       removed = () => {
-        val present = IndexRelation.read(spark, path)
+        val present = IndexStore.read(spark, path)
           .select(col("doc_id"), col("dl")).distinct()
           .join(ids, Seq("doc_id"), "left_semi")
           .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
@@ -310,62 +277,25 @@ object TextIndex {
       })
   }
 
-  /** Staged rewrite shared by [[compact]] and [[remove]]. With
-    * `compactOnly`, an index whose buckets each hold one file is left
-    * alone (no job); the refusals — pending marker, stale stash — run
-    * before that shortcut and before any rewrite.
-    */
+  /** The [[IndexStore]] rewrite shared by [[compact]] and [[remove]]:
+    * N and avgdl drop by the `removed` (docs, Σdl) — refusing to empty
+    * the index before anything is swapped. */
   private def rewriteIndex(spark: SparkSession, path: String,
       compactOnly: Boolean, transform: DataFrame => DataFrame,
-      removed: () => (Long, Long)): Unit = {
-    val st = readStats(spark, path)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tmp = new org.apache.hadoop.fs.Path(s"${path}_compact_tmp")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    val live = new org.apache.hadoop.fs.Path(path)
-    val stash = new org.apache.hadoop.fs.Path(s"${path}_old")
-    // a surviving stash means a PRIOR rewrite crashed mid-swap — renaming
-    // onto an existing dir would nest the live copy INSIDE it and the swap
-    // would proceed over polluted state, so refuse (mirrors the
-    // pending-marker refusal): recover or delete the stash first. Checked
-    // BEFORE the rewrite, which would otherwise be wasted.
-    if (fs.exists(stash))
-      throw new IllegalStateException(
-        s"$path: stale ${path}_old present — a previous compact/remove " +
-          "crashed mid-swap. Recover the index from it (or delete it if " +
-          s"$path is intact), then retry.")
-    if (compactOnly && !IndexRelation.needsCompaction(spark, path)) return
-    // tmp rewrite and the removed-stats thunk are independent reads of the
-    // LIVE index — overlapped (JobPar, §2.6); nothing destructive happens
-    // until both landed and the refusal below has passed (a failure or a
-    // refusal leaves the live index untouched and deletes the tmp)
-    @volatile var removedDocs = 0L
-    @volatile var removedDl = 0L
-    try JobPar.run(
-      () => transform(IndexRelation.read(spark, path))
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(tmp.toString),
-      () => { val r = removed(); removedDocs = r._1; removedDl = r._2 })
-    catch { case e: Throwable => fs.delete(tmp, true); throw e }
-    val n2 = st.n - removedDocs
-    if (!(n2 > 0)) {
-      fs.delete(tmp, true)
-      throw new IllegalArgumentException(
-        "requirement failed: TextIndex.remove would remove every indexed " +
-          "document — delete the index and TextIndex.write a new corpus " +
-          "instead")
+      removed: () => (Long, Long)): Unit =
+    textStore(spark, path).rewrite(compactOnly, transform, removed) {
+      case (raw, (removedDocs, removedDl)) =>
+        val st = Stats.parse(path, raw)
+        val n2 = st.n - removedDocs
+        if (!(n2 > 0))
+          throw new IllegalArgumentException(
+            "requirement failed: TextIndex.remove would remove every indexed " +
+              "document — delete the index and TextIndex.write a new corpus " +
+              "instead")
+        st.copy(n = n2, avgdl =
+          if (removedDocs == 0) st.avgdl
+          else (st.n * st.avgdl - removedDl) / n2).json
     }
-    // swap: live → stash, tmp → live, stats re-asserted onto the new dir,
-    // stash deleted last. A crash mid-swap leaves a recoverable copy.
-    require(fs.rename(live, stash), s"compact: could not stage $path aside")
-    require(fs.rename(tmp, live),
-      s"compact: rename into place failed — recover from ${path}_old")
-    writeStats(spark, path, n2,
-      if (removedDocs == 0) st.avgdl
-      else (st.n * st.avgdl - removedDl) / n2,
-      st.nBuckets, st.maxId, st.last, st.lastFp)
-    fs.delete(stash, true)
-  }
 
   /** BM25 top-k over the index for a literal term set. Scans ONLY the
     * partitions the query terms hash to.
@@ -381,7 +311,7 @@ object TextIndex {
           org.apache.spark.unsafe.types.UTF8String.fromString(t),
           org.apache.spark.sql.types.StringType, 42L), nBuckets))
       .distinct
-    val hits = IndexRelation.read(spark, path)
+    val hits = IndexStore.read(spark, path)
       .filter(col("bucket").isin(buckets: _*))
       .filter(col("term").isin(terms: _*))
     val dfreq = hits.groupBy(col("term"))
@@ -443,7 +373,7 @@ object TextIndex {
           org.apache.spark.unsafe.types.UTF8String.fromString(t),
           org.apache.spark.sql.types.StringType, 42L), nBuckets))
       .distinct
-    val hits = IndexRelation.read(spark, path)
+    val hits = IndexStore.read(spark, path)
       .filter(col("bucket").isin(buckets: _*))
       .filter(col("term").isin(terms: _*))
     val dfreq = hits.groupBy(col("term"))

@@ -542,6 +542,37 @@ class DedupSimilaritySpec extends AnyFunSuite {
       "a refused removal must delete _compact_tmp")
   }
 
+  test("signature index: a stale stash refuses rewrites; rebuild clears " +
+      "the stash and _compact_tmp") {
+    val (existing, _) = indexFixture
+    val idx = java.nio.file.Files.createTempDirectory("graft_sigstash")
+      .resolve("idx").toString
+    def build(): Unit = Dedup.writeSignatureIndex(existing, "doc_id", "text",
+      idx, shingleN = 2, k = 16, bands = 4, nBuckets = 8)
+    build()
+    val copyOf1 = Seq(
+      (40L, "the quick brown fox jumps over the lazy dog near the river bank"))
+      .toDF("doc_id", "text")
+    def probe() = Dedup.dedupIncrementalIndexed(copyOf1, idx, "doc_id", "text",
+      threshold = 0.6).count()
+    assert(probe() == 0L)
+    // a rewrite that crashed after its swap left a stash and its tmp copy
+    val stash = java.nio.file.Paths.get(idx, "_docs_old")
+    val tmpRoot = java.nio.file.Paths.get(idx, "_compact_tmp")
+    for (d <- Seq(stash.resolve("ib=0"), tmpRoot.resolve("docs").resolve("ib=0"))) {
+      java.nio.file.Files.createDirectories(d)
+      java.nio.file.Files.write(d.resolve("part-0.parquet"), Array[Byte](1, 2, 3))
+    }
+    val e = intercept[IllegalStateException](Dedup.removeFromSignatureIndex(
+      spark, idx, Seq(1L).toDF("doc_id"), "doc_id"))
+    assert(e.getMessage.contains("_docs_old"), e.getMessage)
+    assert(probe() == 0L, "the live index still serves")
+    build() // the documented recovery
+    assert(!java.nio.file.Files.exists(stash), "rebuild must clear the stash")
+    assert(!java.nio.file.Files.exists(tmpRoot), "rebuild must clear _compact_tmp")
+    assert(probe() == 0L)
+  }
+
   test("dedupCorpusTransitiveBy keeps the best-scoring cluster member") {
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta", 7.0),
@@ -768,10 +799,16 @@ class DedupSimilaritySpec extends AnyFunSuite {
       Similarity.compactIvfPqIndex(spark, idx))
     assert(e.getMessage.contains("_codes_old"), e.getMessage)
     assert(probe() == want, "live index must be untouched by the refusal")
-    // rebuild (the documented recovery) clears the stash
+    // the crashed rewrite's tmp copy survived too
+    val tmpRoot = java.nio.file.Paths.get(idx, "_compact_tmp")
+    val tmpPart = tmpRoot.resolve("codes").resolve("ivf_list=0").resolve("part-0.parquet")
+    java.nio.file.Files.createDirectories(tmpPart.getParent)
+    java.nio.file.Files.write(tmpPart, Array[Byte](1, 2, 3))
+    // rebuild (the documented recovery) clears the stash and the tmp
     Similarity.writeIvfPqIndex(vecs, "vec_id", "embedding", idx,
       nLists = 4, m = 4, nCodes = 4)
     assert(!java.nio.file.Files.exists(stash), "rebuild must clear the stash")
+    assert(!java.nio.file.Files.exists(tmpRoot), "rebuild must clear _compact_tmp")
     Similarity.compactIvfPqIndex(spark, idx)
     assert(probe() == want)
   }

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Dedup, IndexRelation, Similarity, TextIndex}
+import graft.operators.{Dedup, IndexStore, Similarity, TextIndex}
 
 class IndexLifecycleCostSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -39,8 +39,8 @@ class IndexLifecycleCostSpec extends AnyFunSuite {
     val text = tmpIdx("graft_cost_text")
     TextIndex.write(docs(1, 40), "doc_id", "text", text, nBuckets = 8)
     IndexCheck.assertFreeCompaction(text)(TextIndex.compact(spark, text))
-    assert(!Files.exists(Paths.get(s"${text}_compact_tmp")) &&
-      !Files.exists(Paths.get(s"${text}_old")))
+    assert(!Files.exists(Paths.get(text).resolveSibling("_compact_tmp")) &&
+      !Files.exists(Paths.get(text).resolveSibling("_idx_old")))
 
     val pq = tmpIdx("graft_cost_pq")
     Similarity.writeIvfPqIndex(vecs(0, 59), "vec_id", "embedding", pq,
@@ -64,16 +64,16 @@ class IndexLifecycleCostSpec extends AnyFunSuite {
     val others = Seq("postings", "hashes").map(r => r -> IndexCheck.snapshot(s"$sig/$r")).toMap
     val (_, jobs) = JobLog.of(spark)(Dedup.compactSignatureIndex(spark, sig))
     assert(jobs.nonEmpty, "a multi-file bucket must be compacted")
-    assert(IndexRelation.bucketFileCounts(spark, s"$sig/docs").forall(_ == 1))
+    assert(IndexStore.bucketFileCounts(spark, s"$sig/docs").forall(_ == 1))
     for ((r, snap) <- others)
       assert(IndexCheck.snapshot(s"$sig/$r") == snap, s"$r was rewritten")
   }
 
   test("index relations are read with exactly the schema inference returns") {
     def check(dir: String): Unit = {
-      assert(IndexRelation.schemaOf(spark, dir).isDefined,
+      assert(IndexStore.schemaOf(spark, dir).isDefined,
         s"$dir: schema not taken from the files")
-      val declared = IndexRelation.read(spark, dir).schema
+      val declared = IndexStore.read(spark, dir).schema
       val inferred = spark.read.parquet(dir).schema
       assert(declared == inferred, s"$dir:\n$declared\nvs inferred\n$inferred")
     }
@@ -82,7 +82,7 @@ class IndexLifecycleCostSpec extends AnyFunSuite {
       shingleN = 2, k = 16, bands = 4, nBuckets = 8)
     Dedup.appendToSignatureIndex(docs(41, 50), "doc_id", "text", sig)
     Seq("docs", "postings", "hashes").foreach(r => check(s"$sig/$r"))
-    assert(IndexRelation.schemaOf(spark, s"$sig/docs").get("ib")
+    assert(IndexStore.schemaOf(spark, s"$sig/docs").get("ib")
       .dataType == org.apache.spark.sql.types.IntegerType)
 
     val text = tmpIdx("graft_schema_text")
@@ -99,7 +99,7 @@ class IndexLifecycleCostSpec extends AnyFunSuite {
     Similarity.appendToIvfPqIndex(vecs(big + 60, big + 79, "item"), "item",
       "embedding", plain)
     check(s"$plain/codes")
-    assert(IndexRelation.schemaOf(spark, s"$plain/codes").get("ivf_list")
+    assert(IndexStore.schemaOf(spark, s"$plain/codes").get("ivf_list")
       .dataType == org.apache.spark.sql.types.LongType)
     val resid = tmpIdx("graft_schema_pqr")
     Similarity.writeIvfPqIndex(vecs(0, 59), "vec_id", "embedding", resid,

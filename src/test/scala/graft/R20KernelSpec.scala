@@ -84,6 +84,28 @@ class R20KernelSpec extends AnyFunSuite {
     got.foreach(r => assert(r.getSeq[Long](0).head == r.getLong(1)))
   }
 
+  test("centroid kernels compare by codebook content: equal codebooks " +
+      "allocated apart give ==, equal hashes and semanticEquals") {
+    import graft.expr.{NearestCentroidIdExpr, NearestCentroidIdsExpr}
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    val child = BoundReference(0, ArrayType(DoubleType), nullable = true)
+    def codebook() = (Array(3L, 7L, 9L),
+      Array(Array(0.0, 1.0), Array(0.5, -2.0), Array(4.0, 4.0)))
+    def same(a: Expression, b: Expression): Unit = {
+      assert(a == b && a.hashCode == b.hashCode, s"$a vs $b")
+      assert(a.semanticEquals(b), s"$a vs $b")
+    }
+    val (i1, v1) = codebook(); val (i2, v2) = codebook()
+    assert(!(v1 eq v2))
+    same(NearestCentroidIdExpr(child, i1, v1), NearestCentroidIdExpr(child, i2, v2))
+    same(NearestCentroidIdsExpr(child, i1, v1, 2), NearestCentroidIdsExpr(child, i2, v2, 2))
+    // and still tell different codebooks (or probe counts) apart
+    v2(1)(1) = -2.5
+    assert(NearestCentroidIdExpr(child, i1, v1) != NearestCentroidIdExpr(child, i2, v2))
+    assert(NearestCentroidIdsExpr(child, i1, v1, 2) != NearestCentroidIdsExpr(child, i1, v1, 3))
+  }
+
   test("markovRemovalEffect: driver-side value iteration == the Spark " +
       "loop bit-for-bit (gate toggled)") {
     // 4 channels, converters and non-converters, repeated transitions

@@ -178,15 +178,22 @@ class TextIndexSpec extends AnyFunSuite {
     // simulate a prior compact/remove that crashed mid-swap: its stash dir
     // survives. A blind rename(live, stash) would NEST live inside it and
     // swap over polluted state — the rewrite must refuse instead.
-    val stash = java.nio.file.Paths.get(s"${path}_old")
+    val stash = java.nio.file.Paths.get(path).resolveSibling("_idx_old")
     java.nio.file.Files.createDirectory(stash)
     val e = intercept[IllegalStateException](TextIndex.compact(spark, path))
     assert(e.getMessage.contains("_old"), e.getMessage)
     // the live index is untouched and still serves
     assert(TextIndex.search(spark, path, Seq("spark"), 5).collect().nonEmpty)
-    // rebuild (the documented recovery) clears the stash; compact then works
+    // the crashed rewrite's tmp copy survived too
+    val tmpRoot = java.nio.file.Paths.get(path).resolveSibling("_compact_tmp")
+    val tmpPart = tmpRoot.resolve("idx").resolve("bucket=0").resolve("part-0.parquet")
+    java.nio.file.Files.createDirectories(tmpPart.getParent)
+    java.nio.file.Files.write(tmpPart, Array[Byte](1, 2, 3))
+    // rebuild (the documented recovery) clears the stash and the tmp;
+    // compact then works
     TextIndex.write(docs, "doc_id", "text", path, nBuckets = 8)
     assert(!java.nio.file.Files.exists(stash), "rebuild must clear the stash")
+    assert(!java.nio.file.Files.exists(tmpRoot), "rebuild must clear _compact_tmp")
     TextIndex.compact(spark, path)
     assert(TextIndex.search(spark, path, Seq("spark"), 5).collect().nonEmpty)
   }
