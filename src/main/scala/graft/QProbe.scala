@@ -2,12 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Round-19 generic isolated-query probe (the Q180Probe discipline,
-  * parameterized): run ONE named query alone — one warm pass at the
-  * sibling sf0.01, then N timed repetitions at the bench sf in one JVM —
-  * so a query's intrinsic hot cost is measured with zero group context.
-  * Used for before/after evidence on every optimization this round and
-  * for the q107 watch rule (SCALE.md §Round 18).
+/** Round-19 generic isolated-query probe: run ONE named query alone —
+  * one warm pass at the sibling sf0.01, then N timed repetitions at the
+  * bench sf in one JVM — so a query's intrinsic hot cost is measured
+  * with zero group context. Used for before/after evidence on every
+  * optimization this round and for the q107 watch rule (SCALE.md
+  * §Round 18).
   *
   * Usage: sbt "runMain graft.QProbe <queryName> [reps]"
   */

@@ -695,13 +695,17 @@ object GraftExpressions {
     ColumnBridge.column(GunzipTextExpr(
       Cast(ColumnBridge.expression(c), BinaryType), maxBytes))
 
+  /** [[CosineSimExpr]]; refuses a null element with
+    * `IllegalArgumentException`.
+    */
   def cosineSim(a: Column, b: Column): Column =
     ColumnBridge.column(CosineSimExpr(
       Cast(ColumnBridge.expression(a), ArrayType(DoubleType)),
       Cast(ColumnBridge.expression(b), ArrayType(DoubleType))))
 
   /** [[NearestCentroidIdExpr]] over an id-keyed codebook (the
-    * `Similarity` coarse-quantizer shape).
+    * `Similarity` coarse-quantizer shape); refuses a null vector element
+    * with `IllegalArgumentException`.
     */
   def nearestCentroidId(v: Column,
       centroids: Array[(Long, Array[Double])]): Column =
@@ -709,7 +713,9 @@ object GraftExpressions {
       Cast(ColumnBridge.expression(v), ArrayType(DoubleType)),
       centroids.map(_._1), centroids.map(_._2)))
 
-  /** [[NearestCentroidIdsExpr]]: the `nProbe` nearest centroid ids. */
+  /** [[NearestCentroidIdsExpr]]: the `nProbe` nearest centroid ids;
+    * refuses a null vector element with `IllegalArgumentException`.
+    */
   def nearestCentroidIds(v: Column, centroids: Array[(Long, Array[Double])],
       nProbe: Int): Column =
     ColumnBridge.column(NearestCentroidIdsExpr(

@@ -339,7 +339,7 @@ object TextFns {
   val SimhashBits = 60
 
   /** The `udf` form of the SimHash kernel — kept for the native-vs-UDF
-    * equality spec and A/B; production paths route through the native
+    * equality spec; production paths route through the native
     * [[graft.expr.SimhashExpr]] via [[simhash64]].
     */
   val simhash64Udf = udf { (toks: Seq[String]) =>

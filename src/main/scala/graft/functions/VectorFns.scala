@@ -24,21 +24,6 @@ object VectorFns {
   def dotExpr(a: Column, b: Column): Column =
     aggregate(zip_with(d(a), d(b), (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
-  private val cosineKernel = udf { (a: Seq[Double], b: Seq[Double]) =>
-    // index-ordered double accumulation — same fold order as the HOF
-    // variant, so results are bit-identical (oracle-stable).
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) {
-      val x = a(i); val y = b(i)
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    val denom = math.sqrt(na) * math.sqrt(nb)
-    if (denom == 0.0) 0.0 else dot / denom
-  }
-
   private val l2Kernel = udf { (a: Seq[Double], b: Seq[Double]) =>
     var s = 0.0
     var i = 0
@@ -55,12 +40,11 @@ object VectorFns {
     * Native codegen expression over ArrayData (`CosineSimExpr`) — the UDF
     * kernel converted each array to Seq[Double] per row; same accumulation
     * order, bit-identical results (oracle-stable).
+    * A null element in either vector is refused: the kernel fails the job
+    * with `IllegalArgumentException` rather than read the slot as a number.
     */
   def cosine(a: Column, b: Column): Column =
     graft.expr.GraftExpressions.cosineSim(a, b)
-
-  /** The pre-native UDF kernel, kept for A/B timing in probes. */
-  def cosineUdf(a: Column, b: Column): Column = cosineKernel(d(a), d(b))
 
   def l2Distance(a: Column, b: Column): Column = l2Kernel(d(a), d(b))
 

@@ -351,7 +351,7 @@ object Curation {
     * `tokenBudgetMix`. At 100 TB the caller should tokenize once,
     * `.persist()` (or write to parquet) and pass the relation to the
     * *Tokenized overloads: however many scorers run, the corpus text is
-    * then scanned a single time (CurationProbe asserts the plan).
+    * then scanned a single time (`CurationPlanSpec` asserts the plan).
     */
   def tokenized(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.filter(col(textCol).isNotNull)
@@ -558,6 +558,9 @@ object Curation {
     * |bench| codegen cosines map-side, and only the per-doc hit agg
     * shuffles. (For benchmark sets too big to broadcast, bucket both
     * sides with `Dedup.embeddingNearDup`'s RP-LSH instead.)
+    * A vector with a null element is refused: the native cosine kernel
+    * fails the job with `IllegalArgumentException` rather than read the slot
+    * as a number.
     */
   def semanticDecontaminate(corpus: DataFrame, idCol: String, vecCol: String,
       bench: DataFrame, benchVecCol: String, threshold: Double): DataFrame = {

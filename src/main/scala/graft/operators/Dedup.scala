@@ -33,12 +33,12 @@ object Dedup {
     * Why gate it: at toy scale the pin's extra exchange costs ~1 s per
     * query for nothing (q25/q53/q90 regressions, round-11 bench). So
     * the pin is skipped when Catalyst's size ESTIMATE for the relation
-    * is demonstrably tiny (< `spark.graft.pairJoin.pinThresholdBytes`,
-    * default 64 MB — a relation that small produces at most a few
-    * hundred million pairs even fully degenerate, which one task's
-    * codegen'd loop streams in seconds). Unknown or large estimates
-    * keep the pin — the 100 TB-safe direction; estimates only shrink
-    * below the threshold when the inputs really are small files.
+    * is demonstrably tiny (< [[PinThresholdBytes]], 64 MB — a relation
+    * that small produces at most a few hundred million pairs even fully
+    * degenerate, which one task's codegen'd loop streams in seconds).
+    * Unknown or large estimates keep the pin — the 100 TB-safe
+    * direction; estimates only shrink below the threshold when the
+    * inputs really are small files.
     *
     * Why `udfUpstream` EXEMPTS a call site from the gate: bytes are the
     * wrong cost model when the keyed relation is byte-small but its
@@ -61,21 +61,16 @@ object Dedup {
   private[operators] def pinIfLarge(rel: DataFrame,
       keys: Seq[org.apache.spark.sql.Column],
       udfUpstream: Boolean = false): DataFrame = {
-    val spark = rel.sparkSession
-    val threshold = BigInt(spark.conf
-      .get("spark.graft.pairJoin.pinThresholdBytes", (64L << 20).toString))
     val est =
       try rel.queryExecution.optimizedPlan.stats.sizeInBytes
       catch { case _: Exception => BigInt(Long.MaxValue) }
-    // A/B escape hatch (measurement only): setting
-    // spark.graft.pairJoin.udfUpstreamExempt=false restores the
-    // round-12 byte-gate at the UDF-upstream call sites.
-    val exempt = udfUpstream && spark.conf
-      .get("spark.graft.pairJoin.udfUpstreamExempt", "true").toBoolean
-    if (!exempt && est < threshold) rel
-    else rel.repartition(spark.sessionState.conf.numShufflePartitions,
-      keys: _*)
+    if (!udfUpstream && est < PinThresholdBytes) rel
+    else rel.repartition(
+      rel.sparkSession.sessionState.conf.numShufflePartitions, keys: _*)
   }
+
+  /** The size estimate below which [[pinIfLarge]] skips the pin. */
+  private val PinThresholdBytes = BigInt(64L << 20)
 
   /** Exact dedup: keep the lowest-id row per normalized-content hash.
     * Normalization = lowercase + whitespace collapse, so trivially
@@ -162,19 +157,13 @@ object Dedup {
     * The kernel runs as the NATIVE codegen expression
     * [[graft.expr.OphSigExpr]] (value-identical to the UDF by spec; the
     * null-text path coalesces to the empty token array, which signs
-    * exactly like the UDF's null input). Escape hatch for A/B only:
-    * `spark.graft.oph.nativeExpr=false` restores the `udf` form.
+    * exactly like the UDF's null input).
     */
   def ophSignatures(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 2, k: Int = 16): DataFrame = {
-    val native = docs.sparkSession.conf
-      .get("spark.graft.oph.nativeExpr", "true").toBoolean
-    val toks = TextFns.tokens(lower(col(textCol)))
-    val sig =
-      if (native)
-        graft.expr.GraftExpressions.ophSig(
-          coalesce(toks, array().cast("array<string>")), shingleN, k)
-      else TextFns.ophSigUdf(shingleN, k)(toks)
+    val sig = graft.expr.GraftExpressions.ophSig(
+      coalesce(TextFns.tokens(lower(col(textCol))),
+        array().cast("array<string>")), shingleN, k)
     docs.select(col(idCol).as("doc_id"), posexplode(sig))
       .toDF("doc_id", "bucket", "sig")
       .select(col("doc_id"), col("bucket").cast("long").as("bucket"),
@@ -1405,6 +1394,9 @@ object Dedup {
 
   /** Embedding near-dup: pairs with cosine >= threshold within LSH buckets.
     * See Similarity.annLsh for the bucketing rationale.
+    * A null element in any vector the cosine rerank scores is refused: the
+    * native kernel fails the job with `IllegalArgumentException` rather than
+    * read the slot as a number.
     */
   def embeddingNearDup(vecs: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nBits: Int = 16, maxBucket: Int = 1000): DataFrame = {

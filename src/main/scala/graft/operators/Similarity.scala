@@ -21,6 +21,9 @@ object Similarity {
 
   /** Exact top-k by cosine similarity against one query vector (as a literal
     * array column). Deterministic tie-break on id.
+    * A vector with a null element is refused: the native cosine kernel
+    * fails the job with `IllegalArgumentException` rather than read the slot
+    * as a number.
     */
   def bruteForceTopK(vecs: DataFrame, idCol: String, vecCol: String,
       query: Seq[Double], k: Int): DataFrame = {
@@ -35,6 +38,9 @@ object Similarity {
     * the query's bucket (within `probes` extra single-bit-flip probes) are
     * scored. Bucket filter is a codegen'd integer comparison — pushed to the
     * scan; the exact rerank touches ~n/2^bits rows.
+    * A null element in any vector the cosine rerank scores is refused: the
+    * native kernel fails the job with `IllegalArgumentException` rather than
+    * read the slot as a number.
     */
   def annLsh(vecs: DataFrame, idCol: String, vecCol: String,
       query: Seq[Double], k: Int, nBits: Int = 8, probes: Int = 3): DataFrame = {
@@ -63,6 +69,9 @@ object Similarity {
     * them just to take an argmin; at 100 TB that shuffle would have been
     * the whole job.) At scale the assignment is computed once and persisted
     * as a partition column, making the probe a partition-pruned scan.
+    * A null element in any vector the cosine rerank scores is refused: the
+    * native kernel fails the job with `IllegalArgumentException` rather than
+    * read the slot as a number.
     */
   def ivfTopK(vecs: DataFrame, idCol: String, vecCol: String,
       query: Seq[Double], k: Int, nLists: Int = 16, nProbe: Int = 4): DataFrame = {
@@ -235,6 +244,9 @@ object Similarity {
     * [[kmeansCentroids]]): map-side argmin assignment, probe the nProbe
     * nearest lists, exact cosine rerank inside them. Same zero-shuffle
     * shape as [[ivfTopK]] — only the centroid source differs.
+    * A null element in any vector the cosine rerank scores is refused: the
+    * native kernel fails the job with `IllegalArgumentException` rather than
+    * read the slot as a number.
     */
   def ivfTopKTrained(vecs: DataFrame, idCol: String, vecCol: String,
       query: Seq[Double], k: Int, centroids: Array[Array[Double]],
@@ -281,6 +293,9 @@ object Similarity {
   /** Probe a persisted IVF index: read the centroid sidecar, scan ONLY the
     * nProbe nearest list partitions (partition pruning — check
     * `PartitionFilters` in `.explain`), exact cosine rerank inside them.
+    * A null element in any vector the cosine rerank scores is refused: the
+    * native kernel fails the job with `IllegalArgumentException` rather than
+    * read the slot as a number.
     */
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
       idCol: String, vecCol: String, query: Seq[Double], k: Int,
@@ -305,7 +320,11 @@ object Similarity {
       .limit(k)
   }
 
-  /** All-pairs cosine above a threshold, LSH-restricted (see Dedup.embeddingNearDup). */
+  /** All-pairs cosine above a threshold, LSH-restricted (see
+    * Dedup.embeddingNearDup). A null element in any vector the cosine
+    * rerank scores is refused: the native kernel fails the job with
+    * `IllegalArgumentException` rather than read the slot as a number.
+    */
   def similarPairs(vecs: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nBits: Int = 8): DataFrame =
     Dedup.embeddingNearDup(vecs, idCol, vecCol, threshold, nBits)
@@ -520,6 +539,11 @@ object Similarity {
     centroids.map { case (cid, cv) => (sqDistArr(query, cv), cid) }
       .sorted.take(nProbe).map(_._2).toSeq
 
+  /** One-shot IVF-PQ top-k: hash-donor coarse lists and PQ codebooks, the
+    * `nProbe` nearest lists scored by ADC. A vector with a null element
+    * is refused: the native nearest-centroid kernel fails the job with
+    * `IllegalArgumentException` rather than read the slot as a number.
+    */
   def ivfPqTopK(vecs: DataFrame, idCol: String, vecCol: String,
       query: Seq[Double], k: Int, nLists: Int = 16, nProbe: Int = 4,
       m: Int = 8, nCodes: Int = 16): DataFrame = {
@@ -571,6 +595,10 @@ object Similarity {
     * assignment is unchanged by construction (a permutation is
     * orthogonal, L2 distances and their ties are invariant); only the PQ
     * subspace split — the thing the deal balances — differs.
+    * With the flat coarse assignment (`assignGroups = 0`, the default), a
+    * vector with a null element is refused: the native nearest-centroid
+    * kernel fails the job with `IllegalArgumentException` rather than read
+    * the slot as a number.
     */
   def writeIvfPqIndex(vecs: DataFrame, idCol: String, vecCol: String,
       path: String, nLists: Int = 16, m: Int = 8, nCodes: Int = 16,
@@ -665,6 +693,9 @@ object Similarity {
     * SQL-reproducible hash selection, drawn in rotated space. This is
     * the full Ge et al. 2013 serving path: train on a bounded shard
     * (driver-side), apply at corpus scale through the index.
+    * A vector with a null element is refused: the native nearest-centroid
+    * kernel fails the job with `IllegalArgumentException` rather than read
+    * the slot as a number.
     */
   def writeIvfPqIndexFromOpq(vecs: DataFrame, idCol: String, vecCol: String,
       path: String, model: graft.functions.EmbeddingStats.OpqModel,
@@ -994,6 +1025,10 @@ object Similarity {
     * monotone sequence (`min(batch) > meta.maxId`), the same
     * never-reuse-ids contract as the signature index. Crash safety: the
     * pending-append marker of [[IndexStore]].
+    * Into an index built with `assignGroups = 0` (the default), a vector
+    * with a null element is refused: the native nearest-centroid kernel
+    * fails the job with `IllegalArgumentException` rather than read the
+    * slot as a number.
     */
   def appendToIvfPqIndex(newVecs: DataFrame, idCol: String, vecCol: String,
       path: String): Unit = {
@@ -1214,6 +1249,9 @@ object Similarity {
     * bounded-recall trade, in exchange for a join that survives a
     * dominant cluster at 100 TB. Default 10 000 ≫ any balanced list at
     * sane nLists; size nLists so avg list size stays well under it.
+    * A vector with a null element is refused: the native nearest-centroid
+    * kernel fails the job with `IllegalArgumentException` rather than read
+    * the slot as a number.
     */
   def knnGraph(vecs: DataFrame, idCol: String, vecCol: String, k: Int,
       nLists: Int = 16, nProbe: Int = 4,
@@ -1239,6 +1277,9 @@ object Similarity {
     * two argmax cuts per anchor. `margin = pos_cos − neg_cos` (rounded
     * ranks — the cross-engine ranking discipline): a small or negative
     * margin marks exactly the anchors worth training on.
+    * A vector with a null element is refused: the native nearest-centroid
+    * kernel fails the job with `IllegalArgumentException` rather than read
+    * the slot as a number.
     */
   def tripletMining(vecs: DataFrame, idCol: String, vecCol: String,
       labelCol: String, k: Int, nLists: Int = 16, nProbe: Int = 4,
@@ -1299,6 +1340,9 @@ object Similarity {
     *
     * `sideCol` must hold 0 (anchors, side A) or 1 (candidates,
     * side B).
+    * A vector with a null element is refused: the native nearest-centroid
+    * kernel fails the job with `IllegalArgumentException` rather than read
+    * the slot as a number.
     */
   def bitextMine(vecs: DataFrame, idCol: String, vecCol: String,
       sideCol: String, k: Int = 4, nLists: Int = 16, nProbe: Int = 4,
@@ -1391,6 +1435,9 @@ object Similarity {
     * output covers EVERY non-null vector exactly once. Cost = the kNN
     * graph + pointer-jumping CC over |edges| ≤ k·N rows — never the
     * all-pairs similarity relation.
+    * A vector with a null element is refused: the native nearest-centroid
+    * kernel fails the job with `IllegalArgumentException` rather than read
+    * the slot as a number.
     */
   def clusterEmbeddings(vecs: DataFrame, idCol: String, vecCol: String,
       k: Int, minCos: Double, nLists: Int = 16,
@@ -1492,6 +1539,9 @@ object Similarity {
     * same id-keyed score join the `keepByCol` path pays. Nothing
     * driver-side, no new skew shape (the dim key fans the hot cluster's
     * rows across `dim` reducers).
+    * A vector with a null element is refused: the native nearest-centroid
+    * kernel fails the job with `IllegalArgumentException` rather than read
+    * the slot as a number.
     */
   def semDedupByCentroid(vecs: DataFrame, idCol: String, vecCol: String,
       k: Int, minCos: Double, keepPerCluster: Int = 1, nLists: Int = 16,

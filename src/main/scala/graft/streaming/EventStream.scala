@@ -291,6 +291,10 @@ object EventStream {
     * machinery. Restart safety is the index's monotone-id contract plus
     * its pending-append marker: a replayed batch refuses loudly instead
     * of double-inserting codes.
+    * Into an index built with `assignGroups = 0` (the default), a vector
+    * with a null element is refused: the native nearest-centroid kernel
+    * fails the job with `IllegalArgumentException` rather than read the
+    * slot as a number.
     */
   def vectorIndexStream(stream: DataFrame, indexPath: String, idCol: String,
       vecCol: String, checkpoint: String, maintenanceEvery: Int = 0,

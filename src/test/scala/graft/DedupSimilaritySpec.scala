@@ -684,6 +684,24 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .iterator().asScala.filter(_.toString.endsWith(".parquet"))
       .toSeq.groupBy(_.getParent).map(_._2.size).max
     assert(maxFiles == 1, s"clustered write must bound files/list, got $maxFiles")
+    // a null vector slot is refused by the native nearest-centroid
+    // kernel, at build and at append, never read as a number
+    def rc(t: Throwable): Throwable =
+      if (t.getCause == null) t else rc(t.getCause)
+    val holed = spark.range(80, 81).select(col("id").as("vec_id"),
+      expr("transform(sequence(0, 63), d -> IF(d = 5, CAST(NULL AS DOUBLE), " +
+        "CAST(d AS DOUBLE) / 64.0))").as("embedding"))
+    val idxHoled = java.nio.file.Files.createTempDirectory("graft_pqnull")
+      .resolve("idx").toString
+    for (refused <- Seq(
+        () => Similarity.writeIvfPqIndex(vecs.unionByName(holed), "vec_id",
+          "embedding", idxHoled, nLists = 8, m = 8, nCodes = 8),
+        () => Similarity.appendToIvfPqIndex(holed, "vec_id", "embedding",
+          idx))) {
+      val e = rc(intercept[Exception](refused()))
+      assert(e.isInstanceOf[IllegalArgumentException] &&
+        e.getMessage.contains("null array element at index 5"), e.toString)
+    }
   }
 
   test("rolling IVF-PQ index: append == rebuild-with-frozen-codebooks, " +

@@ -108,16 +108,6 @@ class ExprSpec extends AnyFunSuite {
             s"${r.getSeq[Long](1)} vs ${r.getSeq[Long](2)}")
       }
     }
-    // and through ophSignatures' conf switch: identical relations
-    import graft.operators.Dedup
-    val nat = Dedup.ophSignatures(docs, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    spark.conf.set("spark.graft.oph.nativeExpr", "false")
-    val viaUdf =
-      try Dedup.ophSignatures(docs, "doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      finally spark.conf.unset("spark.graft.oph.nativeExpr")
-    assert(nat == viaUdf)
   }
 
   test("native MinhashSigExpr and SimhashExpr are value-identical to " +
