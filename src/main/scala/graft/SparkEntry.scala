@@ -1,27 +1,17 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.{ScalarFns, TextFns, VectorFns}
-import graft.operators.{Dedup, Ops, Similarity, SpatialOps}
+import graft.queries._
 
 /** Driver contract — one declared query per implemented operator of
-  * SURVEY.md §2 (+ the training-data-pipeline operators), each with a
-  * DuckDB oracle in [[oracleSql]] where ANSI-SQL-expressible.
-  *
-  * Conventions:
-  *  - every aliased output column matches between Spark and oracle SQL
-  *    (the driver sorts columns by name before hashing);
-  *  - double-valued aggregates are rounded (2–6 dp) in BOTH engines so
-  *    floating-point summation order cannot flip the hash;
-  *  - deterministic tie-breaks on every rank/limit.
+  * SURVEY.md §2 (+ the training-data-pipeline operators). Each query is a
+  * [[graft.queries.QuerySpec]] that holds its Spark plan beside its DuckDB
+  * oracle; the specs are registered per operator family under
+  * `graft.queries`, and [[queries]] and [[oracleSql]] are derived from
+  * them once.
   */
 object SparkEntry {
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
 
   /** Scratch-dir registry. Queries that exercise persisted-index
     * lifecycles (q62/q79/q93/q96, the geo sink round-trips) write real
@@ -35,7 +25,7 @@ object SparkEntry {
     */
   private val scratch =
     scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-  private def scratchDir(prefix: String): java.nio.file.Path =
+  private[graft] def scratchDir(prefix: String): java.nio.file.Path =
     scratch.synchronized {
       val p = java.nio.file.Files.createTempDirectory(prefix)
       scratch += p
@@ -66,16628 +56,28 @@ object SparkEntry {
     catch { case _: Exception => () }
   }
 
-  /** Deterministic synthetic crawl for q199/q200: every document as a
-    * WARC-ready HTML page (text HTML-escaped into a `<p>`, a script
-    * element carrying decoy markup, one outlink with UNSORTED query
-    * params so canonicalization has work, a comment, `doc_id % 7 == 0`
-    * pages served as 404). The q199/q200 oracles rebuild these pages
-    * closed-form in SQL — keep both in lockstep.
-    */
-  private def warcPages(docs: DataFrame): DataFrame = {
-    val esc = (c: Column) => regexp_replace(regexp_replace(regexp_replace(
-      c, "&", "&amp;"), "<", "&lt;"), ">", "&gt;")
-    val id = col("doc_id").cast("string")
-    docs.select(
-      concat(lit("<urn:graft:doc:"), id, lit(">")).as("record_id"),
-      concat(lit("http://"), col("source"), lit(".example.com/doc/"), id)
-        .as("target_uri"),
-      lit("2026-08-15T00:00:00Z").as("warc_date"),
-      lit("text/html; charset=utf-8").as("http_content_type"),
-      when(col("doc_id") % 7 === 0, 404).otherwise(200).cast("int")
-        .as("http_status"),
-      concat(
-        lit("<html><head><title>doc "), id,
-        lit("</title><script>var x=\"<p>no</p>\";</script></head><body><p>"),
-        esc(coalesce(col("text"), lit(""))),
-        lit("</p><a href=\"http://out"), (col("doc_id") % 5).cast("string"),
-        lit(".example.org/p?b=2&a=1\">next</a><!-- c --></body></html>"))
-        .as("body"))
-  }
-
-  /** All event queries treat `ts` as int64 nanoseconds since the epoch;
-    * ordering and gap arithmetic are identical to timestamp semantics.
-    *
-    * The physical encoding of `ts` has varied across testdata generations:
-    * TIMESTAMP(NANOS) (readable only as int64 under the legacy flag) and
-    * TIMESTAMP(MICROS, isAdjustedToUTC=false). Normalize every encoding to
-    * int64 nanos here so the 5 events-family queries are encoding-agnostic —
-    * the DuckDB oracles already are (they use `epoch_ns(ts)`).
-    * `inferTimestampNTZ=false` makes Spark read annotated-NTZ micros as
-    * plain TIMESTAMP whose internal value IS the stored epoch-micros, so
-    * `unix_micros` recovers it exactly, independent of session time zone.
-    */
-  private def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => raw // TIMESTAMP(NANOS) legacy path
-      case _: org.apache.spark.sql.types.TimestampType =>
-        raw.withColumn("ts", unix_micros(col("ts")) * lit(1000L))
-      case _ => // TIMESTAMP_NTZ fallback; sessions here run with UTC session tz
-        raw.withColumn("ts", expr("unix_micros(cast(ts as timestamp)) * 1000"))
-    }
-  }
-
-  /** Format-exact NTv2 `.gsb` fixture for q134: one 13×13 subgrid over
-    * 45–46°N × 64–65°W (300-arcsec cells, lon positive WEST per the
-    * format), float32 node shifts from closed-form integer formulas —
-    * latShift(r,c) = ((3r+5c) mod 41)/64, lonShift(r,c) = ((7r+11c) mod
-    * 37)/64 arc-seconds, both exactly representable in float32 — so the
-    * DuckDB oracle can recompute the node relation and the bilinear
-    * application from first principles. Nodes run row-major S→N, within
-    * a row E→W (the published order).
-    */
-  private def ntv2FixtureBytes(): Array[Byte] = {
-    import java.nio.{ByteBuffer, ByteOrder}
-    val nr = 13; val nc = 13
-    val buf = ByteBuffer.allocate(11 * 16 + 11 * 16 + nr * nc * 16)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    def rec(name: String)(w: ByteBuffer => Unit): Unit = {
-      buf.put(String.format("%-8s", name).getBytes("US-ASCII"))
-      val p = buf.position(); w(buf)
-      while (buf.position() < p + 8) buf.put(0.toByte)
-    }
-    rec("NUM_OREC")(_.putInt(11)); rec("NUM_SREC")(_.putInt(11))
-    rec("NUM_FILE")(_.putInt(1))
-    rec("GS_TYPE")(_.put("SECONDS ".getBytes("US-ASCII")))
-    rec("VERSION")(_.put("NTv2.0  ".getBytes("US-ASCII")))
-    rec("SYSTEM_F")(_.put("SRCDATUM".getBytes("US-ASCII")))
-    rec("SYSTEM_T")(_.put("DSTDATUM".getBytes("US-ASCII")))
-    rec("MAJOR_F")(_.putDouble(6378137.0))
-    rec("MINOR_F")(_.putDouble(6356752.314))
-    rec("MAJOR_T")(_.putDouble(6378137.0))
-    rec("MINOR_T")(_.putDouble(6356752.314))
-    rec("SUB_NAME")(_.put("ORACLE0 ".getBytes("US-ASCII")))
-    rec("PARENT")(_.put("NONE    ".getBytes("US-ASCII")))
-    rec("CREATED")(_.put("20260813".getBytes("US-ASCII")))
-    rec("UPDATED")(_.put("20260813".getBytes("US-ASCII")))
-    rec("S_LAT")(_.putDouble(162000.0)); rec("N_LAT")(_.putDouble(165600.0))
-    rec("E_LONG")(_.putDouble(230400.0)); rec("W_LONG")(_.putDouble(234000.0))
-    rec("LAT_INC")(_.putDouble(300.0)); rec("LONG_INC")(_.putDouble(300.0))
-    rec("GS_COUNT")(_.putInt(nr * nc))
-    var r = 0
-    while (r < nr) {
-      var c = 0
-      while (c < nc) {
-        buf.putFloat((((r * 3 + c * 5) % 41) / 64.0).toFloat)
-        buf.putFloat((((r * 7 + c * 11) % 37) / 64.0).toFloat)
-        buf.putFloat(0f); buf.putFloat(0f)
-        c += 1
-      }
-      r += 1
-    }
-    buf.array()
-  }
-
   /** Flagship query (driver smoke-checks rows>0 on sf0.001): the q44 star
     * join — revenue by region/nation with all four dims broadcast.
     */
   def entry(spark: SparkSession): DataFrame =
     queries("q44_star_join")(spark, "/root/testdata/sf0.001")
 
-  // ────────────────────────────────────────────────────────────────────────
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // A1/A2: group-by multi-aggregate (TPC-H Q1 pricing summary).
-    "q01_agg_pricing" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit("2000-01-01"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          round(sum(col("l_quantity")), 2).as("sum_qty"),
-          round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("sum_disc_price"),
-          round(avg(col("l_quantity")), 6).as("avg_qty"),
-          round(avg(col("l_discount")), 6).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-    }),
-
-    // P1/P2/P4: projection + predicate pushdown to the parquet scan.
-    "q02_filter_project" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_returnflag") === "R" && col("l_quantity").between(10, 20)
-          && col("l_shipdate").isNotNull)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-          col("l_extendedprice"))
-    }),
-
-    // J1: broadcast equi join fact × small dim.
-    "q03_join_broadcast" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val p = t(s, dir, "part")
-      li.join(broadcast(p), li("l_partkey") === p("p_partkey"))
-        .groupBy(col("p_brand"))
-        .agg(count(lit(1)).as("n_lines"),
-          round(sum(col("l_extendedprice")), 2).as("revenue"))
-    }),
-
-    // P3: membership filter as left-semi join.
-    "q04_semi_join" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-      o.join(c, o("o_custkey") === c("c_custkey"), "left_semi")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_orders"))
-    }),
-
-    // J3: full outer join with zero-fill (candidate ⊕ existing pattern).
-    "q05_outer_join_fill" -> ((s, dir) => {
-      val c = t(s, dir, "customer").groupBy(col("c_nationkey").as("nationkey"))
-        .agg(count(lit(1)).as("c_cnt"))
-      val sp = t(s, dir, "supplier").groupBy(col("s_nationkey").as("nationkey"))
-        .agg(count(lit(1)).as("s_cnt"))
-      c.join(sp, Seq("nationkey"), "outer").na.fill(0, Seq("c_cnt", "s_cnt"))
-    }),
-
-    // J7: range/as-of lookup against a broadcast threshold table (incl. inf).
-    "q06_range_lookup" -> ((s, dir) => {
-      import s.implicits._
-      val limits = Seq((5.0, "tiny"), (15.0, "small"), (30.0, "medium"),
-        (Double.PositiveInfinity, "large")).toDF("threshold", "bucket")
-      val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-      Ops.rangeLookup(li, "l_quantity", limits, "threshold")
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n"), round(sum(col("l_quantity")), 2).as("sum_qty"))
-    }),
-
-    // W1: gap fill from previous day scaled by recent trend (single-pass).
-    "q07_gap_fill" -> ((s, dir) => {
-      val ev = events(s, dir)
-        .select(col("event_id"), col("user_id"), col("value"))
-        .withColumn("value", when(col("value") < 2, 0.0).otherwise(col("value")))
-      Ops.gapFillDayTrend(ev, Seq("user_id"), "event_id", "value")
-        .select(col("event_id"), col("user_id"), round(col("value"), 6).as("filled_value"))
-    }),
-
-    // W3: top-k per group with deterministic tie-break.
-    "q08_topk_per_group" -> ((s, dir) => {
-      Ops.topKPerGroup(t(s, dir, "orders").select(col("o_custkey"), col("o_orderkey"), col("o_totalprice")),
-        Seq("o_custkey"), Seq(col("o_totalprice").desc, col("o_orderkey").asc), 3)
-    }),
-
-    // A5: per-group mode with deterministic tie-break.
-    "q09_mode_impute" -> ((s, dir) => {
-      Ops.modePerGroup(t(s, dir, "customer"), Seq("c_nationkey"), "c_mktsegment")
-    }),
-
-    // Dedup tier 1: exact content-hash dedup.
-    "q10_dedup_exact" -> ((s, dir) => {
-      Dedup.exact(t(s, dir, "documents"), "doc_id", "text")
-    }),
-
-    // R1: positional explode of a delimited cell.
-    "q11_explode_split" -> ((s, dir) => {
-      t(s, dir, "part")
-        .select(col("p_partkey"), posexplode(split(col("p_name"), " ")))
-        .select(col("p_partkey"), (col("pos") + 1).cast("long").as("pos"),
-          col("col").as("word"))
-    }),
-
-    // R2: pivot long→wide (counts per nation × order status).
-    "q12_pivot_status" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      val n = t(s, dir, "nation")
-      val wide = o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .groupBy(col("n_name")).pivot("o_orderstatus", Seq("F", "O", "P")).count()
-      wide.select(col("n_name"), coalesce(col("F"), lit(0L)).as("F"),
-        coalesce(col("O"), lit(0L)).as("O"), coalesce(col("P"), lit(0L)).as("P"))
-    }),
-
-    // R3: unpivot wide→long (measure, value rows).
-    "q13_unpivot" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-          col("l_discount"), col("l_tax"))
-        .unpivot(Array(col("l_orderkey"), col("l_linenumber")),
-          Array(col("l_quantity"), col("l_discount"), col("l_tax")),
-          "measure", "value")
-    }),
-
-    // U1: union-by-name with missing-column null fill.
-    "q14_union_align" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select(col("c_custkey").as("id"),
-        col("c_acctbal").as("acctbal"), col("c_mktsegment").as("mktsegment"),
-        lit("customer").as("src"))
-      val sp = t(s, dir, "supplier").select(col("s_suppkey").as("id"),
-        col("s_acctbal").as("acctbal"), lit("supplier").as("src"))
-      c.unionByName(sp, allowMissingColumns = true)
-    }),
-
-    // R5: cross product of small key domains.
-    "q15_cross_domain" -> ((s, dir) => {
-      val r = t(s, dir, "region").select(col("r_name")).distinct()
-      val p = t(s, dir, "orders").select(col("o_orderpriority")).distinct()
-      r.crossJoin(p).withColumn("domain_key",
-        concat(col("r_name"), lit("."), col("o_orderpriority")))
-    }),
-
-    // Scalar string kernel: clean_names (ASCII strip, underscores, truncate).
-    "q16_string_clean" -> ((s, dir) => {
-      t(s, dir, "part").select(col("p_partkey"),
-        ScalarFns.cleanName(concat(col("p_name"), lit(" "), col("p_brand"))).as("clean_name"),
-        upper(col("p_type")).as("type_upper"),
-        length(col("p_name")).cast("long").as("name_len"))
-    }),
-
-    // Date dims: year/month/quarter/dayname + daytype/season recodes.
-    "q17_date_dims" -> ((s, dir) => {
-      t(s, dir, "orders").select(col("o_orderkey"),
-        year(col("o_orderdate")).cast("long").as("yr"),
-        month(col("o_orderdate")).cast("long").as("mo"),
-        quarter(col("o_orderdate")).cast("long").as("qtr"),
-        date_format(col("o_orderdate"), "EEEE").as("day_name"),
-        ScalarFns.dayType(col("o_orderdate")).as("day_type"),
-        ScalarFns.season(col("o_orderdate")).as("season"))
-    }),
-
-    // EU-decimal parse round-trip (S1 dialect).
-    "q18_eu_decimal" -> ((s, dir) => {
-      val eu = regexp_replace(format_string("%.2f", col("p_retailprice")), "\\.", ",")
-      t(s, dir, "part").select(col("p_partkey"),
-        ScalarFns.euToDouble(eu).as("eu_parsed"))
-    }),
-
-    // Haversine distance between synthetic nation centroids (all pairs).
-    "q19_haversine" -> ((s, dir) => {
-      val n = t(s, dir, "nation").select(col("n_nationkey"),
-        (lit(-30.0) + col("n_nationkey") * 2.5).as("lat"),
-        (lit(-20.0) + col("n_nationkey") * 3.1).as("lon"))
-      val a = n.select(col("n_nationkey").as("k1"), col("lat").as("lat1"), col("lon").as("lon1"))
-      val b = n.select(col("n_nationkey").as("k2"), col("lat").as("lat2"), col("lon").as("lon2"))
-      a.join(b, col("k1") < col("k2"))
-        .select(col("k1"), col("k2"),
-          // native codegen'd Catalyst expression (graft.expr.HaversineKmExpr);
-          // bit-identical to the Column-composed ScalarFns.haversineKm
-          round(graft.expr.GraftExpressions.haversineKm(
-            col("lat1"), col("lon1"), col("lat2"), col("lon2")), 3).as("dist_km"))
-    }),
-
-    // J5: point-in-polygon spatial join (WKT kernel + bbox prefilter),
-    // regions as rectangles so the oracle is BETWEEN arithmetic.
-    "q20_spatial_join" -> ((s, dir) => {
-      val pts = t(s, dir, "customer").select(col("c_custkey"),
-        (col("c_custkey") % 100 + 0.5).cast("double").as("x"),
-        ((col("c_custkey") * 7) % 100 + 0.5).cast("double").as("y"))
-      val polys = t(s, dir, "region").select(col("r_name"),
-        format_string("POLYGON ((%d 0, %d 0, %d 100, %d 100, %d 0))",
-          col("r_regionkey") * 20, col("r_regionkey") * 20 + 20,
-          col("r_regionkey") * 20 + 20, col("r_regionkey") * 20,
-          col("r_regionkey") * 20).as("wkt"))
-      SpatialOps.pointInPolygonJoin(pts, "x", "y", polys, "wkt")
-        .groupBy(col("r_name")).agg(count(lit(1)).as("n_customers"))
-    }),
-
-    // A6: zonal statistics over a pixel relation (raster → relational).
-    "q21_zonal_stats" -> ((s, dir) => {
-      val px = events(s, dir).select(
-        (col("event_id") % 40 + 0.5).cast("double").as("x"),
-        (col("user_id") % 30 + 0.5).cast("double").as("y"),
-        col("value"))
-      val xm = (col("id") % 4) * 10
-      val ym = floor(col("id") / 4).cast("long") * 10
-      val zones = s.range(12).select(col("id").as("zone_id"),
-        format_string("POLYGON ((%d %d, %d %d, %d %d, %d %d, %d %d))",
-          xm, ym, xm + 10, ym, xm + 10, ym + 10, xm, ym + 10, xm, ym).as("wkt"))
-      SpatialOps.zonalStats(px, "x", "y", "value", zones, "wkt", "zone_id")
-        .select(col("zone_id"), round(col("zonal_sum"), 2).as("zonal_sum"),
-          round(col("zonal_max"), 2).as("zonal_max"), col("zonal_count"))
-    }),
-
-    // A6 variant: zonal VALUE COUNTS (landuse-class pivot per region) —
-    // the reference's per-region class histogram as one groupBy+pivot.
-    "q59_zonal_classes" -> ((s, dir) => {
-      val px = events(s, dir).select(
-        (floor((col("event_id") % 40 + 0.5) / 10) +
-          lit(4) * floor((col("user_id") % 30 + 0.5) / 10)).cast("long").as("zone_id"),
-        col("event_type"))
-      px.groupBy(col("zone_id"))
-        .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .count()
-        .select(col("zone_id"),
-          coalesce(col("click"), lit(0L)).as("click"),
-          coalesce(col("error"), lit(0L)).as("error"),
-          coalesce(col("purchase"), lit(0L)).as("purchase"),
-          coalesce(col("signup"), lit(0L)).as("signup"),
-          coalesce(col("view"), lit(0L)).as("view"))
-    }),
-
-    // Raster kernel: resizem block-upsample then windowed read on the
-    // pixel relation (map-side explode + pruned filter).
-    "q60_pixel_upsample" -> ((s, dir) => {
-      import graft.sources.InputMaps
-      val px = events(s, dir).select(
-        (col("event_id") % 20).cast("int").as("row"),
-        (col("user_id") % 15).cast("int").as("col"),
-        col("value"))
-        .groupBy("row", "col").agg(round(sum(col("value")), 2).as("value"))
-      val up = InputMaps.upsample(px, 2)
-      InputMaps.window(up, 10, 30, 0, 20)
-        .groupBy(col("row").cast("long").as("row"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("row_sum"))
-    }),
-
-    // Text analysis: token counts, punctuation/stopword ratios, quality.
-    "q22_text_stats" -> ((s, dir) => {
-      t(s, dir, "documents").select(col("doc_id"),
-        TextFns.tokenCount(col("text")).cast("long").as("n_tokens"),
-        length(col("text")).cast("long").as("n_chars_raw"),
-        round(TextFns.punctRatio(col("text")), 6).as("punct_ratio"),
-        round(TextFns.stopwordRatio(col("text")), 6).as("stop_ratio"),
-        TextFns.qualityScore(col("text")).as("quality"))
-    }),
-
-    // Language-ID heuristic (marker-word argmax, deterministic ties).
-    "q23_lang_id" -> ((s, dir) => {
-      t(s, dir, "documents").select(col("doc_id"), col("lang"),
-        TextFns.langId(col("text")).as("lang_pred"))
-    }),
-
-    // Dedup tier 2: MinHash signatures, exploded to scalar rows
-    // (doc_id, hash_idx, hash_val) so the harness can sort+hash them, with
-    // a full DuckDB oracle (the poly-hash + affine permutations are plain
-    // integer arithmetic — see TextFns.polyHash/minhashPerm).
-    "q24_minhash_sig" -> ((s, dir) => {
-      Dedup.minhashSignatures(t(s, dir, "documents"), "doc_id", "text", shingleN = 1, k = 16)
-        .select(col("doc_id"), posexplode(col("minhash")))
-        .select(col("doc_id"), col("pos").cast("long").as("hash_idx"),
-          col("col").as("hash_val"))
-    }),
-
-    // Dedup tier 2b: LSH candidate pairs via banded minhash self-join.
-    // Near-dups are planted (every 50th doc re-appears with its first token
-    // dropped) so the operator's yield is meaningful: LSH recovers the
-    // planted pairs while 4-row bands suppress the quadratic noise floor.
-    "q25_minhash_pairs" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      // offset as a LITERAL (see q90): collision-safe, empty-table safe,
-      // and the probe's planting costs one tiny plan-build agg
-      val o = docs.agg(coalesce(max(col("doc_id")), lit(0L))).head().getLong(0)
-      val planted = docs.filter(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + lit(o + 1)).as("doc_id"),
-          regexp_replace(col("text"), "^\\S+\\s*", "").as("text"))
-      Dedup.minhashCandidatePairs(docs.unionByName(planted), "doc_id", "text",
-        shingleN = 2, k = 16, bands = 4)
-    }),
-
-    // Dedup tier 3: exact bigram-Jaccard verification on candidate pairs.
-    // Both pair members must have >=2 tokens (the oracle's window-based
-    // bigram derivation has no single-shingle fallback for shorter docs).
-    "q26_jaccard_pairs" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val long = docs.filter(TextFns.tokenCount(col("text")) >= 2)
-      val pairs = long.select(col("doc_id").as("id1"), (col("doc_id") + 1).as("id2"))
-        .join(long.select(col("doc_id").as("id2")), "id2")
-      Dedup.jaccardOnPairs(pairs, docs, "doc_id", "text", shingleN = 2)
-        .select(col("id1"), col("id2"), col("inter").cast("long").as("inter"),
-          col("uni").cast("long").as("uni"),
-          round(col("jaccard"), 6).as("jaccard"))
-    }),
-
-    // Similarity: exact brute-force cosine top-k (baseline).
-    "q27_ann_brute" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 10)
-        .select(col("vec_id"), round(col("cosine"), 4).as("cosine"))
-    }),
-
-    // Similarity: LSH-bucketed ANN (scale path; rows-only check).
-    "q28_ann_lsh" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      Similarity.annLsh(emb, "vec_id", "embedding", q, 5, nBits = 8, probes = 3)
-        .select(col("vec_id"), round(col("cosine"), 4).as("cosine"))
-    }),
-
-    // Similarity: IVF ANN — map-side argmin assignment over broadcast
-    // centroids (zero shuffle), probe-list scan, exact rerank. Fully
-    // oracled: centroid choice and assignment are SQL-reproducible.
-    "q62_ann_ivf" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      Similarity.ivfTopK(emb, "vec_id", "embedding", q, 10, nLists = 16, nProbe = 4)
-        .select(col("vec_id"), round(col("cosine"), 4).as("cosine"))
-    }),
-
-    // W-analytics: running aggregates per key (rank, running count/sum).
-    "q29_running_window" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      events(s, dir).select(col("event_id"), col("user_id"),
-        row_number().over(w).cast("long").as("rn"),
-        round(sum(col("value")).over(w.rowsBetween(Window.unboundedPreceding, 0)), 2)
-          .as("run_sum"))
-    }),
-
-    // Sessionization: 30-min-gap session ids + per-session aggregates.
-    "q30_sessionize" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      // ts is int64 nanos (see events()); 30 min = 1.8e12 ns.
-      val ev = events(s, dir).withColumn("prev_ns", lag(col("ts"), 1).over(w))
-        .withColumn("is_new",
-          when(col("prev_ns").isNull || col("ts") - col("prev_ns") > 1800000000000L, 1)
-            .otherwise(0))
-        .withColumn("session_id", sum(col("is_new")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      ev.groupBy(col("user_id"), col("session_id"))
-        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("session_value"))
-    }),
-
-    // A3: normalize to group total via window sum (profile normalization).
-    "q31_normalize_group" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      Ops.normalizePerGroup(o, Seq("o_custkey"), "o_totalprice", "share")
-        .select(col("o_orderkey"), col("o_custkey"), round(col("share"), 6).as("share"))
-    }),
-
-    // Canonical edge direction (reverse_lines) + A1 edge aggregation.
-    "q32_canonical_edge" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(
-        (col("l_partkey") % 50).as("a"), (col("l_suppkey") % 50).as("b"), col("l_quantity"))
-      Ops.canonicalEdge(li, "a", "b")
-        .groupBy(col("a"), col("b"))
-        .agg(count(lit(1)).as("n_lines"), round(sum(col("l_quantity")), 2).as("cap"))
-    }),
-
-    // A7: cumulative-count dedup suffix on colliding names.
-    "q33_dedup_suffix" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select(col("c_custkey"),
-        concat(lit("cust_"), col("c_custkey") % 20).as("name"))
-      Ops.dedupSuffix(c, "name", Seq(col("c_custkey").asc))
-    }),
-
-    // W2: forward fill of sparse values down an ordered column.
-    "q34_forward_fill" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
-        when(col("o_orderkey") % 5 === 0, col("o_totalprice")).as("sparse"))
-      Ops.forwardFill(o, "o_orderkey", Seq("sparse"), Seq("o_custkey"))
-        .select(col("o_orderkey"), col("o_custkey"),
-          round(col("sparse"), 2).as("filled"))
-    }),
-
-    // J10: dict recode via broadcast mapping incl. comma-split keys.
-    "q35_recode" -> ((s, dir) => {
-      import s.implicits._
-      val mapping = Seq(("AFRICA, AMERICA", "WEST"), ("ASIA", "EAST"),
-        ("EUROPE", "EU")).toDF("from_name", "to_name")
-      Ops.recode(t(s, dir, "region").select(col("r_regionkey"), col("r_name")),
-        "r_name", mapping, "from_name", "to_name")
-    }),
-
-    // SimHash near-dup signatures (60-bit, SQL-reproducible token hash).
-    "q36_simhash" -> ((s, dir) => {
-      t(s, dir, "documents").select(col("doc_id"),
-        TextFns.simhash64(col("text")).as("simhash"))
-    }),
-
-    // Document fingerprint (rolling polynomial hash; rows-only).
-    "q37_fingerprint" -> ((s, dir) => {
-      t(s, dir, "documents").select(col("doc_id"),
-        TextFns.fingerprint(col("text")).as("fingerprint"))
-    }),
-
-    // R1 proper: multi-column lockstep explode with null padding (2- vs
-    // 3-element cells → shorter list padded with null).
-    "q38_explode_zip" -> ((s, dir) => {
-      val df = t(s, dir, "part").select(col("p_partkey"),
-        concat_ws(";", col("p_size"), col("p_size") * 2).as("multi1"),
-        concat_ws(";", col("p_brand"), col("p_type"), col("p_name")).as("multi2"))
-      Ops.explodeZip(df, Seq("multi1", "multi2"))
-    }),
-
-    // A8: weighted dot-product aggregation (landuse-pixels × sector weights
-    // re-expressed as join + groupBy over the long form).
-    "q39_weighted_dot" -> ((s, dir) => {
-      import s.implicits._
-      val weights = Seq((0, 0.5), (1, 1.25), (2, 2.0), (3, 0.25), (4, 1.0))
-        .toDF("lu", "wt")
-      val pix = t(s, dir, "lineitem")
-        .groupBy((col("l_suppkey") % 10).as("region"), (col("l_partkey") % 5).as("lu"))
-        .agg(count(lit(1)).as("cnt"))
-      pix.join(broadcast(weights), "lu")
-        .groupBy(col("region"))
-        .agg(round(sum(col("cnt") * col("wt")), 2).as("weighted"))
-    }),
-
-    // R6-style positional reshape rewritten as keyed computation: the
-    // hour-of-year index is DERIVED (ts arithmetic), never positional.
-    "q40_hour_index" -> ((s, dir) => {
-      events(s, dir)
-        .withColumn("t", expr("(ts - 1704067200000000000) div 3600000000000 + 1"))
-        .groupBy(col("t"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("hourly_value"))
-    }),
-
-    // J9: polygon adjacency pairs (Queen contiguity) via spatial self-join.
-    "q41_adjacency_pairs" -> ((s, dir) => {
-      import graft.geo.GeoFns
-      val xm = (col("id") % 4) * 10
-      val ym = floor(col("id") / 4).cast("long") * 10
-      val zones = s.range(12).select(col("id").as("zone_id"),
-        format_string("POLYGON ((%d %d, %d %d, %d %d, %d %d, %d %d))",
-          xm, ym, xm + 10, ym, xm + 10, ym + 10, xm, ym + 10, xm, ym).as("wkt"))
-      val a = zones.select(col("zone_id").as("zone_a"), col("wkt").as("wa"))
-      val b = zones.select(col("zone_id").as("zone_b"), col("wkt").as("wb"))
-      a.join(b, col("zone_a") < col("zone_b") && GeoFns.stTouches(col("wa"), col("wb")))
-        .select(col("zone_a"), col("zone_b"))
-    }),
-
-    // J6: polygon overlay — intersection area of tiles × offset stripes,
-    // keeping only area > 0 pieces (P5 filter).
-    "q42_overlay_area" -> ((s, dir) => {
-      import graft.geo.GeoFns
-      val xm = (col("id") % 4) * 10
-      val ym = floor(col("id") / 4).cast("long") * 10
-      val zones = s.range(12).select(col("id").as("zone_id"),
-        format_string("POLYGON ((%d %d, %d %d, %d %d, %d %d, %d %d))",
-          xm, ym, xm + 10, ym, xm + 10, ym + 10, xm, ym + 10, xm, ym).as("wkt"))
-      val stripes = s.range(2).select(col("id").as("stripe_id"))
-        .select(col("stripe_id"), format_string(
-          "POLYGON ((0 %d, 40 %d, 40 %d, 0 %d, 0 %d))",
-          col("stripe_id") * 10 + 5, col("stripe_id") * 10 + 5,
-          col("stripe_id") * 10 + 15, col("stripe_id") * 10 + 15,
-          col("stripe_id") * 10 + 5).as("swkt"))
-      zones.crossJoin(broadcast(stripes))
-        .withColumn("area", GeoFns.stIntersectionArea(col("wkt"), col("swkt")))
-        .filter(col("area") > 0)
-        .select(col("zone_id"), col("stripe_id"), round(col("area"), 6).as("area"))
-    }),
-
-    // J6 general: concave×concave overlay with holes and multipolygons —
-    // the triangulated-decomposition kernel (geo.Geometry). Zones are
-    // concave L-shapes; clips are a concave L, a donut (hole), and a
-    // 2-part MULTIPOLYGON. The oracle reproduces every area by rectangle
-    // decomposition arithmetic (holes enter with sign -1).
-    "q63_overlay_general" -> ((s, dir) => {
-      import s.implicits._
-      import graft.geo.GeoFns
-      val xm = (col("id") % 4) * 10
-      val ym = floor(col("id") / 4).cast("long") * 10
-      // L per cell: [x,x+10]×[y,y+5] ∪ [x,x+5]×[y+5,y+10] (concave at center)
-      val zones = s.range(12).select(col("id").as("zone_id"),
-        format_string("POLYGON ((%d %d, %d %d, %d %d, %d %d, %d %d, %d %d, %d %d))",
-          xm, ym, xm + 10, ym, xm + 10, ym + 5, xm + 5, ym + 5,
-          xm + 5, ym + 10, xm, ym + 10, xm, ym).as("wkt"))
-      val clips = Seq(
-        (0L, "POLYGON ((0 0, 40 0, 40 18, 20 18, 20 30, 0 30, 0 0))"),
-        (1L, "POLYGON ((5 2, 35 2, 35 28, 5 28, 5 2), (10 8, 30 8, 30 22, 10 22, 10 8))"),
-        (2L, "MULTIPOLYGON (((0 0, 12 0, 12 30, 0 30, 0 0)), ((25 3, 38 3, 38 27, 25 27, 25 3)))"))
-        .toDF("clip_id", "cwkt")
-      zones.crossJoin(broadcast(clips))
-        .withColumn("area", GeoFns.stIntersectionArea(col("wkt"), col("cwkt")))
-        .filter(col("area") > 1e-9)
-        .select(col("zone_id"), col("clip_id"), round(col("area"), 6).as("area"))
-    }),
-
-    // J9 exact: Queen contiguity on a triangle tiling — lower-left triangle
-    // per cell, so NE/SW diagonal cells have touching BBOXES but disjoint
-    // GEOMETRIES. A bbox probe would emit those pairs; the exact kernel
-    // must not. Oracle: pure integer grid arithmetic.
-    "q64_queen_triangles" -> ((s, dir) => {
-      import graft.geo.GeoFns
-      val cx = (col("id") % 5) * 10
-      val cy = floor(col("id") / 5).cast("long") * 10
-      val zones = s.range(25).select(col("id").as("zone_id"),
-        format_string("POLYGON ((%d %d, %d %d, %d %d, %d %d))",
-          cx, cy, cx + 10, cy, cx, cy + 10, cx, cy).as("wkt"))
-      val a = zones.select(col("zone_id").as("zone_a"), col("wkt").as("wa"))
-      val b = zones.select(col("zone_id").as("zone_b"), col("wkt").as("wb"))
-      a.join(b, col("zone_a") < col("zone_b") && GeoFns.stTouches(col("wa"), col("wb")))
-        .select(col("zone_a"), col("zone_b"))
-    }),
-
-    // Transitive dedup clustering: connected components by iterative
-    // min-label propagation over a deterministic chain construction
-    // (consecutive doc ids within groups of 8 → diameter-7 components).
-    // Oracle: component = floor(id/8)*8, pure arithmetic.
-    "q65_connected_components" -> ((s, dir) => {
-      val pairs = t(s, dir, "documents")
-        .filter(col("doc_id") % 8 =!= 7)
-        .select(col("doc_id").as("id1"), (col("doc_id") + 1).as("id2"))
-      Dedup.connectedComponents(pairs, "id1", "id2")
-        .select(col("id").as("doc_id"), col("comp"))
-    }),
-
-    // S4 CRS leg: reproject Web-Mercator meters to lon/lat at ingestion
-    // (the reference's .to_crs(epsg:4326) normalization). The inverse
-    // Mercator is closed-form, so DuckDB reproduces it exactly.
-    "q66_crs_reproject" -> ((s, dir) => {
-      import graft.geo.CrsFns
-      val pts = t(s, dir, "supplier").select(col("s_suppkey"),
-        ((col("s_suppkey") % 3600) * 10000 - 18000000).cast("double").as("mx"),
-        ((col("s_suppkey") % 1700) * 10000 - 8400000).cast("double").as("my"))
-      pts.select(col("s_suppkey"),
-        round(CrsFns.toLon(lit(3857), col("mx"), col("my")), 6).as("lon"),
-        round(CrsFns.toLat(lit(3857), col("mx"), col("my")), 6).as("lat"))
-    }),
-
-    // S4/S7 codec leg: REAL .shp/.dbf binary round trip. Region rectangles
-    // (as q20) are written as an ESRI shapefile, read back through the
-    // binary parser, and drive the same spatial join — so the oracle is
-    // pure BETWEEN arithmetic on parquet and any codec corruption
-    // (ring orientation, DBF typing, record framing) breaks the hash.
-    "q67_shp_roundtrip" -> ((s, dir) => {
-      val polys = t(s, dir, "region").select(col("r_name"),
-        format_string("POLYGON ((%d 0, %d 0, %d 100, %d 100, %d 0))",
-          col("r_regionkey") * 20, col("r_regionkey") * 20 + 20,
-          col("r_regionkey") * 20 + 20, col("r_regionkey") * 20,
-          col("r_regionkey") * 20).as("geometry"))
-      val base = scratchDir("graft_shp")
-        .resolve("regions").toString
-      graft.sources.Shapefile.write(polys, "geometry", base)
-      val back = graft.sources.Shapefile.read(s, base)
-      val pts = t(s, dir, "customer").select(col("c_custkey"),
-        (col("c_custkey") % 100 + 0.5).cast("double").as("x"),
-        ((col("c_custkey") * 7) % 100 + 0.5).cast("double").as("y"))
-      SpatialOps.pointInPolygonJoin(pts, "x", "y", back, "geometry")
-        .groupBy(col("r_name")).agg(count(lit(1)).as("n_customers"))
-    }),
-
-    // S5/S8 codec leg: REAL GeoTIFF (float32 + PackBits + geo tags)
-    // round trip with a windowed, executor-side decode. Per-cell event
-    // counts are burned into a 30x40 raster, written as GeoTIFF, read
-    // back through a 20x20 window, and re-aggregated per row. Counts are
-    // integers (exact in float32), so DuckDB reproduces the sums exactly.
-    "q68_geotiff_roundtrip" -> ((s, dir) => {
-      import graft.sources.GeoTiff
-      val cells = events(s, dir).select(
-        (col("user_id") % 30).cast("int").as("row"),
-        (col("event_id") % 40).cast("int").as("col"))
-        .groupBy("row", "col").agg(count(lit(1)).cast("double").as("value"))
-      val gi = GeoTiff.GeoInfo(rows = 30, cols = 40,
-        x0 = 0.0, y0 = 30.0, resX = 1.0, resY = 1.0)
-      val path = scratchDir("graft_tif")
-        .resolve("counts.tif").toString
-      GeoTiff.write(cells, gi, path)
-      GeoTiff.read(s, path, window = Some((5, 10, 24, 29)), bandRows = 8)
-        .groupBy(col("row").cast("long").as("row"))
-        .agg(sum(col("value")).cast("long").as("pixel_sum"),
-          count(lit(1)).as("n_cells"))
-    }),
-
-    // S4 CRS leg, UTM: closed-form lon/lat points are projected to
-    // EPSG:32632 (Krüger series), written as a .shp WITH a .prj sidecar,
-    // and read back — Shapefile.read must DETECT the .prj and reproject
-    // to 4326 on its own (the reference's transparent any-CRS ingestion,
-    // lib/initialization.py:39,58,80). The oracle is the original
-    // closed-form arithmetic: any error in .prj detection, the forward
-    // or the inverse transverse Mercator breaks the 6-decimal hash.
-    "q83_utm_prj_roundtrip" -> ((s, dir) => {
-      import graft.geo.CrsFns
-      val pts = t(s, dir, "supplier").select(col("s_suppkey"),
-        (lit(7.5) + (col("s_suppkey") % 100) * 0.03).as("lon"),
-        (lit(48.0) + (col("s_suppkey") % 73) * 0.05).as("lat"))
-      val utm = pts.select(col("s_suppkey"),
-        format_string("POINT (%s %s)",
-          CrsFns.toX(lit(32632), col("lon"), col("lat")),
-          CrsFns.toY(lit(32632), col("lon"), col("lat"))).as("geometry"))
-      val base = scratchDir("graft_utm")
-        .resolve("pts32632").toString
-      graft.sources.Shapefile.write(utm, "geometry", base, epsg = Some(32632))
-      graft.sources.Shapefile.read(s, base) // auto-reprojects via .prj
-        .select(col("s_suppkey"),
-          round(regexp_extract(col("geometry"),
-            "POINT \\(([-0-9.eE]+) ([-0-9.eE]+)\\)", 1).cast("double"), 6).as("lon"),
-          round(regexp_extract(col("geometry"),
-            "POINT \\(([-0-9.eE]+) ([-0-9.eE]+)\\)", 2).cast("double"), 6).as("lat"))
-    }),
-
-    // Lambert-93 (EPSG:2154) shapefile round trip — q83's contract for the
-    // French national CRS: project a closed-form point grid onto the
-    // two-standard-parallel Lambert conformal conic, write .shp + .prj,
-    // read back through .prj auto-detection and auto-reprojection. The
-    // oracle re-derives the original grid, so forward, inverse, WKT and
-    // sidecar all have to agree to 1e-6 deg.
-    "q95_lambert93_roundtrip" -> ((s, dir) => {
-      import graft.geo.CrsFns
-      val pts = t(s, dir, "supplier").select(col("s_suppkey"),
-        (lit(-4.0) + (col("s_suppkey") % 100) * 0.12).as("lon"),
-        (lit(41.5) + (col("s_suppkey") % 73) * 0.13).as("lat"))
-      val lam = pts.select(col("s_suppkey"),
-        format_string("POINT (%s %s)",
-          CrsFns.toX(lit(2154), col("lon"), col("lat")),
-          CrsFns.toY(lit(2154), col("lon"), col("lat"))).as("geometry"))
-      val base = scratchDir("graft_l93")
-        .resolve("pts2154").toString
-      graft.sources.Shapefile.write(lam, "geometry", base, epsg = Some(2154))
-      graft.sources.Shapefile.read(s, base) // auto-reprojects via .prj
-        .select(col("s_suppkey"),
-          round(regexp_extract(col("geometry"),
-            "POINT \\(([-0-9.eE]+) ([-0-9.eE]+)\\)", 1).cast("double"), 6).as("lon"),
-          round(regexp_extract(col("geometry"),
-            "POINT \\(([-0-9.eE]+) ([-0-9.eE]+)\\)", 2).cast("double"), 6).as("lat"))
-    }),
-
-    // British National Grid (EPSG:27700, Airy TM + OSGB36 Helmert bridge)
-    // write→read→auto-reproject round trip; oracle = regenerated inputs
-    // (bridge inverse is algebraic-exact; floor ~2e-8 deg ≪ 6-dp rounding).
-    "q99_osgb_prj_roundtrip" -> ((s, dir) => {
-      import graft.geo.CrsFns
-      val pts = t(s, dir, "supplier").select(col("s_suppkey"),
-        (lit(-5.5) + (col("s_suppkey") % 100) * 0.07).as("lon"),
-        (lit(50.1) + (col("s_suppkey") % 73) * 0.1).as("lat"))
-      val bng = pts.select(col("s_suppkey"),
-        format_string("POINT (%s %s)",
-          CrsFns.toX(lit(27700), col("lon"), col("lat")),
-          CrsFns.toY(lit(27700), col("lon"), col("lat"))).as("geometry"))
-      val base = scratchDir("graft_bng")
-        .resolve("pts27700").toString
-      graft.sources.Shapefile.write(bng, "geometry", base, epsg = Some(27700))
-      graft.sources.Shapefile.read(s, base) // auto-reprojects via .prj
-        .select(col("s_suppkey"),
-          round(regexp_extract(col("geometry"),
-            "POINT \\(([-0-9.eE]+) ([-0-9.eE]+)\\)", 1).cast("double"), 6).as("lon"),
-          round(regexp_extract(col("geometry"),
-            "POINT \\(([-0-9.eE]+) ([-0-9.eE]+)\\)", 2).cast("double"), 6).as("lat"))
-    }),
-
-    // Swiss LV95 (EPSG:2056, CH1903+ oblique Mercator) write→read→auto-
-    // reproject round trip — the first CRS chain through a geocentric
-    // DATUM BRIDGE in the gate (Bessel ↔ WGS84, swisstopo translation).
-    // The bridge's fixed-point floor is ~2e-8 deg, two orders under the
-    // 6-dp rounding, so the oracle is the regenerated input points; the
-    // projection itself is anchored in CrsSpec against swisstopo's
-    // independent approximate polynomials.
-    "q97_swiss_prj_roundtrip" -> ((s, dir) => {
-      import graft.geo.CrsFns
-      val pts = t(s, dir, "supplier").select(col("s_suppkey"),
-        (lit(6.0) + (col("s_suppkey") % 100) * 0.04).as("lon"),
-        (lit(45.9) + (col("s_suppkey") % 73) * 0.03).as("lat"))
-      val lv = pts.select(col("s_suppkey"),
-        format_string("POINT (%s %s)",
-          CrsFns.toX(lit(2056), col("lon"), col("lat")),
-          CrsFns.toY(lit(2056), col("lon"), col("lat"))).as("geometry"))
-      val base = scratchDir("graft_lv95")
-        .resolve("pts2056").toString
-      graft.sources.Shapefile.write(lv, "geometry", base, epsg = Some(2056))
-      graft.sources.Shapefile.read(s, base) // auto-reprojects via .prj
-        .select(col("s_suppkey"),
-          round(regexp_extract(col("geometry"),
-            "POINT \\(([-0-9.eE]+) ([-0-9.eE]+)\\)", 1).cast("double"), 6).as("lon"),
-          round(regexp_extract(col("geometry"),
-            "POINT \\(([-0-9.eE]+) ([-0-9.eE]+)\\)", 2).cast("double"), 6).as("lat"))
-    }),
-
-    // Krovak S-JTSK (EPSG:5514) .prj round trip over CZ/SK: project a
-    // deterministic WGS84 grid into the oblique conformal conic, write a
-    // shapefile with its .prj sidecar, read it back through auto-detect
-    // and reprojection — the oracle regenerates the input grid at 6 dp
-    // (round-trip floor ~2e-8 deg ≪ the rounding).
-    "q108_krovak_prj_roundtrip" -> ((s, dir) => {
-      import graft.geo.CrsFns
-      val pts = t(s, dir, "supplier").select(col("s_suppkey"),
-        (lit(12.2) + (col("s_suppkey") % 100) * 0.1).as("lon"),
-        (lit(47.8) + (col("s_suppkey") % 73) * 0.042).as("lat"))
-      val kro = pts.select(col("s_suppkey"),
-        format_string("POINT (%s %s)",
-          CrsFns.toX(lit(5514), col("lon"), col("lat")),
-          CrsFns.toY(lit(5514), col("lon"), col("lat"))).as("geometry"))
-      val base = scratchDir("graft_krovak")
-        .resolve("pts5514").toString
-      graft.sources.Shapefile.write(kro, "geometry", base, epsg = Some(5514))
-      graft.sources.Shapefile.read(s, base) // auto-reprojects via .prj
-        .select(col("s_suppkey"),
-          round(regexp_extract(col("geometry"),
-            "POINT \\(([-0-9.eE]+) ([-0-9.eE]+)\\)", 1).cast("double"), 6).as("lon"),
-          round(regexp_extract(col("geometry"),
-            "POINT \\(([-0-9.eE]+) ([-0-9.eE]+)\\)", 2).cast("double"), 6).as("lat"))
-    }),
-
-    // PARAMETRIC .prj fallback (the generic tail behind the anchored
-    // national families — the reference accepts ANY CRS via pyproj,
-    // lib/initialization.py:38-39): points are projected forward through
-    // the ANCHORED UTM-33N kernel, the layer ships with a .prj whose
-    // NAME nothing recognizes (no AUTHORITY, no heuristic) but whose
-    // PARAMETER values say UTM 33N — the read side must fall back to
-    // Crs.parametricFromPrj and still return the original lon/lat.
-    "q127_parametric_prj_roundtrip" -> ((s, dir) => {
-      import graft.geo.CrsFns
-      val pts = t(s, dir, "supplier").select(col("s_suppkey"),
-        (lit(12.2) + (col("s_suppkey") % 100) * 0.05).as("lon"),
-        (lit(40.0) + (col("s_suppkey") % 80) * 0.29).as("lat"))
-      val utm = pts.select(col("s_suppkey"),
-        format_string("POINT (%s %s)",
-          CrsFns.toX(lit(32633), col("lon"), col("lat")),
-          CrsFns.toY(lit(32633), col("lon"), col("lat"))).as("geometry"))
-      val base = scratchDir("graft_parametric").resolve("pts").toString
-      graft.sources.Shapefile.write(utm, "geometry", base) // no .prj yet
-      val prjTxt =
-        """PROJCS["Some_Local_Grid_1997",GEOGCS["GCS_WGS_1984",""" +
-          """DATUM["D_WGS_1984",SPHEROID["WGS_1984",6378137.0,298.257223563]],""" +
-          """PRIMEM["Greenwich",0.0],UNIT["Degree",0.0174532925199433]],""" +
-          """PROJECTION["Transverse_Mercator"],""" +
-          """PARAMETER["False_Easting",500000.0],""" +
-          """PARAMETER["False_Northing",0.0],""" +
-          """PARAMETER["Central_Meridian",15.0],""" +
-          """PARAMETER["Scale_Factor",0.9996],""" +
-          """PARAMETER["Latitude_Of_Origin",0.0],UNIT["Meter",1.0]]"""
-      val p = new org.apache.hadoop.fs.Path(base + ".prj")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val os = fs.create(p, true)
-      try os.write(prjTxt.getBytes("UTF-8")) finally os.close()
-      graft.sources.Shapefile.read(s, base) // parametric fallback fires
-        .select(col("s_suppkey"),
-          round(regexp_extract(col("geometry"),
-            "POINT \\(([-0-9.eE]+) ([-0-9.eE]+)\\)", 1).cast("double"), 6).as("lon"),
-          round(regexp_extract(col("geometry"),
-            "POINT \\(([-0-9.eE]+) ([-0-9.eE]+)\\)", 2).cast("double"), 6).as("lat"))
-    }),
-
-    // Oblique (double) stereographic — EPSG 9809, Dutch RD New's method —
-    // under the oracle: NL-envelope points are projected with the
-    // parametric kernel, written as a shapefile whose .prj declares
-    // Oblique_Stereographic, and read back through the real parametric
-    // fallback (projection inverse to WGS84). The oracle reproduces the
-    // inputs: forward∘inverse must be the identity at 6 dp.
-    "q135_oblique_stereo_roundtrip" -> ((s, dir) => {
-      val prjTxt =
-        """PROJCS["Custom_Double_Stereo",GEOGCS["GCS_WGS_1984",""" +
-          """DATUM["D_WGS_1984",SPHEROID["WGS_1984",6378137.0,298.257223563]],""" +
-          """PRIMEM["Greenwich",0.0],UNIT["Degree",0.0174532925199433]],""" +
-          """PROJECTION["Oblique_Stereographic"],""" +
-          """PARAMETER["False_Easting",155000.0],""" +
-          """PARAMETER["False_Northing",463000.0],""" +
-          """PARAMETER["Central_Meridian",5.38763888888889],""" +
-          """PARAMETER["Scale_Factor",0.9999079],""" +
-          """PARAMETER["Latitude_Of_Origin",52.15616055555555],""" +
-          """UNIT["Meter",1.0]]"""
-      val crs = graft.geo.Crs.parametricFromPrj(prjTxt)
-        .getOrElse(sys.error("oblique stereographic refused"))
-      val fwd = udf { (lon: Double, lat: Double) => crs.fromWgs84(lon, lat) }
-      val pts = t(s, dir, "supplier").select(col("s_suppkey"),
-        (lit(3.4) + (col("s_suppkey") % 100) * 0.03).as("lon"),
-        (lit(50.8) + (col("s_suppkey") % 80) * 0.03).as("lat"))
-      val proj = pts
-        .withColumn("__xy", fwd(col("lon"), col("lat")))
-        .select(col("s_suppkey"), format_string("POINT (%s %s)",
-          col("__xy._1"), col("__xy._2")).as("geometry"))
-      val base = scratchDir("graft_oblstereo").resolve("pts").toString
-      graft.sources.Shapefile.write(proj, "geometry", base)
-      val p = new org.apache.hadoop.fs.Path(base + ".prj")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val os = fs.create(p, true)
-      try os.write(prjTxt.getBytes("UTF-8")) finally os.close()
-      graft.sources.Shapefile.read(s, base)
-        .select(col("s_suppkey"),
-          round(regexp_extract(col("geometry"),
-            "POINT \\(([-0-9.eE]+) ([-0-9.eE]+)\\)", 1).cast("double"), 6).as("lon"),
-          round(regexp_extract(col("geometry"),
-            "POINT \\(([-0-9.eE]+) ([-0-9.eE]+)\\)", 2).cast("double"), 6).as("lat"))
-    }),
-
-    // Ellipsoidal geodesic distance (Vincenty inverse on WGS-84) — the
-    // reference's geopy geodesic (lib/generate_intermediate_files.py:
-    // 496-501). Closed-form European point pairs; the oracle unrolls the
-    // same λ-iteration in SQL, so any kernel drift breaks the hash at
-    // meter precision.
-    "q85_geodesic" -> ((s, dir) => {
-      val k = col("c_custkey")
-      val p = t(s, dir, "customer").select(k,
-        (lit(35.0) + (k % 40) * 0.9).as("lat1"),
-        (lit(-10.0) + (k % 61) * 0.7).as("lon1"),
-        (lit(35.0) + (k % 40) * 0.9 + ((k * 7) % 11 - 5) * 1.3 + 0.05).as("lat2"),
-        (lit(-10.0) + (k % 61) * 0.7 + ((k * 13) % 17 - 8) * 1.1).as("lon2"))
-      p.select(col("c_custkey"),
-        round(graft.expr.GraftExpressions.geodesicKm(
-          col("lat1"), col("lon1"), col("lat2"), col("lon2")), 3).as("geo_km"))
-    }),
-
-    // Overlapping token-window chunking (RAG / long-context splitting):
-    // 16-token windows every 12 tokens, tail-preserving. Pure map-side
-    // sequence explode; the oracle re-derives every chunk boundary.
-    "q86_chunk_windows" -> ((s, dir) => {
-      import graft.operators.Curation
-      Curation.chunkWindows(t(s, dir, "documents"), "doc_id", "text",
-        window = 16, stride = 12)
-    }),
-
-    // Per-language exact token-count percentiles (p25/p50/p95, linear
-    // interpolation) — the corpus length profile a mixture designer reads
-    // before setting context budgets.
-    "q87_length_percentiles" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .filter(col("text").isNotNull && trim(col("text")) =!= "")
-        .select(col("lang"), TextFns.tokenCount(col("text")).cast("double").as("n"))
-      d.groupBy(col("lang"))
-        .agg(expr("percentile(n, array(0.25D, 0.5D, 0.95D))").as("__p"),
-          count(lit(1)).as("n_docs"))
-        .select(col("lang"),
-          round(element_at(col("__p"), 1), 6).as("p25"),
-          round(element_at(col("__p"), 2), 6).as("p50"),
-          round(element_at(col("__p"), 3), 6).as("p95"),
-          col("n_docs"))
-    }),
-
-    // Histogram-sketch quantiles: per-language p50/p95 token counts from
-    // a 32-bin fixed histogram — the no-sort percentile shape for corpus
-    // scale; deterministic interpolation the oracle reproduces exactly.
-    "q91_hist_quantiles" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .filter(col("text").isNotNull && trim(col("text")) =!= "")
-        .select(col("lang"), TextFns.tokenCount(col("text")).cast("double").as("n"))
-      Ops.histogramQuantiles(d, Seq("lang"), "n", lo = 0.0, hi = 256.0,
-          bins = 32, qs = Seq(0.5, 0.95))
-        .select(col("lang"), round(col("q50"), 6).as("q50"),
-          round(col("q95"), 6).as("q95"), col("n_rows"))
-    }),
-
-    // Salted two-stage aggregation: hot-key sums split across `salts`
-    // partial reducers, then merged — the standard skew pattern, made an
-    // operator. Long sums are salt-order-independent, so the oracle is
-    // the plain GROUP BY.
-    "q92_salted_agg" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_returnflag"),
-        col("l_quantity").cast("long").as("qty"),
-        (col("l_orderkey") * 8 + col("l_linenumber")).as("rowkey"))
-      Ops.saltedSum(li, Seq("l_returnflag"), "qty", col("rowkey"), salts = 32)
-        .select(col("l_returnflag"), col("sum_qty"), col("n_rows"))
-    }),
-
-    // Skew-safe SALTED JOIN: half of lineitem collapses onto one hot key
-    // (the straggler shape); the big side salts on a row expression, the
-    // small side replicates ×8, and the post-join aggregate must equal
-    // the plain-join oracle exactly.
-    "q103_salted_join" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(
-        when(col("l_orderkey") % 100 < 50, lit(0L))
-          .otherwise((col("l_orderkey") % 100).cast("long")).as("k"),
-        col("l_quantity").cast("long").as("qty"),
-        (col("l_orderkey") * 8 + col("l_linenumber")).as("rowkey"))
-      val dims = s.range(100).select(col("id").as("k"),
-        (col("id") * 3 + 7).as("w"))
-      Ops.saltedJoin(li, dims, "k", col("rowkey"), salts = 8)
-        .groupBy(col("k"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("qty") * col("w")).as("wsum"))
-    }),
-
-    // Mean unigram surprisal per doc under the corpus' own unigram
-    // distribution — the no-model text-quality outlier score. Term counts
-    // broadcast (vocabulary-sized); corpus shuffles only for aggs.
-    "q88_unigram_surprisal" -> ((s, dir) => {
-      import graft.operators.Curation
-      Curation.unigramSurprisal(t(s, dir, "documents"), "doc_id", "text")
-        .select(col("doc_id"), round(col("surprisal"), 6).as("surprisal"),
-          col("n_tokens"))
-    }),
-
-    // Interpolated bigram surprisal (λ=0.5 backoff to unigram): the LM
-    // fluency score over corpus-estimated bigram/unigram models — first
-    // position unigram-only, bigram counts joined on a keyed shuffle.
-    // λ=0.5 keeps both interpolation weights exact in binary, so the
-    // oracle's literals are bit-identical to the engine's.
-    "q101_bigram_surprisal" -> ((s, dir) => {
-      import graft.operators.Curation
-      Curation.bigramSurprisal(t(s, dir, "documents"), "doc_id", "text",
-          lambda = 0.5)
-        .select(col("doc_id"), round(col("surprisal"), 6).as("surprisal"),
-          col("n_tokens"))
-    }),
-
-    // Semantic decontamination: corpus vectors too close (cosine) to any
-    // "benchmark" vector (vec_id % 101 == 0) — the embedding-space
-    // complement of q69's n-gram matching. Bench broadcast, cosines
-    // map-side, only the hit agg shuffles.
-    "q89_semantic_decontam" -> ((s, dir) => {
-      import graft.operators.Curation
-      val emb = t(s, dir, "embeddings")
-      Curation.semanticDecontaminate(
-        emb.filter(col("vec_id") % 101 =!= 0), "vec_id", "embedding",
-        emb.filter(col("vec_id") % 101 === 0), "embedding", threshold = 0.3)
-        .select(col("vec_id"), col("n_hits"),
-          round(col("max_cos"), 4).as("max_cos"))
-    }),
-
-    // Decontamination: flag corpus docs sharing a word 3-gram with the
-    // "benchmark" slice (doc_id % 97 == 0). Benchmark grams broadcast;
-    // corpus side explodes map-side — the 100 TB shape.
-    "q69_decontaminate" -> ((s, dir) => {
-      import graft.operators.Curation
-      val docs = t(s, dir, "documents")
-        .filter(col("text").isNotNull && TextFns.tokenCount(col("text")) >= 3)
-      val bench = docs.filter(col("doc_id") % 97 === 0)
-      Curation.decontaminate(docs, "doc_id", "text", bench, "text", n = 3)
-        .select(col("doc_id"), col("hits").cast("long").as("hits"))
-    }),
-
-    // Deterministic stratified hash sampling: per-language dyadic
-    // fractions (exact in both engines' integer arithmetic), decision a
-    // pure function of doc_id — reproducible, map-side, no RNG state.
-    "q70_stratified_sample" -> ((s, dir) => {
-      import s.implicits._
-      import graft.operators.Curation
-      val fr = Seq(("en", 0.5), ("de", 0.25), ("es", 0.125),
-        ("fr", 0.75), ("zh", 0.0625)).toDF("lang", "fraction")
-      Curation.stratifiedHashSample(t(s, dir, "documents"), "doc_id", "lang", fr)
-        .select(col("doc_id"), col("lang"))
-    }),
-
-    // Sequence packing: cumulative-sum bin assignment into 256-token
-    // context windows, sharded so no task sees the whole corpus; output
-    // is the per-bin occupancy audit.
-    "q71_pack_sequences" -> ((s, dir) => {
-      import graft.operators.Curation
-      val docs = t(s, dir, "documents")
-        .filter(col("text").isNotNull && trim(col("text")) =!= "")
-        .select(col("doc_id"), (col("doc_id") % 8).as("shard"),
-          TextFns.tokenCount(col("text")).cast("long").as("toks0"))
-      val packed = Curation.packSequences(docs, "doc_id", "toks0",
-        budget = 256, shardCol = "shard")
-      Curation.packingStats(packed, "toks0", budget = 256, shardCol = "shard")
-    }),
-
-    // PII redaction: plant deterministic emails/phones/SSNs, scrub to
-    // typed placeholders, count per class. Pure codegen regexp — and the
-    // oracle re-runs the identical regex chain in DuckDB.
-    "q72_redact_pii" -> ((s, dir) => {
-      import graft.operators.Curation
-      val planted = t(s, dir, "documents").filter(col("text").isNotNull)
-        .select(col("doc_id"), concat(
-          substring(col("text"), 1, 40),
-          lit(" contact user"), col("doc_id"), lit("@example.com or 555-"),
-          lpad((col("doc_id") % 1000).cast("string"), 3, "0"), lit("-"),
-          lpad((col("doc_id") % 10000).cast("string"), 4, "0"),
-          when(col("doc_id") % 3 === 0, lit(" ssn 123-45-6789"))
-            .otherwise(lit(""))).as("text"))
-      Curation.redactPii(planted, "text")
-        .select(col("doc_id"), col("n_email"), col("n_phone"), col("n_ssn"),
-          col("text").as("redacted"))
-    }),
-
-    // int8 embedding quantization: the 4x-memory ANN trade. Scale is the
-    // element-wise abs max; codes round half-away-from-zero — both exactly
-    // reproducible in SQL, so the oracle re-derives every code.
-    "q73_quantize_int8" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").filter(col("embedding").isNotNull)
-      emb.withColumn("s", graft.functions.VectorFns.quantizeInt8(col("embedding")))
-        .select(col("vec_id"),
-          round(col("s.scale").cast("double"), 6).as("scale_r"),
-          expr("aggregate(s.q, 0L, (a, x) -> a + CAST(x AS BIGINT))").as("qsum"),
-          expr("aggregate(s.q, -128L, (a, x) -> greatest(a, CAST(x AS BIGINT)))").as("qmax"))
-    }),
-
-    // REAL image decode in the gate: render a solid-gray PNG per doc
-    // (dimensions/level closed-form in doc_id), decode it back through the
-    // JDK ImageIO codec, and let the oracle recompute the expected
-    // metadata arithmetically. Any codec/pixel corruption breaks the hash.
-    "q74_image_decode" -> ((s, dir) => {
-      import graft.multimodal.Multimodal
-      val genPng = udf { (id: Long) =>
-        val w = (1 + id % 16).toInt; val h = (1 + id % 11).toInt
-        val g = (id % 256).toInt
-        val img = new java.awt.image.BufferedImage(w, h,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val rgb = (g << 16) | (g << 8) | g
-        var y = 0
-        while (y < h) { var x = 0; while (x < w) { img.setRGB(x, y, rgb); x += 1 }; y += 1 }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        bos.toByteArray
-      }
-      val media = t(s, dir, "documents").select(col("doc_id"))
-        .filter(col("doc_id").isNotNull)
-        .withColumn("media", genPng(col("doc_id")))
-      Multimodal.withRealImageMeta(media, "media")
-        .select(col("doc_id"), col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"), col("format"),
-          col("mean_band0").cast("long").as("mean_band0"))
-    }),
-
-    // REAL audio decode in the gate: synthesize a PCM WAV per doc
-    // (rate/channels/frames/payload closed-form in doc_id), decode it
-    // back through the JDK javax.sound codec, and let the oracle
-    // recompute the expected metadata arithmetically — the audio mirror
-    // of q74. pcm_sum proves the data chunk round-trips byte-exact.
-    "q84_audio_decode" -> ((s, dir) => {
-      import graft.multimodal.Multimodal
-      val genWav = udf { (id: Long) =>
-        val rate = (id % 3) match { case 0 => 8000f; case 1 => 16000f; case _ => 44100f }
-        val channels = (1 + id % 2).toInt
-        val frames = (50 + id % 200).toInt
-        val nBytes = frames * channels * 2
-        val data = new Array[Byte](nBytes)
-        var i = 0
-        while (i < nBytes) { data(i) = ((id + i) % 256).toByte; i += 1 }
-        val fmt = new javax.sound.sampled.AudioFormat(rate, 16, channels,
-          true, false) // 16-bit signed PCM little-endian
-        val ais = new javax.sound.sampled.AudioInputStream(
-          new java.io.ByteArrayInputStream(data), fmt, frames.toLong)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.sound.sampled.AudioSystem.write(ais,
-          javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-        bos.toByteArray
-      }
-      val media = t(s, dir, "documents").select(col("doc_id"))
-        .filter(col("doc_id").isNotNull)
-        .withColumn("media", genWav(col("doc_id")))
-      Multimodal.withAudioMeta(media, "media")
-        .select(col("doc_id"), col("sample_rate").cast("long").as("sample_rate"),
-          col("channels").cast("long").as("channels"),
-          col("bits").cast("long").as("bits"), col("frames"),
-          expr("(frames * 1000000) div sample_rate").as("duration_us"),
-          col("container"), col("pcm_sum"))
-    }),
-
-    // REAL video CONTAINER metadata in the gate: synthesize an AVI (even
-    // ids) or MP4 (odd ids) with closed-form header fields, parse the
-    // RIFF chunks / ISO-BMFF boxes back with the pure-JDK parser, and let
-    // the oracle recompute every field arithmetically — the video mirror
-    // of q74/q84. Frame PIXEL decode stays stubbed (no codec in the JDK);
-    // everything here reads real container bytes.
-    "q94_video_meta" -> ((s, dir) => {
-      import graft.multimodal.{Multimodal, VideoContainers}
-      val genVideo = udf { (id: Long) =>
-        val w = (160 + id % 320).toInt; val h = (90 + id % 240).toInt
-        if (id % 2 == 0)
-          VideoContainers.synthAvi(w, h, frames = 100 + id % 500,
-            rate = 24 + id % 30, scale = 1L)
-        else
-          VideoContainers.synthMp4(w, h, movTimescale = 600 + id % 400,
-            movDuration = (600 + id % 400) * (5 + id % 20),
-            mediaTimescale = 2400 + id % 100,
-            sampleCount = 200 + id % 300, sampleDelta = 100 + id % 50)
-      }
-      val media = t(s, dir, "documents").select(col("doc_id"))
-        .filter(col("doc_id").isNotNull)
-        .withColumn("media", genVideo(col("doc_id")))
-      Multimodal.withVideoMeta(media, "media")
-        .select(col("doc_id"), col("container"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          round(col("fps"), 6).as("fps"), col("duration_us"),
-          col("n_frames"))
-    }),
-
-    // REAL video FRAME decode (MJPEG, pure JDK): per-supplier 3-frame
-    // MJPEG AVIs whose solid-gray frames encode (s_suppkey + frame) % 4
-    // on a 64-level grid. The query walks the RIFF movi chunks, ImageIO-
-    // decodes each JPEG frame, and recovers the level from the PIXEL
-    // mean via floor(mean/64) — planted margin 32 vs JPEG error ±2, so
-    // the oracle is exact integer arithmetic. Any break in the chain
-    // (RIFF structure, chunk extraction, JPEG bytes, raster stats)
-    // shifts a level and breaks the hash.
-    "q98_video_frames" -> ((s, dir) => {
-      import graft.multimodal.{Multimodal, VideoContainers}
-      val genMjpeg = udf { (id: Long) =>
-        VideoContainers.synthMjpegAvi(16, 16, rate = 25, scale = 1,
-          grays = Seq.tabulate(3)(i => (32 + 64 * ((id + i) % 4)).toInt))
-      }
-      val media = t(s, dir, "supplier")
-        .select(col("s_suppkey").cast("long").as("s_suppkey"))
-        .withColumn("media", genMjpeg(col("s_suppkey")))
-      Multimodal.withVideoFrames(media, "media", every = 1)
-        .select(col("s_suppkey"),
-          col("frame_idx").cast("long").as("frame_idx"),
-          col("frame_width").cast("long").as("frame_width"),
-          col("frame_height").cast("long").as("frame_height"),
-          floor(col("mean_luma") / 64).cast("long").as("gray_level"))
-    }),
-
-    // BM25 relevance against a literal probe query — corpus stats as a
-    // broadcast 1-row agg, term explode filtered before the shuffle.
-    "q75_bm25" -> ((s, dir) => {
-      import graft.operators.Curation
-      Curation.bm25(t(s, dir, "documents"), "doc_id", "text",
-        Seq("spark", "query", "join"))
-        .select(col("doc_id"), round(col("bm25"), 6).as("bm25"), col("n_terms"))
-    }),
-
-    // Hybrid retrieval: reciprocal-rank fusion of a BM25 text run and an
-    // embedding-cosine run over the shared id space. Both runs rank their
-    // 6-dp-rounded scores (rounding pins rank order across engines) via
-    // TakeOrderedAndProject + broadcast count-join — no partitionless
-    // window anywhere — then fuse by Σ 1/(60+rank), top-20.
-    "q100_rrf_hybrid" -> ((s, dir) => {
-      import graft.operators.{Curation, Similarity}
-      val bm = Curation.bm25(t(s, dir, "documents"), "doc_id", "text",
-          Seq("spark", "query", "join"))
-        .select(col("doc_id"), round(col("bm25"), 6).as("score"))
-      val textRun = Similarity.rankByScore(bm, "doc_id", "score", topN = 50)
-      val emb = t(s, dir, "embeddings")
-      val qv = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>").as("qv"))
-      val cos = emb.crossJoin(broadcast(qv))
-        .select(col("vec_id").as("doc_id"),
-          round(graft.functions.VectorFns.cosine(
-            col("embedding").cast("array<double>"), col("qv")), 6).as("score"))
-      val vecRun = Similarity.rankByScore(cos, "doc_id", "score", topN = 50)
-      Similarity.rrfFuse(Seq(textRun, vecRun), "doc_id", "rank",
-          kRrf = 60, topN = 20)
-        .select(col("doc_id"), round(col("rrf"), 6).as("rrf"),
-          col("n_systems"))
-    }),
-
-    // Repetition ratio (Gopher-style boilerplate signal): 1 - distinct/total
-    // word bigrams per doc.
-    "q76_repetition" -> ((s, dir) => {
-      t(s, dir, "documents").select(col("doc_id"),
-        round(TextFns.repetitionRatio(col("text"), 2), 6).as("rep2"))
-    }),
-
-    // As-of join: every click picks up the latest at-or-before purchase
-    // value per user — union-tag + one keyed window, no row expansion.
-    // DuckDB's native ASOF JOIN is the oracle.
-    "q77_asof_join" -> ((s, dir) => {
-      // nanos -> micros (integer div) so the int64 timeline matches
-      // DuckDB's microsecond TIMESTAMP exactly
-      val ev = events(s, dir)
-        .filter(col("ts").isNotNull && col("user_id").isNotNull)
-        .withColumn("ts", expr("ts div 1000"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts")).agg(max(col("value")).as("value"))
-      Ops.asofJoin(clicks, purchases, "user_id", "ts", Seq("value"))
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("asof_value"))
-    }),
-
-    // Focal (3x3 neighborhood) raster statistics: contribution explode +
-    // one groupBy shuffle — no self-join. Sparse canvas from event counts.
-    "q78_focal_stats" -> ((s, dir) => {
-      import graft.sources.InputMaps
-      val cells = events(s, dir).select(
-        (col("user_id") % 30).cast("int").as("row"),
-        (col("event_id") % 40).cast("int").as("col"))
-        .groupBy("row", "col").agg(count(lit(1)).cast("double").as("value"))
-      InputMaps.focalStats(cells, radius = 1)
-        .filter(col("row").between(0, 29) && col("col").between(0, 39))
-        .select(col("row").cast("long").as("row"),
-          col("col").cast("long").as("col"),
-          round(col("focal_mean"), 6).as("focal_mean"),
-          col("focal_min").cast("long").as("focal_min"),
-          col("focal_max").cast("long").as("focal_max"), col("focal_n"))
-    }),
-
-    // Inverted-index BM25: build the partitioned postings index, then
-    // answer the q75 query THROUGH it — same oracle, so any index-path
-    // corruption (bucketing, stats sidecar, df counting) breaks the hash.
-    "q79_text_index" -> ((s, dir) => {
-      import graft.operators.TextIndex
-      val path = scratchDir("graft_tix")
-        .resolve("idx").toString
-      // 16 buckets at gate scale (64-dir writes are pure file overhead
-      // on a 5k-doc corpus; pruning semantics identical)
-      TextIndex.write(t(s, dir, "documents"), "doc_id", "text", path,
-        nBuckets = 16)
-      TextIndex.search(s, path, Seq("spark", "query", "join"), k = 1000000)
-        .select(col("doc_id"), round(col("bm25"), 6).as("bm25"), col("n_terms"))
-    }),
-
-    // Rolling TEXT-index lifecycle: build on the corpus, append planted
-    // high-id docs (including empty-text ones — the sentinel-registry
-    // path), compact, then REMOVE exactly the appended docs. The search
-    // must hash-match the plain-corpus BM25 oracle: any drift in the
-    // append/remove stats arithmetic (N, avgdl), sentinel accounting, or
-    // compaction shows up through idf/avgdl in every score.
-    "q112_text_index_rolling" -> ((s, dir) => {
-      import graft.operators.TextIndex
-      val docs = t(s, dir, "documents")
-      val o = docs.agg(coalesce(max(col("doc_id")), lit(0L))).head().getLong(0)
-      val extra = docs.filter(col("doc_id") % 13 === 0)
-        .select((col("doc_id") + lit(o + 1)).as("doc_id"), col("text"))
-      val idx = scratchDir("graft_rtix").resolve("idx").toString
-      TextIndex.write(docs, "doc_id", "text", idx, nBuckets = 16)
-      TextIndex.append(extra, "doc_id", "text", idx)
-      TextIndex.compact(s, idx)
-      TextIndex.remove(s, idx, extra.select(col("doc_id")), "doc_id")
-      TextIndex.search(s, idx, Seq("spark", "query", "join"), k = 1000000)
-        .select(col("doc_id"), round(col("bm25"), 6).as("bm25"),
-          col("n_terms"))
-    }),
-
-    // Calendar-spine gap detection: which (site, hour-of-week) slots have
-    // NO events — expected-domain cross product anti-joined against the
-    // observed slots (the reference's TS completeness check, made
-    // relational; the broadcast anti-join side is the observed DISTINCT).
-    "q80_missing_slots" -> ((s, dir) => {
-      val ev = events(s, dir)
-        .filter(col("ts").isNotNull && col("user_id").isNotNull)
-        .select((col("user_id") % 20).as("site"),
-          expr("((ts div 1000) div 3600000000) % 168").as("slot"))
-        .distinct()
-      val spine = s.range(20).select(col("id").as("site"))
-        .crossJoin(s.range(168).select(col("id").as("slot")))
-      spine.join(ev, Seq("site", "slot"), "left_anti")
-    }),
-
-    // Exact repeated-span detection (substring-level dedup): maximal
-    // token spans whose every 6-gram repeats corpus-wide, merged per doc
-    // by a gaps-and-islands window — the clip-don't-drop primitive of
-    // substring dedup. The oracle re-derives every positioned n-gram,
-    // corpus count, and island boundary.
-    "q110_repeated_spans" -> ((s, dir) => {
-      import graft.operators.Curation
-      Curation.repeatedSpans(t(s, dir, "documents"), "doc_id", "text",
-        n = 6, minCount = 2)
-    }),
-
-    // Span CLIPPING: q110's spans excised from the normalized token
-    // stream, n_removed per doc — the oracle rebuilds every clipped
-    // stream token by token, so offset arithmetic, coverage tests and
-    // null/edge handling all sit inside the hash.
-    "q111_span_clip" -> ((s, dir) => {
-      import graft.operators.Curation
-      Curation.clipRepeatedSpans(t(s, dir, "documents"), "doc_id", "text",
-        n = 6, minCount = 2)
-    }),
-
-    // Deterministic weighted sampling (Efraimidis–Spirakis): 100 docs
-    // weighted by token count, keys from the SQL-reproducible Knuth hash
-    // — the oracle recomputes every key, so hash choice, the w<=0
-    // exclusion, 9-dp key rounding and tie order are all inside the hash.
-    "q113_weighted_sample" -> ((s, dir) => {
-      import graft.operators.Curation
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextFns.tokenCount(col("text")).cast("long").as("toks"))
-      Curation.weightedSample(d, "doc_id", "toks", k = 100)
-    }),
-
-    // Cross-document boilerplate: 4-token passages present in >= 3 docs
-    // (the word-soup corpus repeats phrases heavily, so yield is real).
-    "q81_boilerplate" -> ((s, dir) => {
-      import graft.operators.Curation
-      Curation.boilerplatePassages(t(s, dir, "documents"), "doc_id", "text",
-        k = 4, minDocs = 3)
-    }),
-
-    // Token-budget corpus mixing: per-source budgets filled in
-    // deterministic hash order — the reproducible data-mixture step.
-    "q82_token_budget" -> ((s, dir) => {
-      import s.implicits._
-      import graft.operators.Curation
-      val budgets = Seq(("src0", 6000L), ("src1", 3000L), ("src2", 12000L))
-        .toDF("source", "budget")
-      val docs = t(s, dir, "documents")
-        .filter(col("text").isNotNull && trim(col("text")) =!= "")
-        .select(col("doc_id"), col("source"),
-          TextFns.tokenCount(col("text")).cast("long").as("toks"))
-      Curation.tokenBudgetMix(docs, "doc_id", "toks", "source", budgets)
-    }),
-
-    // U3: set intersection/difference on key domains.
-    "q43_set_ops" -> ((s, dir) => {
-      val a = t(s, dir, "part").filter(col("p_size") <= 10).select(col("p_brand")).distinct()
-      val b = t(s, dir, "part").filter(col("p_retailprice") > 950).select(col("p_brand")).distinct()
-      a.intersect(b).withColumn("membership", lit("both"))
-        .unionByName(a.except(b).withColumn("membership", lit("only_small")))
-        .unionByName(b.except(a).withColumn("membership", lit("only_pricey")))
-    }),
-
-    // Star join (flagship shape): revenue per region/nation.
-    "q44_star_join" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      val n = t(s, dir, "nation")
-      val r = t(s, dir, "region")
-      li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
-          count(lit(1)).as("n_lines"))
-    }),
-
-    // Composite training-data filter: language + quality gate, per-source.
-    "q45_quality_filter" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .withColumn("lang_pred", TextFns.langId(col("text")))
-        .withColumn("quality", TextFns.qualityScore(col("text")))
-        .filter(col("lang_pred") === "en" && col("quality") >= 0.5)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), round(avg(col("quality")), 6).as("avg_quality"))
-    }),
-
-    // Multimodal plumbing: binary media column + deterministic fake decode
-    // (schema/partitioning real; codec stubbed — see Multimodal docs).
-    "q46_multimodal_meta" -> ((s, dir) => {
-      import graft.multimodal.Multimodal
-      val media = t(s, dir, "documents")
-        .select(col("doc_id"), col("text").cast("binary").as("media"))
-      Multimodal.withImageMeta(media, "media")
-        .select(col("doc_id"), col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          col("n_bytes").cast("long").as("n_bytes"),
-          col("first_byte").cast("long").as("first_byte"),
-          col("last_byte").cast("long").as("last_byte"))
-    }),
-
-    // Full dedup pipeline: exact -> minhash-LSH -> jaccard-verified removal
-    // over a corpus with planted near-dups (rows-only: minhash hashing is
-    // engine-native). Survivor count < corpus+planted proves removal.
-    "q53_dedup_corpus" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      // offset as a LITERAL (see q90): one tiny plan-build agg, so the
-      // bench row measures dedupCorpus, not probe construction
-      val o = docs.agg(coalesce(max(col("doc_id")), lit(0L))).head().getLong(0)
-      val planted = docs.filter(col("doc_id") % 25 === 0)
-        .select((col("doc_id") + lit(o + 1)).as("doc_id"),
-          regexp_replace(col("text"), "^\\S+\\s*", "").as("text"))
-      Dedup.dedupCorpus(docs.unionByName(planted), "doc_id", "text",
-          threshold = 0.6, shingleN = 2, k = 16, bands = 4)
-        .select(col("doc_id"))
-    }),
-
-    // Incremental ingestion-batch dedup: existing corpus + an incoming
-    // batch of exact copies (dropped), first-word-stripped near-dups
-    // (dropped where bigram-jaccard holds) and fresh docs (kept) — the
-    // daily-ingest shape; output = surviving INCOMING ids only.
-    "q90_dedup_incremental" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      // offset as a LITERAL: one tiny agg at plan-build time instead of a
-      // crossJoin-on-1-row-agg inside every planted branch — the bench row
-      // now measures the operator, not probe construction
-      val o = docs.agg(coalesce(max(col("doc_id")), lit(0L))).head().getLong(0)
-      val exactCopies = docs.filter(col("doc_id") % 11 === 0)
-        .select((col("doc_id") + lit(o + 1)).as("doc_id"), col("text"))
-      val nearDups = docs.filter(col("doc_id") % 25 === 0)
-        .select((col("doc_id") + lit(2 * o + 2)).as("doc_id"),
-          regexp_replace(col("text"), "^\\S+\\s*", "").as("text"))
-      val fresh = docs.filter(col("doc_id") % 17 === 0)
-        .select((col("doc_id") + lit(3 * o + 3)).as("doc_id"),
-          format_string("fresh alpha %d beta %d gamma delta epsilon",
-            col("doc_id"), col("doc_id") * 7).as("text"))
-      Dedup.dedupIncremental(docs,
-          exactCopies.unionByName(nearDups).unionByName(fresh),
-          "doc_id", "text", threshold = 0.6, shingleN = 2, k = 16, bands = 4)
-        .select(col("doc_id"))
-    }),
-
-    // Index-path incremental dedup: persist the signature/band index over
-    // the existing corpus ONCE, then answer q90's exact probe THROUGH it —
-    // same oracle, so any index-path divergence (combined bucket caps,
-    // partition pruning, stored shingles) breaks the hash. The probe never
-    // reads existing text: it is not even in the index.
-    "q93_dedup_index" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val o = docs.agg(coalesce(max(col("doc_id")), lit(0L))).head().getLong(0)
-      val exactCopies = docs.filter(col("doc_id") % 11 === 0)
-        .select((col("doc_id") + lit(o + 1)).as("doc_id"), col("text"))
-      val nearDups = docs.filter(col("doc_id") % 25 === 0)
-        .select((col("doc_id") + lit(2 * o + 2)).as("doc_id"),
-          regexp_replace(col("text"), "^\\S+\\s*", "").as("text"))
-      val fresh = docs.filter(col("doc_id") % 17 === 0)
-        .select((col("doc_id") + lit(3 * o + 3)).as("doc_id"),
-          format_string("fresh alpha %d beta %d gamma delta epsilon",
-            col("doc_id"), col("doc_id") * 7).as("text"))
-      val idx = scratchDir("graft_didx")
-        .resolve("idx").toString
-      // 16 buckets at gate scale (same rationale as q79's text index)
-      Dedup.writeSignatureIndex(docs, "doc_id", "text", idx,
-        shingleN = 2, k = 16, bands = 4, nBuckets = 16)
-      Dedup.dedupIncrementalIndexed(
-          exactCopies.unionByName(nearDups).unionByName(fresh), idx,
-          "doc_id", "text", threshold = 0.6)
-        .select(col("doc_id"))
-    }),
-
-    // Rolling-index incremental dedup: probe wave 1 through the persisted
-    // index, APPEND its survivors (appendToSignatureIndex), then probe a
-    // second wave whose dups target the APPENDED docs — exact copies and
-    // first-word-stripped near-dups of wave-1's fresh survivors (droppable
-    // only because the append made the index the corpus' rolling identity)
-    // plus genuinely new docs (kept). Output = wave-2 survivors only.
-    "q96_dedup_rolling" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val o = docs.agg(coalesce(max(col("doc_id")), lit(0L))).head().getLong(0)
-      def freshText(idc: org.apache.spark.sql.Column) = format_string(
-        "fresh alpha %d beta %d gamma delta epsilon", idc, idc * 7)
-      val wave1 = docs.filter(col("doc_id") % 11 === 0)
-        .select((col("doc_id") + lit(o + 1)).as("doc_id"), col("text"))
-        .unionByName(docs.filter(col("doc_id") % 25 === 0)
-          .select((col("doc_id") + lit(2 * o + 2)).as("doc_id"),
-            regexp_replace(col("text"), "^\\S+\\s*", "").as("text")))
-        .unionByName(docs.filter(col("doc_id") % 17 === 0)
-          .select((col("doc_id") + lit(3 * o + 3)).as("doc_id"),
-            freshText(col("doc_id")).as("text")))
-      val wave2 = docs.filter(col("doc_id") % 17 === 0)
-        .select((col("doc_id") + lit(4 * o + 4)).as("doc_id"),
-          freshText(col("doc_id")).as("text"))
-        .unionByName(docs.filter(col("doc_id") % 17 === 0)
-          .select((col("doc_id") + lit(5 * o + 5)).as("doc_id"),
-            regexp_replace(freshText(col("doc_id")), "^\\S+\\s*", "").as("text")))
-        .unionByName(docs.filter(col("doc_id") % 19 === 0)
-          .select((col("doc_id") + lit(6 * o + 6)).as("doc_id"),
-            format_string("second wave zeta %d eta %d theta iota kappa",
-              col("doc_id"), col("doc_id") * 3).as("text")))
-      val idx = scratchDir("graft_ridx")
-        .resolve("idx").toString
-      Dedup.writeSignatureIndex(docs, "doc_id", "text", idx,
-        shingleN = 2, k = 16, bands = 4, nBuckets = 16)
-      val surv1 = Dedup.dedupIncrementalIndexed(wave1, idx, "doc_id", "text",
-        threshold = 0.6)
-      Dedup.appendToSignatureIndex(surv1, "doc_id", "text", idx)
-      Dedup.dedupIncrementalIndexed(wave2, idx, "doc_id", "text",
-          threshold = 0.6)
-        .select(col("doc_id"))
-    }),
-
-    // Index-MAINTENANCE lifecycle: build → probe wave 1 → append its
-    // survivors → COMPACT → REMOVE the %31 base docs (plus one id that
-    // was never indexed — the actually-present accounting path) → probe
-    // wave 2. Wave 2 plants q96's groups PLUS exact copies of the removed
-    // docs, which must now SURVIVE (removal strips dedup identity) —
-    // their presence in the hash-matched output is the takedown
-    // assertion; any compaction corruption diverges the same hash.
-    "q107_dedup_maintenance" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val o = docs.agg(coalesce(max(col("doc_id")), lit(0L))).head().getLong(0)
-      def freshText(idc: org.apache.spark.sql.Column) = format_string(
-        "fresh alpha %d beta %d gamma delta epsilon", idc, idc * 7)
-      val wave1 = docs.filter(col("doc_id") % 11 === 0)
-        .select((col("doc_id") + lit(o + 1)).as("doc_id"), col("text"))
-        .unionByName(docs.filter(col("doc_id") % 25 === 0)
-          .select((col("doc_id") + lit(2 * o + 2)).as("doc_id"),
-            regexp_replace(col("text"), "^\\S+\\s*", "").as("text")))
-        .unionByName(docs.filter(col("doc_id") % 17 === 0)
-          .select((col("doc_id") + lit(3 * o + 3)).as("doc_id"),
-            freshText(col("doc_id")).as("text")))
-      val wave2 = docs.filter(col("doc_id") % 17 === 0)
-        .select((col("doc_id") + lit(4 * o + 4)).as("doc_id"),
-          freshText(col("doc_id")).as("text"))
-        .unionByName(docs.filter(col("doc_id") % 17 === 0)
-          .select((col("doc_id") + lit(5 * o + 5)).as("doc_id"),
-            regexp_replace(freshText(col("doc_id")), "^\\S+\\s*", "").as("text")))
-        .unionByName(docs.filter(col("doc_id") % 19 === 0)
-          .select((col("doc_id") + lit(6 * o + 6)).as("doc_id"),
-            format_string("second wave zeta %d eta %d theta iota kappa",
-              col("doc_id"), col("doc_id") * 3).as("text")))
-        .unionByName(docs.filter(col("doc_id") % 31 === 0)
-          .select((col("doc_id") + lit(7 * o + 7)).as("doc_id"), col("text")))
-      val idx = scratchDir("graft_midx").resolve("idx").toString
-      Dedup.writeSignatureIndex(docs, "doc_id", "text", idx,
-        shingleN = 2, k = 16, bands = 4, nBuckets = 16)
-      val surv1 = Dedup.dedupIncrementalIndexed(wave1, idx, "doc_id", "text",
-        threshold = 0.6)
-      Dedup.appendToSignatureIndex(surv1, "doc_id", "text", idx)
-      Dedup.compactSignatureIndex(s, idx)
-      Dedup.removeFromSignatureIndex(s, idx,
-        docs.filter(col("doc_id") % 31 === 0).select(col("doc_id"))
-          .unionByName(s.range(1).select((lit(100 * o + 100)).as("doc_id"))),
-        "doc_id")
-      Dedup.dedupIncrementalIndexed(wave2, idx, "doc_id", "text",
-          threshold = 0.6)
-        .select(col("doc_id"))
-    }),
-
-    // INDEXED hybrid retrieval — the full serving composition: BM25
-    // through the persisted inverted text index (q79 machinery) fused by
-    // RRF with ANN through the persisted IVF-PQ index (q106 machinery).
-    // Both legs are partition-pruned index probes; neither touches the
-    // raw corpus at query time. Oracle: q75's BM25 ranks ⊕ q105's ADC
-    // ranks through the same reciprocal-rank fusion as q100.
-    "q109_indexed_hybrid" -> ((s, dir) => {
-      import graft.operators.{Similarity, TextIndex}
-      val tix = scratchDir("graft_hytix").resolve("idx").toString
-      TextIndex.write(t(s, dir, "documents"), "doc_id", "text", tix,
-        nBuckets = 16)
-      val bm = TextIndex.search(s, tix, Seq("spark", "query", "join"),
-          k = 1000000)
-        .select(col("doc_id"), round(col("bm25"), 6).as("score"))
-      val textRun = Similarity.rankByScore(bm, "doc_id", "score", topN = 50)
-      val emb = t(s, dir, "embeddings")
-      val qv = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head()
-        .getSeq[Double](0)
-      val pq = scratchDir("graft_hypq").resolve("idx").toString
-      Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", pq,
-        nLists = 16, m = 8, nCodes = 16)
-      // ADC ranks ASCENDING: negate the rounded distance so the shared
-      // rank-desc machinery orders it (ties still break on smaller id)
-      val ann = Similarity.ivfPqTopKIndexed(s, pq, "vec_id", qv,
-          k = 50, nProbe = 4)
-        .select(col("vec_id").as("doc_id"),
-          (-round(col("adc"), 6)).as("score"))
-      val vecRun = Similarity.rankByScore(ann, "doc_id", "score", topN = 50)
-      Similarity.rrfFuse(Seq(textRun, vecRun), "doc_id", "rank",
-          kRrf = 60, topN = 20)
-        .select(col("doc_id"), round(col("rrf"), 6).as("rrf"),
-          col("n_systems"))
-    }),
-
-    // Survivor-POLICY transitive dedup: planted near-dups are LONGER
-    // than their originals (five tokens appended), so keep-best-by-token-
-    // count must flip survivorship to the planted copy wherever LSH finds
-    // the pair — the opposite answer from every min-id path. Oracle: the
-    // shared machinery's verified pairs + recursive-CTE connected
-    // components + per-component argmax on (token count, −id).
-    "q102_dedup_keep_best" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val o = docs.agg(coalesce(max(col("doc_id")), lit(0L))).head().getLong(0)
-      val planted = docs
-        .filter(col("doc_id") % 40 === 0 && col("text").isNotNull)
-        .select((col("doc_id") + lit(o + 1)).as("doc_id"),
-          concat(col("text"), lit(" zeta eta theta iota kappa")).as("text"))
-      val all = docs.unionByName(planted)
-        .withColumn("score", TextFns.tokenCount(col("text")).cast("double"))
-      Dedup.dedupCorpusTransitiveBy(all, "doc_id", "text", "score",
-          threshold = 0.6, shingleN = 2, k = 16, bands = 4)
-        .select(col("doc_id"))
-    }),
-
-    // Product-quantization ANN: hash-donor codebooks (the q62 selection
-    // formula), 8×8-dim subspace encode, asymmetric-distance top-10 for
-    // the vec_id=0 query. The oracle re-derives donor choice, per-
-    // subspace argmin codes and the ADC sum — any drift in encode or
-    // lookup shifts a code and breaks the hash.
-    "q104_pq_adc" -> ((s, dir) => {
-      import graft.operators.Similarity
-      val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head()
-        .getSeq[Double](0)
-      Similarity.pqTopK(emb, "vec_id", "embedding", q, k = 10,
-          m = 8, nCodes = 16)
-        .select(col("vec_id"), round(col("adc"), 6).as("adc"))
-    }),
-
-    // IVF-PQ combined serving shape: coarse hash-centroid lists prune to
-    // nProbe=4 of 16, PQ codes rank the survivors by asymmetric distance
-    // — FAISS's IVFPQ re-expressed over the q62 + q104 oracle machinery.
-    "q105_ivfpq" -> ((s, dir) => {
-      import graft.operators.Similarity
-      val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head()
-        .getSeq[Double](0)
-      Similarity.ivfPqTopK(emb, "vec_id", "embedding", q, k = 10,
-          nLists = 16, nProbe = 4, m = 8, nCodes = 16)
-        .select(col("vec_id"), round(col("adc"), 6).as("adc"))
-    }),
-
-    // PERSISTED IVF-PQ: build the partitioned code index (codes/ keyed by
-    // ivf_list, codebooks in the sidecar), then answer q105's query
-    // THROUGH it — same oracle, so any index-path divergence (sidecar
-    // round-trip, partition pruning, code layout) breaks the hash. The
-    // probe scan never touches the raw embeddings.
-    "q106_ivfpq_index" -> ((s, dir) => {
-      import graft.operators.Similarity
-      val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head()
-        .getSeq[Double](0)
-      val idx = scratchDir("graft_pqidx").resolve("idx").toString
-      Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", idx,
-        nLists = 16, m = 8, nCodes = 16)
-      Similarity.ivfPqTopKIndexed(s, idx, "vec_id", q, k = 10, nProbe = 4)
-        .select(col("vec_id"), round(col("adc"), 6).as("adc"))
-    }),
-
-    // TWO-STAGE refined probe (FAISS refine / IVFPQR, Jégou et al. 2011
-    // §V): ADC shortlists k·refine=40 candidates through the persisted
-    // index, then ONLY those 40 are re-scored EXACTLY against the raw
-    // vector relation — quantization error moves recall, never the
-    // returned distances. The oracle reruns q106's ADC CTEs with the
-    // wider limit, then re-scores the shortlist in exact arithmetic.
-    "q128_ivfpq_refined" -> ((s, dir) => {
-      import graft.operators.Similarity
-      val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head()
-        .getSeq[Double](0)
-      val idx = scratchDir("graft_pqrefine").resolve("idx").toString
-      Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", idx,
-        nLists = 16, m = 8, nCodes = 16)
-      Similarity.ivfPqTopKRefined(s, idx, "vec_id", emb, "embedding", q,
-          k = 10, nProbe = 4, refine = 4)
-        .select(col("vec_id"), round(col("dist"), 6).as("dist"))
-    }),
-
-    // Per-list occupancy of the persisted IVF-PQ index — the HOT-LIST
-    // detector (feeds knnGraph's maxListSize and the "raise nLists?"
-    // maintenance decision). Pure partition metadata: the oracle
-    // recomputes the coarse assignment and groups by winning centroid.
-    "q129_ivfpq_list_stats" -> ((s, dir) => {
-      import graft.operators.Similarity
-      val emb = t(s, dir, "embeddings")
-      val idx = scratchDir("graft_pqlstats").resolve("idx").toString
-      Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", idx,
-        nLists = 16, m = 8, nCodes = 16)
-      Similarity.ivfPqListStats(s, idx)
-    }),
-
-    // q116's kNN graph with the hot-list cap BINDING (maxListSize=20 <
-    // the ~31-vector average list): candidate visibility inside an
-    // oversized list drops to its 20 smallest-Knuth-id-hash members —
-    // the deterministic, SQL-reproducible sampler — while every vector
-    // still probes its lists and keeps k neighbors. The oracle replays
-    // the cap as a per-list QUALIFY on the same hash, proving the
-    // bounded-recall trade is exactly specified, not approximate.
-    "q130_knn_graph_capped" -> ((s, dir) => {
-      import graft.operators.Similarity
-      Similarity.knnGraph(t(s, dir, "embeddings"), "vec_id", "embedding",
-          k = 3, nLists = 16, nProbe = 4, maxListSize = 20)
-        .select(col("id1"), col("id2"), round(col("cos"), 4).as("cos"))
-    }),
-
-    // Temperature-scaled domain mixing (p_d ∝ n_d^τ, the mT5/XLM-R
-    // resampling step): per-source budgets derived from the corpus' own
-    // token masses at τ=0.5, cut by the same sharded prefix sum as q82.
-    // τ=0.5 routes through IEEE-exact sqrt and the normalizer folds in
-    // source order, so DuckDB reproduces every budget bit-for-bit.
-    "q115_temperature_mix" -> ((s, dir) => {
-      import graft.operators.Curation
-      val docs = t(s, dir, "documents")
-        .filter(col("text").isNotNull && trim(col("text")) =!= "")
-        .select(col("doc_id"), col("source"),
-          TextFns.tokenCount(col("text")).cast("long").as("toks"))
-      Curation.temperatureMix(docs, "doc_id", "toks", "source",
-        totalBudget = 50000L, tau = 0.5)
-    }),
-
-    // kNN GRAPH over the embedding corpus: IVF-restricted candidate
-    // generation (list-keyed join, never all-pairs), per-vector top-3 by
-    // cosine. Centroids are the SQL-reproducible hash donors, so the
-    // whole graph — probe lists, assignments, edges — has a full oracle.
-    "q116_knn_graph" -> ((s, dir) => {
-      import graft.operators.Similarity
-      Similarity.knnGraph(t(s, dir, "embeddings"), "vec_id", "embedding",
-          k = 3, nLists = 16, nProbe = 4)
-        .select(col("id1"), col("id2"), round(col("cos"), 4).as("cos"))
-    }),
-
-    // SPAN-level decontamination: clip only the leaked benchmark passage
-    // (merged gaps-and-islands over benchmark-matching 3-gram positions),
-    // keep the rest of the document — q69 flags, q124 repairs. Benchmark
-    // docs themselves clip to empty (their whole text matches).
-    "q124_span_decontam" -> ((s, dir) => {
-      import graft.operators.Curation
-      val docs = t(s, dir, "documents")
-      val bench = docs.filter(col("doc_id") % 97 === 0).select(col("text"))
-      Curation.clipContaminatedSpans(docs, "doc_id", "text", bench,
-        "text", n = 3)
-    }),
-
-    // BATCHED indexed hybrid retrieval — the full serving stack under a
-    // query BATCH: batched BM25 (q122 machinery) ⊕ batched ADC probes
-    // (q119 machinery), fused per query by RRF; every window partitions
-    // by query. Neither leg touches the raw corpus at query time.
-    "q123_hybrid_batch" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      import graft.operators.{Similarity, TextIndex}
-      val tix = scratchDir("graft_hbt").resolve("idx").toString
-      TextIndex.write(t(s, dir, "documents"), "doc_id", "text", tix,
-        nBuckets = 16)
-      val bm = TextIndex.searchBatch(s, tix, Seq(
-          0L -> Seq("spark", "query", "join"), 1L -> Seq("data", "table")),
-          k = 1000000)
-        .select(col("query_id"), col("doc_id"),
-          round(col("bm25"), 6).as("score"))
-      val wT = Window.partitionBy(col("query_id"))
-        .orderBy(col("score").desc, col("doc_id").asc)
-      val textRun = bm.withColumn("r", row_number().over(wT))
-        .filter(col("r") <= 50).select(col("query_id"), col("doc_id"), col("r"))
-      val emb = t(s, dir, "embeddings")
-      val pq = scratchDir("graft_hbp").resolve("idx").toString
-      Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", pq,
-        nLists = 16, m = 8, nCodes = 16)
-      val qs = emb.filter(col("vec_id").isin(0L, 1L))
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      val ann = Similarity.ivfPqTopKIndexedBatch(s, pq, "vec_id", qs,
-          "query_id", "embedding", k = 50, nProbe = 4)
-        .select(col("query_id"), col("vec_id").as("doc_id"),
-          round(col("adc"), 6).as("adc"))
-      val wA = Window.partitionBy(col("query_id"))
-        .orderBy(col("adc").asc, col("doc_id").asc)
-      val vecRun = ann.withColumn("r", row_number().over(wA))
-        .select(col("query_id"), col("doc_id"), col("r"))
-      val wF = Window.partitionBy(col("query_id"))
-        .orderBy(col("__raw").desc, col("doc_id").asc)
-      textRun.unionByName(vecRun)
-        .groupBy(col("query_id"), col("doc_id"))
-        .agg(sum(lit(1.0) / (col("r") + lit(60))).as("__raw"),
-          count(lit(1)).as("n_systems"))
-        .withColumn("__fr", row_number().over(wF))
-        .filter(col("__fr") <= 20)
-        .select(col("query_id"), col("doc_id"),
-          round(col("__raw"), 6).as("rrf"), col("n_systems"))
-    }),
-
-    // BATCHED BM25 probe (the text-index mirror of q119): three term-set
-    // queries in one scan pruned to the union of their term buckets;
-    // per-term scores fan out through a broadcast (query, term)
-    // relation. k covers all matches so no rank-boundary float issues.
-    "q122_bm25_batch" -> ((s, dir) => {
-      import graft.operators.TextIndex
-      val path = scratchDir("graft_tixb").resolve("idx").toString
-      TextIndex.write(t(s, dir, "documents"), "doc_id", "text", path,
-        nBuckets = 16)
-      TextIndex.searchBatch(s, path, Seq(
-          0L -> Seq("spark", "query", "join"),
-          1L -> Seq("data", "table"),
-          2L -> Seq("the")), k = 1000000)
-        .select(col("query_id"), col("doc_id"),
-          round(col("bm25"), 6).as("bm25"), col("n_terms"))
-    }),
-
-    // Balanced-PQ (OPQ-lite): dims dealt to subspaces by descending
-    // RANGE (max − min: order-independent, so the permutation is
-    // bit-exact cross-engine), then the standard PQ donor/code/ADC
-    // machinery over the permuted vectors.
-    "q121_pq_balanced" -> ((s, dir) => {
-      import graft.operators.Similarity
-      val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head()
-        .getSeq[Double](0)
-      Similarity.pqTopKBalanced(emb, "vec_id", "embedding", q, k = 10,
-          m = 8, nCodes = 16)
-        .select(col("vec_id"), round(col("adc"), 6).as("adc"))
-    }),
-
-    // SemDeDup (cluster-granularity semantic dedup): q117's clusters,
-    // each keeping its smallest member id — prunes paraphrase-level
-    // redundancy whole-document MinHash misses. Oracle = q117's CC CTE
-    // + a per-cluster QUALIFY cut.
-    "q120_semdedup" -> ((s, dir) => {
-      import graft.operators.Similarity
-      Similarity.semDedup(t(s, dir, "embeddings"), "vec_id", "embedding",
-        k = 3, minCos = 0.42, keepPerCluster = 1, nLists = 16, nProbe = 4)
-    }),
-
-    // SemDeDup KEEP-BEST (the published recipe keeps by score, not
-    // smallest id): q120's clusters, each keeping its highest-QUALITY
-    // member — quality here a deterministic derived score (vec_id % 7)
-    // so the oracle reproduces it and survivorship demonstrably flips
-    // vs q120 wherever a cluster's min-id member is not its best.
-    "q125_semdedup_keepbest" -> ((s, dir) => {
-      import graft.operators.Similarity
-      val vecs = t(s, dir, "embeddings")
-        .withColumn("quality", pmod(col("vec_id"), lit(7)).cast("double"))
-      Similarity.semDedup(vecs, "vec_id", "embedding",
-        k = 3, minCos = 0.42, keepPerCluster = 1, nLists = 16, nProbe = 4,
-        keepByCol = Some("quality"))
-    }),
-
-    // SemDeDup with the keep score DERIVED in-engine (the published
-    // centroid-distance policy): q120's clusters, centroid = the
-    // cluster's own mean embedding, keep the lowest-cos member. Only
-    // (vec_id, cluster) ints surface, so the cross-engine double noise
-    // in the mean/cosine never reaches the hash compare — the rank
-    // decision itself is the thing being verified.
-    "q131_semdedup_centroid" -> ((s, dir) => {
-      import graft.operators.Similarity
-      Similarity.semDedupByCentroid(t(s, dir, "embeddings"), "vec_id",
-        "embedding", k = 3, minCos = 0.42, keepPerCluster = 1,
-        nLists = 16, nProbe = 4)
-    }),
-
-    // LEAKAGE-SAFE train/val split: q117's clusters, split decided per
-    // CLUSTER through the engine-wide Knuth hash — a validation doc can
-    // never have a near-dup in train. Deterministic, seedless,
-    // re-runnable; the oracle replays the hash on the cluster label.
-    "q132_leakage_split" -> ((s, dir) => {
-      import graft.operators.Similarity
-      Similarity.leakageSafeSplit(t(s, dir, "embeddings"), "vec_id",
-        "embedding", k = 3, minCos = 0.42, valPermille = 200,
-        nLists = 16, nProbe = 4)
-    }),
-
-    // Label-stable refresh: run 1 splits a SUBSET corpus (vec_id % 7 ≠ 0
-    // pretends one seventh of the documents arrived later); run 2 splits
-    // the FULL corpus with run 1's (id, label) as prior — clusters whose
-    // returning members carry a smaller id keep their prior side instead
-    // of flipping. The oracle replays BOTH runs (two full kNN+CC
-    // recursive-CTE chains) plus the min-prior adoption and the hash on
-    // the adopted label.
-    "q136_leakage_split_stable" -> ((s, dir) => {
-      import graft.operators.Similarity
-      val emb = t(s, dir, "embeddings")
-      val prior = Similarity.leakageSafeSplit(
-          emb.filter(col("vec_id") % 7 =!= 0), "vec_id", "embedding",
-          k = 3, minCos = 0.42, valPermille = 200, nLists = 16, nProbe = 4)
-        .select(col("vec_id"), col("cluster").as("label"))
-      Similarity.leakageSafeSplitStable(emb, "vec_id", "embedding",
-        k = 3, minCos = 0.42, valPermille = 200, prior,
-        nLists = 16, nProbe = 4)
-    }),
-
-    // Diversity sampling: greedy k-center (farthest-first traversal) at
-    // k=8 over the embeddings — the coreset/eval-set selector next to the
-    // distribution-preserving hash samplers. The oracle unrolls all 8
-    // greedy stages (seed by Knuth hash, then argmax of the running
-    // min-distance with id tie-breaks), mirroring the engine's running-
-    // min update term-for-term.
-    "q137_kcenter_sample" -> ((s, dir) => {
-      import graft.operators.Similarity
-      Similarity.kCenterSample(t(s, dir, "embeddings"), "vec_id",
-          "embedding", k = 8)
-        .select(col("pick"), col("vec_id"), round(col("radius"), 6).as("radius"))
-    }),
-
-    // DSIR importance resampling (Xie et al. 2023): target = the
-    // doc_id % 17 == 0 subset, raw = the rest; hashed unigram+bigram
-    // buckets (polyHash % 1024), add-1 smoothed log-likelihood-ratio
-    // weights, Gumbel-top-32 via the Knuth-hash noise. The oracle
-    // recomputes the whole chain: features, both bucket distributions,
-    // the broadcast log-ratio relation, per-doc weights, and the rounded
-    // Gumbel ranking with the id tie-break.
-    "q138_dsir_resample" -> ((s, dir) => {
-      import graft.operators.Curation
-      val docs = t(s, dir, "documents")
-      Curation.dsirResample(docs.filter(col("doc_id") % 17 =!= 0),
-        docs.filter(col("doc_id") % 17 === 0), "doc_id", "text", k = 32)
-    }),
-
-    // HyperLogLog register table over the corpus token stream: bucket =
-    // affine-mix-100 of the poly hash mod 256, rho from the bit length
-    // of affine-mix-101 — integer arithmetic end-to-end, so the oracle
-    // reproduces every register exactly. The sketch is the mergeable
-    // distinct-cardinality profile: only ≤ 256 partially-maxed rows
-    // ever shuffle.
-    "q139_hll_registers" -> ((s, dir) => {
-      import graft.functions.{Sketches, TextFns}
-      val toks = t(s, dir, "documents")
-        .filter(col("text").isNotNull && trim(col("text")) =!= "")
-        .select(explode(TextFns.tokens(lower(col("text")))).as("term"))
-      Sketches.hllRegisters(toks, "term", p = 8)
-    }),
-
-    // HLL estimate + the exact distinct count side by side: the 2^-rho
-    // sum is dyadic-exact in IEEE double, so raw estimate, branch
-    // decision, and the 6-dp rounding all reproduce bit-for-bit in
-    // DuckDB. exact_distinct quantifies the sketch's actual error.
-    "q140_hll_estimate" -> ((s, dir) => {
-      import graft.functions.{Sketches, TextFns}
-      val toks = t(s, dir, "documents")
-        .filter(col("text").isNotNull && trim(col("text")) =!= "")
-        .select(explode(TextFns.tokens(lower(col("text")))).as("term"))
-      Sketches.hllEstimate(Sketches.hllRegisters(toks, "term", p = 8), p = 8)
-        .crossJoin(toks.agg(countDistinct(col("term")).as("exact_distinct")))
-    }),
-
-    // Count-min register table (depth 4 × width 256) over the same token
-    // stream — the mergeable per-key frequency profile (point estimates
-    // take the min over rows; one-sided error). Integer-exact oracle.
-    "q141_cms_registers" -> ((s, dir) => {
-      import graft.functions.{Sketches, TextFns}
-      val toks = t(s, dir, "documents")
-        .filter(col("text").isNotNull && trim(col("text")) =!= "")
-        .select(explode(TextFns.tokens(lower(col("text")))).as("term"))
-      Sketches.cmsRegisters(toks, "term", depth = 4, width = 256)
-        .select(col("row").as("hash_row"), col("col").as("hash_col"),
-          col("cnt"))
-    }),
-
-    // Per-group HLL: distinct tokens per `source` — the scale
-    // replacement for COUNT(DISTINCT) GROUP BY (only <= 256 register
-    // rows per group shuffle, not the (group, key) pairs). Estimate and
-    // exact side by side per group.
-    "q142_hll_by_source" -> ((s, dir) => {
-      import graft.functions.{Sketches, TextFns}
-      val toks = t(s, dir, "documents")
-        .filter(col("text").isNotNull && trim(col("text")) =!= "")
-        .select(col("source"),
-          explode(TextFns.tokens(lower(col("text")))).as("term"))
-      Sketches.hllEstimateBy(
-          Sketches.hllRegistersBy(toks, Seq("source"), "term", p = 8),
-          Seq("source"), p = 8)
-        .join(toks.groupBy(col("source"))
-          .agg(countDistinct(col("term")).as("exact_distinct")), Seq("source"))
-    }),
-
-    // CMS point estimates under the gate: probe the 5 most frequent
-    // tokens (count-desc, name-asc tie-break — deterministic in both
-    // engines) and surface estimate vs true count side by side; the
-    // oracle recomputes registers, probe cells, and the min-over-rows.
-    "q143_cms_estimate" -> ((s, dir) => {
-      import graft.functions.{Sketches, TextFns}
-      val toks = t(s, dir, "documents")
-        .filter(col("text").isNotNull && trim(col("text")) =!= "")
-        .select(explode(TextFns.tokens(lower(col("text")))).as("term"))
-      val top = toks.groupBy(col("term")).agg(count(lit(1)).as("c"))
-        .orderBy(col("c").desc, col("term").asc).limit(5)
-        .collect().map(_.getString(0)).toSeq
-      Sketches.cmsEstimate(
-          Sketches.cmsRegisters(toks, "term", depth = 4, width = 256),
-          top, depth = 4, width = 256)
-        .join(toks.groupBy(col("term").as("key"))
-          .agg(count(lit(1)).as("true_cnt")), Seq("key"))
-    }),
-
-    // HLL set overlap without a join: token vocabularies of the even-id
-    // and odd-id document halves, their union sketch (register max), and
-    // the inclusion-exclusion intersection estimate — all from two
-    // ≤ 256-row register relations.
-    "q144_hll_intersect" -> ((s, dir) => {
-      import graft.functions.{Sketches, TextFns}
-      val docs = t(s, dir, "documents")
-        .filter(col("text").isNotNull && trim(col("text")) =!= "")
-      def toks(even: Boolean) = docs
-        .filter(if (even) col("doc_id") % 2 === 0 else col("doc_id") % 2 =!= 0)
-        .select(explode(TextFns.tokens(lower(col("text")))).as("term"))
-      Sketches.hllIntersect(
-        Sketches.hllRegisters(toks(even = true), "term", p = 8),
-        Sketches.hllRegisters(toks(even = false), "term", p = 8), p = 8)
-    }),
-
-    // JL random projection 64 → 16 dims: the dimensionality-reduction
-    // front end for ANN at high dim, sharing the rpBucket hyperplane
-    // family. The oracle rebuilds the sign matrix from the LCG counter
-    // and replays the ascending-i summation term-for-term.
-    "q145_random_project" -> ((s, dir) => {
-      import graft.functions.VectorFns
-      t(s, dir, "embeddings").filter(col("embedding").isNotNull)
-        .select(col("vec_id"),
-          posexplode(VectorFns.randomProject(col("embedding"), 16))
-            .as(Seq("dim", "yy")))
-        .select(col("vec_id"), col("dim"), round(col("yy"), 6).as("y"))
-    }),
-
-    // Embedding covariance (upper triangle): one mergeable-Aggregator
-    // pass (n + Σx + ΣxxT buffer, ~16 KB per task). Compared in EXACT
-    // integers — entries quantized to the 2^20 dyadic lattice, statistic
-    // n·Σxy − Σx·Σy — so the hash is independent of partial-merge order
-    // in BOTH engines (a 6-dp rounding of the double fold flips on
-    // scheduling; r9's one red row). The double-precision form stays
-    // spec-gated against this one in EmbeddingStatsSpec.
-    "q146_embedding_covariance" -> ((s, dir) => {
-      import graft.functions.EmbeddingStats
-      EmbeddingStats.covarianceMatrixExact(
-        t(s, dir, "embeddings").filter(col("embedding").isNotNull),
-        "embedding", scaleBits = 20)
-    }),
-
-    // Per-source quality cut: keep each source's top 25% of documents by
-    // the composite quality score — rank-based (no cross-source score
-    // calibration), ties on doc_id. The SCALE form: score-frequency agg
-    // (bounded by the 6-dp lattice) → broadcast per-source threshold →
-    // map-side filter; only the single threshold-score tie set per
-    // source ever meets a window. The oracle is the percent_rank
-    // QUALIFY the output is proven bit-identical to.
-    "q147_quality_top_p" -> ((s, dir) => {
-      import graft.functions.TextFns
-      import graft.operators.Curation
-      val scored = t(s, dir, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id"), col("source"),
-          TextFns.qualityScore(col("text")).as("quality"))
-      Curation.topQualityPerGroupAtScale(scored, "source", "quality",
-        "doc_id", minPercentile = 0.75)
-    }),
-
-    // COMPOSED curation chain end-to-end: dedup (keep-best-quality,
-    // transitive CC) → benchmark decontamination → quality gate →
-    // deterministic split, with the per-stage ledger. One relation gates
-    // survivor ids, n_tokens, split labels AND the (stage, rows_in,
-    // rows_out) ledger — a cross-stage interaction (e.g. dedup survivor
-    // choice changing what decontamination sees) breaks the hash. The
-    // oracle composes the q102/q69/q147/q70 machinery.
-    "q149_curate_chain" -> ((s, dir) => {
-      import graft.pipeline.CorpusPipeline
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val bench = docs.filter(col("doc_id") % 97 === 0 &&
-        col("text").isNotNull)
-      val (curated, stats) = CorpusPipeline.curate(docs, "doc_id", "text",
-        bench, "text", decontamN = 3, minTokens = 3, maxTokens = 100000,
-        minQuality = 0.2, nearDupThreshold = 0.6, valFrac = 0.125,
-        shingleN = 2, minhashK = 16, bands = 4)
-      curated.select(lit("doc").as("kind"),
-          col("doc_id").cast("string").as("key"),
-          col("n_tokens").cast("long").as("a"),
-          when(col("split") === "val", 1L).otherwise(0L).as("b"))
-        .unionByName(stats.select(lit("stage").as("kind"),
-          col("stage").as("key"), col("rows_in").as("a"),
-          col("rows_out").as("b")))
-    }),
-
-    // BLOOM membership — the third sketch-family member: filter built
-    // from the "already ingested" id set (doc_id % 3 = 0), then EVERY
-    // doc probed against it. mBits=1024 at ~170 history keys ≈ 0.5 fill,
-    // so the probe set exercises true members (never false-negative),
-    // true negatives AND a measurable false-positive band — all gated
-    // exactly, since registers and probe bits are integer arithmetic in
-    // both engines (affine salts 300+i over the engine-wide poly hash).
-    "q150_bloom_membership" -> ((s, dir) => {
-      import graft.functions.Sketches
-      val docs = t(s, dir, "documents")
-      val hist = docs.filter(col("doc_id") % 3 === 0)
-        .select(col("doc_id").cast("string").as("k"))
-      val regs = Sketches.bloomRegisters(hist, "k", mBits = 1024, kHashes = 4)
-      val probes = docs.select(col("doc_id").cast("string").as("k"))
-      val mc = Sketches.bloomMightContain(probes, "k", regs,
-        mBits = 1024, kHashes = 4)
-      regs.select(lit("bit").as("kind"), col("bit").cast("long").as("k"),
-          lit(1L).as("v"))
-        .unionByName(mc.select(lit("probe").as("kind"),
-          col("k").cast("long").as("k"),
-          when(col("might_contain"), 1L).otherwise(0L).as("v")))
-    }),
-
-    // REAL BPE vocabulary training (Sennrich et al. 2016) — the merge
-    // table (4 steps, argmax pair by weighted count with (cnt DESC, left,
-    // right) tiebreak) plus the resulting subword vocabulary with summed
-    // frequencies. One corpus shuffle (word counts); every iteration runs
-    // on the vocabulary-sized relation. All-integer/string, so the oracle
-    // replays training exactly with 4 unrolled CTE steps.
-    "q151_bpe_train" -> ((s, dir) => {
-      import graft.functions.Bpe
-      import s.implicits._
-      val docs = t(s, dir, "documents")
-      val merges = Bpe.train(docs, "text", nMerges = 4)
-      val mdf = merges.map(m => (m.step.toLong, m.left, m.right, m.pairCount))
-        .toDF("step", "a", "b", "n")
-        .select(lit("merge").as("kind"), col("step"), col("a"), col("b"),
-          col("n"))
-      val vocab = Bpe.vocabAfter(docs, "text", merges)
-        .select(lit("sym").as("kind"), lit(4L).as("step"),
-          col("symbol").as("a"), lit("").as("b"), col("freq").as("n"))
-      mdf.unionByName(vocab)
-    }),
-
-    // MODEL-BASED QUALITY FILTERING, trained in-engine: batch perceptron
-    // over integer surface features (bias, tokens, punct chars, digits,
-    // stopword hits) against the lang=en label — the scale shape of the
-    // fastText-style classifier stage in published curation pipelines.
-    // 3 epochs; each epoch is ONE map-side-combined aggregation (5 longs
-    // to the driver). Exact integer arithmetic end to end, so weights and
-    // every per-doc decision replay bit-identically in the oracle.
-    "q152_perceptron_quality" -> ((s, dir) => {
-      import graft.operators.QualityModel
-      import s.implicits._
-      val docs = t(s, dir, "documents")
-      val f = QualityModel.docFeatures(docs, "text")
-        .withColumn("y", when(col("lang") === "en", 1L).otherwise(lit(-1L)))
-        .select((Seq("doc_id", "y") ++ QualityModel.featureCols).map(col): _*)
-        .localCheckpoint() // 3 epochs + predict share one materialization
-      val w = QualityModel.perceptronTrain(f, "y", QualityModel.featureCols,
-        epochs = 3)
-      val wdf = w.zipWithIndex.map { case (wi, j) => (j.toLong, wi) }
-        .toDF("k", "v").select(lit("w").as("kind"), col("k"), col("v"))
-      val preds = QualityModel.perceptronPredict(f, w,
-          QualityModel.featureCols)
-        .select(lit("pred").as("kind"), col("doc_id").as("k"),
-          col("pred").as("v"))
-      wdf.unionByName(preds)
-    }),
-
-    // AVERAGED perceptron (Freund & Schapire 1999, batch form): the
-    // q152 trainer plus the epoch-sum weight vector; predictions use
-    // sign(Σ_e w_e · x) — identical decisions to the average without a
-    // division, so the whole gate stays exact-integer. Both weight sets
-    // and every averaged decision are hashed.
-    "q161_perceptron_averaged" -> ((s, dir) => {
-      import graft.operators.QualityModel
-      import s.implicits._
-      val docs = t(s, dir, "documents")
-      val f = QualityModel.docFeatures(docs, "text")
-        .withColumn("y", when(col("lang") === "en", 1L).otherwise(lit(-1L)))
-        .select((Seq("doc_id", "y") ++ QualityModel.featureCols).map(col): _*)
-        .localCheckpoint()
-      val (wf, wsum) = QualityModel.perceptronTrainAveraged(f, "y",
-        QualityModel.featureCols, epochs = 3)
-      val wdf = (wf.zipWithIndex.map { case (v, j) =>
-          ("w", j.toLong, v)
-        } ++ wsum.zipWithIndex.map { case (v, j) => ("wsum", j.toLong, v) })
-        .toDF("kind", "k", "v")
-      val preds = QualityModel.perceptronPredict(f, wsum,
-          QualityModel.featureCols)
-        .select(lit("pred").as("kind"), col("doc_id").as("k"),
-          col("pred").as("v"))
-      wdf.unionByName(preds)
-    }),
-
-    // CONTENT-DEFINED CHUNKING (LBFS/FastCDC family): boundaries where a
-    // local 3-gram rolling hash divides 32, so an insertion early in a
-    // doc shifts no later chunk identity — chunk-hash dedup then catches
-    // shared tails whole-doc hashing misses. One narrow map per doc + one
-    // map-side-combined agg on the chunk hash. Integer-exact throughout.
-    "q153_cdc_chunks" -> ((s, dir) => {
-      import graft.operators.ContentChunks
-      val docs = t(s, dir, "documents")
-      val chunks = ContentChunks.cdcChunks(docs, "doc_id", "text",
-        n = 3, divisor = 32)
-      val perDoc = chunks.groupBy("doc_id").agg(count(lit(1)).as("a"))
-        .select(lit("doc").as("kind"), col("doc_id").as("k"), col("a"),
-          lit(0L).as("b"))
-      val dups = ContentChunks.cdcSharedChunks(chunks, minDocs = 2)
-        .select(lit("dup").as("kind"), col("chash").as("k"),
-          col("n_docs").as("a"), col("n_occ").as("b"))
-      perDoc.unionByName(dups)
-    }),
-
-    // WINNOWING (Schleimer et al. 2003, the MOSS fingerprint): rightmost
-    // minimum of every 8-window of 5-gram hashes — any shared substring
-    // of >= 12 tokens guarantees a shared fingerprint. Fingerprint
-    // density is bounded (~2/w per position), so the relation stays
-    // ~len/4 per doc at any scale; the shared-hash report is one
-    // map-side-combined agg.
-    "q154_winnow_fingerprints" -> ((s, dir) => {
-      import graft.operators.ContentChunks
-      val docs = t(s, dir, "documents")
-      val fps = ContentChunks.winnowFingerprints(docs, "doc_id", "text",
-        k = 5, w = 8)
-      val perDoc = fps.groupBy("doc_id").agg(count(lit(1)).as("a"))
-        .select(lit("fp").as("kind"), col("doc_id").as("k"), col("a"),
-          lit(0L).as("b"))
-      val shared = ContentChunks.winnowShared(fps, minDocs = 2)
-        .select(lit("shared").as("kind"), col("fhash").as("k"),
-          col("n_docs").as("a"), col("n_occ").as("b"))
-      perDoc.unionByName(shared)
-    }),
-
-    // STUPID-BACKOFF n-gram LM (Brants et al. 2007 — the distributed LM
-    // recipe: raw count tables, backoff at query time). LM counts from
-    // the doc_id % 3 <> 0 split; EVERY doc scored, so held-out docs
-    // exercise the bigram/unigram backoff paths. The gate is the exact
-    // integer fingerprint of the scoring join — per-doc chosen-order
-    // counts plus numerator/denominator sums — never a float logprob.
-    "q155_backoff_lm" -> ((s, dir) => {
-      import graft.functions.NgramLm
-      val docs = t(s, dir, "documents")
-      val lm = docs.filter(col("doc_id") % 3 =!= 0)
-      NgramLm.backoffDocStats(docs, lm, "doc_id", "text")
-    }),
-
-    // CCNet-shaped LM quality filter: q155's backoff stats → integer ppm
-    // trigram-hit-rate lattice → the scale-safe percentile machinery
-    // (q147's threshold-from-aggregate plan, single group) keeps the
-    // most-LM-fluent half. No float sums anywhere in the gate.
-    "q156_lm_fit_filter" -> ((s, dir) => {
-      import graft.functions.NgramLm
-      import graft.operators.Curation
-      val docs = t(s, dir, "documents")
-      val lm = docs.filter(col("doc_id") % 3 =!= 0)
-      val scored = NgramLm.lmFitScores(docs, lm, "doc_id", "text")
-      Curation.topQualityAtScale(scored, "lm_fit_ppm",
-          "doc_id", minPercentile = 0.5)
-        .select(col("doc_id"), col("lm_fit_ppm"))
-    }),
-
-    // CCNET HEAD/MIDDLE/TAIL BUCKETS (Wenzek et al. 2020): the q156 LM
-    // fluency lattice bucketed into per-source perplexity terciles by
-    // integer rank -- the step CCNet runs per language before keeping
-    // head+middle. Rank/tercile arithmetic all-integer, ties by id, so
-    // labels replay bit-for-bit under the oracle's window rank.
-    "q194_ccnet_buckets" -> ((s, dir) => {
-      import graft.functions.NgramLm
-      import graft.operators.Curation
-      val docs = t(s, dir, "documents")
-      val lm = docs.filter(col("doc_id") % 3 =!= 0)
-      val scored = NgramLm.lmFitScores(docs, lm, "doc_id", "text")
-        .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
-      Curation.ccnetBuckets(scored, "source", "lm_fit_ppm", "doc_id")
-        .select(col("doc_id"), col("source"), col("lm_fit_ppm"),
-          col("rank"), col("n"), col("bucket"))
-    }),
-
-    // TOKEN-BALANCED SHARD ASSIGNMENT: docs ranked (tokens desc, id
-    // asc), shard = (rank-1) mod 7 -- round-robin over the size-ranked
-    // stream bounds any two shards' token-total gap by the largest
-    // single doc (proof in the scaladoc), with no driver greedy loop.
-    // Per-doc assignment AND the per-shard totals sit under one hash.
-    "q195_token_shards" -> ((s, dir) => {
-      import graft.functions.TextFns
-      import graft.operators.Curation
-      val toks = t(s, dir, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id"), TextFns.tokenCount(col("text")).cast("long")
-          .as("n_tokens"))
-      val a = Curation.tokenBalancedShards(toks, "doc_id", "n_tokens", 7)
-      a.select(lit("doc").as("kind"), col("doc_id").as("k1"),
-          col("rank").as("k2"), col("shard").as("v"))
-        .unionByName(a.groupBy(col("shard")).agg(
-            sum(col("n_tokens")).as("__tot"),
-            count(lit(1)).as("__nd"))
-          .select(lit("shard").as("kind"), col("shard").as("k1"),
-            col("__nd").as("k2"), col("__tot").as("v")))
-    }),
-
-    // COMPOSED LID-BALANCED MIXTURE: the q191 hashed-n-gram LID
-    // prediction becomes the DOMAIN key for the q115 temperature mix --
-    // predict a language per doc, then resample per-language token
-    // budgets at tau = 0.5 (the mT5/XLM-R step, language labels from
-    // the model instead of metadata). Scoring lattice, argmax,
-    // sqrt-temperature budgets, and the sharded prefix-sum cut all
-    // interact under ONE hash (the q149/q189 composition pattern).
-    "q196_lid_balanced_mix" -> ((s, dir) => {
-      import graft.operators.{Curation, QualityModel}
-      import graft.functions.TextFns
-      import s.implicits._
-      val cls = Seq(("en", 5L, -1L), ("de", 11L, 0L), ("fr", 17L, 1L))
-        .toDF("lang", "p", "bias")
-      val w = s.range(0, 1000).select(col("id").as("bucket"))
-        .crossJoin(cls)
-        .select(col("bucket"), col("lang"),
-          ((col("bucket") * col("p")) % 7 - 3).as("weight"))
-      val b = cls.select(col("lang"), col("bias"))
-      val pred = QualityModel.ngramMulticlassScore(t(s, dir, "documents"),
-          "doc_id", "text", w, "bucket", "lang", "weight", b, "lang",
-          "bias", nMin = 2, nMax = 3, nBuckets = 1000)
-        .filter(col("is_pred") === 1)
-        .select(col("doc_id"), col("cls").as("lang"))
-      val toks = t(s, dir, "documents")
-        .filter(col("text").isNotNull && trim(col("text")) =!= "")
-        .select(col("doc_id"),
-          TextFns.tokenCount(col("text")).cast("long").as("toks"))
-      Curation.temperatureMix(toks.join(pred, Seq("doc_id")), "doc_id",
-        "toks", "lang", totalBudget = 30000L, tau = 0.5)
-    }),
-
-    // DOLMA JSONL ROUND-TRIP: the corpus decorated with an adversarial
-    // payload (newline, tab, quotes, backslash, BMP + astral unicode)
-    // and a nested metadata struct, written as 4 JSONL shards and read
-    // back under the explicit schema (FAILFAST, no inference pass).
-    // The oracle is the IDENTITY over parquet -- so the gate proves
-    // JSON escaping, null-field omission, and nested-struct decoding
-    // are value-exact end to end.
-    "q197_jsonl_roundtrip" -> ((s, dir) => {
-      import graft.sources.JsonlDocs
-      val base = scratchDir("graft_jsonl").resolve("docs").toString
-      val hard = t(s, dir, "documents").select(
-        concat(lit("doc-"), col("doc_id")).as("id"),
-        concat(col("text"),
-          lit("\nline\ttwo \"q\" \\ \u00fcn\u00ef\ud83d\ude00")).as("text"),
-        col("source"),
-        lit("2026-08-15").as("added"),
-        struct(col("n_chars").cast("long").as("n_chars"),
-          array(lit("en"), lit("de")).as("langs")).as("metadata"))
-      JsonlDocs.write(hard.repartition(4), base)
-      JsonlDocs.read(s, base)
-        .select(col("id"), col("text"), col("source"), col("added"),
-          col("metadata.n_chars").as("meta_n_chars"),
-          array_join(col("metadata.langs"), ",").as("meta_langs"))
-    }),
-
-    // MIXED-LANGUAGE DOCUMENT FLAG: per-LINE LID (the q191 hashed
-    // n-gram lattice scored line by line, CCNet's per-paragraph LID
-    // discipline), then per-doc dominant-language share on the pure
-    // integer lattice -- docs whose dominant language covers under 60%
-    // of lines flag as mixed. Line ids = doc_id*1000 + pos (bounded by
-    // the 10-token relining), ties to the smallest language name.
-    "q198_mixed_lang" -> ((s, dir) => {
-      import graft.operators.QualityModel
-      import s.implicits._
-      val relined = t(s, dir, "documents")
-        .filter(col("text").isNotNull && trim(col("text")) =!= "")
-        .select(col("doc_id"),
-          split(trim(lower(col("text"))), "\\s+").as("__t"))
-        .select(col("doc_id"),
-          expr("array_join(transform(sequence(0, " +
-            "cast((size(__t) - 1) / 10 as int)), " +
-            "i -> array_join(slice(__t, i * 10 + 1, 10), ' ')), '\n')")
-            .as("text"))
-      val lines = relined
-        .select(col("doc_id"), posexplode(split(col("text"), "\n")))
-        .toDF("doc_id", "pos", "line")
-        .select((col("doc_id") * 1000 + col("pos")).as("line_id"),
-          col("doc_id"), col("line").as("text"))
-      val cls = Seq(("en", 5L, -1L), ("de", 11L, 0L), ("fr", 17L, 1L))
-        .toDF("lang", "p", "bias")
-      val w = s.range(0, 1000).select(col("id").as("bucket"))
-        .crossJoin(cls)
-        .select(col("bucket"), col("lang"),
-          ((col("bucket") * col("p")) % 7 - 3).as("weight"))
-      val b = cls.select(col("lang"), col("bias"))
-      val lab = QualityModel.ngramMulticlassScore(
-          lines.select(col("line_id"), col("text")), "line_id", "text",
-          w, "bucket", "lang", "weight", b, "lang", "bias",
-          nMin = 2, nMax = 3, nBuckets = 1000)
-        .filter(col("is_pred") === 1)
-        .join(lines.select(col("line_id"), col("doc_id")), Seq("line_id"))
-        .select(col("doc_id"), col("cls").as("lang"))
-      val agg = lab.groupBy(col("doc_id"), col("lang"))
-        .agg(count(lit(1)).as("n"))
-      val wDom = Window.partitionBy(col("doc_id"))
-        .orderBy(col("n").desc, col("lang").asc)
-      val dom = agg.withColumn("__rn", row_number().over(wDom))
-        .filter(col("__rn") === 1)
-        .select(col("doc_id"), col("lang").as("dom_lang"),
-          col("n").as("dom_lines"))
-      val tot = agg.groupBy(col("doc_id"))
-        .agg(sum(col("n")).as("n_lines"))
-      tot.join(dom, Seq("doc_id"))
-        .select(col("doc_id"), col("n_lines"), col("dom_lang"),
-          col("dom_lines"),
-          expr("(dom_lines * 1000000) div n_lines").as("dom_share_ppm"),
-          when(expr("(dom_lines * 1000000) div n_lines") < 600000, 1L)
-            .otherwise(0L).as("mixed"))
-    }),
-
-    // WARC ROUND TRIP: documents rendered as deterministic HTML pages,
-    // written as 3 record-gzipped WARC shards (the CommonCrawl layout:
-    // one gzip member per record), read back through the Content-
-    // Length-authoritative parser + HTTP response parse. The oracle
-    // rebuilds every page closed-form in SQL, so the gate proves WARC
-    // framing, header lifting, status/content-type parse, and the
-    // UTF-8 body round trip value-exactly. HTML-escape of the text
-    // (& < > -> entities) rides along so the q200 extraction chain has
-    // a real decode to undo.
-    "q199_warc_roundtrip" -> ((s, dir) => {
-      import graft.sources.Warc
-      val base = scratchDir("graft_warc").resolve("crawl").toString
-      Warc.write(warcPages(t(s, dir, "documents")).repartition(3),
-        base, gzip = true)
-      Warc.read(s, base)
-        .select(col("target_uri"), col("http_status"),
-          col("http_content_type"), col("body"))
-    }),
-
-    // CRAWL EXTRACTION CHAIN: the same WARC shards scanned back, 404s
-    // dropped, and the HTML layer peeled off with the deterministic
-    // regexp chain -- title, visible text (block tags -> line breaks,
-    // entities decoded, whitespace collapsed), outlinks with canonical
-    // form (query params sorted) and host. The oracle derives every
-    // output closed-form from the page construction -- an INDEPENDENT
-    // derivation, not the same regexes replayed -- so chain bugs can't
-    // cancel.
-    "q200_html_extract" -> ((s, dir) => {
-      import graft.functions.TextFns
-      import graft.sources.Warc
-      val base = scratchDir("graft_warc2").resolve("crawl").toString
-      Warc.write(warcPages(t(s, dir, "documents")).repartition(3),
-        base, gzip = true)
-      val got = Warc.read(s, base).filter(col("http_status") === 200)
-      got.select(
-          regexp_extract(col("target_uri"), "/doc/([0-9]+)$", 1)
-            .cast("long").as("doc_id"),
-          TextFns.htmlTitle(col("body")).as("title"),
-          TextFns.htmlToText(col("body")).as("text"),
-          TextFns.htmlLinks(col("body")).as("__l"))
-        .select(col("doc_id"), col("title"), col("text"),
-          size(col("__l")).as("n_links"),
-          element_at(col("__l"), 1).as("link"),
-          TextFns.urlCanonicalize(element_at(col("__l"), 1))
-            .as("link_canon"),
-          TextFns.urlHost(element_at(col("__l"), 1)).as("link_host"))
-    }),
-
-    // CHAT-TEMPLATE RENDER + LOSS MASK: 5-turn ChatML conversations
-    // assembled from each doc's words, rendered to one template string
-    // with character-offset loss spans over the assistant contents
-    // (prompts/roles/markers are context, not target) -- the SFT
-    // assembly step between curated conversations and any tokenizer.
-    // Output = the exploded span relation plus the FULL rendered text
-    // and per-conv target mass; the oracle rebuilds text and every
-    // offset closed-form from word-length arithmetic.
-    "q207_chat_template" -> ((s, dir) => {
-      import graft.operators.Sft
-      val d = t(s, dir, "documents")
-        .select(col("doc_id").as("conv"),
-          split(trim(col("text")), " ").as("w"))
-      val turns = d.select(col("conv"), expr(
-          "explode(array(" +
-            "struct(0 AS ix, 'system' AS role, 'be helpful' AS c), " +
-            "struct(1 AS ix, 'user' AS role, " +
-            "  concat(w[0], ' ', w[1], ' ', w[2]) AS c), " +
-            "struct(2 AS ix, 'assistant' AS role, " +
-            "  concat(w[3], ' ', w[4], ' ', w[5]) AS c), " +
-            "struct(3 AS ix, 'user' AS role, " +
-            "  concat(w[6], ' ', w[7]) AS c), " +
-            "struct(4 AS ix, 'assistant' AS role, " +
-            "  concat(w[8], ' ', w[9]) AS c)))").as("t"))
-        .select(col("conv"), col("t.ix").as("ix"),
-          col("t.role").as("role"), col("t.c").as("c"))
-      val rendered = Sft.renderChatML(turns, "conv", "ix", "role", "c")
-      Sft.explodeSpans(rendered)
-        .select(col("conv"), col("span_ix"), col("s"), col("e"),
-          col("span_text"), col("text"), col("n_target_chars"))
-    }),
-
-    // TOKEN-BIN ROUND TRIP: documents tokenized to uint16 ids
-    // (closed-form word hash both engines can replay), written as the
-    // packed two-file trainer layout (.bin token stream + .idx offset
-    // table, one shard pair per partition), read back shard-parallel,
-    // and exploded to one row per token position. The oracle computes
-    // the same ids straight from `documents` -- if any byte of the
-    // binary round trip is off, the hash breaks.
-    "q208_token_bin" -> ((s, dir) => {
-      import graft.sources.TokenBin
-      val base = scratchDir("graft_tokbin").resolve("bin").toString
-      val seqs = t(s, dir, "documents").select(
-        col("doc_id").as("seq_id"),
-        expr("transform(split(trim(text), ' '), " +
-          "w -> CAST((length(w) * 257 + ascii(substring(w, 1, 1))) % " +
-          "65536 AS INT))").as("tokens"))
-      TokenBin.write(seqs.repartition(4), "seq_id", "tokens", base)
-      TokenBin.read(s, base)
-        .select(col("seq_id"),
-          posexplode(col("tokens")).as(Seq("pos", "tok")))
-    }),
-
-    // TOKEN LOSS MASK: the downstream half of q207's contract --
-    // tokenize the rendered ChatML on whitespace WITH char offsets and
-    // mark each token masked-in iff it overlaps a loss span (partial
-    // overlaps count: a token glueing content to <|im_end|> carries
-    // loss chars). One prefix-sum window per conversation, HOF exists
-    // over the per-row spans array -- no join, no re-render.
-    "q209_token_loss_mask" -> ((s, dir) => {
-      import graft.operators.Sft
-      val d = t(s, dir, "documents")
-        .select(col("doc_id").as("conv"),
-          split(trim(col("text")), " ").as("w"))
-      val turns = d.select(col("conv"), expr(
-          "explode(array(" +
-            "struct(0 AS ix, 'system' AS role, 'be helpful' AS c), " +
-            "struct(1 AS ix, 'user' AS role, " +
-            "  concat(w[0], ' ', w[1], ' ', w[2]) AS c), " +
-            "struct(2 AS ix, 'assistant' AS role, " +
-            "  concat(w[3], ' ', w[4], ' ', w[5]) AS c), " +
-            "struct(3 AS ix, 'user' AS role, " +
-            "  concat(w[6], ' ', w[7]) AS c), " +
-            "struct(4 AS ix, 'assistant' AS role, " +
-            "  concat(w[8], ' ', w[9]) AS c)))").as("t"))
-        .select(col("conv"), col("t.ix").as("ix"),
-          col("t.role").as("role"), col("t.c").as("c"))
-      Sft.tokenLossMask(Sft.renderChatML(turns, "conv", "ix", "role", "c"))
-    }),
-
-    // T5 SPAN CORRUPTION: deterministic ~10% word masking, contiguous
-    // runs collapsed to <extra_id_k> sentinels, (inputs, targets)
-    // denoising pairs assembled per document -- two doc-partitioned
-    // window passes plus one ordered collect, replayed word-for-word
-    // by the oracle's window chain.
-    "q210_span_corrupt" -> ((s, dir) => {
-      import graft.operators.TrainPrep
-      TrainPrep.spanCorrupt(t(s, dir, "documents"), "doc_id", "text")
-    }),
-
-    // EPOCH SHARDS: stride-chunk every document's token stream into
-    // fixed context windows and deal them into trainer shards in a
-    // seeded Lehmer order -- reseeding permutes the epoch without
-    // touching data, and NO global total order exists anywhere: the
-    // only windows are per-shard (trainers read shards), the chunk
-    // fan-out is a lateral explode.
-    "q211_epoch_shards" -> ((s, dir) => {
-      import graft.operators.TrainPrep
-      val seqs = t(s, dir, "documents").select(
-        col("doc_id").as("seq_id"),
-        expr("transform(split(trim(text), ' '), " +
-          "w -> CAST((length(w) * 257 + ascii(substring(w, 1, 1))) % " +
-          "65536 AS INT))").as("tokens"))
-      TrainPrep.epochShards(seqs, "seq_id", "tokens",
-        width = 32, stride = 24, nShards = 8, seed = 7L)
-    }),
-
-    // LENGTH-BUCKETED BATCHES: integer length buckets, seeded order
-    // within bucket, batches of 4, and the padding-waste bill
-    // (n_seqs*max_len - sum_len) the trainer pays per batch -- the
-    // measurement that justifies bucketed batching.
-    "q212_length_batches" -> ((s, dir) => {
-      import graft.operators.TrainPrep
-      val seqs = t(s, dir, "documents").select(col("doc_id"),
-        size(split(trim(col("text")), " ")).as("n_tok"))
-      TrainPrep.lengthBatches(seqs, "doc_id", "n_tok",
-        bucketWidth = 8, batchSize = 4, seed = 1L)
-    }),
-
-    // GPT-STYLE BLOCK PACKING: per-shard token streams (EOS after each
-    // doc) cut into fixed 64-token blocks CROSSING document
-    // boundaries; output is the block composition map (doc x block ->
-    // in-block token range + EOS flag) that boundary-reset attention
-    // masks and provenance consume. Shard-local prefix sums -- no
-    // global order anywhere; fan-out is pure arithmetic.
-    "q213_block_pack" -> ((s, dir) => {
-      import graft.operators.TrainPrep
-      val seqs = t(s, dir, "documents").select(col("doc_id"),
-        split(trim(col("text")), " ").as("toks"))
-      TrainPrep.blockPack(seqs, "doc_id", "toks",
-        blockSize = 64, nShards = 8)
-    }),
-
-    // DPO PREFERENCE PAIRS: candidates grouped 4-per-prompt, the
-    // best-scored (id tie-break) chosen vs every other -- one bounded
-    // group window, zero joins.
-    "q214_preference_pairs" -> ((s, dir) => {
-      import graft.operators.TrainPrep
-      val cands = t(s, dir, "documents").select(
-        floor(col("doc_id") / lit(4.0)).cast("long").as("prompt"),
-        col("doc_id").as("cand"),
-        size(split(trim(col("text")), " ")).as("score"))
-      TrainPrep.preferencePairs(cands, "prompt", "cand", "score")
-    }),
-
-    // FILL-IN-THE-MIDDLE: seeded half of the corpus re-laid out as
-    // <PRE> prefix <SUF> suffix <MID> middle at seeded split points;
-    // the other half verbatim -- the code-model pretraining transform,
-    // byte-exact under the oracle.
-    "q215_fim_transform" -> ((s, dir) => {
-      import graft.operators.TrainPrep
-      TrainPrep.fimTransform(t(s, dir, "documents"), "doc_id", "text")
-    }),
-
-    // CONTRASTIVE TRIPLET MINING: per anchor, the top same-label
-    // neighbor (positive) and top different-label neighbor (HARD
-    // negative) from the IVF-bucketed kNN graph -- the metric-learning
-    // training-pair assembly, never all-pairs; margins on rounded
-    // ranks mark the anchors worth training on.
-    "q216_triplet_mining" -> ((s, dir) => {
-      import graft.operators.Similarity
-      Similarity.tripletMining(t(s, dir, "embeddings"), "vec_id",
-        "embedding", "label", k = 8, nLists = 16, nProbe = 4)
-    }),
-
-    // BITEXT MINING: Artetxe-Schwenk ratio margins between two vector
-    // "languages" (label parity splits the fixture) over the IVF
-    // candidate machinery -- cosines on the shifted 4-dp integer
-    // lattice, margins as exact cross-multiplied ppm, reverse stats
-    // over the forward candidate relation. Never all-pairs.
-    "q217_bitext_mining" -> ((s, dir) => {
-      import graft.operators.Similarity
-      val vecs = t(s, dir, "embeddings")
-        .withColumn("side", pmod(col("label"), lit(2)))
-      Similarity.bitextMine(vecs, "vec_id", "embedding", "side",
-        k = 4, nLists = 16, nProbe = 4)
-    }),
-
-    // TOKEN-BUDGET WATER-FILLING: the DoReMi/Pile-style mixture solver
-    // -- 4 meta-domains (source ordinal mod 4), weights 1:2:3:4, budget
-    // 9/10 of the corpus, so the fixpoint runs MULTIPLE saturation
-    // waves (measured at the gate sf: the two heaviest-weighted
-    // domains cap in wave 1, the water level rises, d1 saturates in
-    // wave 2; with 4 domains at most 3 waves are possible, the
-    // oracle's 6 unrolled iterations are provably past any fixpoint).
-    // Driver-side exact big-integer solver over a |domains|-bounded
-    // relation; the oracle unrolls the same wave iteration in HUGEINT.
-    "q218_waterfill_mix" -> ((s, dir) => {
-      import graft.operators.TrainPrep
-      val dom = t(s, dir, "documents")
-        .select((expr("CAST(substring(source, 4) AS INT)") % 4).as("dx"),
-          size(split(trim(col("text")), " ")).cast("long").as("n"))
-        .groupBy(col("dx"))
-        .agg(sum(col("n")).as("avail"))
-        .select(concat(lit("d"), col("dx").cast("string")).as("domain"),
-          col("avail"),
-          ((col("dx") + 1).cast("long") * lit(250000L)).as("weight_ppm"))
-      val total = dom.agg(sum(col("avail"))).first.getLong(0)
-      TrainPrep.tokenWaterfill(dom, "domain", "avail", "weight_ppm",
-        budget = 9L * total / 10L)
-    }),
-
-    // RATIO-INTERLEAVED FEED ORDER: three sources mixed 3:2:1 per
-    // round, seeded-hash draw order within (source, shard), no global
-    // sort anywhere -- trainers sort their own shard by feed_key. The
-    // oracle replays the lehmer hash, the (source, shard) window rank
-    // and the round/slot/key arithmetic.
-    "q219_interleave_feed" -> ((s, dir) => {
-      import graft.operators.TrainPrep
-      TrainPrep.interleaveOrder(t(s, dir, "documents"), "doc_id",
-        "source", ratios = Seq(("src0", 3), ("src1", 2), ("src2", 1)),
-        nShards = 4, seed = 5L)
-    }),
-
-    // BEST-OF-N REJECTION SAMPLING: per-prompt winner (score, id
-    // tie-break) from 4 candidates, then only winners whose reward
-    // clears the corpus median survive -- the RFT assembly gate,
-    // composed from the map-side-combined winner agg and the
-    // scale-safe percentile machinery (no partitionless window).
-    "q220_best_of_n_gate" -> ((s, dir) => {
-      import graft.operators.{Curation, TrainPrep}
-      val cands = t(s, dir, "documents").select(
-        floor(col("doc_id") / lit(4.0)).cast("long").as("prompt"),
-        col("doc_id").as("cand"),
-        size(split(trim(col("text")), " ")).cast("long").as("score"))
-      val winners = TrainPrep.bestOfN(cands, "prompt", "cand", "score")
-      Curation.topQualityAtScale(winners, "score", "chosen_id",
-        minPercentile = 0.5)
-    }),
-
-    // FEW-SHOT EXEMPLAR ASSEMBLY: every 97th doc is a test item, every
-    // 20th an exemplar; k=7 exemplars drawn label-balanced over the 5
-    // languages (quotas 2/2/1/1/1 by label order), seeded PER TEST
-    // ITEM, self-exemplars excluded (ids divisible by both 97 and 20
-    // exercise the exclusion). Broadcast pool fan-out -- the standard
-    // eval-harness shape.
-    "q221_few_shot" -> ((s, dir) => {
-      import graft.operators.TrainPrep
-      val docs = t(s, dir, "documents")
-      val test = docs.filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id"))
-      val pool = docs.filter(col("doc_id") % 20 === 0)
-        .select(col("doc_id"), col("lang"))
-      TrainPrep.fewShot(test, "doc_id", pool, "doc_id", "lang",
-        k = 7, seed = 3L)
-    }),
-
-    // CDC CHUNK-LEVEL DEDUP RATIO: the storage/compute question a
-    // 100 TB curator asks first -- per source, how many content-defined
-    // chunks are DISTINCT, and what fraction of tokens survive
-    // chunk-hash dedup. Composes the q153 CDC chain with two map-side-
-    // combined aggregations; the oracle re-derives the chunking from
-    // the rolling-hash definition.
-    "q222_cdc_dedup_ratio" -> ((s, dir) => {
-      import graft.operators.ContentChunks
-      val docs = t(s, dir, "documents")
-      val chunks = ContentChunks.cdcChunks(docs, "doc_id", "text",
-          n = 3, divisor = 32)
-        .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
-        .select(col("source"), col("chash"),
-          (col("end") - col("start")).cast("long").as("toks"))
-      val tot = chunks.groupBy("source")
-        .agg(count(lit(1)).as("n_chunks"), sum(col("toks")).as("sum_toks"))
-      val uniq = chunks.groupBy(col("source"), col("chash"))
-        .agg(min(col("toks")).as("toks"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_unique"), sum(col("toks")).as("uniq_toks"))
-      tot.join(uniq, Seq("source"))
-        .withColumn("dedup_ppm",
-          floor(col("uniq_toks").cast("double") * 1000000 / col("sum_toks"))
-            .cast("long"))
-    }),
-
-    // RECRAWL SCHEDULING: observation histories with three planted
-    // change behaviors (frozen / alternating / every-5th), change rate
-    // by integer cross-multiplication over consecutive-fetch
-    // fingerprint transitions, hot/warm/cold tiers driving the next
-    // visit -- the fetch-budget policy layer over q202's crawl delta.
-    "q223_recrawl_schedule" -> ((s, dir) => {
-      import graft.operators.Crawl
-      val k = floor(col("doc_id") / lit(100.0)).cast("long")
-      val g = (col("doc_id") % 100) % 3
-      val obs = t(s, dir, "documents").select(
-        concat(lit("u"), (col("doc_id") % 100).cast("string")).as("url"),
-        col("doc_id").cast("long").as("ts"),
-        when(g === 0, lit(0L))
-          .when(g === 1, pmod(k, lit(2L)))
-          .otherwise(when(pmod(k, lit(5L)) === 0, lit(1L))
-            .otherwise(lit(0L))).as("fp"))
-      Crawl.recrawlSchedule(obs, "url", "ts", "fp", hotPct = 60,
-        warmPct = 20, hotEvery = 100L, warmEvery = 1000L,
-        coldEvery = 10000L)
-    }),
-
-    // UNIGRAM-LM TOKENIZER, VITERBI STEP (Kudo 2018 / SentencePiece):
-    // seed pieces counted over the DISTINCT-WORD relation, costs on
-    // the K - floor(log2 count) integer lattice, per-word Viterbi with
-    // the longest-piece tie-break. The oracle re-runs the DP as a
-    // recursive CTE carrying the cost/backpointer lists -- two
-    // independent implementations of the same exact program.
-    "q224_unigram_viterbi" -> ((s, dir) => {
-      import graft.operators.UnigramTok
-      val words = UnigramTok.wordCounts(t(s, dir, "documents"), "text")
-      val vocab = UnigramTok.seedVocab(words, maxPieceLen = 4,
-        minCount = 3)
-      UnigramTok.viterbiSegments(words, vocab, maxPieceLen = 4)
-    }),
-
-    // UNIGRAM-LM TOKENIZER, EM RE-ESTIMATION: piece counts over the
-    // q224 Viterbi segmentations weighted by word frequency, new costs
-    // on the same lattice -- one full EM round, gated end-to-end.
-    "q225_unigram_em" -> ((s, dir) => {
-      import graft.operators.UnigramTok
-      val words = UnigramTok.wordCounts(t(s, dir, "documents"), "text")
-      val vocab = UnigramTok.seedVocab(words, maxPieceLen = 4,
-        minCount = 3)
-      UnigramTok.emPieceCounts(
-        UnigramTok.viterbiSegments(words, vocab, maxPieceLen = 4))
-    }),
-
-    // GALE-CHURCH SENTENCE ALIGNMENT: docs split into 3-word
-    // "sentences"; the B side is identical except docs = 0 (mod 5)
-    // merge sentences 1 and 2 into one (length l1+l2+1, the joining
-    // space) -- so the optimal alignment is PROVABLY all-1:1 plus one
-    // 2:1 bead of cost 240 at position 1 (any competing path pays a
-    // type penalty >= 230 PLUS a length mismatch of >= one full
-    // sentence). The oracle derives the expected beads closed-form
-    // from the same word arithmetic, never touching the DP.
-    "q226_sentence_align" -> ((s, dir) => {
-      import graft.operators.SentAlign
-      val w = split(trim(col("text")), " ")
-      val ng = floor(size(w) / lit(3)).cast("int")
-      val lensA = transform(sequence(lit(0), ng - 1),
-        g => length(array_join(slice(w, g * lit(3) + lit(1), lit(3)), " "))
-          .cast("long"))
-      val merge = col("doc_id") % 5 === 0 && ng >= 3
-      val lensB = when(merge, concat(
-          slice(lensA, 1, 1),
-          array(element_at(lensA, 2) + element_at(lensA, 3) + 1L),
-          slice(lensA, lit(4), size(lensA))))
-        .otherwise(lensA)
-      val base = t(s, dir, "documents").filter(ng >= 1)
-        .select(col("doc_id"), lensA.as("la"), lensB.as("lb"))
-      val aSide = base.select(col("doc_id"),
-        posexplode(col("la")).as(Seq("ix", "len")))
-      val bSide = base.select(col("doc_id"),
-        posexplode(col("lb")).as(Seq("ix", "len")))
-      SentAlign.galeChurch(aSide, bSide, "doc_id", "ix", "len")
-    }),
-
-    // SQUAD-STYLE EM + TOKEN F1 (Rajpurkar et al. 2016 official scorer
-    // semantics): normalization (lowercase, punct -> space, article
-    // removal) then exact match and multiset-token F1 on a ppm
-    // lattice. Three planted prediction behaviors: case/punct-mangled
-    // exact answers, overlapping slices, disjoint slices. ROW-LOCAL
-    // higher-order functions -- no explode, no join, no shuffle.
-    "q227_eval_em_f1" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      val w = split(trim(col("text")), " ")
-      val ref = concat(lit("The "),
-        array_join(slice(w, lit(1), lit(8)), " "), lit("."))
-      val pred = when(col("doc_id") % 3 === 0,
-          concat(upper(array_join(slice(w, lit(1), lit(8)), " ")),
-            lit("!")))
-        .when(col("doc_id") % 3 === 1,
-          array_join(slice(w, lit(3), lit(8)), " "))
-        .otherwise(array_join(slice(w, lit(12), lit(6)), " "))
-      EvalMetrics.emF1(
-        t(s, dir, "documents").select(col("doc_id"),
-          pred.as("pred"), ref.as("ref")),
-        "pred", "ref")
-    }),
-
-    // UNBIASED PASS@K (Chen et al. 2021): per problem of 8 samples
-    // with a deterministic ~30% solve rate, 1 - C(n-c,k)/C(n,k) as an
-    // exact integer product ratio on the ppm lattice; one map-side-
-    // combined agg + constant arithmetic.
-    "q228_pass_at_k" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      val samples = t(s, dir, "documents").select(
-        floor(col("doc_id") / lit(8.0)).cast("long").as("problem"),
-        ((col("doc_id") * 7) % 10 < 3).as("ok"))
-      EvalMetrics.passAtK(samples, "problem", "ok", k = 3)
-    }),
-
-    // UNIGRAM TOKENIZER, PRUNE + RE-SEGMENT: the full SentencePiece
-    // training round -- seed -> Viterbi -> EM -> prune (EM count >= 5,
-    // character alphabet always retained at seed cost) -> second
-    // Viterbi under the pruned vocabulary. The oracle runs BOTH DP
-    // passes as two recursive-CTE chains in one WITH RECURSIVE.
-    "q229_unigram_prune" -> ((s, dir) => {
-      import graft.operators.UnigramTok
-      val words = UnigramTok.wordCounts(t(s, dir, "documents"), "text")
-      val seed = UnigramTok.seedVocab(words, maxPieceLen = 4,
-        minCount = 3)
-      val em = UnigramTok.emPieceCounts(
-        UnigramTok.viterbiSegments(words, seed, maxPieceLen = 4))
-      val pruned = UnigramTok.pruneVocab(em, seed, minCount = 5)
-      UnigramTok.viterbiSegments(words, pruned, maxPieceLen = 4)
-    }),
-
-    // TOKENIZER CORPUS APPLICATION: the trained (q224) vocabulary
-    // applied back to the full corpus -- per document, total piece
-    // cost, piece count, and cost-per-piece on the ppm lattice. The
-    // scale shape tokenizers actually use: the corpus-linear pass is
-    // ONE explode + broadcast join against the distinct-word
-    // segmentation table; the DP never touches corpus rows.
-    "q231_unigram_apply" -> ((s, dir) => {
-      import graft.operators.UnigramTok
-      val docs = t(s, dir, "documents")
-      val words = UnigramTok.wordCounts(docs, "text")
-      val vocab = UnigramTok.seedVocab(words, maxPieceLen = 4,
-        minCount = 3)
-      val segs = UnigramTok.viterbiSegments(words, vocab, maxPieceLen = 4)
-        .select(col("word"), col("cost"), col("n_pieces"))
-      docs.select(col("doc_id"),
-          explode(split(trim(col("text")), " ")).as("word"))
-        .filter(col("word") =!= "" && length(col("word")) <= 32)
-        .join(broadcast(segs), Seq("word"))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_words"),
-          sum(col("cost")).as("total_cost"),
-          sum(col("n_pieces")).cast("long").as("n_pieces"))
-        .withColumn("cost_per_piece_ppm",
-          floor(col("total_cost").cast("double") * 1000000
-            / col("n_pieces")).cast("long"))
-    }),
-
-    // BITEXT TRAINING PAIRS: the q226 alignment joined back to the
-    // sentence TEXT -- (src_text, tgt_text) rows per bead, the actual
-    // parallel-corpus trainer feed (merged beads concatenate their
-    // consumed sentences). Per-doc bounded collects + arithmetic
-    // slices; the oracle rebuilds every pair closed-form.
-    "q232_bitext_pairs" -> ((s, dir) => {
-      import graft.operators.SentAlign
-      val w = split(trim(col("text")), " ")
-      val ng = floor(size(w) / lit(3)).cast("int")
-      val sentsA = transform(sequence(lit(0), ng - 1),
-        g => array_join(slice(w, g * lit(3) + lit(1), lit(3)), " "))
-      val merge = col("doc_id") % 5 === 0 && ng >= 3
-      val sentsB = when(merge, concat(
-          slice(sentsA, 1, 1),
-          array(concat(element_at(sentsA, 2), lit(" "),
-            element_at(sentsA, 3))),
-          slice(sentsA, lit(4), size(sentsA))))
-        .otherwise(sentsA)
-      val base = t(s, dir, "documents").filter(ng >= 1)
-        .select(col("doc_id"), sentsA.as("ta"), sentsB.as("tb"))
-        .withColumn("la", transform(col("ta"), t => length(t).cast("long")))
-        .withColumn("lb", transform(col("tb"), t => length(t).cast("long")))
-      val aSide = base.select(col("doc_id"),
-        posexplode(col("la")).as(Seq("ix", "len")))
-      val bSide = base.select(col("doc_id"),
-        posexplode(col("lb")).as(Seq("ix", "len")))
-      SentAlign.galeChurch(aSide, bSide, "doc_id", "ix", "len")
-        .join(base.select(col("doc_id"), col("ta"), col("tb")),
-          Seq("doc_id"))
-        .filter(col("n_a") > 0 && col("n_b") > 0)
-        .select(col("doc_id"), col("bead_ix"), col("bead"),
-          array_join(slice(col("ta"), col("a_from") + 1, col("n_a")), " ")
-            .as("src_text"),
-          array_join(slice(col("tb"), col("b_from") + 1, col("n_b")), " ")
-            .as("tgt_text"))
-    }),
-
-    // POLITENESS FETCH SCHEDULE: Crawl-delay parsed under the same
-    // RFC 9309 group selection as q204 (named group shadows *, max
-    // delay among binding groups, malformed ignored), then per-host
-    // fetch slots at slot*delay -- the serialization a polite crawler
-    // precomputes. The oracle derives delays closed-form from the
-    // fixture's host arithmetic, never parsing.
-    "q233_fetch_schedule" -> ((s, dir) => {
-      import graft.operators.Crawl
-      val robots = s.range(0, 10).select(
-        concat(lit("h"), col("id").cast("string"), lit(".example.org"))
-          .as("host"),
-        when(col("id") % 2 === 0, concat(
-            lit("User-agent: graftbot\nCrawl-delay: "),
-            (col("id") % 5 + 2).cast("string"),
-            lit("\nDisallow: /x\n\nUser-agent: *\nCrawl-delay: 9\n" +
-              "Disallow: /y")))
-          // fractional delay: the wild's "6.5" ceils to 7 (the
-          // conservative read), so the oracle's integer 7 still holds
-          .when(col("id") % 4 === 1,
-            lit("User-agent: *\nCrawl-delay: 6.5\nDisallow: /y"))
-          .otherwise(lit("User-agent: *\nDisallow: /z\n" +
-            "Crawl-delay: oops")).as("txt"))
-      val delays = Crawl.crawlDelays(robots, "host", "txt", "graftbot")
-      val urls = t(s, dir, "documents").select(
-        concat(lit("http://h"), (col("doc_id") % 10).cast("string"),
-          lit(".example.org/p"), col("doc_id").cast("string")).as("url"))
-      Crawl.fetchSchedule(urls, "url", delays, defaultDelay = 5L)
-    }),
-
-    // QUALITY-FILTER CALIBRATION SWEEP: the q156 LM-fluency lattice
-    // against ten candidate thresholds at once -- documents and tokens
-    // surviving each cut, the curve a curator reads before committing
-    // a filter. One broadcast 10-row cross + map-side-combined agg.
-    "q234_filter_calibration" -> ((s, dir) => {
-      import graft.functions.NgramLm
-      val docs = t(s, dir, "documents")
-      val lm = docs.filter(col("doc_id") % 3 =!= 0)
-      val scored = NgramLm.lmFitScores(docs, lm, "doc_id", "text")
-      val withTok = scored.join(docs.select(col("doc_id"),
-        size(split(trim(col("text")), " ")).cast("long").as("n_tok")),
-        Seq("doc_id"))
-      val thresholds = s.range(0, 10)
-        .select((col("id") * 100000L).as("threshold"))
-      withTok.crossJoin(broadcast(thresholds))
-        .filter(col("lm_fit_ppm") >= col("threshold"))
-        .groupBy(col("threshold"))
-        .agg(count(lit(1)).as("n_kept"), sum(col("n_tok")).as("tok_kept"))
-    }),
-
-    // BRANCHED-CONVERSATION FLATTENING: each doc's first <= 7 words as
-    // a binary message tree (heap parent pointers), flattened to one
-    // row per root->leaf path -- the ShareGPT/message-tree to SFT-path
-    // transform. The engine walks the actual parent-pointer relation;
-    // the oracle derives paths closed-form from heap arithmetic.
-    "q235_tree_paths" -> ((s, dir) => {
-      import graft.operators.Sft
-      val w = split(trim(col("text")), " ")
-      val m = least(lit(7), size(w))
-      val nodes = t(s, dir, "documents").filter(size(w) >= 1)
-        .select(col("doc_id"),
-          posexplode(slice(w, lit(1), m)).as(Seq("k", "c")))
-        .select(col("doc_id").as("conv_id"),
-          col("k").cast("long").as("node"),
-          when(col("k") === 0, lit(null).cast("long"))
-            .otherwise(floor((col("k") - 1) / 2.0).cast("long"))
-            .as("parent"),
-          col("c").as("content"))
-      Sft.treePaths(nodes, "conv_id", "node", "parent", "content")
-    }),
-
-    // POSITIONAL PHRASE SEARCH: exact token-phrase occurrences as a
-    // row-local HOF (k equality probes per candidate start -- no
-    // postings explode, no join); docs carrying the phrase report
-    // match count and first position.
-    "q236_phrase_search" -> ((s, dir) => {
-      import graft.functions.TextFns
-      val hits = TextFns.phraseMatches(col("text"), Seq("merge", "slow"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), hits.as("hits"))
-        .filter(size(col("hits")) > 0)
-        .select(col("doc_id"), size(col("hits")).as("n_matches"),
-          element_at(col("hits"), 1).as("first_pos"))
-    }),
-
-    // N-GRAM NOVELTY: per held-out document, the fraction of its
-    // 3-grams NEVER seen in the reference corpus -- the memorization/
-    // novelty metric (the complement of the q69 decontamination
-    // overlap, reported per document on the ppm lattice). One semi-
-    // join on the gram key against a map-side-distinct reference set;
-    // scale-shaped like every other gram join here.
-    "q237_ngram_novelty" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val w = split(trim(col("text")), " ")
-      def grams(df: org.apache.spark.sql.DataFrame) = df
-        .filter(size(w) >= 3)
-        .select(col("doc_id"), explode(transform(
-          sequence(lit(1), size(w) - 2),
-          p => array_join(slice(w, p, lit(3)), " "))).as("g"))
-      val refSet = grams(docs.filter(col("doc_id") % 3 =!= 0))
-        .select(col("g")).distinct()
-      val tg = grams(docs.filter(col("doc_id") % 3 === 0))
-      val seen = tg.join(refSet, Seq("g"), "left_semi")
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_seen"))
-      tg.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
-        .join(seen, Seq("doc_id"), "left_outer")
-        .withColumn("n_seen", coalesce(col("n_seen"), lit(0L)))
-        .withColumn("novelty_ppm",
-          floor((col("n_grams") - col("n_seen")).cast("double") * 1000000
-            / col("n_grams")).cast("long"))
-    }),
-
-    // CORPUS DATASHEET: the per-source "data card" a 100 TB curator
-    // publishes -- document/token counts, language spread with a
-    // deterministic dominant-language argmax, exact-duplicate ratio,
-    // and mean document length on the ppm lattice. Two map-side-
-    // combined aggregation passes, no windows, no joins beyond the
-    // |sources|-bounded assembly.
-    "q230_corpus_datasheet" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("source"), col("lang"),
-        col("doc_id"), size(split(trim(col("text")), " ")).as("n_tok"),
-        md5(col("text")).as("h"))
-      val byLang = d.groupBy(col("source"), col("lang"))
-        .agg(count(lit(1)).as("nl"))
-      val dom = byLang.groupBy(col("source"))
-        .agg(countDistinct(col("lang")).as("n_langs"),
-          max(struct(col("nl"), col("lang"))).as("__m"))
-        .select(col("source"), col("n_langs"),
-          col("__m.lang").as("dominant_lang"))
-      val base = d.groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tok")).cast("long").as("n_tokens"),
-          countDistinct(col("h")).as("n_distinct_texts"))
-        .withColumn("uniq_ppm",
-          floor(col("n_distinct_texts").cast("double") * 1000000
-            / col("n_docs")).cast("long"))
-        .withColumn("mean_tok_ppm",
-          floor(col("n_tokens").cast("double") * 1000000
-            / col("n_docs")).cast("long"))
-      base.join(dom, Seq("source"))
-    }),
-
-    // WARC -> WET PIPELINE: the full CommonCrawl production shape --
-    // raw response shards scanned, 404s dropped, visible text
-    // extracted, and re-archived as `conversion` records (WET) with
-    // WARC-Refers-To provenance back to the response record, then the
-    // WET shards read back. The oracle derives the conversion payloads
-    // closed-form from `documents`, so the gate covers BOTH archive
-    // layers plus the extraction in one hash.
-    "q206_wet_pipeline" -> ((s, dir) => {
-      import graft.functions.TextFns
-      import graft.sources.Warc
-      val base = scratchDir("graft_wet")
-      val warcDir = base.resolve("warc").toString
-      val wetDir = base.resolve("wet").toString
-      Warc.write(warcPages(t(s, dir, "documents")).repartition(3),
-        warcDir, gzip = true)
-      val texts = Warc.read(s, warcDir)
-        .filter(col("http_status") === 200)
-        .select(
-          regexp_replace(col("record_id"), "^<urn:graft:doc:",
-            "<urn:graft:wet:").as("record_id"),
-          col("target_uri"), col("warc_date"),
-          TextFns.htmlToText(col("body")).as("body"),
-          col("record_id").as("refers_to"))
-      Warc.writeConversions(texts.repartition(2), wetDir, gzip = true)
-      Warc.read(s, wetDir, types = Set("conversion"))
-        .select(col("record_id"), col("target_uri"), col("refers_to"),
-          col("body").as("text"))
-    }),
-
-    // MAIN-CONTENT EXTRACTION: the jusText/Readability rule over
-    // constructed pages -- a link-only nav div (density 900 ppm-of-
-    // percent > 300), a prose paragraph, a MIXED paragraph whose
-    // verdict depends on the doc's own word lengths (100·|anchor| vs
-    // 30·|text| integer cross-multiply -- both branches fire across
-    // the corpus), a too-short block, a link-only footer, and a decoy
-    // block inside a script. The oracle rebuilds the expected content
-    // closed-form from word arithmetic.
-    "q205_main_content" -> ((s, dir) => {
-      import graft.operators.Crawl
-      val w = split(trim(col("text")), " ")
-      val page = concat(
-        lit("<html><head><script>var nav=\"<p>fake</p>\";</script>" +
-          "<title>t</title></head><body>" +
-          "<div><a href=\"/\">Home</a> <a href=\"/about\">About</a>" +
-          "</div><p>"),
-        element_at(w, 1), lit(" "), element_at(w, 2), lit(" "),
-        element_at(w, 3), lit(" "), element_at(w, 4), lit(" "),
-        element_at(w, 5),
-        lit("</p><p>"), element_at(w, 6), lit(" <a href=\"/r\">"),
-        element_at(w, 7), lit("</a> "), element_at(w, 8), lit(" "),
-        element_at(w, 9), lit(" "), element_at(w, 10),
-        lit("</p><p>tiny</p><footer><a href=\"/tos\">Terms</a>" +
-          "</footer></body></html>"))
-      Crawl.mainContent(
-        t(s, dir, "documents").select(col("doc_id"), page.as("html")),
-        "doc_id", "html", minChars = 10, maxLinkPct = 30)
-    }),
-
-    // ROBOTS.TXT FILTER: per-host robots bodies parsed under RFC 9309
-    // group semantics (named-agent groups shadow `*`, comment strip,
-    // consecutive User-agent runs, ignored fields), then the corpus
-    // URL set filtered by longest-match with allow winning ties and
-    // REP wildcards (`*`, trailing `$`) compiled to non-foldable LIKE
-    // patterns. Even hosts carry a graftbot group (only its rules
-    // bind); odd hosts fall back to the `*` group. The oracle derives
-    // every verdict closed-form from the fixture's construction -- the
-    // parser and matcher never get to agree with themselves.
-    "q204_robots_filter" -> ((s, dir) => {
-      import graft.operators.Crawl
-      val d = t(s, dir, "documents")
-      val k = col("doc_id") % 10
-      val host = concat(lit("h"), k.cast("string"), lit(".example.org"))
-      val robots = d.filter(col("doc_id") < 10)
-        .select(host.as("host"),
-          concat(
-            lit("# synthetic robots\n"),
-            when(col("doc_id") % 2 === 0,
-                lit("User-agent: graftbot\nDisallow: /g/\n" +
-                  "Crawl-delay: 5\n"))
-              .otherwise(lit("")),
-            lit("User-agent: otherbot\nUser-agent: *\n" +
-              "Disallow: /private/\nAllow: /private/pub\n"),
-            lit("Disallow: /data*"), k.cast("string"), lit("$\n"))
-            .as("txt"))
-      val rules = Crawl.parseRobots(robots, "host", "txt", "graftbot")
-      val v = col("doc_id") % 6
-      val urls = d.select(col("doc_id"),
-        concat(lit("http://"), host,
-          when(v === 0, lit("/"))
-            .when(v === 1, concat(lit("/g/x"), col("doc_id").cast("string")))
-            .when(v === 2, lit("/private/a"))
-            .when(v === 3, lit("/private/pub1"))
-            .when(v === 4, concat(lit("/data55"), k.cast("string")))
-            .otherwise(concat(lit("/data55"), k.cast("string"), lit("/z"))))
-          .as("url"))
-      Crawl.robotsAllowed(urls, "url", rules)
-    }),
-
-    // ANCHOR-TEXT AGGREGATION: every page's <a href>anchor</a> pairs
-    // harvested (inner markup stripped), exploded, and grouped by
-    // TARGET url -- how the rest of the web describes a page, the
-    // classic off-page relevance/quality signal. The fixture wires a
-    // deterministic link graph over the corpus (two outlinks per doc,
-    // anchor text from the doc's own words, doc_id ≡ 23 mod 25 making
-    // both point at one target so n_refs > n_pages is exercised); the
-    // oracle derives targets and anchors closed-form from `documents`,
-    // independent of the extraction regexes.
-    "q203_anchor_text" -> ((s, dir) => {
-      import graft.functions.TextFns
-      val w = split(trim(col("text")), " ")
-      val page = concat(
-        lit("<html><body><a href=\"http://t"),
-        ((col("doc_id") * 3 + 7) % 50).cast("string"),
-        lit(".example.net/\">"), element_at(w, 1), lit(" "),
-        element_at(w, 2),
-        lit("</a> <a href=\"http://t"),
-        ((col("doc_id") * 5 + 11) % 50).cast("string"),
-        lit(".example.net/\"><b>"), element_at(w, 3),
-        lit("</b></a><a name=\"x\">skip</a></body></html>"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), explode(TextFns.htmlAnchors(page)).as("a"))
-        .select(col("doc_id"), col("a.href").as("target"),
-          col("a.text").as("anchor"))
-        .groupBy(col("target"))
-        .agg(count(lit(1)).as("n_refs"),
-          countDistinct(col("doc_id")).as("n_pages"),
-          array_join(array_sort(collect_set(col("anchor"))), "|")
-            .as("anchors"))
-    }),
-
-    // CRAWL SNAPSHOT DELTA: two monthly-crawl snapshots of the corpus
-    // (a slice of URLs gone, a slice new, every fifth page's content
-    // changed) diffed on the URL key with content-length fingerprints
-    // -- the incremental-ingestion primitive that shrinks a recurring
-    // 100 TB pipeline to its added+changed slice. One full-outer
-    // shuffle join, presence decided by markers (NOT fingerprint
-    // nullability -- two null-fp rows are `unchanged`).
-    "q202_crawl_delta" -> ((s, dir) => {
-      import graft.operators.Crawl
-      val d = t(s, dir, "documents")
-      val url = concat(lit("http://"), col("source"),
-        lit(".example.com/doc/"), col("doc_id").cast("string"))
-      val old = d.filter(col("doc_id") % 11 =!= 3)
-        .select(url.as("url"), length(col("text")).cast("long").as("fp"))
-      val neu = d.filter(col("doc_id") % 7 =!= 0)
-        .select(url.as("url"),
-          length(when(col("doc_id") % 5 === 0,
-              concat(col("text"), lit(" changed x")))
-            .otherwise(col("text"))).cast("long").as("fp"))
-      Crawl.crawlDelta(old, neu, "url", "fp")
-    }),
-
-    // Z-ORDER LAYOUT CLUSTERING: lineitem keyed on the Morton
-    // interleave of equi-width-bucketed (l_partkey, l_suppkey), range-
-    // partitioned + locally sorted on the key (the Delta/Iceberg
-    // OPTIMIZE ZORDER shape), then every 256th-of-curve cell reports
-    // its (x, y) ENVELOPE -- the per-file min/max a parquet scan would
-    // prune against; under Z-order each cell's span is ~1/16 of BOTH
-    // domains at once, which is the whole point. The oracle rebuilds
-    // the key bit-by-bit from the DEFINITION of Morton interleave
-    // (sum of (bit i) << 2i), not the magic-number spread the engine
-    // uses -- two independent derivations of the same curve.
-    "q201_zorder_layout" -> ((s, dir) => {
-      import graft.operators.Layout
-      val clustered = Layout.clusterByZorder(t(s, dir, "lineitem"),
-        "l_partkey", "l_suppkey", nParts = 16, bits = 8)
-      clustered
-        .groupBy(shiftright(col("__zkey"), 8).as("cell"))
-        .agg(count(lit(1)).as("n"),
-          min(col("l_partkey")).as("x_min"),
-          max(col("l_partkey")).as("x_max"),
-          min(col("l_suppkey")).as("y_min"),
-          max(col("l_suppkey")).as("y_max"))
-    }),
-
-    // GOPHER QUALITY RULES (Rae et al. 2021, Table A1, doc-level set):
-    // word-count / mean-word-length / symbol-ratio / alpha-word /
-    // stop-word / top-bigram-repetition rules, every one decided by
-    // division-free integer comparisons (3n ≤ Σlen ≤ 10n instead of a
-    // float mean, cross-multiplied ratio bounds) — an exact gate with
-    // no lattice, no rounding. The minWords bound is scaled to the
-    // fixture's doc lengths; the paper's 50 is the production default.
-    "q157_gopher_rules" -> ((s, dir) => {
-      import graft.operators.Curation
-      // minWords/minStops scaled to the synthetic fixture (the paper's
-      // 50/2 defaults would zero out r_words/r_stop on ~80-token docs
-      // drawn from a vocabulary holding only 'the' of the Gopher list);
-      // both branches of every rule fire at these settings.
-      Curation.gopherQualityFlags(t(s, dir, "documents"), "doc_id",
-        "text", minWords = 30, minStops = 1)
-    }),
-
-    // LEARNED TOKENIZER END-TO-END: q151's trained BPE table applied as
-    // the token counter (codegen'd chained replaces, unk words count 1),
-    // feeding q71's sequence packing — the "train tokenizer → count →
-    // pack" chain a pretraining data pipeline actually runs. A drift
-    // between training and application (merge order, alphabet, greedy
-    // left-to-right semantics) breaks the packing hash.
-    "q158_bpe_pack" -> ((s, dir) => {
-      import graft.functions.Bpe
-      import graft.operators.Curation
-      val docs = t(s, dir, "documents")
-      val merges = Bpe.train(docs, "text", nMerges = 4)
-      val counted = docs.filter(col("text").isNotNull)
-        .select(col("doc_id"), (col("doc_id") % 8).as("shard"),
-          Bpe.subwordCountBpe(col("text"), merges).cast("long")
-            .as("bpe_toks"))
-      val packed = Curation.packSequences(counted, "doc_id", "bpe_toks",
-        budget = 1024, shardCol = "shard")
-      Curation.packingStats(packed, "bpe_toks", budget = 1024,
-        shardCol = "shard")
-    }),
-
-    // PER-SOURCE DATA CARD: the corpus report a pipeline publishes with
-    // a dataset — docs, tokens, language spread, distinct-term HLL
-    // estimate (dyadic-exact), exact-dup doc count, and the Gopher keep
-    // count per source, composed from the round's primitives in one
-    // relation. Every column is integer or dyadic-exact.
-    "q162_corpus_report" -> ((s, dir) => {
-      import graft.functions.{Sketches, TextFns}
-      import graft.operators.Curation
-      val docs = t(s, dir, "documents")
-      val base = docs.groupBy("source").agg(
-        count(lit(1)).as("n_docs"),
-        sum(when(col("text").isNotNull,
-          TextFns.tokenCount(col("text")).cast("long")).otherwise(0L))
-          .as("n_tokens"),
-        countDistinct(col("lang")).as("n_langs"))
-      val toks = docs
-        .filter(col("text").isNotNull && trim(col("text")) =!= "")
-        .select(col("source"),
-          explode(TextFns.tokens(lower(col("text")))).as("term"))
-      val hll = Sketches.hllEstimateBy(
-          Sketches.hllRegistersBy(toks, Seq("source"), "term", p = 8),
-          Seq("source"), p = 8)
-        .select(col("source"), col("estimate").as("distinct_terms_est"))
-      val dups = docs.filter(col("text").isNotNull)
-        .select(col("source"),
-          md5(lower(regexp_replace(trim(col("text")), "\\s+", " ")))
-            .as("h"))
-        .groupBy("source", "h").agg(count(lit(1)).as("c"))
-        .groupBy("source")
-        .agg(sum(when(col("c") >= 2, col("c")).otherwise(0L))
-          .as("n_dup_docs"))
-      val keep = Curation.gopherQualityFlags(docs, "doc_id", "text",
-          minWords = 30, minStops = 1)
-        .select(col("doc_id"), col("keep"))
-        .join(docs.select("doc_id", "source"), Seq("doc_id"))
-        .groupBy("source").agg(sum(col("keep")).as("n_keep"))
-      base.join(hll, Seq("source"), "left")
-        .join(dups, Seq("source"), "left")
-        .join(keep, Seq("source"), "left")
-        .select(col("source"), col("n_docs"), col("n_tokens"),
-          col("n_langs"), col("distinct_terms_est"),
-          coalesce(col("n_dup_docs"), lit(0L)).as("n_dup_docs"),
-          coalesce(col("n_keep"), lit(0L)).as("n_keep"))
-    }),
-
-    // BOUNDED CDC (the real FastCDC rule): first divisor hit in
-    // [s+8, s+64] cuts, else a forced cut at s+64 — bounds change which
-    // boundaries exist, so the oracle walks the same sequential
-    // recurrence (recursive CTE over a precomputed next-hit relation;
-    // the recursion itself is join-only). Every span and chunk hash is
-    // gated.
-    "q159_cdc_bounded" -> ((s, dir) => {
-      import graft.operators.ContentChunks
-      ContentChunks.cdcChunksBounded(t(s, dir, "documents"), "doc_id",
-        "text", n = 3, divisor = 32, minLen = 8, maxLen = 64)
-        .select(col("doc_id"), col("start"), col("end"), col("chash"))
-    }),
-
-    // THE FULL GOPHER REPETITION BATTERY (Rae et al. 2021, Table A1):
-    // top-{2,3,4}-gram char fractions <= {20,18,16}% and within-doc
-    // duplicated-{5..10}-gram COVERAGE fractions <= {15..10}% — overlap
-    // merged gaps-and-islands so chars never double-count, thresholds
-    // compared by integer cross-multiplication. Nine flags + keep.
-    "q160_gopher_repetition" -> ((s, dir) => {
-      import graft.operators.Curation
-      Curation.gopherRepetitionFlags(t(s, dir, "documents"), "doc_id",
-        "text")
-    }),
-
-    // PERSISTED OPQ-ROTATED IVF-PQ: q106's pipeline with a rotation in
-    // the sidecar — build rotates once, the probe rotates the query on
-    // the way in, codes/codebooks live entirely in rotated space. The
-    // rotation here is the dyadic-exact Hadamard block (entries ±0.5) so
-    // the oracle replays the whole rotate→assign→encode→ADC chain
-    // bit-for-bit; the LEARNED rotation (EmbeddingStats.opqTrain) rides
-    // the identical machinery and is spec-gated on its error cut.
-    "q148_opq_index" -> ((s, dir) => {
-      import graft.operators.Similarity
-      import graft.functions.EmbeddingStats
-      val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head()
-        .getSeq[Double](0)
-      val idx = scratchDir("graft_opqidx").resolve("idx").toString
-      Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", idx,
-        nLists = 16, m = 8, nCodes = 16,
-        opqRotationOpt = Some(EmbeddingStats.hadamardBlockRotation(64)))
-      Similarity.ivfPqTopKIndexed(s, idx, "vec_id", q, k = 10, nProbe = 4)
-        .select(col("vec_id"), round(col("adc"), 6).as("adc"))
-    }),
-
-    // ANN recall@k evaluation — the loop that tunes nProbe/nLists: the
-    // q119 batched ADC probe's top-10 per query scored against the exact
-    // L2 top-10, one recall row per query. The oracle recomputes BOTH
-    // legs (q119's CTEs at k=10 + a brute-force rank) and the ratio.
-    "q133_ann_recall" -> ((s, dir) => {
-      import graft.operators.Similarity
-      val emb = t(s, dir, "embeddings")
-      val idx = scratchDir("graft_recall").resolve("idx").toString
-      Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", idx,
-        nLists = 16, m = 8, nCodes = 16)
-      val queries = emb.filter(col("vec_id").isin(0L, 1L, 2L))
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      val approx = Similarity.ivfPqTopKIndexedBatch(s, idx, "vec_id",
-        queries, "query_id", "embedding", k = 10, nProbe = 4)
-      val exact = emb
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("__v"))
-        .crossJoin(broadcast(queries.select(col("query_id"),
-          col("embedding").cast("array<double>").as("__qv"))))
-        .select(col("query_id"), col("vec_id"),
-          graft.functions.VectorFns.l2Distance(col("__v"), col("__qv")).as("__d"))
-      val exactTop = graft.operators.Ops.topKPerGroup(exact, Seq("query_id"),
-        Seq(col("__d").asc, col("vec_id").asc), 10)
-      Similarity.recallAtK(approx, exactTop, "query_id", "vec_id", 10)
-    }),
-
-    // NTv2 grid-shift under the oracle: parse the synthesized .gsb
-    // (byte layout, endianness probe, positive-west longitudes, S→N/E→W
-    // node order) and apply Grid.forward to a 10×10 lattice of points
-    // strictly inside cells; DuckDB recomputes the node values from the
-    // closed-form formula and mirrors the engine's bilinear arithmetic
-    // operation-for-operation, so both legs produce identical doubles.
-    "q134_ntv2_shift" -> ((s, dir) => {
-      val grid = graft.geo.Ntv2.parse(ntv2FixtureBytes())
-      val shift = udf { (lonDeg: Double, latDeg: Double) =>
-        grid.forward(lonDeg, latDeg).get
-      }
-      s.range(100).select(
-        col("id"),
-        // 3600.0D: a bare 3600.0 parses as DECIMAL(5,1) in Spark SQL and
-        // the decimal quotient rounds at scale 6 — enough to move the
-        // scaled-integer output by a unit vs the oracle's double division
-        expr("(162000 + (id % 10) * 330 + 75) / 3600.0D").as("lat_in"),
-        expr("-((230400 + (id div 10) * 330 + 75) / 3600.0D)").as("lon_in"))
-        .withColumn("__out", shift(col("lon_in"), col("lat_in")))
-        // scaled by 3600·1024: every output is an INTEGER number of
-        // 1/1024-arcsec units (shifts are dyadic k/1024 arcsec, inputs
-        // integer arcsec), so the comparison is exact — 6-dp rounding of
-        // the raw degrees lands on .5 ties where engine round() rules
-        // differ
-        .select(col("id"),
-          round(col("__out._1") * 3686400.0, 0).cast("long").as("lon_to"),
-          round(col("__out._2") * 3686400.0, 0).cast("long").as("lat_to"))
-    }),
-
-    // BALANCED persisted IVF-PQ: q121's dimension deal stored IN the
-    // q106 index layout — perm recorded in the sidecar, probes permute
-    // the query on the way in. Oracle = q121's perm/pv CTEs feeding
-    // q106's assignment/probe/ADC structure.
-    "q126_ivfpq_balanced_index" -> ((s, dir) => {
-      import graft.operators.Similarity
-      val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head()
-        .getSeq[Double](0)
-      val idx = scratchDir("graft_pqbalidx").resolve("idx").toString
-      Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", idx,
-        nLists = 16, m = 8, nCodes = 16, balanced = true)
-      Similarity.ivfPqTopKIndexed(s, idx, "vec_id", q, k = 10, nProbe = 4)
-        .select(col("vec_id"), round(col("adc"), 6).as("adc"))
-    }),
-
-    // BATCHED index probe: 3 queries scored in ONE scan of the union of
-    // their probed lists (per-query ADC tables broadcast together; each
-    // code row explodes into a score per query probing its list; top-k
-    // per query via a query-partitioned window).
-    "q119_ivfpq_batch_probe" -> ((s, dir) => {
-      import graft.operators.Similarity
-      val emb = t(s, dir, "embeddings")
-      val idx = scratchDir("graft_pqbatch").resolve("idx").toString
-      Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", idx,
-        nLists = 16, m = 8, nCodes = 16)
-      val qs = emb.filter(col("vec_id").isin(0L, 1L, 2L))
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      Similarity.ivfPqTopKIndexedBatch(s, idx, "vec_id", qs, "query_id",
-          "embedding", k = 5, nProbe = 4)
-        .select(col("query_id"), col("vec_id"),
-          round(col("adc"), 6).as("adc"))
-    }),
-
-    // RESIDUAL IVF-PQ (the actual FAISS IVFPQ formulation): codes span
-    // v − c(list), donors drawn from the hash ranks AFTER the centroids
-    // (disjoint prefixes), probes build one ADC table per probed list
-    // from the query residual q − c_l. Same persisted layout as q106.
-    "q118_ivfpq_residual" -> ((s, dir) => {
-      import graft.operators.Similarity
-      val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head()
-        .getSeq[Double](0)
-      val idx = scratchDir("graft_pqres").resolve("idx").toString
-      Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", idx,
-        nLists = 16, m = 8, nCodes = 16, residual = true)
-      Similarity.ivfPqTopKIndexed(s, idx, "vec_id", q, k = 10, nProbe = 4)
-        .select(col("vec_id"), round(col("adc"), 6).as("adc"))
-    }),
-
-    // Embedding clustering: CC over the thresholded kNN graph (cluster =
-    // smallest member id, singletons keep their own id; every non-null
-    // vector appears exactly once). Oracle: q116's edge set at the RAW
-    // cosine threshold + the recursive-CTE reachability of q102.
-    "q117_embedding_clusters" -> ((s, dir) => {
-      import graft.operators.Similarity
-      Similarity.clusterEmbeddings(t(s, dir, "embeddings"), "vec_id",
-        "embedding", k = 3, minCos = 0.42, nLists = 16, nProbe = 4)
-    }),
-
-    // ROLLING IVF-PQ lifecycle, oracle-gated end-to-end: build on the
-    // first half of the corpus (codebooks freeze at that state — the
-    // FAISS serving contract), roll the second half in via two monotone
-    // appends, compact back to one file per list, take down vec_id%50==7
-    // (plus a never-indexed id: stats must not drift), then probe. The
-    // oracle is q106's SQL with the donor CTE restricted to the build
-    // half and the dropped ids excluded — the rolled index must be
-    // indistinguishable from a frozen-codebook single build.
-    "q114_ivfpq_rolling" -> ((s, dir) => {
-      import graft.operators.Similarity
-      val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head()
-        .getSeq[Double](0)
-      // plan-time literals (bench discipline: probe construction off the row)
-      val mx = emb.agg(coalesce(max(col("vec_id")), lit(0L))).head().getLong(0)
-      val cut = mx / 2
-      val c2 = cut + (mx - cut) / 2
-      val idx = scratchDir("graft_pqroll").resolve("idx").toString
-      Similarity.writeIvfPqIndex(emb.filter(col("vec_id") <= cut),
-        "vec_id", "embedding", idx, nLists = 16, m = 8, nCodes = 16)
-      Similarity.appendToIvfPqIndex(
-        emb.filter(col("vec_id") > cut && col("vec_id") <= c2),
-        "vec_id", "embedding", idx)
-      Similarity.appendToIvfPqIndex(emb.filter(col("vec_id") > c2),
-        "vec_id", "embedding", idx)
-      Similarity.compactIvfPqIndex(s, idx)
-      Similarity.removeFromIvfPqIndex(s, idx,
-        emb.filter(col("vec_id") % 50 === 7).select(col("vec_id"))
-          .unionByName(s.range(1).select((lit(10 * mx + 100)).as("vec_id"))),
-        "vec_id")
-      Similarity.ivfPqTopKIndexed(s, idx, "vec_id", q, k = 10, nProbe = 4)
-        .select(col("vec_id"), round(col("adc"), 6).as("adc"))
-    }),
-
-    // Embedding-cosine near-dup detection via RP-LSH buckets (planted
-    // duplicates guarantee yield; rows-only: bucket hashing engine-native).
-    "q57_embedding_neardup" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      // literal offset (see q90): probe construction out of the bench row
-      val o = e.agg(coalesce(max(col("vec_id")), lit(0L))).head().getLong(0)
-      val planted = e.filter(col("vec_id") % 100 === 0)
-        .select((col("vec_id") + lit(o + 1)).as("vec_id"), col("embedding"))
-      // 16 bits: identical planted vectors always share a bucket, while
-      // merely-clustered vectors split (per-bit agreement ^ 16); the
-      // maxBucket skew guard bounds any residual dense bucket
-      Dedup.embeddingNearDup(e.unionByName(planted), "vec_id", "embedding",
-          threshold = 0.999, nBits = 16)
-        .select(col("id1"), col("id2"), round(col("cos"), 4).as("cos"))
-    }),
-
-    // End-user SQL surface: registered views + the engine's native SQL
-    // functions (haversine_km via FunctionRegistry) in one spark.sql text.
-    "q58_sql_surface" -> ((s, dir) => {
-      graft.expr.GraftExpressions.register(s)
-      t(s, dir, "nation").createOrReplaceTempView("nation_v")
-      s.sql("""
-        WITH n AS (SELECT n_nationkey AS k, -30.0 + n_nationkey * 2.5 AS lat,
-          -20.0 + n_nationkey * 3.1 AS lon FROM nation_v)
-        SELECT a.k AS k1, b.k AS k2,
-          round(haversine_km(a.lat, a.lon, b.lat, b.lon), 3) AS dist_km
-        FROM n a JOIN n b ON a.k < b.k""")
-    }),
-
-    // Heavy-hitter tokens per language via the Misra-Gries typed Aggregator
-    // (O(k) state per partition — no full-vocabulary shuffle). Checked
-    // invariant: every token with exact count > N/(k+1) is GUARANTEED in
-    // the MG summary (Agarwal et al. mergeable-summaries bound), so the
-    // provably-heavy set certified present in the sketch — with exact
-    // counts — equals a plain SQL aggregate. A lost heavy hitter drops a
-    // row and fails the oracle.
-    "q56_heavy_hitters" -> ((s, dir) => {
-      import graft.functions.HeavyHitters
-      val toks = t(s, dir, "documents")
-        .select(col("lang"), explode(TextFns.tokens(lower(col("text")))).as("token"))
-      val mg = toks.groupBy(col("lang"))
-        .agg(HeavyHitters.mgSummary(col("token"), 30).as("mg"))
-        .select(col("lang"), explode(col("mg")).as(Seq("token", "approx_count")))
-      val exact = toks.groupBy(col("lang"), col("token")).agg(count(lit(1)).as("n"))
-      // per-lang totals fold over the exact counts — two corpus tokenize
-      // scans (mg + exact), not three
-      val totals = exact.groupBy(col("lang")).agg(sum(col("n")).as("nl"))
-      exact.join(totals, Seq("lang")).filter(col("n") * 31 > col("nl"))
-        .join(mg, Seq("lang", "token"), "left_semi")
-        .select(col("lang"), col("token"), col("n"))
-    }),
-
-    // BPE-ish subword counting (token-inflation estimate for budgeting).
-    "q54_subword_count" -> ((s, dir) => {
-      t(s, dir, "documents").select(col("doc_id"),
-        TextFns.tokenCount(col("text")).cast("long").as("n_words"),
-        TextFns.subwordCount(col("text")).cast("long").as("n_subwords"))
-    }),
-
-    // Character-shingle cardinality (the dedup signal's raw feature).
-    "q55_char_shingles" -> ((s, dir) => {
-      t(s, dir, "documents").select(col("doc_id"),
-        size(TextFns.charShingles(col("text"), 3)).cast("long").as("n_shingles"))
-    }),
-
-    // Corpus token histogram: top-20 tokens (deterministic tie-break).
-    "q47_token_histogram" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(explode(TextFns.tokens(lower(col("text")))).as("token"))
-        .groupBy(col("token")).agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("token").asc)
-        .limit(20)
-    }),
-
-    // P7 lifetime filter + cohort aggregation (process-table shape on the
-    // star schema: suppliers as plants, nation as site).
-    "q48_lifetime_cohorts" -> ((s, dir) => {
-      t(s, dir, "supplier")
-        .withColumn("year", (lit(1980) + col("s_suppkey") % 40).cast("int"))
-        .withColumn("lifetime", (lit(20) + col("s_suppkey") % 15).cast("int"))
-        .filter(col("year") + col("lifetime") >= 2015)
-        .groupBy(col("s_nationkey"), col("year"))
-        .agg(round(sum(col("s_acctbal")), 2).as("inst_cap"), count(lit(1)).as("n_plants"))
-    }),
-
-    // Embedding-cosine near-dup scoring on consecutive-id pairs (verified
-    // double-precision cosine; the LSH-restricted variant is q28/spec).
-    "q49_embedding_pairs" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val a = e.select(col("vec_id").as("id1"), col("embedding").as("v1"))
-      val b = e.select((col("vec_id") - 1).as("id1"), col("vec_id").as("id2"),
-        col("embedding").as("v2"))
-      // self-join on consecutive ids: broadcast one side, no shuffle
-      a.join(broadcast(b), Seq("id1"))
-        .select(col("id1"), col("id2"),
-          round(VectorFns.cosine(col("v1"), col("v2")), 4).as("cosine"))
-    }),
-
-    // Tumbling event-time window via the streaming-unified operator
-    // (EventStream.windowedAgg runs identically under readStream).
-    "q51_tumbling_window" -> ((s, dir) => {
-      import graft.streaming.EventStream
-      val ev = events(s, dir).select(
-        timestamp_micros(expr("ts div 1000")).as("ts"),
-        col("event_type"), col("value"))
-      EventStream.windowedAgg(ev, "ts", "event_type", "value", "5 minutes", "10 minutes")
-        .select(unix_micros(col("window_start")).as("w_start_us"), col("event_type"),
-          col("n"), round(col("total"), 2).as("total"))
-    }),
-
-    // J5 at cluster scale: tile-salted equi-join spatial join (no broadcast,
-    // no BNLJ) — same semantics and same oracle as q20.
-    "q52_spatial_join_tiled" -> ((s, dir) => {
-      val pts = t(s, dir, "customer").select(col("c_custkey"),
-        (col("c_custkey") % 100 + 0.5).cast("double").as("x"),
-        ((col("c_custkey") * 7) % 100 + 0.5).cast("double").as("y"))
-      val polys = t(s, dir, "region").select(col("r_name"),
-        format_string("POLYGON ((%d 0, %d 0, %d 100, %d 100, %d 0))",
-          col("r_regionkey") * 20, col("r_regionkey") * 20 + 20,
-          col("r_regionkey") * 20 + 20, col("r_regionkey") * 20,
-          col("r_regionkey") * 20).as("wkt"))
-      SpatialOps.tiledPointInPolygonJoin(pts, "x", "y", polys, "wkt", tileSize = 25.0)
-        .groupBy(col("r_name")).agg(count(lit(1)).as("n_customers"))
-    }),
-
-    // W4: keep the first match per entity after a multi-match join (the
-    // reference dedupes each plant to one region after sjoin,
-    // spatial_functions.py:502) — overlapping "regions" built from part
-    // size ranges so customers match several; rank keeps the smallest.
-    "q61_first_match_dedup" -> ((s, dir) => {
-      import s.implicits._
-      val ranges = Seq((0, 0, 60), (1, 40, 100), (2, 80, 160))
-        .toDF("range_id", "lo", "hi")
-      val c = t(s, dir, "customer").select(col("c_custkey"),
-        (col("c_custkey") % 150).as("score"))
-      val joined = c.join(broadcast(ranges),
-        col("score") >= col("lo") && col("score") < col("hi"))
-      Ops.topKPerGroup(joined, Seq("c_custkey"), Seq(col("range_id").asc), 1)
-        .select(col("c_custkey"), col("range_id"))
-    }),
-
-    // A4: exact distinct-cardinality aggregation.
-    "q50_cardinality" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .groupBy(col("c_nationkey"))
-        .agg(countDistinct(col("o_custkey")).as("n_active_customers"),
-          countDistinct(col("o_orderpriority")).as("n_priorities"),
-          count(lit(1)).as("n_orders"))
-    }),
-
-    // EDIT-DISTANCE SIMILARITY SELF-JOIN (PassJoin segment signatures +
-    // exact Levenshtein verify) on the 40-char normalized doc prefix.
-    // The candidate scheme is pigeonhole-complete, so the engine's
-    // signature-join pair set must equal the oracle's brute-force
-    // cross-join — integer distances, exact gate.
-    "q163_edit_distance_join" -> ((s, dir) => {
-      import graft.operators.EditDistance
-      EditDistance.edSelfJoin(t(s, dir, "documents"), "doc_id",
-        substring(lower(col("text")), 1, 40), tau = 2)
-    }),
-
-    // INTEGER-LATTICE PAGERANK over the customer↔supplier trade graph
-    // (suppliers offset to a disjoint id range, symmetric edges, 5
-    // synchronous iterations). Every rank is exact fixed-point — the
-    // oracle unrolls the identical floor-division recurrence, so the
-    // result is bit-equal across engines AND across cluster schedules.
-    "q164_pagerank" -> ((s, dir) => {
-      import graft.operators.Graph
-      val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-      val l = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-      val fwd = o.join(l, o("o_orderkey") === l("l_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + 1000000L).as("dst"))
-        .distinct()
-      val edges = fwd.union(
-        fwd.select(col("dst").as("src"), col("src").as("dst")))
-      Graph.pageRankInt(edges, "src", "dst", iters = 5)
-    }),
-
-    // SAMPLED cross-doc substring-dedup coverage: winnowed fingerprints
-    // shared by >= 2 distinct docs, k-token windows islands-merged per
-    // doc, keep thresholded by integer cross-multiplication — the
-    // 1/(w+1)-shuffle tier of Lee et al. substring dedup (exact tier =
-    // q110/q111's repeatedSpans family).
-    "q165_winnow_cross_doc" -> ((s, dir) => {
-      import graft.operators.ContentChunks
-      ContentChunks.winnowDupCoverage(t(s, dir, "documents"), "doc_id",
-        "text", k = 5, w = 8, minDocs = 2, maxNum = 1L, maxDen = 5L)
-    }),
-
-    // ONE-PERMUTATION HASHING (single shingle hash binned mod k,
-    // rotation-densified) — the k×-cheaper MinHash: every densified
-    // signature entry AND every pair agreeing on >= 4 of 16 entries is
-    // integer-exact under the oracle.
-    "q166_oph_signatures" -> ((s, dir) => {
-      import graft.operators.Dedup
-      val sigs = Dedup.ophSignatures(t(s, dir, "documents"), "doc_id",
-        "text", shingleN = 2, k = 16)
-      val pairs = Dedup.ophMatchPairs(sigs, minMatch = 4L)
-      sigs.select(lit("sig").as("kind"), col("doc_id").as("k1"),
-          col("bucket").as("k2"), col("sig").as("v"))
-        .unionByName(pairs.select(lit("pair").as("kind"),
-          col("id1").as("k1"), col("id2").as("k2"),
-          col("n_match").as("v")))
-    }),
-
-    // TEXT CLEANING + ENCODING-DAMAGE SIGNALS: NFC normalize (JDK
-    // normalizer UDF — the rest of the chain is codegen'd regexps),
-    // strip non-whitespace control chars, collapse whitespace; count
-    // control chars and U+FFFD replacement chars on the RAW text. The
-    // cleaned text is pinned by its poly-31 hash under the oracle
-    // (DuckDB nfc_normalize — two independent NFC implementations).
-    "q167_clean_text" -> ((s, dir) => {
-      import graft.functions.TextFns
-      val clean = TextFns.cleanText(col("text"))
-      t(s, dir, "documents").select(col("doc_id"),
-        coalesce(length(col("text")), lit(0)).cast("long")
-          .as("n_chars_raw"),
-        TextFns.countMatches(coalesce(col("text"), lit("")),
-          TextFns.CtrlClass).as("n_ctrl"),
-        TextFns.countMatches(coalesce(col("text"), lit("")), "�")
-          .as("n_repl"),
-        length(clean).cast("long").as("n_chars_clean"),
-        TextFns.polyHashUdf(clean).as("clean_hash"))
-    }),
-
-    // ASYMMETRIC NEAR-DUP: containment |A∩B|/min over the q166 OPH
-    // candidate pairs — catches a short doc quoted inside a larger one
-    // where Jaccard reads near zero. Text coalesced to '' so null and
-    // blank shingle identically on both engines.
-    "q168_containment" -> ((s, dir) => {
-      import graft.operators.Dedup
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      val sigs = Dedup.ophSignatures(docs, "doc_id", "text",
-        shingleN = 2, k = 16)
-      val pairs = Dedup.ophMatchPairs(sigs, minMatch = 4L)
-      Dedup.containmentOnPairs(pairs, docs, "doc_id", "text",
-        shingleN = 2, num = 4L, den = 5L)
-    }),
-
-    // COLLOCATIONS: bigrams co-occurring >= 2x what independent unigram
-    // frequencies predict (PMI >= log 2), c_pair >= 3 — the comparison
-    // is integer cross-multiplication and the reported lift an exact
-    // ppm floor, riding the same count tables as the backoff LM.
-    "q169_collocations" -> ((s, dir) => {
-      import graft.functions.NgramLm
-      NgramLm.collocations(t(s, dir, "documents"), "doc_id", "text",
-        minCount = 3L, liftNum = 2L, liftDen = 1L)
-    }),
-
-    // SIMHASH HAMMING-BALL near-dup pairs (Manku et al. 2007): 4-block
-    // pigeonhole candidates + codegen'd bit_count(xor) verify, Hamming
-    // <= 3. Sound AND complete — the oracle replays the identical
-    // pigeonhole, so the pair sets must be equal.
-    "q170_simhash_pairs" -> ((s, dir) => {
-      import graft.operators.Dedup
-      Dedup.simhashNearDupPairs(t(s, dir, "documents"), "doc_id", "text",
-        maxHamming = 3)
-    }),
-
-    // OPH-BACKED FULL DEDUP: exact → OPH >= 4-of-16 candidates → exact
-    // bigram-Jaccard verify → pairwise removal. The measured-equal-recall
-    // pipeline at 1/16 of MinHash's signature hashing; every stage
-    // replayed in the oracle, survivors hash-gated.
-    "q176_dedup_oph" -> ((s, dir) => {
-      import graft.operators.Dedup
-      Dedup.dedupCorpusOph(t(s, dir, "documents"), "doc_id", "text",
-        threshold = 0.6, shingleN = 2, k = 16, minMatch = 4L)
-        .select(col("doc_id"))
-    }),
-
-    // TIERED DEDUP (the composed detector portfolio): exact hash →
-    // simhash Hamming ball (≤3) → OPH ≥ 4-of-16 + bigram-Jaccard ≥ 0.6,
-    // each tier only over the previous tier's survivors, with a ledger
-    // naming the cheapest tier that caught every removed doc. The whole
-    // cascade — survivor set AND per-tier attribution — sits under one
-    // oracle hash (the q149 pattern).
-    "q177_dedup_tiered" -> ((s, dir) => {
-      import graft.operators.Dedup
-      Dedup.dedupCorpusTiered(t(s, dir, "documents"), "doc_id", "text",
-        maxHamming = 3, threshold = 0.6, shingleN = 2, k = 16,
-        minMatch = 4L)
-    }),
-
-    // EDIT-DISTANCE JOIN WITH THE SKEW VALVE BINDING (q163's operator,
-    // capped): every key shares an 8-char boilerplate prefix, so the
-    // first PassJoin segment's bucket degenerates toward all-pairs
-    // (500² = 250k candidate products at sf0.01, 25M at sf0.1);
-    // maxPairsPerBucket = 20000 provably drops it on every sf, and the
-    // surviving output is exactly the same-suffix collisions through
-    // the second segment — keys one digit apart are LOST with the
-    // dropped bucket, which is the valve's documented trade. The oracle
-    // replays the capped candidate scheme literally (segment + shifted-
-    // substring signatures, nx·np cap filter, Levenshtein verify).
-    "q178_edit_join_capped" -> ((s, dir) => {
-      import graft.operators.EditDistance
-      EditDistance.edSelfJoin(t(s, dir, "documents"), "doc_id",
-        format_string("xxxxxxxx-%04d", pmod(col("doc_id"), lit(100L))),
-        tau = 1, maxPairsPerBucket = 20000L)
-    }),
-
-    // LOG-HISTOGRAM QUANTILE SKETCH (unbounded-range percentiles in one
-    // mergeable pass — the DDSketch idea on an integer lattice): octave
-    // = binary length (no float log), 8 subcells per octave → ≤ 12.5%
-    // cell width, values ≤ 0 in a reserved underflow cell. Registers
-    // AND the p50/p90/p99 readout (cell lower bounds, integer ceil
-    // ranks) under one oracle hash.
-    "q183_loghist_quantiles" -> ((s, dir) => {
-      import graft.functions.Sketches
-      val v = t(s, dir, "lineitem")
-        .select(col("l_extendedprice").cast("long").as("v"))
-      val regs = Sketches.logHistRegisters(v, "v")
-      val qs = Sketches.logHistQuantiles(regs, Seq(0.5, 0.9, 0.99))
-      regs.select(lit("reg").as("kind"), col("b").as("k1"),
-          col("sub").as("k2"), col("cnt").as("v"))
-        .unionByName(qs.select(lit("q").as("kind"), col("q_pct").as("k1"),
-          col("rank").as("k2"), col("value_lb").as("v")))
-    }),
-
-    // URL CANONICALIZATION + HOST + REGISTERED DOMAIN: deterministic
-    // synthetic URLs (mixed scheme/host case, default and non-default
-    // ports, utm/fbclid tracking params, fragments, co.uk hosts) pushed
-    // through the codegen'd regexp canonicalizer, the host extractor,
-    // and the bring-your-own-suffix registered-domain mapping. The
-    // oracle replays the identical patterns under RE2 — two independent
-    // regex engines agreeing on every canonical form (q167 discipline).
-    "q186_url_canonical" -> ((s, dir) => {
-      import graft.operators.Curation
-      import s.implicits._
-      val u = urlFixture(s, dir)
-      val sfx = Seq("com", "org", "co.uk", "*.ck", "!www.ck",
-        "// comment lines and blanks are ignored", "").toDF("suffix")
-      val reg = Curation.registeredDomains(u, "host", sfx, "suffix")
-      u.join(reg, Seq("host"), "left")
-        .select(col("doc_id"), col("url"), col("canonical"), col("host"),
-          col("registered_domain"))
-    }),
-
-    // THE COMPOSED WEB-CURATION CHAIN: URLs → canonical hosts →
-    // registered domains (q186's machinery) → a deterministic doc link
-    // graph projected onto DOMAIN nodes (node id = min doc_id per
-    // domain) → 5 iterations of integer-lattice PageRank. The whole
-    // pipeline — regex canonicalization, suffix argmax, graph
-    // projection, rank recurrence — sits under ONE oracle hash, the
-    // q149 composition pattern for the host-ranking story.
-    "q189_domain_rank" -> ((s, dir) => {
-      import graft.operators.{Curation, Graph}
-      import s.implicits._
-      val u = urlFixture(s, dir)
-      val sfx = Seq("com", "org", "co.uk", "*.ck", "!www.ck",
-        "// comment lines and blanks are ignored", "").toDF("suffix")
-      val dom = u
-        .join(Curation.registeredDomains(u, "host", sfx, "suffix"),
-          Seq("host"))
-        .filter(col("registered_domain").isNotNull)
-        .select(col("doc_id"), col("registered_domain"))
-      val ids = dom.groupBy(col("registered_domain"))
-        .agg(min(col("doc_id")).as("node"))
-      val d2n = dom.join(ids, Seq("registered_domain"))
-        .select(col("doc_id"), col("node"))
-      val links = t(s, dir, "documents").select(col("doc_id"),
-        ((col("doc_id") * 17 + 3) % 500).as("target"))
-      val edges = links
-        .join(d2n.select(col("doc_id"), col("node").as("src")),
-          Seq("doc_id"))
-        .join(d2n.select(col("doc_id").as("target"),
-          col("node").as("dst")), Seq("target"))
-        .select(col("src"), col("dst"))
-        .filter(col("src") =!= col("dst")).distinct()
-      val ranks = Graph.pageRankInt(edges, "src", "dst", iters = 5)
-      ranks.join(ids, ranks("node") === ids("node"))
-        .select(col("registered_domain"), col("rank"))
-    }),
-
-    // CCNET-STYLE LINE DEDUP (apply step): documents re-lined into
-    // 10-token lines (deterministically, both engines), then every line
-    // whose normalized form appears in ≥2 distinct docs is dropped and
-    // the survivors rebuilt in order — the line-level boilerplate strip
-    // CCNet runs before document-level dedup. clean_text hash-gated
-    // verbatim (newlines and all).
-    "q185_line_dedup" -> ((s, dir) => {
-      import graft.operators.Curation
-      val relined = t(s, dir, "documents")
-        .filter(col("text").isNotNull && trim(col("text")) =!= "")
-        .select(col("doc_id"),
-          split(trim(lower(col("text"))), "\\s+").as("__t"))
-        .select(col("doc_id"),
-          expr("array_join(transform(sequence(0, " +
-            "cast((size(__t) - 1) / 10 as int)), " +
-            "i -> array_join(slice(__t, i * 10 + 1, 10), ' ')), '\n')")
-            .as("text"))
-      Curation.lineDedup(relined, "doc_id", "text", minDocs = 2)
-    }),
-
-    // BLOOM-BACKED LINE DEDUP (Dolma's approach): a Bloom filter built
-    // over the REFERENCE shard's normalized lines (doc_id % 4 == 0)
-    // drops matching lines from the whole corpus -- one broadcast
-    // <=16384-row register relation instead of lineDedup's shared-line
-    // shuffle. False positives are DETERMINISTIC (fixed poly/perm/mix
-    // hash lattice), so the oracle replays every membership decision,
-    // FPs included, bit-for-bit.
-    "q193_bloom_line_dedup" -> ((s, dir) => {
-      import graft.operators.Curation
-      import graft.functions.Sketches
-      val relined = t(s, dir, "documents")
-        .filter(col("text").isNotNull && trim(col("text")) =!= "")
-        .select(col("doc_id"),
-          split(trim(lower(col("text"))), "\\s+").as("__t"))
-        .select(col("doc_id"),
-          expr("array_join(transform(sequence(0, " +
-            "cast((size(__t) - 1) / 10 as int)), " +
-            "i -> array_join(slice(__t, i * 10 + 1, 10), ' ')), '\n')")
-            .as("text"))
-      val refNorms = relined.filter(col("doc_id") % 4 === 0)
-        .select(explode(split(col("text"), "\n")).as("__l"))
-        .select(lower(trim(col("__l"))).as("__norm"))
-        .filter(col("__norm") =!= "").distinct()
-      val regs = Sketches.bloomRegisters(refNorms, "__norm",
-        mBits = 16384, kHashes = 4)
-      Curation.bloomLineDedup(relined, "doc_id", "text", regs,
-        mBits = 16384, kHashes = 4)
-    }),
-
-    // PER-GROUP log-histogram percentiles (the hllRegistersBy companion):
-    // one independent ≤513-cell sketch per source, p50/p95 doc lengths
-    // read out at integer-ceil ranks — the corpus-report shape at 100 TB
-    // (one pass, mergeable, no per-group sort anywhere).
-    "q184_loghist_by_source" -> ((s, dir) => {
-      import graft.functions.Sketches
-      val d = t(s, dir, "documents").select(col("source"), col("n_chars"))
-      val regs = Sketches.logHistRegistersBy(d, Seq("source"), "n_chars")
-      Sketches.logHistQuantilesBy(regs, "source", Seq(0.5, 0.95))
-    }),
-
-    // SUBSTRING-DEDUP APPLY (the q165 chain's missing half): REWRITE
-    // every doc with its cross-doc shared windows cut out — same
-    // winnowing spans, then token-level removal and in-order rebuild.
-    // clean_text is hash-gated verbatim, so any span-boundary or
-    // ordering slip breaks the gate.
-    "q181_winnow_remove" -> ((s, dir) => {
-      import graft.operators.ContentChunks
-      ContentChunks.winnowDupRemove(t(s, dir, "documents"), "doc_id",
-        "text", k = 5, w = 8, minDocs = 2)
-    }),
-
-    // CROSS-SOURCE DUPLICATION MATRIX: verified OPH near-dup pairs
-    // labeled by source, counted per unordered source pair — the
-    // "which sources copy from which" curation dashboard (diagonal =
-    // intra-source boilerplate, off-diagonal = syndication/mirroring).
-    "q182_dup_source_matrix" -> ((s, dir) => {
-      import graft.operators.Dedup
-      val docs = t(s, dir, "documents")
-      val sigs = Dedup.ophSignatures(docs, "doc_id", "text",
-        shingleN = 2, k = 16)
-      val pairs = Dedup.ophMatchPairs(sigs, minMatch = 4L)
-      Dedup.pairSourceMatrix(pairs, docs, "doc_id", "source")
-    }),
-
-    // IMAGE PERCEPTUAL-HASH NEAR-DUP under the oracle (the q74/q98
-    // planted-pixel trick, now for aHash): render a 16×16 PNG per
-    // selected doc whose 2×2-pixel cells are bright (200) or dark (50)
-    // by a closed form in doc_id — a per-class 8×8 stripe pattern plus
-    // one or two forced-bright "flip" cells. Cell means are then exact
-    // integers, the grid mean sits strictly between 50 and 200, and the
-    // decoded aHash equals the planted bright-cell bitmap — which the
-    // oracle recomputes arithmetically, no image codec needed. Pairs =
-    // the generalized Hamming-ball join (Manku pigeonhole) at ≤ 3 bits,
-    // gated against the oracle's brute-force ground truth (the
-    // pigeonhole is sound AND complete). Any codec/raster/blocking/
-    // hashing break shifts a bit and breaks the hash compare.
-    "q180_image_ahash_pairs" -> ((s, dir) => {
-      import graft.multimodal.Multimodal
-      import graft.operators.Dedup
-      val genPng = udf { (id: Long) =>
-        val p = (id % 6).toInt
-        val f1 = ((id * 7) % 63).toInt
-        val f2 = if (id % 2 == 0) ((id * 13) % 63).toInt else -1
-        val img = new java.awt.image.BufferedImage(16, 16,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < 16) {
-          var x = 0
-          while (x < 16) {
-            val c = (y / 2) * 8 + (x / 2)
-            val bright = (c <= 62 && (c + p) % 4 == 0) || c == f1 || c == f2
-            val g = if (bright) 200 else 50
-            img.setRGB(x, y, (g << 16) | (g << 8) | g)
-            x += 1
-          }
-          y += 1
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        bos.toByteArray
-      }
-      val media = t(s, dir, "documents").select(col("doc_id"))
-        .filter(col("doc_id").isNotNull && col("doc_id") % 7 === 0)
-        .withColumn("media", genPng(col("doc_id")))
-      val hashed = media.select(col("doc_id"),
-        Multimodal.aHash64(col("media")).as("ahash"))
-      val pairs = Dedup.hammingPairs(hashed, "doc_id", "ahash",
-        bits = 64, maxHamming = 3)
-      hashed.select(lit("hash").as("kind"), col("doc_id").as("k1"),
-          lit(0L).as("k2"), col("ahash").as("v"))
-        .unionByName(pairs.select(lit("pair").as("kind"),
-          col("id1").as("k1"), col("id2").as("k2"),
-          col("hamming").as("v")))
-    }),
-
-    // TWO-RELATION EDIT-DISTANCE JOIN (the R⋈S record-linkage form of
-    // q163's PassJoin): a "master" table of 20-char doc prefixes vs a
-    // "batch" of the same prefixes with one character substituted —
-    // every batch row must link back to its source (lev ≤ 1) plus any
-    // genuine near-collisions; oracle = brute-force cross join ground
-    // truth, which the pigeonhole-complete signature join must equal.
-    "q190_edit_join_rs" -> ((s, dir) => {
-      import graft.operators.EditDistance
-      val base = t(s, dir, "documents")
-        .filter(col("text").isNotNull)
-      val key = substring(lower(col("text")), 1, 20)
-      val left = base.select(col("doc_id"), key.as("k"))
-      val right = base.select((col("doc_id") + 100000L).as("rid"),
-        concat(substring(key, 1, 6), lit("z"),
-          substring(key, 8, 13)).as("rk"))
-      EditDistance.edJoin(left, "doc_id", col("k"),
-        right, "rid", col("rk"), tau = 1)
-    }),
-
-    // LUHN-VALIDATED CREDIT-CARD REDACTION: public TEST PANs (valid
-    // checksums) and lookalike digit runs (invalid) planted per doc —
-    // only the checksum-passing candidates may be redacted, so a
-    // pattern-only redactor over- OR under-redacting breaks the text
-    // hash. The oracle replays candidate extraction (same regex under
-    // RE2), the integer Luhn sum, and replace-all per valid candidate.
-    "q188_ccn_redact" -> ((s, dir) => {
-      import graft.operators.Curation
-      val id = col("doc_id")
-      val valid = array(lit("4111111111111111"), lit("5500 0000 0000 0004"),
-        lit("4012-8888-8888-1881"), lit("378282246310005"))
-      val invalid = array(lit("4111111111111112"),
-        lit("1234 5678 9012 3456"), lit("9999999999999"))
-      val planted = t(s, dir, "documents").select(id,
-        concat(coalesce(col("text"), lit("")), lit(" pay "),
-          element_at(valid, (pmod(id, lit(4)) + 1).cast("int")),
-          lit(" ref "),
-          element_at(invalid, (pmod(id, lit(3)) + 1).cast("int")))
-          .as("text"))
-      Curation.redactValidatedCcn(planted, "text")
-        .select(col("doc_id"), col("text").as("clean_text"), col("n_ccn"))
-    }),
-
-    // MULTICLASS EXTERNAL-MODEL SCORING (the fastText-LID shape):
-    // (token, class, weight) + (class, bias) relations drive per-doc
-    // per-class integer margins with a deterministic argmax — every
-    // margin AND the prediction flag under the oracle.
-    "q187_multiclass_lid" -> ((s, dir) => {
-      import graft.operators.QualityModel
-      import s.implicits._
-      val w = Seq(
-        ("the", "en", 3L), ("a", "en", 2L), ("table", "en", 1L),
-        ("data", "de", 2L), ("table", "de", 2L), ("row", "de", 1L),
-        ("query", "fr", 2L), ("value", "fr", 2L), ("join", "fr", 1L))
-        .toDF("token", "lang", "weight")
-      val b = Seq(("en", -1L), ("de", 0L), ("fr", 1L))
-        .toDF("lang", "bias")
-      QualityModel.tokenMulticlassScore(t(s, dir, "documents"), "doc_id",
-        "text", w, "token", "lang", "weight", b, "lang", "bias")
-        .withColumnRenamed("cls", "lang")
-    }),
-
-    // HASHED CHAR-N-GRAM LID: the faithful fastText-LID feature path --
-    // every token wrapped <tok>, char 2/3-grams hashed h = fold(h*31+cp)
-    // mod 1000, scored against a dense (bucket, class, weight) lattice
-    // (weights a closed-form function of the bucket so every doc gets
-    // differentiated margins), exact-long argmax. The oracle replays
-    // the hash arithmetic as nested ord(substr(...)) per n -- two
-    // engines agreeing on every bucket of every n-gram of the corpus.
-    "q191_ngram_lid" -> ((s, dir) => {
-      import graft.operators.QualityModel
-      import s.implicits._
-      val cls = Seq(("en", 5L, -1L), ("de", 11L, 0L), ("fr", 17L, 1L))
-        .toDF("lang", "p", "bias")
-      val w = s.range(0, 1000).select(col("id").as("bucket"))
-        .crossJoin(cls)
-        .select(col("bucket"), col("lang"),
-          ((col("bucket") * col("p")) % 7 - 3).as("weight"))
-      val b = cls.select(col("lang"), col("bias"))
-      QualityModel.ngramMulticlassScore(t(s, dir, "documents"), "doc_id",
-        "text", w, "bucket", "lang", "weight", b, "lang", "bias",
-        nMin = 2, nMax = 3, nBuckets = 1000)
-        .withColumnRenamed("cls", "lang")
-    }),
-
-    // C4 HEURISTIC CLEANING (Raffel et al. 2020 §2.2): the published
-    // line rules (terminal punctuation, >=3 words, no 'javascript') and
-    // page rules (BYO badword list, 'lorem ipsum', '{', <5 sentences)
-    // over a deterministically decorated re-lining of the corpus --
-    // fixture plants every rule's trigger on doc_id/line-position
-    // moduli, oracle replays construction and battery verbatim.
-    "q192_c4_filter" -> ((s, dir) => {
-      import graft.operators.Curation
-      import s.implicits._
-      val relined = t(s, dir, "documents")
-        .filter(col("text").isNotNull && trim(col("text")) =!= "")
-        .select(col("doc_id"),
-          split(trim(lower(col("text"))), "\\s+").as("__t"))
-        .select(col("doc_id"), expr(
-          """array_join(transform(sequence(0, cast((size(__t) - 1) / 8 as int)),
-            i -> concat(
-              CASE WHEN (doc_id * 7 + i) % 11 = 5 THEN 'javascript '
-                   ELSE '' END,
-              array_join(slice(__t, i * 8 + 1, 8), ' '),
-              CASE WHEN i = 0 AND doc_id % 13 = 3 THEN ' lorem ipsum'
-                   WHEN i = 0 AND doc_id % 13 = 7 THEN ' { x'
-                   WHEN i = 0 AND doc_id % 17 = 11 THEN ' badwordx'
-                   ELSE '' END,
-              CASE WHEN (doc_id + i) % 3 = 0 THEN '.'
-                   WHEN (doc_id + i) % 3 = 1 THEN '?' ELSE '' END)),
-            '\n')""").as("text"))
-      val bw = Seq("badwordx", "badwordy").toDF("w")
-      Curation.c4Filter(relined, "doc_id", "text", bw, "w")
-    }),
-
-    // EXTERNAL-MODEL SCORING: a pretrained (token → integer weight)
-    // relation drives a bag-of-words linear classifier (folded fastText
-    // shape) — margin = bias + Σ count(token)·w(token), exact longs,
-    // docs with no in-vocabulary tokens score exactly the bias. The
-    // loader for foreign weight FILES (fastText-style text format →
-    // micro-unit quantization) is spec-gated (QualityModelSpec); this
-    // gate pins the scoring semantics under a fixture vocabulary.
-    "q179_token_linear_score" -> ((s, dir) => {
-      import graft.operators.QualityModel
-      import s.implicits._
-      val w = Seq(("spark", 5L), ("join", 3L), ("query", 2L),
-        ("slow", -4L), ("the", -1L)).toDF("token", "weight")
-      QualityModel.tokenLinearScore(t(s, dir, "documents"), "doc_id",
-        "text", w, "token", "weight", bias = -2L)
-    }),
-
-    // SIMHASH NEAR-DUP CLUSTERS: connected components (pointer-jumping)
-    // over the q170 Hamming-ball pair graph, min-id survivor per
-    // cluster — the complete "find → cluster → keep one" simhash dedup
-    // chain of Manku et al.
-    "q175_simhash_clusters" -> ((s, dir) => {
-      import graft.operators.Dedup
-      val pairs = Dedup.simhashNearDupPairs(t(s, dir, "documents"),
-        "doc_id", "text", maxHamming = 3)
-      Dedup.connectedComponents(pairs, "id1", "id2")
-        .select(col("id").as("doc_id"), col("comp"),
-          when(col("id") === col("comp"), lit(1L)).otherwise(lit(0L))
-            .as("keep"))
-    }),
-
-    // DISTINCTIVE TERMS PER SOURCE: within-source frequency beats the
-    // corpus frequency by an integer cross-multiplied lift, top-5 per
-    // source ranked on (integer lift_ppm, term) — TF-IDF's intuition
-    // with a cross-engine-reproducible ranking.
-    "q171_distinct_terms" -> ((s, dir) => {
-      import graft.operators.Curation
-      Curation.distinctiveTermsPerGroup(t(s, dir, "documents"), "text",
-        "source", minCount = 5L, liftNum = 13L, liftDen = 10L, topK = 5)
-    }),
-
-    // MULTISET (bag) MINHASH: every shingle occurrence is a distinct
-    // element (base·31 + occurrence index), so collisions estimate the
-    // weighted Jaccard Σmin/Σmax — "fifty copies of the boilerplate
-    // line" is no longer identical to "one copy". Signature exploded to
-    // scalar rows, full integer oracle (occurrence index = row_number
-    // per (doc, shingle)).
-    "q172_multiset_minhash" -> ((s, dir) => {
-      import graft.operators.Dedup
-      Dedup.multisetMinhashSignatures(t(s, dir, "documents"), "doc_id",
-        "text", shingleN = 2, k = 16)
-        .select(col("doc_id"), posexplode(col("minhash")))
-        .select(col("doc_id"), col("pos").cast("long").as("hash_idx"),
-          col("col").as("hash_val"))
-    }),
-
-    // BIPARTITE CO-OCCURRENCE PROJECTION (item-item graph constructor):
-    // customers sharing >= 2 suppliers on a deterministic 1/20 order
-    // sample, weighted by the shared count. Hub expansion is capped
-    // (super-hub = no signal, the IDF argument); counts integer-exact.
-    "q173_copurchase_graph" -> ((s, dir) => {
-      import graft.operators.Graph
-      val o = t(s, dir, "orders")
-        .filter(col("o_orderkey") % 20 === 0)
-        .select(col("o_orderkey"), col("o_custkey"))
-      val l = t(s, dir, "lineitem").select(col("l_orderkey"),
-        col("l_suppkey"))
-      val edges = o.join(l, o("o_orderkey") === l("l_orderkey"))
-        .select(col("o_custkey"), col("l_suppkey"))
-      Graph.bipartiteProject(edges, "o_custkey", "l_suppkey",
-        minShared = 2L, maxHubDegree = 100000)
-    }),
-
-    // TRUSTRANK: q164's trade graph with teleport restricted to a seed
-    // whitelist (nation-0 customers) — trust decays with link distance
-    // from the seeds on the same bit-exact integer lattice.
-    "q174_trustrank" -> ((s, dir) => {
-      import graft.operators.Graph
-      val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-      val l = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-      val fwd = o.join(l, o("o_orderkey") === l("l_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + 1000000L).as("dst"))
-        .distinct()
-      val edges = fwd.union(
-        fwd.select(col("dst").as("src"), col("src").as("dst")))
-      val seeds = t(s, dir, "customer").filter(col("c_nationkey") === 0)
-        .select(col("c_custkey"))
-      Graph.trustRankInt(edges, "src", "dst", seeds, "c_custkey",
-        iters = 5)
-    }),
-
-    // BLEU SUFFICIENT STATISTICS: clipped 1..4-gram matches + totals +
-    // lengths per (candidate, reference) pair, and the exact geometric
-    // precision product on the ppm lattice -- the translation-eval
-    // sibling of q227's EM/F1, sharing its row-local no-shuffle shape.
-    // Three candidate shapes per doc: exact echo (perfect), shifted
-    // window (partial n-gram overlap), 3-token stub (t4 = 0 -> null).
-    "q238_bleu_stats" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      val w = split(trim(col("text")), " ")
-      val ref = array_join(slice(w, lit(1), lit(10)), " ")
-      val cand = when(col("doc_id") % 3 === 0, ref)
-        .when(col("doc_id") % 3 === 1,
-          array_join(slice(w, lit(3), lit(10)), " "))
-        .otherwise(array_join(slice(w, lit(1), lit(3)), " "))
-      EvalMetrics.bleuStats(
-        t(s, dir, "documents").select(col("doc_id"),
-          cand.as("cand"), ref.as("ref")),
-        "cand", "ref")
-    }),
-
-    // ROUGE-L: LCS-based precision/recall/F on the ppm lattice -- the
-    // summarization/instruction-dedup metric. Candidates exercise the
-    // DP: token substitution (LCS = n-1), shifted window, and full
-    // REVERSAL (the worst case for any shortcut). The oracle replays
-    // the row DP as a recursive CTE carrying the LCS row as a list
-    // (the q224 Viterbi pattern, with the within-row dependency
-    // eliminated by the prefix-max identity).
-    "q239_rouge_l" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      val w = split(trim(col("text")), " ")
-      val ref = slice(w, lit(1), lit(10))
-      val cand = when(col("doc_id") % 3 === 0,
-          transform(ref, (t, i) => when(i === 3, lit("zzz")).otherwise(t)))
-        .when(col("doc_id") % 3 === 1, slice(w, lit(4), lit(10)))
-        .otherwise(reverse(ref))
-      EvalMetrics.rougeL(
-        t(s, dir, "documents").select(col("doc_id"),
-          array_join(cand, " ").as("cand"),
-          array_join(ref, " ").as("ref")),
-        "cand", "ref")
-    }),
-
-    // HITS HUBS & AUTHORITIES on the integer lattice: the q164 trade
-    // graph kept DIRECTED (customers -> suppliers), two synchronous
-    // unnormalized rounds -- exact integer path counts, so customers
-    // are pure hubs (authority 0) and suppliers pure authorities.
-    // Oracle unrolls the recurrence join-for-join like q164's.
-    "q240_hits" -> ((s, dir) => {
-      import graft.operators.Graph
-      val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-      val l = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-      val fwd = o.join(l, o("o_orderkey") === l("l_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + 1000000L).as("dst"))
-      Graph.hitsInt(fwd, "src", "dst", iters = 2)
-    }),
-
-    // FUNNEL ANALYSIS over the event stream: view -> click -> purchase
-    // with STRICT event-time ordering, per-user completion times and
-    // depth -- k-1 chained (filtered scan, equi join, map-side agg)
-    // rounds, no windows, no per-user history collection.
-    "q241_funnel" -> ((s, dir) => {
-      import graft.operators.Funnel
-      Funnel.funnel(events(s, dir), "user_id", "event_type", "ts",
-        Seq("view", "click", "purchase"))
-    }),
-
-    // K-ANONYMITY APPLY: release only customers whose quasi-identifier
-    // combination (nation, market segment) is shared by >= 7 records,
-    // group size attached -- one count + one equi join on the same key.
-    "q242_k_anonymity" -> ((s, dir) => {
-      import graft.operators.Anonymize
-      Anonymize.kAnonymize(
-        t(s, dir, "customer").select(col("c_custkey"),
-          col("c_nationkey"), col("c_mktsegment")),
-        Seq("c_nationkey", "c_mktsegment"), k = 7)
-        .select(col("c_custkey"), col("c_nationkey"),
-          col("c_mktsegment"), col("qi_n"))
-    }),
-
-    // NOISY COUNTS, geometric-mechanism shape: per key the true count
-    // plus deterministic two-sided geometric(1/2) noise drawn from a
-    // seeded Lehmer stream (sign bit + trailing-ones magnitude --
-    // exact integer arithmetic end to end, replayed verbatim by the
-    // oracle), clamped at zero.
-    "q243_noisy_counts" -> ((s, dir) => {
-      import graft.operators.Anonymize
-      Anonymize.noisyCounts(
-        t(s, dir, "documents").select((col("doc_id") % 97).as("key")),
-        "key", seed = 7L)
-    }),
-
-    // SOFT DEDUP (exact tier): duplicates are down-WEIGHTED, not
-    // dropped -- per document its normalized-content-hash multiplicity
-    // and the 1/d sampling weight. Duplicates planted by unioning a
-    // shifted copy of every 7th document, so both branches carry mass;
-    // the oracle groups on the same normalization.
-    "q244_soft_dedup" -> ((s, dir) => {
-      import graft.operators.Dedup
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val planted = docs.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      Dedup.softDedupWeights(docs.unionByName(planted), "doc_id", "text")
-    }),
-
-    // SOFT DEDUP (near tier): multiplicity = near-dup CLUSTER size --
-    // MinHash-LSH candidates, Jaccard-verified, closed under connected
-    // components. Fixture is closed-form provable: per base doc,
-    // 1 + (base % 4) clones with synthetic disjoint-token texts, so
-    // every cluster is exactly one clone family and the oracle derives
-    // sizes from the formula (the q65 planted-component pattern); the
-    // genuinely-near (non-identical) path is spec-covered.
-    "q245_soft_dedup_near" -> ((s, dir) => {
-      import graft.operators.Dedup
-      val fam = t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id").as("base"),
-          (lit(1) + pmod(expr("doc_id div 10"), lit(4))).cast("int")
-            .as("g"))
-      val clones = fam.select(col("base"), col("g"),
-          explode(sequence(lit(0), col("g") - 1)).as("j"))
-        .select((col("base") * 10 + col("j")).as("doc_id"),
-          array_join(transform(sequence(lit(0), lit(11)),
-            i => concat(lit("t"), col("base"), lit("_"), i)), " ")
-            .as("text"))
-      Dedup.softDedupWeightsNear(clones, "doc_id", "text",
-        threshold = 0.8, shingleN = 2, k = 16, bands = 8)
-    }),
-
-    // PSEUDO-RELEVANCE-FEEDBACK QUERY EXPANSION (Rocchio): BM25 top-10
-    // feedback docs for the q75 probe query (rounded-rank + id
-    // tie-break), then the 15 strongest expansion terms by all-integer
-    // (feedback df, tf, term) ranking. The corpus explode touches only
-    // matches; the feedback explode touches only 10 docs.
-    "q246_prf_expand" -> ((s, dir) => {
-      import graft.operators.Curation
-      Curation.prfExpand(t(s, dir, "documents"), "doc_id", "text",
-        Seq("spark", "query", "join"), fbK = 10, nExpand = 15)
-    }),
-
-    // LABEL PROPAGATION (Zhu-Ghahramani hard variant) on the trade
-    // graph: every 10th customer seeds its nation id, three synchronous
-    // plurality rounds with min-label ties, seeds pinned -- integer
-    // votes end to end, so the oracle can unroll round-for-round.
-    "q247_label_prop" -> ((s, dir) => {
-      import graft.operators.Graph
-      val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-      val l = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-      val edges = o.join(l, o("o_orderkey") === l("l_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + 1000000L).as("dst"))
-      val seeds = t(s, dir, "customer")
-        .filter(col("c_custkey") % 10 === 0)
-        .select(col("c_custkey"), col("c_nationkey"))
-      Graph.labelPropInt(edges, "src", "dst", seeds, "c_custkey",
-        "c_nationkey", iters = 3)
-    }),
-
-    // HOPPING (sliding) WINDOWS: 10-minute windows every 5 minutes
-    // over the event stream -- Spark's native sliding window() with the
-    // value sum on the exact integer milli lattice (float sums are
-    // partition-order-dependent; milli sums are not).
-    "q248_hopping_window" -> ((s, dir) => {
-      import graft.streaming.EventStream
-      val ev = events(s, dir).select(
-        timestamp_micros(expr("ts div 1000")).as("ts"),
-        col("event_type"), col("value"))
-      EventStream.hoppingAgg(ev, "ts", "event_type", "value",
-          "10 minutes", "5 minutes", "1 hour")
-        .select(unix_micros(col("window_start")).as("w_start_us"),
-          col("event_type"), col("n"), col("total_milli"))
-    }),
-
-    // SELF-INSTRUCT ROUGE-L DEDUP: candidate instructions vs a bounded
-    // seed pool -- max LCS-F per candidate with min-seed-id argmax,
-    // keep = best F under 0.7. Candidates every 5th doc, seeds every
-    // 20th (a subset -- those candidates self-match at 10^6 and drop,
-    // the correct verdict); 8-token heads keep the DP bounded.
-    "q249_rouge_dedup" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      val w = split(trim(col("text")), " ")
-      val head8 = array_join(slice(w, lit(1), lit(8)), " ")
-      val docs = t(s, dir, "documents")
-      val cands = docs.filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), head8.as("itext"))
-      val pool = docs.filter(col("doc_id") % 20 === 0)
-        .select(col("doc_id").as("sid"), head8.as("stext"))
-      EvalMetrics.rougeDedup(cands, "doc_id", "itext", pool, "sid",
-        "stext", thresholdPpm = 700000L)
-    }),
-
-    // LAST-TOUCH ATTRIBUTION: each purchase attributed to the user's
-    // latest click STRICTLY before it -- a RANGE window bound (not
-    // ROWS: equal-ts pairs must never attribute, and ROWS is arrival-
-    // order-dependent on ties); organic purchases keep null.
-    "q250_attribution" -> ((s, dir) => {
-      import graft.operators.Funnel
-      Funnel.attributeLastTouch(events(s, dir), "user_id", "event_type",
-        "ts", "event_id", "purchase", "click")
-    }),
-
-    // FUNNEL CONVERSION-LATENCY HISTOGRAM: per consecutive step pair,
-    // completion latencies in integer minute buckets -- the "how long"
-    // view next to q241's "how many"; one funnel pass + one map-side-
-    // combined count.
-    "q251_funnel_latency" -> ((s, dir) => {
-      import graft.operators.Funnel
-      Funnel.funnelLatencyHistogram(events(s, dir), "user_id",
-        "event_type", "ts", Seq("view", "click", "purchase"),
-        bucketWidth = 60000000000L)
-    }),
-
-    // MMR DIVERSIFIED TOP-K (Carbonell-Goldstein): greedy
-    // lambda*rel - (1-lambda)*max_cos_to_selected with lambda = 1/2
-    // exact in binary, kernels in ascending-j order -- the q137
-    // discipline, so the oracle replays every pick bit-for-bit.
-    "q252_mmr_select" -> ((s, dir) => {
-      import graft.operators.Similarity
-      val q = Array.tabulate(64)(i => ((i + 1) % 5 - 2).toDouble)
-      Similarity.mmrSelect(t(s, dir, "embeddings"), "vec_id",
-          "embedding", q, k = 6, lambda = 0.5)
-        .select(col("pick"), col("vec_id"),
-          round(col("score"), 6).as("score"))
-    }),
-
-    // GAZETTEER ENTITY TAGGING: dictionary phrases (the 3rd-4th token
-    // bigram of every 50th doc) matched exactly across the corpus --
-    // per (doc, entity) hit count and first position; bounded
-    // broadcast dictionary, row-local slice-equality probes. Every
-    // 31st doc has its spaces rewritten to tab/newline whitespace --
-    // phrases occurring there MUST still tag (both sides tokenize
-    // \s+; the round-15 single-space doc split silently missed them).
-    "q253_gazetteer" -> ((s, dir) => {
-      import graft.operators.Curation
-      val docs0 = t(s, dir, "documents")
-      val docs = docs0.withColumn("text",
-        when(col("doc_id") % 31 === 0,
-          regexp_replace(col("text"), " ", "\t\n")).otherwise(col("text")))
-      val w = split(trim(col("text")), "\\s+")
-      val gaz = docs.filter(col("doc_id") % 50 === 0 && size(w) >= 4)
-        .select(concat(lit("e"), col("doc_id")).as("entity"),
-          array_join(slice(w, lit(3), lit(2)), " ").as("phrase"))
-      Curation.gazetteerTag(docs, "doc_id", "text", gaz, "entity",
-        "phrase")
-    }),
-
-    // A/B CONVERSION ANALYSIS: per-user variant (user_id parity) and
-    // purchase conversion folded to the 2x2 table, ppm rates, risk
-    // difference, and the chi-square statistic on an exact integer
-    // lattice (one IEEE division at the end).
-    "q254_ab_test" -> ((s, dir) => {
-      import graft.operators.Experiment
-      Experiment.abTest(
-        events(s, dir).withColumn("variant", pmod(col("user_id"), lit(2L))),
-        "user_id", "variant", "event_type", "purchase")
-    }),
-
-    // COHORT RETENTION TRIANGLE: users by first-seen hour, activity
-    // per hour offset, retention on the ppm lattice -- integer period
-    // buckets, one distinct reduction, map-side combined.
-    "q255_retention" -> ((s, dir) => {
-      import graft.operators.Experiment
-      Experiment.retentionCohorts(events(s, dir), "user_id", "ts",
-        periodNs = 3600000000000L)
-    }),
-
-    // COHEN'S KAPPA: agreement between two deterministic raters over
-    // the corpus -- exact integer lattice, a single scalar row.
-    "q256_kappa" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      val rated = t(s, dir, "documents").select(
-        when(col("doc_id") % 3 === 0, lit("good")).otherwise(lit("bad"))
-          .as("r1"),
-        when((col("doc_id") * 7) % 10 < 4, lit("good"))
-          .otherwise(lit("bad")).as("r2"))
-      EvalMetrics.cohensKappa(rated, "r1", "r2")
-    }),
-
-    // JSON NUMERIC PROFILE: the event `props` payload (enriched with a
-    // planted extra key on every 5th event and CORRUPTED on every
-    // 97th) profiled at $.k per event type -- present/missing split,
-    // sum/min/max/distinct; get_json_object + try_cast, codegen'd,
-    // one aggregation pass, malformed rows count missing (never throw).
-    "q257_json_stats" -> ((s, dir) => {
-      import graft.operators.SemiStructured
-      val ev = events(s, dir)
-      val pr = when(col("event_id") % 97 === 0, lit("{oops"))
-        .when(col("event_id") % 5 === 0,
-          regexp_replace(col("props"), "\\}$", ", \"extra\": 1}"))
-        .otherwise(col("props"))
-      SemiStructured.jsonNumericStats(
-        ev.select(col("event_type"), pr.as("p")), "p", "$.k",
-        "event_type")
-    }),
-
-    // JSON KEY INVENTORY: per event type, how many rows carry each
-    // top-level key -- schema-drift visibility, with malformed
-    // payloads surfacing as __invalid__ instead of vanishing.
-    "q258_json_keys" -> ((s, dir) => {
-      import graft.operators.SemiStructured
-      val ev = events(s, dir)
-      val pr = when(col("event_id") % 97 === 0, lit("{oops"))
-        .when(col("event_id") % 5 === 0,
-          regexp_replace(col("props"), "\\}$", ", \"extra\": 1}"))
-        .otherwise(col("props"))
-      SemiStructured.jsonKeyReport(
-        ev.select(col("event_type"), pr.as("p")), "p", "event_type")
-    }),
-
-    // TRIMMED MEAN: robust per-language document-length summary --
-    // symmetric 10% rank cut with the id tie-break (deterministic
-    // across engines), mean on the ppm lattice.
-    "q259_trimmed_mean" -> ((s, dir) => {
-      import graft.operators.Ops
-      Ops.trimmedMeanPpm(t(s, dir, "documents"), "lang", "n_chars",
-        "doc_id", trimPct = 10)
-    }),
-
-    // USER-JOURNEY TRANSITION MATRIX: first-order Markov counts over
-    // each user's (ts, event_id)-ordered event sequence, row-
-    // normalized to ppm -- one user-partitioned lead window.
-    "q260_transitions" -> ((s, dir) => {
-      import graft.operators.Funnel
-      Funnel.transitionMatrix(events(s, dir), "user_id", "event_type",
-        "ts", "event_id")
-    }),
-
-    // SNIPPET EXTRACTION: per matching document the 8-token window
-    // with the most q75-probe-term hits (earliest on ties) and its
-    // text -- the search-result highlighting pass; O(n) sliding sum
-    // per doc, row-local, misses absent.
-    "q261_snippets" -> ((s, dir) => {
-      import graft.operators.Curation
-      Curation.snippets(t(s, dir, "documents"), "doc_id", "text",
-        Seq("spark", "query", "join"), window = 8)
-    }),
-
-    // ROLLING ACTIVE USERS: distinct users in the trailing 6 hours at
-    // every 1-hour slide start -- the DAU/WAU family; each event lands
-    // in 6 window replicas inside codegen, one distinct reduction.
-    "q262_rolling_actives" -> ((s, dir) => {
-      import graft.operators.Experiment
-      Experiment.rollingActives(events(s, dir), "user_id", "ts",
-        windowNs = 21600000000000L, slideNs = 3600000000000L)
-    }),
-
-    // RIGHT-TO-BE-FORGOTTEN AUDIT: one row per deletion request
-    // (every 13th user id up to 200 -- some match nothing) with the
-    // event rows the cascade removes; no-match requests report 0,
-    // proving they were PROCESSED, not skipped.
-    "q263_forget_audit" -> ((s, dir) => {
-      import graft.operators.Anonymize
-      val tomb = s.range(0, 200).filter(col("id") % 13 === 0)
-        .select(col("id").as("uid"))
-      Anonymize.forgetAudit(events(s, dir), "user_id", tomb, "uid")
-    }),
-
-    // CROSS-SOURCE QUANTILE NORMALIZATION: document lengths mapped to
-    // within-source percentile ranks on the ppm lattice -- the score
-    // equalizer run before any cross-source cut or mixing decision.
-    "q264_quantile_norm" -> ((s, dir) => {
-      import graft.operators.Ops
-      Ops.quantileNormalizePpm(
-        t(s, dir, "documents").select(col("doc_id"), col("source"),
-          col("n_chars")),
-        "source", "n_chars", "doc_id")
-    }),
-
-    // DATA-QUALITY PROFILE: rows / nulls / exact distincts / string-
-    // rendered extremes per column of lineitem, ONE aggregation pass
-    // for all columns, melted to one row per column.
-    "q265_profile" -> ((s, dir) => {
-      import graft.operators.Ops
-      Ops.profile(t(s, dir, "lineitem"),
-        Seq("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag",
-          "l_linestatus"))
-    }),
-
-    // A/B/n CONVERSION ANALYSIS: three arms (user_id mod 3), per-arm
-    // users/converters/rate and the k-by-2 chi-square -- integer-exact
-    // residuals, per-cell IEEE division floored to micro units, integer
-    // sum (the oracle replays every cell in the same op order).
-    "q266_ab_test_k" -> ((s, dir) => {
-      import graft.operators.Experiment
-      Experiment.abTestK(
-        events(s, dir).withColumn("variant", pmod(col("user_id"), lit(3L))),
-        "user_id", "variant", "event_type", "purchase")
-    }),
-
-    // DP NOISY SUMS, the clipped-contribution release: per key the sum
-    // of per-row values clipped to +/-500 centi-units (the sensitivity
-    // bound -- one row moves the sum by <= clip), plus the q243 Lehmer
-    // geometric draw SCALED BY clip. No zero clamp: sums may be
-    // negative. Values enter on an exact centi lattice (floor(value *
-    // 100)) so both engines clip identical integers.
-    "q267_noisy_sums" -> ((s, dir) => {
-      import graft.operators.Anonymize
-      Anonymize.noisySums(
-        events(s, dir).select(pmod(col("user_id"), lit(53L)).as("key"),
-          floor(col("value") * 100).cast("long").as("v")),
-        "key", "v", clip = 500L, seed = 11L)
-    }),
-
-    // L-DIVERSITY RELEASE: customers release only when their
-    // quasi-identifier group (nation, segment) has >= 7 members AND
-    // >= 4 distinct sensitive values (custkey mod 5 -- the derived
-    // sensitive attribute keeps diversity controlled); group size and
-    // diversity attached. One agg computing both + one null-safe join.
-    "q268_l_diversity" -> ((s, dir) => {
-      import graft.operators.Anonymize
-      Anonymize.kAnonymizeLDiverse(
-        t(s, dir, "customer").select(col("c_custkey"),
-          col("c_nationkey"), col("c_mktsegment"),
-          pmod(col("c_custkey"), lit(5L)).as("sens")),
-        Seq("c_nationkey", "c_mktsegment"), "sens", k = 7, l = 4)
-        .select(col("c_custkey"), col("c_nationkey"),
-          col("c_mktsegment"), col("qi_n"), col("qi_l"))
-    }),
-
-    // RECURSIVE JSON PATH PROFILE: nested payloads (object -> object ->
-    // array -> scalars, plus planted bare-scalar and malformed rows)
-    // inventoried per event type -- every path within depth 4 with its
-    // value class and row count; parse ONCE to variant at the root,
-    // map-side variant_explode per level, one final count shuffle. The
-    // oracle recurses the same paths with json_extract/json_type.
-    "q269_json_paths" -> ((s, dir) => {
-      import graft.operators.SemiStructured
-      val ev = events(s, dir)
-      val nested = concat(lit("{\"u\":"), col("user_id"),
-        lit(",\"meta\":{\"k\":"), pmod(col("user_id"), lit(7L)),
-        lit(",\"t\":[\"a\","), pmod(col("user_id"), lit(3L)),
-        when(col("event_id") % 5 === 0,
-          lit("],\"extra\":{\"d\":true}},\"z\":null}"))
-          .otherwise(lit("]},\"z\":null}")))
-      val pr = when(col("event_id") % 97 === 0, lit("{oops"))
-        .when(col("event_id") % 13 === 0, lit("42"))
-        .otherwise(nested)
-      SemiStructured.jsonPathProfile(
-        ev.select(col("event_type"), pr.as("p")), "p", "event_type",
-        maxDepth = 4)
-    }),
-
-    // CORPUS BLEU: the q238 per-segment statistics summed per system
-    // (doc_id mod 3) FIRST, then the geometric precision product on
-    // the sums -- corpus BLEU is not a mean of segment scores; BP
-    // inputs (length sums) ride along for the caller-side exp.
-    "q270_corpus_bleu" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      val w = split(trim(col("text")), " ")
-      val ref = array_join(slice(w, lit(1), lit(10)), " ")
-      val cand = when(col("doc_id") % 3 === 0, ref)
-        .when(col("doc_id") % 3 === 1,
-          array_join(slice(w, lit(3), lit(10)), " "))
-        .otherwise(array_join(slice(w, lit(1), lit(3)), " "))
-      val stats = EvalMetrics.bleuStats(
-        t(s, dir, "documents").select(col("doc_id"),
-          pmod(col("doc_id"), lit(3L)).as("sys"),
-          cand.as("cand"), ref.as("ref")),
-        "cand", "ref")
-      EvalMetrics.corpusBleu(stats, Seq("sys"))
-    }),
-
-    // FUNNEL WITH STEP TIMEOUT: view -> click -> purchase where each
-    // step must land within 30 minutes of the previous one -- the
-    // "converted within the session" product question; same chained
-    // min-agg shape as q241 with one extra upper-bound predicate.
-    "q271_funnel_within" -> ((s, dir) => {
-      import graft.operators.Funnel
-      Funnel.funnelWithin(events(s, dir), "user_id", "event_type", "ts",
-        Seq("view", "click", "purchase"),
-        maxStepGap = 1800000000000L)
-    }),
-
-    // SESSIONIZATION: per-user event streams cut at > 30-minute
-    // inactivity gaps, one row per session with event count, bounds,
-    // and duration -- (ts, event_id)-ordered so equal-timestamp runs
-    // sessionize deterministically; one user-partitioned window pass.
-    "q272_sessions" -> ((s, dir) => {
-      import graft.operators.Funnel
-      Funnel.sessionStats(events(s, dir), "user_id", "ts", "event_id",
-        gapNs = 1800000000000L)
-    }),
-
-    // MANN-WHITNEY U per experiment (event type): the nonparametric
-    // two-sample test for the continuous `value` metric (centi
-    // lattice), groups by user parity -- midranks exact on a DOUBLED
-    // rank lattice, one experiment-partitioned window over distinct
-    // values, U statistics per experiment.
-    "q273_mann_whitney" -> ((s, dir) => {
-      import graft.operators.Experiment
-      Experiment.mannWhitneyU(
-        events(s, dir).select(col("event_type"),
-          pmod(col("user_id"), lit(2L)).as("g"),
-          floor(col("value") * 100).cast("long").as("v")),
-        "event_type", "g", "v")
-    }),
-
-    // FLEISS' KAPPA: three deterministic raters over every document
-    // (long form via explode) -- multi-rater agreement, integer-exact
-    // to one final division; the oracle replays the same integer
-    // algebra.
-    "q274_fleiss_kappa" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      val r = t(s, dir, "documents").select(col("doc_id"),
-        explode(array(
-          when(col("doc_id") % 3 === 0, "good")
-            .when(col("doc_id") % 3 === 1, "bad").otherwise("meh"),
-          when((col("doc_id") * 7) % 10 < 4, "good").otherwise("bad"),
-          when((col("doc_id") * 13) % 5 < 2, "good").otherwise("meh")))
-          .as("label"))
-      EvalMetrics.fleissKappa(r, "doc_id", "label")
-    }),
-
-    // SAMPLE-RATIO-MISMATCH CHECK: observed per-variant user counts
-    // (user_id mod 4) vs a deliberately DIFFERENT 2:1:1:1 design --
-    // the chi-square goodness-of-fit on the abTestK micro lattice
-    // flags the mismatch; zero-user designed variants would report 0.
-    "q275_srm" -> ((s, dir) => {
-      import graft.operators.Experiment
-      Experiment.srmCheck(
-        events(s, dir).withColumn("variant", pmod(col("user_id"), lit(4L))),
-        "user_id", "variant",
-        Map(0L -> 2L, 1L -> 1L, 2L -> 1L, 3L -> 1L))
-    }),
-
-    // WINSORIZATION: per-language document lengths clamped to the
-    // symmetric 10% rank-cut boundary values (the row-preserving
-    // sibling of q259's trimmed mean) -- deterministic rank rule with
-    // the id tie-break, no percentile interpolation.
-    "q276_winsorize" -> ((s, dir) => {
-      import graft.operators.Ops
-      Ops.winsorizePpm(t(s, dir, "documents"), "lang", "n_chars",
-        "doc_id", trimPct = 10)
-    }),
-
-    // LEVEL-SHIFT SCAN: per event type, trailing vs leading 32-row
-    // value sums (centi lattice) at every full-window position -- the
-    // drift monitor; one key-partitioned window pass, two ROWS frames.
-    "q277_level_shift" -> ((s, dir) => {
-      import graft.operators.Drift
-      Drift.levelShift(
-        events(s, dir).select(col("event_type"), col("ts"),
-          col("event_id"),
-          floor(col("value") * 100).cast("long").as("v")),
-        "event_type", "ts", "event_id", "v", w = 32)
-    }),
-
-    // K-ANONYMITY GENERALIZATION LADDER: account balances (exact
-    // centi lattice) bucketed at the FIRST width in {100, 1000,
-    // 10000} dollars at which every (bucket, segment) group reaches
-    // k=7 -- the oracle re-derives the chosen width itself, so the
-    // row stays green across scale factors.
-    "q278_generalize_k" -> ((s, dir) => {
-      import graft.operators.Anonymize
-      Anonymize.generalizeToK(
-        t(s, dir, "customer").select(col("c_custkey"),
-          col("c_mktsegment"),
-          floor(col("c_acctbal") * 100).cast("long").as("cents")),
-        "cents", Seq("c_mktsegment"), k = 7,
-        widths = Seq(10000L, 100000L, 1000000L))
-    }),
-
-    // TYPED JSON FLATTENING: four paths of the q269 nested payload
-    // projected to typed columns in one codegen pass -- malformed and
-    // bare-scalar rows yield nulls, never throw.
-    "q279_json_flatten" -> ((s, dir) => {
-      import graft.operators.SemiStructured
-      val ev = events(s, dir)
-      val nested = concat(lit("{\"u\":"), col("user_id"),
-        lit(",\"meta\":{\"k\":"), pmod(col("user_id"), lit(7L)),
-        lit(",\"t\":[\"a\","), pmod(col("user_id"), lit(3L)),
-        lit("]},\"z\":null}"))
-      val pr = when(col("event_id") % 97 === 0, lit("{oops"))
-        .when(col("event_id") % 13 === 0, lit("42"))
-        .otherwise(nested)
-      SemiStructured.jsonFlatten(
-          ev.select(col("event_id"), col("event_type"), pr.as("p")), "p",
-          Seq(("u_id", "$.u", "BIGINT"), ("k", "$.meta.k", "BIGINT"),
-            ("t1", "$.meta.t[1]", "STRING"), ("zz", "$.z", "STRING")))
-        .select(col("event_id"), col("event_type"), col("u_id"),
-          col("k"), col("t1"), col("zz"))
-    }),
-
-    // TRIANGLE COUNTS + local clustering coefficient over a 4-clique
-    // customer graph (groups of 4 consecutive custkeys, all pairs,
-    // plus the c -> c+1 chain) -- degree-ordered wedge enumeration,
-    // orientation-invariant result replayed id-ordered by the oracle.
-    "q280_triangles" -> ((s, dir) => {
-      import graft.operators.Graph
-      Graph.triangleCounts(cliqueChainEdges(s, dir), "src", "dst")
-    }),
-
-    // CUPED VARIANCE REDUCTION: per-user pre metric (view-event value,
-    // centi lattice) vs post metric (click-event value) -- theta from
-    // exact integer sums, one IEEE division, fixed-op-order per-row
-    // adjustment replayed verbatim by the oracle.
-    "q281_cuped" -> ((s, dir) => {
-      import graft.operators.Experiment
-      val ev = events(s, dir)
-      val perUser = ev.groupBy(col("user_id")).agg(
-        coalesce(sum(when(col("event_type") === "view",
-          floor(col("value") * 100).cast("long"))), lit(0L)).as("pre"),
-        coalesce(sum(when(col("event_type") === "click",
-          floor(col("value") * 100).cast("long"))), lit(0L)).as("post"))
-      Experiment.cuped(perUser, "user_id", "pre", "post")
-    }),
-
-    // KAPLAN-MEIER SURVIVAL: per-user observation span in whole hours,
-    // event = reached a purchase (else censored), two arms by user id
-    // parity -- risk sets from one descending cumulative window, the
-    // ppm survival recurrence folded per group and replayed by the
-    // oracle as a recursive CTE.
-    "q282_survival" -> ((s, dir) => {
-      import graft.operators.Experiment
-      val subj = events(s, dir).groupBy(col("user_id")).agg(
-        expr("(max(ts) - min(ts)) div 3600000000000L").as("dur"),
-        max(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("ev"))
-        .withColumn("grp", pmod(col("user_id"), lit(2L)))
-      Experiment.survivalKm(subj, "grp", "dur", "ev")
-    }),
-
-    // BENFORD FIRST-DIGIT AUDIT: account balances on the centi lattice
-    // per market segment -- nine zero-filled digit rows per key, the
-    // visible zero bucket, and the goodness-of-fit chi-square on the
-    // exact micro lattice.
-    "q283_benford" -> ((s, dir) => {
-      import graft.operators.Drift
-      Drift.benfordCheck(
-        t(s, dir, "customer").select(col("c_mktsegment"),
-          floor(col("c_acctbal") * 100).cast("long").as("v")),
-        "c_mktsegment", "v")
-    }),
-
-    // CHI-SQUARE HISTOGRAM DRIFT: per event type, the user-id-bucket
-    // histogram compared between the two event-id parities -- the
-    // two-sample homogeneity statistic on the micro lattice.
-    "q284_chi_drift" -> ((s, dir) => {
-      import graft.operators.Drift
-      Drift.chiSquareDrift(
-        events(s, dir).select(col("event_type"),
-          pmod(col("user_id"), lit(8L)).as("bucket"),
-          (col("event_id") % 2).as("period")),
-        "event_type", "bucket", "period")
-    }),
-
-    // GROUPED OLS: per event type, the regression of centi value on
-    // hour-of-week -- five exact integer sums, two floored IEEE
-    // divisions in a fixed op order; num/den emitted exact.
-    "q285_ols" -> ((s, dir) => {
-      import graft.operators.Ops
-      Ops.groupOls(
-        events(s, dir).select(col("event_type"),
-          expr("pmod((ts - pmod(ts, 3600000000000L)) " +
-            "div 3600000000000L, 168L)").as("x"),
-          floor(col("value") * 100).cast("long").as("y")),
-        "event_type", "x", "y")
-    }),
-
-    // SEASONAL PROFILE: per event type the hour-of-day activity shape
-    // (24 phases, pmod-floor slotting) -- counts, exact sums, floored
-    // mean and the seasonal index vs the key mean.
-    "q286_seasonal" -> ((s, dir) => {
-      import graft.operators.Ops
-      Ops.seasonalProfile(
-        events(s, dir).select(col("event_type"), col("ts"),
-          floor(col("value") * 100).cast("long").as("v")),
-        "event_type", "ts", "v",
-        slotNs = 3600000000000L, periodSlots = 24)
-    }),
-
-    // TRENDING TERMS between the two doc-id parities of the corpus:
-    // add-one-smoothed frequency ratio on the exact DECIMAL lattice,
-    // top 100 with the term tie-break.
-    "q287_trending" -> ((s, dir) => {
-      import graft.operators.Curation
-      Curation.trendingTerms(
-        t(s, dir, "documents").select(col("text"),
-          (col("doc_id") % 2).as("p")),
-        "text", "p", k = 100, minC1 = 2L)
-    }),
-
-    // K-CORE DECOMPOSITION: the q280 clique+chain graph sparsified by
-    // (src+dst) % 3 != 0, peeled to the 2-core with convergence
-    // detection -- the oracle replays 8 unconditional peels (idempotent
-    // past the fixpoint the engine refuses to miss).
-    "q288_k_core" -> ((s, dir) => {
-      import graft.operators.Graph
-      Graph.kCoreInt(cliqueChainEdges(s, dir)
-          .filter((col("src") + col("dst")) % 3 =!= 0),
-        "src", "dst", k = 2, maxIters = 8)
-    }),
-
-    // DISTINCTIVE TERMS per source: group-vs-rest smoothed ratio on
-    // the exact DECIMAL lattice, top 20 per source with the term
-    // tie-break, minCg = 3.
-    "q289_distinctive" -> ((s, dir) => {
-      import graft.operators.Curation
-      Curation.distinctiveTerms(
-        t(s, dir, "documents").select(col("text"), col("source")),
-        "text", "source", k = 20, minCg = 3L)
-    }),
-
-    // PATH MINING: top 50 five-event journeys over the event stream,
-    // (ts, event_id) order, count-then-path determinism.
-    "q290_paths" -> ((s, dir) => {
-      import graft.operators.Funnel
-      Funnel.pathMining(events(s, dir), "user_id", "event_type",
-        "ts", "event_id", n = 5, k = 50)
-    }),
-
-    // DIFFERENCE-IN-DIFFERENCES: user-id parity as the treatment flag,
-    // event-id parity as the period, centi-lattice values -- the 2x2
-    // estimator with every mean a floored IEEE division.
-    "q291_did" -> ((s, dir) => {
-      import graft.operators.Experiment
-      Experiment.diffInDiff(
-        events(s, dir).select(pmod(col("user_id"), lit(2L)).as("g"),
-          (col("event_id") % 2).as("p"),
-          floor(col("value") * 100).cast("long").as("y")),
-        "g", "p", "y")
-    }),
-
-    // DEGREE ASSORTATIVITY of the q280 clique+chain graph: the
-    // symmetrized Pearson r without a square root, exact integer sums,
-    // one floored IEEE division.
-    "q292_assortativity" -> ((s, dir) => {
-      import graft.operators.Graph
-      Graph.degreeAssortativity(cliqueChainEdges(s, dir), "src", "dst")
-    }),
-
-    // MRR@10 of the first purchase in each user's event ranking
-    // ((ts, event_id) order) -- reciprocal ranks exact on the ppm
-    // lattice, misses count as zero, corpus mean attached.
-    "q293_mrr" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val ranked = events(s, dir).select(col("user_id"),
-          col("ts"), col("event_id"),
-          when(col("event_type") === "purchase", 1L).otherwise(0L)
-            .as("rel"))
-        .withColumn("rank", row_number().over(w))
-      EvalMetrics.mrrAtK(ranked, "user_id", "rank", "rel", k = 10)
-    }),
-
-    // LINK PREDICTION: top 100 non-adjacent pairs of the clique+chain
-    // graph by common-neighbor Jaccard -- wedge enumeration at the
-    // shared neighbor, exact ppm, (score, v, w) determinism.
-    "q294_link_pred" -> ((s, dir) => {
-      import graft.operators.Graph
-      Graph.jaccardLinkPred(cliqueChainEdges(s, dir), "src", "dst",
-        k = 100)
-    }),
-
-    // JSON SCHEMA DRIFT between the event-id parities: period 1 turns
-    // meta.k into a string and grows meta.v2 -- one removed+added
-    // type-change pair, one added path, invalid payloads stable.
-    "q295_json_drift" -> ((s, dir) => {
-      import graft.operators.SemiStructured
-      val ev = events(s, dir)
-      val p0 = concat(lit("{\"u\":"), col("user_id"),
-        lit(",\"meta\":{\"k\":"), pmod(col("user_id"), lit(7L)),
-        lit("}}"))
-      val p1 = concat(lit("{\"u\":"), col("user_id"),
-        lit(",\"meta\":{\"k\":\"s"), pmod(col("user_id"), lit(7L)),
-        lit("\",\"v2\":["), pmod(col("user_id"), lit(3L)),
-        lit("]}}"))
-      val payload = when(col("event_id") % 97 === 0, lit("{oops"))
-        .when(col("event_id") % 2 === 0, p0).otherwise(p1)
-      SemiStructured.jsonSchemaDrift(
-        ev.select((col("event_id") % 2).as("p"), payload.as("j")),
-        "j", "p", maxDepth = 3)
-    }),
-
-    // STICKINESS (DAU/WAU shape): hourly-aligned window starts, the
-    // 6h distinct actives over the 24h distinct actives on the exact
-    // ppm lattice.
-    "q296_stickiness" -> ((s, dir) => {
-      import graft.operators.Experiment
-      Experiment.stickiness(events(s, dir), "user_id", "ts",
-        shortNs = 21600000000000L, longNs = 86400000000000L,
-        slideNs = 3600000000000L)
-    }),
-
-    // PAIRWISE WIN RATES: synthetic judge verdicts over model pairs
-    // (user-id arithmetic), canonicalized with verdict flips, the
-    // tie-splitting half-count lattice.
-    "q297_winrate" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      val ev = events(s, dir)
-      val a = pmod(col("user_id"), lit(5L))
-      val b = pmod(col("user_id") * 3 + 1, lit(5L))
-      EvalMetrics.winRate(
-        ev.select(a.as("ma"), b.as("mb"),
-            pmod(floor(col("value") * 100).cast("long"), lit(3L))
-              .as("w"))
-          .filter(col("ma") =!= col("mb")),
-        "ma", "mb", "w")
-    }),
-
-    // BFS HOP DISTANCES from the sparse seed set (every 100th
-    // custkey) over the UNDIRECTED clique+chain graph, 6-hop bound --
-    // frontier-synchronous expansion, unreachable nodes absent.
-    "q298_bfs" -> ((s, dir) => {
-      import graft.operators.Graph
-      val e = cliqueChainEdges(s, dir)
-      val both = e.unionByName(
-        e.select(col("dst").as("src"), col("src").as("dst")))
-      val seeds = t(s, dir, "customer")
-        .filter(col("c_custkey") % 100 === 1)
-        .select(col("c_custkey").as("seed"))
-      Graph.bfsDistanceInt(both, "src", "dst", seeds, "seed",
-        maxHops = 6)
-    }),
-
-    // FLESCH READING EASE per document: vowel-group syllables,
-    // [.!?]+ sentences, the fold in a fixed double op order --
-    // unscorable (null-text / zero-word / zero-sentence) rows null.
-    "q299_readability" -> ((s, dir) => {
-      import graft.operators.Curation
-      Curation.readability(t(s, dir, "documents"), "doc_id", "text")
-    }),
-
-    // KEYED PSEUDONYMIZATION of customer ids on the 2^31 lattice
-    // (two public multiplicative rounds + salt), join-consistent and
-    // engine-exact; the market segment rides along untouched.
-    "q300_pseudonymize" -> ((s, dir) => {
-      import graft.operators.Anonymize
-      Anonymize.pseudonymize(
-        t(s, dir, "customer").select(col("c_custkey"),
-          col("c_nationkey"), col("c_mktsegment")),
-        Seq("c_custkey", "c_nationkey"), salt = 20260816L)
-    }),
-
-    // NULL-RATE DRIFT between the event-id parities over two derived
-    // nullable columns -- one aggregation pass for both columns,
-    // exact ppm rates.
-    "q301_null_drift" -> ((s, dir) => {
-      import graft.operators.Drift
-      Drift.nullRateDrift(
-        events(s, dir).select((col("event_id") % 2).as("p"),
-          when(col("value") >= 50, col("value")).as("big_v"),
-          when(col("event_id") % 5 =!= 0, col("props")).as("props5")),
-        Seq("big_v", "props5"), "p")
-    }),
-
-    // GINI CONCENTRATION of document lengths per source -- the exact
-    // mean-difference form, one rank window + one fold, one IEEE
-    // division.
-    "q302_gini" -> ((s, dir) => {
-      import graft.operators.Ops
-      Ops.giniPpm(t(s, dir, "documents"), "source", "n_chars")
-    }),
-
-    // EXPECTED CALIBRATION ERROR, fully integer-exact: synthetic
-    // classifier confidences on the ppm lattice vs a deterministic
-    // label rule, 10 bins, per-bin gaps |1e6*pos - conf_sum|.
-    "q303_ece" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      EvalMetrics.ece(
-        t(s, dir, "documents").select(
-          pmod(col("doc_id") * 37987, lit(1000001L)).as("conf"),
-          when(col("doc_id") % 7 < 3, 1L).otherwise(0L).as("y")),
-        "conf", "y", bins = 10)
-    }),
-
-    // EDGE RECIPROCITY of a deterministic directed user graph --
-    // returned-link ratio on the exact ppm lattice, loops excluded.
-    "q304_reciprocity" -> ((s, dir) => {
-      import graft.operators.Graph
-      val u = events(s, dir).select(col("user_id")).distinct()
-      val fwd = u.select(col("user_id").as("src"),
-        pmod(col("user_id") * 7 + 3, lit(151L)).as("dst"))
-      // every 5th user's link is returned -- reciprocity ~1/5
-      val back = fwd.filter(col("src") % 5 === 0)
-        .select(col("dst").as("src"), col("src").as("dst"))
-      Graph.reciprocity(fwd.unionByName(back), "src", "dst")
-    }),
-
-    // BRIER SCORE per source for the q303 synthetic classifier --
-    // integer-exact mean squared error on the ppm lattice.
-    "q305_brier" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      EvalMetrics.brierScore(
-        t(s, dir, "documents").select(col("source"),
-          pmod(col("doc_id") * 37987, lit(1000001L)).as("conf"),
-          when(col("doc_id") % 7 < 3, 1L).otherwise(0L).as("y")),
-        "source", "conf", "y")
-    }),
-
-    // ROC AUC per source via the Mann-Whitney midrank lattice --
-    // integer-exact, ties half-credited.
-    "q306_auc" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      EvalMetrics.aucPpm(
-        t(s, dir, "documents").select(col("source"),
-          pmod(col("doc_id") * 37987, lit(1000001L)).as("conf"),
-          when(col("doc_id") % 7 < 3, 1L).otherwise(0L).as("y")),
-        "source", "conf", "y")
-    }),
-
-    // SITEMAP EXTRACTION: synthetic sitemap / sitemap-index / junk
-    // documents -- one row per <loc>, lastmod nullable, &amp; decoded,
-    // all codegen'd row-local regex work.
-    "q307_sitemap" -> ((s, dir) => {
-      import graft.operators.Crawl
-      val id = col("doc_id").cast("string")
-      val xml = when(col("doc_id") % 3 === 0,
-        concat(lit("<urlset>\n<url><loc> http://"), col("source"),
-          lit(".example.org/p?a=1&amp;b="), id,
-          lit(" </loc><lastmod>2026-01-0"),
-          (col("doc_id") % 9 + 1).cast("string"),
-          lit("</lastmod></url>\n<url><loc>http://"), col("source"),
-          lit(".example.org/q"), id, lit("</loc></url>\n</urlset>")))
-        .when(col("doc_id") % 3 === 1,
-          concat(lit("<sitemapindex><sitemap><loc>http://"),
-            col("source"), lit(".example.org/s"), id,
-            lit(".xml</loc></sitemap></sitemapindex>")))
-        .otherwise(lit("plain text, no sitemap entries"))
-      Crawl.sitemapUrls(
-        t(s, dir, "documents").select(col("doc_id"), col("source"),
-          xml.as("xml")),
-        "doc_id", "xml")
-    }),
-
-    // WALD-WOLFOWITZ RUNS COUNT per event type: value-threshold binary
-    // sequence in (ts, event_id) order -- exact run counts plus the
-    // expected-runs lattice; streaks or over-alternation both read as
-    // a gap from mu.
-    "q308_runs" -> ((s, dir) => {
-      import graft.operators.Ops
-      Ops.runsTest(
-        events(s, dir).select(col("event_type"), col("ts"),
-          col("event_id"),
-          when(col("value") >= 30, 1L).otherwise(0L).as("v")),
-        "event_type", "ts", "event_id", "v")
-    }),
-
-    // BENJAMINI-HOCHBERG FDR per event-type family: synthetic
-    // hypothesis p-values on the ppm lattice, the step-up rejection
-    // set via integer cross-multiplication at alpha = 5%.
-    "q309_bh" -> ((s, dir) => {
-      import graft.operators.Experiment
-      val hyp = events(s, dir)
-        .select(col("event_type"),
-          pmod(col("user_id"), lit(100L)).as("hyp"))
-        .distinct()
-        .withColumn("p_ppm",
-          when(col("hyp") < 10, col("hyp") * 137 + 3)
-            .otherwise(pmod(col("hyp") * 9973
-              + length(col("event_type")).cast("long") * 131071,
-              lit(1000001L))))
-      Experiment.benjaminiHochberg(hyp, "event_type", "hyp", "p_ppm",
-        alphaPpm = 50000L)
-    }),
-
-    // LOG-RANK TEST per experiment: the q282 subject derivation split
-    // into 3 experiments x 2 arms -- integer O/E1 on the micro
-    // lattice, the hypergeometric variance in one fixed double chain,
-    // chi-square inputs exact.
-    "q310_logrank" -> ((s, dir) => {
-      import graft.operators.Experiment
-      val subj = events(s, dir).groupBy(col("user_id")).agg(
-        expr("(max(ts) - min(ts)) div 3600000000000L").as("dur"),
-        max(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("ev"))
-        .withColumn("exp", pmod(expr("user_id div 2"), lit(3L)))
-        .withColumn("grp", pmod(col("user_id"), lit(2L)))
-      Experiment.logRank(subj, "exp", "grp", "dur", "ev")
-    }),
-
-    // KOLMOGOROV-SMIRNOV DRIFT per event type between the event-id
-    // parities over centi-lattice values -- D as an exact integer
-    // cross-multiplication over the pooled CDF, ks_ppm exact.
-    "q311_ks_drift" -> ((s, dir) => {
-      import graft.operators.Drift
-      Drift.ksDrift(
-        events(s, dir).select(col("event_type"),
-          (col("event_id") % 2).as("g"),
-          floor(col("value") * 100).cast("long").as("v")),
-        "event_type", "g", "v")
-    }),
-
-    // POPULATION STABILITY INDEX per event type over the q284
-    // user-bucket histogram -- add-one smoothed shares, per-bucket
-    // ln terms floored to micro in a fixed double op order.
-    "q312_psi" -> ((s, dir) => {
-      import graft.operators.Drift
-      Drift.psi(
-        events(s, dir).select(col("event_type"),
-          pmod(col("user_id"), lit(8L)).as("bucket"),
-          (col("event_id") % 2).as("period")),
-        "event_type", "bucket", "period")
-    }),
-
-    // BRADLEY-TERRY STRENGTHS over the q297 win-rate ledger: 4 MM
-    // rounds on the pure integer lattice (ties half-counted), the
-    // oracle replays every round in SQL.
-    "q313_bradley_terry" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      val ev = events(s, dir)
-      val a = pmod(col("user_id"), lit(5L))
-      val b = pmod(col("user_id") * 3 + 1, lit(5L))
-      val ledger = EvalMetrics.winRate(
-        ev.select(a.as("ma"), b.as("mb"),
-            pmod(floor(col("value") * 100).cast("long"), lit(3L))
-              .as("w"))
-          .filter(col("ma") =!= col("mb")),
-        "ma", "mb", "w")
-      EvalMetrics.bradleyTerry(ledger, iters = 4)
-    }),
-
-    // ENTROPY-l-DIVERSITY audit per (nation, balance-km-bucket) group
-    // with the market segment sensitive -- the skew-proof gate,
-    // H_micro on the exact floored-ln lattice vs ln(2).
-    "q314_entropy_l" -> ((s, dir) => {
-      import graft.operators.Anonymize
-      Anonymize.entropyLDiversityReport(
-        t(s, dir, "customer").select(
-          col("c_nationkey").cast("long").as("c_nationkey"),
-          (col("c_acctbal") - pmod(col("c_acctbal"), lit(2000.0)))
-            .cast("long").as("bal_bucket"),
-          col("c_mktsegment")),
-        Seq("c_nationkey", "bal_bucket"), "c_mktsegment",
-        k = 4, l = 2)
-    }),
-
-    // TWO-SIDED CUSUM over hourly centi-value sums per event type --
-    // the sequential shift detector folded into two exact window
-    // passes via the prefix-minimum identity; no float anywhere.
-    "q315_cusum" -> ((s, dir) => {
-      import graft.operators.Drift
-      val hourly = events(s, dir)
-        .select(col("event_type"),
-          expr("(ts - pmod(ts, 3600000000000L)) div 3600000000000L")
-            .as("h"),
-          floor(col("value") * 100).cast("long").as("v"))
-        .groupBy(col("event_type"), col("h"))
-        .agg(sum(col("v")).as("hv"))
-      Drift.cusum(hourly, "event_type", "h", "h", "hv",
-        mu = 500000L, kappa = 10000L)
-    }),
-
-    // THEIL-SEN ROBUST SLOPE of doc length vs doc id per source --
-    // pairwise slopes on the truncated-ppm lattice, lower median by
-    // rank, bounded O(n^2) with the loud group-size contract.
-    "q316_theil_sen" -> ((s, dir) => {
-      import graft.operators.Ops
-      Ops.theilSen(
-        t(s, dir, "documents").select(col("source"), col("doc_id"),
-          col("n_chars")),
-        "source", "doc_id", "n_chars", maxN = 1024)
-    }),
-
-    // NDCG@10 per source: graded relevance pmod(doc_id,4), ranks by
-    // doc id -- position terms on the fixed ln/ln2 micro lattice,
-    // ideal ordering via a source-partitioned rank window.
-    "q317_ndcg" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      val ranked = t(s, dir, "documents")
-        .select(col("source"), col("doc_id"),
-          pmod(col("doc_id"), lit(4L)).as("rel"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("source")).orderBy(col("doc_id")))
-          .cast("long"))
-      EvalMetrics.ndcgAtK(ranked, "source", "rank", "rel", k = 10)
-    }),
-
-    // EMBEDDING DRIFT: mean-vector cosine between the vec-id parities
-    // per label-mod-3 key -- exact milli-lattice dimension sums on
-    // DECIMAL, one exactly-rounded IEEE sqrt.
-    "q318_embedding_drift" -> ((s, dir) => {
-      import graft.operators.Drift
-      Drift.embeddingDrift(
-        t(s, dir, "embeddings").select(
-          pmod(col("label").cast("long"), lit(3L)).as("k"),
-          (col("vec_id") % 2).as("p"), col("embedding")),
-        "k", "p", "embedding", dim = 64)
-    }),
-
-    // QUANTILE DRIFT: p25/p50/p75/p95 of centi values per event type
-    // between the event-id parities -- exact integer-ceil ranks, the
-    // magnitude companion to the q311 KS verdict.
-    "q319_quantile_drift" -> ((s, dir) => {
-      import graft.operators.Drift
-      Drift.quantileDrift(
-        events(s, dir).select(col("event_type"),
-          (col("event_id") % 2).as("p"),
-          floor(col("value") * 100).cast("long").as("v")),
-        "event_type", "p", "v", pcts = Seq(25, 50, 75, 95))
-    }),
-
-    // POISSON BOOTSTRAP CI of the mean centi value per event type --
-    // 64 deterministic seeded-Lehmer replicates, per-mille rank
-    // quantiles; every weight replayed by the oracle.
-    "q320_bootstrap" -> ((s, dir) => {
-      import graft.operators.Experiment
-      Experiment.bootstrapCi(
-        events(s, dir).select(col("event_type"), col("event_id"),
-          floor(col("value") * 100).cast("long").as("v")),
-        "event_type", "event_id", "v", b = 64, seed = 20260816L,
-        loPm = 25, hiPm = 975)
-    }),
-
-    // AVERAGE PRECISION per source: ranks by doc id, binary relevance
-    // doc_id % 3 == 0 -- each relevant position contributes a floored
-    // ppm precision@k term, the sum divided by the positive count.
-    "q321_avg_precision" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      val ranked = t(s, dir, "documents")
-        .select(col("source"), col("doc_id"),
-          when(pmod(col("doc_id"), lit(3L)) === 0L, 1L).otherwise(0L)
-            .as("rel"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("source")).orderBy(col("doc_id")))
-          .cast("long"))
-      EvalMetrics.averagePrecision(ranked, "source", "rank", "rel")
-    }),
-
-    // SPEARMAN RANK CORRELATION per event type: centi value vs
-    // user-id residue -- doubled midranks (exact integers), Pearson
-    // on the ranks with DECIMAL sums, one exactly-rounded IEEE
-    // sqrt/divide chain at the end.
-    "q322_spearman" -> ((s, dir) => {
-      import graft.operators.Ops
-      Ops.spearmanRho(
-        events(s, dir).select(col("event_type"),
-          floor(col("value") * 100).cast("long").as("x"),
-          pmod(col("user_id"), lit(1000L)).as("y")),
-        "event_type", "x", "y")
-    }),
-
-    // KENDALL TAU-B per source: hecto char-length vs doc-id residue
-    // (both tie-rich) -- exact concordant/discordant/tie pair counts
-    // from the bounded O(n^2) self-join, tie-corrected denominator.
-    "q323_kendall" -> ((s, dir) => {
-      import graft.operators.Ops
-      Ops.kendallTauB(
-        t(s, dir, "documents").select(col("source"), col("doc_id"),
-          expr("n_chars div 100").as("x"),
-          pmod(col("doc_id"), lit(50L)).as("y")),
-        "source", "doc_id", "x", "y", maxN = 1024)
-    }),
-
-    // T-CLOSENESS audit over (segment, nation-residue) classes with
-    // the kilo-bucketed account balance as the ordered sensitive
-    // attribute -- exact integer prefix-sum EMD, one integral
-    // division to ppm.
-    "q324_t_closeness" -> ((s, dir) => {
-      import graft.operators.Anonymize
-      Anonymize.tClosenessReport(
-        t(s, dir, "customer").select(col("c_mktsegment").as("seg"),
-          pmod(col("c_nationkey"), lit(5L)).as("nk"),
-          expr("CAST(floor(c_acctbal) AS BIGINT) div 1000").as("s")),
-        Seq("seg", "nk"), "s", tPpm = 150000L)
-    }),
-
-    // POSITION-BASED (U-shaped) ATTRIBUTION: touches before each
-    // user's first purchase share 40/20/40 credit on the integer ppm
-    // lattice; channel = the touch's event type.
-    "q325_attribution" -> ((s, dir) => {
-      import graft.operators.Funnel
-      Funnel.attributePositionBased(events(s, dir), "user_id",
-        "event_type", "event_type", "ts", "event_id", "purchase")
-    }),
-
-    // AUTOCORRELATION at lag 24 of the hourly value sums per event
-    // type (the q315 feeder) -- fraction-cleared ACF on DECIMAL
-    // sums, one integral division; daily seasonality would read
-    // positive here.
-    "q326_acf" -> ((s, dir) => {
-      import graft.operators.Ops
-      val hourly = events(s, dir)
-        .select(col("event_type"),
-          expr("(ts - pmod(ts, 3600000000000L)) div 3600000000000L")
-            .as("h"),
-          floor(col("value") * 100).cast("long").as("v"))
-        .groupBy(col("event_type"), col("h"))
-        .agg(sum(col("v")).as("hv"))
-      Ops.autocorr(hourly, "event_type", "h", "h", "hv", k = 24)
-    }),
-
-    // JENSEN-SHANNON DIVERGENCE between the event-id parities per
-    // event type over user-id-residue buckets -- the unsmoothed,
-    // bounded companion to the q312 PSI (same fixture family, wider
-    // bucket domain).
-    "q327_js_drift" -> ((s, dir) => {
-      import graft.operators.Drift
-      Drift.jsDivergence(
-        events(s, dir).select(col("event_type"),
-          pmod(col("user_id"), lit(10L)).as("bucket"),
-          (col("event_id") % 2).as("period")),
-        "event_type", "bucket", "period")
-    }),
-
-    // KRIPPENDORFF'S ALPHA per event type: users as units, the
-    // centi-value residue mod 4 as the nominal rating -- variable
-    // ratings per unit (the shape Fleiss cannot take), unit quotients
-    // floored to micro, DECIMAL final fold.
-    "q328_krippendorff" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      EvalMetrics.krippendorffAlpha(
-        events(s, dir).select(col("event_type"),
-          col("user_id").as("unit"),
-          pmod(floor(col("value") * 100).cast("long"), lit(4L))
-            .as("rating")),
-        "event_type", "unit", "rating")
-    }),
-
-    // CLIFF'S DELTA: the q273 fixture read as an effect size --
-    // (u1_x2 - n0*n1) rescaled to ppm dominance, integer-exact
-    // through the shared Mann-Whitney machinery.
-    "q329_cliffs_delta" -> ((s, dir) => {
-      import graft.operators.Experiment
-      Experiment.cliffsDelta(
-        events(s, dir).select(col("event_type"),
-          pmod(col("user_id"), lit(2L)).as("g"),
-          floor(col("value") * 100).cast("long").as("v")),
-        "event_type", "g", "v")
-    }),
-
-    // COHEN'S D on the same arms: exact integer moment sums per arm,
-    // the pooled-SD standardized difference in ONE fixed IEEE chain,
-    // floored to milli.
-    "q330_cohens_d" -> ((s, dir) => {
-      import graft.operators.Experiment
-      Experiment.cohensD(
-        events(s, dir).select(col("event_type"),
-          pmod(col("user_id"), lit(2L)).as("g"),
-          floor(col("value") * 100).cast("long").as("v")),
-        "event_type", "g", "v")
-    }),
-
-    // ROLLING LOWER MEDIAN (w=5) of the centi-value per event type
-    // on the (ts, event_id) order -- the robust rolling level
-    // companion to the q311 CUSUM; only FULL windows emit, every
-    // output stays on the input lattice.
-    "q331_rolling_median" -> ((s, dir) => {
-      import graft.operators.Ops
-      Ops.rollingMedian(events(s, dir)
-        .select(col("event_type"), col("ts"), col("event_id"),
-          floor(col("value") * 100).cast("long").as("v")),
-        "event_type", "ts", "event_id", "v", w = 5)
-    }),
-
-    // MEDIAN ABSOLUTE DEVIATION of the centi-values per event type
-    // -- both medians LOWER by rank, no float anywhere; the robust
-    // scale the q333 fence divides by.
-    "q332_mad" -> ((s, dir) => {
-      import graft.operators.Ops
-      Ops.madPerGroup(events(s, dir).select(col("event_type"),
-        floor(col("value") * 100).cast("long").as("v")),
-        "event_type", "v")
-    }),
-
-    // ROBUST OUTLIER GATE at 1.8x MAD by integer cross-
-    // multiplication (1000*dev > 1800*mad) -- the tails of the
-    // per-type value distribution, no modified-z float.
-    "q333_robust_outliers" -> ((s, dir) => {
-      import graft.operators.Ops
-      Ops.robustOutliers(events(s, dir).select(col("event_type"),
-        col("event_id"),
-        floor(col("value") * 100).cast("long").as("v")),
-        "event_type", "event_id", "v", kMilli = 1800L)
-    }),
-
-    // POST-STRATIFIED ATE per event type: user-residue strata (mod
-    // 5) over user-residue arms (mod 2), size-weighted within-
-    // stratum contrasts on the micro lattice, one-arm strata
-    // excluded VISIBLY, the unadjusted contrast riding along.
-    "q334_stratified_ate" -> ((s, dir) => {
-      import graft.operators.Experiment
-      Experiment.stratifiedAte(events(s, dir).select(
-        col("event_type"),
-        pmod(col("user_id"), lit(5L)).as("stratum"),
-        pmod(col("user_id"), lit(2L)).as("g"),
-        floor(col("value") * 100).cast("long").as("v")),
-        "event_type", "stratum", "g", "v")
-    }),
-
-    // HOLM-BONFERRONI step-down FWER control over the q309 synthetic
-    // hypothesis families -- running max of (m-k+1)*p clipped to
-    // 1e6, reject = adj <= alpha; the launch-gate companion to BH's
-    // FDR on the same fixture.
-    "q335_holm" -> ((s, dir) => {
-      import graft.operators.Experiment
-      val hyp = events(s, dir)
-        .select(col("event_type"),
-          pmod(col("user_id"), lit(100L)).as("hyp"))
-        .distinct()
-        .withColumn("p_ppm",
-          when(col("hyp") < 10, col("hyp") * 137 + 3)
-            .otherwise(pmod(col("hyp") * 9973
-              + length(col("event_type")).cast("long") * 131071,
-              lit(1000001L))))
-      Experiment.holmBonferroni(hyp, "event_type", "hyp", "p_ppm",
-        alphaPpm = 50000L)
-    }),
-
-    // FIRST-ORDER MARKOV REMOVAL-EFFECT ATTRIBUTION over the q325
-    // touch derivation (pre-conversion event types as channels,
-    // purchase absorbs): 8 synchronous ppm value-iteration rounds
-    // per leave-one-channel-out scenario, removal effects and their
-    // normalized shares -- the model-based companion to q325's
-    // position rule.
-    "q336_markov_attribution" -> ((s, dir) => {
-      import graft.operators.Funnel
-      Funnel.markovRemovalEffect(events(s, dir), "user_id",
-        "event_type", "ts", "event_id", "purchase")
-    }),
-
-    // MANN-KENDALL TREND TEST on the daily value sums per event type
-    // -- exact S and tie-corrected 18*Var(S) off one bounded pair
-    // join, the continuity-corrected z in one IEEE chain to milli;
-    // the significance companion to the q315 Theil-Sen slope.
-    "q337_mann_kendall" -> ((s, dir) => {
-      import graft.operators.Ops
-      val daily = events(s, dir)
-        .select(col("event_type"),
-          expr("(ts - pmod(ts, 86400000000000L)) div 86400000000000L")
-            .as("d"),
-          floor(col("value") * 100).cast("long").as("v"))
-        .groupBy(col("event_type"), col("d"))
-        .agg(sum(col("v")).as("dv"))
-      Ops.mannKendallTrend(daily, "event_type", "d", "d", "dv")
-    }),
-
-    // HERFINDAHL-HIRSCHMAN CONCENTRATION of source shares per
-    // language -- one integral division on DECIMAL(38); 1e6/C = a
-    // perfectly even corpus, 1e6 = one domain wearing every hat.
-    "q338_hhi" -> ((s, dir) => {
-      import graft.operators.Ops
-      Ops.hhiPpm(t(s, dir, "documents"), "lang", "source")
-    }),
-
-    // SHANNON ENTROPY of the same source distribution -- per-category
-    // micro-nat terms in one fixed IEEE op order (the benford/jsd ln
-    // discipline), max-entropy denominator riding along.
-    "q339_entropy" -> ((s, dir) => {
-      import graft.operators.Drift
-      Drift.categoryEntropy(t(s, dir, "documents"), "lang", "source")
-    }),
-
-    // SEASONAL-NAIVE BACKTEST (m=24) on the hourly value sums per
-    // event type -- integer MAE/sMAPE/MASE; mase >= 1e6 reads "the
-    // daily cycle buys nothing over yesterday's hour".
-    "q340_backtest" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      val hourly = events(s, dir)
-        .select(col("event_type"),
-          expr("(ts - pmod(ts, 3600000000000L)) div 3600000000000L")
-            .as("h"),
-          floor(col("value") * 100).cast("long").as("v"))
-        .groupBy(col("event_type"), col("h"))
-        .agg(sum(col("v")).as("hv"))
-      EvalMetrics.seasonalNaiveBacktest(hourly, "event_type", "h",
-        "h", "hv", m = 24)
-    }),
-
-    // AMOC CHANGEPOINT on the hourly value sums per event type --
-    // the best single L2 split by exact DECIMAL-cleared gain on the
-    // micro lattice, >= 24 h on each side; the offline locator the
-    // q311 CUSUM alarm hands its flagged window to.
-    "q341_amoc" -> ((s, dir) => {
-      import graft.operators.Drift
-      val hourly = events(s, dir)
-        .select(col("event_type"),
-          expr("(ts - pmod(ts, 3600000000000L)) div 3600000000000L")
-            .as("h"),
-          floor(col("value") * 100).cast("long").as("v"))
-        .groupBy(col("event_type"), col("h"))
-        .agg(sum(col("v")).as("hv"))
-      Drift.changepointAmoc(hourly, "event_type", "h", "h", "hv",
-        minSeg = 24)
-    }),
-
-    // WALD SPRT per event type on the high-value indicator (value >=
-    // 50) in arrival order -- H1: p = 0.52 vs H0: p = 0.48 at alpha
-    // 5% / beta 10%; the always-valid sequential decision next to
-    // the q265 fixed-horizon z.
-    "q342_sprt" -> ((s, dir) => {
-      import graft.operators.Experiment
-      Experiment.sprtBinary(events(s, dir)
-        .select(col("event_type"), col("ts"), col("event_id"),
-          when(col("value") >= 50, 1L).otherwise(0L).as("conv")),
-        "event_type", "ts", "event_id", "conv",
-        p0Milli = 480L, p1Milli = 520L,
-        alphaMilli = 50L, betaMilli = 100L)
-    }),
-
-    // COCHRAN-MANTEL-HAENSZEL inputs + MH pooled odds ratio per
-    // event type: the q334 strata over the binary high-value
-    // outcome, per-stratum micro terms, DECIMAL variance products.
-    "q343_cmh" -> ((s, dir) => {
-      import graft.operators.Experiment
-      Experiment.mantelHaenszel(events(s, dir)
-        .select(col("event_type"),
-          pmod(col("user_id"), lit(5L)).as("stratum"),
-          pmod(col("user_id"), lit(2L)).as("g"),
-          when(col("value") >= 50, 1L).otherwise(0L).as("conv")),
-        "event_type", "stratum", "g", "conv")
-    }),
-
-    // NELSON-AALEN CUMULATIVE HAZARD over the q282 subject
-    // derivation -- the additive hazard view of the same risk sets,
-    // per-time micro terms, one ascending window sum (no recursion,
-    // no maxTimes).
-    "q344_nelson_aalen" -> ((s, dir) => {
-      import graft.operators.Experiment
-      val subj = events(s, dir).groupBy(col("user_id")).agg(
-        expr("(max(ts) - min(ts)) div 3600000000000L").as("dur"),
-        max(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("ev"))
-        .withColumn("grp", pmod(col("user_id"), lit(2L)))
-      Experiment.nelsonAalen(subj, "grp", "dur", "ev")
-    }),
-
-    // WORD ERROR RATE between consecutive documents' 10-token
-    // prefixes -- codegen'd Levenshtein over the per-pair ASCII
-    // vocabulary encoding (distance is bijection-invariant).
-    "q345_wer" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      val d = t(s, dir, "documents").select(col("doc_id"),
-        expr(raw"""array_join(slice(split(text, '\\s+'), 1, 10),
-          ' ')""").as("txt"))
-      val pairs = d.select(col("doc_id").as("id"),
-          col("txt").as("hyp"))
-        .join(d.select((col("doc_id") - 1L).as("__id2"),
-          col("txt").as("ref")), col("id") === col("__id2"))
-        .select(col("id"), col("hyp"), col("ref"))
-      EvalMetrics.wordErrorRate(pairs, "id", "hyp", "ref")
-    }),
-
-    // ASSOCIATION RULES over (user, event type) baskets -- exact
-    // support/confidence/lift on the ppm lattice from one
-    // basket-keyed pair join; lift > 1e6 = co-occurrence above
-    // independence.
-    "q346_assoc" -> ((s, dir) => {
-      import graft.operators.Ops
-      Ops.associationRules(events(s, dir)
-        .select(col("user_id"), col("event_type")),
-        "user_id", "event_type", minSupportPpm = 10000L)
-    }),
-
-    // PINBALL LOSS at q=0.9 of the seasonal-naive hourly forecast
-    // (the q340 feeder) -- under-prediction charged 9x harder; the
-    // quantile-forecast scorer next to MASE's median view.
-    "q347_pinball" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      val hourly = events(s, dir)
-        .select(col("event_type"),
-          expr("(ts - pmod(ts, 3600000000000L)) div 3600000000000L")
-            .as("h"),
-          floor(col("value") * 100).cast("long").as("v"))
-        .groupBy(col("event_type"), col("h"))
-        .agg(sum(col("v")).as("hv"))
-        .withColumn("f", expr(
-          "lag(hv, 24) OVER (PARTITION BY event_type ORDER BY h)"))
-        .filter(col("f").isNotNull)
-      EvalMetrics.pinballLossPpm(hourly, "event_type", "hv", "f",
-        qPpm = 900000L)
-    }),
-
-    // HOSMER-LEMESHOW RANK DECILES of the value-derived confidence
-    // against the event-id-parity label -- exact O and sum-conf E
-    // chi-square inputs per equal-count decile.
-    "q348_hl_deciles" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      EvalMetrics.hosmerLemeshowDeciles(events(s, dir)
-        .select(col("event_type"), col("event_id"),
-          least(lit(1000000L), floor(col("value") * 10000)
-            .cast("long")).as("conf"),
-          pmod(col("event_id"), lit(2L)).as("lab")),
-        "event_type", "event_id", "conf", "lab")
-    }),
-
-    // NEWMAN MODULARITY of the clique-id partition over the q280
-    // clique+chain graph -- per-community exact e_in/deg_sum/m and
-    // the ppm contribution; the score that grades what labelProp
-    // finds.
-    "q349_modularity" -> ((s, dir) => {
-      import graft.operators.Graph
-      val labels = t(s, dir, "customer")
-        .select(col("c_custkey").cast("long").as("node"),
-          expr("c_custkey div 4").as("lab"))
-      Graph.modularityPpm(cliqueChainEdges(s, dir), "src", "dst",
-        labels, "node", "lab")
-    }),
-
-    // ISOTONIC (PAVA-minimax) FIT of the daily value sums per event
-    // type on the micro lattice -- the monotone pooling that makes a
-    // reliability diagram readable, applied to the q337 daily
-    // series.
-    "q350_isotonic" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      val daily = events(s, dir)
-        .select(col("event_type"),
-          expr("(ts - pmod(ts, 86400000000000L)) div 86400000000000L")
-            .as("d"),
-          floor(col("value") * 100).cast("long").as("v"))
-        .groupBy(col("event_type"), col("d"))
-        .agg(sum(col("v")).as("dv"))
-      EvalMetrics.isotonicFitMicro(daily, "event_type", "d", "d",
-        "dv")
-    }),
-
-    // CUMULATIVE GAINS / LIFT TABLE of the value-derived score
-    // against the parity label -- the discrimination view next to
-    // q348's calibration; bucket-0 lift is the headline.
-    "q351_gains" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      EvalMetrics.gainsTable(events(s, dir)
-        .select(col("event_type"), col("event_id"),
-          floor(col("value") * 10000).cast("long").as("score"),
-          pmod(col("event_id"), lit(2L)).as("lab")),
-        "event_type", "event_id", "score", "lab", nBuckets = 10)
-    }),
-
-    // WEIGHTED LOWER MEDIAN of the centi-values per event type with
-    // event-id-residue weights -- integer cross-multiplied
-    // threshold, reduces to q332's median at w = 1.
-    "q352_weighted_median" -> ((s, dir) => {
-      import graft.operators.Ops
-      Ops.weightedMedianPerGroup(events(s, dir)
-        .select(col("event_type"),
-          floor(col("value") * 100).cast("long").as("v"),
-          (pmod(col("event_id"), lit(5L)) + 1L).as("w")),
-        "event_type", "v", "w")
-    }),
-
-    // HILL TAIL INDEX (k=20) of document lengths per language --
-    // per-term micro-nat log-ratios over the top-21 order
-    // statistics; the heavy-tail monitor for length distributions.
-    "q353_hill" -> ((s, dir) => {
-      import graft.operators.Ops
-      Ops.hillTailIndex(t(s, dir, "documents"), "lang", "n_chars",
-        k = 20)
-    }),
-
-    // RFM SEGMENTATION per event type: per-user recency/frequency/
-    // monetary integers and quintile scores within the segment
-    // (rank windows never global -- the stated contract).
-    "q354_rfm" -> ((s, dir) => {
-      import graft.operators.Funnel
-      Funnel.rfmSegments(events(s, dir)
-        .select(col("event_type"), col("user_id"), col("ts"),
-          floor(col("value") * 100).cast("long").as("v")),
-        "event_type", "user_id", "ts", "v",
-        nowTs = 1706745600000000000L, buckets = 5)
-    }),
-
-    // TIME-DECAY ATTRIBUTION (half-life 6 h) over the q325 touch
-    // derivation -- exact dyadic step weights (no exp() anywhere),
-    // per-user ppm normalization; the fourth of the standard four
-    // models.
-    "q355_time_decay" -> ((s, dir) => {
-      import graft.operators.Funnel
-      Funnel.attributeTimeDecay(events(s, dir), "user_id",
-        "event_type", "ts", "event_id", "purchase",
-        halfLifeNs = 21600000000000L)
-    }),
-
-    // GROWTH ACCOUNTING by day: new/retained/resurrected/churned
-    // user decomposition with the quick ratio; churn lands in the
-    // period the loss shows up, the final day counts none.
-    "q356_growth" -> ((s, dir) => {
-      import graft.operators.Funnel
-      Funnel.growthAccounting(events(s, dir), "user_id", "ts",
-        periodNs = 86400000000000L)
-    }),
-
-    // QUADRATIC-WEIGHTED KAPPA between two user-residue raters per
-    // event type -- the ordinal agreement with (i-j)^2 penalties,
-    // one DECIMAL division.
-    "q357_weighted_kappa" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      EvalMetrics.weightedKappa(events(s, dir)
-        .select(col("event_type"),
-          pmod(col("user_id"), lit(4L)).as("r1"),
-          pmod(col("user_id") + pmod(col("event_id"), lit(3L)),
-            lit(4L)).as("r2")),
-        "event_type", "r1", "r2", maxCat = 4)
-    }),
-
-    // CRONBACH'S ALPHA over a synthetic complete design (user
-    // residues x event-id-residue items, cell scores = value sums
-    // mod 11) -- exact integer moments, one DECIMAL truncation; the
-    // complete-design refusal is the operator's own gate.
-    "q358_cronbach" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      val cells = events(s, dir)
-        .groupBy(pmod(col("user_id"), lit(2L)).as("key"),
-          pmod(col("user_id"), lit(100L)).as("resp"),
-          pmod(col("event_id"), lit(3L)).as("item"))
-        .agg(pmod(sum(floor(col("value") * 100).cast("long")),
-          lit(11L)).as("score"))
-      EvalMetrics.cronbachAlpha(cells, "key", "resp", "item",
-        "score")
-    }),
-
-    // MUTUAL INFORMATION between the two q357 rater columns per
-    // event type -- per-cell micro-nat terms (negative cells floor
-    // down, stated), the dependence the kappa quantifies as
-    // agreement.
-    "q359_mi" -> ((s, dir) => {
-      import graft.operators.Drift
-      Drift.mutualInformation(events(s, dir)
-        .select(col("event_type"),
-          pmod(col("user_id"), lit(4L)).as("a"),
-          pmod(col("user_id") + pmod(col("event_id"), lit(3L)),
-            lit(4L)).as("b")),
-        "event_type", "a", "b")
-    }),
-
-    // NET PROMOTER SCORE per event type on the value-derived 0-10
-    // scale -- band counts and one truncation.
-    "q360_nps" -> ((s, dir) => {
-      import graft.operators.Ops
-      Ops.npsPerGroup(events(s, dir)
-        .select(col("event_type"),
-          pmod(floor(col("value")).cast("long"), lit(11L)).as("sc")),
-        "event_type", "sc")
-    }),
-
-    // GEHAN-BRESLOW WEIGHTED LOG-RANK over the q310 subjects -- the
-    // early-difference (novelty-effect) sensitive variant; weighted
-    // O and E are EXACT integers because the n_k weight cancels the
-    // risk-set denominator.
-    "q361_gehan" -> ((s, dir) => {
-      import graft.operators.Experiment
-      val subj = events(s, dir).groupBy(col("user_id")).agg(
-        expr("(max(ts) - min(ts)) div 3600000000000L").as("dur"),
-        max(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("ev"))
-        .withColumn("exp", pmod(expr("user_id div 2"), lit(3L)))
-        .withColumn("grp", pmod(col("user_id"), lit(2L)))
-      Experiment.gehanBreslow(subj, "exp", "grp", "dur", "ev")
-    }),
-
-    // CUMULATIVE LTV CURVE by daily acquisition cohort -- per-user
-    // centi-revenue against the ORIGINAL cohort size (quitters keep
-    // diluting); the revenue view of the q267 retention triangle.
-    "q362_ltv" -> ((s, dir) => {
-      import graft.operators.Experiment
-      Experiment.cohortLtv(events(s, dir)
-        .select(col("user_id"), col("ts"),
-          floor(col("value") * 100).cast("long").as("v")),
-        "user_id", "ts", "v", periodNs = 86400000000000L)
-    }),
-
-    // KRUSKAL-WALLIS H across three user-residue arms per event
-    // type -- doubled pooled midranks, per-group micro terms, the
-    // exact tie correction; the k-arm companion between MWU and
-    // abTestK.
-    "q363_kruskal" -> ((s, dir) => {
-      import graft.operators.Experiment
-      Experiment.kruskalWallis(events(s, dir)
-        .select(col("event_type"),
-          pmod(col("user_id"), lit(3L)).as("g"),
-          floor(col("value") * 100).cast("long").as("v")),
-        "event_type", "g", "v")
-    }),
-
-    // FRIEDMAN TEST over the q358 complete design (the same cells
-    // graded for consistency by alpha and for treatment effect
-    // here) -- within-block doubled midranks, per-treatment micro
-    // terms, the exact tie correction.
-    "q364_friedman" -> ((s, dir) => {
-      import graft.operators.Experiment
-      val cells = events(s, dir)
-        .groupBy(pmod(col("user_id"), lit(2L)).as("key"),
-          pmod(col("user_id"), lit(100L)).as("resp"),
-          pmod(col("event_id"), lit(3L)).as("item"))
-        .agg(pmod(sum(floor(col("value") * 100).cast("long")),
-          lit(11L)).as("score"))
-      Experiment.friedman(cells, "key", "resp", "item", "score")
-    }),
-
-    // WILCOXON SIGNED-RANK on the q281 paired pre/post (view sum vs
-    // click sum per user) across three experiments -- the paired
-    // two-arm test closing the nonparametric family; zero
-    // differences dropped VISIBLY.
-    "q365_wilcoxon" -> ((s, dir) => {
-      import graft.operators.Experiment
-      val perUser = events(s, dir).groupBy(col("user_id")).agg(
-        coalesce(sum(when(col("event_type") === "view",
-          floor(col("value") * 100).cast("long"))), lit(0L))
-          .as("pre"),
-        coalesce(sum(when(col("event_type") === "click",
-          floor(col("value") * 100).cast("long"))), lit(0L))
-          .as("post"))
-        .withColumn("exp", pmod(col("user_id"), lit(3L)))
-      Experiment.wilcoxonSignedRank(perUser, "exp", "user_id",
-        "pre", "post")
-    }),
-
-    // KENDALL TAU-B AT SCALE: the q323 fixture bit-for-bit, but via
-    // the distributed O(n log n) inversion count (two permutation
-    // row_numbers, a dense Bg^2 grid for cross-bucket pairs, local
-    // merge counts inside buckets) -- no pair join anywhere; the
-    // oracle is the same O(n^2) pair SQL, proving the factoring.
-    "q366_kendall_large" -> ((s, dir) => {
-      import graft.operators.Ops
-      Ops.kendallTauLarge(
-        t(s, dir, "documents").select(col("source"), col("doc_id"),
-          expr("n_chars div 100").as("x"),
-          pmod(col("doc_id"), lit(50L)).as("y")),
-        "source", "doc_id", "x", "y")
-    }),
-
-    // MANN-KENDALL AT SCALE: the q337 daily series bit-for-bit via
-    // the same inversion-count engine (S = n0 - n2 - 2D with D the
-    // strict inversion count of value order against time order).
-    "q367_mann_kendall_large" -> ((s, dir) => {
-      import graft.operators.Ops
-      val daily = events(s, dir)
-        .select(col("event_type"),
-          expr("(ts - pmod(ts, 86400000000000L)) div 86400000000000L")
-            .as("d"),
-          floor(col("value") * 100).cast("long").as("v"))
-        .groupBy(col("event_type"), col("d"))
-        .agg(sum(col("v")).as("dv"))
-      Ops.mannKendallLarge(daily, "event_type", "d", "d", "dv")
-    }),
-
-    // K-ARM STRATIFIED LOG-RANK: the q310 subjects split into THREE
-    // arms and two strata -- stratum-local pooled risk-set walks,
-    // integer-exact micro E_g per arm summed across strata (the CMH
-    // discipline), per-arm (O-E)^2/E floors summed to the
-    // conservative k-1 df statistic.
-    "q368_logrank_k" -> ((s, dir) => {
-      import graft.operators.Experiment
-      val subj = events(s, dir).groupBy(col("user_id")).agg(
-        expr("(max(ts) - min(ts)) div 3600000000000L").as("dur"),
-        max(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("ev"))
-        .withColumn("exp", pmod(expr("user_id div 2"), lit(3L)))
-        .withColumn("grp",
-          concat(lit("arm"), pmod(col("user_id"), lit(3L))))
-        .withColumn("st", pmod(expr("user_id div 8"), lit(2L)))
-      Experiment.logRankK(subj, "exp", "st", "grp", "dur", "ev")
-    }),
-
-    // ANYTIME-VALID E-PROCESS on the q342 conversion stream: the
-    // Krichevsky-Trofimov mixture factor per row (exact integer
-    // ratio from the pre-row counts), nano-nat floors summed as
-    // integers, Ville threshold ln(1/alpha) -- the monitor that
-    // needs no point alternative and never closes.
-    "q369_eprocess" -> ((s, dir) => {
-      import graft.operators.Experiment
-      Experiment.eProcessBinary(events(s, dir)
-        .select(col("event_type"), col("ts"), col("event_id"),
-          when(col("value") >= 50, 1L).otherwise(0L).as("conv")),
-        "event_type", "ts", "event_id", "conv",
-        p0Milli = 480L, alphaMilli = 50L)
-    }),
-
-    // ROLLING MEDIAN AT w=600 -- past rollingMedian's 512 buffer
-    // contract -- via the lattice-histogram factoring: deca-bucketed
-    // values (10-value lattice), one trailing-count window per
-    // lattice value, median = first value whose window count reaches
-    // 300; the oracle sorts each 600-row window outright.
-    "q370_rolling_median_large" -> ((s, dir) => {
-      import graft.operators.Ops
-      Ops.rollingMedianLarge(events(s, dir)
-        .select(col("event_type"), col("ts"), col("event_id"),
-          expr("CAST(floor(value) AS BIGINT) div 20").as("v")),
-        "event_type", "ts", "event_id", "v", w = 600)
-    }),
-
-    // SEQUENTIAL PAVA on the q350 series -- the O(n) pool-stack walk
-    // that must land bit-for-bit on the n^3 minimax oracle
-    // (truncation commutes with min/max, so the lattice fits agree
-    // exactly).
-    "q371_isotonic_large" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      val daily = events(s, dir)
-        .select(col("event_type"),
-          expr("(ts - pmod(ts, 86400000000000L)) div 86400000000000L")
-            .as("d"),
-          floor(col("value") * 100).cast("long").as("v"))
-        .groupBy(col("event_type"), col("d"))
-        .agg(sum(col("v")).as("dv"))
-      EvalMetrics.isotonicFitLarge(daily, "event_type", "d", "d",
-        "dv")
-    }),
-
-    // MASE of a deterministic shrink forecast (9/10 of the actual)
-    // against the weekly seasonal-naive scale over the q337 daily
-    // series -- one lag window + one fold, n_eval cancelling in the
-    // cross-multiplied division.
-    "q372_mase" -> ((s, dir) => {
-      import graft.operators.EvalMetrics
-      val daily = events(s, dir)
-        .select(col("event_type"),
-          expr("(ts - pmod(ts, 86400000000000L)) div 86400000000000L")
-            .as("d"),
-          floor(col("value") * 100).cast("long").as("v"))
-        .groupBy(col("event_type"), col("d"))
-        .agg(sum(col("v")).as("dv"))
-        .withColumn("f", expr("(dv * 9L) div 10L"))
-      EvalMetrics.maseForecast(daily, "event_type", "d", "d", "dv",
-        "f", m = 7)
-    }),
-
-    // THEIL-SEN AT SCALE: the q316 fixture bit-for-bit via 16-ary
-    // parametric search on the slope lattice -- each round one
-    // inversion count over (group, candidate) composite keys, no
-    // pair join anywhere; the oracle is the O(n^2) pair SQL.
-    "q373_theil_sen_large" -> ((s, dir) => {
-      import graft.operators.Ops
-      Ops.theilSenLarge(
-        t(s, dir, "documents").select(col("source"), col("doc_id"),
-          col("n_chars")),
-        "source", "doc_id", "n_chars", fanout = 63, buckets = 1)
-    }),
-
-    // JONCKHEERE-TERPSTRA ordered-alternative test: do per-user
-    // session spans INCREASE across the ordered user-residue arms --
-    // 2J and C exact integers off ONE inversion count (no pair
-    // join), Lehmann's tie-corrected variance in one fixed IEEE
-    // chain, continuity-corrected z to milli.
-    "q374_jonckheere" -> ((s, dir) => {
-      import graft.operators.Ops
-      val subj = events(s, dir).groupBy(col("user_id")).agg(
-        expr("(max(ts) - min(ts)) div 3600000000000L").as("dur"))
-        .withColumn("exp", pmod(expr("user_id div 2"), lit(3L)))
-        .withColumn("g", pmod(col("user_id"), lit(3L)))
-      Ops.jonckheereTerpstra(subj, "exp", "g", "dur")
-    }),
-
-    // ANYTIME-VALID BETTING E-PROCESS FOR A BOUNDED MEAN (q369's
-    // continuous companion -- the metric eProcessBinary refuses):
-    // per-mille-lattice values, the WSR aGRAPA bet made exact on
-    // integer pre-row moments, one ln per row floored to nano-nats,
-    // Ville threshold ln(1/alpha).
-    "q375_eprocess_mean" -> ((s, dir) => {
-      import graft.operators.Experiment
-      Experiment.eProcessMean(events(s, dir)
-        .select(col("event_type"), col("ts"), col("event_id"),
-          least(lit(1000L), greatest(lit(0L),
-            floor(col("value") * 10).cast("long"))).as("v")),
-        "event_type", "ts", "event_id", "v",
-        mMilli = 480L, alphaMilli = 50L)
-    }),
-
-    // EXACT k-ARM STRATIFIED LOG-RANK (q368's full-covariance form):
-    // a genuinely 3-arm fixture (user_id div 6 experiments x 3
-    // residue arms, so the quadratic form is a real 2x2 inverse),
-    // per-time hypergeometric covariance entries floored through the
-    // q310 IEEE chain, Z' W^-1 Z exact via the bordered Bareiss
-    // determinant -- the oracle replays the 2x2 adjugate on HUGEINT.
-    "q376_logrank_k_exact" -> ((s, dir) => {
-      import graft.operators.Experiment
-      val subj = events(s, dir).groupBy(col("user_id")).agg(
-        expr("(max(ts) - min(ts)) div 3600000000000L").as("dur"),
-        max(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("ev"))
-        .withColumn("exp", pmod(expr("user_id div 6"), lit(2L)))
-        .withColumn("grp",
-          concat(lit("arm"), pmod(col("user_id"), lit(3L))))
-        .withColumn("st", pmod(expr("user_id div 12"), lit(2L)))
-      Experiment.logRankKExact(subj, "exp", "st", "grp", "dur", "ev")
-    }),
-
-    // PAGE'S TREND TEST on the q364 complete design: does the score
-    // rise monotonically with the item index, per respondent --
-    // within-block doubled midranks x dense treatment-order ranks,
-    // exact integer L2/E/variance sums, one IEEE z chain.
-    "q377_page_trend" -> ((s, dir) => {
-      import graft.operators.Experiment
-      val cells = events(s, dir)
-        .groupBy(pmod(col("user_id"), lit(2L)).as("key"),
-          pmod(col("user_id"), lit(100L)).as("resp"),
-          pmod(col("event_id"), lit(3L)).as("item"))
-        .agg(pmod(sum(floor(col("value") * 100).cast("long")),
-          lit(11L)).as("score"))
-      Experiment.pageTrend(cells, "key", "resp", "item", "score")
-    })
-  )
-
-  /** The q280/q288/q292 test graph: 4-cliques over consecutive
-    * custkeys plus the c → c+1 chain — deterministic, linear in the
-    * customer table, triangle-rich. Kept in one place so the three
-    * graph queries can never drift apart.
-    */
-  private def cliqueChainEdges(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
-      .select(col("c_custkey").cast("long").as("c"),
-        expr("c_custkey div 4").as("g"))
-    val a = c.select(col("g"), col("c").as("src"))
-    val b = c.select(col("g").as("g2"), col("c").as("dst"))
-    val clique = a.join(b, col("g") === col("g2")
-        && col("src") < col("dst"))
-      .select(col("src"), col("dst"))
-    val chain = c.select(col("c").as("src"), (col("c") + 1).as("dst"))
-      .join(c.select(col("c").as("__n")), col("dst") === col("__n"),
-        "left_semi")
-    clique.unionByName(chain)
-  }
-
-  // ────────────────────────────────────────────────────────────────────────
-  /** One BM25 oracle, referenced by BOTH q75 (direct) and q79 (through
-    * the inverted index) — a one-sided edit can't break their invariant.
-    */
-  /** q53's dedup machinery over the three-way incremental planting; the
-    * final filter keeps INCOMING survivors only (doc_id > o). Shared by
-    * q90 (union path) and q93 (persisted-signature-index path) — both
-    * must produce the identical survivor set.
-    */
-  /** One full dedup "pass" as a reusable CTE chain over `src` (a CTE of
-    * (doc_id, text)), name-suffixed with `sfx` so two passes compose in a
-    * single statement (q96). Mirrors Dedup.dedupCorpus exactly:
-    * exact-hash min-id keep, the engine's minhash arithmetic, banded LSH
-    * with the 2..1000 combined bucket cap, bigram-Jaccard ≥ 0.6 removal
-    * of the larger id. Ends with `out$sfx` = surviving (doc_id, text).
-    */
-  private def dedupPassSql(sfx: String, src: String): String =
-    raw"""keep$sfx AS (
-      |  SELECT min(doc_id) AS doc_id FROM $src WHERE text IS NOT NULL
-      |  GROUP BY md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g')))
-      |  UNION ALL SELECT doc_id FROM $src WHERE text IS NULL),
-      |surv$sfx AS (SELECT a.doc_id, a.text FROM $src a JOIN keep$sfx k ON k.doc_id = a.doc_id),
-      |tk$sfx AS (SELECT doc_id,
-      |  CASE WHEN coalesce(trim(text), '') = '' THEN []::VARCHAR[]
-      |       ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS w
-      |  FROM surv$sfx),
-      |sh$sfx AS (SELECT doc_id,
-      |  CASE WHEN len(w) = 0 THEN ['']
-      |       WHEN len(w) < 2 THEN [array_to_string(w, ' ')]
-      |       ELSE list_transform(range(1, len(w)), j -> w[j] || ' ' || w[j+1]) END AS sh
-      |  FROM tk$sfx),
-      |h$sfx AS (SELECT doc_id, list_transform(sh, s -> list_reduce(
-      |    list_prepend(0::BIGINT, list_transform(regexp_extract_all(s, '.'),
-      |      c -> ascii(c)::BIGINT)),
-      |    (acc, ch) -> (acc * 31 + ch) % 1000000007)) AS hs FROM sh$sfx),
-      |sig$sfx AS (SELECT doc_id, i,
-      |  list_min(list_transform(hs, v ->
-      |    (((2 * i + 1) * 104729) % 1000000007 * v + (i * 12582917 + 7)) % 1000000007)) AS mh
-      |  FROM h$sfx CROSS JOIN range(16) t(i)),
-      |band$sfx AS (SELECT doc_id, i // 4 AS b, string_agg(mh::VARCHAR, ',' ORDER BY i) AS key
-      |  FROM sig$sfx GROUP BY doc_id, i // 4),
-      |ok$sfx AS (SELECT b, key FROM band$sfx GROUP BY b, key
-      |  HAVING count(*) BETWEEN 2 AND 1000),
-      |pairs$sfx AS (SELECT DISTINCT x.doc_id AS id1, y.doc_id AS id2
-      |  FROM band$sfx x JOIN band$sfx y ON x.b = y.b AND x.key = y.key AND x.doc_id < y.doc_id
-      |  JOIN ok$sfx ON ok$sfx.b = x.b AND ok$sfx.key = x.key),
-      |ws$sfx AS (SELECT s.doc_id,
-      |  CASE WHEN d.text IS NULL THEN NULL ELSE list_distinct(s.sh) END AS ws
-      |  FROM sh$sfx s JOIN surv$sfx d ON d.doc_id = s.doc_id),
-      |jc$sfx AS (SELECT p.id1, p.id2,
-      |  len(list_intersect(x.ws, y.ws)) AS i2,
-      |  len(list_distinct(list_concat(x.ws, y.ws))) AS u2
-      |  FROM pairs$sfx p JOIN ws$sfx x ON x.doc_id = p.id1 JOIN ws$sfx y ON y.doc_id = p.id2),
-      |removed$sfx AS (SELECT DISTINCT id2 FROM jc$sfx WHERE i2 * 1.0 / u2 >= 0.6),
-      |out$sfx AS (SELECT s.doc_id, s.text FROM surv$sfx s
-      |  WHERE NOT EXISTS (SELECT 1 FROM removed$sfx r WHERE r.id2 = s.doc_id))""".stripMargin
-
-  /** q90/q93's three planted ingestion waves over `documents`. */
-  private val PlantedWavesSql: String =
-    raw"""all_docs AS (
-      |  SELECT doc_id, text FROM base
-      |  UNION ALL
-      |  SELECT doc_id + o + 1, text FROM base, off WHERE doc_id % 11 = 0
-      |  UNION ALL
-      |  SELECT doc_id + 2 * o + 2, regexp_replace(text, '^\S+\s*', '')
-      |  FROM base, off WHERE doc_id % 25 = 0
-      |  UNION ALL
-      |  SELECT doc_id + 3 * o + 3, 'fresh alpha ' || doc_id || ' beta ' ||
-      |    (doc_id * 7) || ' gamma delta epsilon'
-      |  FROM base, off WHERE doc_id % 17 = 0)""".stripMargin
-
-  private val IncrementalDedupOracleSql: String =
-    raw"""WITH base AS (SELECT doc_id, text FROM documents),
-      |off AS (SELECT coalesce(max(doc_id), 0) AS o FROM base),
-      |$PlantedWavesSql,
-      |${dedupPassSql("", "all_docs")}
-      |SELECT doc_id FROM out s, off WHERE s.doc_id > off.o""".stripMargin
-
-  /** Rolling-index oracle (q96): pass 1 replays q90 over base ∪ wave-1;
-    * `rolled` is then exactly what the signature index holds after
-    * appendToSignatureIndex — ALL of base plus wave-1's surviving
-    * INCOMING docs; pass 2 dedups wave 2 against that relation. Wave 2
-    * plants exact copies and first-word-stripped near-dups of wave-1's
-    * fresh survivors — only the APPENDED part of the index can drop
-    * them — plus genuinely new docs (kept).
-    */
-  private val RollingDedupOracleSql: String =
-    raw"""WITH base AS (SELECT doc_id, text FROM documents),
-      |off AS (SELECT coalesce(max(doc_id), 0) AS o FROM base),
-      |$PlantedWavesSql,
-      |${dedupPassSql("", "all_docs")},
-      |rolled AS (
-      |  SELECT doc_id, text FROM base
-      |  UNION ALL
-      |  SELECT s.doc_id, s.text FROM out s, off WHERE s.doc_id > off.o),
-      |all2 AS (
-      |  SELECT doc_id, text FROM rolled
-      |  UNION ALL
-      |  SELECT doc_id + 4 * o + 4, 'fresh alpha ' || doc_id || ' beta ' ||
-      |    (doc_id * 7) || ' gamma delta epsilon'
-      |  FROM base, off WHERE doc_id % 17 = 0
-      |  UNION ALL
-      |  SELECT doc_id + 5 * o + 5, regexp_replace('fresh alpha ' || doc_id ||
-      |    ' beta ' || (doc_id * 7) || ' gamma delta epsilon', '^\S+\s*', '')
-      |  FROM base, off WHERE doc_id % 17 = 0
-      |  UNION ALL
-      |  SELECT doc_id + 6 * o + 6, 'second wave zeta ' || doc_id || ' eta ' ||
-      |    (doc_id * 3) || ' theta iota kappa'
-      |  FROM base, off WHERE doc_id % 19 = 0),
-      |${dedupPassSql("2", "all2")}
-      |SELECT doc_id FROM out2 s, off WHERE s.doc_id > 4 * off.o + 3""".stripMargin
-
-  /** Maintenance-lifecycle oracle (q107): q96's rolling structure with the
-    * index state after compaction + takedown — `rolled` minus the dropped
-    * %31 base docs (compaction itself is semantics-free; corruption would
-    * diverge the pass-2 hash). Wave 2 adds exact copies of the dropped
-    * docs: with their identity removed from the index, the one-pass
-    * closure over `all2` (which no longer contains them) keeps the
-    * copies — the takedown semantics, hash-asserted.
-    */
-  private val MaintenanceDedupOracleSql: String =
-    raw"""WITH base AS (SELECT doc_id, text FROM documents),
-      |off AS (SELECT coalesce(max(doc_id), 0) AS o FROM base),
-      |$PlantedWavesSql,
-      |${dedupPassSql("", "all_docs")},
-      |dropped AS (SELECT doc_id FROM base WHERE doc_id % 31 = 0),
-      |rolled AS (
-      |  SELECT b.doc_id, b.text FROM base b
-      |  WHERE NOT EXISTS (SELECT 1 FROM dropped dr WHERE dr.doc_id = b.doc_id)
-      |  UNION ALL
-      |  SELECT s.doc_id, s.text FROM out s, off WHERE s.doc_id > off.o),
-      |all2 AS (
-      |  SELECT doc_id, text FROM rolled
-      |  UNION ALL
-      |  SELECT doc_id + 4 * o + 4, 'fresh alpha ' || doc_id || ' beta ' ||
-      |    (doc_id * 7) || ' gamma delta epsilon'
-      |  FROM base, off WHERE doc_id % 17 = 0
-      |  UNION ALL
-      |  SELECT doc_id + 5 * o + 5, regexp_replace('fresh alpha ' || doc_id ||
-      |    ' beta ' || (doc_id * 7) || ' gamma delta epsilon', '^\S+\s*', '')
-      |  FROM base, off WHERE doc_id % 17 = 0
-      |  UNION ALL
-      |  SELECT doc_id + 6 * o + 6, 'second wave zeta ' || doc_id || ' eta ' ||
-      |    (doc_id * 3) || ' theta iota kappa'
-      |  FROM base, off WHERE doc_id % 19 = 0
-      |  UNION ALL
-      |  SELECT doc_id + 7 * o + 7, text FROM base, off WHERE doc_id % 31 = 0),
-      |${dedupPassSql("2", "all2")}
-      |SELECT doc_id FROM out2 s, off WHERE s.doc_id > 4 * off.o + 3""".stripMargin
-
-  private val Bm25OracleSql: String =
-    """WITH base AS (
-        |  SELECT doc_id, trim(lower(text)) AS lt FROM documents
-        |  WHERE text IS NOT NULL),
-        |dls AS (SELECT doc_id, lt,
-        |  CASE WHEN lt = '' THEN 0
-        |       ELSE len(regexp_split_to_array(lt, '\s+')) END AS dl
-        |  FROM base),
-        |stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dls),
-        |toks AS (SELECT doc_id, dl,
-        |  unnest(regexp_split_to_array(lt, '\s+')) AS term FROM dls),
-        |hits AS (SELECT doc_id, dl, term, count(*) AS tf FROM toks
-        |  WHERE term IN ('spark', 'query', 'join') GROUP BY 1, 2, 3),
-        |dfreq AS (SELECT term, count(DISTINCT doc_id) AS df FROM hits GROUP BY 1)
-        |SELECT h.doc_id,
-        |  round(sum(ln((n - df + 0.5) / (df + 0.5) + 1.0) * tf * (1.2 + 1) /
-        |    (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))), 6) AS bm25,
-        |  count(*) AS n_terms
-        |FROM hits h CROSS JOIN stats JOIN dfreq USING (term)
-        |GROUP BY 1""".stripMargin
-
-  /** q102: verified pairs from the shared dedup machinery, clustered by
-    * a recursive-CTE transitive closure (min-label over the undirected
-    * edge set — the graph is near-dup-sparse, so the closure is tiny),
-    * then one survivor per component by (token count DESC, id ASC).
-    */
-  private val KeepBestOracleSql: String =
-    raw"""WITH RECURSIVE base AS (SELECT doc_id, text FROM documents),
-      |off AS (SELECT coalesce(max(doc_id), 0) AS o FROM base),
-      |all_docs AS (
-      |  SELECT doc_id, text FROM base
-      |  UNION ALL
-      |  SELECT doc_id + o + 1, text || ' zeta eta theta iota kappa'
-      |  FROM base, off WHERE doc_id % 40 = 0 AND text IS NOT NULL),
-      |${dedupPassSql("", "all_docs")},
-      |edgesp AS (SELECT id1, id2 FROM jc WHERE i2 * 1.0 / u2 >= 0.6),
-      |undp AS (SELECT id1, id2 FROM edgesp
-      |  UNION ALL SELECT id2, id1 FROM edgesp),
-      |nodesp AS (SELECT DISTINCT id1 AS id FROM undp),
-      |reach(id, lab) AS (
-      |  SELECT id, id FROM nodesp
-      |  UNION
-      |  SELECT u.id2, r.lab FROM reach r JOIN undp u ON u.id1 = r.id),
-      |compp AS (SELECT id, min(lab) AS comp FROM reach GROUP BY id),
-      |scoredp AS (SELECT s.doc_id,
-      |  CASE WHEN s.text IS NULL THEN 0
-      |       WHEN trim(lower(s.text)) = '' THEN 0
-      |       ELSE len(regexp_split_to_array(trim(lower(s.text)), '\s+'))
-      |  END AS sc FROM surv s),
-      |winp AS (SELECT c.comp, c.id AS doc_id,
-      |  row_number() OVER (PARTITION BY c.comp
-      |    ORDER BY sp.sc DESC, c.id ASC) AS rn
-      |  FROM compp c JOIN scoredp sp ON sp.doc_id = c.id),
-      |removedp AS (SELECT doc_id FROM winp WHERE rn > 1)
-      |SELECT s.doc_id FROM surv s
-      |WHERE NOT EXISTS (SELECT 1 FROM removedp r WHERE r.doc_id = s.doc_id)""".stripMargin
-
-  /** q100: RRF over the q75 BM25 machinery (nested as a subquery — its
-    * 6-dp rounding is what pins rank order across engines) and the q27
-    * unnest-zip cosine. Ranks = row_number over (rounded score desc, id);
-    * the final cut orders on RAW fused score (ties exact: sums of
-    * identical reciprocals) with id tie-break.
-    */
-  private val RrfOracleSql: String =
-    s"""WITH bmraw AS (SELECT doc_id, bm25 AS score FROM ($Bm25OracleSql)),
-      |bmtop AS (SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS r
-      |  FROM bmraw ORDER BY score DESC, doc_id LIMIT 50),
-      |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-      |z AS (SELECT e.vec_id, unnest(e.v) AS a, unnest(q.qv) AS b FROM e, q),
-      |cs AS (SELECT vec_id,
-      |  round(sum(a * b) / (sqrt(sum(a * a)) * sqrt(sum(b * b))), 6) AS score
-      |  FROM z GROUP BY vec_id),
-      |ctop AS (SELECT vec_id AS doc_id, row_number() OVER (ORDER BY score DESC, vec_id) AS r
-      |  FROM cs ORDER BY score DESC, vec_id LIMIT 50),
-      |u AS (SELECT doc_id, r FROM bmtop UNION ALL SELECT doc_id, r FROM ctop),
-      |f AS (SELECT doc_id, sum(1.0::DOUBLE / (60 + r)) AS raw,
-      |  count(*) AS n_systems FROM u GROUP BY doc_id)
-      |SELECT doc_id, round(raw, 6) AS rrf, n_systems
-      |FROM f ORDER BY raw DESC, doc_id LIMIT 20""".stripMargin
-
-  /** q109: q100's fusion with BOTH legs re-derived the indexed way — the
-    * BM25 leg is q75's relation (the text index is hash-proven to
-    * reproduce it, q79), the ANN leg is q105's probed-ADC relation (the
-    * IVF-PQ index is hash-proven to reproduce it, q106). Ranks on the
-    * 6-dp-rounded scores with id tie-breaks, RRF k = 60, top 20.
-    */
-  private val IndexedHybridOracleSql: String =
-    s"""WITH bmraw AS (SELECT doc_id, bm25 AS score FROM ($Bm25OracleSql)),
-      |bmtop AS (SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS r
-      |  FROM bmraw ORDER BY score DESC, doc_id LIMIT 50),
-      |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-      |  FROM embeddings WHERE embedding IS NOT NULL),
-      |don AS (SELECT vec_id AS did, v AS dv FROM e
-      |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-      |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-      |fulld AS (SELECT e.vec_id, d.did,
-      |  list_reduce(list_transform(range(1, len(e.v) + 1),
-      |    j -> (e.v[j] - d.dv[j]) * (e.v[j] - d.dv[j])), (x, y) -> x + y) AS dd
-      |  FROM e CROSS JOIN don d),
-      |asg AS (SELECT vec_id, did AS lst FROM fulld
-      |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) = 1),
-      |pl AS (SELECT did AS lst FROM don CROSS JOIN q
-      |  ORDER BY list_reduce(list_transform(range(1, len(dv) + 1),
-      |    j -> (dv[j] - qv[j]) * (dv[j] - qv[j])), (x, y) -> x + y), did LIMIT 4),
-      |cand AS (SELECT a.vec_id FROM asg a JOIN pl ON a.lst = pl.lst),
-      |sd AS (SELECT e.vec_id, t.j, d.did,
-      |  list_reduce(list_transform(range(1, 9), i ->
-      |    (e.v[t.j * 8 + i] - d.dv[t.j * 8 + i]) *
-      |    (e.v[t.j * 8 + i] - d.dv[t.j * 8 + i])), (x, y) -> x + y) AS s
-      |  FROM e CROSS JOIN range(8) t(j) CROSS JOIN don d),
-      |codes AS (SELECT vec_id, j, did AS code FROM sd
-      |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-      |    ORDER BY s ASC, did ASC) = 1),
-      |qt AS (SELECT j, did, s FROM sd WHERE vec_id = 0),
-      |adc AS (SELECT c.vec_id, sum(q2.s) AS adc FROM codes c
-      |  JOIN cand ON cand.vec_id = c.vec_id
-      |  JOIN qt q2 ON q2.j = c.j AND q2.did = c.code GROUP BY c.vec_id),
-      |atop AS (SELECT vec_id AS doc_id,
-      |  row_number() OVER (ORDER BY round(adc, 6) ASC, vec_id) AS r
-      |  FROM adc ORDER BY round(adc, 6) ASC, vec_id LIMIT 50),
-      |u AS (SELECT doc_id, r FROM bmtop UNION ALL SELECT doc_id, r FROM atop),
-      |f AS (SELECT doc_id, sum(1.0::DOUBLE / (60 + r)) AS raw,
-      |  count(*) AS n_systems FROM u GROUP BY doc_id)
-      |SELECT doc_id, round(raw, 6) AS rrf, n_systems
-      |FROM f ORDER BY raw DESC, doc_id LIMIT 20""".stripMargin
-
-  /** Vincenty's λ-iteration, unrolled to 8 fixed steps as chained CTEs
-    * (DuckDB has no loops; 8 ≥ the ~4 steps non-antipodal pairs need, and
-    * beyond convergence extra steps move λ by < 1e-12 — nanometers,
-    * invisible at the meter rounding). Lateral column aliases keep each
-    * step readable. Mirrors `GeoMath.geodesicKm` term for term.
-    */
-  private val GeodesicOracleSql: String = {
-    val f = "0.0033528106647474805" // WGS-84 1/298.257223563
-    // two-layer CTE per step: the inner SELECT holds the lateral aliases,
-    // the outer projects ONLY (keys, constants, new λ) — a carried column
-    // named like a lateral alias would take binding precedence over it in
-    // the NEXT step and silently freeze the iteration
-    def step(i: Int, last: Boolean): String = {
-      val proj = if (last) "c_custkey, ss, cs, sg, c2a, c2sm"
-        else "c_custkey, su1, cu1, su2, cu2, L, lamN AS lam"
-      s"""it$i AS (SELECT $proj FROM (
-         |  SELECT c_custkey, su1, cu1, su2, cu2, L,
-         |  sin(lam) AS sl, cos(lam) AS cl,
-         |  cu2 * sl AS t1, cu1 * su2 - su1 * cu2 * cl AS t2,
-         |  sqrt(t1 * t1 + t2 * t2) AS ss,
-         |  su1 * su2 + cu1 * cu2 * cl AS cs,
-         |  atan2(ss, cs) AS sg,
-         |  cu1 * cu2 * sl / ss AS sa, 1 - sa * sa AS c2a,
-         |  cs - 2 * su1 * su2 / c2a AS c2sm,
-         |  $f / 16 * c2a * (4 + $f * (4 - 3 * c2a)) AS cc,
-         |  L + (1 - cc) * $f * sa * (sg + cc * ss *
-         |    (c2sm + cc * cs * (-1 + 2 * c2sm * c2sm))) AS lamN
-         |  FROM it${i - 1}))""".stripMargin
-    }
-    val iters = (1 to 8).map(i => step(i, i == 8)).mkString(",\n")
-    s"""WITH p AS (SELECT c_custkey,
-       |    35.0 + (c_custkey % 40) * 0.9 AS lat1,
-       |    -10.0 + (c_custkey % 61) * 0.7 AS lon1,
-       |    35.0 + (c_custkey % 40) * 0.9
-       |      + ((c_custkey * 7) % 11 - 5) * 1.3 + 0.05 AS lat2,
-       |    -10.0 + (c_custkey % 61) * 0.7
-       |      + ((c_custkey * 13) % 17 - 8) * 1.1 AS lon2
-       |  FROM customer),
-       |it0 AS (SELECT c_custkey, radians(lon2 - lon1) AS L,
-       |    sin(atan((1 - $f) * tan(radians(lat1)))) AS su1,
-       |    cos(atan((1 - $f) * tan(radians(lat1)))) AS cu1,
-       |    sin(atan((1 - $f) * tan(radians(lat2)))) AS su2,
-       |    cos(atan((1 - $f) * tan(radians(lat2)))) AS cu2,
-       |    radians(lon2 - lon1) AS lam
-       |  FROM p),
-       |$iters
-       |SELECT c_custkey, round(
-       |  6356752.314245179 * (1 + u2sq / 16384 * (4096 + u2sq * (-768
-       |      + u2sq * (320 - 175 * u2sq)))) *
-       |    (sg - (u2sq / 1024 * (256 + u2sq * (-128 + u2sq * (74 - 47 * u2sq))))
-       |      * ss * (c2sm
-       |        + (u2sq / 1024 * (256 + u2sq * (-128 + u2sq * (74 - 47 * u2sq)))) / 4 *
-       |        (cs * (-1 + 2 * c2sm * c2sm)
-       |          - (u2sq / 1024 * (256 + u2sq * (-128 + u2sq * (74 - 47 * u2sq)))) / 6
-       |            * c2sm * (-3 + 4 * ss * ss) * (-3 + 4 * c2sm * c2sm))))
-       |  / 1000.0, 3) AS geo_km
-       |FROM (SELECT *,
-       |  c2a * 0.0067394967422764341 AS u2sq
-       |  FROM it8)""".stripMargin
-  }
-
-  /** One unrolled BPE training step for the q151 oracle: pair counts over
-    * the bracket-encoded vocabulary (lateral range over the symbol list,
-    * 1-based, overlapping adjacent pairs), deterministic argmax, literal
-    * left-to-right replace — the exact recipe of `Bpe.train`.
-    */
-  private def bpeStepSql(k: Int): String =
-    raw"""p$k AS (SELECT s[i] AS a, s[i + 1] AS b,
-       |    CAST(sum(freq) AS BIGINT) AS c
-       |  FROM (SELECT freq, s, unnest(range(1, len(s))) AS i
-       |    FROM (SELECT freq, regexp_extract_all(enc, '<([^>]*)>', 1) AS s
-       |      FROM e${k - 1}))
-       |  GROUP BY 1, 2),
-       |b$k AS (SELECT a, b, c FROM p$k ORDER BY c DESC, a ASC, b ASC
-       |  LIMIT 1),
-       |e$k AS (SELECT freq,
-       |    replace(enc, '<' || b$k.a || '><' || b$k.b || '>',
-       |      '<' || b$k.a || b$k.b || '>') AS enc
-       |  FROM e${k - 1} CROSS JOIN b$k)""".stripMargin
-
-  /** The BPE training CTE chain (word counts → e0 → b1/e1 … b_n/e_n),
-    * shared by q151 and q158.
-    */
-  private def bpeCtes(nMerges: Int): String = {
-    val steps = (1 to nMerges).map(bpeStepSql).mkString(",\n")
-    raw"""toks AS (SELECT
-       |    unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS word
-       |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-       |w0 AS (SELECT word, CAST(count(*) AS BIGINT) AS freq FROM toks
-       |  WHERE regexp_matches(word, '^[a-z0-9]+$$') GROUP BY word),
-       |e0 AS (SELECT freq, regexp_replace(word, '(.)', '<\1>', 'g') AS enc
-       |  FROM w0),
-       |$steps""".stripMargin
-  }
-
-  private def bpeOracleSql(nMerges: Int): String = {
-    val mergeRows = (1 to nMerges).map { k =>
-      if (k == 1)
-        s"SELECT 'merge' AS kind, CAST(1 AS BIGINT) AS step, a, b, c AS n FROM b1"
-      else s"UNION ALL SELECT 'merge', $k, a, b, c FROM b$k"
-    }.mkString("\n")
-    raw"""WITH ${bpeCtes(nMerges)},
-       |vocab AS (SELECT sym AS a, CAST(sum(freq) AS BIGINT) AS n
-       |  FROM (SELECT freq,
-       |    unnest(regexp_extract_all(enc, '<([^>]*)>', 1)) AS sym
-       |    FROM e$nMerges)
-       |  GROUP BY sym)
-       |$mergeRows
-       |UNION ALL SELECT 'sym', $nMerges, a, '', n FROM vocab""".stripMargin
-  }
-
-  /** q158 oracle: the trained merge rows (b1…b4) applied to every doc
-    * word as a chained literal replace (left-to-right, the greedy merge
-    * semantics), symbol counts summed per doc (out-of-alphabet words
-    * count 1), then q71's cumulative-sum packing replay on the BPE
-    * counts.
-    */
-  private def bpePackOracleSql(nMerges: Int, budget: Int): String = {
-    val enc0 = raw"regexp_replace(word, '(.)', '<\1>', 'g')"
-    val applied = (1 to nMerges).foldLeft(enc0) { (acc, k) =>
-      s"replace($acc,\n          '<' || b$k.a || '><' || b$k.b || " +
-        s"'>', '<' || b$k.a || b$k.b || '>')"
-    }
-    val crossB = (1 to nMerges).map(k => s"CROSS JOIN b$k").mkString(" ")
-    raw"""WITH ${bpeCtes(nMerges)},
-       |docw AS (SELECT doc_id,
-       |    unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS word
-       |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-       |seg AS (SELECT doc_id,
-       |    CASE WHEN regexp_matches(word, '^[a-z0-9]+$$') THEN
-       |      len(regexp_extract_all($applied, '<([^>]*)>', 1))
-       |    ELSE 1 END AS c
-       |  FROM docw $crossB),
-       |cnts AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS bpe_toks
-       |  FROM seg GROUP BY doc_id),
-       |alld AS (SELECT d.doc_id, coalesce(c.bpe_toks, 0) AS bpe_toks
-       |  FROM (SELECT doc_id FROM documents WHERE text IS NOT NULL) d
-       |  LEFT JOIN cnts c ON c.doc_id = d.doc_id),
-       |d2 AS (SELECT doc_id, doc_id % 8 AS shard,
-       |    least(bpe_toks, $budget) AS toks FROM alld),
-       |c2 AS (SELECT *, sum(toks) OVER (PARTITION BY shard
-       |    ORDER BY doc_id) AS cum FROM d2)
-       |SELECT shard, CAST(floor((cum - toks) / $budget.0) AS BIGINT)
-       |    AS bin,
-       |  count(*) AS n_docs, CAST(sum(toks) AS BIGINT) AS fill,
-       |  round(CAST(sum(toks) AS BIGINT) / $budget.0, 6) AS fill_ratio
-       |FROM c2 GROUP BY 1, 2""".stripMargin
-  }
-
-  /** The engine-wide polynomial hash as a DuckDB expression over `s`. */
-  /** The SimHash recompute CTE chain (tk → th → bits → sim), shared by
-    * q36, the q170 Hamming-ball pair oracle, and (over the exact-tier
-    * survivors) the q177 tiered-dedup oracle. Blank docs are excluded
-    * at tk (they have no tokens to vote). `src` names the source
-    * relation (must have doc_id, text).
-    */
-  private def simhashCtes(src: String = "documents"): String =
-    raw"""tk AS (SELECT doc_id,
-       |    unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
-       |  FROM $src WHERE coalesce(trim(text), '') <> ''),
-       |th AS (SELECT doc_id,
-       |  ((1299709 * h0 + 31) % 1000000007) * 1073741824
-       |    + ((104729 * h0 + 7) % 1000000007) AS h
-       |  FROM (SELECT doc_id, list_reduce(
-       |    list_prepend(0::BIGINT, list_transform(regexp_extract_all(tok, '.'),
-       |      c -> ascii(c)::BIGINT)),
-       |    (acc, ch) -> (acc * 31 + ch) % 1000000007) AS h0 FROM tk)),
-       |bits AS (SELECT doc_id, b,
-       |  sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
-       |  FROM th CROSS JOIN range(60) t(b) GROUP BY 1, 2),
-       |sim AS (SELECT doc_id,
-       |  sum(CASE WHEN v > 0 THEN 1::BIGINT << b ELSE 0 END)::BIGINT AS simhash
-       |  FROM bits GROUP BY 1)""".stripMargin
-
-  /** The Manku block-pigeonhole pair CTEs over `sim` (blk → sokb →
-    * cand → prs), shared by q170, the q175 cluster oracle, and the q177
-    * tiered-dedup oracle. `sokb` MIRRORS the engine's maxBucket skew
-    * guard (a (block, value) key held by more than `maxBucket` docs is
-    * dropped from both sides before any pair is emitted) so the gate
-    * stays green even on data where the guard binds.
-    */
-  private def simhashPairCtes(maxBucket: Int = 1000): String =
-    raw"""blk AS (SELECT doc_id, simhash, t.i,
-       |    (simhash >> (15 * t.i)) & 32767 AS bval
-       |  FROM sim CROSS JOIN range(4) t(i)),
-       |sokb AS (SELECT i, bval FROM blk GROUP BY i, bval
-       |  HAVING count(*) BETWEEN 2 AND $maxBucket),
-       |cand AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
-       |    a.simhash AS s1, b.simhash AS s2
-       |  FROM blk a JOIN sokb k ON k.i = a.i AND k.bval = a.bval
-       |  JOIN blk b ON a.i = b.i AND a.bval = b.bval
-       |    AND a.doc_id < b.doc_id),
-       |prs AS (SELECT DISTINCT id1, id2,
-       |    CAST(bit_count(xor(s1, s2)) AS BIGINT) AS hamming
-       |  FROM cand WHERE bit_count(xor(s1, s2)) <= 3)""".stripMargin
-
-  /** The OPH CTE chain (tk → sh → h → bk → grid → dens → ookb → pr),
-    * shared by the q166 signature/pair oracle, the q168 containment
-    * oracle, and (over tier survivors) the q176/q177 dedup-chain
-    * oracles. Null and blank text both shingle to [''] — the engine
-    * queries coalesce accordingly. `src` names the source relation
-    * (doc_id, text); `ookb` MIRRORS the engine's maxBucket skew guard
-    * (a (bucket, sig) key held by more than `maxBucket` docs is dropped
-    * from both sides before any pair is emitted) so the gate stays
-    * green even on data where the guard binds.
-    */
-  private def ophCtes(k: Int, minMatch: Int, src: String = "documents",
-      maxBucket: Int = 1000, p: String = ""): String =
-    raw"""${p}tk AS (SELECT doc_id,
-       |  CASE WHEN coalesce(trim(text), '') = '' THEN []::VARCHAR[]
-       |       ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS w
-       |  FROM $src),
-       |${p}sh AS (SELECT doc_id,
-       |  CASE WHEN len(w) = 0 THEN ['']
-       |       WHEN len(w) < 2 THEN [array_to_string(w, ' ')]
-       |       ELSE list_transform(range(1, len(w)),
-       |         j -> w[j] || ' ' || w[j+1]) END AS sh
-       |  FROM ${p}tk),
-       |${p}h AS (SELECT doc_id, unnest(list_transform(sh, s ->
-       |    (104729 * list_reduce(
-       |      list_prepend(0::BIGINT, list_transform(
-       |        regexp_extract_all(s, '.'), c -> ascii(c)::BIGINT)),
-       |      (acc, ch) -> (acc * 31 + ch) % 1000000007) + 7)
-       |      % 1000000007)) AS hv
-       |  FROM ${p}sh),
-       |${p}bk AS (SELECT doc_id, hv % $k AS b, min(hv) AS mn FROM ${p}h
-       |  GROUP BY doc_id, hv % $k),
-       |${p}grid AS (SELECT d.doc_id, t.i AS b
-       |  FROM (SELECT DISTINCT doc_id FROM $src) d
-       |  CROSS JOIN range($k) t(i)),
-       |${p}dens AS (SELECT g.doc_id, CAST(g.b AS BIGINT) AS b,
-       |    CAST(k.mn + ((k.b - g.b + $k) % $k) * 1000000007 AS BIGINT)
-       |      AS sig
-       |  FROM ${p}grid g JOIN ${p}bk k ON k.doc_id = g.doc_id
-       |  QUALIFY row_number() OVER (PARTITION BY g.doc_id, g.b
-       |    ORDER BY (k.b - g.b + $k) % $k) = 1),
-       |${p}ookb AS (SELECT b, sig FROM ${p}dens GROUP BY b, sig
-       |  HAVING count(*) BETWEEN 2 AND $maxBucket),
-       |${p}pr AS (SELECT a.doc_id AS id1, c.doc_id AS id2,
-       |    CAST(count(*) AS BIGINT) AS n_match
-       |  FROM ${p}dens a JOIN ${p}ookb o ON o.b = a.b AND o.sig = a.sig
-       |  JOIN ${p}dens c ON a.b = c.b AND a.sig = c.sig
-       |    AND a.doc_id < c.doc_id
-       |  GROUP BY 1, 2 HAVING count(*) >= $minMatch)""".stripMargin
-
-  private def phSql(s: String): String =
-    s"list_reduce(list_prepend(0::BIGINT, " +
-    s"list_transform(regexp_extract_all($s, '.'), c -> ascii(c)::BIGINT))," +
-    s" (acc, ch) -> (acc * 31 + ch) % 1000000007)"
-
-  /** q153 oracle: CDC boundaries (0-based gram positions p ≥ 1 whose
-    * 3-gram hash divides), spans via lead() per doc, chunk content hash —
-    * `ContentChunks.cdcChunks` replayed literally.
-    */
-  private def cdcChunkCtes(n: Int, dv: Int): String =
-    raw"""base AS (SELECT doc_id,
-       |    regexp_split_to_array(trim(lower(text)), '\s+') AS w
-       |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-       |grams AS (SELECT doc_id,
-       |    unnest(list_transform(range(2, len(w) - $n + 2), p -> p - 1))
-       |      AS pos,
-       |    unnest(list_transform(range(2, len(w) - $n + 2),
-       |      p -> array_to_string(w[p:p + $n - 1], ' '))) AS gram
-       |  FROM base WHERE len(w) >= $n + 1),
-       |bnd AS (SELECT doc_id, pos FROM (SELECT doc_id, pos,
-       |    ${phSql("gram")} AS h FROM grams) WHERE h % $dv = 0),
-       |starts AS (SELECT doc_id, 0 AS s FROM base
-       |  UNION ALL SELECT doc_id, pos FROM bnd),
-       |spans AS (SELECT st.doc_id, st.s,
-       |    coalesce(lead(st.s) OVER (PARTITION BY st.doc_id ORDER BY st.s),
-       |      len(b.w)) AS e, b.w
-       |  FROM starts st JOIN base b ON b.doc_id = st.doc_id),
-       |chunks AS (SELECT doc_id, s, e,
-       |    ${phSql("array_to_string(w[s + 1:e], ' ')")} AS chash
-       |  FROM spans)""".stripMargin
-
-  private def cdcOracleSql(n: Int, dv: Int): String =
-    (s"WITH ${cdcChunkCtes(n, dv)},\n" +
-      raw"""perdoc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS a
-       |  FROM chunks GROUP BY doc_id),
-       |dups AS (SELECT chash, CAST(count(DISTINCT doc_id) AS BIGINT) AS a,
-       |    CAST(count(*) AS BIGINT) AS b
-       |  FROM chunks GROUP BY chash HAVING count(DISTINCT doc_id) >= 2)
-       |SELECT 'doc' AS kind, doc_id AS k, a, CAST(0 AS BIGINT) AS b
-       |FROM perdoc
-       |UNION ALL SELECT 'dup', chash, a, b FROM dups""".stripMargin)
-
-  /** q218 oracle: the water-filling fixpoint unrolled `iters` waves in
-    * HUGEINT. Each wave recomputes the water level (N = budget −
-    * Σ_sat avail, D = Σ_unsat weight) and flags every domain with
-    * `avail·D ≤ N·weight`; with 4 domains and budget < Σavail at most
-    * 3 can saturate, so ≥ 4 unrolled waves are provably past the
-    * fixpoint (extra waves are no-ops). Final allocation mirrors
-    * `TrainPrep.tokenWaterfill`: saturated → avail, else
-    * `⌊N·w/D⌋` + 1 for the first `remainder` unsaturated domains by
-    * name.
-    */
-  private def waterfillOracleSql(iters: Int): String = {
-    val steps = (1 to iters).map { i =>
-      raw"""a${i - 1} AS (SELECT
-         |    (SELECT b FROM tot) - COALESCE(sum(CASE WHEN sat
-         |      THEN CAST(avail AS HUGEINT) END), 0) AS n,
-         |    (SELECT tw FROM tot) - COALESCE(sum(CASE WHEN sat
-         |      THEN CAST(w AS HUGEINT) END), 0) AS dd
-         |  FROM i${i - 1}),
-         |i$i AS (SELECT domain, avail, w,
-         |    sat OR CAST(avail AS HUGEINT) * dd <= n * CAST(w AS HUGEINT)
-         |      AS sat
-         |  FROM i${i - 1}, a${i - 1})""".stripMargin
-    }.mkString(",\n")
-    raw"""WITH d AS (SELECT 'd' || dx AS domain,
-       |    CAST(sum(n) AS BIGINT) AS avail,
-       |    CAST((dx + 1) * 250000 AS BIGINT) AS w
-       |  FROM (SELECT CAST(substr(source, 4) AS INTEGER) % 4 AS dx,
-       |      len(str_split(trim(text), ' ')) AS n FROM documents)
-       |  GROUP BY dx),
-       |tot AS (SELECT CAST(sum(avail) AS HUGEINT) AS tc,
-       |    CAST(sum(w) AS HUGEINT) AS tw,
-       |    CAST(9 * sum(avail) // 10 AS HUGEINT) AS b FROM d),
-       |i0 AS (SELECT domain, avail, w, false AS sat FROM d),
-       |$steps,
-       |af AS (SELECT
-       |    (SELECT b FROM tot) - COALESCE(sum(CASE WHEN sat
-       |      THEN CAST(avail AS HUGEINT) END), 0) AS n,
-       |    (SELECT tw FROM tot) - COALESCE(sum(CASE WHEN sat
-       |      THEN CAST(w AS HUGEINT) END), 0) AS dd
-       |  FROM i$iters),
-       |base AS (SELECT f.domain, f.avail, f.w, f.sat,
-       |    CASE WHEN f.sat THEN CAST(f.avail AS HUGEINT)
-       |         ELSE af.n * CAST(f.w AS HUGEINT) // af.dd END AS a_
-       |  FROM i$iters f, af),
-       |rem AS (SELECT CAST((SELECT n FROM af)
-       |      - COALESCE(sum(CASE WHEN NOT sat THEN a_ END), 0)
-       |    AS BIGINT) AS r FROM base),
-       |rk AS (SELECT domain, row_number() OVER (ORDER BY domain) AS rn
-       |  FROM base WHERE NOT sat)
-       |SELECT b2.domain, b2.avail, b2.w AS weight_ppm,
-       |  CAST(b2.a_ + CASE WHEN NOT b2.sat
-       |      AND COALESCE(rk.rn, 0) <= (SELECT r FROM rem)
-       |    THEN 1 ELSE 0 END AS BIGINT) AS alloc,
-       |  b2.sat AS saturated
-       |FROM base b2 LEFT JOIN rk USING (domain)""".stripMargin
-  }
-
-  /** q224/q225 oracle chain: the unigram-LM tokenizer step re-derived —
-    * distinct-word counts, substring seed vocabulary on the
-    * `K − ⌊log2⌋` lattice (binary-digit count, no float log), the
-    * per-(word, end, len) piece-cost lattice as nested lists, the
-    * Viterbi DP as a RECURSIVE CTE carrying cost/backpointer lists
-    * (q159's carried-frontier pattern), with the same longest-piece
-    * tie-break (`list_max` over the argmin set), and the backtrace as a
-    * second recursive walk. Ends at `segs(word, n_occ, seg, cost)`.
-    * Callers must open with `WITH RECURSIVE`.
-    */
-  private def unigramVocabCtes(maxLen: Int, minCount: Long): String =
-    raw"""wrd AS (SELECT word, CAST(count(*) AS BIGINT) AS n_occ
-       |  FROM (SELECT unnest(str_split(trim(text), ' ')) AS word
-       |    FROM documents WHERE text IS NOT NULL)
-       |  WHERE word <> '' AND length(word) <= 32 GROUP BY word),
-       |sub AS (SELECT piece, CAST(sum(n_occ) AS BIGINT) AS cnt
-       |  FROM (SELECT n_occ, unnest(flatten(list_transform(
-       |      range(1, length(word) + 1),
-       |      p -> list_transform(range(1, least($maxLen,
-       |          length(word) - p + 1) + 1),
-       |        l -> word[p:p + l - 1])))) AS piece
-       |    FROM wrd) GROUP BY piece),
-       |vc AS (SELECT piece,
-       |    CAST(40 - (length(printf('%b', cnt)) - 1) AS BIGINT) AS cost
-       |  FROM sub WHERE cnt >= $minCount OR length(piece) = 1)"""
-      .stripMargin
-
-  /** The Viterbi DP + backtrace CTE block, prefix-parameterized (so a
-    * second segmentation pass under a different vocab CTE can live in
-    * the same WITH RECURSIVE — the q229 prune→re-segment chain).
-    */
-  private def unigramDpCtes(maxLen: Int, p: String,
-      vcName: String): String =
-    raw"""${p}wi AS (SELECT word, unnest(list_transform(
-       |    range(1, length(word) + 1), x -> x)) AS i FROM wrd),
-       |${p}wij AS (SELECT word, i, unnest(list_transform(
-       |    range(1, least($maxLen, i) + 1), x -> x)) AS j FROM ${p}wi),
-       |${p}wpc AS (SELECT z.word, z.i, z.j,
-       |    COALESCE($vcName.cost, 1000000000) AS pc
-       |  FROM (SELECT word, i, j, word[i - j + 1:i] AS piece
-       |    FROM ${p}wij) z
-       |  LEFT JOIN $vcName ON $vcName.piece = z.piece),
-       |${p}pcl AS (SELECT word, i, list(pc ORDER BY j) AS pcs
-       |  FROM ${p}wpc GROUP BY word, i),
-       |${p}pw AS (SELECT word, list(pcs ORDER BY i) AS pc2
-       |  FROM ${p}pcl GROUP BY word),
-       |${p}dp AS (
-       |  SELECT w.word, 0 AS i,
-       |    [CAST(0 AS BIGINT)] AS costs, CAST([] AS INTEGER[]) AS back,
-       |    p.pc2
-       |  FROM wrd w JOIN ${p}pw p ON p.word = w.word
-       |  UNION ALL
-       |  SELECT word, i + 1,
-       |    list_append(costs, list_min(list_transform(
-       |      range(1, least($maxLen, i + 1) + 1),
-       |      j -> costs[i + 2 - j] + pc2[i + 1][j]))),
-       |    list_append(back, CAST(list_max(list_filter(
-       |      range(1, least($maxLen, i + 1) + 1),
-       |      j -> costs[i + 2 - j] + pc2[i + 1][j] =
-       |        list_min(list_transform(
-       |          range(1, least($maxLen, i + 1) + 1),
-       |          jj -> costs[i + 2 - jj] + pc2[i + 1][jj]))))
-       |      AS INTEGER)),
-       |    pc2
-       |  FROM ${p}dp WHERE i < length(word)),
-       |${p}fin AS (SELECT word, costs[length(word) + 1] AS cost, back
-       |  FROM ${p}dp WHERE i = length(word)),
-       |${p}bt AS (
-       |  SELECT f.word, CAST(length(f.word) AS INTEGER) AS i,
-       |    CAST('' AS VARCHAR) AS seg, f.back
-       |  FROM ${p}fin f
-       |  UNION ALL
-       |  SELECT word, i - back[i],
-       |    CASE WHEN seg = '' THEN word[i - back[i] + 1:i]
-       |         ELSE word[i - back[i] + 1:i] || ' ' || seg END,
-       |    back
-       |  FROM ${p}bt WHERE i > 0),
-       |${p}segs AS (SELECT b.word, w.n_occ, b.seg, f.cost
-       |  FROM ${p}bt b JOIN ${p}fin f ON f.word = b.word
-       |  JOIN wrd w ON w.word = b.word
-       |  WHERE b.i = 0)""".stripMargin
-
-  private def unigramCtes(maxLen: Int, minCount: Long): String =
-    unigramVocabCtes(maxLen, minCount) + ",\n" +
-      unigramDpCtes(maxLen, "", "vc")
-
-  /** q160 oracle: the full Gopher repetition battery — per-n top-gram
-    * argmax CTEs and duplicated-gram coverage CTEs (within-doc rep →
-    * gaps-and-islands merge → char sum over covered positions), flags by
-    * integer cross-multiplication. Generated per n; thresholds are the
-    * paper's, as exact rationals.
-    */
-  private def gopherRepOracleSql: String = {
-    val topSpec = Seq((2, 1L, 5L), (3, 9L, 50L), (4, 4L, 25L))
-    val dupSpec = Seq((5, 3L, 20L), (6, 7L, 50L), (7, 13L, 100L),
-      (8, 3L, 25L), (9, 11L, 100L), (10, 1L, 10L))
-    def gramsFor(n: Int, withPos: Boolean): String = {
-      val pos = if (withPos)
-        s"unnest(list_transform(range(1, len(w) - $n + 2), " +
-          "p -> p - 1)) AS pos,"
-      else ""
-      raw"""SELECT doc_id, $pos
-         |    unnest(list_transform(range(1, len(w) - $n + 2),
-         |      p -> array_to_string(w[p:p + $n - 1], ' '))) AS g
-         |  FROM base WHERE len(w) >= $n""".stripMargin
-    }
-    val topCtes = topSpec.map { case (n, _, _) =>
-      raw"""t$n AS (SELECT doc_id, CAST(c * length(g) AS BIGINT) AS cov
-         |  FROM (SELECT doc_id, g, CAST(count(*) AS BIGINT) AS c
-         |    FROM (${gramsFor(n, withPos = false)}) GROUP BY 1, 2)
-         |  QUALIFY row_number() OVER (PARTITION BY doc_id
-         |    ORDER BY c DESC, g ASC) = 1)""".stripMargin
-    }
-    val dupCtes = dupSpec.map { case (n, _, _) =>
-      raw"""g$n AS (${gramsFor(n, withPos = true)}),
-         |r$n AS (SELECT doc_id, g FROM g$n GROUP BY 1, 2
-         |  HAVING count(*) >= 2),
-         |m$n AS (SELECT g$n.doc_id, CAST(g$n.pos AS BIGINT) AS pos,
-         |    CAST(g$n.pos + $n AS BIGINT) AS e
-         |  FROM g$n JOIN r$n USING (doc_id, g)),
-         |x$n AS (SELECT doc_id, pos, e,
-         |    max(e) OVER (PARTITION BY doc_id ORDER BY pos
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-         |  FROM m$n),
-         |y$n AS (SELECT doc_id, pos, e,
-         |    CASE WHEN pm IS NULL OR pos > pm THEN 1 ELSE 0 END AS nw
-         |  FROM x$n),
-         |z$n AS (SELECT doc_id, pos, e,
-         |    sum(nw) OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-         |  FROM y$n),
-         |sp$n AS (SELECT doc_id, min(pos) AS s, max(e) AS en
-         |  FROM z$n GROUP BY doc_id, grp),
-         |cv$n AS (SELECT sp.doc_id,
-         |    CAST(sum(t.len) + count(*) AS BIGINT) AS lenpos
-         |  FROM sp$n sp JOIN toksall t ON t.doc_id = sp.doc_id
-         |    AND t.pos >= sp.s AND t.pos < sp.en
-         |  GROUP BY sp.doc_id),
-         |ns$n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nsp
-         |  FROM sp$n GROUP BY doc_id),
-         |d$n AS (SELECT cv.doc_id, cv.lenpos - ns.nsp AS cov
-         |  FROM cv$n cv JOIN ns$n ns USING (doc_id))""".stripMargin
-    }
-    def cond(alias: String, num: Long, den: Long) =
-      s"$alias.cov IS NULL OR $den * $alias.cov <= $num * m.n_chars"
-    val flags =
-      topSpec.map { case (n, num, den) =>
-        s"  CAST(CASE WHEN ${cond(s"t$n", num, den)} THEN 1 ELSE 0 END" +
-          s" AS BIGINT) AS r_top$n"
-      } ++ dupSpec.map { case (n, num, den) =>
-        s"  CAST(CASE WHEN ${cond(s"d$n", num, den)} THEN 1 ELSE 0 END" +
-          s" AS BIGINT) AS r_dup$n"
-      }
-    val keepSum = (topSpec.map { case (n, num, den) =>
-      s"(CASE WHEN ${cond(s"t$n", num, den)} THEN 1 ELSE 0 END)"
-    } ++ dupSpec.map { case (n, num, den) =>
-      s"(CASE WHEN ${cond(s"d$n", num, den)} THEN 1 ELSE 0 END)"
-    }).mkString("\n    + ")
-    val joins = (topSpec.map(t => s"t${t._1}") ++
-      dupSpec.map(d => s"d${d._1}"))
-      .map(a => s"LEFT JOIN $a ON $a.doc_id = m.doc_id").mkString("\n")
-    raw"""WITH base AS (SELECT doc_id,
-       |    CASE WHEN trim(lower(text)) = '' THEN CAST([] AS VARCHAR[])
-       |         ELSE regexp_split_to_array(trim(lower(text)), '\s+')
-       |    END AS w
-       |  FROM documents WHERE text IS NOT NULL),
-       |m AS (SELECT doc_id,
-       |    CAST(CASE WHEN len(w) > 0
-       |      THEN list_sum(list_transform(w, x -> length(x)))
-       |        + len(w) - 1
-       |      ELSE 0 END AS BIGINT) AS n_chars
-       |  FROM base),
-       |toksall AS (SELECT doc_id,
-       |    unnest(list_transform(range(1, len(w) + 1),
-       |      p -> CAST(p - 1 AS BIGINT))) AS pos,
-       |    unnest(list_transform(range(1, len(w) + 1),
-       |      p -> CAST(length(w[p]) AS BIGINT))) AS len
-       |  FROM base),
-       |${topCtes.mkString(",\n")},
-       |${dupCtes.mkString(",\n")}
-       |SELECT m.doc_id, m.n_chars,
-       |${flags.mkString(",\n")},
-       |  CAST(CASE WHEN $keepSum = 9 THEN 1 ELSE 0 END AS BIGINT) AS keep
-       |FROM m
-       |$joins""".stripMargin
-  }
-
-  /** q159 oracle: FastCDC's sequential recurrence as a recursive CTE.
-    * The trick keeping the recursive term join-only (no aggregates): a
-    * precomputed `nh` relation gives, for every gram position p, the
-    * first divisor hit at or after p (a reverse-ordered window min), so
-    * each recursion step looks up exactly one row at p = s + minLen.
-    */
-  private def cdcBoundedOracleSql(n: Int, dv: Int, mn: Int,
-      mx: Int): String =
-    raw"""WITH RECURSIVE base AS (SELECT doc_id,
-       |    regexp_split_to_array(trim(lower(text)), '\s+') AS w
-       |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-       |lens AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS len FROM base),
-       |grams AS (SELECT doc_id,
-       |    unnest(list_transform(range(1, len(w) - $n + 2), p -> p - 1))
-       |      AS pos,
-       |    unnest(list_transform(range(1, len(w) - $n + 2),
-       |      p -> array_to_string(w[p:p + $n - 1], ' '))) AS gram
-       |  FROM base WHERE len(w) >= $n),
-       |gh AS (SELECT doc_id, pos,
-       |    CASE WHEN ${phSql("gram")} % $dv = 0 THEN pos END AS hitpos
-       |  FROM grams),
-       |nh AS (SELECT doc_id, pos,
-       |    min(hitpos) OVER (PARTITION BY doc_id ORDER BY pos DESC
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS nexthit
-       |  FROM gh),
-       |ch AS (
-       |  SELECT l.doc_id, CAST(0 AS BIGINT) AS s,
-       |    CAST(CASE
-       |      WHEN h.nexthit IS NOT NULL
-       |        AND h.nexthit <= least(0 + $mx, l.len - $n)
-       |        THEN h.nexthit
-       |      WHEN 0 + $mx < l.len THEN 0 + $mx
-       |      ELSE l.len END AS BIGINT) AS e, l.len
-       |  FROM lens l LEFT JOIN nh h ON h.doc_id = l.doc_id
-       |    AND h.pos = 0 + $mn
-       |  UNION ALL
-       |  SELECT c.doc_id, c.e AS s,
-       |    CAST(CASE
-       |      WHEN h.nexthit IS NOT NULL
-       |        AND h.nexthit <= least(c.e + $mx, c.len - $n)
-       |        THEN h.nexthit
-       |      WHEN c.e + $mx < c.len THEN c.e + $mx
-       |      ELSE c.len END AS BIGINT) AS e, c.len
-       |  FROM ch c LEFT JOIN nh h ON h.doc_id = c.doc_id
-       |    AND h.pos = c.e + $mn
-       |  WHERE c.e < c.len)
-       |SELECT ch.doc_id, ch.s AS start, ch.e AS "end",
-       |  ${phSql("array_to_string(b.w[ch.s + 1:ch.e], ' ')")} AS chash
-       |FROM ch JOIN base b ON b.doc_id = ch.doc_id""".stripMargin
-
-  /** q154 oracle: winnowing's rightmost-minimum per window — frame min,
-    * then a ranged join back to pick the rightmost position at that
-    * minimum; short docs (m ≤ w) take the whole-stream minimum.
-    */
-  /** The winnowed-fingerprint CTE chain (base → fps), shared by q154 and
-    * the q165 cross-doc coverage oracle.
-    */
-  private def winnowFpCtes(k: Int, w: Int): String =
-    raw"""base AS (SELECT doc_id,
-       |    regexp_split_to_array(trim(lower(text)), '\s+') AS w
-       |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-       |grams AS (
-       |  SELECT doc_id,
-       |    unnest(list_transform(range(1, len(w) - $k + 2), p -> p - 1))
-       |      AS pos,
-       |    unnest(list_transform(range(1, len(w) - $k + 2),
-       |      p -> array_to_string(w[p:p + $k - 1], ' '))) AS gram
-       |  FROM base WHERE len(w) >= $k
-       |  UNION ALL
-       |  SELECT doc_id, 0 AS pos, array_to_string(w, ' ') AS gram
-       |  FROM base WHERE len(w) < $k),
-       |g AS (SELECT doc_id, pos, ${phSql("gram")} AS h FROM grams),
-       |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS m FROM g
-       |  GROUP BY doc_id),
-       |smn AS (SELECT g.doc_id, min(g.h) AS mn
-       |  FROM g JOIN cnt c ON c.doc_id = g.doc_id
-       |  WHERE c.m <= $w GROUP BY g.doc_id),
-       |smallfp AS (SELECT g.doc_id, max(g.pos) AS pos, s.mn AS h
-       |  FROM g JOIN smn s ON g.doc_id = s.doc_id AND g.h = s.mn
-       |  GROUP BY g.doc_id, s.mn),
-       |wst AS (SELECT g.doc_id, g.pos AS s, c.m,
-       |    min(g.h) OVER (PARTITION BY g.doc_id ORDER BY g.pos
-       |      ROWS BETWEEN CURRENT ROW AND ${w - 1} FOLLOWING) AS mn
-       |  FROM g JOIN cnt c ON c.doc_id = g.doc_id WHERE c.m > $w),
-       |sel AS (SELECT t.doc_id, t.s, t.mn, max(g2.pos) AS pos
-       |  FROM (SELECT * FROM wst WHERE s <= m - $w) t
-       |  JOIN g g2 ON g2.doc_id = t.doc_id
-       |    AND g2.pos BETWEEN t.s AND t.s + ${w - 1} AND g2.h = t.mn
-       |  GROUP BY t.doc_id, t.s, t.mn),
-       |fps AS (SELECT DISTINCT doc_id, pos, mn AS h FROM sel
-       |  UNION SELECT doc_id, pos, h FROM smallfp)""".stripMargin
-
-  private def winnowOracleSql(k: Int, w: Int): String =
-    raw"""WITH ${winnowFpCtes(k, w)},
-       |perdoc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS a FROM fps
-       |  GROUP BY doc_id),
-       |shared AS (SELECT h, CAST(count(DISTINCT doc_id) AS BIGINT) AS a,
-       |    CAST(count(*) AS BIGINT) AS b
-       |  FROM fps GROUP BY h HAVING count(DISTINCT doc_id) >= 2)
-       |SELECT 'fp' AS kind, doc_id AS k, a, CAST(0 AS BIGINT) AS b
-       |FROM perdoc
-       |UNION ALL SELECT 'shared', h, a, b FROM shared""".stripMargin
-
-  /** q165 oracle: shared-fingerprint windows islands-merged per doc —
-    * the same x/y/z/sp gaps-and-islands chain as q160's — with the
-    * keep threshold compared by integer cross-multiplication.
-    */
-  /** The cross-doc shared-window SPAN chain (winnowFpCtes → tok → sh →
-    * mk → x → y → z → sp): islands-merged coverage spans per doc, shared
-    * by the q165 coverage oracle and the q181 removal oracle.
-    */
-  private def winnowSpanCtes(k: Int, w: Int, minDocs: Int): String =
-    raw"""${winnowFpCtes(k, w)},
-       |tok AS (SELECT doc_id, CASE WHEN text IS NULL OR trim(text) = ''
-       |    THEN CAST(0 AS BIGINT)
-       |    ELSE CAST(len(regexp_split_to_array(trim(lower(text)), '\s+'))
-       |      AS BIGINT) END AS n
-       |  FROM documents),
-       |sh AS (SELECT h FROM fps GROUP BY h
-       |  HAVING count(DISTINCT doc_id) >= $minDocs),
-       |mk AS (SELECT f.doc_id, CAST(f.pos AS BIGINT) AS pos,
-       |    least(CAST(f.pos + $k AS BIGINT), t.n) AS e
-       |  FROM fps f JOIN sh USING (h) JOIN tok t ON t.doc_id = f.doc_id),
-       |x AS (SELECT doc_id, pos, e,
-       |    max(e) OVER (PARTITION BY doc_id ORDER BY pos
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-       |  FROM mk),
-       |y AS (SELECT doc_id, pos, e,
-       |    CASE WHEN pm IS NULL OR pos > pm THEN 1 ELSE 0 END AS nw
-       |  FROM x),
-       |z AS (SELECT doc_id, pos, e,
-       |    sum(nw) OVER (PARTITION BY doc_id ORDER BY pos) AS grp FROM y),
-       |sp AS (SELECT doc_id, min(pos) AS s, max(e) AS en FROM z
-       |  GROUP BY doc_id, grp)""".stripMargin
-
-  private def winnowCoverageOracleSql(k: Int, w: Int, minDocs: Int,
-      num: Long, den: Long): String =
-    raw"""WITH ${winnowSpanCtes(k, w, minDocs)},
-       |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nsp,
-       |    CAST(sum(en - s) AS BIGINT) AS dup FROM sp GROUP BY doc_id)
-       |SELECT d.doc_id, t.n AS n_tokens,
-       |  COALESCE(a.nsp, 0) AS n_spans,
-       |  COALESCE(a.dup, 0) AS dup_tokens,
-       |  CAST(CASE WHEN $den * COALESCE(a.dup, 0) <= $num * t.n
-       |    THEN 1 ELSE 0 END AS BIGINT) AS keep
-       |FROM documents d JOIN tok t ON t.doc_id = d.doc_id
-       |LEFT JOIN agg a ON a.doc_id = d.doc_id""".stripMargin
-
-  /** q181 oracle: the q165 span chain, then the REWRITE — original-case
-    * tokens with 0-based positions, tokens inside any span removed,
-    * survivors re-joined in order (string_agg ORDER BY pos); null text
-    * stays null, blank/fully-covered docs yield ''.
-    */
-  private def winnowRemoveOracleSql(k: Int, w: Int, minDocs: Int): String =
-    raw"""WITH ${winnowSpanCtes(k, w, minDocs)},
-       |tk2 AS (SELECT doc_id,
-       |    unnest(regexp_split_to_array(trim(text), '\s+')) AS tok,
-       |    unnest(list_transform(
-       |      range(1, len(regexp_split_to_array(trim(text), '\s+')) + 1),
-       |      j -> CAST(j - 1 AS BIGINT))) AS pos
-       |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-       |kept AS (SELECT t.doc_id, t.pos, t.tok FROM tk2 t
-       |  WHERE NOT EXISTS (SELECT 1 FROM sp s
-       |    WHERE s.doc_id = t.doc_id AND t.pos >= s.s AND t.pos < s.en)),
-       |ct AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS clean
-       |  FROM kept GROUP BY doc_id),
-       |agg AS (SELECT doc_id, CAST(sum(en - s) AS BIGINT) AS dup
-       |  FROM sp GROUP BY doc_id)
-       |SELECT d.doc_id,
-       |  CASE WHEN d.text IS NULL THEN NULL
-       |       ELSE COALESCE(ct.clean, '') END AS clean_text,
-       |  t.n AS n_tokens,
-       |  COALESCE(a.dup, 0) AS dup_tokens
-       |FROM documents d JOIN tok t ON t.doc_id = d.doc_id
-       |LEFT JOIN ct ON ct.doc_id = d.doc_id
-       |LEFT JOIN agg a ON a.doc_id = d.doc_id""".stripMargin
-
-  /** q157 oracle: the Gopher rule set with division-free integer
-    * comparisons, mirroring `Curation.gopherQualityFlags` term-for-term.
-    */
-  /** The six Gopher rule conditions over the m2/top CTE columns — shared
-    * by the q157 oracle and the q162 data-card keep recomputation.
-    */
-  private def gopherRuleConds(minWords: Long,
-      minStops: Long): Seq[String] = Seq(
-    s"n_words BETWEEN $minWords AND 100000",
-    "n_words > 0 AND sum_wlen >= 3 * n_words AND sum_wlen <= 10 * n_words",
-    "10 * n_sym <= n_words",
-    "5 * n_alpha >= 4 * n_words",
-    s"n_stop >= $minStops",
-    "top.top2_cnt IS NULL OR 5 * top.top2_cnt * top.top2_len <= n_chars")
-
-  private def gopherKeepSum(minWords: Long, minStops: Long): String =
-    gopherRuleConds(minWords, minStops)
-      .map(c => s"(CASE WHEN $c THEN 1 ELSE 0 END)").mkString("\n    + ")
-
-  private def gopherOracleSql(minWords: Long, minStops: Long): String = {
-    def r(name: String, cond: String) =
-      s"CAST(CASE WHEN $cond THEN 1 ELSE 0 END AS BIGINT) AS $name"
-    val conds = gopherRuleConds(minWords, minStops)
-    val names = Seq("r_words", "r_wlen", "r_sym", "r_alpha", "r_stop",
-      "r_rep")
-    val flags = names.zip(conds)
-      .map { case (n, c) => "  " + r(n, c) }.mkString(",\n")
-    val keepSum = gopherKeepSum(minWords, minStops)
-    raw"""WITH $gopherBaseCtes
-       |SELECT m2.doc_id, n_words,
-       |$flags,
-       |  CAST(CASE WHEN $keepSum = 6 THEN 1 ELSE 0 END AS BIGINT) AS keep
-       |FROM m2 LEFT JOIN top ON top.doc_id = m2.doc_id""".stripMargin
-  }
-
-  /** The Gopher rule-stat CTEs (base → m2 + top-bigram argmax), shared by
-    * q157 and q162.
-    */
-  private def gopherBaseCtes: String = {
-    val nstop = graft.operators.Curation.GopherStops.map(s =>
-      s"(CASE WHEN list_contains(w, '$s') THEN 1 ELSE 0 END)")
-      .mkString(" + ")
-    raw"""base AS (SELECT doc_id, text,
-       |    CASE WHEN trim(lower(text)) = '' THEN CAST([] AS VARCHAR[])
-       |         ELSE regexp_split_to_array(trim(lower(text)), '\s+')
-       |    END AS w
-       |  FROM documents WHERE text IS NOT NULL),
-       |m AS (SELECT doc_id, text, w,
-       |  CAST(len(w) AS BIGINT) AS n_words,
-       |  CAST(coalesce(list_sum(list_transform(w, x -> length(x))), 0)
-       |    AS BIGINT) AS sum_wlen,
-       |  CAST(length(text) - length(replace(text, '#', ''))
-       |    + (length(text) - length(replace(text, '...', ''))) / 3
-       |    AS BIGINT) AS n_sym,
-       |  CAST(len(list_filter(w, x -> regexp_matches(x, '[a-z]')))
-       |    AS BIGINT) AS n_alpha,
-       |  CAST($nstop AS BIGINT) AS n_stop
-       |  FROM base),
-       |m2 AS (SELECT *, CASE WHEN n_words > 0 THEN sum_wlen + n_words - 1
-       |    ELSE 0 END AS n_chars FROM m),
-       |bg AS (SELECT doc_id,
-       |    unnest(list_transform(range(1, len(w)),
-       |      p -> w[p] || ' ' || w[p + 1])) AS g
-       |  FROM base WHERE len(w) >= 2),
-       |bgc AS (SELECT doc_id, g, CAST(count(*) AS BIGINT) AS c FROM bg
-       |  GROUP BY 1, 2),
-       |top AS (SELECT doc_id, c AS top2_cnt,
-       |    CAST(length(g) AS BIGINT) AS top2_len FROM bgc
-       |  QUALIFY row_number() OVER (PARTITION BY doc_id
-       |    ORDER BY c DESC, g ASC) = 1)""".stripMargin
-  }
-
-  /** Shared CTE chain for q155/q156: positioned tokens with truncated
-    * context for both relations, the three LM count tables from the
-    * doc_id % 3 <> 0 split, the five-way backoff join, and per-doc
-    * `stats` — `NgramLm.backoffDocStats` replayed, all integer (DuckDB
-    * sum() is HUGEINT, hence the casts).
-    */
-  private def backoffLmCtes: String =
-    raw"""lmbase AS (SELECT doc_id,
-       |    regexp_split_to_array(trim(lower(text)), '\s+') AS w
-       |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''
-       |    AND doc_id % 3 <> 0),
-       |abase AS (SELECT doc_id,
-       |    regexp_split_to_array(trim(lower(text)), '\s+') AS w
-       |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-       |lmp AS (SELECT doc_id,
-       |    unnest(list_transform(range(1, len(w) + 1), i -> i - 1)) AS pos,
-       |    unnest(w) AS w0,
-       |    unnest(list_transform(range(1, len(w) + 1),
-       |      i -> CASE WHEN i >= 2 THEN w[i - 1] END)) AS w1,
-       |    unnest(list_transform(range(1, len(w) + 1),
-       |      i -> CASE WHEN i >= 3 THEN w[i - 2] END)) AS w2
-       |  FROM lmbase),
-       |p AS (SELECT doc_id,
-       |    unnest(list_transform(range(1, len(w) + 1), i -> i - 1)) AS pos,
-       |    unnest(w) AS w0,
-       |    unnest(list_transform(range(1, len(w) + 1),
-       |      i -> CASE WHEN i >= 2 THEN w[i - 1] END)) AS w1,
-       |    unnest(list_transform(range(1, len(w) + 1),
-       |      i -> CASE WHEN i >= 3 THEN w[i - 2] END)) AS w2
-       |  FROM abase),
-       |tri AS (SELECT w2, w1, w0, CAST(count(*) AS BIGINT) AS c3 FROM lmp
-       |  WHERE w2 IS NOT NULL GROUP BY 1, 2, 3),
-       |bi AS (SELECT w1, w0, CAST(count(*) AS BIGINT) AS c2 FROM lmp
-       |  WHERE w1 IS NOT NULL GROUP BY 1, 2),
-       |uni AS (SELECT w0, CAST(count(*) AS BIGINT) AS c1 FROM lmp
-       |  GROUP BY 1),
-       |tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM lmp),
-       |j AS (SELECT p.doc_id, p.pos,
-       |    CASE WHEN p.pos >= 2 AND t.c3 IS NOT NULL THEN 3
-       |         WHEN p.pos >= 1 AND b.c2 IS NOT NULL THEN 2
-       |         ELSE 1 END AS ord,
-       |    CASE WHEN p.pos >= 2 AND t.c3 IS NOT NULL THEN t.c3
-       |         WHEN p.pos >= 1 AND b.c2 IS NOT NULL THEN b.c2
-       |         ELSE coalesce(u.c1, 0) END AS num,
-       |    CASE WHEN p.pos >= 2 AND t.c3 IS NOT NULL THEN bc.c2
-       |         WHEN p.pos >= 1 AND b.c2 IS NOT NULL THEN uc.c1
-       |         ELSE tot.n END AS den
-       |  FROM p
-       |  LEFT JOIN tri t ON t.w2 = p.w2 AND t.w1 = p.w1 AND t.w0 = p.w0
-       |  LEFT JOIN bi b ON b.w1 = p.w1 AND b.w0 = p.w0
-       |  LEFT JOIN uni u ON u.w0 = p.w0
-       |  LEFT JOIN bi bc ON bc.w1 = p.w2 AND bc.w0 = p.w1
-       |  LEFT JOIN uni uc ON uc.w0 = p.w1
-       |  CROSS JOIN tot),
-       |stats AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pos,
-       |  CAST(sum(CASE WHEN ord = 3 THEN 1 ELSE 0 END) AS BIGINT)
-       |    AS n_tri,
-       |  CAST(sum(CASE WHEN ord = 2 THEN 1 ELSE 0 END) AS BIGINT)
-       |    AS n_bi,
-       |  CAST(sum(CASE WHEN ord = 1 THEN 1 ELSE 0 END) AS BIGINT)
-       |    AS n_uni,
-       |  CAST(sum(num) AS BIGINT) AS sum_num,
-       |  CAST(sum(den) AS BIGINT) AS sum_den
-       |FROM j GROUP BY doc_id)""".stripMargin
-
-  /** Unrolled batch-perceptron oracle for q152: the feature CTE mirrors
-    * `QualityModel.docFeatures` count-for-count; each epoch CTE recomputes
-    * the exact integer update w ← w + Σ_{y(w·x)≤0} y·x.
-    */
-  private def perceptronOracleSql(epochs: Int,
-      averaged: Boolean = false): String = {
-    val d = 5
-    val js = 0 until d
-    def dotW(alias: String) =
-      js.map(j => s"$alias.w$j * x$j").mkString(" + ")
-    val feats =
-      raw"""f AS (SELECT doc_id,
-         |  CAST(CASE WHEN lang = 'en' THEN 1 ELSE -1 END AS BIGINT) AS y,
-         |  CAST(1 AS BIGINT) AS x0,
-         |  CAST(CASE WHEN trim(text) = '' THEN 0
-         |    ELSE len(regexp_split_to_array(trim(text), '\s+')) END
-         |    AS BIGINT) AS x1,
-         |  CAST(length(regexp_replace(text, '[^[:punct:]]', '', 'g'))
-         |    AS BIGINT) AS x2,
-         |  CAST(length(regexp_replace(text, '[^0-9]', '', 'g'))
-         |    AS BIGINT) AS x3,
-         |  CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-         |    t -> lower(t) IN ('the','a','an','and','or','of','to','in',
-         |      'is','it','for','on','with','as','at','by','this','that')))
-         |    AS BIGINT) AS x4
-         |  FROM documents WHERE text IS NOT NULL)""".stripMargin
-    val w0 = "w0 AS (SELECT " +
-      js.map(j => s"CAST(0 AS BIGINT) AS w$j").mkString(", ") + ")"
-    val steps = (1 to epochs).map { e =>
-      val g = s"g$e AS (SELECT\n" + js.map(j =>
-        s"  CAST(coalesce(sum(CASE WHEN y * (${dotW("w")}) <= 0" +
-        s" THEN y * x$j ELSE 0 END), 0) AS BIGINT) AS d$j")
-        .mkString(",\n") + s"\n  FROM f CROSS JOIN w${e - 1} w)"
-      val w = s"w$e AS (SELECT " +
-        js.map(j => s"w.w$j + g.d$j AS w$j").mkString(", ") +
-        s" FROM w${e - 1} w CROSS JOIN g$e g)"
-      g + ",\n" + w
-    }.mkString(",\n")
-    val wRows = js.map { j =>
-      if (j == 0)
-        s"SELECT 'w' AS kind, CAST(0 AS BIGINT) AS k, w0 AS v FROM w$epochs"
-      else s"UNION ALL SELECT 'w', $j, w$j FROM w$epochs"
-    }.mkString("\n")
-    if (!averaged)
-      raw"""WITH $feats,
-         |$w0,
-         |$steps,
-         |pred AS (SELECT doc_id,
-         |  CAST(CASE WHEN (${dotW("w")}) > 0 THEN 1 ELSE -1 END AS BIGINT)
-         |    AS v
-         |  FROM f CROSS JOIN w$epochs w)
-         |$wRows
-         |UNION ALL SELECT 'pred', doc_id, v FROM pred""".stripMargin
-    else {
-      // Σ_e w_e per feature (qualified references — every w_e CTE carries
-      // the same column names); sign(Σw·x) ≡ sign(avg(w)·x), no division
-      val wsJoin = (1 to epochs).map(e => s"w$e").mkString(" CROSS JOIN ")
-      val ws = "ws AS (SELECT " + js.map(j =>
-        (1 to epochs).map(e => s"w$e.w$j").mkString(" + ") + s" AS w$j")
-        .mkString(", ") + s" FROM $wsJoin)"
-      val wsumRows = js.map(j =>
-        s"UNION ALL SELECT 'wsum', $j, w$j FROM ws").mkString("\n")
-      raw"""WITH $feats,
-         |$w0,
-         |$steps,
-         |$ws,
-         |pred AS (SELECT doc_id,
-         |  CAST(CASE WHEN (${dotW("w")}) > 0 THEN 1 ELSE -1 END AS BIGINT)
-         |    AS v
-         |  FROM f CROSS JOIN ws w)
-         |$wRows
-         |$wsumRows
-         |UNION ALL SELECT 'pred', doc_id, v FROM pred""".stripMargin
-    }
-  }
-
-  /** q164 oracle: the integer PageRank recurrence unrolled to `iters`
-    * CTE levels (DuckDB's recursive CTEs disallow aggregates in the
-    * recursive member, so a fixed iteration count unrolls instead).
-    * `//` is DuckDB integer floor division — same lattice as the
-    * engine's `div`.
-    */
-  /** Shared CTE chain for q191/q196: the hashed char-n-gram LID
-    * scorer — token wrap, bigram/trigram bucket hashes as nested
-    * ord(substr()) arithmetic, the dense closed-form weight lattice,
-    * per-(doc, class) sums, margins `mg` and argmax `pr`.
-    */
-  private def ngramLidCtes: String =
-    raw"""cls(lang, p, bias) AS (VALUES
-         |  ('en', 5, -1), ('de', 11, 0), ('fr', 17, 1)),
-         |wt AS (SELECT r.range AS bucket, c.lang,
-         |    (r.range * c.p) % 7 - 3 AS weight
-         |  FROM range(0, 1000) r CROSS JOIN cls c),
-         |tok AS (SELECT doc_id,
-         |    '<' || unnest(regexp_split_to_array(trim(lower(text)), '\s+'))
-         |      || '>' AS wd
-         |  FROM documents WHERE coalesce(trim(text), '') <> ''),
-         |g2 AS (SELECT doc_id, unnest(list_transform(range(1, len(wd)),
-         |    i -> (ord(substr(wd, i, 1)) * 31
-         |        + ord(substr(wd, i + 1, 1))) % 1000)) AS b
-         |  FROM tok),
-         |g3 AS (SELECT doc_id, unnest(list_transform(range(1, len(wd) - 1),
-         |    i -> ((ord(substr(wd, i, 1)) * 31
-         |         + ord(substr(wd, i + 1, 1))) * 31
-         |         + ord(substr(wd, i + 2, 1))) % 1000)) AS b
-         |  FROM tok WHERE len(wd) >= 3),
-         |feats AS (SELECT doc_id, b FROM g2
-         |  UNION ALL SELECT doc_id, b FROM g3),
-         |sc AS (SELECT f.doc_id, w.lang, CAST(sum(w.weight) AS BIGINT) AS s
-         |  FROM feats f JOIN wt w ON w.bucket = f.b GROUP BY 1, 2),
-         |mg AS (SELECT d.doc_id, c.lang,
-         |    CAST(c.bias + COALESCE(sc.s, 0) AS BIGINT) AS margin
-         |  FROM documents d CROSS JOIN cls c
-         |  LEFT JOIN sc ON sc.doc_id = d.doc_id AND sc.lang = c.lang),
-         |pr AS (SELECT doc_id, lang AS pl FROM mg
-         |  QUALIFY row_number() OVER (PARTITION BY doc_id
-         |    ORDER BY margin DESC, lang) = 1)""".stripMargin
-
-  /** The q186 URL chain (u0 → nf → sa → lo → p1 → qp → pl → tr →
-    * canon → hosts → sfxr → rules → hm → rm → best → reg) — shared by
-    * the q186 canonicalization oracle and the q189 domain-rank oracle.
-    * Replays `TextFns.urlCanonicalize` (userinfo-tolerant port strip,
-    * query-anchored tracking removal, parameter sort via
-    * `list_filter`/`list_sort`) and the PSL-rule `registeredDomains`
-    * (plain/wildcard/exception forms, exception > most-labels
-    * precedence) pattern-for-pattern under RE2/DuckDB.
-    */
-  private def urlChainCtes: String =
-    raw"""u0 AS (SELECT doc_id,
-         |    (CASE WHEN doc_id % 2 = 0 THEN 'HTTP://' ELSE 'https://' END) ||
-         |    (CASE WHEN doc_id % 11 = 5 THEN 'User:Pw@' ELSE '' END) ||
-         |    (CASE WHEN doc_id % 10 = 3
-         |          THEN 'x' || (doc_id % 20) || '.Blog.CK'
-         |          WHEN doc_id % 10 = 7
-         |          THEN (CASE WHEN doc_id % 20 = 7 THEN 'WWW.CK'
-         |                ELSE 'Sub.WWW.CK' END)
-         |          WHEN doc_id % 5 = 0
-         |          THEN 'Sub.site' || (doc_id % 20) || '.CO.UK'
-         |          ELSE 'WWW.Site' || (doc_id % 20) || '.Com' END) ||
-         |    (CASE WHEN doc_id % 4 = 0 THEN ':80'
-         |          WHEN doc_id % 4 = 1 THEN ':443' ELSE '' END) ||
-         |    (CASE WHEN doc_id % 7 = 0 THEN ''
-         |          ELSE '/Path/' || (doc_id % 7) END) ||
-         |    (CASE WHEN doc_id % 3 = 0
-         |          THEN '?utm_source=x&id=' || (doc_id % 30)
-         |          WHEN doc_id % 3 = 1 AND (doc_id // 420) % 2 = 0
-         |          THEN '?id=' || (doc_id % 30) || '&utm_campaign=Y&b=2'
-         |          WHEN doc_id % 3 = 1
-         |          THEN '?b=2&id=' || (doc_id % 30) || '&utm_campaign=Y'
-         |          ELSE '' END) ||
-         |    (CASE WHEN doc_id % 2 = 0 THEN '#Frag' ELSE '' END) AS url
-         |  FROM documents),
-         |nf AS (SELECT doc_id, url,
-         |    regexp_replace(url, '#.*$$', '') AS s1 FROM u0),
-         |sa AS (SELECT *, regexp_extract(s1,
-         |    '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)', 1) AS auth FROM nf),
-         |lo AS (SELECT doc_id, url,
-         |    CASE WHEN auth = '' THEN s1
-         |         ELSE lower(auth) || substr(s1, len(auth) + 1) END AS s2
-         |  FROM sa),
-         |p1 AS (SELECT doc_id, url, regexp_replace(regexp_replace(s2,
-         |    '^(http://(?:[^/?#@]*@)?[^/?#:]*):80([/?#].*)?$$', '\1\2'),
-         |    '^(https://(?:[^/?#@]*@)?[^/?#:]*):443([/?#].*)?$$', '\1\2')
-         |    AS s3 FROM lo),
-         |qp AS (SELECT doc_id, url,
-         |    regexp_extract(s3, '^([^?]*)', 1) AS pre,
-         |    regexp_extract(s3, '^[^?]*\?(.*)$$', 1) AS qs FROM p1),
-         |pl AS (SELECT doc_id, url, pre,
-         |    list_sort(list_filter(str_split(qs, '&'), p ->
-         |      p <> '' AND NOT regexp_matches(p,
-         |        '^(utm_[^&=]*|fbclid)='))) AS plist FROM qp),
-         |tr AS (SELECT doc_id, url,
-         |    CASE WHEN len(plist) = 0 THEN pre
-         |         ELSE pre || '?' || array_to_string(plist, '&') END AS s7
-         |  FROM pl),
-         |canon AS (SELECT doc_id, url, regexp_replace(s7,
-         |    '^([a-z][a-z0-9+.-]*://[^/?#]+)$$', '\1/') AS canonical
-         |  FROM tr),
-         |hosts AS (SELECT doc_id, url, canonical,
-         |    CASE WHEN regexp_extract(url,
-         |        '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)', 1) = '' THEN NULL
-         |      ELSE lower(regexp_replace(regexp_replace(
-         |        regexp_extract(url,
-         |          '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)', 1),
-         |        '^[^@]*@', ''), ':[0-9]*$$', '')) END AS host
-         |  FROM canon),
-         |sfxr(sraw) AS (VALUES ('com'), ('org'), ('co.uk'), ('*.ck'),
-         |  ('!www.ck'), ('// comment lines and blanks are ignored'),
-         |  ('')),
-         |rules AS (SELECT DISTINCT
-         |    CASE WHEN r LIKE '!%' THEN 2
-         |         WHEN r LIKE '*.%' THEN 1 ELSE 0 END AS kind,
-         |    CASE WHEN r LIKE '!%' THEN substr(r, 2)
-         |         WHEN r LIKE '*.%' THEN substr(r, 3) ELSE r END AS base
-         |  FROM (SELECT lower(trim(sraw)) AS r FROM sfxr)
-         |  WHERE r <> '' AND r NOT LIKE '//%'),
-         |hm AS (SELECT DISTINCT host FROM hosts WHERE host IS NOT NULL),
-         |rm AS (SELECT h.host, r.kind,
-         |    CASE WHEN r.kind = 1 THEN regexp_extract(
-         |        substr(h.host, 1, len(h.host) - len(r.base) - 1),
-         |        '([^.]+)$$', 1) || '.' || r.base
-         |      ELSE r.base END AS sfs
-         |  FROM hm h JOIN rules r ON
-         |    CASE WHEN r.kind = 1 THEN h.host LIKE '%.' || r.base
-         |         ELSE h.host = r.base OR h.host LIKE '%.' || r.base END),
-         |best AS (SELECT host, kind, sfs FROM rm
-         |  QUALIFY row_number() OVER (PARTITION BY host
-         |    ORDER BY (kind = 2) DESC, len(str_split(sfs, '.')) DESC,
-         |      len(sfs) DESC, sfs DESC) = 1),
-         |reg AS (SELECT host,
-         |    CASE WHEN kind = 2 THEN sfs
-         |         WHEN host = sfs THEN NULL
-         |         ELSE regexp_extract(
-         |             substr(host, 1, len(host) - len(sfs) - 1),
-         |             '([^.]+)$$', 1) || '.' || sfs END AS registered_domain
-         |  FROM best)""".stripMargin
-
-  /** q189 oracle: the URL chain (shared CTEs), domain projection
-    * (node = min doc_id per registered domain), the deterministic link
-    * graph, and the q164 PageRank recurrence unrolled over it — the
-    * whole composed pipeline under one hash.
-    */
-  private def domainRankOracleSql(iters: Int, scale: Long = 1000000L,
-      dampNum: Long = 17L, dampDen: Long = 20L): String = {
-    val base = ((dampDen - dampNum) * scale) / dampDen
-    val head =
-      raw"""WITH ${urlChainCtes},
-         |dom AS (SELECT h.doc_id, r.registered_domain AS rd
-         |  FROM hosts h JOIN reg r ON r.host = h.host
-         |  WHERE r.registered_domain IS NOT NULL),
-         |ids AS (SELECT rd, CAST(min(doc_id) AS BIGINT) AS node
-         |  FROM dom GROUP BY rd),
-         |d2n AS (SELECT d0.doc_id, i.node FROM dom d0
-         |  JOIN ids i ON i.rd = d0.rd),
-         |lk AS (SELECT doc_id, (doc_id * 17 + 3) % 500 AS target
-         |  FROM documents),
-         |e AS (SELECT DISTINCT a.node AS src, b.node AS dst
-         |  FROM lk JOIN d2n a ON a.doc_id = lk.doc_id
-         |  JOIN d2n b ON b.doc_id = lk.target
-         |  WHERE a.node <> b.node),
-         |n AS (SELECT DISTINCT node FROM (SELECT src AS node FROM e
-         |  UNION ALL SELECT dst FROM e)),
-         |d AS (SELECT src, CAST(count(*) AS BIGINT) AS outdeg FROM e
-         |  GROUP BY src),
-         |r0 AS (SELECT node, CAST($scale AS BIGINT) AS rank FROM n)"""
-        .stripMargin
-    val steps = (1 to iters).map { i =>
-      val p = i - 1
-      raw""",
-         |s$i AS (SELECT e.dst AS node, sum(r$p.rank // d.outdeg) AS insum
-         |  FROM e JOIN r$p ON r$p.node = e.src JOIN d ON d.src = e.src
-         |  GROUP BY e.dst),
-         |r$i AS (SELECT n.node, CAST($base +
-         |    ($dampNum * COALESCE(s$i.insum, 0)) // $dampDen AS BIGINT)
-         |    AS rank
-         |  FROM n LEFT JOIN s$i ON s$i.node = n.node)""".stripMargin
-    }.mkString
-    head + steps +
-      s"\nSELECT i.rd AS registered_domain, r$iters.rank " +
-      s"FROM r$iters JOIN ids i ON i.node = r$iters.node"
-  }
-
-  private def pageRankOracleSql(iters: Int, scale: Long = 1000000L,
-      dampNum: Long = 17L, dampDen: Long = 20L): String = {
-    val base = ((dampDen - dampNum) * scale) / dampDen
-    val head =
-      raw"""WITH f AS (SELECT DISTINCT o_custkey AS src,
-         |    1000000 + l_suppkey AS dst
-         |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-         |e AS (SELECT src, dst FROM f UNION ALL SELECT dst, src FROM f),
-         |n AS (SELECT DISTINCT src AS node FROM e),
-         |d AS (SELECT src, CAST(count(*) AS BIGINT) AS outdeg FROM e
-         |  GROUP BY src),
-         |r0 AS (SELECT node, CAST($scale AS BIGINT) AS rank FROM n)"""
-        .stripMargin
-    val steps = (1 to iters).map { i =>
-      val p = i - 1
-      raw""",
-         |s$i AS (SELECT e.dst AS node, sum(r$p.rank // d.outdeg) AS insum
-         |  FROM e JOIN r$p ON r$p.node = e.src JOIN d ON d.src = e.src
-         |  GROUP BY e.dst),
-         |r$i AS (SELECT n.node, CAST($base +
-         |    ($dampNum * COALESCE(s$i.insum, 0)) // $dampDen AS BIGINT)
-         |    AS rank
-         |  FROM n LEFT JOIN s$i ON s$i.node = n.node)""".stripMargin
-    }.mkString
-    head + steps + s"\nSELECT node, rank FROM r$iters"
-  }
-
-  /** q174 oracle: the TrustRank recurrence unrolled like q164's, with
-    * initial mass and the base term gated on seed membership.
-    */
-  private def trustRankOracleSql(iters: Int, scale: Long = 1000000L,
-      dampNum: Long = 17L, dampDen: Long = 20L): String = {
-    val base = ((dampDen - dampNum) * scale) / dampDen
-    val head =
-      raw"""WITH f AS (SELECT DISTINCT o_custkey AS src,
-         |    1000000 + l_suppkey AS dst
-         |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-         |e AS (SELECT src, dst FROM f UNION ALL SELECT dst, src FROM f),
-         |sd AS (SELECT DISTINCT c_custkey AS node FROM customer
-         |  WHERE c_nationkey = 0),
-         |n AS (SELECT node, CAST(max(s) AS BIGINT) AS is_seed FROM (
-         |    SELECT src AS node, 0 AS s FROM e
-         |    UNION ALL SELECT dst, 0 FROM e
-         |    UNION ALL SELECT node, 1 FROM sd) GROUP BY node),
-         |d AS (SELECT src, CAST(count(*) AS BIGINT) AS outdeg FROM e
-         |  GROUP BY src),
-         |r0 AS (SELECT node, CAST(is_seed * $scale AS BIGINT) AS rank
-         |  FROM n)""".stripMargin
-    val steps = (1 to iters).map { i =>
-      val p = i - 1
-      raw""",
-         |s$i AS (SELECT e.dst AS node, sum(r$p.rank // d.outdeg) AS insum
-         |  FROM e JOIN r$p ON r$p.node = e.src JOIN d ON d.src = e.src
-         |  GROUP BY e.dst),
-         |r$i AS (SELECT n.node, CAST(n.is_seed * $base +
-         |    ($dampNum * COALESCE(s$i.insum, 0)) // $dampDen AS BIGINT)
-         |    AS rank
-         |  FROM n LEFT JOIN s$i ON s$i.node = n.node)""".stripMargin
-    }.mkString
-    head + steps + s"\nSELECT node, rank FROM r$iters"
-  }
-
-  /** Deterministic synthetic URL fixture shared by q186/q189: one URL
-    * per doc with mixed scheme/host case, `user:pass@` userinfo before
-    * default ports, co.uk hosts plus a wildcard-PSL `.ck` family (and
-    * its `!www.ck` exception), tracking params, fragments — and, for
-    * the `doc_id % 3 == 1` branch, the SAME parameter multiset in two
-    * different orders keyed on `doc_id div 420` parity, so docs 420
-    * apart carry order-permuted (distinct) URLs that must collapse to
-    * one canonical form under the parameter sort. Plus the canonical
-    * form and host from [[graft.functions.TextFns]].
-    */
-  private def urlFixture(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.TextFns
-    val id = col("doc_id")
-    val url = concat(
-      when(id % 2 === 0, lit("HTTP://")).otherwise(lit("https://")),
-      when(id % 11 === 5, lit("User:Pw@")).otherwise(lit("")),
-      when(id % 10 === 3, concat(lit("x"), id % 20, lit(".Blog.CK")))
-        .when(id % 10 === 7,
-          when(id % 20 === 7, lit("WWW.CK")).otherwise(lit("Sub.WWW.CK")))
-        .when(id % 5 === 0, concat(lit("Sub.site"), id % 20, lit(".CO.UK")))
-        .otherwise(concat(lit("WWW.Site"), id % 20, lit(".Com"))),
-      when(id % 4 === 0, lit(":80"))
-        .when(id % 4 === 1, lit(":443")).otherwise(lit("")),
-      when(id % 7 === 0, lit("")).otherwise(concat(lit("/Path/"), id % 7)),
-      when(id % 3 === 0, concat(lit("?utm_source=x&id="), id % 30))
-        .when(id % 3 === 1 && expr("doc_id div 420") % 2 === 0,
-          concat(lit("?id="), id % 30, lit("&utm_campaign=Y&b=2")))
-        .when(id % 3 === 1,
-          concat(lit("?b=2&id="), id % 30, lit("&utm_campaign=Y")))
-        .otherwise(lit("")),
-      when(id % 2 === 0, lit("#Frag")).otherwise(lit("")))
-    t(s, dir, "documents").select(id, url.as("url"))
-      .withColumn("canonical", TextFns.urlCanonicalize(col("url")))
-      .withColumn("host", TextFns.urlHost(col("url")))
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "q164_pagerank" -> pageRankOracleSql(5),
-    "q189_domain_rank" -> domainRankOracleSql(5),
-    "q174_trustrank" -> trustRankOracleSql(5),
-
-    // q163: brute-force cross-join ground truth — the engine's PassJoin
-    // signature scheme must reproduce it exactly (pigeonhole-complete
-    // candidates + exact verify; integer distances, no float anywhere).
-    "q163_edit_distance_join" ->
-      raw"""WITH k AS (SELECT doc_id, substr(lower(text), 1, 40) AS key
-         |  FROM documents WHERE text IS NOT NULL)
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  CAST(levenshtein(a.key, b.key) AS BIGINT) AS dist
-         |FROM k a JOIN k b ON a.doc_id < b.doc_id
-         |WHERE levenshtein(a.key, b.key) <= 2""".stripMargin,
-
-    // q178: the capped PassJoin replayed literally at τ=1 over length-13
-    // keys — index signatures (2 segments), probe signatures (shifted
-    // substrings at ±1, distinct per doc), the nx·np ≤ 20000 bucket cap
-    // (which DROPS the degenerate shared-prefix segment-0 bucket), and
-    // the exact Levenshtein ≤ 1 verify over surviving candidates. Probe
-    // entries for candidate lengths 12/14 are omitted: the index holds
-    // only length-13 keys, so those buckets have nx = 0 and can neither
-    // pass the inner-joined cap filter nor produce a pair.
-    "q178_edit_join_capped" ->
-      raw"""WITH k AS (SELECT doc_id,
-         |    printf('xxxxxxxx-%04d', doc_id % 100) AS key
-         |  FROM documents),
-         |idx AS (
-         |  SELECT doc_id, 0 AS i, substr(key, 1, 7) AS seg FROM k
-         |  UNION ALL SELECT doc_id, 1, substr(key, 8, 6) FROM k),
-         |prb AS (
-         |  SELECT DISTINCT doc_id, i, seg FROM (
-         |    SELECT doc_id, 0 AS i, substr(key, 1, 7) AS seg FROM k
-         |    UNION ALL SELECT doc_id, 0, substr(key, 2, 7) FROM k
-         |    UNION ALL SELECT doc_id, 1, substr(key, 7, 6) FROM k
-         |    UNION ALL SELECT doc_id, 1, substr(key, 8, 6) FROM k)),
-         |ok AS (SELECT x.i, x.seg FROM
-         |  (SELECT i, seg, count(*) AS nx FROM idx GROUP BY 1, 2) x
-         |  JOIN (SELECT i, seg, count(*) AS np FROM prb GROUP BY 1, 2) p
-         |    ON p.i = x.i AND p.seg = x.seg
-         |  WHERE x.nx * p.np <= 20000),
-         |cand AS (SELECT DISTINCT least(p.doc_id, x.doc_id) AS id_a,
-         |    greatest(p.doc_id, x.doc_id) AS id_b
-         |  FROM prb p JOIN ok o ON o.i = p.i AND o.seg = p.seg
-         |  JOIN idx x ON x.i = p.i AND x.seg = p.seg
-         |    AND x.doc_id <> p.doc_id)
-         |SELECT c.id_a, c.id_b,
-         |  CAST(levenshtein(a.key, b.key) AS BIGINT) AS dist
-         |FROM cand c JOIN k a ON a.doc_id = c.id_a
-         |JOIN k b ON b.doc_id = c.id_b
-         |WHERE levenshtein(a.key, b.key) <= 1""".stripMargin,
-
-    // q180: the planted aHash recomputed arithmetically — bright(c, id)
-    // closed form, hash = Σ 2^c over bright cells (cell 63 never bright,
-    // so no sign-bit overflow), pairs = brute-force Hamming ≤ 3 ground
-    // truth that the engine's pigeonhole join must reproduce exactly.
-    "q180_image_ahash_pairs" ->
-      raw"""WITH d AS (SELECT doc_id, doc_id % 6 AS p,
-         |    (doc_id * 7) % 63 AS f1,
-         |    CASE WHEN doc_id % 2 = 0 THEN (doc_id * 13) % 63
-         |         ELSE -1 END AS f2
-         |  FROM documents WHERE doc_id IS NOT NULL AND doc_id % 7 = 0),
-         |cells AS (SELECT d.doc_id, t.c,
-         |    CASE WHEN (t.c <= 62 AND (t.c + d.p) % 4 = 0)
-         |      OR t.c = d.f1 OR t.c = d.f2 THEN 1 ELSE 0 END AS bright
-         |  FROM d CROSS JOIN range(64) t(c)),
-         |h AS (SELECT doc_id,
-         |    CAST(sum(CASE WHEN bright = 1 THEN 1::BIGINT << c
-         |      ELSE 0 END) AS BIGINT) AS ahash
-         |  FROM cells GROUP BY 1),
-         |pairs AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
-         |    CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS hamming
-         |  FROM h a JOIN h b ON a.doc_id < b.doc_id
-         |  WHERE bit_count(xor(a.ahash, b.ahash)) <= 3)
-         |SELECT 'hash' AS kind, doc_id AS k1, CAST(0 AS BIGINT) AS k2,
-         |  ahash AS v FROM h
-         |UNION ALL SELECT 'pair', id1, id2, hamming FROM pairs""".stripMargin,
-
-    // q186: the canonicalization chain replayed pattern-for-pattern
-    // under RE2 (DuckDB) vs Java regex (engine) — two independent regex
-    // engines must agree on every canonical form, host, and registered
-    // domain (longest-suffix argmax, ties broken identically).
-    "q186_url_canonical" ->
-      raw"""WITH ${urlChainCtes}
-         |SELECT h.doc_id, h.url, h.canonical, h.host, r.registered_domain
-         |FROM hosts h LEFT JOIN reg r ON r.host = h.host""".stripMargin,
-
-    // q193: the Bloom line-dedup chain replayed -- q185's re-lining,
-    // q150's poly/perm/mix hash lattice over each distinct normalized
-    // line (reference side -> distinct register bits at m=16384, probe
-    // side -> 4 per-occurrence bits), might-contain = all 4 bits set,
-    // NOT EXISTS removal, ordered rebuild. False positives replay too.
-    "q193_bloom_line_dedup" ->
-      raw"""WITH d0 AS (SELECT doc_id,
-         |    regexp_split_to_array(trim(lower(text)), '\s+') AS w
-         |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-         |d AS (SELECT doc_id, array_to_string(list_transform(
-         |    range(0, (len(w) - 1) // 10 + 1),
-         |    i -> array_to_string(w[i * 10 + 1 : i * 10 + 10], ' ')),
-         |    chr(10)) AS text FROM d0),
-         |ln AS (SELECT doc_id,
-         |    unnest(str_split(text, chr(10))) AS line,
-         |    unnest(list_transform(
-         |      range(1, len(str_split(text, chr(10))) + 1),
-         |      j -> CAST(j - 1 AS BIGINT))) AS pos
-         |  FROM d),
-         |nm AS (SELECT doc_id, pos, line, lower(trim(line)) AS norm
-         |  FROM ln),
-         |rn AS (SELECT DISTINCT norm FROM nm
-         |  WHERE doc_id % 4 = 0 AND norm <> ''),
-         |rbase AS (SELECT list_reduce(list_prepend(0::BIGINT,
-         |    list_transform(regexp_extract_all(norm, '.'),
-         |      c -> ascii(c)::BIGINT)),
-         |    (acc, ch) -> (acc * 31 + ch) % 1000000007) AS base FROM rn),
-         |rb AS (SELECT DISTINCT (h * h % 1000000007 + h) % 1000000007
-         |    % 16384 AS bit
-         |  FROM (SELECT ((((2 * (300 + i) + 1) * 104729) % 1000000007)
-         |      * base + ((300 + i) * 12582917 + 7) % 1000000007)
-         |      % 1000000007 AS h
-         |    FROM rbase CROSS JOIN range(4) t(i))),
-         |pn AS (SELECT DISTINCT norm FROM nm WHERE norm <> ''),
-         |pbase AS (SELECT norm, list_reduce(list_prepend(0::BIGINT,
-         |    list_transform(regexp_extract_all(norm, '.'),
-         |      c -> ascii(c)::BIGINT)),
-         |    (acc, ch) -> (acc * 31 + ch) % 1000000007) AS base FROM pn),
-         |pb AS (SELECT norm, (h * h % 1000000007 + h) % 1000000007
-         |    % 16384 AS bit
-         |  FROM (SELECT norm, ((((2 * (300 + i) + 1) * 104729)
-         |      % 1000000007) * base + ((300 + i) * 12582917 + 7)
-         |      % 1000000007) % 1000000007 AS h
-         |    FROM pbase CROSS JOIN range(4) t(i))),
-         |drp AS (SELECT p.norm FROM pb p LEFT JOIN rb ON rb.bit = p.bit
-         |  GROUP BY p.norm HAVING count(rb.bit) = 4),
-         |kept AS (SELECT n.doc_id, n.pos, n.line FROM nm n
-         |  WHERE NOT EXISTS (SELECT 1 FROM drp WHERE drp.norm = n.norm)),
-         |ct AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY pos)
-         |    AS clean, CAST(count(*) AS BIGINT) AS nk
-         |  FROM kept GROUP BY doc_id),
-         |tot AS (SELECT doc_id,
-         |    CAST(len(str_split(text, chr(10))) AS BIGINT) AS n_lines
-         |  FROM d)
-         |SELECT t.doc_id, COALESCE(ct.clean, '') AS clean_text,
-         |  t.n_lines, t.n_lines - COALESCE(ct.nk, 0) AS dropped_lines
-         |FROM tot t LEFT JOIN ct ON ct.doc_id = t.doc_id""".stripMargin,
-
-    // q185: the line-dedup chain replayed — same deterministic 10-token
-    // re-lining, distinct-doc counts on normalized lines, NOT EXISTS
-    // removal, string_agg rebuild with chr(10).
-    "q185_line_dedup" ->
-      raw"""WITH d0 AS (SELECT doc_id,
-         |    regexp_split_to_array(trim(lower(text)), '\s+') AS w
-         |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-         |d AS (SELECT doc_id, array_to_string(list_transform(
-         |    range(0, (len(w) - 1) // 10 + 1),
-         |    i -> array_to_string(w[i * 10 + 1 : i * 10 + 10], ' ')),
-         |    chr(10)) AS text FROM d0),
-         |ln AS (SELECT doc_id,
-         |    unnest(str_split(text, chr(10))) AS line,
-         |    unnest(list_transform(
-         |      range(1, len(str_split(text, chr(10))) + 1),
-         |      j -> CAST(j - 1 AS BIGINT))) AS pos
-         |  FROM d),
-         |nm AS (SELECT doc_id, pos, line, lower(trim(line)) AS norm
-         |  FROM ln),
-         |sh AS (SELECT norm FROM nm WHERE norm <> '' GROUP BY norm
-         |  HAVING count(DISTINCT doc_id) >= 2),
-         |kept AS (SELECT n.doc_id, n.pos, n.line FROM nm n
-         |  WHERE NOT EXISTS (SELECT 1 FROM sh WHERE sh.norm = n.norm)),
-         |ct AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY pos)
-         |    AS clean, CAST(count(*) AS BIGINT) AS nk
-         |  FROM kept GROUP BY doc_id),
-         |tot AS (SELECT doc_id,
-         |    CAST(len(str_split(text, chr(10))) AS BIGINT) AS n_lines
-         |  FROM d)
-         |SELECT t.doc_id, COALESCE(ct.clean, '') AS clean_text,
-         |  t.n_lines, t.n_lines - COALESCE(ct.nk, 0) AS dup_lines
-         |FROM tot t LEFT JOIN ct ON ct.doc_id = t.doc_id""".stripMargin,
-
-    // q184: the per-source log-histogram replayed with source-partitioned
-    // cumulative windows — same integer lattice as q183.
-    "q184_loghist_by_source" ->
-      raw"""WITH c AS (SELECT source,
-         |    CASE WHEN n_chars IS NULL OR n_chars <= 0 THEN -1
-         |         ELSE len(bin(n_chars)) - 1 END AS b,
-         |    CASE WHEN n_chars IS NULL OR n_chars <= 0 THEN 0
-         |         WHEN len(bin(n_chars)) - 1 >= 3
-         |           THEN (n_chars >> (len(bin(n_chars)) - 4)) - 8
-         |         ELSE (n_chars << (4 - len(bin(n_chars)))) - 8 END AS sub
-         |  FROM documents),
-         |reg AS (SELECT source, CAST(b AS BIGINT) AS b,
-         |    CAST(sub AS BIGINT) AS sub, CAST(count(*) AS BIGINT) AS cnt
-         |  FROM c GROUP BY 1, 2, 3),
-         |tot AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS n FROM reg
-         |  GROUP BY 1),
-         |cum AS (SELECT source, b, sub, cnt,
-         |    sum(cnt) OVER (PARTITION BY source ORDER BY b, sub) AS cm
-         |  FROM reg),
-         |qs(q) AS (VALUES (50), (95)),
-         |pick AS (SELECT t.source, q.q,
-         |    greatest(1, (q.q * t.n + 99) // 100) AS rank, t.n
-         |  FROM tot t CROSS JOIN qs q),
-         |sel AS (SELECT p.source, p.q, p.rank, p.n,
-         |    (SELECT CASE WHEN c2.b < 0 THEN 0
-         |       WHEN c2.b >= 3 THEN (8 + c2.sub) << (c2.b - 3)
-         |       ELSE (8 + c2.sub) >> (3 - c2.b) END
-         |     FROM cum c2 WHERE c2.source = p.source AND c2.cm >= p.rank
-         |     ORDER BY c2.b, c2.sub LIMIT 1) AS lb
-         |  FROM pick p)
-         |SELECT source, CAST(q AS BIGINT) AS q_pct,
-         |  CAST(rank AS BIGINT) AS rank, n, CAST(lb AS BIGINT) AS value_lb
-         |FROM sel""".stripMargin,
-
-    // q190: brute-force R×S ground truth for the two-relation PassJoin.
-    "q190_edit_join_rs" ->
-      raw"""WITH l AS (SELECT doc_id, substr(lower(text), 1, 20) AS k
-         |  FROM documents WHERE text IS NOT NULL),
-         |r AS (SELECT doc_id + 100000 AS rid,
-         |    substr(substr(lower(text), 1, 20), 1, 6) || 'z' ||
-         |    substr(substr(lower(text), 1, 20), 8, 13) AS rk
-         |  FROM documents WHERE text IS NOT NULL)
-         |SELECT l.doc_id AS left_id, r.rid AS right_id,
-         |  CAST(levenshtein(l.k, r.rk) AS BIGINT) AS dist
-         |FROM l CROSS JOIN r
-         |WHERE levenshtein(l.k, r.rk) <= 1""".stripMargin,
-
-    // q188: candidates re-extracted under RE2, Luhn replayed as an
-    // integer list fold, replacement as a replace-all list_reduce —
-    // clean text and counts must match the engine's UDF exactly.
-    "q188_ccn_redact" ->
-      raw"""WITH pv(i, v) AS (VALUES (0, '4111111111111111'),
-         |  (1, '5500 0000 0000 0004'), (2, '4012-8888-8888-1881'),
-         |  (3, '378282246310005')),
-         |pnv(i, v) AS (VALUES (0, '4111111111111112'),
-         |  (1, '1234 5678 9012 3456'), (2, '9999999999999')),
-         |d AS (SELECT doc_id,
-         |    coalesce(text, '') || ' pay ' || v1.v || ' ref ' || v2.v
-         |      AS text
-         |  FROM documents
-         |  JOIN pv v1 ON v1.i = doc_id % 4
-         |  JOIN pnv v2 ON v2.i = doc_id % 3),
-         |cand AS (SELECT doc_id, unnest(regexp_extract_all(text,
-         |    '\b\d(?:[ -]?\d){12,18}\b')) AS c FROM d),
-         |dg AS (SELECT doc_id, c, list_reverse(regexp_extract_all(
-         |    replace(replace(c, ' ', ''), '-', ''), '.')) AS r
-         |  FROM cand),
-         |lv AS (SELECT doc_id, c,
-         |    list_sum(list_transform(range(1, len(r) + 1),
-         |      i -> CASE WHEN i % 2 = 1 THEN r[i]::INT
-         |           WHEN 2 * r[i]::INT > 9 THEN 2 * r[i]::INT - 9
-         |           ELSE 2 * r[i]::INT END)) % 10 = 0 AS ok
-         |  FROM dg),
-         |vq AS (SELECT doc_id, list(c) AS vl,
-         |    CAST(count(*) AS BIGINT) AS n
-         |  FROM lv WHERE ok GROUP BY doc_id)
-         |SELECT d.doc_id,
-         |  CASE WHEN v.vl IS NULL THEN d.text
-         |       ELSE list_reduce(list_prepend(d.text, v.vl),
-         |         (acc, x) -> replace(acc, x, '<CCN>')) END AS clean_text,
-         |  COALESCE(v.n, 0) AS n_ccn
-         |FROM d LEFT JOIN vq v ON v.doc_id = d.doc_id""".stripMargin,
-
-    // q192: the C4 battery replayed -- identical deterministic line
-    // decoration (prefix/extra/suffix on doc_id & position moduli),
-    // identical line keeps (terminal punct / >=3 words / no
-    // \bjavascript\b), badword token join after punctuation strip,
-    // page flags, sentence count on the cleaned text.
-    "q192_c4_filter" ->
-      raw"""WITH d0 AS (SELECT doc_id,
-         |    regexp_split_to_array(trim(lower(text)), '\s+') AS w
-         |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-         |ln AS (SELECT doc_id,
-         |    unnest(list_transform(range(0, (len(w) - 1) // 8 + 1), i ->
-         |      (CASE WHEN (doc_id * 7 + i) % 11 = 5 THEN 'javascript '
-         |            ELSE '' END) ||
-         |      array_to_string(w[i * 8 + 1 : i * 8 + 8], ' ') ||
-         |      (CASE WHEN i = 0 AND doc_id % 13 = 3 THEN ' lorem ipsum'
-         |            WHEN i = 0 AND doc_id % 13 = 7 THEN ' { x'
-         |            WHEN i = 0 AND doc_id % 17 = 11 THEN ' badwordx'
-         |            ELSE '' END) ||
-         |      (CASE WHEN (doc_id + i) % 3 = 0 THEN '.'
-         |            WHEN (doc_id + i) % 3 = 1 THEN '?' ELSE '' END)))
-         |      AS line,
-         |    unnest(list_transform(range(0, (len(w) - 1) // 8 + 1),
-         |      i -> CAST(i AS BIGINT))) AS pos
-         |  FROM d0),
-         |kept AS (SELECT doc_id, pos, line FROM ln
-         |  WHERE regexp_matches(trim(line), '[.!?"]$$')
-         |    AND len(regexp_split_to_array(trim(line), '\s+')) >= 3
-         |    AND NOT regexp_matches(lower(line), '\bjavascript\b')),
-         |ct AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY pos)
-         |    AS clean, CAST(count(*) AS BIGINT) AS nk
-         |  FROM kept GROUP BY doc_id),
-         |tx AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY pos)
-         |    AS text, CAST(count(*) AS BIGINT) AS n_lines
-         |  FROM ln GROUP BY doc_id),
-         |bw(wd) AS (VALUES ('badwordx'), ('badwordy')),
-         |tk AS (SELECT doc_id,
-         |    unnest(regexp_split_to_array(trim(line), '\s+')) AS t
-         |  FROM ln),
-         |bad AS (SELECT DISTINCT doc_id FROM
-         |  (SELECT doc_id, regexp_replace(lower(t),
-         |     '^[^a-z0-9]+|[^a-z0-9]+$$', '', 'g') AS b FROM tk)
-         |  JOIN bw ON b = wd),
-         |sc AS (SELECT t.doc_id, t.n_lines,
-         |    COALESCE(ct.clean, '') AS clean_text,
-         |    COALESCE(ct.nk, 0) AS kept_lines,
-         |    CAST(len(regexp_extract_all(COALESCE(ct.clean, ''),
-         |      '[.!?]')) AS BIGINT) AS n_sentences,
-         |    contains(lower(t.text), 'lorem ipsum') AS lorem,
-         |    contains(t.text, '{') AS brace
-         |  FROM tx t LEFT JOIN ct ON ct.doc_id = t.doc_id)
-         |SELECT s.doc_id, s.clean_text, s.n_lines, s.kept_lines,
-         |  s.n_sentences,
-         |  CASE WHEN b.doc_id IS NOT NULL THEN 'badword'
-         |       WHEN s.lorem THEN 'lorem_ipsum'
-         |       WHEN s.brace THEN 'brace'
-         |       WHEN s.n_sentences < 5 THEN 'few_sentences'
-         |       ELSE 'kept' END AS drop_reason
-         |FROM sc s LEFT JOIN bad b ON b.doc_id = s.doc_id""".stripMargin,
-
-    // q191: the hashed-n-gram LID chain replayed -- per-token <wrap>,
-    // bigram/trigram bucket hashes as nested ord(substr()) arithmetic
-    // (codepoint-based on both engines), the dense closed-form weight
-    // lattice, per-(doc, class) sums, argmax QUALIFY flag.
-    "q191_ngram_lid" ->
-      (s"WITH $ngramLidCtes\n" +
-        raw"""SELECT m.doc_id, m.lang, m.margin,
-           |  CAST(CASE WHEN m.lang = p.pl THEN 1 ELSE 0 END AS BIGINT)
-           |    AS is_pred
-           |FROM mg m JOIN pr p ON p.doc_id = m.doc_id""".stripMargin),
-
-    // q187: the multiclass scorer replayed — same VALUES weight/bias
-    // tables, per-(doc, class) integer sums, argmax by (margin DESC,
-    // class ASC) as a QUALIFY flag.
-    "q187_multiclass_lid" ->
-      raw"""WITH w(token, lang, weight) AS (VALUES
-         |  ('the', 'en', 3), ('a', 'en', 2), ('table', 'en', 1),
-         |  ('data', 'de', 2), ('table', 'de', 2), ('row', 'de', 1),
-         |  ('query', 'fr', 2), ('value', 'fr', 2), ('join', 'fr', 1)),
-         |b(lang, bias) AS (VALUES ('en', -1), ('de', 0), ('fr', 1)),
-         |tok AS (SELECT doc_id,
-         |    unnest(regexp_split_to_array(trim(lower(text)), '\s+'))
-         |      AS token
-         |  FROM documents WHERE coalesce(trim(text), '') <> ''),
-         |sc AS (SELECT t.doc_id, w.lang, CAST(sum(w.weight) AS BIGINT)
-         |    AS s
-         |  FROM tok t JOIN w ON w.token = t.token GROUP BY 1, 2),
-         |mg AS (SELECT d.doc_id, b.lang,
-         |    CAST(b.bias + COALESCE(sc.s, 0) AS BIGINT) AS margin
-         |  FROM documents d CROSS JOIN b
-         |  LEFT JOIN sc ON sc.doc_id = d.doc_id AND sc.lang = b.lang),
-         |pr AS (SELECT doc_id, lang AS pl FROM mg
-         |  QUALIFY row_number() OVER (PARTITION BY doc_id
-         |    ORDER BY margin DESC, lang) = 1)
-         |SELECT m.doc_id, m.lang, m.margin,
-         |  CAST(CASE WHEN m.lang = p.pl THEN 1 ELSE 0 END AS BIGINT)
-         |    AS is_pred
-         |FROM mg m JOIN pr p ON p.doc_id = m.doc_id""".stripMargin,
-
-    // q179: the external-weight linear scorer replayed — same VALUES
-    // vocabulary, whitespace tokens of lower(trim(text)), integer sum +
-    // bias, perceptron sign rule (margin 0 → -1).
-    "q179_token_linear_score" ->
-      raw"""WITH w(token, weight) AS (VALUES ('spark', 5), ('join', 3),
-         |  ('query', 2), ('slow', -4), ('the', -1)),
-         |tok AS (SELECT doc_id,
-         |    unnest(regexp_split_to_array(trim(lower(text)), '\s+'))
-         |      AS token
-         |  FROM documents WHERE coalesce(trim(text), '') <> ''),
-         |sc AS (SELECT t.doc_id, CAST(sum(w.weight) AS BIGINT) AS s
-         |  FROM tok t JOIN w ON w.token = t.token GROUP BY 1)
-         |SELECT d.doc_id,
-         |  CAST(-2 + COALESCE(sc.s, 0) AS BIGINT) AS margin,
-         |  CAST(CASE WHEN -2 + COALESCE(sc.s, 0) > 0 THEN 1 ELSE -1 END
-         |    AS BIGINT) AS pred
-         |FROM documents d LEFT JOIN sc ON sc.doc_id = d.doc_id""".stripMargin,
-
-    "q151_bpe_train" -> bpeOracleSql(4),
-    "q152_perceptron_quality" -> perceptronOracleSql(3),
-    "q161_perceptron_averaged" -> perceptronOracleSql(3, averaged = true),
-    "q153_cdc_chunks" -> cdcOracleSql(3, 32),
-    "q154_winnow_fingerprints" -> winnowOracleSql(5, 8),
-    "q165_winnow_cross_doc" -> winnowCoverageOracleSql(5, 8, 2, 1L, 5L),
-    "q181_winnow_remove" -> winnowRemoveOracleSql(5, 8, 2),
-
-    // q183: the integer log-histogram replayed — binary-length octave,
-    // shift-derived subcell, cell-wise counts, integer-ceil ranks over
-    // the cumulative (b, sub) order, cell lower bounds by shifts.
-    "q183_loghist_quantiles" ->
-      raw"""WITH vv AS (SELECT CAST(floor(l_extendedprice) AS BIGINT) AS v
-         |  FROM lineitem),
-         |c AS (SELECT
-         |    CASE WHEN v IS NULL OR v <= 0 THEN -1
-         |         ELSE len(bin(v)) - 1 END AS b,
-         |    CASE WHEN v IS NULL OR v <= 0 THEN 0
-         |         WHEN len(bin(v)) - 1 >= 3
-         |           THEN (v >> (len(bin(v)) - 4)) - 8
-         |         ELSE (v << (4 - len(bin(v)))) - 8 END AS sub
-         |  FROM vv),
-         |reg AS (SELECT CAST(b AS BIGINT) AS b, CAST(sub AS BIGINT) AS sub,
-         |    CAST(count(*) AS BIGINT) AS cnt
-         |  FROM c GROUP BY 1, 2),
-         |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM reg),
-         |cum AS (SELECT b, sub, cnt,
-         |    sum(cnt) OVER (ORDER BY b, sub) AS cm FROM reg),
-         |qs(q) AS (VALUES (50), (90), (99)),
-         |pick AS (SELECT q.q, greatest(1, (q.q * tot.n + 99) // 100)
-         |    AS rank, tot.n
-         |  FROM qs q CROSS JOIN tot),
-         |sel AS (SELECT p.q, p.rank, p.n,
-         |    (SELECT CASE WHEN c2.b < 0 THEN 0
-         |       WHEN c2.b >= 3 THEN (8 + c2.sub) << (c2.b - 3)
-         |       ELSE (8 + c2.sub) >> (3 - c2.b) END
-         |     FROM cum c2 WHERE c2.cm >= p.rank
-         |     ORDER BY c2.b, c2.sub LIMIT 1) AS lb
-         |  FROM pick p)
-         |SELECT 'reg' AS kind, b AS k1, sub AS k2, cnt AS v FROM reg
-         |UNION ALL SELECT 'q', CAST(q AS BIGINT), CAST(rank AS BIGINT),
-         |  CAST(lb AS BIGINT) FROM sel""".stripMargin,
-
-    // q182: the q166 OPH pair chain + source labels + unordered-pair
-    // counting (least/greatest) — pure integer.
-    "q182_dup_source_matrix" ->
-      raw"""WITH ${ophCtes(16, 4)}
-         |SELECT least(a.source, b.source) AS src_a,
-         |  greatest(a.source, b.source) AS src_b,
-         |  CAST(count(*) AS BIGINT) AS n_pairs
-         |FROM pr p
-         |JOIN documents a ON a.doc_id = p.id1
-         |JOIN documents b ON b.doc_id = p.id2
-         |GROUP BY 1, 2""".stripMargin,
-
-    // q167: the cleaning chain replayed with DuckDB's own NFC
-    // (nfc_normalize) — independent Unicode implementations must agree
-    // on the cleaned text's poly-31 hash; counts are length diffs.
-    "q167_clean_text" -> {
-      val ctrl = "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]"
-      raw"""WITH c AS (SELECT doc_id, coalesce(text, '') AS t,
-         |  trim(regexp_replace(regexp_replace(
-         |    nfc_normalize(coalesce(text, '')), '$ctrl', '', 'g'),
-         |    '\s+', ' ', 'g')) AS clean
-         |  FROM documents)
-         |SELECT doc_id,
-         |  CAST(len(t) AS BIGINT) AS n_chars_raw,
-         |  CAST(len(t) - len(regexp_replace(t, '$ctrl', '', 'g'))
-         |    AS BIGINT) AS n_ctrl,
-         |  CAST(len(t) - len(replace(t, chr(65533), '')) AS BIGINT)
-         |    AS n_repl,
-         |  CAST(len(clean) AS BIGINT) AS n_chars_clean,
-         |  CAST(${phSql("clean")} AS BIGINT) AS clean_hash
-         |FROM c""".stripMargin
-    },
-
-    // q171: per-source vs corpus term frequencies, integer lift filter,
-    // row_number ranking on the exact (lift_ppm DESC, term) key.
-    "q171_distinct_terms" ->
-      raw"""WITH toks AS (SELECT source AS grp,
-         |    unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
-         |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-         |bg AS (SELECT grp, term, CAST(count(*) AS BIGINT) AS c_in
-         |  FROM toks GROUP BY 1, 2),
-         |gl AS (SELECT term, CAST(sum(c_in) AS BIGINT) AS c_all FROM bg
-         |  GROUP BY 1),
-         |gt AS (SELECT grp, CAST(sum(c_in) AS BIGINT) AS n_grp FROM bg
-         |  GROUP BY 1),
-         |nn AS (SELECT CAST(sum(n_grp) AS BIGINT) AS n FROM gt),
-         |sc AS (SELECT b.grp, b.term, b.c_in, g.c_all, t.n_grp,
-         |    CAST((1000000 * b.c_in * nn.n) // (g.c_all * t.n_grp)
-         |      AS BIGINT) AS lift_ppm
-         |  FROM bg b JOIN gl g USING (term) JOIN gt t USING (grp)
-         |  CROSS JOIN nn
-         |  WHERE b.c_in >= 5 AND 10 * b.c_in * nn.n >= 13 * g.c_all * t.n_grp)
-         |SELECT grp AS source, term, c_in, c_all, n_grp, lift_ppm
-         |FROM sc QUALIFY row_number() OVER (PARTITION BY grp
-         |  ORDER BY lift_ppm DESC, term) <= 5""".stripMargin,
-
-    // q173: the projection as a self-join on the hub key, with the
-    // engine's maxHubDegree guard MIRRORED (hub AS ...) so the gate
-    // stays green even on data where the cap binds.
-    "q173_copurchase_graph" ->
-      raw"""WITH e AS (SELECT DISTINCT o_custkey AS l, l_suppkey AS r
-         |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-         |  WHERE o_orderkey % 20 = 0),
-         |hub AS (SELECT r FROM e GROUP BY r
-         |  HAVING count(*) BETWEEN 2 AND 1000)
-         |SELECT a.l AS id1, b.l AS id2, CAST(count(*) AS BIGINT) AS n_shared
-         |FROM e a JOIN hub h ON h.r = a.r
-         |JOIN e b ON a.r = b.r AND a.l < b.l
-         |GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin,
-
-    // q176: the full OPH-dedup chain replayed — exact-dup keep, OPH
-    // signatures over survivors, >= 4-of-16 pairs, distinct-bigram
-    // Jaccard >= 0.6, id2 removal. Pure integer except the final ratio,
-    // which DuckDB evaluates on exact integer operands.
-    "q176_dedup_oph" ->
-      raw"""WITH keep AS (
-         |  SELECT min(doc_id) AS doc_id FROM documents WHERE text IS NOT NULL
-         |  GROUP BY md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g')))
-         |  UNION ALL SELECT doc_id FROM documents WHERE text IS NULL),
-         |surv AS (SELECT a.doc_id, a.text FROM documents a
-         |  JOIN keep kk ON kk.doc_id = a.doc_id),
-         |${ophCtes(16, 4, src = "surv")},
-         |ws AS (SELECT s.doc_id,
-         |  CASE WHEN d.text IS NULL THEN NULL ELSE list_distinct(s.sh) END
-         |    AS ws
-         |  FROM sh s JOIN surv d ON d.doc_id = s.doc_id),
-         |jc AS (SELECT p.id1, p.id2,
-         |  len(list_intersect(x.ws, y.ws)) AS i2,
-         |  len(list_distinct(list_concat(x.ws, y.ws))) AS u2
-         |  FROM pr p JOIN ws x ON x.doc_id = p.id1
-         |  JOIN ws y ON y.doc_id = p.id2),
-         |removed AS (SELECT DISTINCT id2 FROM jc WHERE i2 * 1.0 / u2 >= 0.6)
-         |SELECT s.doc_id FROM surv s
-         |WHERE NOT EXISTS (SELECT 1 FROM removed r
-         |  WHERE r.id2 = s.doc_id)""".stripMargin,
-
-    // q177: the tiered cascade replayed stage by stage — exact keep,
-    // simhash pigeonhole pairs over tier-1 survivors (simhashCtes /
-    // simhashPairCtes, src = surv1), OPH + Jaccard over tier-2
-    // survivors (ophCtes, src = surv2, CTE names prefixed 'o' to avoid
-    // colliding with the simhash chain's tk), ledger = one row per doc.
-    "q177_dedup_tiered" ->
-      raw"""WITH keep AS (
-         |  SELECT min(doc_id) AS doc_id FROM documents WHERE text IS NOT NULL
-         |  GROUP BY md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g')))
-         |  UNION ALL SELECT doc_id FROM documents WHERE text IS NULL),
-         |surv1 AS (SELECT a.doc_id, a.text FROM documents a
-         |  JOIN keep kk ON kk.doc_id = a.doc_id),
-         |${simhashCtes(src = "surv1")},
-         |${simhashPairCtes()},
-         |rm2 AS (SELECT DISTINCT id2 AS doc_id FROM prs),
-         |surv2 AS (SELECT s.doc_id, s.text FROM surv1 s
-         |  WHERE NOT EXISTS (SELECT 1 FROM rm2 r WHERE r.doc_id = s.doc_id)),
-         |${ophCtes(16, 4, src = "surv2", p = "o")},
-         |ws AS (SELECT s.doc_id,
-         |  CASE WHEN d.text IS NULL THEN NULL ELSE list_distinct(s.sh) END
-         |    AS ws
-         |  FROM osh s JOIN surv2 d ON d.doc_id = s.doc_id),
-         |jc AS (SELECT p.id1, p.id2,
-         |  len(list_intersect(x.ws, y.ws)) AS i2,
-         |  len(list_distinct(list_concat(x.ws, y.ws))) AS u2
-         |  FROM opr p JOIN ws x ON x.doc_id = p.id1
-         |  JOIN ws y ON y.doc_id = p.id2),
-         |rm3 AS (SELECT DISTINCT id2 AS doc_id FROM jc
-         |  WHERE i2 * 1.0 / u2 >= 0.6)
-         |SELECT d.doc_id, 'exact' AS tier FROM documents d
-         |WHERE NOT EXISTS (SELECT 1 FROM keep k WHERE k.doc_id = d.doc_id)
-         |UNION ALL SELECT doc_id, 'simhash' FROM rm2
-         |UNION ALL SELECT doc_id, 'oph' FROM rm3
-         |UNION ALL SELECT s.doc_id, 'kept' FROM surv2 s
-         |WHERE NOT EXISTS (SELECT 1 FROM rm3 r
-         |  WHERE r.doc_id = s.doc_id)""".stripMargin,
-
-    // q172: bag-minhash recomputed — bigram shingles with occurrence
-    // indices via row_number, element base (poly·31 + occ) mod p, k=16
-    // affine permutation minima. Pure integer arithmetic.
-    "q172_multiset_minhash" ->
-      raw"""WITH tk AS (SELECT doc_id,
-         |  CASE WHEN coalesce(trim(text), '') = '' THEN []::VARCHAR[]
-         |       ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS w
-         |  FROM documents),
-         |sh0 AS (SELECT doc_id,
-         |    unnest(list_transform(range(1, len(w)),
-         |      j -> w[j] || ' ' || w[j+1])) AS s,
-         |    unnest(list_transform(range(1, len(w)), j -> j)) AS pos
-         |  FROM tk WHERE len(w) >= 2
-         |  UNION ALL SELECT doc_id, array_to_string(w, ' ') AS s, 1 AS pos
-         |  FROM tk WHERE len(w) = 1
-         |  UNION ALL SELECT doc_id, '' AS s, 1 AS pos
-         |  FROM tk WHERE len(w) = 0),
-         |occ AS (SELECT doc_id, s,
-         |    row_number() OVER (PARTITION BY doc_id, s ORDER BY pos) AS o
-         |  FROM sh0),
-         |hb AS (SELECT doc_id, (${phSql("s")} * 31 + o) % 1000000007 AS h0
-         |  FROM occ)
-         |SELECT doc_id, t.i AS hash_idx,
-         |  min((((2 * t.i + 1) * 104729) % 1000000007 * h0
-         |    + (t.i * 12582917 + 7)) % 1000000007) AS hash_val
-         |FROM hb CROSS JOIN range(16) t(i) GROUP BY 1, 2""".stripMargin,
-
-    // q169: unigram/bigram counts recomputed, lift compared by integer
-    // cross-multiplication, lift_ppm an exact integer floor division.
-    "q169_collocations" ->
-      raw"""WITH base AS (SELECT doc_id,
-         |    regexp_split_to_array(trim(lower(text)), '\s+') AS w
-         |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-         |uni AS (SELECT g AS w0, CAST(count(*) AS BIGINT) AS c1
-         |  FROM (SELECT unnest(w) AS g FROM base) GROUP BY 1),
-         |nn AS (SELECT CAST(sum(c1) AS BIGINT) AS n FROM uni),
-         |bi0 AS (SELECT
-         |    unnest(list_transform(range(1, len(w)), j -> w[j])) AS w1,
-         |    unnest(list_transform(range(1, len(w)), j -> w[j+1])) AS w0
-         |  FROM base WHERE len(w) >= 2),
-         |bi AS (SELECT w1, w0, CAST(count(*) AS BIGINT) AS c2 FROM bi0
-         |  GROUP BY 1, 2)
-         |SELECT b.w1, b.w0, b.c2 AS c_pair, u1.c1 AS c_left,
-         |  u2.c1 AS c_right,
-         |  CAST((1000000 * b.c2 * nn.n) // (u1.c1 * u2.c1) AS BIGINT)
-         |    AS lift_ppm
-         |FROM bi b
-         |JOIN uni u1 ON u1.w0 = b.w1
-         |JOIN uni u2 ON u2.w0 = b.w0
-         |CROSS JOIN nn
-         |WHERE b.c2 >= 3 AND 1 * b.c2 * nn.n >= 2 * u1.c1 * u2.c1""".stripMargin,
-
-    // q166: the OPH signature recomputed in SQL — one permutation-0
-    // affine hash per bigram shingle, min per (h mod 16) bucket, empty
-    // buckets borrowing from the circular right at distance · p — then
-    // pairs agreeing on >= 4 entries. All integer arithmetic.
-    "q166_oph_signatures" ->
-      raw"""WITH ${ophCtes(16, 4)}
-         |SELECT 'sig' AS kind, doc_id AS k1, b AS k2, sig AS v FROM dens
-         |UNION ALL SELECT 'pair', id1, id2, n_match FROM pr""".stripMargin,
-
-    // q168: containment on the q166 OPH candidate pairs — distinct
-    // bigram-shingle intersection over min set size, thresholded by
-    // integer cross-multiplication. The asymmetric near-dup detector
-    // (one doc quoting/containing another that Jaccard misses when the
-    // containing doc is much larger).
-    "q168_containment" ->
-      raw"""WITH ${ophCtes(16, 4)},
-         |e AS (SELECT DISTINCT doc_id, g FROM
-         |  (SELECT doc_id, unnest(sh) AS g FROM sh)),
-         |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM e
-         |  GROUP BY doc_id),
-         |iv AS (SELECT p.id1, p.id2, CAST(count(*) AS BIGINT) AS inter
-         |  FROM pr p JOIN e a ON a.doc_id = p.id1
-         |  JOIN e b ON b.doc_id = p.id2 AND b.g = a.g
-         |  GROUP BY 1, 2)
-         |SELECT p.id1, p.id2, COALESCE(i.inter, 0) AS inter,
-         |  s1.n AS n1, s2.n AS n2,
-         |  CAST(CASE WHEN 5 * COALESCE(i.inter, 0) >= 4 * least(s1.n, s2.n)
-         |    AND least(s1.n, s2.n) > 0 THEN 1 ELSE 0 END AS BIGINT)
-         |    AS contained
-         |FROM pr p
-         |LEFT JOIN iv i ON i.id1 = p.id1 AND i.id2 = p.id2
-         |JOIN sz s1 ON s1.doc_id = p.id1
-         |JOIN sz s2 ON s2.doc_id = p.id2""".stripMargin,
-
-    // Every rule replayed with the same division-free comparisons; the
-    // top-bigram argmax is a QUALIFY row_number with the (count DESC,
-    // gram ASC) tiebreak.
-    "q157_gopher_rules" -> gopherOracleSql(minWords = 30, minStops = 1),
-    "q158_bpe_pack" -> bpePackOracleSql(4, budget = 1024),
-    "q159_cdc_bounded" -> cdcBoundedOracleSql(3, 32, 8, 64),
-
-    // Data card: per-source counts + q142's per-group HLL chain + exact
-    // dup-doc counts + the q157 keep recomputation (shared CTEs/conds).
-    "q162_corpus_report" -> {
-      def poly(s: String) =
-        s"list_reduce(list_prepend(0::BIGINT, list_transform(" +
-          s"regexp_extract_all($s, '.'), c -> ascii(c)::BIGINT)), " +
-          s"(acc, ch) -> (acc * 31 + ch) % 1000000007)"
-      raw"""WITH $gopherBaseCtes,
-         |keepd AS (SELECT m2.doc_id,
-         |    CAST(CASE WHEN ${gopherKeepSum(30, 1)} = 6 THEN 1 ELSE 0 END
-         |      AS BIGINT) AS keep
-         |  FROM m2 LEFT JOIN top ON top.doc_id = m2.doc_id),
-         |b AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(CASE WHEN text IS NOT NULL THEN
-         |    (CASE WHEN trim(text) = '' THEN 0
-         |     ELSE len(regexp_split_to_array(trim(text), '\s+')) END)
-         |    ELSE 0 END) AS BIGINT) AS n_tokens,
-         |  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
-         |  FROM documents GROUP BY source),
-         |tok AS (SELECT source, unnest(
-         |    regexp_split_to_array(trim(lower(text)), '\s+')) AS s
-         |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-         |hsh AS (SELECT source, ${poly("s")} AS base FROM tok),
-         |hh AS (SELECT source,
-         |    ((201 * 104729) % 1000000007 * base + (100 * 12582917 + 7))
-         |      % 1000000007 AS a1,
-         |    ((203 * 104729) % 1000000007 * base + (101 * 12582917 + 7))
-         |      % 1000000007 AS a2 FROM hsh),
-         |mx AS (SELECT source,
-         |    (a1 * a1 % 1000000007 + a1) % 1000000007 AS b1,
-         |    (a2 * a2 % 1000000007 + a2) % 1000000007 AS b2 FROM hh),
-         |reg AS (SELECT source, b1 % 256 AS bucket,
-         |    max(CASE WHEN b2 = 0 THEN 31 ELSE 31 - length(bin(b2)) END)
-         |      AS rho_max FROM mx GROUP BY 1, 2),
-         |ag AS (SELECT source, count(*) AS present,
-         |    sum(1.0::DOUBLE / (1::BIGINT << rho_max)) AS sm
-         |  FROM reg GROUP BY 1),
-         |raws AS (SELECT source, 256 - present AS v_zero,
-         |    (((0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE /
-         |      256.0::DOUBLE)) * 256.0::DOUBLE) * 256.0::DOUBLE)
-         |      / (sm + CAST(256 - present AS DOUBLE)) AS raw FROM ag),
-         |est AS (SELECT source,
-         |  round(CASE WHEN raw <= 640.0::DOUBLE AND v_zero > 0
-         |    THEN 256.0::DOUBLE * ln(256.0::DOUBLE / v_zero)
-         |    ELSE raw END, 6) AS distinct_terms_est FROM raws),
-         |d AS (SELECT source,
-         |    CAST(coalesce(sum(CASE WHEN c >= 2 THEN c ELSE 0 END), 0)
-         |      AS BIGINT) AS n_dup_docs
-         |  FROM (SELECT source,
-         |      md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g')))
-         |        AS dh, count(*) AS c
-         |    FROM documents WHERE text IS NOT NULL GROUP BY 1, 2)
-         |  GROUP BY source),
-         |k AS (SELECT dd.source, CAST(sum(kd.keep) AS BIGINT) AS n_keep
-         |  FROM keepd kd JOIN documents dd ON dd.doc_id = kd.doc_id
-         |  GROUP BY dd.source)
-         |SELECT b.source, b.n_docs, b.n_tokens, b.n_langs,
-         |  est.distinct_terms_est,
-         |  coalesce(d.n_dup_docs, CAST(0 AS BIGINT)) AS n_dup_docs,
-         |  coalesce(k.n_keep, CAST(0 AS BIGINT)) AS n_keep
-         |FROM b LEFT JOIN est ON est.source = b.source
-         |LEFT JOIN d ON d.source = b.source
-         |LEFT JOIN k ON k.source = b.source""".stripMargin
-    },
-    "q160_gopher_repetition" -> gopherRepOracleSql,
-
-    // Positioned tokens with truncated context for BOTH relations, three
-    // count tables from the % 3 <> 0 split, then the five-way left join
-    // with the backoff CASE — `NgramLm.backoffPositions` replayed, all
-    // integer (DuckDB sum() is HUGEINT, hence the casts).
-    "q155_backoff_lm" ->
-      (s"WITH $backoffLmCtes\n" +
-        "SELECT doc_id, n_pos, n_tri, n_bi, n_uni, sum_num, sum_den " +
-        "FROM stats"),
-
-    // q155's stats → integer ppm hit-rate lattice → the q147 percentile
-    // machinery with a single group: the CCNet-shaped "keep what the
-    // reference LM finds fluent" filter, exact end to end.
-    "q156_lm_fit_filter" ->
-      (s"WITH $backoffLmCtes,\n" +
-        raw"""scored AS (SELECT doc_id,
-           |  CAST(floor(CAST(n_tri AS DOUBLE) * 1000000 / n_pos)
-           |    AS BIGINT) AS lm_fit_ppm FROM stats)
-           |SELECT doc_id, lm_fit_ppm FROM scored
-           |QUALIFY percent_rank() OVER
-           |  (ORDER BY lm_fit_ppm ASC, doc_id ASC) >= 0.5""".stripMargin),
-
-    // q194: the CCNet tercile chain replayed -- the q155/q156 LM stats,
-    // the ppm lattice, then a per-source (score, id) window rank and
-    // the integer floor-division tercile cut.
-    "q194_ccnet_buckets" ->
-      (s"WITH $backoffLmCtes,\n" +
-        raw"""scored AS (SELECT doc_id,
-           |  CAST(floor(CAST(n_tri AS DOUBLE) * 1000000 / n_pos)
-           |    AS BIGINT) AS lm_fit_ppm FROM stats),
-           |src AS (SELECT s.doc_id, d.source, s.lm_fit_ppm
-           |  FROM scored s JOIN documents d ON d.doc_id = s.doc_id),
-           |rk AS (SELECT doc_id, source, lm_fit_ppm,
-           |    CAST(row_number() OVER (PARTITION BY source
-           |      ORDER BY lm_fit_ppm ASC, doc_id ASC) AS BIGINT) AS rank,
-           |    CAST(count(*) OVER (PARTITION BY source) AS BIGINT) AS n
-           |  FROM src)
-           |SELECT doc_id, source, lm_fit_ppm, rank, n,
-           |  CASE WHEN rank > (2 * n) // 3 THEN 'head'
-           |       WHEN rank > n // 3 THEN 'middle'
-           |       ELSE 'tail' END AS bucket
-           |FROM rk""".stripMargin),
-
-    // q195: the shard assignment replayed -- one window rank over
-    // (n_tokens DESC, doc_id ASC), modulo 7, plus the per-shard totals.
-    "q195_token_shards" ->
-      raw"""WITH toks AS (SELECT doc_id,
-         |    CAST(CASE WHEN trim(text) = '' THEN 0
-         |      ELSE len(regexp_split_to_array(trim(text), '\s+')) END
-         |      AS BIGINT) AS n_tokens
-         |  FROM documents WHERE text IS NOT NULL),
-         |rk AS (SELECT doc_id, n_tokens,
-         |    CAST(row_number() OVER (ORDER BY n_tokens DESC, doc_id ASC)
-         |      AS BIGINT) AS rank
-         |  FROM toks),
-         |a AS (SELECT doc_id, n_tokens, rank,
-         |    (rank - 1) % 7 AS shard FROM rk)
-         |SELECT 'doc' AS kind, doc_id AS k1, rank AS k2, shard AS v
-         |FROM a
-         |UNION ALL
-         |SELECT 'shard', shard, CAST(count(*) AS BIGINT),
-         |  CAST(sum(n_tokens) AS BIGINT)
-         |FROM a GROUP BY shard""".stripMargin,
-
-    // q196: the composed chain replayed -- the q191 LID CTEs, the
-    // predicted language joined onto filtered token counts, then the
-    // q115 temperature-mix replay (sqrt weights, source-ordered
-    // normalizer fold, Knuth-hash shard buckets, per-language prefix
-    // sum against the floored budget).
-    "q196_lid_balanced_mix" ->
-      (s"WITH $ngramLidCtes,\n" +
-        raw"""dd AS (SELECT doc_id,
-           |    CAST(len(regexp_split_to_array(trim(text), '\s+'))
-           |      AS BIGINT) AS toks,
-           |    ((((doc_id % 2147483648) + 2147483648) % 2147483648)
-           |      * 2654435761) % 2147483648 AS bkt
-           |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-           |dj AS (SELECT dd.doc_id, pr.pl AS lang, dd.toks, dd.bkt
-           |  FROM dd JOIN pr ON pr.doc_id = dd.doc_id),
-           |mm AS (SELECT lang, sqrt(sum(toks) * 1.0) AS w FROM dj
-           |  GROUP BY lang),
-           |tt AS (SELECT list_reduce(list(w ORDER BY lang),
-           |    (x, y) -> x + y) AS tot FROM mm),
-           |bb AS (SELECT lang, CAST(floor(30000.0 * w / tot) AS BIGINT)
-           |    AS budget FROM mm, tt),
-           |cc AS (SELECT dj.*, bb.budget,
-           |    sum(toks) OVER (PARTITION BY dj.lang
-           |      ORDER BY bkt, doc_id) AS cum
-           |  FROM dj JOIN bb ON bb.lang = dj.lang)
-           |SELECT doc_id, lang, toks FROM cc WHERE cum <= budget"""
-          .stripMargin),
-
-    // q197: the identity over parquet -- the engine must reproduce the
-    // exact relation AFTER its JSONL write+read round trip, proving
-    // escaping (newline/tab/quote/backslash/astral), null-field
-    // omission, and nested-struct decode are value-exact.
-    "q197_jsonl_roundtrip" ->
-      raw"""SELECT 'doc-' || doc_id AS id,
-         |  text || (chr(10) || 'line' || chr(9) || 'two "q" \ '
-         |    || chr(252) || 'n' || chr(239) || chr(128512)) AS text,
-         |  source, '2026-08-15' AS added,
-         |  CAST(n_chars AS BIGINT) AS meta_n_chars,
-         |  'en,de' AS meta_langs
-         |FROM documents""".stripMargin,
-
-    // q198: per-line LID + dominant-share replayed -- the q193
-    // re-lining, the q191 hash/lattice per line id (doc_id*1000+pos),
-    // argmax with ties to the smallest language, integer ppm share.
-    "q198_mixed_lang" ->
-      raw"""WITH d0 AS (SELECT doc_id,
-         |    regexp_split_to_array(trim(lower(text)), '\s+') AS w
-         |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-         |d AS (SELECT doc_id, array_to_string(list_transform(
-         |    range(0, (len(w) - 1) // 10 + 1),
-         |    i -> array_to_string(w[i * 10 + 1 : i * 10 + 10], ' ')),
-         |    chr(10)) AS text FROM d0),
-         |ln AS (SELECT doc_id,
-         |    unnest(str_split(text, chr(10))) AS line,
-         |    unnest(list_transform(
-         |      range(1, len(str_split(text, chr(10))) + 1),
-         |      j -> CAST(j - 1 AS BIGINT))) AS pos
-         |  FROM d),
-         |lt AS (SELECT doc_id, pos, doc_id * 1000 + pos AS lid, line
-         |  FROM ln),
-         |cls(lang, p, bias) AS (VALUES
-         |  ('en', 5, -1), ('de', 11, 0), ('fr', 17, 1)),
-         |wt AS (SELECT r.range AS bucket, c.lang,
-         |    (r.range * c.p) % 7 - 3 AS weight
-         |  FROM range(0, 1000) r CROSS JOIN cls c),
-         |wd AS (SELECT lid,
-         |    '<' || unnest(regexp_split_to_array(trim(lower(line)), '\s+'))
-         |      || '>' AS wd
-         |  FROM lt WHERE coalesce(trim(line), '') <> ''),
-         |g2 AS (SELECT lid, unnest(list_transform(range(1, len(wd)),
-         |    i -> (ord(substr(wd, i, 1)) * 31
-         |        + ord(substr(wd, i + 1, 1))) % 1000)) AS b
-         |  FROM wd),
-         |g3 AS (SELECT lid, unnest(list_transform(range(1, len(wd) - 1),
-         |    i -> ((ord(substr(wd, i, 1)) * 31
-         |         + ord(substr(wd, i + 1, 1))) * 31
-         |         + ord(substr(wd, i + 2, 1))) % 1000)) AS b
-         |  FROM wd WHERE len(wd) >= 3),
-         |feats AS (SELECT lid, b FROM g2 UNION ALL SELECT lid, b FROM g3),
-         |sc AS (SELECT f.lid, w.lang, CAST(sum(w.weight) AS BIGINT) AS s
-         |  FROM feats f JOIN wt w ON w.bucket = f.b GROUP BY 1, 2),
-         |mg AS (SELECT l.lid, c.lang,
-         |    CAST(c.bias + COALESCE(sc.s, 0) AS BIGINT) AS margin
-         |  FROM lt l CROSS JOIN cls c
-         |  LEFT JOIN sc ON sc.lid = l.lid AND sc.lang = c.lang),
-         |pr AS (SELECT lid, lang AS pl FROM mg
-         |  QUALIFY row_number() OVER (PARTITION BY lid
-         |    ORDER BY margin DESC, lang) = 1),
-         |lab AS (SELECT lt.doc_id, pr.pl AS lang FROM lt
-         |  JOIN pr ON pr.lid = lt.lid),
-         |ag AS (SELECT doc_id, lang, CAST(count(*) AS BIGINT) AS n
-         |  FROM lab GROUP BY 1, 2),
-         |dom AS (SELECT doc_id, lang AS dom_lang, n AS dom_lines FROM ag
-         |  QUALIFY row_number() OVER (PARTITION BY doc_id
-         |    ORDER BY n DESC, lang ASC) = 1),
-         |tot AS (SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_lines
-         |  FROM ag GROUP BY 1)
-         |SELECT t.doc_id, t.n_lines, dm.dom_lang, dm.dom_lines,
-         |  (dm.dom_lines * 1000000) // t.n_lines AS dom_share_ppm,
-         |  CAST(CASE WHEN (dm.dom_lines * 1000000) // t.n_lines < 600000
-         |    THEN 1 ELSE 0 END AS BIGINT) AS mixed
-         |FROM tot t JOIN dom dm ON dm.doc_id = t.doc_id""".stripMargin,
-
-    // q199: the WARC round trip -- the engine writes record-gzipped
-    // WARC shards and reads them back through Content-Length framing +
-    // HTTP parse; the oracle rebuilds every page closed-form from
-    // `documents` (same construction as [[warcPages]]), so any drift in
-    // framing, header lifting, status parse, HTML escape, or UTF-8
-    // decode breaks the hash.
-    "q199_warc_roundtrip" ->
-      raw"""SELECT 'http://' || source || '.example.com/doc/' || doc_id
-         |    AS target_uri,
-         |  CAST(CASE WHEN doc_id % 7 = 0 THEN 404 ELSE 200 END
-         |    AS INTEGER) AS http_status,
-         |  'text/html; charset=utf-8' AS http_content_type,
-         |  '<html><head><title>doc ' || doc_id ||
-         |  '</title><script>var x="<p>no</p>";</script></head><body><p>'
-         |  || replace(replace(replace(coalesce(text, ''),
-         |       '&', '&amp;'), '<', '&lt;'), '>', '&gt;') ||
-         |  '</p><a href="http://out' || (doc_id % 5) ||
-         |  '.example.org/p?b=2&a=1">next</a><!-- c --></body></html>'
-         |    AS body
-         |FROM documents""".stripMargin,
-
-    // q200: the crawl extraction chain -- the oracle DERIVES the
-    // expected title/text/links closed-form from the page construction
-    // (an independent derivation, not the Spark regex chain replayed),
-    // so an extraction bug and a construction bug cannot cancel. The
-    // only text normalization the fixture can exercise is space-run
-    // collapse + trim (the synthetic corpus is single-line); the chain
-    // steps with no closed form here (script/comment removal, entity
-    // decode, block->newline) are pinned by WarcSpec on adversarial
-    // fixtures.
-    "q200_html_extract" ->
-      raw"""SELECT doc_id, 'doc ' || doc_id AS title,
-         |  'doc ' || doc_id || chr(10) ||
-         |    trim(regexp_replace(text, '[ ' || chr(9) || ']+', ' ', 'g'))
-         |    || chr(10) || 'next' AS text,
-         |  CAST(1 AS INTEGER) AS n_links,
-         |  'http://out' || (doc_id % 5) || '.example.org/p?b=2&a=1'
-         |    AS link,
-         |  'http://out' || (doc_id % 5) || '.example.org/p?a=1&b=2'
-         |    AS link_canon,
-         |  'out' || (doc_id % 5) || '.example.org' AS link_host
-         |FROM documents WHERE doc_id % 7 <> 0""".stripMargin,
-
-    // q207: the ChatML render + offsets rebuilt closed-form -- turn
-    // strings concatenated directly, span starts as prefix-sum length
-    // arithmetic (22 = len('<|im_start|>') + len('assistant') + 1),
-    // never touching the engine's window machinery.
-    "q207_chat_template" ->
-      raw"""WITH d AS (SELECT doc_id AS conv,
-         |    str_split(trim(text), ' ') AS w FROM documents),
-         |c AS (SELECT conv, 'be helpful' AS c0,
-         |    w[1] || ' ' || w[2] || ' ' || w[3] AS c1,
-         |    w[4] || ' ' || w[5] || ' ' || w[6] AS c2,
-         |    w[7] || ' ' || w[8] AS c3,
-         |    w[9] || ' ' || w[10] AS c4 FROM d),
-         |r AS (SELECT conv, c2, c4,
-         |    '<|im_start|>system' || chr(10) || c0 || '<|im_end|>'
-         |      || chr(10) AS r0,
-         |    '<|im_start|>user' || chr(10) || c1 || '<|im_end|>'
-         |      || chr(10) AS r1,
-         |    '<|im_start|>assistant' || chr(10) || c2 || '<|im_end|>'
-         |      || chr(10) AS r2,
-         |    '<|im_start|>user' || chr(10) || c3 || '<|im_end|>'
-         |      || chr(10) AS r3,
-         |    '<|im_start|>assistant' || chr(10) || c4 || '<|im_end|>'
-         |      || chr(10) AS r4 FROM c),
-         |f AS (SELECT conv, c2, c4,
-         |    r0 || r1 || r2 || r3 || r4 AS text,
-         |    length(r0) + length(r1) AS o2,
-         |    length(r0) + length(r1) + length(r2) + length(r3) AS o4,
-         |    CAST(length(c2) + length(c4) AS INTEGER) AS n_target_chars
-         |  FROM r)
-         |SELECT conv, CAST(0 AS INTEGER) AS span_ix,
-         |  CAST(o2 + 22 AS INTEGER) AS s,
-         |  CAST(o2 + 22 + length(c2) AS INTEGER) AS e,
-         |  c2 AS span_text, text, n_target_chars FROM f
-         |UNION ALL
-         |SELECT conv, CAST(1 AS INTEGER),
-         |  CAST(o4 + 22 AS INTEGER),
-         |  CAST(o4 + 22 + length(c4) AS INTEGER),
-         |  c4, text, n_target_chars FROM f""".stripMargin,
-
-    // q208: the token ids recomputed straight from the source text --
-    // the engine's value went through uint16 bytes on disk and back,
-    // the oracle's never left SQL; equality gates the whole binary
-    // layer.
-    "q208_token_bin" ->
-      raw"""WITH w AS (SELECT doc_id AS seq_id,
-         |    str_split(trim(text), ' ') AS ws FROM documents)
-         |SELECT seq_id,
-         |  CAST(unnest(list_transform(range(1, len(ws) + 1), i -> i - 1))
-         |    AS INTEGER) AS pos,
-         |  CAST(unnest(list_transform(ws,
-         |    x -> (length(x) * 257 + ascii(x[1:1])) % 65536))
-         |    AS INTEGER) AS tok
-         |FROM w""".stripMargin,
-
-    // q209: the q207 render chain rebuilt closed-form, then tokenized
-    // on [ \n] with prefix-sum offsets and the two assistant spans
-    // tested by plain interval overlap -- the engine's HOF exists and
-    // window arithmetic against first-principles SQL.
-    "q209_token_loss_mask" ->
-      raw"""WITH d AS (SELECT doc_id AS conv,
-         |    str_split(trim(text), ' ') AS w FROM documents),
-         |c AS (SELECT conv, 'be helpful' AS c0,
-         |    w[1] || ' ' || w[2] || ' ' || w[3] AS c1,
-         |    w[4] || ' ' || w[5] || ' ' || w[6] AS c2,
-         |    w[7] || ' ' || w[8] AS c3,
-         |    w[9] || ' ' || w[10] AS c4 FROM d),
-         |r AS (SELECT conv, c2, c4,
-         |    '<|im_start|>system' || chr(10) || c0 || '<|im_end|>'
-         |      || chr(10) AS r0,
-         |    '<|im_start|>user' || chr(10) || c1 || '<|im_end|>'
-         |      || chr(10) AS r1,
-         |    '<|im_start|>assistant' || chr(10) || c2 || '<|im_end|>'
-         |      || chr(10) AS r2,
-         |    '<|im_start|>user' || chr(10) || c3 || '<|im_end|>'
-         |      || chr(10) AS r3,
-         |    '<|im_start|>assistant' || chr(10) || c4 || '<|im_end|>'
-         |      || chr(10) AS r4 FROM c),
-         |f AS (SELECT conv,
-         |    r0 || r1 || r2 || r3 || r4 AS text,
-         |    length(r0) + length(r1) + 22 AS s2,
-         |    length(r0) + length(r1) + 22 + length(c2) AS e2,
-         |    length(r0) + length(r1) + length(r2) + length(r3) + 22 AS s4,
-         |    length(r0) + length(r1) + length(r2) + length(r3) + 22
-         |      + length(c4) AS e4
-         |  FROM r),
-         |u AS (SELECT conv, s2, e2, s4, e4,
-         |    CAST(unnest(list_transform(range(1, len(ts) + 1), i -> i - 1))
-         |      AS INTEGER) AS pos,
-         |    unnest(ts) AS tok
-         |  FROM (SELECT conv, s2, e2, s4, e4,
-         |          regexp_split_to_array(text, '[ \n]') AS ts FROM f)),
-         |o AS (SELECT conv, pos, tok, s2, e2, s4, e4,
-         |    CAST(COALESCE(SUM(length(tok) + 1) OVER (PARTITION BY conv
-         |      ORDER BY pos ROWS BETWEEN UNBOUNDED PRECEDING AND
-         |      1 PRECEDING), 0) AS INTEGER) AS s
-         |  FROM u)
-         |SELECT conv, pos, tok, s,
-         |  CAST(s + length(tok) AS INTEGER) AS e,
-         |  ((s < e2 AND s + length(tok) > s2) OR
-         |   (s < e4 AND s + length(tok) > s4)) AS masked
-         |FROM o WHERE length(tok) > 0""".stripMargin,
-
-    // q210: the T5 denoising assembly as a window chain -- lag marks
-    // run starts, a running sum numbers sentinels, string_agg with an
-    // ORDER BY rebuilds inputs/targets (COALESCE '' because an
-    // unmasked doc has no target pieces).
-    "q210_span_corrupt" ->
-      raw"""WITH t AS (SELECT doc_id AS doc,
-         |    CAST(unnest(list_transform(range(1, len(ws) + 1), i -> i - 1))
-         |      AS INTEGER) AS pos,
-         |    unnest(ws) AS tok
-         |  FROM (SELECT doc_id, str_split(trim(text), ' ') AS ws
-         |        FROM documents)),
-         |m AS (SELECT doc, pos, tok,
-         |    ((doc * 31 + pos * 7) % 10 = 0) AS masked FROM t),
-         |r AS (SELECT *, masked AND NOT COALESCE(
-         |    lag(masked) OVER (PARTITION BY doc ORDER BY pos), FALSE)
-         |    AS run_start FROM m),
-         |k AS (SELECT *, CAST(SUM(CASE WHEN run_start THEN 1 ELSE 0 END)
-         |    OVER (PARTITION BY doc ORDER BY pos ROWS BETWEEN UNBOUNDED
-         |    PRECEDING AND CURRENT ROW) - 1 AS INTEGER) AS k FROM r),
-         |p AS (SELECT doc, pos, masked,
-         |    CASE WHEN NOT masked THEN tok
-         |         WHEN run_start THEN '<extra_id_' || k || '>' END
-         |      AS in_piece,
-         |    CASE WHEN masked AND run_start
-         |           THEN '<extra_id_' || k || '> ' || tok
-         |         WHEN masked THEN tok END AS tgt_piece
-         |  FROM k)
-         |SELECT doc,
-         |  COALESCE(string_agg(in_piece, ' ' ORDER BY pos), '') AS inputs,
-         |  COALESCE(string_agg(tgt_piece, ' ' ORDER BY pos), '') AS targets,
-         |  CAST(SUM(CASE WHEN masked THEN 1 ELSE 0 END) AS INTEGER)
-         |    AS n_masked
-         |FROM p GROUP BY doc""".stripMargin,
-
-    // q211: the stride windows and the double-Lehmer shard deal
-    // rebuilt arithmetically -- list slicing for the windows, the
-    // identical ((x % M) * 48271) % M lattice for the hash, and a
-    // per-shard rank (never a global order) for pos_in_shard.
-    "q211_epoch_shards" ->
-      raw"""WITH s AS (SELECT doc_id AS seq_id,
-         |    list_transform(str_split(trim(text), ' '),
-         |      x -> (length(x) * 257 + ascii(x[1:1])) % 65536) AS toks
-         |  FROM documents),
-         |w AS (SELECT seq_id, toks,
-         |    CAST(unnest(range(0, CASE WHEN len(toks) > 32
-         |      THEN (len(toks) - 32 + 23) // 24 + 1 ELSE 1 END))
-         |      AS INTEGER) AS w
-         |  FROM s),
-         |win AS (SELECT seq_id, w,
-         |    toks[w * 24 + 1 : w * 24 + 32] AS win FROM w),
-         |h AS (SELECT seq_id, w, win,
-         |    ((((((seq_id * 1048576 + w + 7) % 2147483647) * 48271)
-         |      % 2147483647) + 7) % 2147483647) * 48271 % 2147483647 AS h
-         |  FROM win)
-         |SELECT seq_id, w,
-         |  CAST(h % 8 AS INTEGER) AS shard,
-         |  CAST(row_number() OVER (PARTITION BY h % 8
-         |    ORDER BY h, seq_id, w) - 1 AS INTEGER) AS pos_in_shard,
-         |  CAST(len(win) AS INTEGER) AS n_toks,
-         |  CAST(win[1] AS INTEGER) AS first_tok,
-         |  CAST(list_aggregate(win, 'sum') AS BIGINT) AS checksum
-         |FROM h""".stripMargin,
-
-    // q212: integer buckets, the same Lehmer order, batches of 4 cut
-    // by integer division on the rank, and the padding bill per batch.
-    "q212_length_batches" ->
-      raw"""WITH s AS (SELECT doc_id AS id,
-         |    CAST(len(str_split(trim(text), ' ')) AS INTEGER) AS n_tok
-         |  FROM documents),
-         |b AS (SELECT id, n_tok,
-         |    CAST(n_tok // 8 AS INTEGER) AS bucket,
-         |    ((id + 1) % 2147483647) * 48271 % 2147483647 AS h FROM s),
-         |r AS (SELECT *, CAST((row_number() OVER (PARTITION BY bucket
-         |    ORDER BY h, id) - 1) // 4 AS INTEGER) AS batch_ix FROM b)
-         |SELECT bucket, batch_ix,
-         |  CAST(count(*) AS INTEGER) AS n_seqs,
-         |  max(n_tok) AS max_len,
-         |  CAST(sum(n_tok) AS BIGINT) AS sum_len,
-         |  CAST(count(*) * max(n_tok) - sum(n_tok) AS BIGINT) AS pad_waste
-         |FROM r GROUP BY bucket, batch_ix""".stripMargin,
-
-    // q213: shard-local prefix sums and the block-range fan-out redone
-    // arithmetically; every boundary value (greatest/least/EOS rule)
-    // must agree or the hash breaks.
-    "q213_block_pack" ->
-      raw"""WITH s AS (SELECT doc_id AS seq_id,
-         |    CAST(doc_id % 8 AS INTEGER) AS shard,
-         |    CAST(len(str_split(trim(text), ' ')) AS BIGINT) AS n
-         |  FROM documents),
-         |o AS (SELECT seq_id, shard, n,
-         |    CAST(COALESCE(SUM(n + 1) OVER (PARTITION BY shard
-         |      ORDER BY seq_id ROWS BETWEEN UNBOUNDED PRECEDING AND
-         |      1 PRECEDING), 0) AS BIGINT) AS start
-         |  FROM s WHERE n > 0),
-         |e AS (SELECT seq_id, shard, n, start,
-         |    unnest(range(start // 64, (start + n) // 64 + 1))
-         |      AS block_ix FROM o)
-         |SELECT shard, block_ix, seq_id,
-         |  CAST(greatest(start, block_ix * 64) - block_ix * 64
-         |    AS INTEGER) AS s_in_block,
-         |  CAST(least(start + n, (block_ix + 1) * 64) - block_ix * 64
-         |    AS INTEGER) AS e_in_block,
-         |  (start + n <= (block_ix + 1) * 64 - 1) AS eos_in_block
-         |FROM e""".stripMargin,
-
-    // q214: best-vs-rest via first_value over (score desc, id desc) --
-    // the same tie-break as the engine's struct max.
-    "q214_preference_pairs" ->
-      raw"""WITH c AS (SELECT doc_id // 4 AS prompt, doc_id AS cand,
-         |    CAST(len(str_split(trim(text), ' ')) AS INTEGER) AS score
-         |  FROM documents),
-         |b AS (SELECT prompt, cand, score,
-         |    first_value(cand) OVER (PARTITION BY prompt
-         |      ORDER BY score DESC, cand DESC) AS best_cand,
-         |    first_value(score) OVER (PARTITION BY prompt
-         |      ORDER BY score DESC, cand DESC) AS best_score
-         |  FROM c)
-         |SELECT prompt, best_cand AS chosen_id, cand AS rejected_id,
-         |  CAST(best_score - score AS INTEGER) AS margin
-         |FROM b WHERE cand <> best_cand""".stripMargin,
-
-    // q215: the PSM split points and slices replayed on list slicing;
-    // byte equality of text_out gates the whole transform.
-    "q215_fim_transform" ->
-      raw"""WITH s AS (SELECT doc_id AS id,
-         |    str_split(trim(text), ' ') AS ws, trim(text) AS t0,
-         |    CAST((doc_id * 7) % 4 + 3 AS INTEGER) AS i
-         |  FROM documents),
-         |j AS (SELECT id, ws, t0, i,
-         |    CAST(i + 2 + (id * 13) % 3 AS INTEGER) AS j,
-         |    (id % 2 = 0 AND len(ws) >= 10) AS is_fim FROM s)
-         |SELECT id, is_fim,
-         |  CASE WHEN NOT is_fim THEN t0
-         |       ELSE '<PRE> ' || array_to_string(ws[1:i], ' ')
-         |         || ' <SUF> ' || array_to_string(ws[j+1:len(ws)], ' ')
-         |         || ' <MID> ' || array_to_string(ws[i+1:j], ' ')
-         |  END AS text_out,
-         |  CASE WHEN is_fim THEN j - i ELSE 0 END AS n_middle
-         |FROM j""".stripMargin,
-
-    // q206: the WET layer closed-form -- ids re-stamped wet:, text as
-    // q200's derivation, provenance pointing at the response id; 404
-    // pages (doc_id % 7 = 0) never reach the WET archive.
-    "q206_wet_pipeline" ->
-      raw"""SELECT '<urn:graft:wet:' || doc_id || '>' AS record_id,
-         |  'http://' || source || '.example.com/doc/' || doc_id
-         |    AS target_uri,
-         |  '<urn:graft:doc:' || doc_id || '>' AS refers_to,
-         |  'doc ' || doc_id || chr(10) ||
-         |    trim(regexp_replace(text, '[ ' || chr(9) || ']+', ' ', 'g'))
-         |    || chr(10) || 'next' AS text
-         |FROM documents WHERE doc_id % 7 <> 0""".stripMargin,
-
-    // q205: expected content from word arithmetic -- block 1 keeps
-    // when its 5-word text reaches 10 chars, block 2 additionally
-    // needs its single anchor word under 30% of the block text; the
-    // nav/tiny/footer/script blocks can never pass and are omitted
-    // from the derivation entirely.
-    "q205_main_content" ->
-      raw"""WITH d AS (SELECT doc_id, str_split(trim(text), ' ') AS w
-         |  FROM documents),
-         |b AS (SELECT doc_id,
-         |    w[1] || ' ' || w[2] || ' ' || w[3] || ' ' || w[4] || ' '
-         |      || w[5] AS b1,
-         |    w[6] || ' ' || w[7] || ' ' || w[8] || ' ' || w[9] || ' '
-         |      || w[10] AS b2,
-         |    length(w[7]) AS ll2 FROM d),
-         |k AS (SELECT doc_id, b1, b2,
-         |    length(b1) >= 10 AS k1,
-         |    length(b2) >= 10 AND 100 * ll2 <= 30 * length(b2) AS k2
-         |  FROM b)
-         |SELECT doc_id,
-         |  CASE WHEN k1 AND k2 THEN b1 || chr(10) || b2
-         |       WHEN k1 THEN b1 ELSE b2 END AS content
-         |FROM k WHERE k1 OR k2""".stripMargin,
-
-    // q204: robots verdicts closed-form from the fixture construction:
-    // even hosts bind only the graftbot group (path family 1 blocked),
-    // odd hosts bind the `*` group (/private/ blocked at length 9,
-    // /private/pub re-allowed at length 12, the $-anchored /data*k
-    // wildcard blocking family 4 and missing family 5).
-    "q204_robots_filter" ->
-      raw"""SELECT doc_id,
-         |  'http://h' || (doc_id % 10) || '.example.org' ||
-         |  CASE doc_id % 6
-         |    WHEN 0 THEN '/'
-         |    WHEN 1 THEN '/g/x' || doc_id
-         |    WHEN 2 THEN '/private/a'
-         |    WHEN 3 THEN '/private/pub1'
-         |    WHEN 4 THEN '/data55' || (doc_id % 10)
-         |    ELSE '/data55' || (doc_id % 10) || '/z' END AS url,
-         |  CASE WHEN (doc_id % 10) % 2 = 0 THEN doc_id % 6 <> 1
-         |       ELSE doc_id % 6 <> 2 AND doc_id % 6 <> 4 END AS allowed
-         |FROM documents""".stripMargin,
-
-    // q203: the anchor-text profile derived closed-form -- targets by
-    // the same modular arithmetic, anchors by word slicing, never
-    // touching the HTML layer (extraction bugs can't cancel against
-    // construction bugs). gcd(5,50)=5 concentrates second-anchor
-    // targets on 10 urls (50 refs each) while gcd(3,50)=1 spreads the
-    // first -- the skewed in-degree a real link graph has.
-    "q203_anchor_text" ->
-      raw"""WITH d AS (SELECT doc_id, str_split(trim(text), ' ') AS w
-         |  FROM documents),
-         |a AS (
-         |  SELECT doc_id,
-         |    'http://t' || ((doc_id * 3 + 7) % 50) || '.example.net/'
-         |      AS target,
-         |    w[1] || ' ' || w[2] AS anchor FROM d
-         |  UNION ALL
-         |  SELECT doc_id,
-         |    'http://t' || ((doc_id * 5 + 11) % 50) || '.example.net/'
-         |      AS target,
-         |    w[3] AS anchor FROM d)
-         |SELECT target, CAST(count(*) AS BIGINT) AS n_refs,
-         |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_pages,
-         |  string_agg(DISTINCT anchor, '|' ORDER BY anchor) AS anchors
-         |FROM a GROUP BY 1""".stripMargin,
-
-    // q202: the snapshot diff replayed as a FULL OUTER JOIN with
-    // presence decided by side-nullness of the join, fingerprints by
-    // length arithmetic (the +10 is the literal ' changed x').
-    "q202_crawl_delta" ->
-      raw"""WITH o AS (SELECT 'http://' || source || '.example.com/doc/'
-         |      || doc_id AS url,
-         |    CAST(length(text) AS BIGINT) AS fp
-         |  FROM documents WHERE doc_id % 11 <> 3),
-         |n AS (SELECT 'http://' || source || '.example.com/doc/'
-         |      || doc_id AS url,
-         |    CAST(length(text) + CASE WHEN doc_id % 5 = 0 THEN 10
-         |      ELSE 0 END AS BIGINT) AS fp
-         |  FROM documents WHERE doc_id % 7 <> 0)
-         |SELECT coalesce(o.url, n.url) AS url, o.fp AS fp_old,
-         |  n.fp AS fp_new,
-         |  CASE WHEN o.url IS NULL THEN 'added'
-         |       WHEN n.url IS NULL THEN 'removed'
-         |       WHEN o.fp = n.fp THEN 'unchanged'
-         |       ELSE 'changed' END AS status
-         |FROM o FULL OUTER JOIN n ON n.url = o.url""".stripMargin,
-
-    // q201: the Z-order cell envelopes derived from the DEFINITION of
-    // Morton interleave -- bit i of bx lands at 2i, of by at 2i+1, as a
-    // per-bit sum -- against the engine's magic-number spread. The
-    // equi-width bucket replays the same IEEE double multiply-then-
-    // divide (exact floor by the bounds proof in Layout.scala); 256.0
-    // is forced DOUBLE so DuckDB's decimal literals can't widen the
-    // arithmetic.
-    "q201_zorder_layout" ->
-      raw"""WITH s AS (SELECT min(l_partkey) AS lo_x, max(l_partkey) AS hi_x,
-         |    min(l_suppkey) AS lo_y, max(l_suppkey) AS hi_y FROM lineitem),
-         |b AS (SELECT l.l_partkey AS x, l.l_suppkey AS y,
-         |    CAST(floor((l.l_partkey - s.lo_x) * 256.0::DOUBLE
-         |      / (s.hi_x - s.lo_x + 1)) AS BIGINT) AS bx,
-         |    CAST(floor((l.l_suppkey - s.lo_y) * 256.0::DOUBLE
-         |      / (s.hi_y - s.lo_y + 1)) AS BIGINT) AS by
-         |  FROM lineitem l CROSS JOIN s),
-         |z AS (SELECT x, y,
-         |    CAST(list_sum(list_transform(range(0, 8),
-         |      i -> (((bx >> i) & 1) << (2 * i))
-         |         + (((by >> i) & 1) << (2 * i + 1)))) AS BIGINT) AS zkey
-         |  FROM b)
-         |SELECT zkey >> 8 AS cell, CAST(count(*) AS BIGINT) AS n,
-         |  min(x) AS x_min, max(x) AS x_max,
-         |  min(y) AS y_min, max(y) AS y_max
-         |FROM z GROUP BY 1""".stripMargin,
-
-    "q01_agg_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(sum(l_quantity), 2) AS sum_qty,
-        |  round(sum(l_extendedprice), 2) AS sum_base_price,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-        |  round(avg(l_quantity), 6) AS avg_qty,
-        |  round(avg(l_discount), 6) AS avg_disc,
-        |  count(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '2000-01-01'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q02_filter_project" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
-        |FROM lineitem
-        |WHERE l_returnflag = 'R' AND l_quantity BETWEEN 10 AND 20
-        |  AND l_shipdate IS NOT NULL""".stripMargin,
-
-    "q03_join_broadcast" ->
-      """SELECT p_brand, count(*) AS n_lines, round(sum(l_extendedprice), 2) AS revenue
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_brand""".stripMargin,
-
-    "q04_semi_join" ->
-      """SELECT o_orderpriority, count(*) AS n_orders
-        |FROM orders
-        |WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
-        |GROUP BY o_orderpriority""".stripMargin,
-
-    "q05_outer_join_fill" ->
-      """SELECT coalesce(c.nationkey, s.nationkey) AS nationkey,
-        |  coalesce(c.c_cnt, 0) AS c_cnt, coalesce(s.s_cnt, 0) AS s_cnt
-        |FROM (SELECT c_nationkey AS nationkey, count(*) AS c_cnt FROM customer GROUP BY 1) c
-        |FULL OUTER JOIN (SELECT s_nationkey AS nationkey, count(*) AS s_cnt FROM supplier GROUP BY 1) s
-        |ON c.nationkey = s.nationkey""".stripMargin,
-
-    "q06_range_lookup" ->
-      """SELECT CASE WHEN l_quantity <= 5 THEN 'tiny'
-        |            WHEN l_quantity <= 15 THEN 'small'
-        |            WHEN l_quantity <= 30 THEN 'medium'
-        |            ELSE 'large' END AS bucket,
-        |  count(*) AS n, round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem GROUP BY 1""".stripMargin,
-
-    "q07_gap_fill" ->
-      """WITH ev AS (
-        |  SELECT event_id, user_id,
-        |    CASE WHEN value < 2 THEN 0.0 ELSE value END AS value
-        |  FROM events),
-        |w AS (
-        |  SELECT event_id, user_id, value,
-        |    sum(value) OVER (PARTITION BY user_id ORDER BY event_id
-        |      ROWS BETWEEN 5 PRECEDING AND 1 PRECEDING) AS recent,
-        |    sum(value) OVER (PARTITION BY user_id ORDER BY event_id
-        |      ROWS BETWEEN 29 PRECEDING AND 25 PRECEDING) AS day_ago,
-        |    lag(value, 24) OVER (PARTITION BY user_id ORDER BY event_id) AS prev24
-        |  FROM ev)
-        |SELECT event_id, user_id,
-        |  round(CASE WHEN value = 0 AND day_ago > 0 AND prev24 IS NOT NULL
-        |    THEN recent / day_ago * prev24 ELSE value END, 6) AS filled_value
-        |FROM w""".stripMargin,
-
-    "q08_topk_per_group" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice FROM orders
-        |QUALIFY row_number() OVER (PARTITION BY o_custkey
-        |  ORDER BY o_totalprice DESC, o_orderkey) <= 3""".stripMargin,
-
-    "q09_mode_impute" ->
-      """SELECT c_nationkey, c_mktsegment AS c_mktsegment_mode
-        |FROM (SELECT c_nationkey, c_mktsegment, count(*) AS cnt
-        |      FROM customer GROUP BY 1, 2)
-        |QUALIFY row_number() OVER (PARTITION BY c_nationkey
-        |  ORDER BY cnt DESC, c_mktsegment) = 1""".stripMargin,
-
-    "q10_dedup_exact" ->
-      // null-text docs are singleton survivors (engine policy: "no content"
-      // is not "same content") — mirrored here instead of grouping NULLs
-      """SELECT md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS content_hash,
-        |  min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM documents WHERE text IS NOT NULL GROUP BY 1
-        |UNION ALL
-        |SELECT NULL, doc_id, 1 FROM documents WHERE text IS NULL""".stripMargin,
-
-    "q11_explode_split" ->
-      """SELECT p_partkey,
-        |  unnest(range(1, len(str_split(p_name, ' ')) + 1)) AS pos,
-        |  unnest(str_split(p_name, ' ')) AS word
-        |FROM part""".stripMargin,
-
-    "q12_pivot_status" ->
-      """SELECT n_name,
-        |  count(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS "F",
-        |  count(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS "O",
-        |  count(CASE WHEN o_orderstatus = 'P' THEN 1 END) AS "P"
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name""".stripMargin,
-
-    "q13_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, 'l_quantity' AS measure, l_quantity AS value FROM lineitem
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM lineitem
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem""".stripMargin,
-
-    "q14_union_align" ->
-      """SELECT c_custkey AS id, c_acctbal AS acctbal, c_mktsegment AS mktsegment,
-        |  'customer' AS src FROM customer
-        |UNION ALL
-        |SELECT s_suppkey, s_acctbal, NULL, 'supplier' FROM supplier""".stripMargin,
-
-    "q15_cross_domain" ->
-      """SELECT r_name, o_orderpriority, r_name || '.' || o_orderpriority AS domain_key
-        |FROM (SELECT DISTINCT r_name FROM region)
-        |CROSS JOIN (SELECT DISTINCT o_orderpriority FROM orders)""".stripMargin,
-
-    "q16_string_clean" ->
-      """SELECT p_partkey,
-        |  substr(replace(regexp_replace(p_name || ' ' || p_brand, '[^\x00-\x7F]', '', 'g'),
-        |    ' ', '_'), 1, 63) AS clean_name,
-        |  upper(p_type) AS type_upper,
-        |  length(p_name) AS name_len
-        |FROM part""".stripMargin,
-
-    "q17_date_dims" ->
-      """SELECT o_orderkey,
-        |  year(o_orderdate) AS yr, month(o_orderdate) AS mo,
-        |  quarter(o_orderdate) AS qtr, dayname(o_orderdate) AS day_name,
-        |  CASE WHEN dayofweek(o_orderdate) = 0 THEN 'Sunday'
-        |       WHEN dayofweek(o_orderdate) = 6 THEN 'Saturday'
-        |       ELSE 'Working day' END AS day_type,
-        |  CASE WHEN month(o_orderdate) IN (11, 12, 1, 2, 3) THEN 'Winter'
-        |       ELSE 'Summer' END AS season
-        |FROM orders""".stripMargin,
-
-    "q18_eu_decimal" ->
-      """SELECT p_partkey,
-        |  CAST(replace(replace(printf('%.2f', p_retailprice), '.', ','), ',', '.') AS DOUBLE)
-        |    AS eu_parsed
-        |FROM part""".stripMargin,
-
-    "q19_haversine" ->
-      """WITH n AS (SELECT n_nationkey AS k, -30.0 + n_nationkey * 2.5 AS lat,
-        |  -20.0 + n_nationkey * 3.1 AS lon FROM nation)
-        |SELECT a.k AS k1, b.k AS k2,
-        |  round(2 * 6371.0088 * asin(sqrt(
-        |    pow(sin(radians(b.lat - a.lat) / 2), 2) +
-        |    cos(radians(a.lat)) * cos(radians(b.lat)) *
-        |    pow(sin(radians(b.lon - a.lon) / 2), 2))), 3) AS dist_km
-        |FROM n a JOIN n b ON a.k < b.k""".stripMargin,
-
-    "q20_spatial_join" ->
-      """SELECT r_name, count(*) AS n_customers
-        |FROM customer JOIN region
-        |  ON (c_custkey % 100 + 0.5) >= r_regionkey * 20
-        | AND (c_custkey % 100 + 0.5) < r_regionkey * 20 + 20
-        |GROUP BY r_name""".stripMargin,
-
-    "q21_zonal_stats" ->
-      """SELECT CAST(floor((event_id % 40 + 0.5) / 10) + 4 * floor((user_id % 30 + 0.5) / 10)
-        |    AS BIGINT) AS zone_id,
-        |  round(sum(value), 2) AS zonal_sum, round(max(value), 2) AS zonal_max,
-        |  count(*) AS zonal_count
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q59_zonal_classes" ->
-      """SELECT CAST(floor((event_id % 40 + 0.5) / 10) + 4 * floor((user_id % 30 + 0.5) / 10)
-        |    AS BIGINT) AS zone_id,
-        |  count(CASE WHEN event_type = 'click' THEN 1 END) AS click,
-        |  count(CASE WHEN event_type = 'error' THEN 1 END) AS error,
-        |  count(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase,
-        |  count(CASE WHEN event_type = 'signup' THEN 1 END) AS signup,
-        |  count(CASE WHEN event_type = 'view' THEN 1 END) AS view
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q60_pixel_upsample" ->
-      """WITH base AS (
-        |  SELECT CAST(event_id % 20 AS INT) AS row, CAST(user_id % 15 AS INT) AS col,
-        |    round(sum(value), 2) AS value
-        |  FROM events GROUP BY 1, 2),
-        |up AS (
-        |  SELECT base.row * 2 + dr.i AS row, base.col * 2 + dc.i AS col, value
-        |  FROM base CROSS JOIN range(2) dr(i) CROSS JOIN range(2) dc(i))
-        |SELECT row, count(*) AS n, round(sum(value), 2) AS row_sum
-        |FROM up WHERE row BETWEEN 10 AND 29 AND col BETWEEN 0 AND 19
-        |GROUP BY row""".stripMargin,
-
-    "q22_text_stats" ->
-      """WITH d AS (SELECT doc_id, text,
-        |  regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
-        |m AS (SELECT doc_id, text, len(toks) AS n_tokens,
-        |  length(text) AS n_chars_raw,
-        |  length(regexp_replace(text, '[^[:punct:]]', '', 'g')) * 1.0 / length(text) AS pr,
-        |  len(list_filter(toks, t -> lower(t) IN ('the','a','an','and','or','of','to','in',
-        |    'is','it','for','on','with','as','at','by','this','that'))) * 1.0 / len(toks) AS sr
-        |  FROM d)
-        |SELECT doc_id, n_tokens, n_chars_raw,
-        |  round(pr, 6) AS punct_ratio, round(sr, 6) AS stop_ratio,
-        |  round((least(length(text) / 500.0, 1.0) + (1.0 - least(pr * 5.0, 1.0))
-        |    + least(sr * 4.0, 1.0)) / 3.0, 6) AS quality
-        |FROM m""".stripMargin,
-
-    "q23_lang_id" ->
-      """WITH d AS (SELECT doc_id, lang,
-        |  regexp_split_to_array(trim(lower(text)), '\s+') AS toks FROM documents),
-        |sc AS (SELECT doc_id, lang,
-        |  len(list_filter(toks, t -> t IN ('the','and','of','is','with'))) AS s_en,
-        |  len(list_filter(toks, t -> t IN ('der','und','die','ist','mit'))) AS s_de,
-        |  len(list_filter(toks, t -> t IN ('le','et','les','est','avec'))) AS s_fr,
-        |  len(list_filter(toks, t -> t IN ('el','y','los','es','con'))) AS s_es,
-        |  len(list_filter(toks, t -> t IN ('de5','shi4','le5','he2','zai4'))) AS s_zh
-        |  FROM d)
-        |SELECT doc_id, lang,
-        |  CASE WHEN greatest(s_en, s_de, s_fr, s_es, s_zh) = 0 THEN 'und'
-        |       WHEN s_en = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'en'
-        |       WHEN s_de = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'de'
-        |       WHEN s_fr = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'fr'
-        |       WHEN s_es = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'es'
-        |       ELSE 'zh' END AS lang_pred
-        |FROM sc""".stripMargin,
-
-    // MinHash signatures recomputed independently: poly-31 shingle hash mod
-    // 1e9+7, k=16 affine permutations, min over distinct tokens (shingleN=1).
-    "q24_minhash_sig" ->
-      """WITH d AS (SELECT doc_id,
-        |  CASE WHEN coalesce(trim(text), '') = '' THEN ['']
-        |       ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS sh
-        |  FROM documents),
-        |h AS (SELECT doc_id, list_transform(sh, s -> list_reduce(
-        |    list_prepend(0::BIGINT, list_transform(regexp_extract_all(s, '.'),
-        |      c -> ascii(c)::BIGINT)),
-        |    (acc, ch) -> (acc * 31 + ch) % 1000000007)) AS hs FROM d)
-        |SELECT doc_id, i AS hash_idx,
-        |  list_min(list_transform(hs, v ->
-        |    (((2 * i + 1) * 104729) % 1000000007 * v + (i * 12582917 + 7)) % 1000000007))
-        |    AS hash_val
-        |FROM h CROSS JOIN range(16) t(i)""".stripMargin,
-
-    // Full LSH-candidate recomputation: signatures as in q24 (shingleN=2
-    // bigrams), 4 bands × 4 rows, bucket size in [2, 1000], distinct pairs.
-    // The engine joins on a 64-bit hash of the band slice; the oracle joins
-    // on the slice itself — identical pairs absent a 2^-64 hash collision.
-    "q25_minhash_pairs" ->
-      """WITH base AS (SELECT doc_id, text FROM documents),
-        |off AS (SELECT coalesce(max(doc_id), 0) AS o FROM base),
-        |all_docs AS (
-        |  SELECT doc_id, text FROM base
-        |  UNION ALL
-        |  SELECT doc_id + o + 1, regexp_replace(text, '^\S+\s*', '')
-        |  FROM base, off WHERE doc_id % 50 = 0),
-        |tk AS (SELECT doc_id,
-        |  CASE WHEN coalesce(trim(text), '') = '' THEN []::VARCHAR[]
-        |       ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS w
-        |  FROM all_docs),
-        |sh AS (SELECT doc_id,
-        |  CASE WHEN len(w) = 0 THEN ['']
-        |       WHEN len(w) < 2 THEN [array_to_string(w, ' ')]
-        |       ELSE list_transform(range(1, len(w)), j -> w[j] || ' ' || w[j+1]) END AS sh
-        |  FROM tk),
-        |h AS (SELECT doc_id, list_transform(sh, s -> list_reduce(
-        |    list_prepend(0::BIGINT, list_transform(regexp_extract_all(s, '.'),
-        |      c -> ascii(c)::BIGINT)),
-        |    (acc, ch) -> (acc * 31 + ch) % 1000000007)) AS hs FROM sh),
-        |sig AS (SELECT doc_id, i,
-        |  list_min(list_transform(hs, v ->
-        |    (((2 * i + 1) * 104729) % 1000000007 * v + (i * 12582917 + 7)) % 1000000007)) AS mh
-        |  FROM h CROSS JOIN range(16) t(i)),
-        |band AS (SELECT doc_id, i // 4 AS b, string_agg(mh::VARCHAR, ',' ORDER BY i) AS key
-        |  FROM sig GROUP BY doc_id, i // 4),
-        |ok AS (SELECT b, key FROM band GROUP BY b, key
-        |  HAVING count(*) BETWEEN 2 AND 1000)
-        |SELECT DISTINCT x.doc_id AS id1, y.doc_id AS id2
-        |FROM band x JOIN band y ON x.b = y.b AND x.key = y.key AND x.doc_id < y.doc_id
-        |JOIN ok ON ok.b = x.b AND ok.key = x.key""".stripMargin,
-
-    "q26_jaccard_pairs" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS w,
-        |    unnest(range(1, len(regexp_split_to_array(trim(lower(text)), '\s+')) + 1)) AS pos
-        |  FROM documents),
-        |bi AS (
-        |  SELECT DISTINCT doc_id, w || ' ' || lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS bg
-        |  FROM toks QUALIFY bg IS NOT NULL),
-        |cnt AS (SELECT doc_id, count(*) AS n FROM bi GROUP BY 1),
-        |long AS (SELECT doc_id FROM documents
-        |  WHERE len(regexp_split_to_array(trim(text), '\s+')) >= 2),
-        |pairs AS (SELECT a.doc_id AS id1, b.doc_id AS id2 FROM long a
-        |  JOIN long b ON b.doc_id = a.doc_id + 1),
-        |inter AS (
-        |  SELECT p.id1, p.id2, count(*) AS inter FROM pairs p
-        |  JOIN bi x ON x.doc_id = p.id1 JOIN bi y ON y.doc_id = p.id2 AND y.bg = x.bg
-        |  GROUP BY 1, 2)
-        |SELECT p.id1, p.id2, coalesce(i.inter, 0) AS inter,
-        |  c1.n + c2.n - coalesce(i.inter, 0) AS uni,
-        |  round(coalesce(i.inter, 0) * 1.0 / (c1.n + c2.n - coalesce(i.inter, 0)), 6) AS jaccard
-        |FROM pairs p
-        |LEFT JOIN inter i ON i.id1 = p.id1 AND i.id2 = p.id2
-        |JOIN cnt c1 ON c1.doc_id = p.id1 JOIN cnt c2 ON c2.doc_id = p.id2""".stripMargin,
-
-    "q27_ann_brute" ->
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-        |z AS (SELECT e.vec_id, unnest(CAST(e.embedding AS DOUBLE[])) AS a,
-        |  unnest(CAST(q.qv AS DOUBLE[])) AS b FROM embeddings e, q),
-        |s AS (SELECT vec_id, sum(a * b) AS dp, sum(a * a) AS na, sum(b * b) AS nb
-        |  FROM z GROUP BY vec_id)
-        |SELECT vec_id, round(dp / (sqrt(na) * sqrt(nb)), 4) AS cosine
-        |FROM s ORDER BY dp / (sqrt(na) * sqrt(nb)) DESC, vec_id LIMIT 10""".stripMargin,
-
-    // RP-LSH bucket bits recomputed from the engine's LCG hyperplanes
-    // (seed 42, 8 bits), probe = query bucket + single-bit flips of bits
-    // 0..2, exact cosine rerank, top-5.
-    "q28_ann_lsh" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-        |pb AS (SELECT vec_id, b,
-        |  CASE WHEN list_reduce(list_transform(range(1, len(v) + 1), j ->
-        |    CASE WHEN ((1103515245 * (42 * 1000003 + b * 8191 + (j - 1)) + 12345)
-        |        % 2147483648) // 1073741824 % 2 = 0
-        |      THEN v[j] ELSE -v[j] END), (x, y) -> x + y) >= 0
-        |    THEN 1::BIGINT << b ELSE 0 END AS bit
-        |  FROM e CROSS JOIN range(8) t(b)),
-        |bk AS (SELECT vec_id, sum(bit)::BIGINT AS bucket FROM pb GROUP BY 1),
-        |qb AS (SELECT bucket AS qbucket FROM bk WHERE vec_id = 0),
-        |cand AS (SELECT e.vec_id, e.v FROM e JOIN bk USING (vec_id), qb
-        |  WHERE bucket IN (qbucket, xor(qbucket, 1), xor(qbucket, 2), xor(qbucket, 4))),
-        |s AS (SELECT vec_id,
-        |  list_reduce(list_transform(range(1, len(v) + 1), j -> v[j] * qv[j]), (x, y) -> x + y) AS dp,
-        |  list_reduce(list_transform(range(1, len(v) + 1), j -> v[j] * v[j]), (x, y) -> x + y) AS na,
-        |  list_reduce(list_transform(range(1, len(qv) + 1), j -> qv[j] * qv[j]), (x, y) -> x + y) AS nb
-        |  FROM cand CROSS JOIN q)
-        |SELECT vec_id, round(dp / (sqrt(na) * sqrt(nb)), 4) AS cosine
-        |FROM s ORDER BY dp / (sqrt(na) * sqrt(nb)) DESC, vec_id LIMIT 5""".stripMargin,
-
-    // IVF recomputed end-to-end: Knuth-hash centroid choice, per-vector
-    // argmin assignment (squared L2, ties on cid), 4 probed lists nearest
-    // the query, exact cosine rerank, top-10.
-    "q62_ann_ivf" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-        |d AS (SELECT e.vec_id, e.v, c.cid,
-        |  list_reduce(list_transform(range(1, len(e.v) + 1),
-        |    j -> (e.v[j] - c.cv[j]) * (e.v[j] - c.cv[j])), (x, y) -> x + y) AS dd
-        |  FROM e CROSS JOIN c),
-        |asg AS (SELECT vec_id, v, cid FROM d
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, cid) = 1),
-        |pl AS (SELECT cid FROM c CROSS JOIN q
-        |  ORDER BY list_reduce(list_transform(range(1, len(cv) + 1),
-        |    j -> (cv[j] - qv[j]) * (cv[j] - qv[j])), (x, y) -> x + y), cid LIMIT 4),
-        |s AS (SELECT a.vec_id,
-        |  list_reduce(list_transform(range(1, len(a.v) + 1), j -> a.v[j] * qv[j]), (x, y) -> x + y) AS dp,
-        |  list_reduce(list_transform(range(1, len(a.v) + 1), j -> a.v[j] * a.v[j]), (x, y) -> x + y) AS na,
-        |  list_reduce(list_transform(range(1, len(qv) + 1), j -> qv[j] * qv[j]), (x, y) -> x + y) AS nb
-        |  FROM asg a JOIN pl ON a.cid = pl.cid CROSS JOIN q)
-        |SELECT vec_id, round(dp / (sqrt(na) * sqrt(nb)), 4) AS cosine
-        |FROM s ORDER BY dp / (sqrt(na) * sqrt(nb)) DESC, vec_id LIMIT 10""".stripMargin,
-
-    "q104_pq_adc" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |don AS (SELECT vec_id AS did, v AS dv FROM e
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |sd AS (SELECT e.vec_id, t.j, d.did,
-        |  list_reduce(list_transform(range(1, 9), i ->
-        |    (e.v[t.j * 8 + i] - d.dv[t.j * 8 + i]) *
-        |    (e.v[t.j * 8 + i] - d.dv[t.j * 8 + i])), (x, y) -> x + y) AS s
-        |  FROM e CROSS JOIN range(8) t(j) CROSS JOIN don d),
-        |codes AS (SELECT vec_id, j, did AS code FROM sd
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-        |    ORDER BY s ASC, did ASC) = 1),
-        |qt AS (SELECT j, did, s FROM sd WHERE vec_id = 0),
-        |adc AS (SELECT c.vec_id, sum(q.s) AS adc FROM codes c
-        |  JOIN qt q ON q.j = c.j AND q.did = c.code GROUP BY c.vec_id)
-        |SELECT vec_id, round(adc, 6) AS adc
-        |FROM adc ORDER BY adc ASC, vec_id LIMIT 10""".stripMargin,
-
-    "q105_ivfpq" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |don AS (SELECT vec_id AS did, v AS dv FROM e
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-        |fulld AS (SELECT e.vec_id, d.did,
-        |  list_reduce(list_transform(range(1, len(e.v) + 1),
-        |    j -> (e.v[j] - d.dv[j]) * (e.v[j] - d.dv[j])), (x, y) -> x + y) AS dd
-        |  FROM e CROSS JOIN don d),
-        |asg AS (SELECT vec_id, did AS lst FROM fulld
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) = 1),
-        |pl AS (SELECT did AS lst FROM don CROSS JOIN q
-        |  ORDER BY list_reduce(list_transform(range(1, len(dv) + 1),
-        |    j -> (dv[j] - qv[j]) * (dv[j] - qv[j])), (x, y) -> x + y), did LIMIT 4),
-        |cand AS (SELECT a.vec_id FROM asg a JOIN pl ON a.lst = pl.lst),
-        |sd AS (SELECT e.vec_id, t.j, d.did,
-        |  list_reduce(list_transform(range(1, 9), i ->
-        |    (e.v[t.j * 8 + i] - d.dv[t.j * 8 + i]) *
-        |    (e.v[t.j * 8 + i] - d.dv[t.j * 8 + i])), (x, y) -> x + y) AS s
-        |  FROM e CROSS JOIN range(8) t(j) CROSS JOIN don d),
-        |codes AS (SELECT vec_id, j, did AS code FROM sd
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-        |    ORDER BY s ASC, did ASC) = 1),
-        |qt AS (SELECT j, did, s FROM sd WHERE vec_id = 0),
-        |adc AS (SELECT c.vec_id, sum(q2.s) AS adc FROM codes c
-        |  JOIN cand ON cand.vec_id = c.vec_id
-        |  JOIN qt q2 ON q2.j = c.j AND q2.did = c.code GROUP BY c.vec_id)
-        |SELECT vec_id, round(adc, 6) AS adc
-        |FROM adc ORDER BY adc ASC, vec_id LIMIT 10""".stripMargin,
-
-    // identical math to q105 — the Spark side goes through the PERSISTED
-    // index (build → sidecar → partition-pruned probe), the oracle
-    // recomputes the one-shot form; equal hashes prove the round trip
-    "q106_ivfpq_index" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |don AS (SELECT vec_id AS did, v AS dv FROM e
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-        |fulld AS (SELECT e.vec_id, d.did,
-        |  list_reduce(list_transform(range(1, len(e.v) + 1),
-        |    j -> (e.v[j] - d.dv[j]) * (e.v[j] - d.dv[j])), (x, y) -> x + y) AS dd
-        |  FROM e CROSS JOIN don d),
-        |asg AS (SELECT vec_id, did AS lst FROM fulld
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) = 1),
-        |pl AS (SELECT did AS lst FROM don CROSS JOIN q
-        |  ORDER BY list_reduce(list_transform(range(1, len(dv) + 1),
-        |    j -> (dv[j] - qv[j]) * (dv[j] - qv[j])), (x, y) -> x + y), did LIMIT 4),
-        |cand AS (SELECT a.vec_id FROM asg a JOIN pl ON a.lst = pl.lst),
-        |sd AS (SELECT e.vec_id, t.j, d.did,
-        |  list_reduce(list_transform(range(1, 9), i ->
-        |    (e.v[t.j * 8 + i] - d.dv[t.j * 8 + i]) *
-        |    (e.v[t.j * 8 + i] - d.dv[t.j * 8 + i])), (x, y) -> x + y) AS s
-        |  FROM e CROSS JOIN range(8) t(j) CROSS JOIN don d),
-        |codes AS (SELECT vec_id, j, did AS code FROM sd
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-        |    ORDER BY s ASC, did ASC) = 1),
-        |qt AS (SELECT j, did, s FROM sd WHERE vec_id = 0),
-        |adc AS (SELECT c.vec_id, sum(q2.s) AS adc FROM codes c
-        |  JOIN cand ON cand.vec_id = c.vec_id
-        |  JOIN qt q2 ON q2.j = c.j AND q2.did = c.code GROUP BY c.vec_id)
-        |SELECT vec_id, round(adc, 6) AS adc
-        |FROM adc ORDER BY adc ASC, vec_id LIMIT 10""".stripMargin,
-
-    // Bloom registers + probes in pure integer arithmetic: poly hash of
-    // the id STRING, affine salts 300..303, quadratic mix, mod 1024.
-    // Per-key probe bits keep duplicates (two hashes can share a bit),
-    // matching the engine's sum-of-matches == kHashes rule.
-    "q150_bloom_membership" ->
-      raw"""WITH hist AS (SELECT CAST(doc_id AS VARCHAR) AS s
-        |  FROM documents WHERE doc_id % 3 = 0),
-        |hbase AS (SELECT list_reduce(list_prepend(0::BIGINT,
-        |    list_transform(regexp_extract_all(s, '.'),
-        |      c -> ascii(c)::BIGINT)),
-        |    (acc, ch) -> (acc * 31 + ch) % 1000000007) AS base FROM hist),
-        |hb AS (SELECT DISTINCT (h * h % 1000000007 + h) % 1000000007
-        |    % 1024 AS bit
-        |  FROM (SELECT ((((2 * (300 + i) + 1) * 104729) % 1000000007)
-        |      * base + ((300 + i) * 12582917 + 7) % 1000000007)
-        |      % 1000000007 AS h
-        |    FROM hbase CROSS JOIN range(4) t(i))),
-        |probes AS (SELECT doc_id, CAST(doc_id AS VARCHAR) AS s
-        |  FROM documents),
-        |pbase AS (SELECT doc_id, list_reduce(list_prepend(0::BIGINT,
-        |    list_transform(regexp_extract_all(s, '.'),
-        |      c -> ascii(c)::BIGINT)),
-        |    (acc, ch) -> (acc * 31 + ch) % 1000000007) AS base FROM probes),
-        |pb AS (SELECT doc_id, (h * h % 1000000007 + h) % 1000000007
-        |    % 1024 AS bit
-        |  FROM (SELECT doc_id, ((((2 * (300 + i) + 1) * 104729)
-        |      % 1000000007) * base + ((300 + i) * 12582917 + 7)
-        |      % 1000000007) % 1000000007 AS h
-        |    FROM pbase CROSS JOIN range(4) t(i))),
-        |mc AS (SELECT p.doc_id,
-        |  CAST(CASE WHEN count(hb.bit) = 4 THEN 1 ELSE 0 END AS BIGINT) AS v
-        |  FROM pb p LEFT JOIN hb ON hb.bit = p.bit GROUP BY p.doc_id)
-        |SELECT 'bit' AS kind, CAST(bit AS BIGINT) AS k, 1::BIGINT AS v
-        |FROM hb
-        |UNION ALL SELECT 'probe', doc_id, v FROM mc""".stripMargin,
-
-    // The composed chain: q102's dedup machinery (keep-best by the q147
-    // quality formula), q69's trigram decontamination over the SURVIVOR
-    // set, the q147 quality formula as a gate, q70's Knuth-hash split —
-    // plus the ledger recomputed as stage-boundary counts.
-    "q149_curate_chain" ->
-      (raw"""WITH RECURSIVE base AS (SELECT doc_id, text FROM documents
-        |  WHERE text IS NOT NULL),
-        |""" + dedupPassSql("", "base") + raw""",
-        |qual AS (SELECT doc_id,
-        |  round((least(length(text) / 500.0, 1.0)
-        |    + (1.0 - least(length(regexp_replace(text, '[^[:punct:]]', '',
-        |        'g')) * 1.0 / length(text) * 5.0, 1.0))
-        |    + least(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |        t -> lower(t) IN ('the','a','an','and','or','of','to','in',
-        |        'is','it','for','on','with','as','at','by','this','that')))
-        |      * 1.0 / len(regexp_split_to_array(trim(text), '\s+')) * 4.0,
-        |      1.0)) / 3.0, 6) AS quality,
-        |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT)
-        |    AS n_tokens
-        |  FROM base),
-        |edgesp AS (SELECT id1, id2 FROM jc WHERE i2 * 1.0 / u2 >= 0.6),
-        |undp AS (SELECT id1, id2 FROM edgesp
-        |  UNION ALL SELECT id2, id1 FROM edgesp),
-        |nodesp AS (SELECT DISTINCT id1 AS id FROM undp),
-        |reach(id, lab) AS (
-        |  SELECT id, id FROM nodesp
-        |  UNION
-        |  SELECT u.id2, r.lab FROM reach r JOIN undp u ON u.id1 = r.id),
-        |compp AS (SELECT id, min(lab) AS comp FROM reach GROUP BY id),
-        |winp AS (SELECT c.comp, c.id AS doc_id,
-        |  row_number() OVER (PARTITION BY c.comp
-        |    ORDER BY q.quality DESC, c.id ASC) AS rn
-        |  FROM compp c JOIN qual q ON q.doc_id = c.id),
-        |removedp AS (SELECT doc_id FROM winp WHERE rn > 1),
-        |dedup AS (SELECT s.doc_id, s.text FROM surv s
-        |  WHERE NOT EXISTS (SELECT 1 FROM removedp r
-        |    WHERE r.doc_id = s.doc_id)),
-        |dtok AS (SELECT doc_id,
-        |  regexp_split_to_array(trim(lower(text)), '\s+') AS w FROM dedup),
-        |dgr AS (SELECT doc_id, CASE WHEN len(w) < 3
-        |    THEN [array_to_string(w, ' ')]
-        |    ELSE list_distinct(list_transform(range(1, len(w) - 1),
-        |      j -> w[j] || ' ' || w[j+1] || ' ' || w[j+2])) END AS gs
-        |  FROM dtok),
-        |btok AS (SELECT regexp_split_to_array(trim(lower(text)), '\s+') AS w
-        |  FROM base WHERE doc_id % 97 = 0),
-        |bgr AS (SELECT DISTINCT g FROM (SELECT unnest(CASE WHEN len(w) < 3
-        |    THEN [array_to_string(w, ' ')]
-        |    ELSE list_transform(range(1, len(w) - 1),
-        |      j -> w[j] || ' ' || w[j+1] || ' ' || w[j+2]) END) AS g
-        |  FROM btok) WHERE g <> ''),
-        |contaminated AS (SELECT DISTINCT doc_id
-        |  FROM (SELECT doc_id, unnest(gs) AS g FROM dgr) d
-        |  JOIN bgr ON bgr.g = d.g),
-        |clean AS (SELECT d.doc_id, d.text FROM dedup d
-        |  WHERE NOT EXISTS (SELECT 1 FROM contaminated c
-        |    WHERE c.doc_id = d.doc_id)),
-        |gated AS (SELECT c.doc_id, q.n_tokens FROM clean c
-        |  JOIN qual q ON q.doc_id = c.doc_id
-        |  WHERE q.n_tokens BETWEEN 3 AND 100000 AND q.quality >= 0.2),
-        |n0 AS (SELECT count(*) AS n FROM base),
-        |n1 AS (SELECT count(*) AS n FROM dedup),
-        |n2 AS (SELECT count(*) AS n FROM clean),
-        |n3 AS (SELECT count(*) AS n FROM gated)
-        |SELECT 'doc' AS kind, CAST(doc_id AS VARCHAR) AS key, n_tokens AS a,
-        |  CAST(CASE WHEN ((((doc_id % 2147483648) + 2147483648)
-        |      % 2147483648) * 2654435761) % 2147483648 < 268435456
-        |    THEN 1 ELSE 0 END AS BIGINT) AS b
-        |FROM gated
-        |UNION ALL SELECT 'stage', 'dedup', n0.n, n1.n FROM n0, n1
-        |UNION ALL SELECT 'stage', 'decontaminate', n1.n, n2.n FROM n1, n2
-        |UNION ALL SELECT 'stage', 'quality_gate', n2.n, n3.n FROM n2, n3"""
-        ).stripMargin,
-
-    // q106's chain with every vector (query included) first rotated by
-    // the H4/2 Hadamard block: sign = (-1)^popcount(r AND c), the 0.5
-    // scale applied AFTER the 4-term fold (0.5x is exact scaling, so it
-    // commutes with the engine's per-term 0.5 ordering bit-for-bit).
-    "q148_opq_index" ->
-      """WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS w
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |e AS (SELECT vec_id, list_transform(range(0, 64), k ->
-        |    0.5 * list_reduce(list_transform(range(0, 4), c ->
-        |      CASE WHEN bit_count((k % 4) & c) % 2 = 0
-        |        THEN w[(k // 4) * 4 + c + 1]
-        |        ELSE -w[(k // 4) * 4 + c + 1] END), (x, y) -> x + y)) AS v
-        |  FROM e0),
-        |don AS (SELECT vec_id AS did, v AS dv FROM e
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-        |fulld AS (SELECT e.vec_id, d.did,
-        |  list_reduce(list_transform(range(1, len(e.v) + 1),
-        |    j -> (e.v[j] - d.dv[j]) * (e.v[j] - d.dv[j])), (x, y) -> x + y) AS dd
-        |  FROM e CROSS JOIN don d),
-        |asg AS (SELECT vec_id, did AS lst FROM fulld
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) = 1),
-        |pl AS (SELECT did AS lst FROM don CROSS JOIN q
-        |  ORDER BY list_reduce(list_transform(range(1, len(dv) + 1),
-        |    j -> (dv[j] - qv[j]) * (dv[j] - qv[j])), (x, y) -> x + y), did LIMIT 4),
-        |cand AS (SELECT a.vec_id FROM asg a JOIN pl ON a.lst = pl.lst),
-        |sd AS (SELECT e.vec_id, t.j, d.did,
-        |  list_reduce(list_transform(range(1, 9), i ->
-        |    (e.v[t.j * 8 + i] - d.dv[t.j * 8 + i]) *
-        |    (e.v[t.j * 8 + i] - d.dv[t.j * 8 + i])), (x, y) -> x + y) AS s
-        |  FROM e CROSS JOIN range(8) t(j) CROSS JOIN don d),
-        |codes AS (SELECT vec_id, j, did AS code FROM sd
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-        |    ORDER BY s ASC, did ASC) = 1),
-        |qt AS (SELECT j, did, s FROM sd WHERE vec_id = 0),
-        |adc AS (SELECT c.vec_id, sum(q2.s) AS adc FROM codes c
-        |  JOIN cand ON cand.vec_id = c.vec_id
-        |  JOIN qt q2 ON q2.j = c.j AND q2.did = c.code GROUP BY c.vec_id)
-        |SELECT vec_id, round(adc, 6) AS adc
-        |FROM adc ORDER BY adc ASC, vec_id LIMIT 10""".stripMargin,
-
-    // q106's ADC CTEs widened to the k·refine=40 shortlist, then the
-    // shortlist re-scored EXACTLY against the raw vectors — rerank order
-    // and exact distances must match the index-path refine bit-for-bit
-    "q128_ivfpq_refined" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |don AS (SELECT vec_id AS did, v AS dv FROM e
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-        |fulld AS (SELECT e.vec_id, d.did,
-        |  list_reduce(list_transform(range(1, len(e.v) + 1),
-        |    j -> (e.v[j] - d.dv[j]) * (e.v[j] - d.dv[j])), (x, y) -> x + y) AS dd
-        |  FROM e CROSS JOIN don d),
-        |asg AS (SELECT vec_id, did AS lst FROM fulld
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) = 1),
-        |pl AS (SELECT did AS lst FROM don CROSS JOIN q
-        |  ORDER BY list_reduce(list_transform(range(1, len(dv) + 1),
-        |    j -> (dv[j] - qv[j]) * (dv[j] - qv[j])), (x, y) -> x + y), did LIMIT 4),
-        |cand AS (SELECT a.vec_id FROM asg a JOIN pl ON a.lst = pl.lst),
-        |sd AS (SELECT e.vec_id, t.j, d.did,
-        |  list_reduce(list_transform(range(1, 9), i ->
-        |    (e.v[t.j * 8 + i] - d.dv[t.j * 8 + i]) *
-        |    (e.v[t.j * 8 + i] - d.dv[t.j * 8 + i])), (x, y) -> x + y) AS s
-        |  FROM e CROSS JOIN range(8) t(j) CROSS JOIN don d),
-        |codes AS (SELECT vec_id, j, did AS code FROM sd
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-        |    ORDER BY s ASC, did ASC) = 1),
-        |qt AS (SELECT j, did, s FROM sd WHERE vec_id = 0),
-        |adc AS (SELECT c.vec_id, sum(q2.s) AS adc FROM codes c
-        |  JOIN cand ON cand.vec_id = c.vec_id
-        |  JOIN qt q2 ON q2.j = c.j AND q2.did = c.code GROUP BY c.vec_id),
-        |sl AS (SELECT vec_id FROM adc ORDER BY adc ASC, vec_id LIMIT 40),
-        |ex AS (SELECT e.vec_id,
-        |  list_reduce(list_transform(range(1, len(e.v) + 1),
-        |    j -> (e.v[j] - qv[j]) * (e.v[j] - qv[j])), (x, y) -> x + y) AS dist
-        |  FROM e JOIN sl ON sl.vec_id = e.vec_id CROSS JOIN q)
-        |SELECT vec_id, round(dist, 6) AS dist
-        |FROM ex ORDER BY dist ASC, vec_id LIMIT 10""".stripMargin,
-
-    // coarse assignment recomputed from scratch, grouped by winning
-    // centroid — must equal the index's parquet partition occupancy
-    "q129_ivfpq_list_stats" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |don AS (SELECT vec_id AS did, v AS dv FROM e
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |fulld AS (SELECT e.vec_id, d.did,
-        |  list_reduce(list_transform(range(1, len(e.v) + 1),
-        |    j -> (e.v[j] - d.dv[j]) * (e.v[j] - d.dv[j])), (x, y) -> x + y) AS dd
-        |  FROM e CROSS JOIN don d),
-        |asg AS (SELECT vec_id, did AS lst FROM fulld
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) = 1)
-        |SELECT lst AS ivf_list, count(*) AS n FROM asg GROUP BY 1""".stripMargin,
-
-    // q116's oracle with ONE new CTE: the candidate side of each coarse
-    // list keeps only its 20 smallest-Knuth-id-hash members (the cap's
-    // exact sampler), so the capped kNN graph is reproduced edge-for-edge.
-    "q130_knn_graph_capped" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |don AS (SELECT vec_id AS did, v AS dv FROM e
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |dist AS (SELECT e.vec_id, d.did,
-        |  list_reduce(list_transform(range(1, len(e.v) + 1),
-        |    j -> (e.v[j] - d.dv[j]) * (e.v[j] - d.dv[j])), (x, y) -> x + y) AS dd
-        |  FROM e CROSS JOIN don d),
-        |asg AS (SELECT vec_id, did AS lst FROM dist
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) = 1),
-        |capped AS (SELECT vec_id, lst FROM asg
-        |  QUALIFY row_number() OVER (PARTITION BY lst
-        |    ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id) <= 20),
-        |pl AS (SELECT vec_id, did AS lst FROM dist
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) <= 4),
-        |cand AS (SELECT p.vec_id AS id1, a.vec_id AS id2
-        |  FROM pl p JOIN capped a ON a.lst = p.lst WHERE a.vec_id <> p.vec_id),
-        |cs AS (SELECT c.id1, c.id2,
-        |  list_reduce(list_transform(range(1, len(a.v) + 1),
-        |    j -> a.v[j] * b.v[j]), (x, y) -> x + y) AS dp,
-        |  list_reduce(list_transform(range(1, len(a.v) + 1),
-        |    j -> a.v[j] * a.v[j]), (x, y) -> x + y) AS na,
-        |  list_reduce(list_transform(range(1, len(b.v) + 1),
-        |    j -> b.v[j] * b.v[j]), (x, y) -> x + y) AS nb
-        |  FROM cand c JOIN e a ON a.vec_id = c.id1 JOIN e b ON b.vec_id = c.id2)
-        |SELECT id1, id2, round(dp / (sqrt(na) * sqrt(nb)), 4) AS cos FROM cs
-        |QUALIFY row_number() OVER (PARTITION BY id1
-        |  ORDER BY dp / (sqrt(na) * sqrt(nb)) DESC, id2) <= 3""".stripMargin,
-
-    // q106's plan with the codebook CTE frozen at the build-half corpus
-    // state and the takedown ids excluded — the rolled lifecycle must be
-    // indistinguishable from a frozen-codebook single build.
-    "q114_ivfpq_rolling" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |cut AS (SELECT CAST(floor(max(vec_id) / 2.0) AS BIGINT) AS c
-        |  FROM embeddings),
-        |don AS (SELECT vec_id AS did, v AS dv FROM e
-        |  WHERE vec_id <= (SELECT c FROM cut)
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-        |fulld AS (SELECT e.vec_id, d.did,
-        |  list_reduce(list_transform(range(1, len(e.v) + 1),
-        |    j -> (e.v[j] - d.dv[j]) * (e.v[j] - d.dv[j])), (x, y) -> x + y) AS dd
-        |  FROM e CROSS JOIN don d),
-        |asg AS (SELECT vec_id, did AS lst FROM fulld
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) = 1),
-        |pl AS (SELECT did AS lst FROM don CROSS JOIN q
-        |  ORDER BY list_reduce(list_transform(range(1, len(dv) + 1),
-        |    j -> (dv[j] - qv[j]) * (dv[j] - qv[j])), (x, y) -> x + y), did LIMIT 4),
-        |cand AS (SELECT a.vec_id FROM asg a JOIN pl ON a.lst = pl.lst),
-        |sd AS (SELECT e.vec_id, t.j, d.did,
-        |  list_reduce(list_transform(range(1, 9), i ->
-        |    (e.v[t.j * 8 + i] - d.dv[t.j * 8 + i]) *
-        |    (e.v[t.j * 8 + i] - d.dv[t.j * 8 + i])), (x, y) -> x + y) AS s
-        |  FROM e CROSS JOIN range(8) t(j) CROSS JOIN don d),
-        |codes AS (SELECT vec_id, j, did AS code FROM sd
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-        |    ORDER BY s ASC, did ASC) = 1),
-        |qt AS (SELECT j, did, s FROM sd WHERE vec_id = 0),
-        |adc AS (SELECT c.vec_id, sum(q2.s) AS adc FROM codes c
-        |  JOIN cand ON cand.vec_id = c.vec_id
-        |  JOIN qt q2 ON q2.j = c.j AND q2.did = c.code GROUP BY c.vec_id)
-        |SELECT vec_id, round(adc, 6) AS adc
-        |FROM adc WHERE vec_id % 50 <> 7
-        |ORDER BY adc ASC, vec_id LIMIT 10""".stripMargin,
-
-    // q82's cut with budgets DERIVED from the corpus: per-source sqrt
-    // token mass, normalized by a source-ordered sequential fold (the
-    // operator's documented reproducibility contract).
-    "q115_temperature_mix" ->
-      """WITH d AS (SELECT doc_id, source,
-        |    CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS toks,
-        |    ((((doc_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 2147483648 AS bkt
-        |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-        |m AS (SELECT source, sqrt(sum(toks) * 1.0) AS w FROM d GROUP BY source),
-        |tt AS (SELECT list_reduce(list(w ORDER BY source), (x, y) -> x + y) AS tot
-        |  FROM m),
-        |b AS (SELECT source, CAST(floor(50000.0 * w / tot) AS BIGINT) AS budget
-        |  FROM m, tt),
-        |c AS (SELECT d.*, b.budget,
-        |    sum(toks) OVER (PARTITION BY d.source ORDER BY bkt, doc_id) AS cum
-        |  FROM d JOIN b ON b.source = d.source)
-        |SELECT doc_id, source, toks FROM c WHERE cum <= budget""".stripMargin,
-
-    // IVF-restricted kNN graph: hash-donor centroids (as q106), each
-    // vector probes its 4 nearest lists and meets the vectors ASSIGNED
-    // there; exact cosine per surviving pair; top-3 per id1.
-    "q116_knn_graph" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |don AS (SELECT vec_id AS did, v AS dv FROM e
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |dist AS (SELECT e.vec_id, d.did,
-        |  list_reduce(list_transform(range(1, len(e.v) + 1),
-        |    j -> (e.v[j] - d.dv[j]) * (e.v[j] - d.dv[j])), (x, y) -> x + y) AS dd
-        |  FROM e CROSS JOIN don d),
-        |asg AS (SELECT vec_id, did AS lst FROM dist
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) = 1),
-        |pl AS (SELECT vec_id, did AS lst FROM dist
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) <= 4),
-        |cand AS (SELECT p.vec_id AS id1, a.vec_id AS id2
-        |  FROM pl p JOIN asg a ON a.lst = p.lst WHERE a.vec_id <> p.vec_id),
-        |cs AS (SELECT c.id1, c.id2,
-        |  list_reduce(list_transform(range(1, len(a.v) + 1),
-        |    j -> a.v[j] * b.v[j]), (x, y) -> x + y) AS dp,
-        |  list_reduce(list_transform(range(1, len(a.v) + 1),
-        |    j -> a.v[j] * a.v[j]), (x, y) -> x + y) AS na,
-        |  list_reduce(list_transform(range(1, len(b.v) + 1),
-        |    j -> b.v[j] * b.v[j]), (x, y) -> x + y) AS nb
-        |  FROM cand c JOIN e a ON a.vec_id = c.id1 JOIN e b ON b.vec_id = c.id2)
-        |SELECT id1, id2, round(dp / (sqrt(na) * sqrt(nb)), 4) AS cos FROM cs
-        |QUALIFY row_number() OVER (PARTITION BY id1
-        |  ORDER BY dp / (sqrt(na) * sqrt(nb)) DESC, id2) <= 3""".stripMargin,
-
-    // q216: q116's IVF kNN chain cut at 8, label lookups joined on
-    // both ends, two argmax cuts on ROUNDED cosine (id tie-break) and
-    // the rounded margin -- anchors lacking either side drop by the
-    // inner join, same as the engine.
-    "q216_triplet_mining" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |don AS (SELECT vec_id AS did, v AS dv FROM e
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |dist AS (SELECT e.vec_id, d.did,
-        |  list_reduce(list_transform(range(1, len(e.v) + 1),
-        |    j -> (e.v[j] - d.dv[j]) * (e.v[j] - d.dv[j])), (x, y) -> x + y) AS dd
-        |  FROM e CROSS JOIN don d),
-        |asg AS (SELECT vec_id, did AS lst FROM dist
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) = 1),
-        |pl AS (SELECT vec_id, did AS lst FROM dist
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) <= 4),
-        |cand AS (SELECT p.vec_id AS id1, a.vec_id AS id2
-        |  FROM pl p JOIN asg a ON a.lst = p.lst WHERE a.vec_id <> p.vec_id),
-        |cs AS (SELECT c.id1, c.id2,
-        |  list_reduce(list_transform(range(1, len(a.v) + 1),
-        |    j -> a.v[j] * b.v[j]), (x, y) -> x + y) AS dp,
-        |  list_reduce(list_transform(range(1, len(a.v) + 1),
-        |    j -> a.v[j] * a.v[j]), (x, y) -> x + y) AS na,
-        |  list_reduce(list_transform(range(1, len(b.v) + 1),
-        |    j -> b.v[j] * b.v[j]), (x, y) -> x + y) AS nb
-        |  FROM cand c JOIN e a ON a.vec_id = c.id1 JOIN e b ON b.vec_id = c.id2),
-        |knn AS (SELECT id1, id2, round(dp / (sqrt(na) * sqrt(nb)), 4) AS cr
-        |  FROM cs
-        |  QUALIFY row_number() OVER (PARTITION BY id1
-        |    ORDER BY dp / (sqrt(na) * sqrt(nb)) DESC, id2) <= 8),
-        |lab AS (SELECT vec_id, label FROM embeddings),
-        |e2 AS (SELECT k.id1, k.id2, k.cr, la.label AS l1, lb.label AS l2
-        |  FROM knn k JOIN lab la ON la.vec_id = k.id1
-        |  JOIN lab lb ON lb.vec_id = k.id2),
-        |pos AS (SELECT id1, id2 AS pos_id, cr AS pos_cos FROM e2
-        |  WHERE l1 = l2
-        |  QUALIFY row_number() OVER (PARTITION BY id1
-        |    ORDER BY cr DESC, id2) = 1),
-        |neg AS (SELECT id1, id2 AS neg_id, cr AS neg_cos FROM e2
-        |  WHERE l1 <> l2
-        |  QUALIFY row_number() OVER (PARTITION BY id1
-        |    ORDER BY cr DESC, id2) = 1)
-        |SELECT p.id1 AS anchor, pos_id, neg_id, pos_cos, neg_cos,
-        |  round(pos_cos - neg_cos, 4) AS margin
-        |FROM pos p JOIN neg n ON n.id1 = p.id1""".stripMargin,
-
-    // q217: the q116 donor/assign/probe chain restricted to A-probes x
-    // B-assignments, cosines shifted onto the non-negative 4-dp
-    // lattice, top-k sums per end as integers, and the margin as one
-    // exact integer division -- floor on both engines because every
-    // operand is non-negative.
-    "q217_bitext_mining" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |    label % 2 AS side
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |don AS (SELECT vec_id AS did, v AS dv FROM e
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |dist AS (SELECT e.vec_id, e.side, d.did,
-        |  list_reduce(list_transform(range(1, len(e.v) + 1),
-        |    j -> (e.v[j] - d.dv[j]) * (e.v[j] - d.dv[j])), (x, y) -> x + y) AS dd
-        |  FROM e CROSS JOIN don d),
-        |asg AS (SELECT vec_id, did AS lst FROM dist WHERE side = 1
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) = 1),
-        |pl AS (SELECT vec_id, did AS lst FROM dist WHERE side = 0
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) <= 4),
-        |cand AS (SELECT p.vec_id AS id1, a.vec_id AS id2
-        |  FROM pl p JOIN asg a ON a.lst = p.lst),
-        |cs AS (SELECT c.id1, c.id2,
-        |  CAST(round((list_reduce(list_transform(range(1, len(a.v) + 1),
-        |      j -> a.v[j] * b.v[j]), (x, y) -> x + y)
-        |    / (sqrt(list_reduce(list_transform(range(1, len(a.v) + 1),
-        |      j -> a.v[j] * a.v[j]), (x, y) -> x + y))
-        |     * sqrt(list_reduce(list_transform(range(1, len(b.v) + 1),
-        |      j -> b.v[j] * b.v[j]), (x, y) -> x + y)))) * 10000)
-        |    AS BIGINT) + 10000 AS s10k
-        |  FROM cand c JOIN e a ON a.vec_id = c.id1 JOIN e b ON b.vec_id = c.id2),
-        |fwd AS (SELECT id1, CAST(SUM(s10k) AS BIGINT) AS sumA,
-        |    CAST(COUNT(*) AS BIGINT) AS nA
-        |  FROM (SELECT * FROM cs QUALIFY row_number() OVER
-        |    (PARTITION BY id1 ORDER BY s10k DESC, id2) <= 4)
-        |  GROUP BY id1),
-        |bwd AS (SELECT id2, CAST(SUM(s10k) AS BIGINT) AS sumB,
-        |    CAST(COUNT(*) AS BIGINT) AS nB
-        |  FROM (SELECT * FROM cs QUALIFY row_number() OVER
-        |    (PARTITION BY id2 ORDER BY s10k DESC, id1) <= 4)
-        |  GROUP BY id2),
-        |best AS (SELECT id1, id2, s10k FROM cs
-        |  QUALIFY row_number() OVER (PARTITION BY id1
-        |    ORDER BY s10k DESC, id2) = 1)
-        |SELECT b.id1 AS src_id, b.id2 AS tgt_id,
-        |  CAST(b.s10k - 10000 AS BIGINT) AS cos10k,
-        |  CAST((2000000 * b.s10k * f.nA * w.nB) //
-        |    greatest(f.sumA * w.nB + w.sumB * f.nA, 1) AS BIGINT)
-        |    AS margin_ppm
-        |FROM best b JOIN fwd f ON f.id1 = b.id1
-        |JOIN bwd w ON w.id2 = b.id2""".stripMargin,
-
-    // q218: the water-filling fixpoint unrolled 6 waves in HUGEINT —
-    // see waterfillOracleSql.
-    "q218_waterfill_mix" -> waterfillOracleSql(6),
-
-    // q219: lehmer hash, (source, shard) window rank, round/slot/key
-    // arithmetic — all replayed literally.
-    "q219_interleave_feed" ->
-      raw"""WITH r(source, src_ix, k) AS (VALUES ('src0', 0, 3),
-         |    ('src1', 1, 2), ('src2', 2, 1)),
-         |s AS (SELECT d.doc_id AS id, d.source, r.src_ix, r.k,
-         |    ((d.doc_id + 5) % 2147483647) * 48271 % 2147483647 AS h
-         |  FROM documents d JOIN r ON r.source = d.source),
-         |t AS (SELECT id, source, src_ix, k, h,
-         |    CAST(h % 4 AS INTEGER) AS shard FROM s),
-         |u AS (SELECT id, source, src_ix, k, shard,
-         |    CAST(row_number() OVER (PARTITION BY source, shard
-         |      ORDER BY h, id) - 1 AS BIGINT) AS rho
-         |  FROM t)
-         |SELECT id, source, shard,
-         |  CAST(rho // k AS BIGINT) AS "round",
-         |  CAST(rho % k AS INTEGER) AS slot,
-         |  CAST(((rho // k * 3 + src_ix) * 4 + shard) * 3 + rho % k
-         |    AS BIGINT) AS feed_key
-         |FROM u""".stripMargin,
-
-    // q220: best-vs-rest winner (q214's tie-break) then the corpus
-    // median gate via percent_rank — the q156 topQualityAtScale replay.
-    "q220_best_of_n_gate" ->
-      raw"""WITH c AS (SELECT doc_id // 4 AS prompt, doc_id AS cand,
-         |    CAST(len(str_split(trim(text), ' ')) AS BIGINT) AS score
-         |  FROM documents),
-         |w AS (SELECT prompt, cand, score,
-         |    CAST(count(*) OVER (PARTITION BY prompt) AS INTEGER)
-         |      AS n_cands,
-         |    row_number() OVER (PARTITION BY prompt
-         |      ORDER BY score DESC, cand DESC) AS rn
-         |  FROM c),
-         |win AS (SELECT prompt, cand AS chosen_id, score, n_cands
-         |  FROM w WHERE rn = 1)
-         |SELECT prompt, chosen_id, score, n_cands FROM win
-         |QUALIFY percent_rank() OVER
-         |  (ORDER BY score ASC, chosen_id ASC) >= 0.5""".stripMargin,
-
-    // q221: label quotas from the sorted-label rank, the per-(test,
-    // label) seeded-hash window rank, self-exclusion before ranking.
-    "q221_few_shot" ->
-      raw"""WITH p AS (SELECT doc_id AS ex_id, lang AS label
-         |  FROM documents WHERE doc_id % 20 = 0),
-         |lr AS (SELECT label,
-         |    CAST(row_number() OVER (ORDER BY label) - 1 AS INTEGER)
-         |      AS lx
-         |  FROM (SELECT DISTINCT label FROM p)),
-         |q AS (SELECT label,
-         |    CAST(7 // 5 + CASE WHEN lx < 7 % 5 THEN 1 ELSE 0 END
-         |      AS BIGINT) AS quota FROM lr),
-         |t AS (SELECT doc_id AS test_id FROM documents
-         |  WHERE doc_id % 97 = 0),
-         |x AS (SELECT t.test_id, p.label, p.ex_id,
-         |    ((t.test_id * 131 + p.ex_id * 17 + 3) % 2147483647)
-         |      * 48271 % 2147483647 AS h
-         |  FROM t, p WHERE p.ex_id <> t.test_id),
-         |r AS (SELECT test_id, label, ex_id,
-         |    CAST(row_number() OVER (PARTITION BY test_id, label
-         |      ORDER BY h, ex_id) - 1 AS INTEGER) AS ex_rank
-         |  FROM x)
-         |SELECT r.test_id, r.label, r.ex_rank, r.ex_id
-         |FROM r JOIN q ON q.label = r.label
-         |WHERE r.ex_rank < q.quota""".stripMargin,
-
-    // q222: the q153 CDC chain re-derived, then per-source total vs
-    // distinct-chunk token mass and the ppm ratio.
-    "q222_cdc_dedup_ratio" -> (s"WITH ${cdcChunkCtes(3, 32)},\n" +
-      raw"""cs AS (SELECT d.source, c.chash,
-         |    CAST(c.e - c.s AS BIGINT) AS toks
-         |  FROM chunks c JOIN documents d ON d.doc_id = c.doc_id),
-         |tt AS (SELECT source, CAST(count(*) AS BIGINT) AS n_chunks,
-         |    CAST(sum(toks) AS BIGINT) AS sum_toks
-         |  FROM cs GROUP BY source),
-         |uu AS (SELECT source, CAST(count(*) AS BIGINT) AS n_unique,
-         |    CAST(sum(toks) AS BIGINT) AS uniq_toks
-         |  FROM (SELECT source, chash, min(toks) AS toks FROM cs
-         |    GROUP BY source, chash) GROUP BY source)
-         |SELECT tt.source, tt.n_chunks, tt.sum_toks, uu.n_unique,
-         |  uu.uniq_toks,
-         |  CAST(floor(CAST(uu.uniq_toks AS DOUBLE) * 1000000
-         |    / tt.sum_toks) AS BIGINT) AS dedup_ppm
-         |FROM tt JOIN uu ON uu.source = tt.source""".stripMargin),
-
-    // q223: the planted change behaviors re-derived, consecutive-fetch
-    // transitions via lag, tier by integer cross-multiplication.
-    "q223_recrawl_schedule" ->
-      raw"""WITH o AS (SELECT 'u' || (doc_id % 100) AS url,
-         |    CAST(doc_id AS BIGINT) AS ts,
-         |    CAST(CASE WHEN (doc_id % 100) % 3 = 0 THEN 0
-         |         WHEN (doc_id % 100) % 3 = 1 THEN (doc_id // 100) % 2
-         |         ELSE CASE WHEN (doc_id // 100) % 5 = 0 THEN 1
-         |              ELSE 0 END END AS BIGINT) AS fp
-         |  FROM documents),
-         |c AS (SELECT url, ts, fp,
-         |    lag(fp) OVER (PARTITION BY url ORDER BY ts, fp) AS pfp
-         |  FROM o),
-         |g AS (SELECT url, CAST(count(*) AS BIGINT) AS n_obs,
-         |    CAST(COALESCE(sum(CASE WHEN pfp IS NOT NULL AND fp <> pfp
-         |      THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_changes,
-         |    max(ts) AS last_ts FROM c GROUP BY url)
-         |SELECT url, n_obs, n_changes, last_ts,
-         |  CASE WHEN n_obs >= 2 AND n_changes * 100 >= 60 * (n_obs - 1)
-         |      THEN 'hot'
-         |    WHEN n_obs >= 2 AND n_changes * 100 >= 20 * (n_obs - 1)
-         |      THEN 'warm'
-         |    ELSE 'cold' END AS tier,
-         |  last_ts + CASE
-         |    WHEN n_obs >= 2 AND n_changes * 100 >= 60 * (n_obs - 1)
-         |      THEN 100
-         |    WHEN n_obs >= 2 AND n_changes * 100 >= 20 * (n_obs - 1)
-         |      THEN 1000
-         |    ELSE 10000 END AS next_visit
-         |FROM g""".stripMargin,
-
-    // q224: the unigram Viterbi chain (recursive-CTE DP) plus the
-    // per-word readout.
-    "q224_unigram_viterbi" ->
-      (s"WITH RECURSIVE ${unigramCtes(4, 3)}\n" +
-        raw"""SELECT word, n_occ, seg, cost,
-           |  CAST(len(str_split(seg, ' ')) AS INTEGER) AS n_pieces
-           |FROM segs""".stripMargin),
-
-    // q225: the same chain aggregated into the EM piece counts and
-    // re-derived lattice costs.
-    "q225_unigram_em" ->
-      (s"WITH RECURSIVE ${unigramCtes(4, 3)}\n" +
-        raw"""SELECT piece, CAST(sum(n_occ) AS BIGINT) AS em_count,
-           |  CAST(40 - (length(printf('%b',
-           |    CAST(sum(n_occ) AS BIGINT))) - 1) AS BIGINT) AS new_cost
-           |FROM (SELECT n_occ, unnest(str_split(seg, ' ')) AS piece
-           |  FROM segs)
-           |GROUP BY piece""".stripMargin),
-
-    // q226: the planted alignment closed-form — all 1:1 except the
-    // doc%5==0 docs' 2:1 bead at position 1 (cost 240 = 230 type
-    // penalty + 10·|l1+l2 − (l1+l2+1)|); never touches the DP.
-    "q226_sentence_align" ->
-      raw"""WITH d AS (SELECT doc_id, str_split(trim(text), ' ') AS w
-         |  FROM documents),
-         |g AS (SELECT doc_id, CAST(len(w) // 3 AS INTEGER) AS ng
-         |  FROM d WHERE len(w) >= 3),
-         |m AS (SELECT doc_id, ng,
-         |    (doc_id % 5 = 0 AND ng >= 3) AS mrg FROM g),
-         |nomrg AS (SELECT doc_id, unnest(range(0, ng)) AS k
-         |  FROM m WHERE NOT mrg),
-         |mrg1 AS (SELECT doc_id, unnest(range(0, ng - 1)) AS k
-         |  FROM m WHERE mrg)
-         |SELECT doc_id, CAST(k AS INTEGER) AS bead_ix,
-         |  CAST(k AS INTEGER) AS a_from, 1 AS n_a,
-         |  CAST(k AS INTEGER) AS b_from, 1 AS n_b,
-         |  '1:1' AS bead, CAST(0 AS BIGINT) AS cost
-         |FROM nomrg
-         |UNION ALL
-         |SELECT doc_id, CAST(k AS INTEGER),
-         |  CAST(CASE WHEN k >= 2 THEN k + 1 ELSE k END AS INTEGER),
-         |  CASE WHEN k = 1 THEN 2 ELSE 1 END,
-         |  CAST(k AS INTEGER), 1,
-         |  CASE WHEN k = 1 THEN '2:1' ELSE '1:1' END,
-         |  CAST(CASE WHEN k = 1 THEN 240 ELSE 0 END AS BIGINT)
-         |FROM mrg1""".stripMargin,
-
-    // q227: the SQuAD normalizer + multiset-overlap F1 replayed on
-    // DuckDB list ops (empty-list reduce guarded by CASE).
-    "q227_eval_em_f1" ->
-      raw"""WITH d AS (SELECT doc_id, str_split(trim(text), ' ') AS w
-         |  FROM documents),
-         |pr AS (SELECT doc_id,
-         |    -- DuckDB out-of-range list slices are NULL where Spark's
-         |    -- are empty: coalesce to '' (short docs)
-         |    COALESCE(CASE WHEN doc_id % 3 = 0
-         |        THEN upper(array_to_string(w[1:8], ' ')) || '!'
-         |      WHEN doc_id % 3 = 1 THEN array_to_string(w[3:10], ' ')
-         |      ELSE array_to_string(w[12:17], ' ') END, '') AS pred,
-         |    'The ' || array_to_string(w[1:8], ' ') || '.' AS ref
-         |  FROM d),
-         |nm AS (SELECT doc_id, pred, ref,
-         |    -- official remove_punc: DELETE string.punctuation chars
-         |    list_filter(regexp_split_to_array(
-         |      regexp_replace(lower(pred), '[!-/:-@\[-`{-~]', '', 'g'),
-         |      '\s+'),
-         |      t -> t <> '' AND t <> 'a' AND t <> 'an' AND t <> 'the')
-         |      AS tp,
-         |    list_filter(regexp_split_to_array(
-         |      regexp_replace(lower(ref), '[!-/:-@\[-`{-~]', '', 'g'),
-         |      '\s+'),
-         |      t -> t <> '' AND t <> 'a' AND t <> 'an' AND t <> 'the')
-         |      AS tr
-         |  FROM pr),
-         |ov AS (SELECT doc_id, pred, ref, tp, tr,
-         |    CASE WHEN len(tp) = 0 THEN 0
-         |      ELSE list_reduce(list_transform(list_distinct(tp),
-         |        t -> least(len(list_filter(tp, x -> x = t)),
-         |          len(list_filter(tr, x -> x = t)))), (a, b) -> a + b)
-         |      END AS olap
-         |  FROM nm)
-         |SELECT doc_id, pred, ref,
-         |  -- array_to_string([]) is NULL in DuckDB, '' in Spark
-         |  COALESCE(array_to_string(tp, ' '), '')
-         |    = COALESCE(array_to_string(tr, ' '), '') AS em,
-         |  CASE WHEN len(tp) + len(tr) = 0 THEN CAST(1000000 AS BIGINT)
-         |    ELSE CAST(floor(CAST(olap AS DOUBLE) * 2000000
-         |      / (len(tp) + len(tr))) AS BIGINT) END AS f1_ppm
-         |FROM ov""".stripMargin,
-
-    // q228: the product-ratio estimator replayed with the same
-    // per-factor floors and DOUBLE division.
-    "q228_pass_at_k" ->
-      raw"""WITH s AS (SELECT doc_id // 8 AS problem,
-         |    (doc_id * 7) % 10 < 3 AS ok FROM documents),
-         |a AS (SELECT problem, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(CASE WHEN ok THEN 1 ELSE 0 END) AS BIGINT) AS c
-         |  FROM s GROUP BY problem)
-         |SELECT problem, n, c,
-         |  CAST(1000000 - floor(CAST(greatest(n - c, 0)
-         |      * greatest(n - c - 1, 0) * greatest(n - c - 2, 0)
-         |      AS DOUBLE) * 1000000
-         |    / (n * (n - 1) * (n - 2))) AS BIGINT) AS pass_at_k_ppm
-         |FROM a""".stripMargin,
-
-    // q229: both Viterbi passes as two recursive-CTE chains in one
-    // WITH RECURSIVE; the prune CTE mirrors pruneVocab (EM-kept pieces
-    // at EM cost, seed-cost character alphabet re-entry).
-    "q229_unigram_prune" ->
-      (s"WITH RECURSIVE ${unigramVocabCtes(4, 3)},\n" +
-        s"${unigramDpCtes(4, "", "vc")},\n" +
-        raw"""pv AS (SELECT piece, CAST(sum(n_occ) AS BIGINT) AS cnt
-           |  FROM (SELECT n_occ, unnest(str_split(seg, ' ')) AS piece
-           |    FROM segs) GROUP BY piece),
-           |kept AS (SELECT piece,
-           |    CAST(40 - (length(printf('%b', cnt)) - 1) AS BIGINT)
-           |      AS cost
-           |  FROM pv WHERE cnt >= 5),
-           |vc2 AS (SELECT * FROM kept
-           |  UNION ALL
-           |  SELECT piece, cost FROM vc WHERE length(piece) = 1
-           |    AND piece NOT IN (SELECT piece FROM kept)),""".stripMargin
-        + "\n" + s"${unigramDpCtes(4, "p", "vc2")}\n" +
-        raw"""SELECT word, n_occ, seg, cost,
-           |  CAST(len(str_split(seg, ' ')) AS INTEGER) AS n_pieces
-           |FROM psegs""".stripMargin),
-
-    // q230: the datasheet re-derived — struct-max argmax mirrored by a
-    // (count desc, lang desc) window rank, ppm ratios with the same
-    // DOUBLE-floor.
-    "q230_corpus_datasheet" ->
-      raw"""WITH d AS (SELECT source, lang, doc_id,
-         |    CAST(len(str_split(trim(text), ' ')) AS BIGINT) AS n_tok,
-         |    md5(text) AS h FROM documents),
-         |bl AS (SELECT source, lang, CAST(count(*) AS BIGINT) AS nl
-         |  FROM d GROUP BY source, lang),
-         |dm AS (SELECT source, lang AS dominant_lang FROM bl
-         |  QUALIFY row_number() OVER (PARTITION BY source
-         |    ORDER BY nl DESC, lang DESC) = 1),
-         |nl2 AS (SELECT source, CAST(count(*) AS BIGINT) AS n_langs
-         |  FROM (SELECT DISTINCT source, lang FROM d) GROUP BY source),
-         |b AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-         |    CAST(count(DISTINCT h) AS BIGINT) AS n_distinct_texts
-         |  FROM d GROUP BY source)
-         |SELECT b.source, b.n_docs, b.n_tokens, b.n_distinct_texts,
-         |  CAST(floor(CAST(b.n_distinct_texts AS DOUBLE) * 1000000
-         |    / b.n_docs) AS BIGINT) AS uniq_ppm,
-         |  CAST(floor(CAST(b.n_tokens AS DOUBLE) * 1000000
-         |    / b.n_docs) AS BIGINT) AS mean_tok_ppm,
-         |  nl2.n_langs, dm.dominant_lang
-         |FROM b JOIN nl2 ON nl2.source = b.source
-         |JOIN dm ON dm.source = b.source""".stripMargin,
-
-    // q231: the corpus explode joined to the recursive-CTE
-    // segmentation table, per-doc sums and the ppm ratio.
-    "q231_unigram_apply" ->
-      (s"WITH RECURSIVE ${unigramCtes(4, 3)},\n" +
-        raw"""dw AS (SELECT d.doc_id, s.cost,
-           |    CAST(len(str_split(s.seg, ' ')) AS BIGINT) AS np
-           |  FROM (SELECT doc_id, unnest(str_split(trim(text), ' '))
-           |      AS word
-           |    FROM documents WHERE text IS NOT NULL) d
-           |  JOIN segs s ON s.word = d.word
-           |  WHERE d.word <> '' AND length(d.word) <= 32)
-           |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-           |  CAST(sum(cost) AS BIGINT) AS total_cost,
-           |  CAST(sum(np) AS BIGINT) AS n_pieces,
-           |  CAST(floor(CAST(sum(cost) AS DOUBLE) * 1000000 / sum(np))
-           |    AS BIGINT) AS cost_per_piece_ppm
-           |FROM dw GROUP BY doc_id""".stripMargin),
-
-    // q232: every training pair closed-form from the same word
-    // arithmetic as q226 — the merged bead concatenates groups 1+2.
-    "q232_bitext_pairs" ->
-      raw"""WITH d AS (SELECT doc_id, str_split(trim(text), ' ') AS w
-         |  FROM documents),
-         |g AS (SELECT doc_id, CAST(len(w) // 3 AS INTEGER) AS ng,
-         |    list_transform(range(0, len(w) // 3),
-         |      g -> array_to_string(w[g * 3 + 1:g * 3 + 3], ' ')) AS ta
-         |  FROM d WHERE len(w) >= 3),
-         |m AS (SELECT doc_id, ng, ta,
-         |    (doc_id % 5 = 0 AND ng >= 3) AS mrg FROM g),
-         |nomrg AS (SELECT doc_id, unnest(range(0, ng)) AS k, ta
-         |  FROM m WHERE NOT mrg),
-         |mrg1 AS (SELECT doc_id, unnest(range(0, ng - 1)) AS k, ta
-         |  FROM m WHERE mrg)
-         |SELECT doc_id, CAST(k AS INTEGER) AS bead_ix, '1:1' AS bead,
-         |  ta[k + 1] AS src_text, ta[k + 1] AS tgt_text FROM nomrg
-         |UNION ALL
-         |SELECT doc_id, CAST(k AS INTEGER),
-         |  CASE WHEN k = 1 THEN '2:1' ELSE '1:1' END,
-         |  CASE WHEN k = 1 THEN ta[2] || ' ' || ta[3]
-         |       WHEN k >= 2 THEN ta[k + 2] ELSE ta[1] END,
-         |  CASE WHEN k = 1 THEN ta[2] || ' ' || ta[3]
-         |       WHEN k >= 2 THEN ta[k + 2] ELSE ta[1] END
-         |FROM mrg1""".stripMargin,
-
-    // q233: delays closed-form from the fixture's host arithmetic
-    // (even hosts: the graftbot group's 2+h%5 shadows the * group's 9;
-    // h%4==1: the * group's 7; h%4==3: malformed value ignored →
-    // caller default 5), slots by the same per-host url-order rank.
-    "q233_fetch_schedule" ->
-      raw"""WITH u AS (SELECT
-         |    'http://h' || (doc_id % 10) || '.example.org/p' || doc_id
-         |      AS url,
-         |    'h' || (doc_id % 10) || '.example.org' AS host,
-         |    doc_id % 10 AS h
-         |  FROM documents),
-         |dl AS (SELECT h, CAST(CASE WHEN h % 2 = 0 THEN h % 5 + 2
-         |    WHEN h % 4 = 1 THEN 7 ELSE 5 END AS BIGINT) AS delay
-         |  FROM (SELECT DISTINCT doc_id % 10 AS h FROM documents)),
-         |r AS (SELECT u.url, u.host, dl.delay,
-         |    CAST(row_number() OVER (PARTITION BY u.host
-         |      ORDER BY u.url) - 1 AS BIGINT) AS slot
-         |  FROM u JOIN dl ON dl.h = u.h)
-         |SELECT url, host, delay, slot,
-         |  CAST(slot * delay AS BIGINT) AS fetch_at FROM r""".stripMargin,
-
-    // q234: the q156 lattice crossed with the ten thresholds, survival
-    // counts per cut.
-    "q234_filter_calibration" ->
-      (s"WITH $backoffLmCtes,\n" +
-        raw"""scored AS (SELECT doc_id,
-           |  CAST(floor(CAST(n_tri AS DOUBLE) * 1000000 / n_pos)
-           |    AS BIGINT) AS lm_fit_ppm FROM stats),
-           |wt AS (SELECT s.doc_id, s.lm_fit_ppm,
-           |    CAST(len(str_split(trim(d.text), ' ')) AS BIGINT)
-           |      AS n_tok
-           |  FROM scored s JOIN documents d ON d.doc_id = s.doc_id),
-           |th AS (SELECT CAST(unnest(range(0, 10)) * 100000 AS BIGINT)
-           |  AS threshold)
-           |SELECT th.threshold, CAST(count(*) AS BIGINT) AS n_kept,
-           |  CAST(sum(wt.n_tok) AS BIGINT) AS tok_kept
-           |FROM wt, th WHERE wt.lm_fit_ppm >= th.threshold
-           |GROUP BY th.threshold""".stripMargin),
-
-    // q235: paths closed-form from heap arithmetic — leaves are nodes
-    // k with 2k+1 >= m, ancestors by two unrolled (k-1)//2 steps (the
-    // 7-node cap bounds depth at 3) — never walking the pointers.
-    "q235_tree_paths" ->
-      raw"""WITH d AS (SELECT doc_id, str_split(trim(text), ' ') AS w
-         |  FROM documents),
-         |g AS (SELECT doc_id, w, CAST(least(7, len(w)) AS INTEGER) AS m
-         |  FROM d WHERE len(w) >= 1),
-         |l AS (SELECT doc_id, w, m,
-         |    unnest(list_filter(range(0, m), k -> 2 * k + 1 >= m)) AS k
-         |  FROM g),
-         |p AS (SELECT doc_id, w, CAST(k AS BIGINT) AS leaf,
-         |    CASE WHEN k > 0 THEN (k - 1) // 2 ELSE -1 END AS p1
-         |  FROM l),
-         |q AS (SELECT *, CASE WHEN p1 > 0 THEN (p1 - 1) // 2 ELSE -1
-         |    END AS p2 FROM p)
-         |SELECT doc_id AS conv, leaf AS leaf_id,
-         |  CAST(CASE WHEN p1 = -1 THEN 1 WHEN p2 = -1 THEN 2 ELSE 3
-         |    END AS INTEGER) AS depth,
-         |  CASE WHEN p1 = -1 THEN CAST(leaf AS VARCHAR)
-         |       WHEN p2 = -1 THEN p1 || ' ' || leaf
-         |       ELSE p2 || ' ' || p1 || ' ' || leaf END AS path_ids,
-         |  CASE WHEN p1 = -1 THEN w[leaf + 1]
-         |       WHEN p2 = -1 THEN w[p1 + 1] || ' ' || w[leaf + 1]
-         |       ELSE w[p2 + 1] || ' ' || w[p1 + 1] || ' ' ||
-         |         w[leaf + 1] END AS path_text
-         |FROM q""".stripMargin,
-
-    // q236: the same candidate-start probes on list ops.
-    "q236_phrase_search" ->
-      raw"""WITH d AS (SELECT doc_id, str_split(trim(text), ' ') AS w
-         |  FROM documents),
-         |m AS (SELECT doc_id, CASE WHEN len(w) >= 2 THEN
-         |    list_filter(range(1, len(w)), p ->
-         |      w[p] = 'merge' AND w[p + 1] = 'slow')
-         |    ELSE [] END AS hits FROM d)
-         |SELECT doc_id, CAST(len(hits) AS INTEGER) AS n_matches,
-         |  CAST(hits[1] AS INTEGER) AS first_pos
-         |FROM m WHERE len(hits) > 0""".stripMargin,
-
-    // q237: the same gram builder on list ops, seen-set via IN.
-    "q237_ngram_novelty" ->
-      raw"""WITH d AS (SELECT doc_id, str_split(trim(text), ' ') AS w
-         |  FROM documents),
-         |g AS (SELECT doc_id, unnest(list_transform(
-         |    range(1, len(w) - 1), p ->
-         |      array_to_string(w[p:p + 2], ' '))) AS g
-         |  FROM d WHERE len(w) >= 3),
-         |ref AS (SELECT DISTINCT g FROM g WHERE doc_id % 3 <> 0),
-         |tg AS (SELECT doc_id, g FROM g WHERE doc_id % 3 = 0),
-         |sn AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_seen
-         |  FROM tg WHERE g IN (SELECT g FROM ref) GROUP BY doc_id),
-         |al AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams
-         |  FROM tg GROUP BY doc_id)
-         |SELECT al.doc_id, al.n_grams,
-         |  COALESCE(sn.n_seen, 0) AS n_seen,
-         |  CAST(floor(CAST(al.n_grams - COALESCE(sn.n_seen, 0)
-         |    AS DOUBLE) * 1000000 / al.n_grams) AS BIGINT)
-         |    AS novelty_ppm
-         |FROM al LEFT JOIN sn ON sn.doc_id = al.doc_id""".stripMargin,
-
-    // q106's plan over THREE queries at once: per-query probe lists and
-    // ADC sums, per-query top-5 (rank on the raw sum, id tie-break).
-    "q119_ivfpq_batch_probe" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |don AS (SELECT vec_id AS did, v AS dv FROM e
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e
-        |  WHERE vec_id IN (0, 1, 2)),
-        |fulld AS (SELECT e.vec_id, d.did,
-        |  list_reduce(list_transform(range(1, len(e.v) + 1),
-        |    j -> (e.v[j] - d.dv[j]) * (e.v[j] - d.dv[j])), (x, y) -> x + y) AS dd
-        |  FROM e CROSS JOIN don d),
-        |asg AS (SELECT vec_id, did AS lst FROM fulld
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) = 1),
-        |pl AS (SELECT q.query_id, d.did AS lst FROM don d CROSS JOIN q
-        |  QUALIFY row_number() OVER (PARTITION BY q.query_id
-        |    ORDER BY list_reduce(list_transform(range(1, len(d.dv) + 1),
-        |      j -> (d.dv[j] - q.qv[j]) * (d.dv[j] - q.qv[j])), (x, y) -> x + y),
-        |      d.did) <= 4),
-        |cand AS (SELECT p.query_id, a.vec_id FROM pl p JOIN asg a ON a.lst = p.lst),
-        |sd AS (SELECT e.vec_id, t.j, d.did,
-        |  list_reduce(list_transform(range(1, 9), i ->
-        |    (e.v[t.j * 8 + i] - d.dv[t.j * 8 + i]) *
-        |    (e.v[t.j * 8 + i] - d.dv[t.j * 8 + i])), (x, y) -> x + y) AS s
-        |  FROM e CROSS JOIN range(8) t(j) CROSS JOIN don d),
-        |codes AS (SELECT vec_id, j, did AS code FROM sd
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-        |    ORDER BY s ASC, did ASC) = 1),
-        |qt AS (SELECT q.query_id, t.j, d.did,
-        |  list_reduce(list_transform(range(1, 9), i ->
-        |    (q.qv[t.j * 8 + i] - d.dv[t.j * 8 + i]) *
-        |    (q.qv[t.j * 8 + i] - d.dv[t.j * 8 + i])), (x, y) -> x + y) AS s
-        |  FROM q CROSS JOIN range(8) t(j) CROSS JOIN don d),
-        |adc AS (SELECT c.query_id, co.vec_id, sum(q2.s) AS a0
-        |  FROM codes co JOIN cand c ON c.vec_id = co.vec_id
-        |  JOIN qt q2 ON q2.query_id = c.query_id AND q2.j = co.j
-        |    AND q2.did = co.code
-        |  GROUP BY c.query_id, co.vec_id)
-        |SELECT query_id, vec_id, round(a0, 6) AS adc FROM adc
-        |QUALIFY row_number() OVER (PARTITION BY query_id
-        |  ORDER BY a0 ASC, vec_id ASC) <= 5""".stripMargin,
-
-    // Residual IVF-PQ: centroids = hash ranks 1..16, donors = ranks
-    // 17..32 residualized against THEIR nearest centroid; every vector's
-    // codes quantize v − c(list); the probe's per-list ADC tables measure
-    // (q − c_l) against the donor residuals.
-    "q118_ivfpq_residual" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |cen AS (SELECT vec_id AS cid, v AS cv FROM e
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |don AS (SELECT vec_id AS did, v AS dv FROM e
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16 OFFSET 16),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-        |fulld AS (SELECT e.vec_id, c.cid,
-        |  list_reduce(list_transform(range(1, len(e.v) + 1),
-        |    j -> (e.v[j] - c.cv[j]) * (e.v[j] - c.cv[j])), (x, y) -> x + y) AS dd
-        |  FROM e CROSS JOIN cen c),
-        |asg AS (SELECT vec_id, cid AS lst FROM fulld
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, cid) = 1),
-        |res AS (SELECT e.vec_id, a.lst,
-        |  list_transform(range(1, len(e.v) + 1), j -> e.v[j] - c.cv[j]) AS r
-        |  FROM e JOIN asg a USING (vec_id) JOIN cen c ON c.cid = a.lst),
-        |dres AS (SELECT d.did, r.r AS rd FROM don d JOIN res r ON r.vec_id = d.did),
-        |sd AS (SELECT r.vec_id, t.j, d.did,
-        |  list_reduce(list_transform(range(1, 9), i ->
-        |    (r.r[t.j * 8 + i] - d.rd[t.j * 8 + i]) *
-        |    (r.r[t.j * 8 + i] - d.rd[t.j * 8 + i])), (x, y) -> x + y) AS s
-        |  FROM res r CROSS JOIN range(8) t(j) CROSS JOIN dres d),
-        |codes AS (SELECT vec_id, j, did AS code FROM sd
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-        |    ORDER BY s ASC, did ASC) = 1),
-        |pl AS (SELECT c.cid AS lst, c.cv FROM cen c CROSS JOIN q
-        |  ORDER BY list_reduce(list_transform(range(1, len(cv) + 1),
-        |    j -> (cv[j] - qv[j]) * (cv[j] - qv[j])), (x, y) -> x + y), cid LIMIT 4),
-        |qt AS (SELECT p.lst, t.j, d.did,
-        |  list_reduce(list_transform(range(1, 9), i ->
-        |    ((qv[t.j * 8 + i] - p.cv[t.j * 8 + i]) - d.rd[t.j * 8 + i]) *
-        |    ((qv[t.j * 8 + i] - p.cv[t.j * 8 + i]) - d.rd[t.j * 8 + i])),
-        |    (x, y) -> x + y) AS s
-        |  FROM pl p CROSS JOIN q CROSS JOIN range(8) t(j) CROSS JOIN dres d),
-        |adc AS (SELECT c2.vec_id, sum(q2.s) AS adc
-        |  FROM codes c2 JOIN asg a ON a.vec_id = c2.vec_id
-        |  JOIN pl ON pl.lst = a.lst
-        |  JOIN qt q2 ON q2.lst = a.lst AND q2.j = c2.j AND q2.did = c2.code
-        |  GROUP BY c2.vec_id)
-        |SELECT vec_id, round(adc, 6) AS adc
-        |FROM adc ORDER BY adc ASC, vec_id LIMIT 10""".stripMargin,
-
-    // q116's kNN edges thresholded on the RAW cosine, recursive-CTE
-    // min-label reachability (q102's CC oracle shape), singletons = own id.
-    "q117_embedding_clusters" ->
-      """WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |don AS (SELECT vec_id AS did, v AS dv FROM e
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |dist AS (SELECT e.vec_id, d.did,
-        |  list_reduce(list_transform(range(1, len(e.v) + 1),
-        |    j -> (e.v[j] - d.dv[j]) * (e.v[j] - d.dv[j])), (x, y) -> x + y) AS dd
-        |  FROM e CROSS JOIN don d),
-        |asg AS (SELECT vec_id, did AS lst FROM dist
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) = 1),
-        |pl AS (SELECT vec_id, did AS lst FROM dist
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) <= 4),
-        |cand AS (SELECT p.vec_id AS id1, a.vec_id AS id2
-        |  FROM pl p JOIN asg a ON a.lst = p.lst WHERE a.vec_id <> p.vec_id),
-        |cs AS (SELECT c.id1, c.id2,
-        |  list_reduce(list_transform(range(1, len(a.v) + 1),
-        |    j -> a.v[j] * b.v[j]), (x, y) -> x + y) AS dp,
-        |  list_reduce(list_transform(range(1, len(a.v) + 1),
-        |    j -> a.v[j] * a.v[j]), (x, y) -> x + y) AS na,
-        |  list_reduce(list_transform(range(1, len(b.v) + 1),
-        |    j -> b.v[j] * b.v[j]), (x, y) -> x + y) AS nb
-        |  FROM cand c JOIN e a ON a.vec_id = c.id1 JOIN e b ON b.vec_id = c.id2),
-        |knn AS (SELECT id1, id2, dp / (sqrt(na) * sqrt(nb)) AS cos FROM cs
-        |  QUALIFY row_number() OVER (PARTITION BY id1
-        |    ORDER BY dp / (sqrt(na) * sqrt(nb)) DESC, id2) <= 3),
-        |edg AS (SELECT id1, id2 FROM knn WHERE cos >= 0.42),
-        |und AS (SELECT id1, id2 FROM edg UNION ALL SELECT id2, id1 FROM edg),
-        |nodes AS (SELECT DISTINCT id1 AS id FROM und),
-        |reach(id, lab) AS (
-        |  SELECT id, id FROM nodes
-        |  UNION
-        |  SELECT u.id2, r.lab FROM reach r JOIN und u ON u.id1 = r.id),
-        |compp AS (SELECT id, min(lab) AS comp FROM reach GROUP BY id)
-        |SELECT e.vec_id, coalesce(c2.comp, e.vec_id) AS cluster
-        |FROM e LEFT JOIN compp c2 ON c2.id = e.vec_id""".stripMargin,
-
-    // q117's cluster labels + per-(cluster, dim) mean centroid + cosine
-    // to it; the survivor is the per-cluster MIN cos (id tie-break).
-    "q131_semdedup_centroid" ->
-      """WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |don AS (SELECT vec_id AS did, v AS dv FROM e
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |dist AS (SELECT e.vec_id, d.did,
-        |  list_reduce(list_transform(range(1, len(e.v) + 1),
-        |    j -> (e.v[j] - d.dv[j]) * (e.v[j] - d.dv[j])), (x, y) -> x + y) AS dd
-        |  FROM e CROSS JOIN don d),
-        |asg AS (SELECT vec_id, did AS lst FROM dist
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) = 1),
-        |pl AS (SELECT vec_id, did AS lst FROM dist
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) <= 4),
-        |cand AS (SELECT p.vec_id AS id1, a.vec_id AS id2
-        |  FROM pl p JOIN asg a ON a.lst = p.lst WHERE a.vec_id <> p.vec_id),
-        |cs AS (SELECT c.id1, c.id2,
-        |  list_reduce(list_transform(range(1, len(a.v) + 1),
-        |    j -> a.v[j] * b.v[j]), (x, y) -> x + y) AS dp,
-        |  list_reduce(list_transform(range(1, len(a.v) + 1),
-        |    j -> a.v[j] * a.v[j]), (x, y) -> x + y) AS na,
-        |  list_reduce(list_transform(range(1, len(b.v) + 1),
-        |    j -> b.v[j] * b.v[j]), (x, y) -> x + y) AS nb
-        |  FROM cand c JOIN e a ON a.vec_id = c.id1 JOIN e b ON b.vec_id = c.id2),
-        |knn AS (SELECT id1, id2, dp / (sqrt(na) * sqrt(nb)) AS cos FROM cs
-        |  QUALIFY row_number() OVER (PARTITION BY id1
-        |    ORDER BY dp / (sqrt(na) * sqrt(nb)) DESC, id2) <= 3),
-        |edg AS (SELECT id1, id2 FROM knn WHERE cos >= 0.42),
-        |und AS (SELECT id1, id2 FROM edg UNION ALL SELECT id2, id1 FROM edg),
-        |nodes AS (SELECT DISTINCT id1 AS id FROM und),
-        |reach(id, lab) AS (
-        |  SELECT id, id FROM nodes
-        |  UNION
-        |  SELECT u.id2, r.lab FROM reach r JOIN und u ON u.id1 = r.id),
-        |compp AS (SELECT id, min(lab) AS comp FROM reach GROUP BY id),
-        |lab2 AS (SELECT e.vec_id, coalesce(c2.comp, e.vec_id) AS cluster, e.v
-        |  FROM e LEFT JOIN compp c2 ON c2.id = e.vec_id),
-        |cent AS (SELECT cluster, t.j, avg(v[t.j]) AS m
-        |  FROM lab2 CROSS JOIN range(1, 65) t(j) GROUP BY cluster, t.j),
-        |sc AS (SELECT l.vec_id, l.cluster,
-        |  sum(l.v[c.j] * c.m) AS dp, sum(c.m * c.m) AS nc
-        |  FROM lab2 l JOIN cent c ON c.cluster = l.cluster
-        |  GROUP BY l.vec_id, l.cluster),
-        |nv AS (SELECT vec_id,
-        |  list_reduce(list_transform(range(1, len(v) + 1),
-        |    j -> v[j] * v[j]), (x, y) -> x + y) AS na FROM e)
-        |SELECT s2.vec_id, s2.cluster FROM sc s2 JOIN nv ON nv.vec_id = s2.vec_id
-        |QUALIFY row_number() OVER (PARTITION BY s2.cluster
-        |  ORDER BY s2.dp / (sqrt(nv.na) * sqrt(s2.nc)) ASC, s2.vec_id) = 1""".stripMargin,
-
-    // q117's cluster labels + the Knuth hash on the LABEL deciding the
-    // split — near-dups share a cluster, so they share a split.
-    "q132_leakage_split" ->
-      """WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |don AS (SELECT vec_id AS did, v AS dv FROM e
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |dist AS (SELECT e.vec_id, d.did,
-        |  list_reduce(list_transform(range(1, len(e.v) + 1),
-        |    j -> (e.v[j] - d.dv[j]) * (e.v[j] - d.dv[j])), (x, y) -> x + y) AS dd
-        |  FROM e CROSS JOIN don d),
-        |asg AS (SELECT vec_id, did AS lst FROM dist
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) = 1),
-        |pl AS (SELECT vec_id, did AS lst FROM dist
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) <= 4),
-        |cand AS (SELECT p.vec_id AS id1, a.vec_id AS id2
-        |  FROM pl p JOIN asg a ON a.lst = p.lst WHERE a.vec_id <> p.vec_id),
-        |cs AS (SELECT c.id1, c.id2,
-        |  list_reduce(list_transform(range(1, len(a.v) + 1),
-        |    j -> a.v[j] * b.v[j]), (x, y) -> x + y) AS dp,
-        |  list_reduce(list_transform(range(1, len(a.v) + 1),
-        |    j -> a.v[j] * a.v[j]), (x, y) -> x + y) AS na,
-        |  list_reduce(list_transform(range(1, len(b.v) + 1),
-        |    j -> b.v[j] * b.v[j]), (x, y) -> x + y) AS nb
-        |  FROM cand c JOIN e a ON a.vec_id = c.id1 JOIN e b ON b.vec_id = c.id2),
-        |knn AS (SELECT id1, id2, dp / (sqrt(na) * sqrt(nb)) AS cos FROM cs
-        |  QUALIFY row_number() OVER (PARTITION BY id1
-        |    ORDER BY dp / (sqrt(na) * sqrt(nb)) DESC, id2) <= 3),
-        |edg AS (SELECT id1, id2 FROM knn WHERE cos >= 0.42),
-        |und AS (SELECT id1, id2 FROM edg UNION ALL SELECT id2, id1 FROM edg),
-        |nodes AS (SELECT DISTINCT id1 AS id FROM und),
-        |reach(id, lab) AS (
-        |  SELECT id, id FROM nodes
-        |  UNION
-        |  SELECT u.id2, r.lab FROM reach r JOIN und u ON u.id1 = r.id),
-        |compp AS (SELECT id, min(lab) AS comp FROM reach GROUP BY id)
-        |SELECT e.vec_id, coalesce(c2.comp, e.vec_id) AS cluster,
-        |  CASE WHEN ((((coalesce(c2.comp, e.vec_id) % 2147483648)
-        |      + 2147483648) % 2147483648) * 2654435761) % 4294967296
-        |      % 1000 < 200
-        |    THEN 'val' ELSE 'train' END AS split
-        |FROM e LEFT JOIN compp c2 ON c2.id = e.vec_id""".stripMargin,
-
-    // Greedy k-center unrolled: seed by the Knuth hash, then 7 identical
-    // stages — running min-distance update (least + the same ascending
-    // squared-L2 list_reduce the engine loop computes) and argmax with an
-    // id tie-break, each stage excluding the id it just picked.
-    "q137_kcenter_sample" -> {
-      def dist(a: String, b: String) =
-        s"list_reduce(list_transform(range(1, len($a.v) + 1), " +
-          s"j -> ($a.v[j] - $b.v[j]) * ($a.v[j] - $b.v[j])), (x, y) -> x + y)"
-      val stages = (2 to 7).map { i =>
-        s"""d$i AS (SELECT d.vec_id, d.v, least(d.dmin, ${dist("d", "p")}) AS dmin
-           |  FROM d${i - 1} d CROSS JOIN p${i - 1} p WHERE d.vec_id <> p.vec_id),
-           |p$i AS (SELECT vec_id, v, dmin FROM d$i ORDER BY dmin DESC, vec_id LIMIT 1)""".stripMargin
-      }.mkString(",\n")
-      val tail = (1 to 7).map { i =>
-        s"UNION ALL SELECT $i, vec_id, round(sqrt(dmin), 6) FROM p$i"
-      }.mkString("\n")
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-         |  FROM embeddings WHERE embedding IS NOT NULL),
-         |seed AS (SELECT vec_id, v FROM e
-         |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 1),
-         |d1 AS (SELECT e.vec_id, e.v, ${dist("e", "s")} AS dmin
-         |  FROM e CROSS JOIN seed s WHERE e.vec_id <> s.vec_id),
-         |p1 AS (SELECT vec_id, v, dmin FROM d1 ORDER BY dmin DESC, vec_id LIMIT 1),
-         |$stages
-         |SELECT CAST(0 AS INTEGER) AS pick, s.vec_id, 0.0::DOUBLE AS radius FROM seed s
-         |$tail""".stripMargin
-    },
-
-    // DSIR end-to-end: hashed unigram+bigram buckets via the q24 poly
-    // fold, add-1 smoothed log-ratio per bucket (doubles forced — bare
-    // literals are DECIMAL), per-doc weight, then the rounded Gumbel
-    // key from the Knuth hash and top-32 with the id tie-break.
-    "q138_dsir_resample" -> {
-      def poly(s: String) =
-        s"list_reduce(list_prepend(0::BIGINT, list_transform(" +
-          s"regexp_extract_all($s, '.'), c -> ascii(c)::BIGINT)), " +
-          s"(acc, ch) -> (acc * 31 + ch) % 1000000007)"
-      s"""WITH base AS (SELECT doc_id,
-         |    regexp_split_to_array(trim(lower(text)), '\\s+') AS w
-         |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-         |fe AS (SELECT doc_id, unnest(list_concat(
-         |    list_transform(w, s -> ${poly("s")} % 1024),
-         |    CASE WHEN len(w) < 2 THEN CAST([] AS BIGINT[])
-         |         ELSE list_transform(range(1, len(w)),
-         |           j -> ${poly("(w[j] || ' ' || w[j+1])")} % 1024) END)) AS b
-         |  FROM base),
-         |tc AS (SELECT b, count(*) AS ct FROM fe WHERE doc_id % 17 = 0
-         |  GROUP BY 1),
-         |ri AS (SELECT doc_id, b FROM fe WHERE doc_id % 17 <> 0),
-         |rc AS (SELECT b, count(*) AS cr FROM ri GROUP BY 1),
-         |tt AS (SELECT CAST(sum(ct) AS DOUBLE) AS t FROM tc),
-         |rt AS (SELECT CAST(sum(cr) AS DOUBLE) AS t FROM rc),
-         |lr AS (SELECT coalesce(tc.b, rc.b) AS b,
-         |    ln((coalesce(ct, 0) + 1.0::DOUBLE) / (tt.t + 1024.0::DOUBLE))
-         |  - ln((coalesce(cr, 0) + 1.0::DOUBLE) / (rt.t + 1024.0::DOUBLE)) AS lr
-         |  FROM tc FULL JOIN rc ON tc.b = rc.b CROSS JOIN tt CROSS JOIN rt),
-         |dc AS (SELECT doc_id, b, count(*) AS c FROM ri GROUP BY 1, 2),
-         |wt AS (SELECT doc_id, sum(c * lr) AS weight,
-         |    CAST(sum(c) AS BIGINT) AS n_features
-         |  FROM dc JOIN lr USING (b) GROUP BY 1)
-         |SELECT doc_id,
-         |  round(weight - ln(-ln(((((((doc_id % 2147483648) + 2147483648)
-         |    % 2147483648) * 2654435761) % 4294967296) + 1.0::DOUBLE)
-         |    / 4294967297.0::DOUBLE)), 6) AS gumbel_key,
-         |  round(weight, 6) AS weight, n_features
-         |FROM wt ORDER BY gumbel_key DESC, doc_id LIMIT 32""".stripMargin
-    },
-
-    // HLL registers: the q24 poly fold re-scrambled by affine salts
-    // 100/101 (same family as the minhash permutations), bucket mod 256,
-    // rho from the unpadded binary length — all integer.
-    "q139_hll_registers" -> {
-      def poly(s: String) =
-        s"list_reduce(list_prepend(0::BIGINT, list_transform(" +
-          s"regexp_extract_all($s, '.'), c -> ascii(c)::BIGINT)), " +
-          s"(acc, ch) -> (acc * 31 + ch) % 1000000007)"
-      s"""WITH tok AS (SELECT unnest(
-         |    regexp_split_to_array(trim(lower(text)), '\\s+')) AS s
-         |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-         |h AS (SELECT ${poly("s")} AS base FROM tok),
-         |hh AS (SELECT
-         |    ((201 * 104729) % 1000000007 * base + (100 * 12582917 + 7))
-         |      % 1000000007 AS a1,
-         |    ((203 * 104729) % 1000000007 * base + (101 * 12582917 + 7))
-         |      % 1000000007 AS a2 FROM h),
-         |mx AS (SELECT (a1 * a1 % 1000000007 + a1) % 1000000007 AS b1,
-         |    (a2 * a2 % 1000000007 + a2) % 1000000007 AS b2 FROM hh)
-         |SELECT b1 % 256 AS bucket,
-         |  max(CASE WHEN b2 = 0 THEN 31 ELSE 31 - length(bin(b2)) END)
-         |    AS rho_max
-         |FROM mx GROUP BY 1""".stripMargin
-    },
-
-    // HLL estimate: 2^-rho via an integer shift (exact dyadic double),
-    // alpha_m in the engine's exact op order, linear-counting branch on
-    // the bit-identical raw estimate; exact distinct alongside.
-    "q140_hll_estimate" -> {
-      def poly(s: String) =
-        s"list_reduce(list_prepend(0::BIGINT, list_transform(" +
-          s"regexp_extract_all($s, '.'), c -> ascii(c)::BIGINT)), " +
-          s"(acc, ch) -> (acc * 31 + ch) % 1000000007)"
-      s"""WITH tok AS (SELECT unnest(
-         |    regexp_split_to_array(trim(lower(text)), '\\s+')) AS s
-         |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-         |h AS (SELECT ${poly("s")} AS base FROM tok),
-         |hh AS (SELECT
-         |    ((201 * 104729) % 1000000007 * base + (100 * 12582917 + 7))
-         |      % 1000000007 AS a1,
-         |    ((203 * 104729) % 1000000007 * base + (101 * 12582917 + 7))
-         |      % 1000000007 AS a2 FROM h),
-         |mx AS (SELECT (a1 * a1 % 1000000007 + a1) % 1000000007 AS b1,
-         |    (a2 * a2 % 1000000007 + a2) % 1000000007 AS b2 FROM hh),
-         |reg AS (SELECT b1 % 256 AS bucket,
-         |    max(CASE WHEN b2 = 0 THEN 31 ELSE 31 - length(bin(b2)) END)
-         |      AS rho_max FROM mx GROUP BY 1),
-         |ag AS (SELECT count(*) AS present,
-         |    sum(1.0::DOUBLE / (1::BIGINT << rho_max)) AS sm FROM reg),
-         |raws AS (SELECT 256 - present AS v_zero,
-         |    (((0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE /
-         |      256.0::DOUBLE)) * 256.0::DOUBLE) * 256.0::DOUBLE)
-         |      / (sm + CAST(256 - present AS DOUBLE)) AS raw FROM ag),
-         |ex AS (SELECT count(DISTINCT s) AS exact_distinct FROM tok)
-         |SELECT CAST(v_zero AS BIGINT) AS v_zero,
-         |  round(CASE WHEN raw <= 640.0::DOUBLE AND v_zero > 0
-         |    THEN 256.0::DOUBLE * ln(256.0::DOUBLE / v_zero)
-         |    ELSE raw END, 6) AS estimate,
-         |  exact_distinct
-         |FROM raws CROSS JOIN ex""".stripMargin
-    },
-
-    // Count-min registers: row i rehashes with affine salt 200+i; the
-    // cell is the double-mod (perm % p) % 256 — exactly the engine's.
-    "q141_cms_registers" -> {
-      def poly(s: String) =
-        s"list_reduce(list_prepend(0::BIGINT, list_transform(" +
-          s"regexp_extract_all($s, '.'), c -> ascii(c)::BIGINT)), " +
-          s"(acc, ch) -> (acc * 31 + ch) % 1000000007)"
-      s"""WITH tok AS (SELECT unnest(
-         |    regexp_split_to_array(trim(lower(text)), '\\s+')) AS s
-         |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-         |h AS (SELECT ${poly("s")} AS base FROM tok),
-         |cells AS (SELECT i AS hash_row,
-         |    ((2 * (200 + i) + 1) * 104729 % 1000000007 * base +
-         |      ((200 + i) * 12582917 + 7)) % 1000000007 AS pm
-         |  FROM h CROSS JOIN range(4) t(i))
-         |SELECT hash_row,
-         |  (pm * pm % 1000000007 + pm) % 1000000007 % 256 AS hash_col,
-         |  count(*) AS cnt
-         |FROM cells GROUP BY 1, 2""".stripMargin
-    },
-
-    // Per-source HLL: q140's chain with GROUP BY source carried through
-    // registers, estimate, and the exact distinct comparison.
-    "q142_hll_by_source" -> {
-      def poly(s: String) =
-        s"list_reduce(list_prepend(0::BIGINT, list_transform(" +
-          s"regexp_extract_all($s, '.'), c -> ascii(c)::BIGINT)), " +
-          s"(acc, ch) -> (acc * 31 + ch) % 1000000007)"
-      s"""WITH tok AS (SELECT source, unnest(
-         |    regexp_split_to_array(trim(lower(text)), '\\s+')) AS s
-         |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-         |h AS (SELECT source, ${poly("s")} AS base FROM tok),
-         |hh AS (SELECT source,
-         |    ((201 * 104729) % 1000000007 * base + (100 * 12582917 + 7))
-         |      % 1000000007 AS a1,
-         |    ((203 * 104729) % 1000000007 * base + (101 * 12582917 + 7))
-         |      % 1000000007 AS a2 FROM h),
-         |mx AS (SELECT source,
-         |    (a1 * a1 % 1000000007 + a1) % 1000000007 AS b1,
-         |    (a2 * a2 % 1000000007 + a2) % 1000000007 AS b2 FROM hh),
-         |reg AS (SELECT source, b1 % 256 AS bucket,
-         |    max(CASE WHEN b2 = 0 THEN 31 ELSE 31 - length(bin(b2)) END)
-         |      AS rho_max FROM mx GROUP BY 1, 2),
-         |ag AS (SELECT source, count(*) AS present,
-         |    sum(1.0::DOUBLE / (1::BIGINT << rho_max)) AS sm
-         |  FROM reg GROUP BY 1),
-         |raws AS (SELECT source, 256 - present AS v_zero,
-         |    (((0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE /
-         |      256.0::DOUBLE)) * 256.0::DOUBLE) * 256.0::DOUBLE)
-         |      / (sm + CAST(256 - present AS DOUBLE)) AS raw FROM ag),
-         |ex AS (SELECT source, count(DISTINCT s) AS exact_distinct
-         |  FROM tok GROUP BY 1)
-         |SELECT r.source, CAST(v_zero AS BIGINT) AS v_zero,
-         |  round(CASE WHEN raw <= 640.0::DOUBLE AND v_zero > 0
-         |    THEN 256.0::DOUBLE * ln(256.0::DOUBLE / v_zero)
-         |    ELSE raw END, 6) AS estimate,
-         |  exact_distinct
-         |FROM raws r JOIN ex USING (source)""".stripMargin
-    },
-
-    // CMS probes: q141's register CTE + the same salt-200+i cell hash on
-    // the 5 most frequent tokens, est = min over rows (absent cell = 0).
-    "q143_cms_estimate" -> {
-      def poly(s: String) =
-        s"list_reduce(list_prepend(0::BIGINT, list_transform(" +
-          s"regexp_extract_all($s, '.'), c -> ascii(c)::BIGINT)), " +
-          s"(acc, ch) -> (acc * 31 + ch) % 1000000007)"
-      s"""WITH tok AS (SELECT unnest(
-         |    regexp_split_to_array(trim(lower(text)), '\\s+')) AS s
-         |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-         |h AS (SELECT ${poly("s")} AS base FROM tok),
-         |cells AS (SELECT i AS hash_row,
-         |    ((2 * (200 + i) + 1) * 104729 % 1000000007 * base +
-         |      ((200 + i) * 12582917 + 7)) % 1000000007 AS pm
-         |  FROM h CROSS JOIN range(4) t(i)),
-         |reg AS (SELECT hash_row,
-         |    (pm * pm % 1000000007 + pm) % 1000000007 % 256 AS hash_col,
-         |    count(*) AS cnt FROM cells GROUP BY 1, 2),
-         |top AS (SELECT s AS key, count(*) AS true_cnt FROM tok
-         |  GROUP BY 1 ORDER BY true_cnt DESC, key ASC LIMIT 5),
-         |pc AS (SELECT key, true_cnt, i AS hash_row,
-         |    (pp * pp % 1000000007 + pp) % 1000000007 % 256 AS hash_col
-         |  FROM (SELECT key, true_cnt, i,
-         |      ((2 * (200 + i) + 1) * 104729 % 1000000007 * ${poly("key")} +
-         |        ((200 + i) * 12582917 + 7)) % 1000000007 AS pp
-         |    FROM top CROSS JOIN range(4) t(i)))
-         |SELECT key, min(coalesce(cnt, 0)) AS est, true_cnt
-         |FROM pc LEFT JOIN reg USING (hash_row, hash_col)
-         |GROUP BY key, true_cnt""".stripMargin
-    },
-
-    // HLL intersection: the q139 register CTE per document-id-parity
-    // side, the union by register max, and three identical estimate
-    // blocks combined by inclusion-exclusion on the ROUNDED values.
-    "q144_hll_intersect" -> {
-      def poly(s: String) =
-        s"list_reduce(list_prepend(0::BIGINT, list_transform(" +
-          s"regexp_extract_all($s, '.'), c -> ascii(c)::BIGINT)), " +
-          s"(acc, ch) -> (acc * 31 + ch) % 1000000007)"
-      def side(n: String, pred: String) =
-        s"""tok_$n AS (SELECT unnest(
-           |    regexp_split_to_array(trim(lower(text)), '\\s+')) AS s
-           |  FROM documents
-           |  WHERE text IS NOT NULL AND trim(text) <> '' AND $pred),
-           |h_$n AS (SELECT ${poly("s")} AS base FROM tok_$n),
-           |hh_$n AS (SELECT
-           |    ((201 * 104729) % 1000000007 * base + (100 * 12582917 + 7))
-           |      % 1000000007 AS a1,
-           |    ((203 * 104729) % 1000000007 * base + (101 * 12582917 + 7))
-           |      % 1000000007 AS a2 FROM h_$n),
-           |mx_$n AS (SELECT (a1 * a1 % 1000000007 + a1) % 1000000007 AS b1,
-           |    (a2 * a2 % 1000000007 + a2) % 1000000007 AS b2 FROM hh_$n),
-           |reg_$n AS (SELECT b1 % 256 AS bucket,
-           |    max(CASE WHEN b2 = 0 THEN 31 ELSE 31 - length(bin(b2)) END)
-           |      AS rho_max FROM mx_$n GROUP BY 1)""".stripMargin
-      def est(reg: String, out: String) =
-        s"""ag_$out AS (SELECT count(*) AS present,
-           |    sum(1.0::DOUBLE / (1::BIGINT << rho_max)) AS sm FROM $reg),
-           |raw_$out AS (SELECT 256 - present AS vz,
-           |    (((0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE /
-           |      256.0::DOUBLE)) * 256.0::DOUBLE) * 256.0::DOUBLE)
-           |      / (sm + CAST(256 - present AS DOUBLE)) AS raw
-           |  FROM ag_$out),
-           |e_$out AS (SELECT round(CASE
-           |    WHEN raw <= 640.0::DOUBLE AND vz > 0
-           |    THEN 256.0::DOUBLE * ln(256.0::DOUBLE / vz)
-           |    ELSE raw END, 6) AS $out FROM raw_$out)""".stripMargin
-      s"""WITH ${side("a", "doc_id % 2 = 0")},
-         |${side("b", "doc_id % 2 <> 0")},
-         |reg_u AS (SELECT bucket, max(rho_max) AS rho_max FROM
-         |  (SELECT * FROM reg_a UNION ALL SELECT * FROM reg_b) GROUP BY 1),
-         |${est("reg_a", "est_a")},
-         |${est("reg_b", "est_b")},
-         |${est("reg_u", "est_union")}
-         |SELECT est_a, est_b, est_union,
-         |  round(greatest(0.0::DOUBLE, est_a + est_b - est_union), 6)
-         |    AS est_intersect
-         |FROM e_est_a CROSS JOIN e_est_b CROSS JOIN e_est_union""".stripMargin
-    },
-
-    // JL projection: sign = bit 30 of one LCG step over the (42, j, i)
-    // counter — identical to the engine's rpBucket hyperplanes; the
-    // ascending-i list_reduce reproduces the summation order, and the
-    // 1/sqrt(16) = 0.25 scale is exact dyadic.
-    "q145_random_project" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL)
-        |SELECT vec_id, j AS dim,
-        |  round(list_reduce(list_prepend(0.0::DOUBLE,
-        |    list_transform(range(1, len(v) + 1),
-        |      i -> CASE WHEN (((1103515245 * (42 * 1000003 + j * 8191 +
-        |          (i - 1)) + 12345) % 2147483648) // 1073741824) % 2 = 0
-        |        THEN v[i] ELSE -v[i] END)),
-        |    (acc, x) -> acc + x) * 0.25::DOUBLE, 6) AS y
-        |FROM e CROSS JOIN range(16) t(j)""".stripMargin,
-
-    // Covariance scatter in EXACT integers: entries quantized to the
-    // 2^20 lattice with half-up floor(x·2^20 + 0.5) — exact in double
-    // for float32 inputs and identical to the engine's kernel — then
-    // n·Σxy − Σx·Σy per (i, j), i <= j. DuckDB sums BIGINT into
-    // HUGEINT, so the combination is exact; the final cast back to
-    // BIGINT matches the engine's range-checked Long. No float rounding
-    // anywhere in the compared output.
-    "q146_embedding_covariance" ->
-      """WITH e AS (SELECT list_transform(CAST(embedding AS DOUBLE[]),
-        |    x -> CAST(floor(x * 1048576.0 + 0.5) AS BIGINT)) AS q
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |n AS (SELECT count(*) AS n FROM e),
-        |sx AS (SELECT i, sum(q[i + 1]) AS sx
-        |  FROM e CROSS JOIN range(64) t(i) GROUP BY 1),
-        |sxy AS (SELECT i, j, sum(q[i + 1] * q[j + 1]) AS sxy
-        |  FROM e CROSS JOIN range(64) a(i) CROSS JOIN range(64) b(j)
-        |  WHERE j >= i GROUP BY 1, 2)
-        |SELECT s.i, s.j,
-        |  CAST(n.n * s.sxy - xi.sx * xj.sx AS BIGINT) AS m2
-        |FROM sxy s CROSS JOIN n
-        |JOIN sx xi ON xi.i = s.i JOIN sx xj ON xj.i = s.j""".stripMargin,
-
-    // Per-source quality cut: q22's quality formula, then the same
-    // rank-based QUALIFY the engine's partitioned window computes —
-    // percent_rank is (rank-1)/(n-1) on identical ints in both engines.
-    "q147_quality_top_p" ->
-      """WITH d AS (SELECT doc_id, source, text,
-        |  regexp_split_to_array(trim(text), '\s+') AS toks
-        |  FROM documents WHERE text IS NOT NULL),
-        |m AS (SELECT doc_id, source, text,
-        |  length(regexp_replace(text, '[^[:punct:]]', '', 'g')) * 1.0
-        |    / length(text) AS pr,
-        |  len(list_filter(toks, t -> lower(t) IN ('the','a','an','and',
-        |    'or','of','to','in','is','it','for','on','with','as','at',
-        |    'by','this','that'))) * 1.0 / len(toks) AS sr
-        |  FROM d),
-        |q AS (SELECT doc_id, source,
-        |  round((least(length(text) / 500.0, 1.0)
-        |    + (1.0 - least(pr * 5.0, 1.0))
-        |    + least(sr * 4.0, 1.0)) / 3.0, 6) AS quality FROM m)
-        |SELECT doc_id, source, quality FROM q
-        |QUALIFY percent_rank() OVER (PARTITION BY source
-        |  ORDER BY quality ASC, doc_id ASC) >= 0.75""".stripMargin,
-
-    // Two full kNN+CC chains (suffix 1 = the vec_id % 7 <> 0 subset that
-    // produces the prior labels, suffix 2 = the full corpus), then the
-    // min-prior adoption per fresh cluster and the Knuth hash on the
-    // ADOPTED label — the exact recipe of leakageSafeSplitStable.
-    "q136_leakage_split_stable" ->
-      """WITH RECURSIVE
-        |e1 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL AND vec_id % 7 <> 0),
-        |don1 AS (SELECT vec_id AS did, v AS dv FROM e1
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |dist1 AS (SELECT e1.vec_id, d.did,
-        |  list_reduce(list_transform(range(1, len(e1.v) + 1),
-        |    j -> (e1.v[j] - d.dv[j]) * (e1.v[j] - d.dv[j])), (x, y) -> x + y) AS dd
-        |  FROM e1 CROSS JOIN don1 d),
-        |asg1 AS (SELECT vec_id, did AS lst FROM dist1
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) = 1),
-        |pl1 AS (SELECT vec_id, did AS lst FROM dist1
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) <= 4),
-        |cand1 AS (SELECT p.vec_id AS id1, a.vec_id AS id2
-        |  FROM pl1 p JOIN asg1 a ON a.lst = p.lst WHERE a.vec_id <> p.vec_id),
-        |cs1 AS (SELECT c.id1, c.id2,
-        |  list_reduce(list_transform(range(1, len(a.v) + 1),
-        |    j -> a.v[j] * b.v[j]), (x, y) -> x + y) AS dp,
-        |  list_reduce(list_transform(range(1, len(a.v) + 1),
-        |    j -> a.v[j] * a.v[j]), (x, y) -> x + y) AS na,
-        |  list_reduce(list_transform(range(1, len(b.v) + 1),
-        |    j -> b.v[j] * b.v[j]), (x, y) -> x + y) AS nb
-        |  FROM cand1 c JOIN e1 a ON a.vec_id = c.id1 JOIN e1 b ON b.vec_id = c.id2),
-        |knn1 AS (SELECT id1, id2, dp / (sqrt(na) * sqrt(nb)) AS cos FROM cs1
-        |  QUALIFY row_number() OVER (PARTITION BY id1
-        |    ORDER BY dp / (sqrt(na) * sqrt(nb)) DESC, id2) <= 3),
-        |edg1 AS (SELECT id1, id2 FROM knn1 WHERE cos >= 0.42),
-        |und1 AS (SELECT id1, id2 FROM edg1 UNION ALL SELECT id2, id1 FROM edg1),
-        |nodes1 AS (SELECT DISTINCT id1 AS id FROM und1),
-        |reach1(id, lab) AS (
-        |  SELECT id, id FROM nodes1
-        |  UNION
-        |  SELECT u.id2, r.lab FROM reach1 r JOIN und1 u ON u.id1 = r.id),
-        |comp1 AS (SELECT id, min(lab) AS comp FROM reach1 GROUP BY id),
-        |prior AS (SELECT e1.vec_id, coalesce(c.comp, e1.vec_id) AS label
-        |  FROM e1 LEFT JOIN comp1 c ON c.id = e1.vec_id),
-        |e2 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |don2 AS (SELECT vec_id AS did, v AS dv FROM e2
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |dist2 AS (SELECT e2.vec_id, d.did,
-        |  list_reduce(list_transform(range(1, len(e2.v) + 1),
-        |    j -> (e2.v[j] - d.dv[j]) * (e2.v[j] - d.dv[j])), (x, y) -> x + y) AS dd
-        |  FROM e2 CROSS JOIN don2 d),
-        |asg2 AS (SELECT vec_id, did AS lst FROM dist2
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) = 1),
-        |pl2 AS (SELECT vec_id, did AS lst FROM dist2
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) <= 4),
-        |cand2 AS (SELECT p.vec_id AS id1, a.vec_id AS id2
-        |  FROM pl2 p JOIN asg2 a ON a.lst = p.lst WHERE a.vec_id <> p.vec_id),
-        |cs2 AS (SELECT c.id1, c.id2,
-        |  list_reduce(list_transform(range(1, len(a.v) + 1),
-        |    j -> a.v[j] * b.v[j]), (x, y) -> x + y) AS dp,
-        |  list_reduce(list_transform(range(1, len(a.v) + 1),
-        |    j -> a.v[j] * a.v[j]), (x, y) -> x + y) AS na,
-        |  list_reduce(list_transform(range(1, len(b.v) + 1),
-        |    j -> b.v[j] * b.v[j]), (x, y) -> x + y) AS nb
-        |  FROM cand2 c JOIN e2 a ON a.vec_id = c.id1 JOIN e2 b ON b.vec_id = c.id2),
-        |knn2 AS (SELECT id1, id2, dp / (sqrt(na) * sqrt(nb)) AS cos FROM cs2
-        |  QUALIFY row_number() OVER (PARTITION BY id1
-        |    ORDER BY dp / (sqrt(na) * sqrt(nb)) DESC, id2) <= 3),
-        |edg2 AS (SELECT id1, id2 FROM knn2 WHERE cos >= 0.42),
-        |und2 AS (SELECT id1, id2 FROM edg2 UNION ALL SELECT id2, id1 FROM edg2),
-        |nodes2 AS (SELECT DISTINCT id1 AS id FROM und2),
-        |reach2(id, lab) AS (
-        |  SELECT id, id FROM nodes2
-        |  UNION
-        |  SELECT u.id2, r.lab FROM reach2 r JOIN und2 u ON u.id1 = r.id),
-        |comp2 AS (SELECT id, min(lab) AS comp FROM reach2 GROUP BY id),
-        |fresh AS (SELECT e2.vec_id, coalesce(c.comp, e2.vec_id) AS cluster
-        |  FROM e2 LEFT JOIN comp2 c ON c.id = e2.vec_id),
-        |adopted AS (SELECT f.cluster, min(p.label) AS adopt
-        |  FROM fresh f LEFT JOIN prior p ON p.vec_id = f.vec_id
-        |  GROUP BY f.cluster)
-        |SELECT f.vec_id, f.cluster, coalesce(a.adopt, f.cluster) AS label,
-        |  CASE WHEN ((((coalesce(a.adopt, f.cluster) % 2147483648)
-        |      + 2147483648) % 2147483648) * 2654435761) % 4294967296
-        |      % 1000 < 200
-        |    THEN 'val' ELSE 'train' END AS split
-        |FROM fresh f JOIN adopted a ON a.cluster = f.cluster""".stripMargin,
-
-    // q119's batched ADC probe at k=10 scored against the exact L2
-    // top-10 — recall = |approx ∩ exact| / 10 per query.
-    // Mirrors graft.geo.Ntv2.Grid.shiftSeconds/forward op-for-op: node
-    // values from the q134 fixture formula (exact in float32), fractional
-    // cell position from the same double arithmetic, bilinear terms and
-    // sum in the same order — identical IEEE doubles on both legs.
-    "q134_ntv2_shift" ->
-      """WITH pts AS (
-        |  SELECT i AS id,
-        |    (162000 + (i % 10) * 330 + 75) / 3600.0::DOUBLE AS lat_in,
-        |    -((230400 + (i // 10) * 330 + 75) / 3600.0::DOUBLE) AS lon_in
-        |  FROM range(100) t(i)),
-        |cell AS (
-        |  SELECT id, lon_in, lat_in,
-        |    (lat_in * 3600.0::DOUBLE - 162000) / 300.0::DOUBLE AS rf,
-        |    (-lon_in * 3600.0::DOUBLE - 230400) / 300.0::DOUBLE AS cf
-        |  FROM pts),
-        |frac AS (
-        |  SELECT id, lon_in, lat_in,
-        |    CAST(floor(rf) AS BIGINT) AS r0, CAST(floor(cf) AS BIGINT) AS c0,
-        |    rf - floor(rf) AS dr, cf - floor(cf) AS dc
-        |  FROM cell),
-        |bil AS (
-        |  SELECT id, lon_in, lat_in,
-        |    (((r0*3 + c0*5) % 41) / 64.0::DOUBLE) * (1 - dr) * (1 - dc)
-        |      + (((r0*3 + (c0+1)*5) % 41) / 64.0::DOUBLE) * (1 - dr) * dc
-        |      + ((((r0+1)*3 + c0*5) % 41) / 64.0::DOUBLE) * dr * (1 - dc)
-        |      + ((((r0+1)*3 + (c0+1)*5) % 41) / 64.0::DOUBLE) * dr * dc AS d_lat,
-        |    (((r0*7 + c0*11) % 37) / 64.0::DOUBLE) * (1 - dr) * (1 - dc)
-        |      + (((r0*7 + (c0+1)*11) % 37) / 64.0::DOUBLE) * (1 - dr) * dc
-        |      + ((((r0+1)*7 + c0*11) % 37) / 64.0::DOUBLE) * dr * (1 - dc)
-        |      + ((((r0+1)*7 + (c0+1)*11) % 37) / 64.0::DOUBLE) * dr * dc AS d_lon_w
-        |  FROM frac)
-        |SELECT id,
-        |  CAST(round((lon_in - d_lon_w / 3600.0::DOUBLE) * 3686400.0::DOUBLE, 0) AS BIGINT) AS lon_to,
-        |  CAST(round((lat_in + d_lat / 3600.0::DOUBLE) * 3686400.0::DOUBLE, 0) AS BIGINT) AS lat_to
-        |FROM bil""".stripMargin,
-
-    "q133_ann_recall" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |don AS (SELECT vec_id AS did, v AS dv FROM e
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e
-        |  WHERE vec_id IN (0, 1, 2)),
-        |fulld AS (SELECT e.vec_id, d.did,
-        |  list_reduce(list_transform(range(1, len(e.v) + 1),
-        |    j -> (e.v[j] - d.dv[j]) * (e.v[j] - d.dv[j])), (x, y) -> x + y) AS dd
-        |  FROM e CROSS JOIN don d),
-        |asg AS (SELECT vec_id, did AS lst FROM fulld
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) = 1),
-        |pl AS (SELECT q.query_id, d.did AS lst FROM don d CROSS JOIN q
-        |  QUALIFY row_number() OVER (PARTITION BY q.query_id
-        |    ORDER BY list_reduce(list_transform(range(1, len(d.dv) + 1),
-        |      j -> (d.dv[j] - q.qv[j]) * (d.dv[j] - q.qv[j])), (x, y) -> x + y),
-        |      d.did) <= 4),
-        |cand AS (SELECT p.query_id, a.vec_id FROM pl p JOIN asg a ON a.lst = p.lst),
-        |sd AS (SELECT e.vec_id, t.j, d.did,
-        |  list_reduce(list_transform(range(1, 9), i ->
-        |    (e.v[t.j * 8 + i] - d.dv[t.j * 8 + i]) *
-        |    (e.v[t.j * 8 + i] - d.dv[t.j * 8 + i])), (x, y) -> x + y) AS s
-        |  FROM e CROSS JOIN range(8) t(j) CROSS JOIN don d),
-        |codes AS (SELECT vec_id, j, did AS code FROM sd
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-        |    ORDER BY s ASC, did ASC) = 1),
-        |qt AS (SELECT q.query_id, t.j, d.did,
-        |  list_reduce(list_transform(range(1, 9), i ->
-        |    (q.qv[t.j * 8 + i] - d.dv[t.j * 8 + i]) *
-        |    (q.qv[t.j * 8 + i] - d.dv[t.j * 8 + i])), (x, y) -> x + y) AS s
-        |  FROM q CROSS JOIN range(8) t(j) CROSS JOIN don d),
-        |adc AS (SELECT c.query_id, co.vec_id, sum(q2.s) AS a0
-        |  FROM codes co JOIN cand c ON c.vec_id = co.vec_id
-        |  JOIN qt q2 ON q2.query_id = c.query_id AND q2.j = co.j
-        |    AND q2.did = co.code
-        |  GROUP BY c.query_id, co.vec_id),
-        |apx AS (SELECT query_id, vec_id FROM adc
-        |  QUALIFY row_number() OVER (PARTITION BY query_id
-        |    ORDER BY a0 ASC, vec_id ASC) <= 10),
-        |exd AS (SELECT q.query_id, e.vec_id,
-        |  list_reduce(list_transform(range(1, len(e.v) + 1),
-        |    j -> (e.v[j] - q.qv[j]) * (e.v[j] - q.qv[j])), (x, y) -> x + y) AS d
-        |  FROM e CROSS JOIN q),
-        |ext AS (SELECT query_id, vec_id FROM exd
-        |  QUALIFY row_number() OVER (PARTITION BY query_id
-        |    ORDER BY d ASC, vec_id ASC) <= 10),
-        |hits AS (SELECT t.query_id, count(*) AS n FROM ext t
-        |  JOIN apx a ON a.query_id = t.query_id AND a.vec_id = t.vec_id
-        |  GROUP BY t.query_id)
-        |SELECT t2.query_id, CAST(coalesce(h.n, 0) AS DOUBLE) / 10 AS recall
-        |FROM (SELECT DISTINCT query_id FROM ext) t2
-        |LEFT JOIN hits h USING (query_id)""".stripMargin,
-
-    // q111's islands+clip SQL with the marker set = the benchmark's
-    // distinct 3-grams instead of corpus-repeated grams.
-    "q124_span_decontam" ->
-      raw"""WITH base AS (SELECT doc_id,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS w
-        |  FROM documents WHERE text IS NOT NULL),
-        |okd AS (SELECT doc_id, w FROM base WHERE len(w) >= 3),
-        |grams AS (SELECT doc_id,
-        |    unnest(list_transform(range(1, len(w) - 1), p -> p - 1)) AS pos,
-        |    unnest(list_transform(range(1, len(w) - 1),
-        |      p -> array_to_string(w[p:p+2], ' '))) AS gram
-        |  FROM okd),
-        |benchb AS (SELECT regexp_split_to_array(trim(lower(text)), '\s+') AS w
-        |  FROM documents WHERE doc_id % 97 = 0 AND text IS NOT NULL),
-        |benchok AS (SELECT w FROM benchb WHERE len(w) >= 3),
-        |bgrams AS (SELECT DISTINCT
-        |    unnest(list_transform(range(1, len(w) - 1),
-        |      p -> array_to_string(w[p:p+2], ' '))) AS gram
-        |  FROM benchok),
-        |m AS (SELECT g.doc_id, g.pos, g.pos + 3 AS e
-        |  FROM grams g JOIN bgrams USING (gram)),
-        |x AS (SELECT doc_id, pos, e,
-        |    max(e) OVER (PARTITION BY doc_id ORDER BY pos
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-        |  FROM m),
-        |y AS (SELECT doc_id, pos, e,
-        |    CASE WHEN pm IS NULL OR pos > pm THEN 1 ELSE 0 END AS nw FROM x),
-        |z AS (SELECT doc_id, pos, e,
-        |    sum(nw) OVER (PARTITION BY doc_id ORDER BY pos) AS grp FROM y),
-        |spans AS (SELECT doc_id, min(pos) AS s, max(e) AS en
-        |  FROM z GROUP BY doc_id, grp),
-        |toksall AS (SELECT doc_id,
-        |    unnest(list_transform(range(1, len(w) + 1), p -> p - 1)) AS pos,
-        |    unnest(list_transform(range(1, len(w) + 1), p -> w[p])) AS tok
-        |  FROM base),
-        |kept AS (SELECT t.doc_id, t.pos, t.tok FROM toksall t
-        |  WHERE NOT EXISTS (SELECT 1 FROM spans sp
-        |    WHERE sp.doc_id = t.doc_id AND t.pos >= sp.s AND t.pos < sp.en)),
-        |clipped AS (SELECT doc_id,
-        |    coalesce(string_agg(tok, ' ' ORDER BY pos), '') AS clipped
-        |  FROM kept GROUP BY doc_id),
-        |removedn AS (SELECT t.doc_id, count(*) AS nr FROM toksall t
-        |  WHERE EXISTS (SELECT 1 FROM spans sp
-        |    WHERE sp.doc_id = t.doc_id AND t.pos >= sp.s AND t.pos < sp.en)
-        |  GROUP BY t.doc_id)
-        |SELECT d.doc_id,
-        |  CASE WHEN d.text IS NULL THEN NULL
-        |       ELSE coalesce(c.clipped, '') END AS clipped,
-        |  CASE WHEN d.text IS NULL THEN 0
-        |       ELSE coalesce(r.nr, 0) END AS n_removed
-        |FROM documents d
-        |LEFT JOIN clipped c ON c.doc_id = d.doc_id
-        |LEFT JOIN removedn r ON r.doc_id = d.doc_id""".stripMargin,
-
-    // q122's BM25 CTEs ⊕ q119's ADC CTEs, per-query ranks, RRF per
-    // query. ADC ranks on the ROUNDED distance (as q109's oracle does).
-    "q123_hybrid_batch" ->
-      """WITH base AS (
-        |  SELECT doc_id, trim(lower(text)) AS lt FROM documents
-        |  WHERE text IS NOT NULL),
-        |dls AS (SELECT doc_id, lt,
-        |  CASE WHEN lt = '' THEN 0
-        |       ELSE len(regexp_split_to_array(lt, '\s+')) END AS dl
-        |  FROM base),
-        |stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dls),
-        |toks AS (SELECT doc_id, dl,
-        |  unnest(regexp_split_to_array(lt, '\s+')) AS term FROM dls),
-        |tq AS (SELECT CAST(t.query_id AS BIGINT) AS query_id, t.term
-        |  FROM (VALUES (0, 'spark'), (0, 'query'), (0, 'join'),
-        |    (1, 'data'), (1, 'table')) AS t(query_id, term)),
-        |hits AS (SELECT doc_id, dl, term, count(*) AS tf FROM toks
-        |  WHERE term IN (SELECT term FROM tq) GROUP BY 1, 2, 3),
-        |dfreq AS (SELECT term, count(DISTINCT doc_id) AS df FROM hits GROUP BY 1),
-        |bmq AS (SELECT q.query_id, h.doc_id,
-        |  round(sum(ln((n - df + 0.5) / (df + 0.5) + 1.0) * tf * (1.2 + 1) /
-        |    (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))), 6) AS score
-        |  FROM hits h JOIN tq q USING (term) CROSS JOIN stats
-        |  JOIN dfreq USING (term) GROUP BY 1, 2),
-        |bmtop AS (SELECT query_id, doc_id, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY score DESC, doc_id) AS r
-        |  FROM bmq QUALIFY row_number() OVER (
-        |    PARTITION BY query_id ORDER BY score DESC, doc_id) <= 50),
-        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |don AS (SELECT vec_id AS did, v AS dv FROM e
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |vq AS (SELECT vec_id AS query_id, v AS qv FROM e
-        |  WHERE vec_id IN (0, 1)),
-        |fulld AS (SELECT e.vec_id, d.did,
-        |  list_reduce(list_transform(range(1, len(e.v) + 1),
-        |    j -> (e.v[j] - d.dv[j]) * (e.v[j] - d.dv[j])), (x, y) -> x + y) AS dd
-        |  FROM e CROSS JOIN don d),
-        |asg AS (SELECT vec_id, did AS lst FROM fulld
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) = 1),
-        |pl AS (SELECT q.query_id, d.did AS lst FROM don d CROSS JOIN vq q
-        |  QUALIFY row_number() OVER (PARTITION BY q.query_id
-        |    ORDER BY list_reduce(list_transform(range(1, len(d.dv) + 1),
-        |      j -> (d.dv[j] - q.qv[j]) * (d.dv[j] - q.qv[j])), (x, y) -> x + y),
-        |      d.did) <= 4),
-        |cand AS (SELECT p.query_id, a.vec_id FROM pl p JOIN asg a ON a.lst = p.lst),
-        |sd AS (SELECT e.vec_id, t.j, d.did,
-        |  list_reduce(list_transform(range(1, 9), i ->
-        |    (e.v[t.j * 8 + i] - d.dv[t.j * 8 + i]) *
-        |    (e.v[t.j * 8 + i] - d.dv[t.j * 8 + i])), (x, y) -> x + y) AS s
-        |  FROM e CROSS JOIN range(8) t(j) CROSS JOIN don d),
-        |codes AS (SELECT vec_id, j, did AS code FROM sd
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-        |    ORDER BY s ASC, did ASC) = 1),
-        |qtv AS (SELECT q.query_id, t.j, d.did,
-        |  list_reduce(list_transform(range(1, 9), i ->
-        |    (q.qv[t.j * 8 + i] - d.dv[t.j * 8 + i]) *
-        |    (q.qv[t.j * 8 + i] - d.dv[t.j * 8 + i])), (x, y) -> x + y) AS s
-        |  FROM vq q CROSS JOIN range(8) t(j) CROSS JOIN don d),
-        |adc AS (SELECT c.query_id, co.vec_id, sum(q2.s) AS a0
-        |  FROM codes co JOIN cand c ON c.vec_id = co.vec_id
-        |  JOIN qtv q2 ON q2.query_id = c.query_id AND q2.j = co.j
-        |    AND q2.did = co.code
-        |  GROUP BY 1, 2),
-        |atop AS (SELECT query_id, vec_id AS doc_id, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY round(a0, 6) ASC, vec_id) AS r
-        |  FROM adc QUALIFY row_number() OVER (
-        |    PARTITION BY query_id ORDER BY round(a0, 6) ASC, vec_id) <= 50),
-        |u AS (SELECT query_id, doc_id, r FROM bmtop
-        |  UNION ALL SELECT query_id, doc_id, r FROM atop),
-        |f AS (SELECT query_id, doc_id, sum(1.0::DOUBLE / (60 + r)) AS raw,
-        |  count(*) AS n_systems FROM u GROUP BY 1, 2)
-        |SELECT query_id, doc_id, round(raw, 6) AS rrf, n_systems FROM f
-        |QUALIFY row_number() OVER (PARTITION BY query_id
-        |  ORDER BY raw DESC, doc_id) <= 20""".stripMargin,
-
-    // q75's BM25 arithmetic over a (query, term) VALUES relation; df per
-    // term over the union of all query terms (query-independent, as the
-    // index computes it); no top-k cut (k covers all matches).
-    "q122_bm25_batch" ->
-      """WITH base AS (
-        |  SELECT doc_id, trim(lower(text)) AS lt FROM documents
-        |  WHERE text IS NOT NULL),
-        |dls AS (SELECT doc_id, lt,
-        |  CASE WHEN lt = '' THEN 0
-        |       ELSE len(regexp_split_to_array(lt, '\s+')) END AS dl
-        |  FROM base),
-        |stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dls),
-        |toks AS (SELECT doc_id, dl,
-        |  unnest(regexp_split_to_array(lt, '\s+')) AS term FROM dls),
-        |qt AS (SELECT CAST(t.query_id AS BIGINT) AS query_id, t.term
-        |  FROM (VALUES (0, 'spark'), (0, 'query'), (0, 'join'),
-        |    (1, 'data'), (1, 'table'), (2, 'the')) AS t(query_id, term)),
-        |hits AS (SELECT doc_id, dl, term, count(*) AS tf FROM toks
-        |  WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2, 3),
-        |dfreq AS (SELECT term, count(DISTINCT doc_id) AS df FROM hits GROUP BY 1)
-        |SELECT q.query_id, h.doc_id,
-        |  round(sum(ln((n - df + 0.5) / (df + 0.5) + 1.0) * tf * (1.2 + 1) /
-        |    (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))), 6) AS bm25,
-        |  count(*) AS n_terms
-        |FROM hits h JOIN qt q USING (term) CROSS JOIN stats
-        |JOIN dfreq USING (term)
-        |GROUP BY 1, 2""".stripMargin,
-
-    // Per-dim ranges → rank-ordered permutation (ties on dim index) →
-    // permuted vectors as ordered lists → q104's donor/code/ADC plan.
-    "q121_pq_balanced" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |dims AS (SELECT t.j AS dim, max(e.v[t.j]) - min(e.v[t.j]) AS rg
-        |  FROM e CROSS JOIN range(1, 65) t(j) GROUP BY t.j),
-        |perm AS (SELECT dim, ((r0 % 8) * 8 + r0 // 8) AS pos FROM (
-        |  SELECT dim, row_number() OVER (ORDER BY rg DESC, dim ASC) - 1 AS r0
-        |  FROM dims)),
-        |pv AS (SELECT e.vec_id, list(e.v[p.dim] ORDER BY p.pos) AS v
-        |  FROM e CROSS JOIN perm p GROUP BY e.vec_id),
-        |don AS (SELECT p2.vec_id AS did, p2.v AS dv FROM pv p2
-        |  ORDER BY ((((p2.vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, p2.vec_id LIMIT 16),
-        |sd AS (SELECT p2.vec_id, t.j, d.did,
-        |  list_reduce(list_transform(range(1, 9), i ->
-        |    (p2.v[t.j * 8 + i] - d.dv[t.j * 8 + i]) *
-        |    (p2.v[t.j * 8 + i] - d.dv[t.j * 8 + i])), (x, y) -> x + y) AS s
-        |  FROM pv p2 CROSS JOIN range(8) t(j) CROSS JOIN don d),
-        |codes AS (SELECT vec_id, j, did AS code FROM sd
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-        |    ORDER BY s ASC, did ASC) = 1),
-        |qt AS (SELECT j, did, s FROM sd WHERE vec_id = 0),
-        |adc AS (SELECT c.vec_id, sum(q2.s) AS adc FROM codes c
-        |  JOIN qt q2 ON q2.j = c.j AND q2.did = c.code GROUP BY c.vec_id)
-        |SELECT vec_id, round(adc, 6) AS adc
-        |FROM adc ORDER BY adc ASC, vec_id LIMIT 10""".stripMargin,
-
-    // q117's clustering with a per-cluster keep-1 cut (smallest id).
-    "q120_semdedup" ->
-      """WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |don AS (SELECT vec_id AS did, v AS dv FROM e
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |dist AS (SELECT e.vec_id, d.did,
-        |  list_reduce(list_transform(range(1, len(e.v) + 1),
-        |    j -> (e.v[j] - d.dv[j]) * (e.v[j] - d.dv[j])), (x, y) -> x + y) AS dd
-        |  FROM e CROSS JOIN don d),
-        |asg AS (SELECT vec_id, did AS lst FROM dist
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) = 1),
-        |pl AS (SELECT vec_id, did AS lst FROM dist
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) <= 4),
-        |cand AS (SELECT p.vec_id AS id1, a.vec_id AS id2
-        |  FROM pl p JOIN asg a ON a.lst = p.lst WHERE a.vec_id <> p.vec_id),
-        |cs AS (SELECT c.id1, c.id2,
-        |  list_reduce(list_transform(range(1, len(a.v) + 1),
-        |    j -> a.v[j] * b.v[j]), (x, y) -> x + y) AS dp,
-        |  list_reduce(list_transform(range(1, len(a.v) + 1),
-        |    j -> a.v[j] * a.v[j]), (x, y) -> x + y) AS na,
-        |  list_reduce(list_transform(range(1, len(b.v) + 1),
-        |    j -> b.v[j] * b.v[j]), (x, y) -> x + y) AS nb
-        |  FROM cand c JOIN e a ON a.vec_id = c.id1 JOIN e b ON b.vec_id = c.id2),
-        |knn AS (SELECT id1, id2, dp / (sqrt(na) * sqrt(nb)) AS cos FROM cs
-        |  QUALIFY row_number() OVER (PARTITION BY id1
-        |    ORDER BY dp / (sqrt(na) * sqrt(nb)) DESC, id2) <= 3),
-        |edg AS (SELECT id1, id2 FROM knn WHERE cos >= 0.42),
-        |und AS (SELECT id1, id2 FROM edg UNION ALL SELECT id2, id1 FROM edg),
-        |nodes AS (SELECT DISTINCT id1 AS id FROM und),
-        |reach(id, lab) AS (
-        |  SELECT id, id FROM nodes
-        |  UNION
-        |  SELECT u.id2, r.lab FROM reach r JOIN und u ON u.id1 = r.id),
-        |compp AS (SELECT id, min(lab) AS comp FROM reach GROUP BY id),
-        |lab AS (SELECT e.vec_id, coalesce(c2.comp, e.vec_id) AS cluster
-        |  FROM e LEFT JOIN compp c2 ON c2.id = e.vec_id)
-        |SELECT vec_id, cluster FROM lab
-        |QUALIFY row_number() OVER (PARTITION BY cluster
-        |  ORDER BY vec_id ASC) <= 1""".stripMargin,
-
-    // q120's clustering, keep-cut by DESCENDING quality (vec_id % 7)
-    // with the id tie-break — the keep-best SemDeDup policy.
-    "q125_semdedup_keepbest" ->
-      """WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |don AS (SELECT vec_id AS did, v AS dv FROM e
-        |  ORDER BY ((((vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, vec_id LIMIT 16),
-        |dist AS (SELECT e.vec_id, d.did,
-        |  list_reduce(list_transform(range(1, len(e.v) + 1),
-        |    j -> (e.v[j] - d.dv[j]) * (e.v[j] - d.dv[j])), (x, y) -> x + y) AS dd
-        |  FROM e CROSS JOIN don d),
-        |asg AS (SELECT vec_id, did AS lst FROM dist
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) = 1),
-        |pl AS (SELECT vec_id, did AS lst FROM dist
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) <= 4),
-        |cand AS (SELECT p.vec_id AS id1, a.vec_id AS id2
-        |  FROM pl p JOIN asg a ON a.lst = p.lst WHERE a.vec_id <> p.vec_id),
-        |cs AS (SELECT c.id1, c.id2,
-        |  list_reduce(list_transform(range(1, len(a.v) + 1),
-        |    j -> a.v[j] * b.v[j]), (x, y) -> x + y) AS dp,
-        |  list_reduce(list_transform(range(1, len(a.v) + 1),
-        |    j -> a.v[j] * a.v[j]), (x, y) -> x + y) AS na,
-        |  list_reduce(list_transform(range(1, len(b.v) + 1),
-        |    j -> b.v[j] * b.v[j]), (x, y) -> x + y) AS nb
-        |  FROM cand c JOIN e a ON a.vec_id = c.id1 JOIN e b ON b.vec_id = c.id2),
-        |knn AS (SELECT id1, id2, dp / (sqrt(na) * sqrt(nb)) AS cos FROM cs
-        |  QUALIFY row_number() OVER (PARTITION BY id1
-        |    ORDER BY dp / (sqrt(na) * sqrt(nb)) DESC, id2) <= 3),
-        |edg AS (SELECT id1, id2 FROM knn WHERE cos >= 0.42),
-        |und AS (SELECT id1, id2 FROM edg UNION ALL SELECT id2, id1 FROM edg),
-        |nodes AS (SELECT DISTINCT id1 AS id FROM und),
-        |reach(id, lab) AS (
-        |  SELECT id, id FROM nodes
-        |  UNION
-        |  SELECT u.id2, r.lab FROM reach r JOIN und u ON u.id1 = r.id),
-        |compp AS (SELECT id, min(lab) AS comp FROM reach GROUP BY id),
-        |lab AS (SELECT e.vec_id, coalesce(c2.comp, e.vec_id) AS cluster
-        |  FROM e LEFT JOIN compp c2 ON c2.id = e.vec_id)
-        |SELECT vec_id, cluster FROM lab
-        |QUALIFY row_number() OVER (PARTITION BY cluster
-        |  ORDER BY (vec_id % 7) DESC, vec_id ASC) <= 1""".stripMargin,
-
-    // q121's perm/pv prefix feeding q106's coarse-assign/probe/ADC body:
-    // everything — centroids, donors, codes, the query — lives in the
-    // permuted space (assignment is L2-invariant under the permutation,
-    // but the oracle computes it over pv anyway so summation ORDER also
-    // matches the engine).
-    "q126_ivfpq_balanced_index" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |dims AS (SELECT t.j AS dim, max(e.v[t.j]) - min(e.v[t.j]) AS rg
-        |  FROM e CROSS JOIN range(1, 65) t(j) GROUP BY t.j),
-        |perm AS (SELECT dim, ((r0 % 8) * 8 + r0 // 8) AS pos FROM (
-        |  SELECT dim, row_number() OVER (ORDER BY rg DESC, dim ASC) - 1 AS r0
-        |  FROM dims)),
-        |pv AS (SELECT e.vec_id, list(e.v[p.dim] ORDER BY p.pos) AS v
-        |  FROM e CROSS JOIN perm p GROUP BY e.vec_id),
-        |don AS (SELECT p2.vec_id AS did, p2.v AS dv FROM pv p2
-        |  ORDER BY ((((p2.vec_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296, p2.vec_id LIMIT 16),
-        |q AS (SELECT v AS qv FROM pv WHERE vec_id = 0),
-        |fulld AS (SELECT p2.vec_id, d.did,
-        |  list_reduce(list_transform(range(1, len(p2.v) + 1),
-        |    j -> (p2.v[j] - d.dv[j]) * (p2.v[j] - d.dv[j])), (x, y) -> x + y) AS dd
-        |  FROM pv p2 CROSS JOIN don d),
-        |asg AS (SELECT vec_id, did AS lst FROM fulld
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dd, did) = 1),
-        |pl AS (SELECT did AS lst FROM don CROSS JOIN q
-        |  ORDER BY list_reduce(list_transform(range(1, len(dv) + 1),
-        |    j -> (dv[j] - qv[j]) * (dv[j] - qv[j])), (x, y) -> x + y), did LIMIT 4),
-        |cand AS (SELECT a.vec_id FROM asg a JOIN pl ON a.lst = pl.lst),
-        |sd AS (SELECT p2.vec_id, t.j, d.did,
-        |  list_reduce(list_transform(range(1, 9), i ->
-        |    (p2.v[t.j * 8 + i] - d.dv[t.j * 8 + i]) *
-        |    (p2.v[t.j * 8 + i] - d.dv[t.j * 8 + i])), (x, y) -> x + y) AS s
-        |  FROM pv p2 CROSS JOIN range(8) t(j) CROSS JOIN don d),
-        |codes AS (SELECT vec_id, j, did AS code FROM sd
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-        |    ORDER BY s ASC, did ASC) = 1),
-        |qt AS (SELECT j, did, s FROM sd WHERE vec_id = 0),
-        |adc AS (SELECT c.vec_id, sum(q2.s) AS adc FROM codes c
-        |  JOIN cand ON cand.vec_id = c.vec_id
-        |  JOIN qt q2 ON q2.j = c.j AND q2.did = c.code GROUP BY c.vec_id)
-        |SELECT vec_id, round(adc, 6) AS adc
-        |FROM adc ORDER BY adc ASC, vec_id LIMIT 10""".stripMargin,
-
-    // Full dedup pipeline recomputed: exact dedup (null-text singletons),
-    // LSH candidates over survivors (as q25, %25 planting), distinct-bigram
-    // Jaccard >= 0.6, pairwise id2 removal.
-    "q53_dedup_corpus" ->
-      """WITH base AS (SELECT doc_id, text FROM documents),
-        |off AS (SELECT coalesce(max(doc_id), 0) AS o FROM base),
-        |all_docs AS (
-        |  SELECT doc_id, text FROM base
-        |  UNION ALL
-        |  SELECT doc_id + o + 1, regexp_replace(text, '^\S+\s*', '')
-        |  FROM base, off WHERE doc_id % 25 = 0),
-        |keep AS (
-        |  SELECT min(doc_id) AS doc_id FROM all_docs WHERE text IS NOT NULL
-        |  GROUP BY md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g')))
-        |  UNION ALL SELECT doc_id FROM all_docs WHERE text IS NULL),
-        |surv AS (SELECT a.doc_id, a.text FROM all_docs a JOIN keep k ON k.doc_id = a.doc_id),
-        |tk AS (SELECT doc_id,
-        |  CASE WHEN coalesce(trim(text), '') = '' THEN []::VARCHAR[]
-        |       ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS w
-        |  FROM surv),
-        |sh AS (SELECT doc_id,
-        |  CASE WHEN len(w) = 0 THEN ['']
-        |       WHEN len(w) < 2 THEN [array_to_string(w, ' ')]
-        |       ELSE list_transform(range(1, len(w)), j -> w[j] || ' ' || w[j+1]) END AS sh
-        |  FROM tk),
-        |h AS (SELECT doc_id, list_transform(sh, s -> list_reduce(
-        |    list_prepend(0::BIGINT, list_transform(regexp_extract_all(s, '.'),
-        |      c -> ascii(c)::BIGINT)),
-        |    (acc, ch) -> (acc * 31 + ch) % 1000000007)) AS hs FROM sh),
-        |sig AS (SELECT doc_id, i,
-        |  list_min(list_transform(hs, v ->
-        |    (((2 * i + 1) * 104729) % 1000000007 * v + (i * 12582917 + 7)) % 1000000007)) AS mh
-        |  FROM h CROSS JOIN range(16) t(i)),
-        |band AS (SELECT doc_id, i // 4 AS b, string_agg(mh::VARCHAR, ',' ORDER BY i) AS key
-        |  FROM sig GROUP BY doc_id, i // 4),
-        |ok AS (SELECT b, key FROM band GROUP BY b, key
-        |  HAVING count(*) BETWEEN 2 AND 1000),
-        |pairs AS (SELECT DISTINCT x.doc_id AS id1, y.doc_id AS id2
-        |  FROM band x JOIN band y ON x.b = y.b AND x.key = y.key AND x.doc_id < y.doc_id
-        |  JOIN ok ON ok.b = x.b AND ok.key = x.key),
-        |ws AS (SELECT s.doc_id,
-        |  CASE WHEN d.text IS NULL THEN NULL ELSE list_distinct(s.sh) END AS ws
-        |  FROM sh s JOIN surv d ON d.doc_id = s.doc_id),
-        |jc AS (SELECT p.id1, p.id2,
-        |  len(list_intersect(x.ws, y.ws)) AS i2,
-        |  len(list_distinct(list_concat(x.ws, y.ws))) AS u2
-        |  FROM pairs p JOIN ws x ON x.doc_id = p.id1 JOIN ws y ON y.doc_id = p.id2),
-        |removed AS (SELECT DISTINCT id2 FROM jc WHERE i2 * 1.0 / u2 >= 0.6)
-        |SELECT doc_id FROM surv s
-        |WHERE NOT EXISTS (SELECT 1 FROM removed r WHERE r.id2 = s.doc_id)""".stripMargin,
-
-    // q53's machinery over the three-way incremental planting; the final
-    // filter keeps INCOMING survivors only (doc_id > o).
-    "q90_dedup_incremental" -> IncrementalDedupOracleSql,
-
-    // same oracle as q90: the persisted-signature-index path must
-    // reproduce the union-path incremental dedup exactly
-    "q93_dedup_index" -> IncrementalDedupOracleSql,
-    "q96_dedup_rolling" -> RollingDedupOracleSql,
-    "q107_dedup_maintenance" -> MaintenanceDedupOracleSql,
-    "q109_indexed_hybrid" -> IndexedHybridOracleSql,
-
-    // q110: positioned 6-grams (two unnests zip positionally), corpus
-    // counts on the gram text, repeated positions, per-doc island merge
-    // of [pos, pos+6) with the same window arithmetic as the engine
-    "q110_repeated_spans" ->
-      raw"""WITH base AS (SELECT doc_id,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS w
-        |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-        |ok AS (SELECT doc_id, w FROM base WHERE len(w) >= 6),
-        |grams AS (SELECT doc_id,
-        |    unnest(list_transform(range(1, len(w) - 4), p -> p - 1)) AS pos,
-        |    unnest(list_transform(range(1, len(w) - 4),
-        |      p -> array_to_string(w[p:p+5], ' '))) AS gram
-        |  FROM ok),
-        |rep AS (SELECT gram FROM grams GROUP BY gram HAVING count(*) >= 2),
-        |m AS (SELECT g.doc_id, g.pos, g.pos + 6 AS e
-        |  FROM grams g JOIN rep USING (gram)),
-        |x AS (SELECT doc_id, pos, e,
-        |    max(e) OVER (PARTITION BY doc_id ORDER BY pos
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-        |  FROM m),
-        |y AS (SELECT doc_id, pos, e,
-        |    CASE WHEN pm IS NULL OR pos > pm THEN 1 ELSE 0 END AS nw FROM x),
-        |z AS (SELECT doc_id, pos, e,
-        |    sum(nw) OVER (PARTITION BY doc_id ORDER BY pos) AS grp FROM y)
-        |SELECT doc_id, min(pos) AS span_start, max(e) AS span_end
-        |FROM z GROUP BY doc_id, grp""".stripMargin,
-
-    // q111: q110's spans → per-token coverage test → clipped stream.
-    // Docs shorter than the n-gram (len < 6) have no grams, hence no
-    // spans, and pass through whole; null-text docs pass through null.
-    "q111_span_clip" ->
-      raw"""WITH base AS (SELECT doc_id,
-        |    regexp_split_to_array(trim(lower(text)), '\s+') AS w
-        |  FROM documents WHERE text IS NOT NULL),
-        |ok AS (SELECT doc_id, w FROM base WHERE len(w) >= 6),
-        |grams AS (SELECT doc_id,
-        |    unnest(list_transform(range(1, len(w) - 4), p -> p - 1)) AS pos,
-        |    unnest(list_transform(range(1, len(w) - 4),
-        |      p -> array_to_string(w[p:p+5], ' '))) AS gram
-        |  FROM ok),
-        |rep AS (SELECT gram FROM grams GROUP BY gram HAVING count(*) >= 2),
-        |m AS (SELECT g.doc_id, g.pos, g.pos + 6 AS e
-        |  FROM grams g JOIN rep USING (gram)),
-        |x AS (SELECT doc_id, pos, e,
-        |    max(e) OVER (PARTITION BY doc_id ORDER BY pos
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-        |  FROM m),
-        |y AS (SELECT doc_id, pos, e,
-        |    CASE WHEN pm IS NULL OR pos > pm THEN 1 ELSE 0 END AS nw FROM x),
-        |z AS (SELECT doc_id, pos, e,
-        |    sum(nw) OVER (PARTITION BY doc_id ORDER BY pos) AS grp FROM y),
-        |spans AS (SELECT doc_id, min(pos) AS s, max(e) AS en
-        |  FROM z GROUP BY doc_id, grp),
-        |toksall AS (SELECT doc_id,
-        |    unnest(list_transform(range(1, len(w) + 1), p -> p - 1)) AS pos,
-        |    unnest(list_transform(range(1, len(w) + 1), p -> w[p])) AS tok
-        |  FROM base),
-        |kept AS (SELECT t.doc_id, t.pos, t.tok FROM toksall t
-        |  WHERE NOT EXISTS (SELECT 1 FROM spans sp
-        |    WHERE sp.doc_id = t.doc_id AND t.pos >= sp.s AND t.pos < sp.en)),
-        |clipped AS (SELECT doc_id,
-        |    coalesce(string_agg(tok, ' ' ORDER BY pos), '') AS clipped
-        |  FROM kept GROUP BY doc_id),
-        |removedn AS (SELECT t.doc_id, count(*) AS nr FROM toksall t
-        |  WHERE EXISTS (SELECT 1 FROM spans sp
-        |    WHERE sp.doc_id = t.doc_id AND t.pos >= sp.s AND t.pos < sp.en)
-        |  GROUP BY t.doc_id)
-        |SELECT d.doc_id,
-        |  CASE WHEN d.text IS NULL THEN NULL
-        |       ELSE coalesce(c.clipped, '') END AS clipped,
-        |  CASE WHEN d.text IS NULL THEN 0
-        |       ELSE coalesce(r.nr, 0) END AS n_removed
-        |FROM documents d
-        |LEFT JOIN clipped c ON c.doc_id = d.doc_id
-        |LEFT JOIN removedn r ON r.doc_id = d.doc_id""".stripMargin,
-    "q102_dedup_keep_best" -> KeepBestOracleSql,
-
-    // Misra-Gries inclusion guarantee: the provably-heavy token set
-    // (exact count > N/31 per lang, k=30 counters) with exact counts.
-    "q56_heavy_hitters" ->
-      """WITH tk AS (SELECT lang,
-        |    unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS token
-        |  FROM documents WHERE coalesce(trim(text), '') <> ''),
-        |ex AS (SELECT lang, token, count(*) AS n FROM tk GROUP BY 1, 2),
-        |tot AS (SELECT lang, count(*) AS nl FROM tk GROUP BY 1)
-        |SELECT lang, token, n FROM ex JOIN tot USING (lang) WHERE n * 31 > nl""".stripMargin,
-
-    // Exact all-pairs cosine >= 0.999 over corpus + planted identical
-    // copies — the LSH-bucketed engine must find exactly these (identical
-    // vectors always share a bucket; random 64-dim pairs never reach 0.999).
-    "q57_embedding_neardup" ->
-      """WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |off AS (SELECT coalesce(max(vec_id), 0) AS o FROM base),
-        |av AS (SELECT vec_id, v FROM base
-        |  UNION ALL SELECT vec_id + o + 1, v FROM base, off WHERE vec_id % 100 = 0),
-        |nv AS (SELECT vec_id, v,
-        |  list_reduce(list_transform(range(1, len(v) + 1), j -> v[j] * v[j]), (x, y) -> x + y) AS nn
-        |  FROM av),
-        |p AS (SELECT a.vec_id AS id1, b.vec_id AS id2, a.v AS v1, b.v AS v2,
-        |  a.nn AS na, b.nn AS nb FROM nv a JOIN nv b ON a.vec_id < b.vec_id),
-        |s AS (SELECT id1, id2,
-        |  list_reduce(list_transform(range(1, len(v1) + 1), j -> v1[j] * v2[j]), (x, y) -> x + y) AS dp,
-        |  na, nb FROM p)
-        |SELECT id1, id2, round(dp / (sqrt(na) * sqrt(nb)), 4) AS cos
-        |FROM s WHERE dp / (sqrt(na) * sqrt(nb)) >= 0.999""".stripMargin,
-
-    "q29_running_window" ->
-      """SELECT event_id, user_id,
-        |  row_number() OVER w AS rn,
-        |  round(sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS run_sum
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin,
-
-    "q30_sessionize" ->
-      """WITH w AS (
-        |  SELECT user_id, event_id, ts, value,
-        |    lag(epoch_ns(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ns
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, event_id, value,
-        |    CAST(sum(CASE WHEN prev_ns IS NULL OR epoch_ns(ts) - prev_ns > 1800000000000
-        |      THEN 1 ELSE 0 END) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM w)
-        |SELECT user_id, session_id, count(*) AS n_events,
-        |  round(sum(value), 2) AS session_value
-        |FROM s GROUP BY 1, 2""".stripMargin,
-
-    "q31_normalize_group" ->
-      """SELECT o_orderkey, o_custkey,
-        |  round(o_totalprice / sum(o_totalprice) OVER (PARTITION BY o_custkey), 6) AS share
-        |FROM orders""".stripMargin,
-
-    "q32_canonical_edge" ->
-      """SELECT least(l_partkey % 50, l_suppkey % 50) AS a,
-        |  greatest(l_partkey % 50, l_suppkey % 50) AS b,
-        |  count(*) AS n_lines, round(sum(l_quantity), 2) AS cap
-        |FROM lineitem GROUP BY 1, 2""".stripMargin,
-
-    "q33_dedup_suffix" ->
-      """WITH c AS (SELECT c_custkey, 'cust_' || (c_custkey % 20) AS name FROM customer),
-        |r AS (SELECT c_custkey, name,
-        |  row_number() OVER (PARTITION BY name ORDER BY c_custkey) - 1 AS cc FROM c)
-        |SELECT c_custkey, CASE WHEN cc > 0 THEN name || '_' || cc ELSE name END AS name
-        |FROM r""".stripMargin,
-
-    "q34_forward_fill" ->
-      """WITH o AS (SELECT o_orderkey, o_custkey,
-        |  CASE WHEN o_orderkey % 5 = 0 THEN o_totalprice END AS sparse FROM orders)
-        |SELECT o_orderkey, o_custkey,
-        |  round(last_value(sparse IGNORE NULLS) OVER (PARTITION BY o_custkey
-        |    ORDER BY o_orderkey ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
-        |    AS filled
-        |FROM o""".stripMargin,
-
-    // SimHash recomputed: per-token poly hash, two affine mixes packed to
-    // 60 bits, per-bit +/-1 votes, sign -> bit. Docs with no tokens -> 0.
-    "q36_simhash" ->
-      raw"""WITH ${simhashCtes()}
-        |SELECT d.doc_id, coalesce(sim.simhash, 0) AS simhash
-        |FROM documents d LEFT JOIN sim ON sim.doc_id = d.doc_id""".stripMargin,
-
-    // q170: the Manku pigeonhole replayed — 4 disjoint 15-bit blocks,
-    // equi join on (block, value), bit_count(xor) verify. Integer-exact.
-    "q170_simhash_pairs" ->
-      raw"""WITH ${simhashCtes()},
-        |${simhashPairCtes()}
-        |SELECT id1, id2, hamming FROM prs""".stripMargin,
-
-    // q175: min-label transitive closure over the q170 pair graph
-    // (recursive CTE — near-dup graphs are sparse so the closure is
-    // tiny) with the min-id survivor per cluster.
-    "q175_simhash_clusters" ->
-      raw"""WITH RECURSIVE ${simhashCtes()},
-        |${simhashPairCtes()},
-        |und AS (SELECT id1, id2 FROM prs
-        |  UNION ALL SELECT id2, id1 FROM prs),
-        |nod AS (SELECT DISTINCT id1 AS id FROM und),
-        |reach(id, lab) AS (
-        |  SELECT id, id FROM nod
-        |  UNION
-        |  SELECT u.id2, r.lab FROM reach r JOIN und u ON u.id1 = r.id),
-        |cmp AS (SELECT id, min(lab) AS comp FROM reach GROUP BY id)
-        |SELECT id AS doc_id, comp,
-        |  CAST(CASE WHEN id = comp THEN 1 ELSE 0 END AS BIGINT) AS keep
-        |FROM cmp""".stripMargin,
-
-    "q37_fingerprint" ->
-      """SELECT doc_id,
-        |  list_reduce(
-        |    list_prepend(0::BIGINT, list_transform(
-        |      regexp_extract_all(lower(regexp_replace(trim(text), '\s+', ' ', 'g')), '.'),
-        |      c -> ascii(c)::BIGINT)),
-        |    (acc, ch) -> (acc * 31 + ch) % 1000000007) AS fingerprint
-        |FROM documents""".stripMargin,
-
-    "q38_explode_zip" ->
-      """WITH m AS (SELECT p_partkey,
-        |  p_size::VARCHAR || ';' || (p_size * 2)::VARCHAR AS m1,
-        |  p_brand || ';' || p_type || ';' || p_name AS m2 FROM part)
-        |SELECT p_partkey,
-        |  unnest(str_split(m1, ';')) AS multi1,
-        |  unnest(str_split(m2, ';')) AS multi2
-        |FROM m""".stripMargin,
-
-    "q39_weighted_dot" ->
-      """WITH pix AS (SELECT l_suppkey % 10 AS region, l_partkey % 5 AS lu,
-        |  count(*) AS cnt FROM lineitem GROUP BY 1, 2)
-        |SELECT region, round(sum(cnt * CAST(wt AS DOUBLE)), 2) AS weighted
-        |FROM pix JOIN (VALUES (0, 0.5), (1, 1.25), (2, 2.0), (3, 0.25), (4, 1.0))
-        |  AS w(lu, wt) USING (lu)
-        |GROUP BY region""".stripMargin,
-
-    "q40_hour_index" ->
-      """SELECT CAST((epoch_ns(ts) - 1704067200000000000) // 3600000000000 AS BIGINT) + 1 AS t,
-        |  count(*) AS n, round(sum(value), 2) AS hourly_value
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q41_adjacency_pairs" ->
-      """SELECT a.i AS zone_a, b.i AS zone_b
-        |FROM range(12) a(i) JOIN range(12) b(i)
-        |  ON a.i < b.i
-        | AND abs((a.i % 4) - (b.i % 4)) <= 1
-        | AND abs((a.i // 4) - (b.i // 4)) <= 1""".stripMargin,
-
-    "q42_overlay_area" ->
-      """WITH z AS (SELECT i AS zone_id, (i % 4) * 10 AS x0, (i // 4) * 10 AS y0
-        |  FROM range(12) t(i)),
-        |s AS (SELECT i AS stripe_id, i * 10 + 5 AS sy0 FROM range(2) t(i)),
-        |o AS (SELECT zone_id, stripe_id,
-        |  greatest(0, least(x0 + 10, 40) - greatest(x0, 0)) *
-        |  greatest(0, least(y0 + 10, sy0 + 10) - greatest(y0, sy0)) AS area
-        |  FROM z CROSS JOIN s)
-        |SELECT zone_id, stripe_id, round(CAST(area AS DOUBLE), 6) AS area
-        |FROM o WHERE area > 0""".stripMargin,
-
-    "q63_overlay_general" ->
-      """WITH zp AS (
-        |  SELECT i AS zone_id, (i % 4) * 10 AS x0, (i // 4) * 10 AS y0 FROM range(12) t(i)
-        |), zr AS (
-        |  SELECT zone_id, x0 AS rx0, y0 AS ry0, x0 + 10 AS rx1, y0 + 5 AS ry1 FROM zp
-        |  UNION ALL
-        |  SELECT zone_id, x0, y0 + 5, x0 + 5, y0 + 10 FROM zp
-        |), cr(clip_id, sgn, cx0, cy0, cx1, cy1) AS (
-        |  VALUES (0, 1, 0, 0, 40, 18), (0, 1, 0, 18, 20, 30),
-        |         (1, 1, 5, 2, 35, 28), (1, -1, 10, 8, 30, 22),
-        |         (2, 1, 0, 0, 12, 30), (2, 1, 25, 3, 38, 27)
-        |), o AS (
-        |  SELECT zone_id, clip_id,
-        |    sum(sgn * greatest(0, least(rx1, cx1) - greatest(rx0, cx0))
-        |            * greatest(0, least(ry1, cy1) - greatest(ry0, cy0))) AS area
-        |  FROM zr CROSS JOIN cr GROUP BY 1, 2
-        |)
-        |SELECT zone_id, CAST(clip_id AS BIGINT) AS clip_id,
-        |  round(CAST(area AS DOUBLE), 6) AS area
-        |FROM o WHERE area > 0""".stripMargin,
-
-    "q64_queen_triangles" ->
-      """SELECT a.i AS zone_a, b.i AS zone_b
-        |FROM range(25) a(i) JOIN range(25) b(i) ON b.i > a.i
-        |WHERE abs((a.i % 5) - (b.i % 5)) <= 1
-        |  AND abs((a.i // 5) - (b.i // 5)) <= 1
-        |  AND NOT ((b.i % 5) - (a.i % 5) = 1 AND (b.i // 5) - (a.i // 5) = 1)""".stripMargin,
-
-    "q65_connected_components" ->
-      """WITH d AS (SELECT doc_id FROM documents WHERE doc_id % 8 <> 7),
-        |nodes AS (SELECT doc_id AS id FROM d UNION SELECT doc_id + 1 FROM d)
-        |SELECT id AS doc_id, (id // 8) * 8 AS comp FROM nodes""".stripMargin,
-
-    "q66_crs_reproject" ->
-      """WITH p AS (SELECT s_suppkey,
-        |  CAST((s_suppkey % 3600) * 10000 - 18000000 AS DOUBLE) AS mx,
-        |  CAST((s_suppkey % 1700) * 10000 - 8400000 AS DOUBLE) AS my
-        |  FROM supplier)
-        |SELECT s_suppkey,
-        |  round(degrees(mx / 6378137.0), 6) AS lon,
-        |  round(degrees(2 * atan(exp(my / 6378137.0)) - pi() / 2), 6) AS lat
-        |FROM p""".stripMargin,
-
-    "q83_utm_prj_roundtrip" ->
-      """SELECT s_suppkey,
-        |  round(7.5 + (s_suppkey % 100) * 0.03, 6) AS lon,
-        |  round(48.0 + (s_suppkey % 73) * 0.05, 6) AS lat
-        |FROM supplier""".stripMargin,
-
-    "q95_lambert93_roundtrip" ->
-      """SELECT s_suppkey,
-        |  round(-4.0 + (s_suppkey % 100) * 0.12, 6) AS lon,
-        |  round(41.5 + (s_suppkey % 73) * 0.13, 6) AS lat
-        |FROM supplier""".stripMargin,
-
-    "q97_swiss_prj_roundtrip" ->
-      """SELECT s_suppkey,
-        |  round(6.0 + (s_suppkey % 100) * 0.04, 6) AS lon,
-        |  round(45.9 + (s_suppkey % 73) * 0.03, 6) AS lat
-        |FROM supplier""".stripMargin,
-
-    "q99_osgb_prj_roundtrip" ->
-      """SELECT s_suppkey,
-        |  round(-5.5 + (s_suppkey % 100) * 0.07, 6) AS lon,
-        |  round(50.1 + (s_suppkey % 73) * 0.1, 6) AS lat
-        |FROM supplier""".stripMargin,
-
-    "q108_krovak_prj_roundtrip" ->
-      """SELECT s_suppkey,
-        |  round(12.2 + (s_suppkey % 100) * 0.1, 6) AS lon,
-        |  round(47.8 + (s_suppkey % 73) * 0.042, 6) AS lat
-        |FROM supplier""".stripMargin,
-
-    // identity at 6 dp: forward (anchored UTM) + inverse (parametric
-    // reader) must cancel to sub-micro-degree
-    "q127_parametric_prj_roundtrip" ->
-      """SELECT s_suppkey,
-        |  round(12.2 + (s_suppkey % 100) * 0.05, 6) AS lon,
-        |  round(40.0 + (s_suppkey % 80) * 0.29, 6) AS lat
-        |FROM supplier""".stripMargin,
-
-    "q135_oblique_stereo_roundtrip" ->
-      """SELECT s_suppkey,
-        |  round(3.4 + (s_suppkey % 100) * 0.03, 6) AS lon,
-        |  round(50.8 + (s_suppkey % 80) * 0.03, 6) AS lat
-        |FROM supplier""".stripMargin,
-
-    "q98_video_frames" ->
-      """SELECT CAST(s_suppkey AS BIGINT) AS s_suppkey,
-        |  t.i AS frame_idx,
-        |  CAST(16 AS BIGINT) AS frame_width,
-        |  CAST(16 AS BIGINT) AS frame_height,
-        |  (s_suppkey + t.i) % 4 AS gray_level
-        |FROM supplier CROSS JOIN range(3) t(i)""".stripMargin,
-
-    "q67_shp_roundtrip" ->
-      """SELECT r_name, count(*) AS n_customers
-        |FROM customer JOIN region
-        |  ON (c_custkey % 100 + 0.5) >= r_regionkey * 20
-        | AND (c_custkey % 100 + 0.5) < r_regionkey * 20 + 20
-        |GROUP BY r_name""".stripMargin,
-
-    "q68_geotiff_roundtrip" ->
-      """WITH cells AS (
-        |  SELECT CAST(user_id % 30 AS BIGINT) AS r,
-        |         CAST(event_id % 40 AS BIGINT) AS c, count(*) AS n
-        |  FROM events
-        |  WHERE user_id % 30 BETWEEN 5 AND 24 AND event_id % 40 BETWEEN 10 AND 29
-        |  GROUP BY 1, 2),
-        |rws AS (SELECT CAST(range AS BIGINT) AS row FROM range(5, 25))
-        |SELECT rws.row AS row, CAST(coalesce(sum(cells.n), 0) AS BIGINT) AS pixel_sum,
-        |       CAST(20 AS BIGINT) AS n_cells
-        |FROM rws LEFT JOIN cells ON cells.r = rws.row
-        |GROUP BY rws.row""".stripMargin,
-
-    "q69_decontaminate" ->
-      """WITH eligible AS (
-        |  SELECT doc_id, trim(lower(text)) AS lt FROM documents
-        |  WHERE text IS NOT NULL
-        |    AND len(regexp_split_to_array(trim(text), '\s+')) >= 3),
-        |toks AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(lt, '\s+')) AS w,
-        |    unnest(range(1, len(regexp_split_to_array(lt, '\s+')) + 1)) AS pos
-        |  FROM eligible),
-        |tri AS (
-        |  SELECT DISTINCT doc_id,
-        |    w || ' ' || lead(w, 1) OVER (PARTITION BY doc_id ORDER BY pos)
-        |      || ' ' || lead(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS g
-        |  FROM toks
-        |  QUALIFY lead(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) IS NOT NULL),
-        |bench AS (SELECT DISTINCT g FROM tri WHERE doc_id % 97 = 0)
-        |SELECT t.doc_id, count(*) AS hits
-        |FROM tri t JOIN bench b ON b.g = t.g
-        |GROUP BY 1""".stripMargin,
-
-    "q70_stratified_sample" ->
-      """WITH fr AS (SELECT * FROM (VALUES ('en', 0.5), ('de', 0.25),
-        |  ('es', 0.125), ('fr', 0.75), ('zh', 0.0625)) AS t(lang, fraction))
-        |SELECT doc_id, d.lang
-        |FROM documents d JOIN fr ON fr.lang = d.lang
-        |WHERE ((((doc_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 2147483648
-        |      < CAST(fraction * 2147483648 AS BIGINT)""".stripMargin,
-
-    "q71_pack_sequences" ->
-      """WITH d AS (
-        |  SELECT doc_id, doc_id % 8 AS shard,
-        |    least(CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT),
-        |          256) AS toks
-        |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-        |c AS (SELECT *, sum(toks) OVER (PARTITION BY shard ORDER BY doc_id) AS cum
-        |  FROM d)
-        |SELECT shard, CAST(floor((cum - toks) / 256.0) AS BIGINT) AS bin,
-        |  count(*) AS n_docs, CAST(sum(toks) AS BIGINT) AS fill,
-        |  round(CAST(sum(toks) AS BIGINT) / 256.0, 6) AS fill_ratio
-        |FROM c GROUP BY 1, 2""".stripMargin,
-
-    "q72_redact_pii" ->
-      """WITH planted AS (
-        |  SELECT doc_id,
-        |    substr(text, 1, 40) || ' contact user' || doc_id ||
-        |    '@example.com or 555-' || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0')
-        |    || '-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ||
-        |    CASE WHEN doc_id % 3 = 0 THEN ' ssn 123-45-6789' ELSE '' END AS text
-        |  FROM documents WHERE text IS NOT NULL),
-        |step AS (
-        |  SELECT doc_id, text,
-        |    regexp_replace(text,
-        |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g')
-        |      AS after_email
-        |  FROM planted),
-        |step2 AS (
-        |  SELECT *, regexp_replace(after_email, '\d{3}-\d{2}-\d{4}', '<SSN>', 'g')
-        |    AS after_ssn
-        |  FROM step)
-        |SELECT doc_id,
-        |  len(regexp_split_to_array(text,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) - 1 AS n_email,
-        |  len(regexp_split_to_array(after_ssn,
-        |    '\(?\d{3}\)?[-. ]?\d{3}[-. ]?\d{4}')) - 1 AS n_phone,
-        |  len(regexp_split_to_array(after_email, '\d{3}-\d{2}-\d{4}')) - 1 AS n_ssn,
-        |  regexp_replace(after_ssn,
-        |    '\(?\d{3}\)?[-. ]?\d{3}[-. ]?\d{4}', '<PHONE>', 'g') AS redacted
-        |FROM step2""".stripMargin,
-
-    "q73_quantize_int8" ->
-      """WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |m AS (SELECT vec_id, v,
-        |  list_max(list_transform(v, x -> abs(x))) AS sc FROM e),
-        |q AS (SELECT vec_id, sc,
-        |  list_transform(v, x -> CASE WHEN sc = 0 THEN 0
-        |    ELSE CAST(floor(abs(x) / sc * 127 + 0.5) *
-        |         (CASE WHEN x < 0 THEN -1 ELSE 1 END) AS BIGINT) END) AS qs
-        |  FROM m)
-        |SELECT vec_id, round(CAST(CAST(sc AS FLOAT) AS DOUBLE), 6) AS scale_r,
-        |  CAST(list_sum(qs) AS BIGINT) AS qsum,
-        |  CAST(list_max(qs) AS BIGINT) AS qmax
-        |FROM q""".stripMargin,
-
-    "q74_image_decode" ->
-      """SELECT doc_id, 1 + doc_id % 16 AS width, 1 + doc_id % 11 AS height,
-        |  'png' AS format, doc_id % 256 AS mean_band0
-        |FROM documents WHERE doc_id IS NOT NULL""".stripMargin,
-
-    // pcm_sum closed form: sum_{i<n} (doc_id+i)%256 with s=doc_id%256,
-    // full=n//256, rem=n%256 → full*32640 + (tail series, wrap-aware).
-    "q84_audio_decode" ->
-      """WITH p AS (SELECT doc_id,
-        |    CAST(CASE doc_id % 3 WHEN 0 THEN 8000 WHEN 1 THEN 16000 ELSE 44100 END
-        |      AS BIGINT) AS sample_rate,
-        |    1 + doc_id % 2 AS channels, 50 + doc_id % 200 AS frames
-        |  FROM documents WHERE doc_id IS NOT NULL),
-        |q AS (SELECT *, doc_id % 256 AS s,
-        |    frames * channels * 2 AS n FROM p)
-        |SELECT doc_id, sample_rate, channels, CAST(16 AS BIGINT) AS bits, frames,
-        |  (frames * 1000000) // sample_rate AS duration_us,
-        |  'wave' AS container,
-        |  CAST((n // 256) * 32640 +
-        |    CASE WHEN s + (n % 256) <= 256
-        |      THEN (n % 256) * s + ((n % 256) * ((n % 256) - 1)) // 2
-        |      ELSE (256 - s) * s + ((256 - s) * (255 - s)) // 2
-        |           + ((n % 256 - 256 + s) * (n % 256 - 256 + s - 1)) // 2
-        |    END AS BIGINT) AS pcm_sum
-        |FROM q""".stripMargin,
-
-    // every field recomputed from the closed-form header plant: AVI fps is
-    // the strh rational (rate/scale), AVI duration uses the TRUNCATED
-    // µs-per-frame (1000000 // rate) exactly as the container stores it;
-    // MP4 duration is exact by construction (movDuration = timescale × s)
-    "q94_video_meta" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'avi' ELSE 'mp4' END AS container,
-        |  CAST(160 + doc_id % 320 AS BIGINT) AS width,
-        |  CAST(90 + doc_id % 240 AS BIGINT) AS height,
-        |  round(CASE WHEN doc_id % 2 = 0 THEN CAST(24 + doc_id % 30 AS DOUBLE)
-        |    ELSE CAST(2400 + doc_id % 100 AS DOUBLE) / (100 + doc_id % 50) END, 6) AS fps,
-        |  CAST(CASE WHEN doc_id % 2 = 0
-        |    THEN (100 + doc_id % 500) * (1000000 // (24 + doc_id % 30))
-        |    ELSE (5 + doc_id % 20) * 1000000 END AS BIGINT) AS duration_us,
-        |  CAST(CASE WHEN doc_id % 2 = 0 THEN 100 + doc_id % 500
-        |    ELSE 200 + doc_id % 300 END AS BIGINT) AS n_frames
-        |FROM documents WHERE doc_id IS NOT NULL""".stripMargin,
-
-    "q85_geodesic" -> GeodesicOracleSql,
-
-    // window=16, stride=12; the spine is sized FROM the data (max nc) so
-    // the oracle can never silently truncate a long document's chunks
-    "q86_chunk_windows" ->
-      """WITH d AS (SELECT doc_id,
-        |    regexp_split_to_array(trim(text), '\s+') AS toks,
-        |    len(regexp_split_to_array(trim(text), '\s+')) AS n
-        |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-        |c AS (SELECT *, CASE WHEN n <= 16 THEN 1
-        |    ELSE CAST(ceil((n - 16) / 12.0) AS INT) + 1 END AS nc FROM d),
-        |spine AS (SELECT unnest(range(0, (SELECT CAST(max(nc) AS BIGINT) FROM c))) AS i)
-        |SELECT doc_id, t.i AS chunk_idx,
-        |  CAST(least(16, n - t.i * 12) AS BIGINT) AS n_tokens,
-        |  toks[CAST(t.i * 12 + 1 AS INT)] AS head,
-        |  toks[CAST(t.i * 12 + least(16, n - t.i * 12) AS INT)] AS tail
-        |FROM c, spine t WHERE t.i < c.nc""".stripMargin,
-
-    "q87_length_percentiles" ->
-      """WITH d AS (SELECT lang,
-        |    CAST(len(regexp_split_to_array(trim(text), '\s+')) AS DOUBLE) AS n
-        |  FROM documents WHERE text IS NOT NULL AND trim(text) <> '')
-        |SELECT lang,
-        |  round(quantile_cont(n, 0.25), 6) AS p25,
-        |  round(quantile_cont(n, 0.5), 6) AS p50,
-        |  round(quantile_cont(n, 0.95), 6) AS p95,
-        |  count(*) AS n_docs
-        |FROM d GROUP BY lang""".stripMargin,
-
-    // width = 256/32 = 8; same clamp + interpolation arithmetic as the
-    // engine's histogramQuantiles
-    "q91_hist_quantiles" ->
-      """WITH d AS (SELECT lang,
-        |    CAST(len(regexp_split_to_array(trim(text), '\s+')) AS DOUBLE) AS n
-        |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-        |b AS (SELECT lang, least(greatest(CAST(floor(n / 8.0) AS INT), 0), 31) AS bin FROM d),
-        |c AS (SELECT lang, bin, count(*) AS c FROM b GROUP BY 1, 2),
-        |m AS (SELECT lang, bin, c,
-        |    sum(c) OVER (PARTITION BY lang ORDER BY bin) AS cum,
-        |    sum(c) OVER (PARTITION BY lang) AS nn FROM c)
-        |SELECT lang,
-        |  round(min(CASE WHEN cum >= 0.5 * nn AND cum - c < 0.5 * nn
-        |    THEN 0.0 + 8.0 * (bin + (0.5 * nn - (cum - c)) / c) END), 6) AS q50,
-        |  round(min(CASE WHEN cum >= 0.95 * nn AND cum - c < 0.95 * nn
-        |    THEN 0.0 + 8.0 * (bin + (0.95 * nn - (cum - c)) / c) END), 6) AS q95,
-        |  CAST(max(nn) AS BIGINT) AS n_rows
-        |FROM m GROUP BY lang""".stripMargin,
-
-    "q92_salted_agg" ->
-      """SELECT l_returnflag, CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-        |  count(*) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "q103_salted_join" ->
-      """WITH big AS (SELECT
-        |  CASE WHEN l_orderkey % 100 < 50 THEN 0
-        |       ELSE l_orderkey % 100 END AS k,
-        |  CAST(l_quantity AS BIGINT) AS qty FROM lineitem),
-        |dims AS (SELECT range AS k, range * 3 + 7 AS w FROM range(100))
-        |SELECT CAST(b.k AS BIGINT) AS k, count(*) AS n_rows,
-        |  CAST(sum(qty * w) AS BIGINT) AS wsum
-        |FROM big b JOIN dims d ON d.k = b.k
-        |GROUP BY b.k""".stripMargin,
-
-    "q88_unigram_surprisal" ->
-      """WITH tok AS (SELECT doc_id,
-        |    unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
-        |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-        |cnt AS (SELECT term, count(*) AS c FROM tok GROUP BY 1),
-        |tot AS (SELECT CAST(sum(c) AS DOUBLE) AS t FROM cnt)
-        |SELECT doc_id, round(avg(-ln(c / t)), 6) AS surprisal,
-        |  count(*) AS n_tokens
-        |FROM tok JOIN cnt USING (term) CROSS JOIN tot
-        |GROUP BY doc_id""".stripMargin,
-
-    "q101_bigram_surprisal" ->
-      """WITH base AS (SELECT doc_id, trim(lower(text)) AS lt FROM documents
-        |  WHERE text IS NOT NULL AND trim(text) <> ''),
-        |nz AS (SELECT doc_id, regexp_split_to_array(lt, '\s+') AS w,
-        |  len(regexp_split_to_array(lt, '\s+')) AS n FROM base),
-        |uc AS (SELECT term, count(*) AS cu
-        |  FROM (SELECT unnest(w) AS term FROM nz) GROUP BY 1),
-        |tot AS (SELECT CAST(sum(cu) AS DOUBLE) AS t FROM uc),
-        |inst AS (SELECT doc_id,
-        |  unnest(list_transform(range(1, len(w)), j -> w[j])) AS w1,
-        |  unnest(list_transform(range(1, len(w)), j -> w[j + 1])) AS w2
-        |  FROM nz WHERE n >= 2),
-        |bc AS (SELECT w1, w2, count(*) AS cb FROM inst GROUP BY 1, 2),
-        |iterm AS (SELECT i.doc_id,
-        |  -ln(0.5 * (cb / cu1.cu) + 0.5 * (cu2.cu / t)) AS s
-        |  FROM inst i JOIN bc USING (w1, w2)
-        |  JOIN uc cu1 ON cu1.term = i.w1
-        |  JOIN uc cu2 ON cu2.term = i.w2 CROSS JOIN tot),
-        |isum AS (SELECT doc_id, sum(s) AS bs FROM iterm GROUP BY 1),
-        |ft AS (SELECT nz.doc_id, -ln(uc.cu / t) AS fs, nz.n
-        |  FROM nz JOIN uc ON uc.term = nz.w[1] CROSS JOIN tot)
-        |SELECT ft.doc_id,
-        |  round((fs + coalesce(bs, 0)) / n, 6) AS surprisal,
-        |  CAST(n AS BIGINT) AS n_tokens
-        |FROM ft LEFT JOIN isum ON isum.doc_id = ft.doc_id""".stripMargin,
-
-    "q75_bm25" -> Bm25OracleSql,
-    "q100_rrf_hybrid" -> RrfOracleSql,
-
-    // same oracle as q75: the index path must reproduce direct BM25 exactly
-    "q79_text_index" -> Bm25OracleSql,
-    "q112_text_index_rolling" -> Bm25OracleSql,
-
-    "q113_weighted_sample" ->
-      raw"""WITH w AS (SELECT doc_id,
-        |    CASE WHEN text IS NULL THEN NULL
-        |         WHEN trim(text) = '' THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS toks
-        |  FROM documents),
-        |ks AS (SELECT doc_id, toks,
-        |    round(pow(
-        |      (((((doc_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 4294967296 + 1.0) / 4294967297.0,
-        |      1.0::DOUBLE / toks), 9) AS esk
-        |  FROM w WHERE toks IS NOT NULL AND toks > 0)
-        |SELECT doc_id, toks FROM ks ORDER BY esk DESC, doc_id LIMIT 100""".stripMargin,
-
-    "q76_repetition" ->
-      """WITH base AS (SELECT doc_id, trim(lower(text)) AS lt FROM documents),
-        |tok AS (SELECT doc_id,
-        |    unnest(regexp_split_to_array(lt, '\s+')) AS w,
-        |    unnest(range(1, len(regexp_split_to_array(lt, '\s+')) + 1)) AS pos
-        |  FROM base WHERE lt IS NOT NULL AND lt <> ''),
-        |bi AS (SELECT doc_id,
-        |    w || ' ' || lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS bg
-        |  FROM tok QUALIFY bg IS NOT NULL),
-        |r AS (SELECT doc_id,
-        |    round(1.0 - CAST(count(DISTINCT bg) AS DOUBLE) / count(*), 6) AS rr
-        |  FROM bi GROUP BY 1)
-        |SELECT b.doc_id,
-        |  CASE WHEN b.lt IS NULL THEN NULL
-        |       WHEN r.rr IS NOT NULL THEN r.rr
-        |       ELSE 0.0 END AS rep2
-        |FROM base b LEFT JOIN r USING (doc_id)""".stripMargin,
-
-    "q77_asof_join" ->
-      """WITH l AS (SELECT event_id, user_id, epoch_us(ts) AS ts FROM events
-        |  WHERE event_type = 'click' AND ts IS NOT NULL AND user_id IS NOT NULL),
-        |r AS (SELECT user_id, epoch_us(ts) AS ts, max(value) AS value FROM events
-        |  WHERE event_type = 'purchase' AND ts IS NOT NULL AND user_id IS NOT NULL
-        |  GROUP BY 1, 2)
-        |SELECT l.event_id, l.user_id, l.ts, r.value AS asof_value
-        |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin,
-
-    "q78_focal_stats" ->
-      """WITH cells AS (
-        |  SELECT CAST(user_id % 30 AS BIGINT) AS row,
-        |         CAST(event_id % 40 AS BIGINT) AS col,
-        |         CAST(count(*) AS DOUBLE) AS value
-        |  FROM events GROUP BY 1, 2),
-        |contrib AS (
-        |  SELECT cells.row + dr.range AS row, cells.col + dc.range AS col, value
-        |  FROM cells, range(-1, 2) dr, range(-1, 2) dc)
-        |SELECT row, col, round(avg(value), 6) AS focal_mean,
-        |  CAST(min(value) AS BIGINT) AS focal_min,
-        |  CAST(max(value) AS BIGINT) AS focal_max, count(*) AS focal_n
-        |FROM contrib
-        |WHERE row BETWEEN 0 AND 29 AND col BETWEEN 0 AND 39
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q80_missing_slots" ->
-      """WITH present AS (
-        |  SELECT DISTINCT user_id % 20 AS site,
-        |    (epoch_us(ts) // 3600000000) % 168 AS slot
-        |  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL),
-        |spine AS (SELECT s.range AS site, h.range AS slot
-        |  FROM range(20) s, range(168) h)
-        |SELECT site, slot FROM spine
-        |ANTI JOIN present USING (site, slot)""".stripMargin,
-
-    "q81_boilerplate" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS w,
-        |    unnest(range(1, len(regexp_split_to_array(trim(lower(text)), '\s+')) + 1)) AS pos
-        |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-        |p AS (SELECT doc_id, (pos - 1) // 4 AS chunk,
-        |    string_agg(w, ' ' ORDER BY pos) AS passage
-        |  FROM toks GROUP BY 1, 2),
-        |d AS (SELECT DISTINCT doc_id, passage FROM p)
-        |SELECT passage, count(*) AS n_docs FROM d
-        |GROUP BY 1 HAVING count(*) >= 3""".stripMargin,
-
-    "q82_token_budget" ->
-      """WITH b AS (SELECT * FROM (VALUES ('src0', 6000), ('src1', 3000),
-        |  ('src2', 12000)) AS t(source, budget)),
-        |d AS (SELECT doc_id, source,
-        |    CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS toks,
-        |    ((((doc_id % 2147483648) + 2147483648) % 2147483648) * 2654435761) % 2147483648 AS bkt
-        |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''),
-        |c AS (SELECT d.*, b.budget,
-        |    sum(toks) OVER (PARTITION BY d.source ORDER BY bkt, doc_id) AS cum
-        |  FROM d JOIN b ON b.source = d.source)
-        |SELECT doc_id, source, toks FROM c WHERE cum <= budget""".stripMargin,
-
-    "q43_set_ops" ->
-      """WITH a AS (SELECT DISTINCT p_brand FROM part WHERE p_size <= 10),
-        |b AS (SELECT DISTINCT p_brand FROM part WHERE p_retailprice > 950)
-        |SELECT p_brand, 'both' AS membership
-        |  FROM (SELECT p_brand FROM a INTERSECT SELECT p_brand FROM b)
-        |UNION ALL
-        |SELECT p_brand, 'only_small'
-        |  FROM (SELECT p_brand FROM a EXCEPT SELECT p_brand FROM b)
-        |UNION ALL
-        |SELECT p_brand, 'only_pricey'
-        |  FROM (SELECT p_brand FROM b EXCEPT SELECT p_brand FROM a)""".stripMargin,
-
-    "q44_star_join" ->
-      """SELECT r_name, n_name,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-        |  count(*) AS n_lines
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name""".stripMargin,
-
-    "q45_quality_filter" ->
-      """WITH d AS (SELECT doc_id, source, text,
-        |  regexp_split_to_array(trim(lower(text)), '\s+') AS ltoks,
-        |  regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
-        |sc AS (SELECT doc_id, source, text, toks,
-        |  len(list_filter(ltoks, t -> t IN ('the','and','of','is','with'))) AS s_en,
-        |  len(list_filter(ltoks, t -> t IN ('der','und','die','ist','mit'))) AS s_de,
-        |  len(list_filter(ltoks, t -> t IN ('le','et','les','est','avec'))) AS s_fr,
-        |  len(list_filter(ltoks, t -> t IN ('el','y','los','es','con'))) AS s_es,
-        |  len(list_filter(ltoks, t -> t IN ('de5','shi4','le5','he2','zai4'))) AS s_zh
-        |  FROM d),
-        |q AS (SELECT doc_id, source,
-        |  CASE WHEN greatest(s_en, s_de, s_fr, s_es, s_zh) = 0 THEN 'und'
-        |       WHEN s_en = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'en'
-        |       WHEN s_de = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'de'
-        |       WHEN s_fr = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'fr'
-        |       WHEN s_es = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'es'
-        |       ELSE 'zh' END AS lang_pred,
-        |  round((least(length(text) / 500.0, 1.0)
-        |    + (1.0 - least(length(regexp_replace(text, '[^[:punct:]]', '', 'g')) * 5.0
-        |        / length(text), 1.0))
-        |    + least(len(list_filter(toks, t -> lower(t) IN ('the','a','an','and','or','of',
-        |        'to','in','is','it','for','on','with','as','at','by','this','that')))
-        |        * 4.0 / len(toks), 1.0)) / 3.0, 6) AS quality
-        |  FROM sc)
-        |SELECT source, count(*) AS n_docs, round(avg(quality), 6) AS avg_quality
-        |FROM q WHERE lang_pred = 'en' AND quality >= 0.5
-        |GROUP BY source""".stripMargin,
-
-    "q58_sql_surface" ->
-      """WITH n AS (SELECT n_nationkey AS k, -30.0 + n_nationkey * 2.5 AS lat,
-        |  -20.0 + n_nationkey * 3.1 AS lon FROM nation)
-        |SELECT a.k AS k1, b.k AS k2,
-        |  round(2 * 6371.0088 * asin(sqrt(
-        |    pow(sin(radians(b.lat - a.lat) / 2), 2) +
-        |    cos(radians(a.lat)) * cos(radians(b.lat)) *
-        |    pow(sin(radians(b.lon - a.lon) / 2), 2))), 3) AS dist_km
-        |FROM n a JOIN n b ON a.k < b.k""".stripMargin,
-
-    "q54_subword_count" ->
-      """SELECT doc_id,
-        |  len(regexp_split_to_array(trim(text), '\s+')) AS n_words,
-        |  len(regexp_extract_all(text, '[A-Za-z]{1,4}|[0-9]{1,3}|[^A-Za-z0-9\s]'))
-        |    AS n_subwords
-        |FROM documents""".stripMargin,
-
-    "q55_char_shingles" ->
-      """WITH n AS (SELECT doc_id,
-        |  lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS s FROM documents)
-        |SELECT doc_id,
-        |  CASE WHEN length(s) < 3 THEN 1
-        |       ELSE len(list_distinct(list_transform(
-        |         range(1, greatest(length(s) - 2, 1) + 1), i -> substr(s, i::INT, 3))))
-        |  END AS n_shingles
-        |FROM n""".stripMargin,
-
-    "q47_token_histogram" ->
-      """SELECT token, count(*) AS n
-        |FROM (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS token
-        |      FROM documents)
-        |GROUP BY token ORDER BY n DESC, token LIMIT 20""".stripMargin,
-
-    "q48_lifetime_cohorts" ->
-      """WITH p AS (SELECT s_nationkey, s_acctbal,
-        |  CAST(1980 + s_suppkey % 40 AS INT) AS year,
-        |  CAST(20 + s_suppkey % 15 AS INT) AS lifetime FROM supplier)
-        |SELECT s_nationkey, year, round(sum(s_acctbal), 2) AS inst_cap,
-        |  count(*) AS n_plants
-        |FROM p WHERE year + lifetime >= 2015
-        |GROUP BY s_nationkey, year""".stripMargin,
-
-    "q49_embedding_pairs" ->
-      """WITH z AS (
-        |  SELECT a.vec_id AS id1, b.vec_id AS id2,
-        |    unnest(CAST(a.embedding AS DOUBLE[])) AS x,
-        |    unnest(CAST(b.embedding AS DOUBLE[])) AS y
-        |  FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1),
-        |s AS (SELECT id1, id2, sum(x * y) AS dp, sum(x * x) AS nx, sum(y * y) AS ny
-        |  FROM z GROUP BY id1, id2)
-        |SELECT id1, id2, round(dp / (sqrt(nx) * sqrt(ny)), 4) AS cosine FROM s""".stripMargin,
-
-    "q89_semantic_decontam" ->
-      """WITH b AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS bv
-        |  FROM embeddings WHERE vec_id % 101 = 0 AND embedding IS NOT NULL),
-        |c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv
-        |  FROM embeddings WHERE vec_id % 101 <> 0 AND embedding IS NOT NULL),
-        |z AS (SELECT c.vec_id, b.vec_id AS bid,
-        |    unnest(cv) AS x, unnest(bv) AS y FROM c, b),
-        |s AS (SELECT vec_id, bid,
-        |    CASE WHEN sum(x * x) = 0 OR sum(y * y) = 0 THEN 0.0
-        |      ELSE sum(x * y) / (sqrt(sum(x * x)) * sqrt(sum(y * y))) END AS cos
-        |  FROM z GROUP BY 1, 2)
-        |SELECT vec_id, count(*) AS n_hits, round(max(cos), 4) AS max_cos
-        |FROM s WHERE cos >= 0.3 GROUP BY vec_id""".stripMargin,
-
-    "q51_tumbling_window" ->
-      """SELECT (epoch_us(ts) // 300000000) * 300000000 AS w_start_us, event_type,
-        |  count(*) AS n, round(sum(value), 2) AS total
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "q52_spatial_join_tiled" ->
-      """SELECT r_name, count(*) AS n_customers
-        |FROM customer JOIN region
-        |  ON (c_custkey % 100 + 0.5) >= r_regionkey * 20
-        | AND (c_custkey % 100 + 0.5) < r_regionkey * 20 + 20
-        |GROUP BY r_name""".stripMargin,
-
-    "q61_first_match_dedup" ->
-      """WITH r AS (SELECT * FROM (VALUES (0, 0, 60), (1, 40, 100), (2, 80, 160))
-        |  AS t(range_id, lo, hi)),
-        |j AS (SELECT c_custkey, range_id FROM customer
-        |  JOIN r ON (c_custkey % 150) >= lo AND (c_custkey % 150) < hi)
-        |SELECT c_custkey, range_id FROM j
-        |QUALIFY row_number() OVER (PARTITION BY c_custkey ORDER BY range_id) = 1""".stripMargin,
-
-    "q50_cardinality" ->
-      """SELECT c_nationkey,
-        |  count(DISTINCT o_custkey) AS n_active_customers,
-        |  count(DISTINCT o_orderpriority) AS n_priorities,
-        |  count(*) AS n_orders
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_nationkey""".stripMargin,
-
-    // BYTE-based, not char-based: the Spark side reads binary media, so the
-    // oracle measures the UTF-8 encoding (octet_length + hex-substr byte
-    // extraction) — identical on ASCII, still correct if the fixture ever
-    // grows non-ASCII text.
-    "q46_multimodal_meta" ->
-      """WITH b AS (SELECT doc_id, encode(text) AS bs,
-        |  octet_length(encode(text)) AS n FROM documents)
-        |SELECT doc_id,
-        |  CASE WHEN n > 0 THEN 1 + n % 64 END AS width,
-        |  CASE WHEN n > 0 THEN 1 + (n * 7) % 64 END AS height,
-        |  CASE WHEN n > 0 THEN n END AS n_bytes,
-        |  CASE WHEN n > 0
-        |    THEN CAST(('0x' || substr(hex(bs), 1, 2)) AS INT)::BIGINT END AS first_byte,
-        |  CASE WHEN n > 0
-        |    THEN CAST(('0x' || substr(hex(bs), n * 2 - 1, 2)) AS INT)::BIGINT END AS last_byte
-        |FROM b""".stripMargin,
-
-    "q35_recode" ->
-      """SELECT r_regionkey,
-        |  CASE r_name WHEN 'AFRICA' THEN 'WEST' WHEN 'AMERICA' THEN 'WEST'
-        |    WHEN 'ASIA' THEN 'EAST' WHEN 'EUROPE' THEN 'EU' ELSE r_name END AS r_name
-        |FROM region""".stripMargin,
-
-    // q238: the clipped n-gram stats replayed list-for-list; grams
-    // join on chr(31) exactly like the Spark side's control-char
-    // separator, and every out-of-range slice coalesces to ''/[]
-    // (DuckDB NULL vs Spark empty).
-    "q238_bleu_stats" ->
-      raw"""WITH d AS (SELECT doc_id, str_split(trim(text), ' ') AS w
-         |  FROM documents),
-         |pr AS (SELECT doc_id,
-         |    COALESCE(array_to_string(w[1:10], ' '), '') AS ref,
-         |    COALESCE(CASE WHEN doc_id % 3 = 0
-         |        THEN array_to_string(w[1:10], ' ')
-         |      WHEN doc_id % 3 = 1 THEN array_to_string(w[3:12], ' ')
-         |      ELSE array_to_string(w[1:3], ' ') END, '') AS cand
-         |  FROM d),
-         |tk AS (SELECT doc_id, cand, ref,
-         |    list_filter(regexp_split_to_array(trim(cand), '\s+'),
-         |      t -> t <> '') AS c,
-         |    list_filter(regexp_split_to_array(trim(ref), '\s+'),
-         |      t -> t <> '') AS r
-         |  FROM pr),
-         |g AS (SELECT doc_id, cand, ref, c, r,
-         |    c AS gc1, r AS gr1,
-         |    list_transform(range(0, greatest(len(c) - 1, 0)),
-         |      i -> array_to_string(c[i+1:i+2], chr(31))) AS gc2,
-         |    list_transform(range(0, greatest(len(r) - 1, 0)),
-         |      i -> array_to_string(r[i+1:i+2], chr(31))) AS gr2,
-         |    list_transform(range(0, greatest(len(c) - 2, 0)),
-         |      i -> array_to_string(c[i+1:i+3], chr(31))) AS gc3,
-         |    list_transform(range(0, greatest(len(r) - 2, 0)),
-         |      i -> array_to_string(r[i+1:i+3], chr(31))) AS gr3,
-         |    list_transform(range(0, greatest(len(c) - 3, 0)),
-         |      i -> array_to_string(c[i+1:i+4], chr(31))) AS gc4,
-         |    list_transform(range(0, greatest(len(r) - 3, 0)),
-         |      i -> array_to_string(r[i+1:i+4], chr(31))) AS gr4
-         |  FROM tk),
-         |st AS (SELECT doc_id, cand, ref,
-         |    CAST(len(c) AS BIGINT) AS cand_len,
-         |    CAST(len(r) AS BIGINT) AS ref_len,
-         |    CAST(CASE WHEN len(gc1) = 0 THEN 0 ELSE list_reduce(
-         |      list_transform(list_distinct(gc1), t -> least(
-         |        len(list_filter(gc1, x -> x = t)),
-         |        len(list_filter(gr1, x -> x = t)))), (a, b) -> a + b)
-         |      END AS BIGINT) AS m1,
-         |    CAST(len(gc1) AS BIGINT) AS t1,
-         |    CAST(CASE WHEN len(gc2) = 0 THEN 0 ELSE list_reduce(
-         |      list_transform(list_distinct(gc2), t -> least(
-         |        len(list_filter(gc2, x -> x = t)),
-         |        len(list_filter(gr2, x -> x = t)))), (a, b) -> a + b)
-         |      END AS BIGINT) AS m2,
-         |    CAST(len(gc2) AS BIGINT) AS t2,
-         |    CAST(CASE WHEN len(gc3) = 0 THEN 0 ELSE list_reduce(
-         |      list_transform(list_distinct(gc3), t -> least(
-         |        len(list_filter(gc3, x -> x = t)),
-         |        len(list_filter(gr3, x -> x = t)))), (a, b) -> a + b)
-         |      END AS BIGINT) AS m3,
-         |    CAST(len(gc3) AS BIGINT) AS t3,
-         |    CAST(CASE WHEN len(gc4) = 0 THEN 0 ELSE list_reduce(
-         |      list_transform(list_distinct(gc4), t -> least(
-         |        len(list_filter(gc4, x -> x = t)),
-         |        len(list_filter(gr4, x -> x = t)))), (a, b) -> a + b)
-         |      END AS BIGINT) AS m4,
-         |    CAST(len(gc4) AS BIGINT) AS t4
-         |  FROM g)
-         |SELECT doc_id, cand, ref, cand_len, ref_len,
-         |  m1, t1, m2, t2, m3, t3, m4, t4,
-         |  CASE WHEN t1 > 0 AND t2 > 0 AND t3 > 0 AND t4 > 0
-         |    THEN CAST(floor(CAST(m1 * m2 * m3 * m4 AS DOUBLE) * 1000000
-         |      / (t1 * t2 * t3 * t4)) AS BIGINT) END AS prec_geo_ppm
-         |FROM st""".stripMargin,
-
-    // q239: the LCS row DP as a recursive CTE carrying the row as a
-    // list (q224 pattern); the within-row dependency is gone via the
-    // prefix-max identity new[j] = max(prev[j], max_{k<=j}(prev[k-1]
-    // + eq(i,k))) — valid because LCS rows are monotone.
-    "q239_rouge_l" ->
-      raw"""WITH RECURSIVE d AS (SELECT doc_id,
-         |    str_split(trim(text), ' ') AS w FROM documents),
-         |px AS (SELECT doc_id,
-         |    COALESCE(w[1:10], CAST([] AS VARCHAR[])) AS r0 FROM d),
-         |pc AS (SELECT px.doc_id, r0,
-         |    CASE WHEN px.doc_id % 3 = 0 THEN
-         |        list_transform(range(1, len(r0) + 1),
-         |          j -> CASE WHEN j = 4 THEN 'zzz' ELSE r0[j] END)
-         |      WHEN px.doc_id % 3 = 1 THEN
-         |        COALESCE(d.w[4:13], CAST([] AS VARCHAR[]))
-         |      ELSE list_reverse(r0) END AS c0
-         |  FROM px JOIN d ON d.doc_id = px.doc_id),
-         |tk AS (SELECT doc_id,
-         |    COALESCE(array_to_string(c0, ' '), '') AS cand,
-         |    COALESCE(array_to_string(r0, ' '), '') AS ref,
-         |    c0 AS c, r0 AS r FROM pc),
-         |lcs AS (
-         |  SELECT doc_id, c, r, 0 AS i,
-         |    list_transform(range(0, len(r) + 1), x -> 0) AS dp FROM tk
-         |  UNION ALL
-         |  SELECT doc_id, c, r, i + 1,
-         |    list_transform(range(0, len(r) + 1), j ->
-         |      CASE WHEN j = 0 THEN 0
-         |        ELSE greatest(dp[j + 1], list_max(
-         |          list_transform(range(1, j + 1), k ->
-         |            dp[k] + CASE WHEN c[i + 1] = r[k] THEN 1
-         |              ELSE 0 END))) END) AS dp
-         |  FROM lcs WHERE i < len(c)),
-         |fin AS (SELECT doc_id, dp[len(r) + 1] AS lcs FROM lcs
-         |  WHERE i = len(c))
-         |SELECT tk.doc_id, cand, ref,
-         |  CAST(len(c) AS BIGINT) AS cand_len,
-         |  CAST(len(r) AS BIGINT) AS ref_len,
-         |  CAST(fin.lcs AS BIGINT) AS lcs_len,
-         |  CAST(CASE WHEN len(c) + len(r) = 0 THEN 1000000
-         |    WHEN len(c) = 0 THEN 0
-         |    ELSE floor(CAST(fin.lcs AS DOUBLE) * 1000000 / len(c))
-         |    END AS BIGINT) AS rouge_p_ppm,
-         |  CAST(CASE WHEN len(c) + len(r) = 0 THEN 1000000
-         |    WHEN len(r) = 0 THEN 0
-         |    ELSE floor(CAST(fin.lcs AS DOUBLE) * 1000000 / len(r))
-         |    END AS BIGINT) AS rouge_r_ppm,
-         |  CAST(CASE WHEN len(c) + len(r) = 0 THEN 1000000
-         |    ELSE floor(CAST(fin.lcs AS DOUBLE) * 2000000
-         |      / (len(c) + len(r))) END AS BIGINT) AS rouge_f_ppm
-         |FROM tk JOIN fin ON fin.doc_id = tk.doc_id""".stripMargin,
-
-    // q240: two unnormalized HITS rounds unrolled join-for-join (the
-    // q164 pattern) on the DIRECTED customer->supplier graph.
-    "q240_hits" ->
-      raw"""WITH f AS (SELECT DISTINCT o_custkey AS src,
-         |    1000000 + l_suppkey AS dst
-         |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-         |n AS (SELECT src AS node FROM f UNION SELECT dst FROM f),
-         |a1 AS (SELECT dst AS node, CAST(count(*) AS BIGINT) AS auth
-         |  FROM f GROUP BY dst),
-         |a1f AS (SELECT n.node,
-         |    CAST(COALESCE(a1.auth, 0) AS BIGINT) AS auth
-         |  FROM n LEFT JOIN a1 ON a1.node = n.node),
-         |h1 AS (SELECT f.src AS node, CAST(sum(a1f.auth) AS BIGINT)
-         |    AS hub
-         |  FROM f JOIN a1f ON a1f.node = f.dst GROUP BY f.src),
-         |h1f AS (SELECT n.node,
-         |    CAST(COALESCE(h1.hub, 0) AS BIGINT) AS hub
-         |  FROM n LEFT JOIN h1 ON h1.node = n.node),
-         |a2 AS (SELECT f.dst AS node, CAST(sum(h1f.hub) AS BIGINT)
-         |    AS auth
-         |  FROM f JOIN h1f ON h1f.node = f.src GROUP BY f.dst),
-         |a2f AS (SELECT n.node,
-         |    CAST(COALESCE(a2.auth, 0) AS BIGINT) AS auth
-         |  FROM n LEFT JOIN a2 ON a2.node = n.node),
-         |h2 AS (SELECT f.src AS node, CAST(sum(a2f.auth) AS BIGINT)
-         |    AS hub
-         |  FROM f JOIN a2f ON a2f.node = f.dst GROUP BY f.src),
-         |h2f AS (SELECT n.node,
-         |    CAST(COALESCE(h2.hub, 0) AS BIGINT) AS hub
-         |  FROM n LEFT JOIN h2 ON h2.node = n.node)
-         |SELECT n.node, h2f.hub, a2f.auth
-         |FROM n JOIN h2f ON h2f.node = n.node
-         |  JOIN a2f ON a2f.node = n.node""".stripMargin,
-
-    // q241: the chained strict-min funnel replayed agg-for-agg on
-    // int64-nanos event time.
-    "q241_funnel" ->
-      raw"""WITH e AS (SELECT user_id, event_type, epoch_ns(ts) AS ts
-         |  FROM events),
-         |s1 AS (SELECT user_id AS "user", CAST(min(ts) AS BIGINT) AS ts1
-         |  FROM e WHERE event_type = 'view' GROUP BY 1),
-         |s2 AS (SELECT s1."user", s1.ts1,
-         |    CAST(min(CASE WHEN c.ts > s1.ts1 THEN c.ts END) AS BIGINT)
-         |      AS ts2
-         |  FROM s1 LEFT JOIN e c ON c.user_id = s1."user"
-         |    AND c.event_type = 'click'
-         |  GROUP BY 1, 2),
-         |s3 AS (SELECT s2."user", ts1, ts2,
-         |    CAST(min(CASE WHEN p.ts > s2.ts2 THEN p.ts END) AS BIGINT)
-         |      AS ts3
-         |  FROM s2 LEFT JOIN e p ON p.user_id = s2."user"
-         |    AND p.event_type = 'purchase'
-         |  GROUP BY 1, 2, 3)
-         |SELECT "user", ts1, ts2, ts3,
-         |  CAST(1 + CASE WHEN ts2 IS NULL THEN 0 ELSE 1 END
-         |    + CASE WHEN ts3 IS NULL THEN 0 ELSE 1 END AS INTEGER)
-         |    AS steps_completed
-         |FROM s3""".stripMargin,
-
-    "q242_k_anonymity" ->
-      raw"""WITH s AS (SELECT c_nationkey, c_mktsegment,
-         |    CAST(count(*) AS BIGINT) AS qi_n
-         |  FROM customer GROUP BY 1, 2 HAVING count(*) >= 7)
-         |SELECT c.c_custkey, c.c_nationkey, c.c_mktsegment, s.qi_n
-         |FROM customer c
-         |JOIN s USING (c_nationkey, c_mktsegment)""".stripMargin,
-
-    // q243: the seeded Lehmer noise draw replayed in exact integer
-    // arithmetic — sign from bit 0, magnitude = trailing one-bits of
-    // the rest via the binary string (printf('%b') here, conv(,10,2)
-    // on the Spark side — same digits).
-    "q243_noisy_counts" ->
-      raw"""WITH g AS (SELECT doc_id % 97 AS key,
-         |    CAST(count(*) AS BIGINT) AS n FROM documents GROUP BY 1),
-         |u AS (SELECT key, n,
-         |    ((key + 7) % 2147483647) * 48271 % 2147483647 AS l1 FROM g),
-         |v AS (SELECT key, n,
-         |    ((l1 + 7) % 2147483647) * 48271 % 2147483647 AS uu FROM u),
-         |m AS (SELECT key, n, uu, printf('%b', uu // 2) AS b FROM v),
-         |z AS (SELECT key, n, uu,
-         |    CAST(length(b) - length(rtrim(b, '1')) AS BIGINT) AS mag
-         |  FROM m)
-         |SELECT key, n,
-         |  CAST((1 - 2 * (uu % 2)) * mag AS BIGINT) AS noise,
-         |  CAST(greatest(n + (1 - 2 * (uu % 2)) * mag, 0) AS BIGINT)
-         |    AS noisy_n
-         |FROM z""".stripMargin,
-
-    // q244: multiplicity via the same whitespace/case normalization
-    // the Spark side hashes (the md5 is injective here, so grouping
-    // on the normalized string is the same partition).
-    "q244_soft_dedup" ->
-      raw"""WITH ad AS (SELECT doc_id, text FROM documents
-         |    UNION ALL
-         |    SELECT doc_id + 1000000, text FROM documents
-         |    WHERE doc_id % 7 = 0),
-         |h AS (SELECT doc_id, CASE WHEN text IS NULL THEN NULL
-         |    ELSE regexp_replace(lower(trim(text)), '\s+', ' ', 'g')
-         |    END AS ntext FROM ad),
-         |sz AS (SELECT ntext, CAST(count(*) AS BIGINT) AS dup_n
-         |  FROM h WHERE ntext IS NOT NULL GROUP BY ntext)
-         |SELECT h.doc_id, CAST(COALESCE(sz.dup_n, 1) AS BIGINT) AS dup_n,
-         |  CAST(1000000 // COALESCE(sz.dup_n, 1) AS BIGINT) AS weight_ppm
-         |FROM h LEFT JOIN sz USING (ntext)""".stripMargin,
-
-    // q245: closed-form planted clusters (the q65 pattern) — each
-    // clone family is one near-dup component by construction, so the
-    // oracle derives sizes from the clone formula without replaying
-    // the LSH.
-    "q245_soft_dedup_near" ->
-      raw"""WITH b AS (SELECT doc_id AS base,
-         |    1 + (doc_id // 10) % 4 AS g
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |c AS (SELECT base, g, unnest(range(0, 4)) AS j FROM b)
-         |SELECT CAST(base * 10 + j AS BIGINT) AS doc_id,
-         |  CAST(g AS BIGINT) AS dup_n,
-         |  CAST(1000000 // g AS BIGINT) AS weight_ppm
-         |FROM c WHERE j < g""".stripMargin,
-
-    // q246: the q75 BM25 chain, rounded-rank top-10 feedback, then the
-    // all-integer (df, tf, term) candidate ranking.
-    "q246_prf_expand" ->
-      raw"""WITH base AS (
-         |  SELECT doc_id, trim(lower(text)) AS lt FROM documents
-         |  WHERE text IS NOT NULL),
-         |dls AS (SELECT doc_id, lt,
-         |  CASE WHEN lt = '' THEN 0
-         |       ELSE len(regexp_split_to_array(lt, '\s+')) END AS dl
-         |  FROM base),
-         |stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dls),
-         |toks AS (SELECT doc_id, dl,
-         |  unnest(regexp_split_to_array(lt, '\s+')) AS term FROM dls),
-         |hits AS (SELECT doc_id, dl, term, count(*) AS tf FROM toks
-         |  WHERE term IN ('spark', 'query', 'join') GROUP BY 1, 2, 3),
-         |dfreq AS (SELECT term, count(DISTINCT doc_id) AS df FROM hits
-         |  GROUP BY 1),
-         |sc AS (SELECT h.doc_id,
-         |    round(sum(ln((n - df + 0.5) / (df + 0.5) + 1.0) * tf
-         |      * (1.2 + 1) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))),
-         |      6) AS r
-         |  FROM hits h CROSS JOIN stats JOIN dfreq USING (term)
-         |  GROUP BY 1),
-         |fb AS (SELECT doc_id FROM sc ORDER BY r DESC, doc_id LIMIT 10),
-         |ft AS (SELECT t.doc_id, t.term FROM toks t JOIN fb USING (doc_id)
-         |  WHERE t.term NOT IN ('spark', 'query', 'join')
-         |    AND t.term <> '')
-         |SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS fb_df,
-         |  CAST(count(*) AS BIGINT) AS fb_tf
-         |FROM ft GROUP BY term
-         |ORDER BY fb_df DESC, fb_tf DESC, term LIMIT 15""".stripMargin,
-
-    // q247: three plurality rounds unrolled — votes, node-partitioned
-    // argmax with (votes desc, label asc), seeds re-pinned each round.
-    "q247_label_prop" ->
-      raw"""WITH f0 AS (SELECT o_custkey AS src, 1000000 + l_suppkey AS dst
-         |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-         |e AS (SELECT DISTINCT src, dst FROM (
-         |  SELECT src, dst FROM f0 UNION ALL SELECT dst, src FROM f0)),
-         |sd AS (SELECT DISTINCT c_custkey AS node,
-         |    CAST(c_nationkey AS BIGINT) AS label
-         |  FROM customer WHERE c_custkey % 10 = 0),
-         |v1 AS (SELECT e.dst AS node, l.label, count(*) AS v
-         |  FROM e JOIN sd l ON l.node = e.src GROUP BY 1, 2),
-         |a1 AS (SELECT node, label FROM v1
-         |  QUALIFY row_number() OVER (PARTITION BY node
-         |    ORDER BY v DESC, label ASC) = 1),
-         |l1 AS (SELECT * FROM sd UNION ALL
-         |  SELECT * FROM a1 WHERE node NOT IN (SELECT node FROM sd)),
-         |v2 AS (SELECT e.dst AS node, l.label, count(*) AS v
-         |  FROM e JOIN l1 l ON l.node = e.src GROUP BY 1, 2),
-         |a2 AS (SELECT node, label FROM v2
-         |  QUALIFY row_number() OVER (PARTITION BY node
-         |    ORDER BY v DESC, label ASC) = 1),
-         |l2 AS (SELECT * FROM sd UNION ALL
-         |  SELECT * FROM a2 WHERE node NOT IN (SELECT node FROM sd)),
-         |v3 AS (SELECT e.dst AS node, l.label, count(*) AS v
-         |  FROM e JOIN l2 l ON l.node = e.src GROUP BY 1, 2),
-         |a3 AS (SELECT node, label FROM v3
-         |  QUALIFY row_number() OVER (PARTITION BY node
-         |    ORDER BY v DESC, label ASC) = 1),
-         |l3 AS (SELECT * FROM sd UNION ALL
-         |  SELECT * FROM a3 WHERE node NOT IN (SELECT node FROM sd))
-         |SELECT node, label FROM l3""".stripMargin,
-
-    // q248: sliding-window membership from epoch-microsecond
-    // arithmetic — window starts k·slide with (eu − len)//slide < k
-    // ≤ eu//slide — and the same integer milli value lattice.
-    "q248_hopping_window" ->
-      raw"""WITH e AS (SELECT epoch_us(ts) AS eu, event_type, value
-         |  FROM events),
-         |x AS (SELECT event_type, value,
-         |    unnest(list_transform(range(
-         |      (eu - 600000000) // 300000000 + 1,
-         |      eu // 300000000 + 1), k -> k * 300000000)) AS w_start_us
-         |  FROM e)
-         |SELECT w_start_us, event_type,
-         |  CAST(count(*) AS BIGINT) AS n,
-         |  CAST(sum(CAST(floor(value * 1000) AS BIGINT)) AS BIGINT)
-         |    AS total_milli
-         |FROM x GROUP BY 1, 2""".stripMargin,
-
-    // q249: the q239 recursive LCS DP keyed by (candidate, seed) over
-    // the bounded cross, then a candidate-partitioned argmax.
-    "q249_rouge_dedup" ->
-      raw"""WITH RECURSIVE d AS (SELECT doc_id,
-         |    str_split(trim(text), ' ') AS w FROM documents),
-         |cd AS (SELECT doc_id AS cand_id,
-         |    COALESCE(w[1:8], CAST([] AS VARCHAR[])) AS c
-         |  FROM d WHERE doc_id % 5 = 0),
-         |sp AS (SELECT doc_id AS sid,
-         |    COALESCE(w[1:8], CAST([] AS VARCHAR[])) AS r
-         |  FROM d WHERE doc_id % 20 = 0),
-         |pr AS (SELECT cand_id, sid, c, r FROM cd, sp),
-         |lcs AS (
-         |  SELECT cand_id, sid, c, r, 0 AS i,
-         |    list_transform(range(0, len(r) + 1), x -> 0) AS dp FROM pr
-         |  UNION ALL
-         |  SELECT cand_id, sid, c, r, i + 1,
-         |    list_transform(range(0, len(r) + 1), j ->
-         |      CASE WHEN j = 0 THEN 0
-         |        ELSE greatest(dp[j + 1], list_max(
-         |          list_transform(range(1, j + 1), k ->
-         |            dp[k] + CASE WHEN c[i + 1] = r[k] THEN 1
-         |              ELSE 0 END))) END) AS dp
-         |  FROM lcs WHERE i < len(c)),
-         |fin AS (SELECT cand_id, sid, dp[len(r) + 1] AS lcs FROM lcs
-         |  WHERE i = len(c)),
-         |f AS (SELECT p.cand_id, p.sid,
-         |    CAST(CASE WHEN len(p.c) + len(p.r) = 0 THEN 1000000
-         |      ELSE floor(CAST(fin.lcs AS DOUBLE) * 2000000
-         |        / (len(p.c) + len(p.r))) END AS BIGINT) AS fppm
-         |  FROM pr p JOIN fin ON fin.cand_id = p.cand_id
-         |    AND fin.sid = p.sid)
-         |SELECT cand_id, fppm AS best_f_ppm, sid AS best_seed,
-         |  fppm < 700000 AS keep
-         |FROM f QUALIFY row_number() OVER (PARTITION BY cand_id
-         |  ORDER BY fppm DESC, sid ASC) = 1""".stripMargin,
-
-    // q250: the same strictly-before RANGE window on int64-nanos time.
-    "q250_attribution" ->
-      raw"""WITH e AS (SELECT user_id AS "user", event_type AS etype,
-         |    epoch_ns(ts) AS ts, event_id FROM events
-         |  WHERE event_type IN ('purchase', 'click')),
-         |w AS (SELECT "user", etype, ts, event_id,
-         |    max(CASE WHEN etype = 'click' THEN ts END) OVER (
-         |      PARTITION BY "user" ORDER BY ts
-         |      RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-         |      AS touch_ts
-         |  FROM e)
-         |SELECT "user", event_id, ts AS conv_ts, touch_ts,
-         |  ts - touch_ts AS latency
-         |FROM w WHERE etype = 'purchase'""".stripMargin,
-
-    // q251: the q241 funnel chain + the same integer minute buckets.
-    "q251_funnel_latency" ->
-      raw"""WITH e AS (SELECT user_id, event_type, epoch_ns(ts) AS ts
-         |  FROM events),
-         |s1 AS (SELECT user_id AS "user", CAST(min(ts) AS BIGINT) AS ts1
-         |  FROM e WHERE event_type = 'view' GROUP BY 1),
-         |s2 AS (SELECT s1."user", s1.ts1,
-         |    CAST(min(CASE WHEN c.ts > s1.ts1 THEN c.ts END) AS BIGINT)
-         |      AS ts2
-         |  FROM s1 LEFT JOIN e c ON c.user_id = s1."user"
-         |    AND c.event_type = 'click'
-         |  GROUP BY 1, 2),
-         |s3 AS (SELECT s2."user", ts1, ts2,
-         |    CAST(min(CASE WHEN p.ts > s2.ts2 THEN p.ts END) AS BIGINT)
-         |      AS ts3
-         |  FROM s2 LEFT JOIN e p ON p.user_id = s2."user"
-         |    AND p.event_type = 'purchase'
-         |  GROUP BY 1, 2, 3),
-         |sel AS (
-         |  SELECT 2 AS step, (ts2 - ts1) // 60000000000 AS bucket
-         |  FROM s3 WHERE ts2 IS NOT NULL
-         |  UNION ALL
-         |  SELECT 3, (ts3 - ts2) // 60000000000
-         |  FROM s3 WHERE ts3 IS NOT NULL)
-         |SELECT CAST(step AS INTEGER) AS step,
-         |  CAST(bucket AS BIGINT) AS bucket,
-         |  CAST(count(*) AS BIGINT) AS n
-         |FROM sel GROUP BY 1, 2""".stripMargin,
-
-    // q252: the greedy MMR unrolled pick-for-pick (the q137 k-center
-    // pattern) — cosine kernels in the same ascending-j order, the
-    // exact-binary 0.5 weights, (score desc, id) argmax each round.
-    "q252_mmr_select" -> {
-      def cos(a: String, b: String) =
-        s"(list_reduce(list_transform(range(1, least(len($a.v), " +
-          s"len($b.v)) + 1), j -> $a.v[j] * $b.v[j]), (x, y) -> x + y)" +
-          s" / (sqrt(list_reduce(list_transform(range(1, len($a.v) + 1)" +
-          s", j -> $a.v[j] * $a.v[j]), (x, y) -> x + y))" +
-          s" * sqrt(list_reduce(list_transform(range(1, len($b.v) + 1)" +
-          s", j -> $b.v[j] * $b.v[j]), (x, y) -> x + y))))"
-      val stages = (2 to 5).map { i =>
-        s"""d$i AS (SELECT d.vec_id, d.v, d.rel,
-           |    greatest(d.smax, ${cos("d", "p")}) AS smax
-           |  FROM d${i - 1} d CROSS JOIN p${i - 1} p
-           |  WHERE d.vec_id <> p.vec_id),
-           |p$i AS (SELECT vec_id, v, rel,
-           |    0.5 * rel - 0.5 * smax AS score FROM d$i
-           |  ORDER BY score DESC, vec_id LIMIT 1)""".stripMargin
-      }.mkString(",\n")
-      val tail = (1 to 5).map { i =>
-        s"UNION ALL SELECT $i, vec_id, round(score, 6) FROM p$i"
-      }.mkString("\n")
-      s"""WITH eq AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         |    list_transform(range(1, 65),
-         |      j -> CAST(j % 5 - 2 AS DOUBLE)) AS q
-         |  FROM embeddings WHERE embedding IS NOT NULL),
-         |r AS (SELECT vec_id, v,
-         |    list_reduce(list_transform(range(1, least(len(v), len(q))
-         |        + 1), j -> v[j] * q[j]), (x, y) -> x + y)
-         |      / (sqrt(list_reduce(list_transform(range(1, len(v) + 1),
-         |          j -> v[j] * v[j]), (x, y) -> x + y))
-         |        * sqrt(list_reduce(list_transform(range(1, len(q) + 1),
-         |          j -> q[j] * q[j]), (x, y) -> x + y))) AS rel
-         |  FROM eq
-         |  WHERE list_reduce(list_transform(range(1, len(v) + 1),
-         |    j -> v[j] * v[j]), (x, y) -> x + y) > 0),
-         |p0 AS (SELECT vec_id, v, rel FROM r
-         |  ORDER BY rel DESC, vec_id LIMIT 1),
-         |d1 AS (SELECT d.vec_id, d.v, d.rel, ${cos("d", "p")} AS smax
-         |  FROM r d CROSS JOIN p0 p WHERE d.vec_id <> p.vec_id),
-         |p1 AS (SELECT vec_id, v, rel,
-         |    0.5 * rel - 0.5 * smax AS score FROM d1
-         |  ORDER BY score DESC, vec_id LIMIT 1),
-         |$stages
-         |SELECT CAST(0 AS INTEGER) AS pick, vec_id,
-         |  round(rel, 6) AS score FROM p0
-         |$tail""".stripMargin
-    },
-
-    // q253: the same slice-equality probes on list ops; the gazetteer
-    // re-derived from the fixture's bigram formula.
-    "q253_gazetteer" ->
-      raw"""WITH d AS (SELECT doc_id,
-         |    regexp_split_to_array(trim(CASE WHEN doc_id % 31 = 0
-         |      THEN replace(text, ' ', chr(9) || chr(10))
-         |      ELSE text END), '\s+') AS w
-         |  FROM documents),
-         |g AS (SELECT 'e' || doc_id AS entity, w[3:4] AS ph FROM d
-         |  WHERE doc_id % 50 = 0 AND len(w) >= 4),
-         |x AS (SELECT d.doc_id, g.entity,
-         |    list_filter(range(1, len(d.w) - len(g.ph) + 2),
-         |      p -> d.w[p:p + len(g.ph) - 1] = g.ph) AS hits
-         |  FROM d, g)
-         |SELECT doc_id, entity, CAST(len(hits) AS INTEGER) AS n_matches,
-         |  CAST(hits[1] AS INTEGER) AS first_pos
-         |FROM x WHERE len(hits) > 0""".stripMargin,
-
-    // q254: the 2x2 fold and the chi-square lattice replayed
-    // term-for-term (integer products, one DOUBLE division + floor).
-    "q254_ab_test" ->
-      raw"""WITH pu AS (SELECT user_id,
-         |    CAST(user_id % 2 AS BIGINT) AS variant,
-         |    CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-         |      END) AS BIGINT) AS conv
-         |  FROM events GROUP BY 1, 2),
-         |w AS (SELECT
-         |    CAST(COALESCE(sum(CASE WHEN variant = 0 THEN conv END), 0)
-         |      AS BIGINT) AS a,
-         |    CAST(COALESCE(sum(CASE WHEN variant = 0 THEN 1 - conv END),
-         |      0) AS BIGINT) AS b,
-         |    CAST(COALESCE(sum(CASE WHEN variant = 1 THEN conv END), 0)
-         |      AS BIGINT) AS c,
-         |    CAST(COALESCE(sum(CASE WHEN variant = 1 THEN 1 - conv END),
-         |      0) AS BIGINT) AS d
-         |  FROM pu),
-         |r AS (SELECT a, b, c, d,
-         |    CASE WHEN a + b = 0 THEN CAST(0 AS BIGINT)
-         |      ELSE CAST(floor(CAST(a AS DOUBLE) * 1000000 / (a + b))
-         |        AS BIGINT) END AS rate0_ppm,
-         |    CASE WHEN c + d = 0 THEN CAST(0 AS BIGINT)
-         |      ELSE CAST(floor(CAST(c AS DOUBLE) * 1000000 / (c + d))
-         |        AS BIGINT) END AS rate1_ppm
-         |  FROM w)
-         |SELECT a, b, c, d, rate0_ppm, rate1_ppm,
-         |  rate1_ppm - rate0_ppm AS risk_diff_ppm,
-         |  CASE WHEN (a + b) * (c + d) * (a + c) * (b + d) = 0
-         |    THEN CAST(0 AS BIGINT)
-         |    ELSE CAST(floor(CAST((a + b + c + d) * (a * d - b * c)
-         |      * (a * d - b * c) AS DOUBLE) * 1000
-         |      / ((a + b) * (c + d) * (a + c) * (b + d))) AS BIGINT)
-         |    END AS chi2_milli
-         |FROM r""".stripMargin,
-
-    // q255: integer hour buckets, first-seen minimum, distinct
-    // (cohort, offset, user) reduction, ppm floor.
-    "q255_retention" ->
-      raw"""WITH e AS (SELECT user_id AS "user",
-         |    epoch_ns(ts) // 3600000000000 AS period FROM events),
-         |fs AS (SELECT "user", min(period) AS cohort FROM e GROUP BY 1),
-         |sz AS (SELECT cohort, CAST(count(*) AS BIGINT) AS cohort_users
-         |  FROM fs GROUP BY 1),
-         |act AS (SELECT DISTINCT fs.cohort,
-         |    e.period - fs.cohort AS "offset", e."user"
-         |  FROM e JOIN fs USING ("user")),
-         |ag AS (SELECT cohort, "offset",
-         |    CAST(count(*) AS BIGINT) AS n_active
-         |  FROM act GROUP BY 1, 2)
-         |SELECT ag.cohort, ag."offset", ag.n_active, sz.cohort_users,
-         |  CAST(floor(CAST(n_active AS DOUBLE) * 1000000 / cohort_users)
-         |    AS BIGINT) AS retention_ppm
-         |FROM ag JOIN sz USING (cohort)""".stripMargin,
-
-    // q256: the kappa lattice — N·agree and the marginal product sum
-    // as integers, one DOUBLE division + floor.
-    "q256_kappa" ->
-      raw"""WITH b AS (SELECT
-         |    CASE WHEN doc_id % 3 = 0 THEN 'good' ELSE 'bad' END AS r1,
-         |    CASE WHEN (doc_id * 7) % 10 < 4 THEN 'good' ELSE 'bad'
-         |      END AS r2
-         |  FROM documents),
-         |t AS (SELECT CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(CASE WHEN r1 = r2 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS agree
-         |  FROM b),
-         |m1 AS (SELECT r1 AS k, count(*) AS n1 FROM b GROUP BY 1),
-         |m2 AS (SELECT r2 AS k, count(*) AS n2 FROM b GROUP BY 1),
-         |rc AS (SELECT CAST(COALESCE(sum(n1 * n2), 0) AS BIGINT)
-         |    AS sum_rc
-         |  FROM m1 JOIN m2 USING (k))
-         |SELECT n, agree, sum_rc,
-         |  CASE WHEN n * n = sum_rc THEN NULL
-         |    ELSE CAST(floor(CAST(n * agree - sum_rc AS DOUBLE) * 1000000
-         |      / (n * n - sum_rc)) AS BIGINT) END AS kappa_ppm
-         |FROM t CROSS JOIN rc""".stripMargin,
-
-    // q257/q258: same string surgery on props, then DuckDB's JSON
-    // primitives behind a json_valid guard (Spark's get_json_object /
-    // json_object_keys return null on garbage; DuckDB's throw).
-    "q257_json_stats" ->
-      raw"""WITH pr AS (SELECT event_type,
-         |    CASE WHEN event_id % 97 = 0 THEN '{oops'
-         |      WHEN event_id % 5 = 0
-         |        THEN regexp_replace(props, '\}$$', ', "extra": 1}')
-         |      ELSE props END AS p
-         |  FROM events),
-         |v AS (SELECT event_type AS grp,
-         |    CASE WHEN json_valid(p)
-         |      THEN try_cast(json_extract_string(p, '$$.k') AS BIGINT)
-         |      END AS v
-         |  FROM pr)
-         |SELECT grp,
-         |  CAST(sum(CASE WHEN v IS NOT NULL THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_present,
-         |  CAST(sum(CASE WHEN v IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_missing,
-         |  CAST(COALESCE(sum(v), 0) AS BIGINT) AS sum_v,
-         |  CAST(min(v) AS BIGINT) AS min_v,
-         |  CAST(max(v) AS BIGINT) AS max_v,
-         |  CAST(count(DISTINCT v) AS BIGINT) AS n_distinct
-         |FROM v GROUP BY grp""".stripMargin,
-
-    "q258_json_keys" ->
-      raw"""WITH pr AS (SELECT event_type,
-         |    CASE WHEN event_id % 97 = 0 THEN '{oops'
-         |      WHEN event_id % 5 = 0
-         |        THEN regexp_replace(props, '\}$$', ', "extra": 1}')
-         |      ELSE props END AS p
-         |  FROM events),
-         |k AS (SELECT event_type AS grp,
-         |    unnest(CASE WHEN json_valid(p) AND json_type(p) = 'OBJECT'
-         |      THEN json_keys(p) ELSE ['__invalid__'] END) AS key
-         |  FROM pr)
-         |SELECT grp, key, CAST(count(*) AS BIGINT) AS n
-         |FROM k GROUP BY 1, 2""".stripMargin,
-
-    // q259: same rank cut ((n·pct)//100 off each end, id tie-break).
-    "q259_trimmed_mean" ->
-      raw"""WITH b AS (SELECT lang AS grp, CAST(n_chars AS BIGINT) AS v,
-         |    doc_id AS t FROM documents),
-         |r AS (SELECT grp, v,
-         |    row_number() OVER (PARTITION BY grp ORDER BY v, t) AS rnk,
-         |    count(*) OVER (PARTITION BY grp) AS n FROM b),
-         |k AS (SELECT grp, v FROM r
-         |  WHERE rnk > n * 10 // 100 AND rnk <= n - n * 10 // 100)
-         |SELECT grp, CAST(count(*) AS BIGINT) AS n_kept,
-         |  CAST(sum(v) AS BIGINT) AS sum_kept,
-         |  CAST(floor(CAST(sum(v) AS DOUBLE) * 1000000 / count(*))
-         |    AS BIGINT) AS mean_ppm
-         |FROM k GROUP BY grp""".stripMargin,
-
-    // q260: the same lead window on (ts, event_id).
-    "q260_transitions" ->
-      raw"""WITH e AS (SELECT user_id, event_type AS f, epoch_ns(ts)
-         |    AS ts, event_id FROM events),
-         |p AS (SELECT f AS "from", lead(f) OVER (PARTITION BY user_id
-         |    ORDER BY ts, event_id) AS "to" FROM e),
-         |c AS (SELECT "from", "to", CAST(count(*) AS BIGINT) AS n
-         |  FROM p WHERE "to" IS NOT NULL GROUP BY 1, 2),
-         |t AS (SELECT "from", sum(n) AS tot FROM c GROUP BY 1)
-         |SELECT c."from", c."to", c.n,
-         |  CAST(floor(CAST(c.n AS DOUBLE) * 1000000 / t.tot) AS BIGINT)
-         |    AS p_ppm
-         |FROM c JOIN t USING ("from")""".stripMargin,
-
-    // q261: the sliding window replayed as per-start slice sums,
-    // earliest argmax via list_position.
-    "q261_snippets" ->
-      raw"""WITH d AS (SELECT doc_id,
-         |    list_filter(regexp_split_to_array(lower(trim(text)),
-         |      '\s+'), t -> t <> '') AS ws
-         |  FROM documents),
-         |h AS (SELECT doc_id, ws,
-         |    list_transform(ws, t -> CASE WHEN t IN ('spark', 'query',
-         |      'join') THEN 1 ELSE 0 END) AS hit,
-         |    least(8, len(ws)) AS w
-         |  FROM d WHERE len(ws) > 0),
-         |sc AS (SELECT doc_id, ws,
-         |    list_transform(range(1, len(ws) - w + 2),
-         |      p -> list_reduce(hit[p:p + w - 1], (a, b) -> a + b))
-         |      AS scores
-         |  FROM h),
-         |b AS (SELECT doc_id, ws, list_max(scores) AS best,
-         |    list_position(scores, list_max(scores)) AS start
-         |  FROM sc)
-         |SELECT doc_id, CAST(start AS INTEGER) AS start,
-         |  CAST(best AS INTEGER) AS n_hits,
-         |  array_to_string(ws[start:start + 7], ' ') AS snippet
-         |FROM b WHERE best > 0""".stripMargin,
-
-    // q262: the same window-start arithmetic on epoch-ns (all
-    // positive, so plain floor division agrees).
-    "q262_rolling_actives" ->
-      raw"""WITH e AS (SELECT user_id, epoch_ns(ts) AS ts FROM events),
-         |x AS (SELECT user_id, unnest(list_transform(range(
-         |    (ts - 21600000000000) // 3600000000000 + 1,
-         |    ts // 3600000000000 + 1), k -> k * 3600000000000))
-         |    AS w_start
-         |  FROM e),
-         |d AS (SELECT DISTINCT w_start, user_id FROM x)
-         |SELECT w_start, CAST(count(*) AS BIGINT) AS n_active
-         |FROM d GROUP BY 1""".stripMargin,
-
-    // q263: tombstones re-derived, no-match requests kept via the
-    // left join.
-    "q263_forget_audit" ->
-      raw"""WITH tt AS (SELECT unnest(range(0, 200)) AS u),
-         |tb AS (SELECT u FROM tt WHERE u % 13 = 0),
-         |c AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n
-         |  FROM events WHERE user_id % 13 = 0 GROUP BY 1)
-         |SELECT CAST(tb.u AS BIGINT) AS "user",
-         |  CAST(COALESCE(c.n, 0) AS BIGINT) AS n_removed
-         |FROM tb LEFT JOIN c ON c.user_id = tb.u""".stripMargin,
-
-    // q264: percent_rank's (rank-1)/(n-1) with the id tie-break.
-    "q264_quantile_norm" ->
-      raw"""WITH r AS (SELECT doc_id, source, n_chars,
-         |    row_number() OVER (PARTITION BY source
-         |      ORDER BY n_chars, doc_id) AS rk,
-         |    count(*) OVER (PARTITION BY source) AS n
-         |  FROM documents)
-         |SELECT doc_id, source, n_chars,
-         |  CAST(CASE WHEN n = 1 THEN 0
-         |    ELSE floor(CAST(rk - 1 AS DOUBLE) * 1000000 / (n - 1))
-         |    END AS BIGINT) AS pct_ppm
-         |FROM r""".stripMargin,
-
-    // q265: the same per-column statistics, one UNION branch per
-    // column (DuckDB side), string-rendered extremes.
-    "q265_profile" -> Seq("l_orderkey", "l_linenumber", "l_quantity",
-        "l_returnflag", "l_linestatus").map { c =>
-      raw"""SELECT '$c' AS "column",
-         |  CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_null,
-         |  CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct,
-         |  CAST(min($c) AS VARCHAR) AS min_s,
-         |  CAST(max($c) AS VARCHAR) AS max_s
-         |FROM lineitem""".stripMargin
-    }.mkString("\nUNION ALL\n"),
-
-    // q266: the k-by-2 chi-square replayed cell-for-cell — integer
-    // residual d = N·nc − nu·C, per-cell IEEE square/divide in the
-    // SAME op order as the Spark side, micro floor, integer sum.
-    "q266_ab_test_k" ->
-      raw"""WITH pu AS (SELECT user_id,
-         |    CAST(user_id % 3 AS BIGINT) AS variant,
-         |    CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-         |      END) AS BIGINT) AS conv
-         |  FROM events GROUP BY 1, 2),
-         |c AS (SELECT variant, CAST(count(*) AS BIGINT) AS n_users,
-         |    CAST(sum(conv) AS BIGINT) AS n_conv
-         |  FROM pu GROUP BY 1),
-         |t AS (SELECT CAST(sum(n_users) AS BIGINT) AS nn,
-         |    CAST(sum(n_conv) AS BIGINT) AS cc FROM c),
-         |cells AS (SELECT variant, n_users, n_conv,
-         |    CAST(floor(CAST(n_conv AS DOUBLE) * 1000000 / n_users)
-         |      AS BIGINT) AS rate_ppm,
-         |    nn * n_conv - n_users * cc AS d, nn, cc
-         |  FROM c, t),
-         |terms AS (SELECT variant, n_users, n_conv, rate_ppm, nn, cc,
-         |    CASE WHEN cc > 0 AND cc < nn THEN
-         |      CAST(floor(CAST(d AS DOUBLE) * CAST(d AS DOUBLE)
-         |        / CAST(nn * n_users * cc AS DOUBLE) * 1000000)
-         |        AS BIGINT)
-         |      + CAST(floor(CAST(d AS DOUBLE) * CAST(d AS DOUBLE)
-         |        / CAST(nn * n_users * (nn - cc) AS DOUBLE) * 1000000)
-         |        AS BIGINT)
-         |      ELSE 0 END AS term
-         |  FROM cells),
-         |chi AS (SELECT CAST(sum(term) AS BIGINT) AS s,
-         |    max(nn) AS n2, max(cc) AS c2 FROM terms)
-         |SELECT variant, n_users, n_conv, rate_ppm,
-         |  CASE WHEN c2 > 0 AND c2 < n2 THEN s END AS chi2_micro
-         |FROM terms, chi""".stripMargin,
-
-    // q267: clip on the exact centi lattice, then the q243 Lehmer
-    // draw with the magnitude scaled by clip; no zero clamp.
-    "q267_noisy_sums" ->
-      raw"""WITH e AS (SELECT CAST(user_id % 53 AS BIGINT) AS key,
-         |    least(greatest(CAST(floor(value * 100) AS BIGINT), -500),
-         |      500) AS cv
-         |  FROM events),
-         |g AS (SELECT key, CAST(sum(cv) AS BIGINT) AS clipped_sum
-         |  FROM e GROUP BY 1),
-         |u AS (SELECT key, clipped_sum,
-         |    ((key + 11) % 2147483647) * 48271 % 2147483647 AS l1 FROM g),
-         |v AS (SELECT key, clipped_sum,
-         |    ((l1 + 11) % 2147483647) * 48271 % 2147483647 AS uu FROM u),
-         |m AS (SELECT key, clipped_sum, uu, printf('%b', uu // 2) AS b
-         |  FROM v),
-         |z AS (SELECT key, clipped_sum, uu,
-         |    CAST(length(b) - length(rtrim(b, '1')) AS BIGINT) AS mag
-         |  FROM m)
-         |SELECT key, clipped_sum,
-         |  CAST((1 - 2 * (uu % 2)) * mag * 500 AS BIGINT) AS noise,
-         |  CAST(clipped_sum + (1 - 2 * (uu % 2)) * mag * 500 AS BIGINT)
-         |    AS noisy_sum
-         |FROM z""".stripMargin,
-
-    // q268: size + distinct-sensitive per QI group, HAVING both
-    // gates, re-joined onto the rows.
-    "q268_l_diversity" ->
-      raw"""WITH s AS (SELECT c_nationkey, c_mktsegment,
-         |    CAST(count(*) AS BIGINT) AS qi_n,
-         |    CAST(count(DISTINCT c_custkey % 5) AS BIGINT) AS qi_l
-         |  FROM customer GROUP BY 1, 2
-         |  HAVING count(*) >= 7 AND count(DISTINCT c_custkey % 5) >= 4)
-         |SELECT c.c_custkey, c.c_nationkey, c.c_mktsegment,
-         |  s.qi_n, s.qi_l
-         |FROM customer c JOIN s USING (c_nationkey, c_mktsegment)"""
-        .stripMargin,
-
-    // q269: the same path recursion with json_extract/json_keys —
-    // JSON null values coalesce to the JSON 'null' literal (DuckDB
-    // json_extract renders them SQL-null), invalid payloads class
-    // __invalid__, number/string/bool/null map from json_type.
-    "q269_json_paths" ->
-      raw"""WITH RECURSIVE src AS (SELECT event_type AS grp,
-         |    CASE WHEN event_id % 97 = 0 THEN '{oops'
-         |      WHEN event_id % 13 = 0 THEN '42'
-         |      ELSE '{"u":' || user_id || ',"meta":{"k":'
-         |        || (user_id % 7) || ',"t":["a",' || (user_id % 3)
-         |        || CASE WHEN event_id % 5 = 0
-         |          THEN '],"extra":{"d":true}},"z":null}'
-         |          ELSE ']},"z":null}' END
-         |      END AS p
-         |  FROM events),
-         |nodes AS (
-         |  SELECT grp, '$$' AS path, TRY_CAST(p AS JSON) AS j, 0 AS depth
-         |  FROM src
-         |  UNION ALL
-         |  SELECT n.grp, n.path || sfx AS path,
-         |    COALESCE(json_extract(n.j, '$$' || sfx),
-         |      CAST('null' AS JSON)) AS j,
-         |    n.depth + 1 AS depth
-         |  FROM nodes n, unnest(
-         |    CASE WHEN json_type(n.j) = 'OBJECT'
-         |        THEN list_transform(json_keys(n.j), k -> '.' || k)
-         |      WHEN json_type(n.j) = 'ARRAY'
-         |        THEN list_transform(
-         |          range(CAST(json_array_length(n.j) AS BIGINT)),
-         |          i -> '[' || CAST(i AS VARCHAR) || ']')
-         |      ELSE [] END) AS u(sfx)
-         |  WHERE n.depth < 4)
-         |SELECT grp, path,
-         |  CASE WHEN j IS NULL THEN '__invalid__'
-         |    WHEN json_type(j) = 'OBJECT' THEN 'object'
-         |    WHEN json_type(j) = 'ARRAY' THEN 'array'
-         |    WHEN json_type(j) = 'VARCHAR' THEN 'string'
-         |    WHEN json_type(j) IN ('UBIGINT', 'BIGINT', 'DOUBLE')
-         |      THEN 'number'
-         |    WHEN json_type(j) = 'BOOLEAN' THEN 'bool'
-         |    ELSE 'null' END AS vtype,
-         |  CAST(count(*) AS BIGINT) AS n
-         |FROM nodes GROUP BY 1, 2, 3""".stripMargin,
-
-    // q270: the q238 segment stats summed per system FIRST, then the
-    // geometric product on the sums — in IEEE double with the exact
-    // factor order the Spark side uses (corpus Πs overflow int64).
-    "q270_corpus_bleu" ->
-      raw"""WITH d AS (SELECT doc_id, str_split(trim(text), ' ') AS w
-         |  FROM documents),
-         |pr AS (SELECT doc_id,
-         |    COALESCE(array_to_string(w[1:10], ' '), '') AS ref,
-         |    COALESCE(CASE WHEN doc_id % 3 = 0
-         |        THEN array_to_string(w[1:10], ' ')
-         |      WHEN doc_id % 3 = 1 THEN array_to_string(w[3:12], ' ')
-         |      ELSE array_to_string(w[1:3], ' ') END, '') AS cand
-         |  FROM d),
-         |tk AS (SELECT doc_id, cand, ref,
-         |    list_filter(regexp_split_to_array(trim(cand), '\s+'),
-         |      t -> t <> '') AS c,
-         |    list_filter(regexp_split_to_array(trim(ref), '\s+'),
-         |      t -> t <> '') AS r
-         |  FROM pr),
-         |g AS (SELECT doc_id, c, r,
-         |    c AS gc1, r AS gr1,
-         |    list_transform(range(0, greatest(len(c) - 1, 0)),
-         |      i -> array_to_string(c[i+1:i+2], chr(31))) AS gc2,
-         |    list_transform(range(0, greatest(len(r) - 1, 0)),
-         |      i -> array_to_string(r[i+1:i+2], chr(31))) AS gr2,
-         |    list_transform(range(0, greatest(len(c) - 2, 0)),
-         |      i -> array_to_string(c[i+1:i+3], chr(31))) AS gc3,
-         |    list_transform(range(0, greatest(len(r) - 2, 0)),
-         |      i -> array_to_string(r[i+1:i+3], chr(31))) AS gr3,
-         |    list_transform(range(0, greatest(len(c) - 3, 0)),
-         |      i -> array_to_string(c[i+1:i+4], chr(31))) AS gc4,
-         |    list_transform(range(0, greatest(len(r) - 3, 0)),
-         |      i -> array_to_string(r[i+1:i+4], chr(31))) AS gr4
-         |  FROM tk),
-         |st AS (SELECT doc_id,
-         |    CAST(len(c) AS BIGINT) AS cand_len,
-         |    CAST(len(r) AS BIGINT) AS ref_len,
-         |    CAST(CASE WHEN len(gc1) = 0 THEN 0 ELSE list_reduce(
-         |      list_transform(list_distinct(gc1), t -> least(
-         |        len(list_filter(gc1, x -> x = t)),
-         |        len(list_filter(gr1, x -> x = t)))), (a, b) -> a + b)
-         |      END AS BIGINT) AS m1,
-         |    CAST(len(gc1) AS BIGINT) AS t1,
-         |    CAST(CASE WHEN len(gc2) = 0 THEN 0 ELSE list_reduce(
-         |      list_transform(list_distinct(gc2), t -> least(
-         |        len(list_filter(gc2, x -> x = t)),
-         |        len(list_filter(gr2, x -> x = t)))), (a, b) -> a + b)
-         |      END AS BIGINT) AS m2,
-         |    CAST(len(gc2) AS BIGINT) AS t2,
-         |    CAST(CASE WHEN len(gc3) = 0 THEN 0 ELSE list_reduce(
-         |      list_transform(list_distinct(gc3), t -> least(
-         |        len(list_filter(gc3, x -> x = t)),
-         |        len(list_filter(gr3, x -> x = t)))), (a, b) -> a + b)
-         |      END AS BIGINT) AS m3,
-         |    CAST(len(gc3) AS BIGINT) AS t3,
-         |    CAST(CASE WHEN len(gc4) = 0 THEN 0 ELSE list_reduce(
-         |      list_transform(list_distinct(gc4), t -> least(
-         |        len(list_filter(gc4, x -> x = t)),
-         |        len(list_filter(gr4, x -> x = t)))), (a, b) -> a + b)
-         |      END AS BIGINT) AS m4,
-         |    CAST(len(gc4) AS BIGINT) AS t4
-         |  FROM g),
-         |agg AS (SELECT CAST(doc_id % 3 AS BIGINT) AS sys,
-         |    CAST(sum(m1) AS BIGINT) AS m1, CAST(sum(t1) AS BIGINT) AS t1,
-         |    CAST(sum(m2) AS BIGINT) AS m2, CAST(sum(t2) AS BIGINT) AS t2,
-         |    CAST(sum(m3) AS BIGINT) AS m3, CAST(sum(t3) AS BIGINT) AS t3,
-         |    CAST(sum(m4) AS BIGINT) AS m4, CAST(sum(t4) AS BIGINT) AS t4,
-         |    CAST(sum(cand_len) AS BIGINT) AS cand_len_sum,
-         |    CAST(sum(ref_len) AS BIGINT) AS ref_len_sum,
-         |    CAST(count(*) AS BIGINT) AS n_segments
-         |  FROM st GROUP BY 1)
-         |SELECT sys, m1, t1, m2, t2, m3, t3, m4, t4,
-         |  cand_len_sum, ref_len_sum, n_segments,
-         |  CASE WHEN t1 > 0 AND t2 > 0 AND t3 > 0 AND t4 > 0
-         |    THEN CAST(floor(CAST(m1 AS DOUBLE) * CAST(m2 AS DOUBLE)
-         |      * CAST(m3 AS DOUBLE) * CAST(m4 AS DOUBLE) * 1000000
-         |      / (CAST(t1 AS DOUBLE) * CAST(t2 AS DOUBLE)
-         |        * CAST(t3 AS DOUBLE) * CAST(t4 AS DOUBLE)))
-         |      AS BIGINT) END AS prec_geo_ppm
-         |FROM agg""".stripMargin,
-
-    // q271: the q241 chained strict-min funnel with the 30-minute
-    // step bound carried inside each min-CASE.
-    "q271_funnel_within" ->
-      raw"""WITH e AS (SELECT user_id, event_type, epoch_ns(ts) AS ts
-         |  FROM events),
-         |s1 AS (SELECT user_id AS "user", CAST(min(ts) AS BIGINT) AS ts1
-         |  FROM e WHERE event_type = 'view' GROUP BY 1),
-         |s2 AS (SELECT s1."user", s1.ts1,
-         |    CAST(min(CASE WHEN c.ts > s1.ts1
-         |      AND c.ts <= s1.ts1 + 1800000000000 THEN c.ts END)
-         |      AS BIGINT) AS ts2
-         |  FROM s1 LEFT JOIN e c ON c.user_id = s1."user"
-         |    AND c.event_type = 'click'
-         |  GROUP BY 1, 2),
-         |s3 AS (SELECT s2."user", ts1, ts2,
-         |    CAST(min(CASE WHEN p.ts > s2.ts2
-         |      AND p.ts <= s2.ts2 + 1800000000000 THEN p.ts END)
-         |      AS BIGINT) AS ts3
-         |  FROM s2 LEFT JOIN e p ON p.user_id = s2."user"
-         |    AND p.event_type = 'purchase'
-         |  GROUP BY 1, 2, 3)
-         |SELECT "user", ts1, ts2, ts3,
-         |  CAST(1 + CASE WHEN ts2 IS NULL THEN 0 ELSE 1 END
-         |    + CASE WHEN ts3 IS NULL THEN 0 ELSE 1 END AS INTEGER)
-         |    AS steps_completed
-         |FROM s3""".stripMargin,
-
-    // q272: lag-gap session starts, ROWS-framed running sum for the
-    // session index, then the per-session fold — all on int64 nanos
-    // with the (ts, event_id) order.
-    "q272_sessions" ->
-      raw"""WITH e AS (SELECT user_id AS "user", epoch_ns(ts) AS ts,
-         |    event_id FROM events),
-         |l AS (SELECT "user", ts, event_id,
-         |    CASE WHEN lag(ts) OVER w IS NULL THEN 1
-         |      WHEN ts - lag(ts) OVER w > 1800000000000 THEN 1
-         |      ELSE 0 END AS nw
-         |  FROM e
-         |  WINDOW w AS (PARTITION BY "user" ORDER BY ts, event_id)),
-         |s AS (SELECT "user", ts,
-         |    CAST(sum(nw) OVER (PARTITION BY "user"
-         |      ORDER BY ts, event_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS BIGINT) AS session_ix
-         |  FROM l)
-         |SELECT "user", session_ix,
-         |  CAST(count(*) AS BIGINT) AS n_events,
-         |  CAST(min(ts) AS BIGINT) AS start_ts,
-         |  CAST(max(ts) AS BIGINT) AS end_ts,
-         |  CAST(max(ts) - min(ts) AS BIGINT) AS duration
-         |FROM s GROUP BY 1, 2""".stripMargin,
-
-    // q273: the doubled-midrank lattice replayed — per (exp, value)
-    // group counts, ROWS-framed cumulative below-count, 2·mid =
-    // 2·below + c0 + c1 + 1, U from the rank-sum identity.
-    "q273_mann_whitney" ->
-      raw"""WITH e AS (SELECT event_type AS exp,
-         |    CAST(user_id % 2 AS BIGINT) AS g,
-         |    CAST(floor(value * 100) AS BIGINT) AS v FROM events),
-         |c AS (SELECT exp, v,
-         |    CAST(sum(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS c0,
-         |    CAST(sum(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS c1
-         |  FROM e GROUP BY 1, 2),
-         |r AS (SELECT exp, c0, c1,
-         |    CAST(COALESCE(sum(c0 + c1) OVER (PARTITION BY exp
-         |      ORDER BY v
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS BIGINT) AS below
-         |  FROM c),
-         |m AS (SELECT exp, c0, c1, 2 * below + c0 + c1 + 1 AS mid2
-         |  FROM r),
-         |f AS (SELECT exp, CAST(sum(c0) AS BIGINT) AS n0,
-         |    CAST(sum(c1) AS BIGINT) AS n1,
-         |    CAST(sum(c1 * mid2) AS BIGINT) AS r1_x2
-         |  FROM m GROUP BY 1)
-         |SELECT exp, n0, n1, r1_x2,
-         |  CAST(r1_x2 - n1 * (n1 + 1) AS BIGINT) AS u1_x2,
-         |  CAST(2 * n0 * n1 - (r1_x2 - n1 * (n1 + 1)) AS BIGINT)
-         |    AS u0_x2
-         |FROM f""".stripMargin,
-
-    // q274: Fleiss' integer algebra replayed — cell counts from the
-    // three unioned rater columns, S2/C2 sums, one division + floor.
-    "q274_fleiss_kappa" ->
-      raw"""WITH r AS (SELECT doc_id,
-         |    CASE WHEN doc_id % 3 = 0 THEN 'good'
-         |      WHEN doc_id % 3 = 1 THEN 'bad' ELSE 'meh' END AS l1,
-         |    CASE WHEN (doc_id * 7) % 10 < 4 THEN 'good'
-         |      ELSE 'bad' END AS l2,
-         |    CASE WHEN (doc_id * 13) % 5 < 2 THEN 'good'
-         |      ELSE 'meh' END AS l3
-         |  FROM documents),
-         |lng AS (SELECT doc_id AS i, l1 AS l FROM r
-         |  UNION ALL SELECT doc_id, l2 FROM r
-         |  UNION ALL SELECT doc_id, l3 FROM r),
-         |cells AS (SELECT i, l, CAST(count(*) AS BIGINT) AS nik
-         |  FROM lng GROUP BY 1, 2),
-         |tot AS (SELECT CAST(count(DISTINCT i) AS BIGINT) AS n_items,
-         |    CAST(3 AS BIGINT) AS n_raters,
-         |    CAST(sum(nik * nik) AS BIGINT) AS s2 FROM cells),
-         |ck AS (SELECT l, CAST(sum(nik) AS BIGINT) AS c FROM cells
-         |  GROUP BY 1),
-         |c2 AS (SELECT CAST(sum(c * c) AS BIGINT) AS sum_c2 FROM ck)
-         |SELECT n_items, n_raters, s2, sum_c2,
-         |  CASE WHEN (n_items * n_raters) * (n_items * n_raters)
-         |      = sum_c2 THEN NULL
-         |    ELSE CAST(floor(CAST((s2 - n_items * n_raters)
-         |      * (n_items * n_raters)
-         |      - sum_c2 * (n_raters - 1) AS DOUBLE) * 1000000
-         |      / ((n_raters - 1) * ((n_items * n_raters)
-         |        * (n_items * n_raters) - sum_c2))) AS BIGINT)
-         |    END AS kappa_ppm
-         |FROM tot, c2""".stripMargin,
-
-    // q275: the goodness-of-fit chi-square replayed cell-for-cell
-    // against the 2:1:1:1 design (W = 5), abTestK op order.
-    "q275_srm" ->
-      raw"""WITH pu AS (SELECT user_id, CAST(user_id % 4 AS BIGINT)
-         |    AS variant FROM events GROUP BY 1, 2),
-         |obs AS (SELECT variant, CAST(count(*) AS BIGINT) AS n_users
-         |  FROM pu GROUP BY 1),
-         |d AS (SELECT * FROM (VALUES (CAST(0 AS BIGINT),
-         |    CAST(2 AS BIGINT)), (1, 1), (2, 1), (3, 1)) t(variant, w)),
-         |cells AS (SELECT d.variant,
-         |    CAST(COALESCE(obs.n_users, 0) AS BIGINT) AS n_users, d.w
-         |  FROM d LEFT JOIN obs USING (variant)),
-         |t AS (SELECT CAST(sum(n_users) AS BIGINT) AS nn FROM cells),
-         |terms AS (SELECT variant, n_users,
-         |    CAST(floor(CAST(w AS DOUBLE) * 1000000 / 5) AS BIGINT)
-         |      AS expected_ppm,
-         |    5 * n_users - nn * w AS dd, nn, w
-         |  FROM cells, t),
-         |x AS (SELECT variant, n_users, expected_ppm,
-         |    CASE WHEN nn > 0 THEN CAST(floor(CAST(dd AS DOUBLE)
-         |      * CAST(dd AS DOUBLE) / CAST(5 * nn * w AS DOUBLE)
-         |      * 1000000) AS BIGINT) ELSE 0 END AS term, nn
-         |  FROM terms),
-         |chi AS (SELECT CAST(sum(term) AS BIGINT) AS s, max(nn) AS n2
-         |  FROM x)
-         |SELECT variant, n_users, expected_ppm,
-         |  CASE WHEN n2 > 0 THEN s END AS chi2_micro
-         |FROM x, chi""".stripMargin,
-
-    // q276: the same rank cut, boundary values via conditional aggs,
-    // clamp re-joined onto every row.
-    "q276_winsorize" ->
-      raw"""WITH b AS (SELECT lang AS grp, CAST(doc_id AS BIGINT) AS id,
-         |    CAST(n_chars AS BIGINT) AS v,
-         |    CAST(row_number() OVER (PARTITION BY lang
-         |      ORDER BY n_chars, doc_id) AS BIGINT) AS r,
-         |    CAST(count(*) OVER (PARTITION BY lang) AS BIGINT) AS n
-         |  FROM documents),
-         |c AS (SELECT *, n * 10 // 100 AS cut FROM b),
-         |bo AS (SELECT grp,
-         |    CAST(min(CASE WHEN r > cut THEN v END) AS BIGINT) AS lo,
-         |    CAST(max(CASE WHEN r <= n - cut THEN v END) AS BIGINT)
-         |      AS hi
-         |  FROM c GROUP BY 1)
-         |SELECT c.grp, c.id, c.v,
-         |  CAST(least(greatest(c.v, bo.lo), bo.hi) AS BIGINT) AS v_wins,
-         |  bo.lo, bo.hi
-         |FROM c JOIN bo USING (grp)""".stripMargin,
-
-    // q277: the two ROWS frames replayed on the centi lattice,
-    // full-window positions only.
-    "q277_level_shift" ->
-      raw"""WITH e AS (SELECT event_type AS key, epoch_ns(ts) AS ts,
-         |    event_id AS tie, CAST(floor(value * 100) AS BIGINT) AS v
-         |  FROM events),
-         |x AS (SELECT key, ts, tie,
-         |    CAST(sum(v) OVER (PARTITION BY key ORDER BY ts, tie
-         |      ROWS BETWEEN 31 PRECEDING AND CURRENT ROW) AS BIGINT)
-         |      AS trail_sum,
-         |    count(*) OVER (PARTITION BY key ORDER BY ts, tie
-         |      ROWS BETWEEN 31 PRECEDING AND CURRENT ROW) AS tn,
-         |    CAST(sum(v) OVER (PARTITION BY key ORDER BY ts, tie
-         |      ROWS BETWEEN 1 FOLLOWING AND 32 FOLLOWING) AS BIGINT)
-         |      AS lead_sum,
-         |    count(*) OVER (PARTITION BY key ORDER BY ts, tie
-         |      ROWS BETWEEN 1 FOLLOWING AND 32 FOLLOWING) AS ln
-         |  FROM e)
-         |SELECT key, ts, CAST(tie AS BIGINT) AS tie, trail_sum,
-         |  lead_sum, CAST(lead_sum - trail_sum AS BIGINT) AS shift
-         |FROM x WHERE tn = 32 AND ln = 32""".stripMargin,
-
-    // q278: per-width min group sizes as UNION branches, the first
-    // passing width chosen by ladder index, floor-to-multiple buckets
-    // (pmod semantics spelled ((v % w) + w) % w for negatives).
-    "q278_generalize_k" ->
-      raw"""WITH src AS (SELECT c_custkey, c_mktsegment,
-         |    CAST(floor(c_acctbal * 100) AS BIGINT) AS cents
-         |  FROM customer),
-         |mins AS (
-         |  SELECT 1 AS ix, CAST(10000 AS BIGINT) AS wd,
-         |    (SELECT min(c) FROM (SELECT count(*) AS c FROM src
-         |      GROUP BY c_mktsegment,
-         |        cents - ((cents % 10000 + 10000) % 10000))) AS mn
-         |  UNION ALL
-         |  SELECT 2, 100000,
-         |    (SELECT min(c) FROM (SELECT count(*) AS c FROM src
-         |      GROUP BY c_mktsegment,
-         |        cents - ((cents % 100000 + 100000) % 100000)))
-         |  UNION ALL
-         |  SELECT 3, 1000000,
-         |    (SELECT min(c) FROM (SELECT count(*) AS c FROM src
-         |      GROUP BY c_mktsegment,
-         |        cents - ((cents % 1000000 + 1000000) % 1000000)))),
-         |ch AS (SELECT wd FROM mins WHERE mn >= 7 ORDER BY ix LIMIT 1),
-         |wb AS (SELECT s.c_custkey, s.c_mktsegment, s.cents,
-         |    CAST(s.cents - ((s.cents % ch.wd + ch.wd) % ch.wd)
-         |      AS BIGINT) AS cents_gen,
-         |    CAST(ch.wd AS BIGINT) AS gen_width
-         |  FROM src s, ch),
-         |sz AS (SELECT cents_gen, c_mktsegment,
-         |    CAST(count(*) AS BIGINT) AS qi_n
-         |  FROM wb GROUP BY 1, 2)
-         |SELECT wb.c_custkey, wb.c_mktsegment, wb.cents, wb.cents_gen,
-         |  sz.qi_n, wb.gen_width
-         |FROM wb JOIN sz USING (cents_gen, c_mktsegment)""".stripMargin,
-
-    // q279: json_valid-guarded extraction (DuckDB throws on garbage
-    // where Spark nulls), TRY_CAST per typed path.
-    "q279_json_flatten" ->
-      raw"""WITH src AS (SELECT event_id, event_type,
-         |    CASE WHEN event_id % 97 = 0 THEN '{oops'
-         |      WHEN event_id % 13 = 0 THEN '42'
-         |      ELSE '{"u":' || user_id || ',"meta":{"k":'
-         |        || (user_id % 7) || ',"t":["a",' || (user_id % 3)
-         |        || ']},"z":null}' END AS p
-         |  FROM events)
-         |SELECT event_id, event_type,
-         |  TRY_CAST(CASE WHEN json_valid(p)
-         |    THEN json_extract_string(p, '$$.u') END AS BIGINT) AS u_id,
-         |  TRY_CAST(CASE WHEN json_valid(p)
-         |    THEN json_extract_string(p, '$$.meta.k') END AS BIGINT)
-         |    AS k,
-         |  CASE WHEN json_valid(p)
-         |    THEN json_extract_string(p, '$$.meta.t[1]') END AS t1,
-         |  CASE WHEN json_valid(p)
-         |    THEN json_extract_string(p, '$$.z') END AS zz
-         |FROM src""".stripMargin,
-
-    // q280: triangle counts replayed with the simpler ID-ORDERED
-    // triple join (the result is orientation-invariant); same clique +
-    // chain edge derivation (shared CTE fragment), canonical dedup.
-    "q280_triangles" ->
-      raw"""WITH $cliqueChainSql,
-         |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS degree
-         |  FROM (SELECT a AS node FROM e UNION ALL SELECT b FROM e)
-         |  GROUP BY node),
-         |tri AS (SELECT e1.a AS u, e1.b AS v, e2.b AS w
-         |  FROM e e1 JOIN e e2 ON e2.a = e1.b
-         |  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-         |pn AS (SELECT node, CAST(count(*) AS BIGINT) AS triangles
-         |  FROM (SELECT u AS node FROM tri UNION ALL SELECT v FROM tri
-         |    UNION ALL SELECT w FROM tri) GROUP BY node)
-         |SELECT deg.node, deg.degree,
-         |  CAST(COALESCE(pn.triangles, 0) AS BIGINT) AS triangles,
-         |  CAST(CASE WHEN deg.degree < 2 THEN 0
-         |    ELSE (2000000 * COALESCE(pn.triangles, 0))
-         |      // (deg.degree * (deg.degree - 1)) END AS BIGINT)
-         |    AS lcc_ppm
-         |FROM deg LEFT JOIN pn ON pn.node = deg.node""".stripMargin,
-
-    // q281: CUPED -- integer sums, the single IEEE theta division and
-    // the per-row fold replayed in the operator's exact op order.
-    "q281_cuped" ->
-      raw"""WITH pu AS (SELECT user_id AS id,
-         |    CAST(COALESCE(sum(CASE WHEN event_type = 'view'
-         |      THEN CAST(floor(value * 100) AS BIGINT) END), 0)
-         |      AS BIGINT) AS pre,
-         |    CAST(COALESCE(sum(CASE WHEN event_type = 'click'
-         |      THEN CAST(floor(value * 100) AS BIGINT) END), 0)
-         |      AS BIGINT) AS post
-         |  FROM events GROUP BY user_id),
-         |st AS (SELECT CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(pre) AS BIGINT) AS sx,
-         |    CAST(sum(post) AS BIGINT) AS sy,
-         |    CAST(sum(pre * post) AS BIGINT) AS sxy,
-         |    CAST(sum(pre * pre) AS BIGINT) AS sxx FROM pu),
-         |th AS (SELECT n, sx, n * sxy - sx * sy AS num,
-         |    n * sxx - sx * sx AS den FROM st)
-         |SELECT pu.id, pu.pre, pu.post,
-         |  CASE WHEN th.den = 0 THEN NULL
-         |    ELSE CAST(floor(CAST(th.num AS DOUBLE)
-         |      / CAST(th.den AS DOUBLE) * 1000000) AS BIGINT) END
-         |    AS theta_ppm,
-         |  CASE WHEN th.den = 0
-         |    THEN CAST(floor(CAST(pu.post AS DOUBLE) * 1000000)
-         |      AS BIGINT)
-         |    ELSE CAST(floor((CAST(pu.post AS DOUBLE)
-         |      - CAST(th.num AS DOUBLE) / CAST(th.den AS DOUBLE)
-         |        * (CAST(pu.pre AS DOUBLE)
-         |          - CAST(th.sx AS DOUBLE) / CAST(th.n AS DOUBLE)))
-         |      * 1000000) AS BIGINT) END AS adj_micro
-         |FROM pu, th""".stripMargin,
-
-    // q282: Kaplan-Meier -- risk sets from the descending cumulative
-    // window, the ppm survival recurrence replayed as a recursive CTE
-    // walking event-time ranks per group.
-    "q282_survival" ->
-      raw"""WITH RECURSIVE subj AS (SELECT
-         |    ((user_id % 2) + 2) % 2 AS grp,
-         |    (max(epoch_ns(ts)) - min(epoch_ns(ts)))
-         |      // 3600000000000 AS t,
-         |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-         |      AS e
-         |  FROM events GROUP BY user_id),
-         |bd AS (SELECT grp, t, count(*) AS c,
-         |    CAST(sum(e) AS BIGINT) AS d FROM subj GROUP BY grp, t),
-         |rk AS (SELECT grp, t, d, CAST(sum(c) OVER (PARTITION BY grp
-         |      ORDER BY t DESC) AS BIGINT) AS n_risk FROM bd),
-         |et AS (SELECT grp, t, n_risk, d, row_number() OVER (
-         |    PARTITION BY grp ORDER BY t) AS rn FROM rk WHERE d >= 1),
-         |km AS (
-         |  SELECT grp, rn, t, n_risk, d,
-         |    (1000000 * (n_risk - d)) // n_risk AS s_ppm
-         |  FROM et WHERE rn = 1
-         |  UNION ALL
-         |  SELECT e.grp, e.rn, e.t, e.n_risk, e.d,
-         |    (km.s_ppm * (e.n_risk - e.d)) // e.n_risk
-         |  FROM km JOIN et e ON e.grp = km.grp AND e.rn = km.rn + 1)
-         |SELECT CAST(grp AS BIGINT) AS grp, CAST(t AS BIGINT) AS t,
-         |  n_risk, d, CAST(s_ppm AS BIGINT) AS s_ppm
-         |FROM km""".stripMargin,
-
-    // q283: Benford audit -- digit relation, nine-row zero-filled
-    // domain, the micro-lattice chi-square cells in the operator's
-    // exact double op order.
-    "q283_benford" ->
-      raw"""WITH v AS (SELECT c_mktsegment AS key,
-         |    CAST(floor(c_acctbal * 100) AS BIGINT) AS v
-         |  FROM customer),
-         |d AS (SELECT key, CASE WHEN v = 0 THEN NULL
-         |    ELSE CAST(substr(CAST(abs(v) AS VARCHAR), 1, 1) AS BIGINT)
-         |    END AS digit FROM v),
-         |pk AS (SELECT key, CAST(count(digit) AS BIGINT) AS nn,
-         |    CAST(sum(CASE WHEN digit IS NULL THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n_zero
-         |  FROM d GROUP BY key),
-         |ob AS (SELECT key, digit, CAST(count(*) AS BIGINT) AS n_obs
-         |  FROM d WHERE digit IS NOT NULL GROUP BY key, digit),
-         |dom AS (SELECT * FROM (VALUES (1, 301030), (2, 176091),
-         |    (3, 124939), (4, 96910), (5, 79181), (6, 66947),
-         |    (7, 57992), (8, 51153), (9, 45757))
-         |    t(digit, expected_ppm)),
-         |cells AS (SELECT pk.key, CAST(dom.digit AS BIGINT) AS digit,
-         |    CAST(dom.expected_ppm AS BIGINT) AS expected_ppm,
-         |    CAST(COALESCE(ob.n_obs, 0) AS BIGINT) AS n_obs,
-         |    pk.nn, pk.n_zero
-         |  FROM pk CROSS JOIN dom LEFT JOIN ob
-         |    ON ob.key = pk.key AND ob.digit = dom.digit),
-         |t2 AS (SELECT *, 1000000 * n_obs - nn * expected_ppm AS r,
-         |    CASE WHEN nn > 0 THEN CAST(floor(
-         |      (CAST(1000000 * n_obs - nn * expected_ppm AS DOUBLE)
-         |        / 1000000.0)
-         |      * (CAST(1000000 * n_obs - nn * expected_ppm AS DOUBLE)
-         |        / 1000000.0)
-         |      / (CAST(nn AS DOUBLE) * CAST(expected_ppm AS DOUBLE)
-         |        / 1000000.0) * 1000000) AS BIGINT) END AS term
-         |  FROM cells),
-         |chi AS (SELECT key, CAST(sum(term) AS BIGINT) AS chi2_micro
-         |  FROM t2 GROUP BY key)
-         |SELECT t2.key, t2.digit, t2.n_obs, t2.expected_ppm, t2.n_zero,
-         |  chi.chi2_micro
-         |FROM t2 JOIN chi ON chi.key = t2.key""".stripMargin,
-
-    // q284: two-sample chi-square homogeneity per key -- integer
-    // residuals T*O - row*col, cells floored to micro in the exact
-    // double op order, null when a period marginal is empty.
-    "q284_chi_drift" ->
-      raw"""WITH r AS (SELECT event_type AS key,
-         |    ((user_id % 8) + 8) % 8 AS bucket, event_id % 2 AS p
-         |  FROM events),
-         |cells AS (SELECT key, CAST(bucket AS BIGINT) AS bucket,
-         |    CAST(sum(CASE WHEN p = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n0,
-         |    CAST(sum(CASE WHEN p = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n1
-         |  FROM r GROUP BY 1, 2),
-         |ks AS (SELECT key, CAST(sum(n0) AS BIGINT) AS c0,
-         |    CAST(sum(n1) AS BIGINT) AS c1,
-         |    CAST(count(*) AS BIGINT) AS n_buckets
-         |  FROM cells GROUP BY key),
-         |tm AS (SELECT cells.key, cells.bucket, cells.n0, cells.n1,
-         |    ks.n_buckets, ks.c0, ks.c1, ks.c0 + ks.c1 AS tt,
-         |    cells.n0 + cells.n1 AS rw
-         |  FROM cells JOIN ks ON ks.key = cells.key),
-         |tt2 AS (SELECT *,
-         |    CASE WHEN rw = 0 OR c0 = 0 OR tt = 0 THEN 0
-         |      ELSE CAST(floor(CAST(tt * n0 - rw * c0 AS DOUBLE)
-         |        * CAST(tt * n0 - rw * c0 AS DOUBLE)
-         |        / (CAST(tt AS DOUBLE) * CAST(rw AS DOUBLE)
-         |          * CAST(c0 AS DOUBLE)) * 1000000) AS BIGINT) END
-         |      AS term0,
-         |    CASE WHEN rw = 0 OR c1 = 0 OR tt = 0 THEN 0
-         |      ELSE CAST(floor(CAST(tt * n1 - rw * c1 AS DOUBLE)
-         |        * CAST(tt * n1 - rw * c1 AS DOUBLE)
-         |        / (CAST(tt AS DOUBLE) * CAST(rw AS DOUBLE)
-         |          * CAST(c1 AS DOUBLE)) * 1000000) AS BIGINT) END
-         |      AS term1
-         |  FROM tm),
-         |chi AS (SELECT key, CAST(sum(term0 + term1) AS BIGINT) AS ch,
-         |    max(CASE WHEN c0 = 0 OR c1 = 0 THEN 1 ELSE 0 END)
-         |      AS degen
-         |  FROM tt2 GROUP BY key)
-         |SELECT tt2.key, tt2.bucket, tt2.n0, tt2.n1, tt2.n_buckets,
-         |  CASE WHEN chi.degen = 1 THEN NULL ELSE chi.ch END
-         |    AS chi2_micro
-         |FROM tt2 JOIN chi ON chi.key = tt2.key""".stripMargin,
-
-    // q285: grouped OLS -- five exact sums, num/den integers, the two
-    // floored IEEE divisions in the operator's op order.
-    "q285_ols" ->
-      raw"""WITH r AS (SELECT event_type AS grp,
-         |    ((((epoch_ns(ts) - ((epoch_ns(ts) % 3600000000000
-         |      + 3600000000000) % 3600000000000)) // 3600000000000)
-         |      % 168) + 168) % 168 AS x,
-         |    CAST(floor(value * 100) AS BIGINT) AS y
-         |  FROM events),
-         |st AS (SELECT grp, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         |    CAST(sum(x * y) AS BIGINT) AS sxy,
-         |    CAST(sum(x * x) AS BIGINT) AS sxx
-         |  FROM r GROUP BY grp),
-         |f AS (SELECT grp, n, n * sxy - sx * sy AS num,
-         |    n * sxx - sx * sx AS den, sx, sy FROM st)
-         |SELECT grp, n, num, den,
-         |  CASE WHEN den = 0 THEN NULL
-         |    ELSE CAST(floor(CAST(num AS DOUBLE) / CAST(den AS DOUBLE)
-         |      * 1000000) AS BIGINT) END AS slope_ppm,
-         |  CASE WHEN den = 0 THEN NULL
-         |    ELSE CAST(floor((CAST(sy AS DOUBLE)
-         |      - CAST(num AS DOUBLE) / CAST(den AS DOUBLE)
-         |        * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE) * 1000)
-         |      AS BIGINT) END AS intercept_milli
-         |FROM f""".stripMargin,
-
-    // q286: seasonal profile -- pmod-floor hour-of-day phases, per-
-    // phase exact sums, floored mean and index in the operator's op
-    // order, null index for zero-sum keys.
-    "q286_seasonal" ->
-      raw"""WITH r AS (SELECT event_type AS key, epoch_ns(ts) AS ts,
-         |    CAST(floor(value * 100) AS BIGINT) AS v FROM events),
-         |ph AS (SELECT key, ((((ts - ((ts % 3600000000000
-         |      + 3600000000000) % 3600000000000)) // 3600000000000)
-         |      % 24) + 24) % 24 AS phase, v FROM r),
-         |cells AS (SELECT key, CAST(phase AS BIGINT) AS phase,
-         |    CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(v) AS BIGINT) AS val_sum
-         |  FROM ph GROUP BY 1, 2),
-         |tot AS (SELECT key, CAST(sum(n) AS BIGINT) AS na,
-         |    CAST(sum(val_sum) AS BIGINT) AS sa
-         |  FROM cells GROUP BY key)
-         |SELECT c.key, c.phase, c.n, c.val_sum,
-         |  CAST(floor(CAST(c.val_sum AS DOUBLE) / CAST(c.n AS DOUBLE)
-         |    * 1000) AS BIGINT) AS mean_milli,
-         |  CASE WHEN t.sa = 0 THEN NULL
-         |    ELSE CAST(floor((CAST(c.val_sum AS DOUBLE)
-         |      / CAST(c.n AS DOUBLE)) / (CAST(t.sa AS DOUBLE)
-         |      / CAST(t.na AS DOUBLE)) * 1000000) AS BIGINT) END
-         |    AS index_ppm
-         |FROM cells c JOIN tot t ON t.key = c.key""".stripMargin,
-
-    // q287: trending terms -- house tokenization, add-one-smoothed
-    // ratio on HUGEINT (exact, mirroring the engine's DECIMAL), top
-    // 100 by (ratio, term).
-    "q287_trending" ->
-      raw"""WITH toks AS (SELECT doc_id % 2 AS p,
-         |    unnest(list_filter(regexp_split_to_array(
-         |      lower(trim(text)), '\s+'), x -> x <> '')) AS term
-         |  FROM documents),
-         |cnt AS (SELECT term,
-         |    CAST(sum(CASE WHEN p = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS c0,
-         |    CAST(sum(CASE WHEN p = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS c1
-         |  FROM toks GROUP BY term),
-         |tot AS (SELECT CAST(sum(c0) AS BIGINT) AS n0,
-         |    CAST(sum(c1) AS BIGINT) AS n1 FROM cnt)
-         |SELECT term, c0, c1,
-         |  CAST((1000000::HUGEINT * (c1 + 1)::HUGEINT * n0::HUGEINT)
-         |    // ((c0 + 1)::HUGEINT * n1::HUGEINT) AS BIGINT)
-         |    AS ratio_ppm
-         |FROM cnt, tot WHERE c1 >= 2
-         |ORDER BY ratio_ppm DESC, term LIMIT 100""".stripMargin,
-
-    // q288: eight unconditional synchronous peels (idempotent past the
-    // fixpoint the engine detects), final degrees on the survivor-
-    // induced subgraph; same sparsified clique+chain derivation.
-    "q288_k_core" ->
-      raw"""WITH ${cliqueChainSqlSparse},
-         |${kCorePeelSql(8, 2)},
-         |ef AS (SELECT e.a, e.b FROM e
-         |  JOIN s8 x ON x.node = e.a JOIN s8 y ON y.node = e.b)
-         |SELECT node, CAST(count(*) AS BIGINT) AS core_deg
-         |FROM (SELECT a AS node FROM ef UNION ALL SELECT b FROM ef)
-         |GROUP BY node""".stripMargin,
-
-    // q289: group-vs-rest smoothed term scores on HUGEINT, top 20 per
-    // source by (score, term) via a ranked window.
-    "q289_distinctive" ->
-      raw"""WITH toks AS (SELECT source AS grp,
-         |    unnest(list_filter(regexp_split_to_array(
-         |      lower(trim(text)), '\s+'), x -> x <> '')) AS term
-         |  FROM documents),
-         |cg AS (SELECT grp, term, CAST(count(*) AS BIGINT) AS c_g
-         |  FROM toks GROUP BY 1, 2),
-         |ct AS (SELECT term, CAST(sum(c_g) AS BIGINT) AS ct
-         |  FROM cg GROUP BY term),
-         |ng AS (SELECT grp, CAST(sum(c_g) AS BIGINT) AS ng
-         |  FROM cg GROUP BY grp),
-         |nt AS (SELECT CAST(sum(ng) AS BIGINT) AS nt FROM ng),
-         |sc AS (SELECT cg.grp, cg.term, cg.c_g,
-         |    ct.ct - cg.c_g AS c_rest,
-         |    CAST((1000000::HUGEINT * (cg.c_g + 1)::HUGEINT
-         |        * (nt.nt - ng.ng)::HUGEINT)
-         |      // ((ct.ct - cg.c_g + 1)::HUGEINT * ng.ng::HUGEINT)
-         |      AS BIGINT) AS score_ppm
-         |  FROM cg JOIN ct USING (term) JOIN ng USING (grp)
-         |    CROSS JOIN nt
-         |  WHERE cg.c_g >= 3),
-         |rk AS (SELECT *, row_number() OVER (PARTITION BY grp
-         |    ORDER BY score_ppm DESC, term) AS rk FROM sc)
-         |SELECT grp, term, c_g, c_rest, score_ppm
-         |FROM rk WHERE rk <= 20""".stripMargin,
-
-    // q290: first-5-event journeys, ordered string_agg per user,
-    // count-then-path top 50.
-    "q290_paths" ->
-      raw"""WITH e AS (SELECT user_id AS u, epoch_ns(ts) AS ts,
-         |    event_id AS id, event_type AS t FROM events),
-         |r AS (SELECT u, t, row_number() OVER (PARTITION BY u
-         |    ORDER BY ts, id) AS rn FROM e),
-         |p AS (SELECT u, string_agg(t, '>' ORDER BY rn) AS path
-         |  FROM r WHERE rn <= 5 GROUP BY u),
-         |c AS (SELECT path, CAST(count(*) AS BIGINT) AS n_users
-         |  FROM p GROUP BY path)
-         |SELECT path, n_users FROM c
-         |ORDER BY n_users DESC, path LIMIT 50""".stripMargin,
-
-    // q291: the 2x2 DiD fold -- exact cell counts/sums, every mean one
-    // floored IEEE division, the estimator in the operator's op order.
-    "q291_did" ->
-      raw"""WITH r AS (SELECT ((user_id % 2) + 2) % 2 AS g,
-         |    event_id % 2 AS p,
-         |    CAST(floor(value * 100) AS BIGINT) AS y FROM events),
-         |c AS (SELECT
-         |    CAST(sum(CASE WHEN g = 0 AND p = 0 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n00,
-         |    CAST(sum(CASE WHEN g = 0 AND p = 0 THEN y ELSE 0 END)
-         |      AS BIGINT) AS s00,
-         |    CAST(sum(CASE WHEN g = 0 AND p = 1 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n01,
-         |    CAST(sum(CASE WHEN g = 0 AND p = 1 THEN y ELSE 0 END)
-         |      AS BIGINT) AS s01,
-         |    CAST(sum(CASE WHEN g = 1 AND p = 0 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n10,
-         |    CAST(sum(CASE WHEN g = 1 AND p = 0 THEN y ELSE 0 END)
-         |      AS BIGINT) AS s10,
-         |    CAST(sum(CASE WHEN g = 1 AND p = 1 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n11,
-         |    CAST(sum(CASE WHEN g = 1 AND p = 1 THEN y ELSE 0 END)
-         |      AS BIGINT) AS s11
-         |  FROM r)
-         |SELECT n00, s00, n01, s01, n10, s10, n11, s11,
-         |  CASE WHEN n00 = 0 THEN NULL ELSE CAST(floor(
-         |    CAST(s00 AS DOUBLE) / CAST(n00 AS DOUBLE) * 1000)
-         |    AS BIGINT) END AS mean00_milli,
-         |  CASE WHEN n01 = 0 THEN NULL ELSE CAST(floor(
-         |    CAST(s01 AS DOUBLE) / CAST(n01 AS DOUBLE) * 1000)
-         |    AS BIGINT) END AS mean01_milli,
-         |  CASE WHEN n10 = 0 THEN NULL ELSE CAST(floor(
-         |    CAST(s10 AS DOUBLE) / CAST(n10 AS DOUBLE) * 1000)
-         |    AS BIGINT) END AS mean10_milli,
-         |  CASE WHEN n11 = 0 THEN NULL ELSE CAST(floor(
-         |    CAST(s11 AS DOUBLE) / CAST(n11 AS DOUBLE) * 1000)
-         |    AS BIGINT) END AS mean11_milli,
-         |  CASE WHEN n00 = 0 OR n01 = 0 OR n10 = 0 OR n11 = 0
-         |    THEN NULL
-         |    ELSE CAST(floor(((CAST(s11 AS DOUBLE)
-         |      / CAST(n11 AS DOUBLE) - CAST(s10 AS DOUBLE)
-         |      / CAST(n10 AS DOUBLE)) - (CAST(s01 AS DOUBLE)
-         |      / CAST(n01 AS DOUBLE) - CAST(s00 AS DOUBLE)
-         |      / CAST(n00 AS DOUBLE))) * 1000000) AS BIGINT) END
-         |    AS did_micro
-         |FROM c""".stripMargin,
-
-    // q292: symmetrized degree-assortativity sums over the same edge
-    // derivation; no square root by symmetry, one floored division.
-    "q292_assortativity" ->
-      raw"""WITH $cliqueChainSql,
-         |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS dg
-         |  FROM (SELECT a AS node FROM e UNION ALL SELECT b FROM e)
-         |  GROUP BY node),
-         |pt AS (SELECT da.dg AS x, db.dg AS y FROM e
-         |  JOIN deg da ON da.node = e.a JOIN deg db ON db.node = e.b),
-         |b2 AS (SELECT x, y FROM pt UNION ALL SELECT y, x FROM pt),
-         |st AS (SELECT CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(x) AS BIGINT) AS sx,
-         |    CAST(sum(x * y) AS BIGINT) AS sxy,
-         |    CAST(sum(x * x) AS BIGINT) AS sxx FROM b2)
-         |SELECT n, n // 2 AS m, n * sxy - sx * sx AS num,
-         |  n * sxx - sx * sx AS den,
-         |  CASE WHEN n * sxx - sx * sx = 0 THEN NULL
-         |    ELSE CAST(floor(CAST(n * sxy - sx * sx AS DOUBLE)
-         |      / CAST(n * sxx - sx * sx AS DOUBLE) * 1000000)
-         |      AS BIGINT) END AS r_ppm
-         |FROM st""".stripMargin,
-
-    // q293: reciprocal ranks exact on the ppm lattice (integer div),
-    // first purchase within rank 10 per user, misses zero, corpus
-    // mean by integer division.
-    "q293_mrr" ->
-      raw"""WITH e AS (SELECT user_id AS query, epoch_ns(ts) AS ts,
-         |    event_id AS id,
-         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
-         |      AS rel
-         |  FROM events),
-         |r AS (SELECT query, rel, row_number() OVER (
-         |    PARTITION BY query ORDER BY ts, id) AS rnk FROM e),
-         |pq AS (SELECT query, min(CASE WHEN rel = 1 AND rnk <= 10
-         |    THEN rnk END) AS first_rank FROM r GROUP BY query),
-         |rr AS (SELECT query, CAST(first_rank AS BIGINT) AS first_rank,
-         |    CAST(CASE WHEN first_rank IS NULL THEN 0
-         |      ELSE 1000000 // first_rank END AS BIGINT) AS rr_ppm
-         |  FROM pq),
-         |f AS (SELECT CAST(sum(rr_ppm) AS BIGINT) AS s,
-         |    CAST(count(*) AS BIGINT) AS nq FROM rr)
-         |SELECT rr.query, rr.first_rank, rr.rr_ppm,
-         |  CAST(f.s // f.nq AS BIGINT) AS mrr_ppm
-         |FROM rr, f""".stripMargin,
-
-    // q294: wedge-enumerated candidate pairs, NOT EXISTS against the
-    // edge set, exact-ppm Jaccard, (score, v, w) top-100.
-    "q294_link_pred" ->
-      raw"""WITH $cliqueChainSql,
-         |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS dg
-         |  FROM (SELECT a AS node FROM e UNION ALL SELECT b FROM e)
-         |  GROUP BY node),
-         |adj AS (SELECT a AS u, b AS n FROM e
-         |  UNION ALL SELECT b, a FROM e),
-         |pr AS (SELECT x.n AS v, y.n AS w,
-         |    CAST(count(*) AS BIGINT) AS common
-         |  FROM adj x JOIN adj y ON y.u = x.u AND x.n < y.n
-         |  GROUP BY 1, 2),
-         |ne AS (SELECT pr.v, pr.w, pr.common FROM pr
-         |  WHERE pr.common >= 1 AND NOT EXISTS
-         |    (SELECT 1 FROM e WHERE e.a = pr.v AND e.b = pr.w)),
-         |sc AS (SELECT ne.v, ne.w, ne.common, dv.dg AS deg_v,
-         |    dw.dg AS deg_w,
-         |    CAST((1000000 * ne.common)
-         |      // (dv.dg + dw.dg - ne.common) AS BIGINT) AS jaccard_ppm
-         |  FROM ne JOIN deg dv ON dv.node = ne.v
-         |    JOIN deg dw ON dw.node = ne.w)
-         |SELECT v, w, common, deg_v, deg_w, jaccard_ppm FROM sc
-         |ORDER BY jaccard_ppm DESC, v, w LIMIT 100""".stripMargin,
-
-    // q295: the q269 recursion with the period as the group, pivoted
-    // to per-(path, class) period counts + the drift verdict.
-    "q295_json_drift" ->
-      raw"""WITH RECURSIVE src AS (SELECT event_id % 2 AS grp,
-         |    CASE WHEN event_id % 97 = 0 THEN '{oops'
-         |      WHEN event_id % 2 = 0 THEN '{"u":' || user_id
-         |        || ',"meta":{"k":' || (user_id % 7) || '}}'
-         |      ELSE '{"u":' || user_id || ',"meta":{"k":"s'
-         |        || (user_id % 7) || '","v2":[' || (user_id % 3)
-         |        || ']}}' END AS p
-         |  FROM events),
-         |nodes AS (
-         |  SELECT grp, '$$' AS path, TRY_CAST(p AS JSON) AS j,
-         |    0 AS depth
-         |  FROM src
-         |  UNION ALL
-         |  SELECT n.grp, n.path || sfx AS path,
-         |    COALESCE(json_extract(n.j, '$$' || sfx),
-         |      CAST('null' AS JSON)) AS j,
-         |    n.depth + 1 AS depth
-         |  FROM nodes n, unnest(
-         |    CASE WHEN json_type(n.j) = 'OBJECT'
-         |        THEN list_transform(json_keys(n.j), k -> '.' || k)
-         |      WHEN json_type(n.j) = 'ARRAY'
-         |        THEN list_transform(
-         |          range(CAST(json_array_length(n.j) AS BIGINT)),
-         |          i -> '[' || CAST(i AS VARCHAR) || ']')
-         |      ELSE [] END) AS u(sfx)
-         |  WHERE n.depth < 3),
-         |prof AS (SELECT grp, path,
-         |    CASE WHEN j IS NULL THEN '__invalid__'
-         |      WHEN json_type(j) = 'OBJECT' THEN 'object'
-         |      WHEN json_type(j) = 'ARRAY' THEN 'array'
-         |      WHEN json_type(j) = 'VARCHAR' THEN 'string'
-         |      WHEN json_type(j) IN ('UBIGINT', 'BIGINT', 'DOUBLE')
-         |        THEN 'number'
-         |      WHEN json_type(j) = 'BOOLEAN' THEN 'bool'
-         |      ELSE 'null' END AS vtype,
-         |    count(*) AS n
-         |  FROM nodes GROUP BY 1, 2, 3),
-         |piv AS (SELECT path, vtype,
-         |    CAST(COALESCE(sum(CASE WHEN grp = 0 THEN n END), 0)
-         |      AS BIGINT) AS n0,
-         |    CAST(COALESCE(sum(CASE WHEN grp = 1 THEN n END), 0)
-         |      AS BIGINT) AS n1
-         |  FROM prof GROUP BY 1, 2)
-         |SELECT path, vtype, n0, n1,
-         |  CASE WHEN n0 = 0 THEN 'added' WHEN n1 = 0 THEN 'removed'
-         |    ELSE 'stable' END AS verdict
-         |FROM piv""".stripMargin,
-
-    // q296: two explode-window distinct-active relations joined on
-    // the window start, the ppm ratio by integer division.
-    "q296_stickiness" ->
-      raw"""WITH e AS (SELECT user_id, epoch_ns(ts) AS ts FROM events),
-         |xs AS (SELECT user_id, unnest(list_transform(range(
-         |    (ts - 21600000000000) // 3600000000000 + 1,
-         |    ts // 3600000000000 + 1), k -> k * 3600000000000))
-         |    AS w_start FROM e),
-         |s AS (SELECT w_start, CAST(count(*) AS BIGINT) AS n_short
-         |  FROM (SELECT DISTINCT w_start, user_id FROM xs)
-         |  GROUP BY 1),
-         |xl AS (SELECT user_id, unnest(list_transform(range(
-         |    (ts - 86400000000000) // 3600000000000 + 1,
-         |    ts // 3600000000000 + 1), k -> k * 3600000000000))
-         |    AS w_start FROM e),
-         |l AS (SELECT w_start, CAST(count(*) AS BIGINT) AS n_long
-         |  FROM (SELECT DISTINCT w_start, user_id FROM xl)
-         |  GROUP BY 1)
-         |SELECT s.w_start, s.n_short, l.n_long,
-         |  CAST((1000000 * s.n_short) // l.n_long AS BIGINT)
-         |    AS stickiness_ppm
-         |FROM s JOIN l ON l.w_start = s.w_start""".stripMargin,
-
-    // q297: canonicalized pairs with verdict flips, the half-count
-    // tie-splitting win rate by integer division.
-    "q297_winrate" ->
-      raw"""WITH r AS (SELECT ((user_id % 5) + 5) % 5 AS ma,
-         |    (((user_id * 3 + 1) % 5) + 5) % 5 AS mb,
-         |    ((CAST(floor(value * 100) AS BIGINT) % 3) + 3) % 3 AS w
-         |  FROM events),
-         |f AS (SELECT CAST(least(ma, mb) AS BIGINT) AS m_lo,
-         |    CAST(greatest(ma, mb) AS BIGINT) AS m_hi,
-         |    CASE WHEN ma <= mb THEN w
-         |      ELSE CASE WHEN w = 0 THEN 0 WHEN w = 1 THEN 2
-         |        ELSE 1 END END AS wf
-         |  FROM r WHERE ma <> mb)
-         |SELECT m_lo, m_hi, CAST(count(*) AS BIGINT) AS n,
-         |  CAST(sum(CASE WHEN wf = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS wins_lo,
-         |  CAST(sum(CASE WHEN wf = 2 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS wins_hi,
-         |  CAST(sum(CASE WHEN wf = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS ties,
-         |  CAST((1000000 * (2 * sum(CASE WHEN wf = 1 THEN 1 ELSE 0
-         |    END) + sum(CASE WHEN wf = 0 THEN 1 ELSE 0 END)))
-         |    // (2 * count(*)) AS BIGINT) AS winrate_lo_ppm
-         |FROM f GROUP BY 1, 2""".stripMargin,
-
-    // q298: BFS as a bounded recursive CTE over (node, dist) pairs,
-    // min(dist) per node; undirected via the doubled edge relation.
-    "q298_bfs" ->
-      raw"""WITH RECURSIVE $cliqueChainSql,
-         |dir AS (SELECT a AS src, b AS dst FROM e
-         |  UNION ALL SELECT b, a FROM e),
-         |sd AS (SELECT c AS node FROM c WHERE c % 100 = 1),
-         |d AS (
-         |  SELECT node, 0 AS dist FROM sd
-         |  UNION
-         |  SELECT dir.dst AS node, d.dist + 1 AS dist
-         |  FROM d JOIN dir ON dir.src = d.node WHERE d.dist < 6)
-         |SELECT node, CAST(min(dist) AS BIGINT) AS dist
-         |FROM d GROUP BY node""".stripMargin,
-
-    // q299: vowel-group syllables via regexp_extract_all, the Flesch
-    // fold with every constant forced to DOUBLE (DuckDB bare decimals
-    // are DECIMAL), null-propagation mirrored.
-    "q299_readability" ->
-      raw"""WITH d AS (SELECT doc_id, text,
-         |    CASE WHEN text IS NULL THEN NULL
-         |      ELSE list_filter(regexp_split_to_array(
-         |        lower(trim(text)), '\s+'), x -> x <> '') END AS w,
-         |    CASE WHEN text IS NULL THEN NULL
-         |      ELSE len(list_filter(regexp_split_to_array(text,
-         |        '[.!?]+'), s -> trim(s) <> '')) END AS sents
-         |  FROM documents),
-         |s AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS words,
-         |    CAST(sents AS BIGINT) AS sentences,
-         |    CAST(list_reduce(list_prepend(0::BIGINT,
-         |      list_transform(w, x -> CAST(len(regexp_extract_all(x,
-         |        '[aeiouy]+')) AS BIGINT))), (a, b) -> a + b)
-         |      AS BIGINT) AS syllables
-         |  FROM d)
-         |SELECT doc_id, words, sentences, syllables,
-         |  CASE WHEN words IS NULL OR words = 0 OR sentences = 0
-         |    THEN NULL
-         |    ELSE CAST(floor((206.835::DOUBLE
-         |      - 1.015::DOUBLE * (CAST(words AS DOUBLE)
-         |        / CAST(sentences AS DOUBLE))
-         |      - 84.6::DOUBLE * (CAST(syllables AS DOUBLE)
-         |        / CAST(words AS DOUBLE))) * 1000) AS BIGINT) END
-         |    AS flesch_milli
-         |FROM s""".stripMargin,
-
-    // q300: the two multiplicative rounds replayed on positive BIGINT
-    // arithmetic (salt pre-reductions computed the same way).
-    "q300_pseudonymize" -> {
-      val m = 1L << 31
-      val salt = 20260816L
-      val s1 = ((salt % m) + m) % m
-      val s2 = (BigInt(7919) * salt).mod(BigInt(m)).toLong
-      def rounds(c: String) =
-        s"CAST((((((($c % $m + $m) % $m + $s1) % $m) * 2654435761) " +
-          s"% $m + $s2) % $m) * 2246822519 % $m AS BIGINT)"
-      raw"""SELECT ${rounds("c_custkey")} AS c_custkey,
-         |  ${rounds("c_nationkey")} AS c_nationkey, c_mktsegment
-         |FROM customer""".stripMargin
-    },
-
-    // q301: both columns' four counts in one pass, exact ppm rates,
-    // empty-period nulls.
-    "q301_null_drift" ->
-      raw"""WITH r AS (SELECT event_id % 2 AS p,
-         |    CASE WHEN value >= 50 THEN value END AS big_v,
-         |    CASE WHEN event_id % 5 <> 0 THEN props END AS props5
-         |  FROM events),
-         |agg AS (SELECT
-         |    CAST(sum(CASE WHEN p = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n0,
-         |    CAST(sum(CASE WHEN p = 0 AND big_v IS NULL THEN 1
-         |      ELSE 0 END) AS BIGINT) AS z0a,
-         |    CAST(sum(CASE WHEN p = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n1,
-         |    CAST(sum(CASE WHEN p = 1 AND big_v IS NULL THEN 1
-         |      ELSE 0 END) AS BIGINT) AS z1a,
-         |    CAST(sum(CASE WHEN p = 0 AND props5 IS NULL THEN 1
-         |      ELSE 0 END) AS BIGINT) AS z0b,
-         |    CAST(sum(CASE WHEN p = 1 AND props5 IS NULL THEN 1
-         |      ELSE 0 END) AS BIGINT) AS z1b
-         |  FROM r),
-         |m AS (
-         |  SELECT 'big_v' AS "column", n0, z0a AS nulls0, n1,
-         |    z1a AS nulls1 FROM agg
-         |  UNION ALL
-         |  SELECT 'props5', n0, z0b, n1, z1b FROM agg)
-         |SELECT "column", n0, nulls0, n1, nulls1,
-         |  CASE WHEN n0 = 0 THEN NULL
-         |    ELSE CAST((1000000 * nulls0) // n0 AS BIGINT) END
-         |    AS rate0_ppm,
-         |  CASE WHEN n1 = 0 THEN NULL
-         |    ELSE CAST((1000000 * nulls1) // n1 AS BIGINT) END
-         |    AS rate1_ppm,
-         |  CASE WHEN n0 = 0 OR n1 = 0 THEN NULL
-         |    ELSE CAST((1000000 * nulls1) // n1
-         |      - (1000000 * nulls0) // n0 AS BIGINT) END AS delta_ppm
-         |FROM m""".stripMargin,
-
-    // q302: the mean-difference Gini replayed rank-for-rank (equal
-    // values contribute symmetrically, so any stable order agrees).
-    "q302_gini" ->
-      raw"""WITH r AS (SELECT source AS grp,
-         |    CAST(n_chars AS BIGINT) AS v,
-         |    row_number() OVER (PARTITION BY source ORDER BY n_chars)
-         |      AS rk
-         |  FROM documents)
-         |SELECT grp, CAST(count(*) AS BIGINT) AS n,
-         |  CAST(sum(v) AS BIGINT) AS total,
-         |  CASE WHEN sum(v) = 0 THEN NULL
-         |    ELSE CAST(floor(CAST(sum((2 * rk - 1) * v)
-         |      - count(*) * sum(v) AS DOUBLE) * 1000000
-         |      / CAST(count(*) * sum(v) AS DOUBLE)) AS BIGINT) END
-         |    AS gini_ppm
-         |FROM r GROUP BY grp""".stripMargin,
-
-    // q303: integer-exact ECE -- per-bin |1e6*pos - conf_sum| gaps,
-    // integer-div fold, top-bin clamp.
-    "q303_ece" ->
-      raw"""WITH r AS (SELECT
-         |    ((doc_id * 37987) % 1000001 + 1000001) % 1000001 AS c,
-         |    CASE WHEN doc_id % 7 < 3 THEN 1 ELSE 0 END AS y
-         |  FROM documents),
-         |b AS (SELECT least(9, (c * 10) // 1000000) AS bin,
-         |    CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(y) AS BIGINT) AS pos,
-         |    CAST(sum(c) AS BIGINT) AS conf_sum
-         |  FROM r GROUP BY 1),
-         |f AS (SELECT CAST(sum(abs(1000000 * pos - conf_sum))
-         |      AS BIGINT) AS g,
-         |    CAST(sum(n) AS BIGINT) AS n_total FROM b)
-         |SELECT CAST(bin AS BIGINT) AS bin, n, pos, conf_sum,
-         |  CAST((1000000 * pos) // n AS BIGINT) AS acc_ppm,
-         |  CAST(conf_sum // n AS BIGINT) AS conf_mean_ppm,
-         |  f.n_total, CAST(f.g // f.n_total AS BIGINT) AS ece_micro
-         |FROM b, f""".stripMargin,
-
-    // q304: distinct non-loop directed edges, EXISTS for the reverse,
-    // one integer-div fold.
-    "q304_reciprocity" ->
-      raw"""WITH u AS (SELECT DISTINCT user_id AS s FROM events),
-         |fwd AS (SELECT s AS src,
-         |    ((s * 7 + 3) % 151 + 151) % 151 AS dst FROM u),
-         |bk AS (SELECT dst AS src, src AS dst FROM fwd
-         |  WHERE src % 5 = 0),
-         |e AS (SELECT DISTINCT src, dst
-         |  FROM (SELECT * FROM fwd UNION ALL SELECT * FROM bk)
-         |  WHERE src <> dst),
-         |mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM e),
-         |rr AS (SELECT CAST(count(*) AS BIGINT) AS m_recip FROM e a
-         |  WHERE EXISTS (SELECT 1 FROM e b
-         |    WHERE b.src = a.dst AND b.dst = a.src))
-         |SELECT mm.m, rr.m_recip,
-         |  CASE WHEN mm.m = 0 THEN NULL
-         |    ELSE CAST((1000000 * rr.m_recip) // mm.m AS BIGINT) END
-         |    AS ratio_ppm
-         |FROM mm, rr""".stripMargin,
-
-    // q305: integer residuals squared, one integer division to micro.
-    "q305_brier" ->
-      raw"""WITH r AS (SELECT source AS key,
-         |    ((doc_id * 37987) % 1000001 + 1000001) % 1000001 AS c,
-         |    CASE WHEN doc_id % 7 < 3 THEN 1 ELSE 0 END AS y
-         |  FROM documents),
-         |d AS (SELECT key, c - 1000000 * y AS d FROM r)
-         |SELECT key, CAST(count(*) AS BIGINT) AS n,
-         |  CAST(sum(d * d) // (count(*) * 1000000) AS BIGINT)
-         |    AS brier_micro
-         |FROM d GROUP BY key""".stripMargin,
-
-    // q306: the q273 midrank machinery with the label as the group,
-    // folded to AUC by one integer division.
-    "q306_auc" ->
-      raw"""WITH r AS (SELECT source AS key,
-         |    ((doc_id * 37987) % 1000001 + 1000001) % 1000001 AS v,
-         |    CASE WHEN doc_id % 7 < 3 THEN 1 ELSE 0 END AS y
-         |  FROM documents),
-         |counts AS (SELECT key, v,
-         |    CAST(sum(CASE WHEN y = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS c0,
-         |    CAST(sum(y) AS BIGINT) AS c1
-         |  FROM r GROUP BY key, v),
-         |rk AS (SELECT *, CAST(COALESCE(sum(c0 + c1) OVER (
-         |    PARTITION BY key ORDER BY v
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |    AS BIGINT) AS below FROM counts),
-         |f AS (SELECT key, CAST(sum(c0) AS BIGINT) AS n0,
-         |    CAST(sum(c1) AS BIGINT) AS n1,
-         |    CAST(sum(c1 * (2 * below + c0 + c1 + 1)) AS BIGINT)
-         |      AS r1x2
-         |  FROM rk GROUP BY key)
-         |SELECT key, n0 AS n_neg, n1 AS n_pos,
-         |  CASE WHEN n0 * n1 = 0 THEN NULL
-         |    ELSE CAST((1000000 * (r1x2 - n1 * (n1 + 1)))
-         |      // (2 * n0 * n1) AS BIGINT) END AS auc_ppm
-         |FROM f""".stripMargin,
-
-    // q307: the same block/loc/lastmod regexes in RE2, junk rows
-    // yielding zero blocks.
-    "q307_sitemap" ->
-      raw"""WITH src AS (SELECT doc_id, source,
-         |    CASE WHEN doc_id % 3 = 0 THEN
-         |      '<urlset>' || chr(10) || '<url><loc> http://' || source
-         |      || '.example.org/p?a=1&amp;b=' || doc_id
-         |      || ' </loc><lastmod>2026-01-0' || (doc_id % 9 + 1)
-         |      || '</lastmod></url>' || chr(10) || '<url><loc>http://'
-         |      || source || '.example.org/q' || doc_id
-         |      || '</loc></url>' || chr(10) || '</urlset>'
-         |    WHEN doc_id % 3 = 1 THEN
-         |      '<sitemapindex><sitemap><loc>http://' || source
-         |      || '.example.org/s' || doc_id
-         |      || '.xml</loc></sitemap></sitemapindex>'
-         |    ELSE 'plain text, no sitemap entries' END AS x
-         |  FROM documents),
-         |u AS (SELECT doc_id AS doc, 'url' AS kind,
-         |    unnest(regexp_extract_all(x, '(?s)<url>(.*?)</url>', 1))
-         |      AS b FROM src),
-         |sm AS (SELECT doc_id AS doc, 'sitemap' AS kind,
-         |    unnest(regexp_extract_all(x,
-         |      '(?s)<sitemap>(.*?)</sitemap>', 1)) AS b FROM src),
-         |a AS (SELECT * FROM u UNION ALL SELECT * FROM sm),
-         |ex AS (SELECT doc, kind,
-         |    replace(regexp_extract(b, '(?s)<loc>\s*(.*?)\s*</loc>',
-         |      1), '&amp;', '&') AS loc,
-         |    CASE WHEN regexp_matches(b, '(?s)<lastmod>')
-         |      THEN regexp_extract(b,
-         |        '(?s)<lastmod>\s*(.*?)\s*</lastmod>', 1) END
-         |      AS lastmod
-         |  FROM a)
-         |SELECT doc, kind, loc, lastmod FROM ex
-         |WHERE loc <> ''""".stripMargin,
-
-    // q308: lag-based run starts over the same (ts, id) order, the
-    // expected-runs lattice with one double division.
-    "q308_runs" ->
-      raw"""WITH r AS (SELECT event_type AS key, epoch_ns(ts) AS ts,
-         |    event_id AS tie,
-         |    CASE WHEN value >= 30 THEN 1 ELSE 0 END AS v
-         |  FROM events),
-         |c AS (SELECT key, v, CASE WHEN lag(v) OVER (
-         |    PARTITION BY key ORDER BY ts, tie) IS DISTINCT FROM v
-         |    THEN 1 ELSE 0 END AS chg
-         |  FROM r)
-         |SELECT key, CAST(count(*) AS BIGINT) AS n,
-         |  CAST(sum(1 - v) AS BIGINT) AS n0,
-         |  CAST(sum(v) AS BIGINT) AS n1,
-         |  CAST(sum(chg) AS BIGINT) AS runs,
-         |  CAST(floor((1.0::DOUBLE + 2.0::DOUBLE
-         |    * CAST(sum(1 - v) * sum(v) AS DOUBLE)
-         |    / CAST(count(*) AS DOUBLE)) * 1000) AS BIGINT)
-         |    AS mu_milli
-         |FROM c GROUP BY key""".stripMargin,
-
-    // q309: family-partitioned ranks, the integer step-up condition,
-    // max passing rank per family joined back.
-    "q309_bh" ->
-      raw"""WITH hyp AS (SELECT DISTINCT event_type AS grp,
-         |    ((user_id % 100) + 100) % 100 AS hyp FROM events),
-         |pv AS (SELECT grp, hyp AS id,
-         |    CASE WHEN hyp < 10 THEN hyp * 137 + 3
-         |      ELSE ((hyp * 9973 + length(grp) * 131071) % 1000001
-         |        + 1000001) % 1000001 END AS p_ppm FROM hyp),
-         |rk AS (SELECT grp, id, p_ppm,
-         |    CAST(row_number() OVER (PARTITION BY grp
-         |      ORDER BY p_ppm, id) AS BIGINT) AS k,
-         |    CAST(count(*) OVER (PARTITION BY grp) AS BIGINT) AS m
-         |  FROM pv),
-         |ks AS (SELECT grp, CAST(COALESCE(max(CASE
-         |    WHEN p_ppm * m <= k * 50000 THEN k END), 0) AS BIGINT)
-         |    AS k_star
-         |  FROM rk GROUP BY grp)
-         |SELECT rk.grp, rk.id, rk.p_ppm, rk.k, rk.m, ks.k_star,
-         |  rk.k <= ks.k_star AS reject
-         |FROM rk JOIN ks ON ks.grp = rk.grp""".stripMargin,
-
-    // q310: log-rank -- the q282 subject walk split 3 exps x 2 arms;
-    // E1 terms pure integer division, V terms in the engine's exact
-    // double op order, chi-square from the micro-lattice inputs.
-    "q310_logrank" ->
-      raw"""WITH subj AS (SELECT
-         |    (((user_id // 2) % 3) + 3) % 3 AS exp,
-         |    ((user_id % 2) + 2) % 2 AS grp,
-         |    (max(epoch_ns(ts)) - min(epoch_ns(ts)))
-         |      // 3600000000000 AS t,
-         |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-         |      AS e
-         |  FROM events GROUP BY user_id),
-         |bd AS (SELECT exp, t,
-         |    sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS c0,
-         |    sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS c1,
-         |    sum(CASE WHEN grp = 0 THEN e ELSE 0 END) AS d0,
-         |    sum(CASE WHEN grp = 1 THEN e ELSE 0 END) AS d1
-         |  FROM subj GROUP BY exp, t),
-         |rk AS (SELECT exp, t, d0, d1,
-         |    sum(c0) OVER (PARTITION BY exp ORDER BY t DESC) AS n0,
-         |    sum(c1) OVER (PARTITION BY exp ORDER BY t DESC) AS n1
-         |  FROM bd),
-         |et AS (SELECT exp, d1, n0, n1, n0 + n1 AS n, d0 + d1 AS d
-         |  FROM rk WHERE d0 + d1 >= 1),
-         |tm AS (SELECT exp, d1,
-         |    (1000000 * (d * n1)) // n AS e1k,
-         |    CASE WHEN n <= 1 THEN 0 ELSE CAST(floor(
-         |      CAST(d * n1 AS DOUBLE) * CAST(n0 AS DOUBLE)
-         |        * CAST(n - d AS DOUBLE)
-         |      / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-         |        * CAST(n - 1 AS DOUBLE)) * 1000000) AS BIGINT) END
-         |      AS vk
-         |  FROM et),
-         |fold AS (SELECT exp, CAST(sum(d1) AS BIGINT) AS o1,
-         |    CAST(sum(e1k) AS BIGINT) AS e1_micro,
-         |    CAST(sum(vk) AS BIGINT) AS v_micro
-         |  FROM tm GROUP BY exp),
-         |arms AS (SELECT exp, grp, CAST(count(*) AS BIGINT) AS n_subj,
-         |    CAST(sum(e) AS BIGINT) AS o
-         |  FROM subj GROUP BY exp, grp)
-         |SELECT CAST(arms.exp AS BIGINT) AS exp,
-         |  CAST(arms.grp AS BIGINT) AS grp, arms.n_subj, arms.o,
-         |  CAST(COALESCE(fold.e1_micro, 0) AS BIGINT) AS e1_micro,
-         |  CAST(COALESCE(fold.v_micro, 0) AS BIGINT) AS v_micro,
-         |  CASE WHEN fold.v_micro IS NULL OR fold.v_micro = 0
-         |    THEN NULL ELSE CAST(floor(
-         |    CAST(1000000 * fold.o1 - fold.e1_micro AS DOUBLE)
-         |    * CAST(1000000 * fold.o1 - fold.e1_micro AS DOUBLE)
-         |    / CAST(fold.v_micro AS DOUBLE)) AS BIGINT) END
-         |    AS chi2_micro
-         |FROM arms LEFT JOIN fold ON fold.exp = arms.exp""".stripMargin,
-
-    // q311: two-sample KS -- pooled distinct-value CDFs as cumulative
-    // windows, D by integer cross-multiplication, ks_ppm exact.
-    "q311_ks_drift" ->
-      raw"""WITH r AS (SELECT event_type AS key, event_id % 2 AS g,
-         |    CAST(floor(value * 100) AS BIGINT) AS v FROM events),
-         |c AS (SELECT key, v,
-         |    sum(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS c0,
-         |    sum(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS c1
-         |  FROM r GROUP BY key, v),
-         |w AS (SELECT key,
-         |    sum(c0) OVER (PARTITION BY key ORDER BY v) AS a0,
-         |    sum(c1) OVER (PARTITION BY key ORDER BY v) AS a1,
-         |    sum(c0) OVER (PARTITION BY key) AS t0,
-         |    sum(c1) OVER (PARTITION BY key) AS t1
-         |  FROM c)
-         |SELECT key, CAST(max(t0) AS BIGINT) AS n0,
-         |  CAST(max(t1) AS BIGINT) AS n1,
-         |  CAST(max(abs(a0 * t1 - a1 * t0)) AS BIGINT) AS d_num,
-         |  CASE WHEN max(t0) = 0 OR max(t1) = 0 THEN NULL
-         |    ELSE CAST((1000000 * max(abs(a0 * t1 - a1 * t0)))
-         |      // (max(t0) * max(t1)) AS BIGINT) END AS ks_ppm
-         |FROM w GROUP BY key""".stripMargin,
-
-    // q312: PSI -- add-one smoothed shares over the observed bucket
-    // domain, per-bucket (p1-p0)*ln(p1/p0) floored to micro in the
-    // engine's exact double op order, integer-summed per key.
-    "q312_psi" ->
-      raw"""WITH r AS (SELECT event_type AS key,
-         |    ((user_id % 8) + 8) % 8 AS bucket, event_id % 2 AS p
-         |  FROM events),
-         |cells AS (SELECT key, CAST(bucket AS BIGINT) AS bucket,
-         |    CAST(sum(CASE WHEN p = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n0,
-         |    CAST(sum(CASE WHEN p = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n1
-         |  FROM r GROUP BY 1, 2),
-         |ks AS (SELECT key, CAST(sum(n0) AS BIGINT) AS c0,
-         |    CAST(sum(n1) AS BIGINT) AS c1,
-         |    CAST(count(*) AS BIGINT) AS n_buckets
-         |  FROM cells GROUP BY key),
-         |tm AS (SELECT cells.key, cells.bucket, cells.n0, cells.n1,
-         |    ks.n_buckets, ks.c0, ks.c1,
-         |    CAST(cells.n0 + 1 AS DOUBLE)
-         |      / CAST(ks.c0 + ks.n_buckets AS DOUBLE) AS p0,
-         |    CAST(cells.n1 + 1 AS DOUBLE)
-         |      / CAST(ks.c1 + ks.n_buckets AS DOUBLE) AS p1
-         |  FROM cells JOIN ks ON ks.key = cells.key),
-         |t2 AS (SELECT *, CAST(floor((p1 - p0) * ln(p1 / p0)
-         |    * 1000000) AS BIGINT) AS term FROM tm),
-         |fold AS (SELECT key, CAST(sum(term) AS BIGINT) AS psi,
-         |    max(CASE WHEN c0 = 0 OR c1 = 0 THEN 1 ELSE 0 END)
-         |      AS degen
-         |  FROM t2 GROUP BY key)
-         |SELECT t2.key, t2.bucket, t2.n0, t2.n1, t2.n_buckets,
-         |  CASE WHEN fold.degen = 1 THEN NULL ELSE fold.psi END
-         |    AS psi_micro
-         |FROM t2 JOIN fold ON fold.key = t2.key""".stripMargin,
-
-    // q313: Bradley-Terry -- the q297 ledger, then four MM rounds
-    // replayed verbatim on the integer lattice (t/raw/normalize all
-    // integer division, the 1-ppm floor via greatest).
-    "q313_bradley_terry" ->
-      raw"""WITH r AS (SELECT ((user_id % 5) + 5) % 5 AS ma,
-         |    (((user_id * 3 + 1) % 5) + 5) % 5 AS mb,
-         |    ((CAST(floor(value * 100) AS BIGINT) % 3) + 3) % 3 AS w
-         |  FROM events),
-         |f AS (SELECT CAST(least(ma, mb) AS BIGINT) AS m_lo,
-         |    CAST(greatest(ma, mb) AS BIGINT) AS m_hi,
-         |    CASE WHEN ma <= mb THEN w
-         |      ELSE CASE WHEN w = 0 THEN 0 WHEN w = 1 THEN 2
-         |        ELSE 1 END END AS wf
-         |  FROM r WHERE ma <> mb),
-         |led AS (SELECT m_lo, m_hi, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(CASE WHEN wf = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS wins_lo,
-         |    CAST(sum(CASE WHEN wf = 2 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS wins_hi,
-         |    CAST(sum(CASE WHEN wf = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS ties
-         |  FROM f GROUP BY 1, 2),
-         |ed AS MATERIALIZED (
-         |  SELECT m_lo AS i, m_hi AS j, 2 * wins_lo + ties AS w2,
-         |    2 * n AS n2 FROM led
-         |  UNION ALL
-         |  SELECT m_hi, m_lo, 2 * wins_hi + ties, 2 * n FROM led),
-         |mdl AS MATERIALIZED (SELECT i AS model,
-         |    CAST(sum(w2) AS BIGINT) AS w2,
-         |    CAST(sum(n2) AS BIGINT) AS n2
-         |  FROM ed GROUP BY i),
-         |p0 AS (SELECT model, CAST(1000000 AS BIGINT) AS p FROM mdl),
-         |d1 AS (SELECT ed.i, sum((1000000000 * ed.n2)
-         |      // (pa.p + pb.p)) AS d
-         |  FROM ed JOIN p0 pa ON pa.model = ed.i
-         |    JOIN p0 pb ON pb.model = ed.j GROUP BY ed.i),
-         |r1 AS MATERIALIZED (SELECT m.model,
-         |    (1000000000 * m.w2) // d1.d AS raw
-         |  FROM mdl m JOIN d1 ON d1.i = m.model),
-         |p1 AS MATERIALIZED (SELECT model, greatest(1, (1000000 * raw)
-         |    // (SELECT sum(raw) FROM r1)) AS p FROM r1),
-         |d2 AS (SELECT ed.i, sum((1000000000 * ed.n2)
-         |      // (pa.p + pb.p)) AS d
-         |  FROM ed JOIN p1 pa ON pa.model = ed.i
-         |    JOIN p1 pb ON pb.model = ed.j GROUP BY ed.i),
-         |r2 AS MATERIALIZED (SELECT m.model,
-         |    (1000000000 * m.w2) // d2.d AS raw
-         |  FROM mdl m JOIN d2 ON d2.i = m.model),
-         |p2 AS MATERIALIZED (SELECT model, greatest(1, (1000000 * raw)
-         |    // (SELECT sum(raw) FROM r2)) AS p FROM r2),
-         |d3 AS (SELECT ed.i, sum((1000000000 * ed.n2)
-         |      // (pa.p + pb.p)) AS d
-         |  FROM ed JOIN p2 pa ON pa.model = ed.i
-         |    JOIN p2 pb ON pb.model = ed.j GROUP BY ed.i),
-         |r3 AS MATERIALIZED (SELECT m.model,
-         |    (1000000000 * m.w2) // d3.d AS raw
-         |  FROM mdl m JOIN d3 ON d3.i = m.model),
-         |p3 AS MATERIALIZED (SELECT model, greatest(1, (1000000 * raw)
-         |    // (SELECT sum(raw) FROM r3)) AS p FROM r3),
-         |d4 AS (SELECT ed.i, sum((1000000000 * ed.n2)
-         |      // (pa.p + pb.p)) AS d
-         |  FROM ed JOIN p3 pa ON pa.model = ed.i
-         |    JOIN p3 pb ON pb.model = ed.j GROUP BY ed.i),
-         |r4 AS MATERIALIZED (SELECT m.model,
-         |    (1000000000 * m.w2) // d4.d AS raw
-         |  FROM mdl m JOIN d4 ON d4.i = m.model),
-         |p4 AS (SELECT model, greatest(1, (1000000 * raw)
-         |    // (SELECT sum(raw) FROM r4)) AS p FROM r4)
-         |SELECT mdl.model, mdl.w2, mdl.n2,
-         |  CAST(p4.p AS BIGINT) AS p_ppm
-         |FROM mdl JOIN p4 ON p4.model = mdl.model""".stripMargin,
-
-    // q314: entropy-l-diversity -- per-(QI, sensitive) counts, the
-    // floored-ln micro lattice, ln(2) gate at 693147 micro.
-    "q314_entropy_l" ->
-      raw"""WITH r AS (SELECT CAST(c_nationkey AS BIGINT)
-         |      AS c_nationkey,
-         |    CAST(c_acctbal - ((c_acctbal % 2000.0) + 2000.0)
-         |      % 2000.0 AS BIGINT) AS bal_bucket,
-         |    c_mktsegment
-         |  FROM customer),
-         |bs AS (SELECT c_nationkey, bal_bucket, c_mktsegment,
-         |    CAST(count(*) AS BIGINT) AS c
-         |  FROM r GROUP BY 1, 2, 3),
-         |g AS (SELECT c_nationkey, bal_bucket,
-         |    CAST(sum(c) AS BIGINT) AS qi_n,
-         |    CAST(sum(CASE WHEN c_mktsegment IS NOT NULL THEN 1
-         |      ELSE 0 END) AS BIGINT) AS qi_l,
-         |    CAST(sum(CASE WHEN c_mktsegment IS NOT NULL THEN c
-         |      ELSE 0 END) AS BIGINT) AS ns,
-         |    CAST(sum(CASE WHEN c_mktsegment IS NOT NULL THEN
-         |      CAST(floor(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))
-         |        * 1000000) AS BIGINT) ELSE 0 END) AS BIGINT) AS st
-         |  FROM bs GROUP BY 1, 2),
-         |h AS (SELECT c_nationkey, bal_bucket, qi_n, qi_l,
-         |    CASE WHEN ns = 0 THEN NULL
-         |      ELSE CAST(floor(ln(CAST(ns AS DOUBLE)) * 1000000)
-         |        AS BIGINT) - st // ns END AS qi_h_micro
-         |  FROM g)
-         |SELECT c_nationkey, bal_bucket, qi_n, qi_l, qi_h_micro,
-         |  qi_n < 4 AS suppressed_k,
-         |  (qi_h_micro IS NULL OR qi_h_micro < 693147)
-         |    AS suppressed_l
-         |FROM h""".stripMargin,
-
-    // q315: CUSUM via the prefix-minimum identity -- two cumulative
-    // sums + two running minimums, all integer.
-    "q315_cusum" ->
-      raw"""WITH hr AS (SELECT event_type AS key,
-         |    (epoch_ns(ts) - ((epoch_ns(ts) % 3600000000000
-         |      + 3600000000000) % 3600000000000)) // 3600000000000
-         |      AS h,
-         |    CAST(floor(value * 100) AS BIGINT) AS v
-         |  FROM events),
-         |hv AS (SELECT key, CAST(h AS BIGINT) AS h,
-         |    CAST(sum(v) AS BIGINT) AS hv
-         |  FROM hr GROUP BY 1, 2),
-         |pp AS (SELECT key, h, hv,
-         |    CAST(sum(hv - 500000 - 10000) OVER (PARTITION BY key
-         |      ORDER BY h, h) AS BIGINT) AS p_pos,
-         |    CAST(sum(500000 - hv - 10000) OVER (PARTITION BY key
-         |      ORDER BY h, h) AS BIGINT) AS p_neg
-         |  FROM hv)
-         |SELECT key, h AS ts, h AS tie,
-         |  p_pos - least(0, min(p_pos) OVER (PARTITION BY key
-         |    ORDER BY h, h)) AS s_pos,
-         |  p_neg - least(0, min(p_neg) OVER (PARTITION BY key
-         |    ORDER BY h, h)) AS s_neg
-         |FROM pp""".stripMargin,
-
-    // q316: Theil-Sen -- pair self-join, truncated-ppm slopes (both
-    // engines' integer division truncates), lower median by rank.
-    "q316_theil_sen" ->
-      raw"""WITH r AS (SELECT source AS grp, doc_id AS x,
-         |    n_chars AS y FROM documents),
-         |sz AS (SELECT grp, CAST(count(*) AS BIGINT) AS n
-         |  FROM r GROUP BY grp),
-         |pr AS (SELECT a.grp, a.x AS xi, b.x AS xj,
-         |    CAST((1000000 * (b.y - a.y)) // (b.x - a.x) AS BIGINT)
-         |      AS s
-         |  FROM r a JOIN r b ON b.grp = a.grp AND a.x < b.x),
-         |rk AS (SELECT grp, s,
-         |    row_number() OVER (PARTITION BY grp
-         |      ORDER BY s, xi, xj) AS rn,
-         |    count(*) OVER (PARTITION BY grp) AS m
-         |  FROM pr),
-         |md AS (SELECT grp, CAST(max(m) AS BIGINT) AS n_pairs,
-         |    CAST(max(s) AS BIGINT) AS slope_ppm
-         |  FROM rk WHERE rn = (m + 1) // 2 GROUP BY grp)
-         |SELECT sz.grp, sz.n,
-         |  CAST(COALESCE(md.n_pairs, 0) AS BIGINT) AS n_pairs,
-         |  md.slope_ppm
-         |FROM sz LEFT JOIN md ON md.grp = sz.grp""".stripMargin,
-
-    // q317: nDCG@10 -- position terms floored on the ln/ln2 micro
-    // lattice in the engine's exact op order, ideal ordering by
-    // (rel DESC, rank), one integer division for the ratio.
-    "q317_ndcg" ->
-      raw"""WITH r AS (SELECT source AS query,
-         |    CAST(row_number() OVER (PARTITION BY source
-         |      ORDER BY doc_id) AS BIGINT) AS rnk,
-         |    ((doc_id % 4) + 4) % 4 AS rel
-         |  FROM documents),
-         |ip AS (SELECT query, rnk, rel,
-         |    CAST(row_number() OVER (PARTITION BY query
-         |      ORDER BY rel DESC, rnk) AS BIGINT) AS ipos
-         |  FROM r),
-         |tm AS (SELECT query,
-         |    CASE WHEN rnk <= 10 THEN CAST(floor(CAST(rel AS DOUBLE)
-         |      * 1000000 * ln(2.0::DOUBLE)
-         |      / ln(CAST(rnk + 1 AS DOUBLE))) AS BIGINT)
-         |      ELSE 0 END AS dterm,
-         |    CASE WHEN ipos <= 10 THEN CAST(floor(CAST(rel AS DOUBLE)
-         |      * 1000000 * ln(2.0::DOUBLE)
-         |      / ln(CAST(ipos + 1 AS DOUBLE))) AS BIGINT)
-         |      ELSE 0 END AS iterm
-         |  FROM ip)
-         |SELECT query, CAST(count(*) AS BIGINT) AS n,
-         |  CAST(sum(dterm) AS BIGINT) AS dcg_micro,
-         |  CAST(sum(iterm) AS BIGINT) AS idcg_micro,
-         |  CASE WHEN sum(iterm) = 0 THEN NULL
-         |    ELSE CAST((1000000 * sum(dterm)) // sum(iterm) AS BIGINT)
-         |    END AS ndcg_ppm
-         |FROM tm GROUP BY query""".stripMargin,
-
-    // q318: embedding drift -- milli-quantized components, exact
-    // HUGEINT dimension sums, scale-invariant cosine on the sums,
-    // one exactly-rounded sqrt.
-    "q318_embedding_drift" ->
-      raw"""WITH r AS (SELECT (label % 3 + 3) % 3 AS k,
-         |    vec_id % 2 AS p,
-         |    unnest(embedding) AS x,
-         |    unnest(range(1, len(embedding) + 1)) AS d
-         |  FROM embeddings),
-         |q AS (SELECT k, p, d,
-         |    CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) AS qv
-         |  FROM r),
-         |s AS (SELECT k, d,
-         |    CAST(sum(CASE WHEN p = 0 THEN qv ELSE 0 END) AS BIGINT)
-         |      AS s0,
-         |    CAST(sum(CASE WHEN p = 1 THEN qv ELSE 0 END) AS BIGINT)
-         |      AS s1,
-         |    CAST(sum(CASE WHEN p = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS c0,
-         |    CAST(sum(CASE WHEN p = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS c1
-         |  FROM q GROUP BY k, d),
-         |f AS (SELECT k,
-         |    sum(CAST(s0 AS HUGEINT) * CAST(s1 AS HUGEINT)) AS dot,
-         |    sum(CAST(s0 AS HUGEINT) * CAST(s0 AS HUGEINT)) AS n0sq,
-         |    sum(CAST(s1 AS HUGEINT) * CAST(s1 AS HUGEINT)) AS n1sq,
-         |    CAST(max(c0) AS BIGINT) AS n0,
-         |    CAST(max(c1) AS BIGINT) AS n1
-         |  FROM s GROUP BY k)
-         |SELECT CAST(k AS BIGINT) AS key, n0, n1,
-         |  CASE WHEN n0 = 0 OR n1 = 0 OR n0sq = 0 OR n1sq = 0
-         |    THEN NULL
-         |    ELSE CAST(floor(CAST(dot AS DOUBLE)
-         |      / sqrt(CAST(n0sq AS DOUBLE) * CAST(n1sq AS DOUBLE))
-         |      * 1000000) AS BIGINT) END AS cos_ppm
-         |FROM f""".stripMargin,
-
-    // q319: quantile drift -- integer-ceil ranks per (key, period),
-    // both quantiles + delta per requested percentile.
-    "q319_quantile_drift" ->
-      raw"""WITH r AS (SELECT event_type AS key, event_id % 2 AS p,
-         |    CAST(floor(value * 100) AS BIGINT) AS v FROM events),
-         |rk AS (SELECT key, p, v,
-         |    CAST(row_number() OVER (PARTITION BY key, p ORDER BY v)
-         |      AS BIGINT) AS r,
-         |    CAST(count(*) OVER (PARTITION BY key, p) AS BIGINT) AS n
-         |  FROM r),
-         |qs AS (SELECT unnest([25, 50, 75, 95]) AS pct),
-         |hits AS (SELECT rk.key, CAST(qs.pct AS BIGINT) AS pct, rk.p,
-         |    rk.v
-         |  FROM rk CROSS JOIN qs
-         |  WHERE rk.r = greatest(1, (qs.pct * rk.n + 99) // 100)),
-         |cn AS (SELECT key,
-         |    CAST(sum(CASE WHEN p = 0 AND r = 1 THEN n ELSE 0 END)
-         |      AS BIGINT) AS n0,
-         |    CAST(sum(CASE WHEN p = 1 AND r = 1 THEN n ELSE 0 END)
-         |      AS BIGINT) AS n1
-         |  FROM rk GROUP BY key),
-         |bp AS (SELECT key, pct,
-         |    max(CASE WHEN p = 0 THEN v END) AS v0,
-         |    max(CASE WHEN p = 1 THEN v END) AS v1
-         |  FROM hits GROUP BY key, pct)
-         |SELECT bp.key, bp.pct, cn.n0, cn.n1, bp.v0, bp.v1,
-         |  bp.v1 - bp.v0 AS delta
-         |FROM bp JOIN cn ON cn.key = bp.key""".stripMargin,
-
-    // q320: Poisson bootstrap -- the Lehmer triple replayed on MINSTD
-    // arithmetic, the 8 cumulative thresholds inlined as the SAME
-    // driver-computed literals the plan bakes in, rank quantiles.
-    "q320_bootstrap" -> {
-      val m = 2147483647L
-      val seed = 20260816L
-      val ts = graft.operators.Experiment.poissonThresholds
-      val wExpr = ts.map(t => s"CASE WHEN u >= $t THEN 1 ELSE 0 END")
-        .mkString(" + ")
-      raw"""WITH r AS (SELECT event_type AS key, event_id AS id,
-         |    CAST(floor(value * 100) AS BIGINT) AS v FROM events),
-         |pt AS (SELECT key, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(floor(CAST(sum(v) AS DOUBLE) * 1000000
-         |      / CAST(count(*) AS DOUBLE)) AS BIGINT) AS mean_micro
-         |  FROM r GROUP BY key),
-         |reps AS (SELECT key, id, v,
-         |    unnest(range(0, 64)) AS rep FROM r),
-         |uu AS (SELECT key, v, rep,
-         |    ((((((id + $seed) % $m) * 48271 % $m + rep) % $m)
-         |      * 48271 % $m) * 48271) % $m AS u
-         |  FROM reps),
-         |ww AS (SELECT key, v, rep,
-         |    CAST($wExpr AS BIGINT) AS w FROM uu),
-         |rm AS (SELECT key, rep,
-         |    CAST(sum(w * v) AS BIGINT) AS swv,
-         |    CAST(sum(w) AS BIGINT) AS sw
-         |  FROM ww GROUP BY key, rep),
-         |mn AS (SELECT key, rep,
-         |    CAST(floor(CAST(swv AS DOUBLE) * 1000000
-         |      / CAST(sw AS DOUBLE)) AS BIGINT) AS mean
-         |  FROM rm WHERE sw > 0),
-         |rk AS (SELECT key, mean,
-         |    CAST(row_number() OVER (PARTITION BY key
-         |      ORDER BY mean, rep) AS BIGINT) AS rk,
-         |    CAST(count(*) OVER (PARTITION BY key) AS BIGINT) AS beff
-         |  FROM mn),
-         |ci AS (SELECT key, CAST(max(beff) AS BIGINT) AS b_eff,
-         |    max(CASE WHEN rk = greatest(1, (25 * beff + 999) // 1000)
-         |      THEN mean END) AS lo_micro,
-         |    max(CASE WHEN rk = greatest(1, (975 * beff + 999) // 1000)
-         |      THEN mean END) AS hi_micro
-         |  FROM rk GROUP BY key)
-         |SELECT ci.key, pt.n, ci.b_eff, pt.mean_micro, ci.lo_micro,
-         |  ci.hi_micro
-         |FROM ci JOIN pt ON pt.key = ci.key""".stripMargin
-    },
-
-    // q321: average precision -- running relevant count over the
-    // rank order, floored ppm precision terms at relevant rows, one
-    // integral division by the positive count.
-    "q321_avg_precision" ->
-      raw"""WITH r AS (SELECT source AS query,
-         |    CAST(row_number() OVER (PARTITION BY source
-         |      ORDER BY doc_id) AS BIGINT) AS rnk,
-         |    CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END AS rel
-         |  FROM documents),
-         |c AS (SELECT query, rnk, rel,
-         |    CAST(sum(rel) OVER (PARTITION BY query ORDER BY rnk)
-         |      AS BIGINT) AS relcnt
-         |  FROM r)
-         |SELECT query, CAST(count(*) AS BIGINT) AS n,
-         |  CAST(sum(rel) AS BIGINT) AS n_pos,
-         |  CASE WHEN sum(rel) = 0 THEN NULL
-         |    ELSE CAST(sum(CASE WHEN rel = 1
-         |      THEN (1000000 * relcnt) // rnk ELSE 0 END)
-         |      // sum(rel) AS BIGINT) END AS ap_ppm
-         |FROM c GROUP BY query""".stripMargin,
-
-    // q322: Spearman -- doubled midranks (2*rank + ties - 1), exact
-    // HUGEINT moment sums, the same float finish (cast, sqrt,
-    // multiply, divide, floor -- all exactly rounded IEEE).
-    "q322_spearman" ->
-      raw"""WITH r AS (SELECT event_type AS grp,
-         |    CAST(floor(value * 100) AS BIGINT) AS x,
-         |    ((user_id % 1000) + 1000) % 1000 AS y FROM events),
-         |rk AS (SELECT grp,
-         |    CAST(2 * rank() OVER (PARTITION BY grp ORDER BY x)
-         |      + count(*) OVER (PARTITION BY grp, x) - 1 AS HUGEINT)
-         |      AS rx,
-         |    CAST(2 * rank() OVER (PARTITION BY grp ORDER BY y)
-         |      + count(*) OVER (PARTITION BY grp, y) - 1 AS HUGEINT)
-         |      AS ry
-         |  FROM r),
-         |ag AS (SELECT grp, CAST(count(*) AS HUGEINT) AS n,
-         |    sum(rx) AS sx, sum(ry) AS sy, sum(rx * rx) AS sxx,
-         |    sum(ry * ry) AS syy, sum(rx * ry) AS sxy
-         |  FROM rk GROUP BY grp)
-         |SELECT grp, CAST(n AS BIGINT) AS n,
-         |  CASE WHEN n < 2 OR n * sxx - sx * sx <= 0
-         |      OR n * syy - sy * sy <= 0 THEN NULL
-         |    ELSE CAST(floor(1000000.0
-         |      * CAST(n * sxy - sx * sy AS DOUBLE)
-         |      / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-         |        * sqrt(CAST(n * syy - sy * sy AS DOUBLE))))
-         |      AS BIGINT) END AS rho_ppm
-         |FROM ag""".stripMargin,
-
-    // q323: Kendall tau-b -- all unordered pairs by doc-id identity,
-    // exact sign/tie counts, tie-corrected sqrt denominator in the
-    // shared float finish.
-    "q323_kendall" ->
-      raw"""WITH r AS (SELECT source AS grp, doc_id AS i,
-         |    n_chars // 100 AS x, ((doc_id % 50) + 50) % 50 AS y
-         |  FROM documents),
-         |sz AS (SELECT grp, CAST(count(*) AS BIGINT) AS n
-         |  FROM r GROUP BY grp),
-         |pr AS (SELECT a.grp,
-         |    CASE WHEN (b.x > a.x AND b.y > a.y)
-         |        OR (b.x < a.x AND b.y < a.y) THEN 1
-         |      WHEN (b.x > a.x AND b.y < a.y)
-         |        OR (b.x < a.x AND b.y > a.y) THEN -1
-         |      ELSE 0 END AS sgn,
-         |    CASE WHEN a.x = b.x THEN 1 ELSE 0 END AS tx,
-         |    CASE WHEN a.y = b.y THEN 1 ELSE 0 END AS ty
-         |  FROM r a JOIN r b ON b.grp = a.grp AND a.i < b.i),
-         |f AS (SELECT grp, CAST(count(*) AS BIGINT) AS n_pairs,
-         |    CAST(sum(CASE WHEN sgn = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS c,
-         |    CAST(sum(CASE WHEN sgn = -1 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS d,
-         |    CAST(sum(tx) AS BIGINT) AS t1,
-         |    CAST(sum(ty) AS BIGINT) AS t2
-         |  FROM pr GROUP BY grp)
-         |SELECT sz.grp, sz.n,
-         |  CAST(COALESCE(f.n_pairs, 0) AS BIGINT) AS n_pairs,
-         |  CAST(COALESCE(f.c, 0) AS BIGINT) AS concordant,
-         |  CAST(COALESCE(f.d, 0) AS BIGINT) AS discordant,
-         |  CASE WHEN f.n_pairs IS NULL OR f.n_pairs - f.t1 <= 0
-         |      OR f.n_pairs - f.t2 <= 0 THEN NULL
-         |    ELSE CAST(floor(1000000.0 * CAST(f.c - f.d AS DOUBLE)
-         |      / sqrt(CAST((f.n_pairs - f.t1)
-         |        * (f.n_pairs - f.t2) AS DOUBLE)))
-         |      AS BIGINT) END AS tau_b_ppm
-         |FROM sz LEFT JOIN f ON f.grp = sz.grp""".stripMargin,
-
-    // q324: t-closeness -- the ordered-EMD prefix identity replayed:
-    // class x value grid, exact HUGEINT prefix sums of
-    // (c*N - g*n), one integral division to ppm.
-    "q324_t_closeness" ->
-      raw"""WITH rows_ AS (SELECT c_mktsegment AS seg,
-         |    CAST(((c_nationkey % 5) + 5) % 5 AS BIGINT) AS nk,
-         |    CAST(floor(c_acctbal) AS BIGINT) // 1000 AS s
-         |  FROM customer),
-         |cells AS (SELECT seg, nk, s, CAST(count(*) AS BIGINT) AS c
-         |  FROM rows_ GROUP BY 1, 2, 3),
-         |dom AS (SELECT s AS v, CAST(sum(c) AS BIGINT) AS g
-         |  FROM cells GROUP BY s),
-         |ds AS (SELECT CAST(count(*) AS BIGINT) AS m,
-         |    CAST(sum(g) AS BIGINT) AS nn FROM dom),
-         |grp AS (SELECT seg, nk, CAST(count(*) AS BIGINT) AS qi_n
-         |  FROM rows_ GROUP BY 1, 2),
-         |grid AS (SELECT grp.seg, grp.nk, grp.qi_n, dom.v, dom.g,
-         |    ds.m, ds.nn FROM grp CROSS JOIN dom CROSS JOIN ds),
-         |pf AS (SELECT grid.seg, grid.nk, grid.qi_n, grid.m, grid.nn,
-         |    grid.v,
-         |    sum(CAST(COALESCE(cells.c, 0) AS HUGEINT) * grid.nn
-         |      - CAST(grid.g AS HUGEINT) * grid.qi_n)
-         |      OVER (PARTITION BY grid.seg, grid.nk ORDER BY grid.v)
-         |      AS prefix
-         |  FROM grid LEFT JOIN cells ON cells.seg = grid.seg
-         |    AND cells.nk = grid.nk AND cells.s = grid.v),
-         |em AS (SELECT seg, nk, qi_n, m, nn,
-         |    sum(abs(prefix)) AS emd_num
-         |  FROM pf GROUP BY 1, 2, 3, 4, 5),
-         |fin AS (SELECT seg, nk, qi_n, m AS n_values,
-         |    CASE WHEN m = 1 THEN 0
-         |      ELSE CAST((1000000 * emd_num)
-         |        // (CAST(m - 1 AS HUGEINT) * qi_n * nn) AS BIGINT)
-         |      END AS emd_ppm
-         |  FROM em)
-         |SELECT seg, nk, qi_n, n_values, emd_ppm,
-         |  emd_ppm > 150000 AS suppressed_t
-         |FROM fin""".stripMargin,
-
-    // q325: position-based attribution -- first conversion by
-    // (ts, tie), strictly-prior touches positioned by the same
-    // order, the 40/20/40 CASE on the integer ppm lattice.
-    "q325_attribution" ->
-      raw"""WITH r AS (SELECT user_id AS u, event_type AS et,
-         |    epoch_ns(ts) AS ts, event_id AS tie FROM events),
-         |cv AS (SELECT u, ts AS cts, tie AS ctie FROM (
-         |    SELECT u, ts, tie, row_number() OVER (PARTITION BY u
-         |      ORDER BY ts, tie) AS rn
-         |    FROM r WHERE et = 'purchase') WHERE rn = 1),
-         |tc AS (SELECT r.u, r.et AS channel, r.ts, r.tie
-         |  FROM r JOIN cv ON cv.u = r.u
-         |    AND (r.ts < cv.cts OR (r.ts = cv.cts
-         |      AND r.tie < cv.ctie))
-         |  WHERE r.et <> 'purchase'),
-         |pos AS (SELECT u, channel,
-         |    CAST(row_number() OVER (PARTITION BY u
-         |      ORDER BY ts, tie) AS BIGINT) AS pos,
-         |    CAST(count(*) OVER (PARTITION BY u) AS BIGINT) AS k
-         |  FROM tc)
-         |SELECT channel, CAST(count(*) AS BIGINT) AS n_touches,
-         |  CAST(sum(CASE WHEN pos = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_first,
-         |  CAST(sum(CASE WHEN pos = k THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_last,
-         |  CAST(sum(CASE WHEN k = 1 THEN 1000000
-         |    WHEN k = 2 THEN 500000
-         |    WHEN pos = 1 OR pos = k THEN 400000
-         |    ELSE 200000 // (k - 2) END) AS BIGINT) AS credit_ppm
-         |FROM pos GROUP BY channel""".stripMargin,
-
-    // q326: lag-24 autocorrelation of the q315 hourly feeder --
-    // positional lead over the (h, h) order, fraction-cleared num/den
-    // on HUGEINT, one integral division.
-    "q326_acf" ->
-      raw"""WITH hr AS (SELECT event_type AS key,
-         |    (epoch_ns(ts) - ((epoch_ns(ts) % 3600000000000
-         |      + 3600000000000) % 3600000000000)) // 3600000000000
-         |      AS h,
-         |    CAST(floor(value * 100) AS BIGINT) AS v
-         |  FROM events),
-         |hv AS (SELECT key, CAST(h AS BIGINT) AS h,
-         |    CAST(sum(v) AS BIGINT) AS hv
-         |  FROM hr GROUP BY 1, 2),
-         |ld AS (SELECT key, hv,
-         |    lead(hv, 24) OVER (PARTITION BY key ORDER BY h, h)
-         |      AS lv
-         |  FROM hv),
-         |ag AS (SELECT key, CAST(count(*) AS HUGEINT) AS n,
-         |    sum(CAST(hv AS HUGEINT)) AS s,
-         |    sum(CAST(hv AS HUGEINT) * hv) AS ss,
-         |    CAST(count(lv) AS HUGEINT) AS npair,
-         |    sum(CASE WHEN lv IS NOT NULL
-         |      THEN CAST(hv AS HUGEINT) * lv END) AS sxy,
-         |    sum(CASE WHEN lv IS NOT NULL
-         |      THEN CAST(hv AS HUGEINT) END) AS sx,
-         |    sum(CASE WHEN lv IS NOT NULL
-         |      THEN CAST(lv AS HUGEINT) END) AS sy
-         |  FROM ld GROUP BY key)
-         |SELECT key, CAST(n AS BIGINT) AS n,
-         |  CAST(24 AS BIGINT) AS lag,
-         |  CASE WHEN n <= 24
-         |      OR n * n * ss - n * s * s * 2 + n * s * s <= 0
-         |    THEN NULL
-         |    ELSE CAST((1000000 * (n * n * sxy - n * s * (sx + sy)
-         |      + npair * s * s))
-         |      // (n * n * ss - n * s * s * 2 + n * s * s) AS BIGINT)
-         |    END AS acf_ppm
-         |FROM ag""".stripMargin,
-
-    // q327: Jensen-Shannon -- unsmoothed count ratios, the two-sided
-    // micro term in the engine's exact IEEE op order (explicit zero
-    // branches, no NaN), degenerate periods null.
-    "q327_js_drift" ->
-      raw"""WITH r AS (SELECT event_type AS key,
-         |    ((user_id % 10) + 10) % 10 AS bucket, event_id % 2 AS p
-         |  FROM events),
-         |cells AS (SELECT key, CAST(bucket AS BIGINT) AS bucket,
-         |    CAST(sum(CASE WHEN p = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n0,
-         |    CAST(sum(CASE WHEN p = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n1
-         |  FROM r GROUP BY 1, 2),
-         |ks AS (SELECT key, CAST(sum(n0) AS BIGINT) AS c0,
-         |    CAST(sum(n1) AS BIGINT) AS c1,
-         |    CAST(count(*) AS BIGINT) AS n_buckets
-         |  FROM cells GROUP BY key),
-         |tm AS (SELECT cells.key, cells.bucket, cells.n0, cells.n1,
-         |    ks.n_buckets, ks.c0, ks.c1,
-         |    CAST(cells.n0 AS DOUBLE) / CAST(ks.c0 AS DOUBLE) AS p0,
-         |    CAST(cells.n1 AS DOUBLE) / CAST(ks.c1 AS DOUBLE) AS p1
-         |  FROM cells JOIN ks ON ks.key = cells.key),
-         |t2 AS (SELECT *, CAST(floor((
-         |    (CASE WHEN n0 = 0 THEN 0.0
-         |      ELSE p0 * ln(2.0 * p0 / (p0 + p1)) END)
-         |    + (CASE WHEN n1 = 0 THEN 0.0
-         |      ELSE p1 * ln(2.0 * p1 / (p0 + p1)) END))
-         |    * 500000.0) AS BIGINT) AS term FROM tm),
-         |fold AS (SELECT key, CAST(sum(term) AS BIGINT) AS jsd,
-         |    max(CASE WHEN c0 = 0 OR c1 = 0 THEN 1 ELSE 0 END)
-         |      AS degen
-         |  FROM t2 GROUP BY key)
-         |SELECT t2.key, t2.bucket, t2.n0, t2.n1, t2.n_buckets,
-         |  CASE WHEN fold.degen = 1 THEN NULL ELSE fold.jsd END
-         |    AS jsd_micro
-         |FROM t2 JOIN fold ON fold.key = t2.key""".stripMargin,
-
-    // q328: Krippendorff's alpha -- unit coincidence quotients
-    // floored to micro, category totals over pairable rows, the
-    // (N-1)*Do/De fold on HUGEINT.
-    "q328_krippendorff" ->
-      raw"""WITH r AS (SELECT event_type AS grp, user_id AS unit,
-         |    ((CAST(floor(value * 100) AS BIGINT) % 4) + 4) % 4 AS v
-         |  FROM events),
-         |cells AS (SELECT grp, unit, v,
-         |    CAST(count(*) AS BIGINT) AS nuc
-         |  FROM r GROUP BY 1, 2, 3),
-         |units AS (SELECT grp, unit, CAST(sum(nuc) AS BIGINT) AS mu
-         |  FROM cells GROUP BY 1, 2),
-         |paired AS (SELECT c.grp, c.unit, c.v, c.nuc, u.mu
-         |  FROM cells c JOIN units u
-         |    ON u.grp = c.grp AND u.unit = c.unit
-         |  WHERE u.mu >= 2),
-         |du AS (SELECT grp, unit,
-         |    (1000000 * sum(nuc * (mu - nuc))) // (max(mu) - 1)
-         |      AS duv
-         |  FROM paired GROUP BY grp, unit),
-         |dofold AS (SELECT grp, sum(CAST(duv AS HUGEINT))
-         |    AS do_micro FROM du GROUP BY grp),
-         |cats AS (SELECT grp, v, CAST(sum(nuc) AS BIGINT) AS nc
-         |  FROM paired GROUP BY grp, v),
-         |catfold AS (SELECT grp, CAST(sum(nc) AS BIGINT) AS nn,
-         |    CAST(count(*) AS BIGINT) AS ncat
-         |  FROM cats GROUP BY grp),
-         |defold AS (SELECT c.grp,
-         |    sum(CAST(c.nc AS HUGEINT) * (f.nn - c.nc)) AS de,
-         |    CAST(max(f.nn) AS BIGINT) AS nn,
-         |    CAST(max(f.ncat) AS BIGINT) AS ncat
-         |  FROM cats c JOIN catfold f ON f.grp = c.grp
-         |  GROUP BY c.grp),
-         |us AS (SELECT grp,
-         |    CAST(sum(CASE WHEN mu >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_units,
-         |    CAST(sum(CASE WHEN mu < 2 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_dropped_units
-         |  FROM units GROUP BY grp)
-         |SELECT us.grp, us.n_units, us.n_dropped_units,
-         |  CAST(COALESCE(defold.nn, 0) AS BIGINT) AS n_pairable,
-         |  CAST(COALESCE(defold.ncat, 0) AS BIGINT) AS n_categories,
-         |  CASE WHEN defold.nn IS NULL OR defold.nn < 2
-         |      OR defold.de <= 0 THEN NULL
-         |    ELSE CAST(1000000 - (CAST(defold.nn - 1 AS HUGEINT)
-         |      * dofold.do_micro) // defold.de AS BIGINT)
-         |    END AS alpha_ppm
-         |FROM us LEFT JOIN dofold ON dofold.grp = us.grp
-         |LEFT JOIN defold ON defold.grp = us.grp""".stripMargin,
-
-    // q329: Cliff's delta -- the q273 Mann-Whitney chain, then the
-    // dominance rescale (u1_x2 - n0*n1) / (n0*n1) in ppm.
-    "q329_cliffs_delta" ->
-      raw"""WITH e AS (SELECT event_type AS exp,
-         |    CAST(user_id % 2 AS BIGINT) AS g,
-         |    CAST(floor(value * 100) AS BIGINT) AS v FROM events),
-         |c AS (SELECT exp, v,
-         |    CAST(sum(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS c0,
-         |    CAST(sum(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS c1
-         |  FROM e GROUP BY 1, 2),
-         |r AS (SELECT exp, c0, c1,
-         |    CAST(COALESCE(sum(c0 + c1) OVER (PARTITION BY exp
-         |      ORDER BY v
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS BIGINT) AS below
-         |  FROM c),
-         |m AS (SELECT exp, c0, c1, 2 * below + c0 + c1 + 1 AS mid2
-         |  FROM r),
-         |f AS (SELECT exp, CAST(sum(c0) AS BIGINT) AS n0,
-         |    CAST(sum(c1) AS BIGINT) AS n1,
-         |    CAST(sum(c1 * mid2) AS BIGINT) AS r1_x2
-         |  FROM m GROUP BY 1)
-         |SELECT exp, n0, n1,
-         |  CASE WHEN n0 * n1 = 0 THEN NULL
-         |    ELSE CAST((1000000 * ((r1_x2 - n1 * (n1 + 1))
-         |      - n0 * n1)) // (n0 * n1) AS BIGINT)
-         |    END AS delta_ppm
-         |FROM f""".stripMargin,
-
-    // q330: Cohen's d -- exact integer arm moments, the one fixed
-    // IEEE chain (means, pooled SS over n, sqrt, multiply by 1000,
-    // floor) replayed operation for operation.
-    "q330_cohens_d" ->
-      raw"""WITH e AS (SELECT event_type AS exp,
-         |    CAST(user_id % 2 AS BIGINT) AS g,
-         |    CAST(floor(value * 100) AS BIGINT) AS v FROM events),
-         |a AS (SELECT exp,
-         |    CAST(sum(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n0,
-         |    CAST(sum(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n1,
-         |    CAST(sum(CASE WHEN g = 0 THEN v ELSE 0 END) AS BIGINT)
-         |      AS s0,
-         |    CAST(sum(CASE WHEN g = 1 THEN v ELSE 0 END) AS BIGINT)
-         |      AS s1,
-         |    CAST(sum(CASE WHEN g = 0 THEN v * v ELSE 0 END)
-         |      AS BIGINT) AS q0,
-         |    CAST(sum(CASE WHEN g = 1 THEN v * v ELSE 0 END)
-         |      AS BIGINT) AS q1
-         |  FROM e GROUP BY exp)
-         |SELECT exp, n0, n1,
-         |  CASE WHEN n0 < 2 OR n1 < 2 THEN NULL
-         |    WHEN n0 * q0 - s0 * s0 = 0 AND n1 * q1 - s1 * s1 = 0
-         |      THEN NULL
-         |    ELSE CAST(floor(1000.0
-         |      * (CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)
-         |        - CAST(s0 AS DOUBLE) / CAST(n0 AS DOUBLE))
-         |      / sqrt((CAST(n0 * q0 - s0 * s0 AS DOUBLE)
-         |          / CAST(n0 AS DOUBLE)
-         |        + CAST(n1 * q1 - s1 * s1 AS DOUBLE)
-         |          / CAST(n1 AS DOUBLE))
-         |        / CAST(n0 + n1 - 2 AS DOUBLE))) AS BIGINT)
-         |    END AS d_milli
-         |FROM a""".stripMargin,
-
-    // q331: rolling lower median -- the 5-row trailing window as a
-    // list window aggregate, sorted, element 3; full windows only.
-    "q331_rolling_median" ->
-      raw"""WITH e AS (SELECT event_type AS key, epoch_ns(ts) AS ts,
-         |    CAST(event_id AS BIGINT) AS tie,
-         |    CAST(floor(value * 100) AS BIGINT) AS v FROM events),
-         |w AS (SELECT key, ts, tie, v,
-         |    list(v) OVER (PARTITION BY key ORDER BY ts, tie
-         |      ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS buf
-         |  FROM e)
-         |SELECT key, ts, tie, v,
-         |  CAST(list_sort(buf)[3] AS BIGINT) AS med
-         |FROM w WHERE len(buf) = 5""".stripMargin,
-
-    // q332: MAD -- two lower-median rank walks, the deviation join
-    // between them, replayed with explicit row_number/count windows.
-    "q332_mad" ->
-      raw"""WITH e AS (SELECT event_type AS grp,
-         |    CAST(floor(value * 100) AS BIGINT) AS v FROM events),
-         |r1 AS (SELECT grp, v,
-         |    CAST(row_number() OVER (PARTITION BY grp ORDER BY v)
-         |      AS BIGINT) AS r,
-         |    CAST(count(*) OVER (PARTITION BY grp) AS BIGINT) AS n
-         |  FROM e),
-         |med AS (SELECT grp, v AS median, n FROM r1
-         |  WHERE r = (n + 1) // 2),
-         |d AS (SELECT e.grp, med.median, med.n,
-         |    abs(e.v - med.median) AS dv
-         |  FROM e JOIN med ON e.grp = med.grp),
-         |r2 AS (SELECT grp, median, n, dv,
-         |    row_number() OVER (PARTITION BY grp ORDER BY dv) AS r
-         |  FROM d)
-         |SELECT grp, n, CAST(median AS BIGINT) AS median,
-         |  CAST(dv AS BIGINT) AS mad
-         |FROM r2 WHERE r = (n + 1) // 2""".stripMargin,
-
-    // q333: robust outlier gate -- the q332 stats joined back onto
-    // the rows, integer cross-multiplied fence at 1.8 MAD.
-    "q333_robust_outliers" ->
-      raw"""WITH e AS (SELECT event_type AS grp,
-         |    CAST(event_id AS BIGINT) AS id,
-         |    CAST(floor(value * 100) AS BIGINT) AS v FROM events),
-         |r1 AS (SELECT grp, v,
-         |    CAST(row_number() OVER (PARTITION BY grp ORDER BY v)
-         |      AS BIGINT) AS r,
-         |    CAST(count(*) OVER (PARTITION BY grp) AS BIGINT) AS n
-         |  FROM e),
-         |med AS (SELECT grp, v AS median, n FROM r1
-         |  WHERE r = (n + 1) // 2),
-         |d AS (SELECT e.grp, med.median, med.n,
-         |    abs(e.v - med.median) AS dv
-         |  FROM e JOIN med ON e.grp = med.grp),
-         |r2 AS (SELECT grp, median, n, dv,
-         |    row_number() OVER (PARTITION BY grp ORDER BY dv) AS r
-         |  FROM d),
-         |stats AS (SELECT grp, median, dv AS mad FROM r2
-         |  WHERE r = (n + 1) // 2)
-         |SELECT e.grp, e.id, e.v, CAST(s.median AS BIGINT) AS median,
-         |  CAST(s.mad AS BIGINT) AS mad,
-         |  CAST(abs(e.v - s.median) AS BIGINT) AS dev
-         |FROM e JOIN stats s ON e.grp = s.grp
-         |WHERE abs(e.v - s.median) * 1000 > 1800 * s.mad""".stripMargin,
-
-    // q334: post-stratified ATE -- per-stratum arm cells, the micro
-    // cleared fraction per surviving stratum, size-weighted fold,
-    // the unadjusted contrast over the same included rows.
-    "q334_stratified_ate" ->
-      raw"""WITH e AS (SELECT event_type AS exp,
-         |    CAST(user_id % 5 AS BIGINT) AS stratum,
-         |    CAST(user_id % 2 AS BIGINT) AS g,
-         |    CAST(floor(value * 100) AS BIGINT) AS v FROM events),
-         |c AS (SELECT exp, stratum,
-         |    CAST(sum(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n0,
-         |    CAST(sum(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n1,
-         |    CAST(sum(CASE WHEN g = 0 THEN v ELSE 0 END) AS BIGINT)
-         |      AS s0,
-         |    CAST(sum(CASE WHEN g = 1 THEN v ELSE 0 END) AS BIGINT)
-         |      AS s1
-         |  FROM e GROUP BY 1, 2),
-         |cc AS (SELECT exp, n0, n1, (n0 > 0 AND n1 > 0) AS ok,
-         |    CASE WHEN n0 > 0 AND n1 > 0 THEN
-         |      (1000000::HUGEINT
-         |        * (s1::HUGEINT * n0 - s0::HUGEINT * n1))
-         |        // (n1::HUGEINT * n0) END AS diff,
-         |    s0, s1
-         |  FROM c)
-         |SELECT exp,
-         |  CAST(sum(CASE WHEN ok THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_strata,
-         |  CAST(sum(CASE WHEN ok THEN n0 + n1 ELSE 0 END) AS BIGINT)
-         |    AS n,
-         |  CAST(sum(CASE WHEN NOT ok THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_excluded_strata,
-         |  CAST(sum(CASE WHEN NOT ok THEN n0 + n1 ELSE 0 END)
-         |    AS BIGINT) AS n_excluded_rows,
-         |  CASE WHEN sum(CASE WHEN ok THEN 1 ELSE 0 END) = 0
-         |      THEN NULL
-         |    ELSE CAST(sum(CASE WHEN ok
-         |        THEN (n0 + n1)::HUGEINT * diff
-         |        ELSE 0::HUGEINT END)
-         |      // sum(CASE WHEN ok THEN n0 + n1 ELSE 0 END)::HUGEINT
-         |      AS BIGINT) END AS ate_micro,
-         |  CASE WHEN sum(CASE WHEN ok THEN 1 ELSE 0 END) = 0
-         |      THEN NULL
-         |    ELSE CAST((1000000::HUGEINT
-         |      * (sum(CASE WHEN ok THEN s1 ELSE 0 END)::HUGEINT
-         |          * sum(CASE WHEN ok THEN n0 ELSE 0 END)
-         |        - sum(CASE WHEN ok THEN s0 ELSE 0 END)::HUGEINT
-         |          * sum(CASE WHEN ok THEN n1 ELSE 0 END)))
-         |      // (sum(CASE WHEN ok THEN n1 ELSE 0 END)::HUGEINT
-         |        * sum(CASE WHEN ok THEN n0 ELSE 0 END))
-         |      AS BIGINT) END AS simple_diff_micro
-         |FROM cc GROUP BY exp""".stripMargin,
-
-    // q335: Holm step-down -- the q309 synthetic p-value families,
-    // running max of (m-k+1)*p clipped to 1e6 in one rank window.
-    "q335_holm" ->
-      raw"""WITH hyp AS (SELECT DISTINCT event_type AS grp,
-         |    ((user_id % 100) + 100) % 100 AS hyp FROM events),
-         |pv AS (SELECT grp, hyp AS id,
-         |    CASE WHEN hyp < 10 THEN hyp * 137 + 3
-         |      ELSE ((hyp * 9973 + length(grp) * 131071) % 1000001
-         |        + 1000001) % 1000001 END AS p_ppm FROM hyp),
-         |rk AS (SELECT grp, CAST(id AS BIGINT) AS id,
-         |    CAST(p_ppm AS BIGINT) AS p_ppm,
-         |    CAST(row_number() OVER (PARTITION BY grp
-         |      ORDER BY p_ppm, id) AS BIGINT) AS k,
-         |    CAST(count(*) OVER (PARTITION BY grp) AS BIGINT) AS m
-         |  FROM pv),
-         |adj AS (SELECT grp, id, p_ppm, k, m,
-         |    CAST(least(1000000, max((m - k + 1) * p_ppm)
-         |      OVER (PARTITION BY grp ORDER BY p_ppm, id
-         |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-         |      AS BIGINT) AS adj_ppm
-         |  FROM rk)
-         |SELECT grp, id, p_ppm, k, m, adj_ppm,
-         |  (adj_ppm <= 50000) AS reject
-         |FROM adj""".stripMargin,
-
-    // q336: Markov removal effect -- the q325 touch derivation
-    // extended to non-converters, per-scenario transition rewrites,
-    // and the 8 synchronous ppm value-iteration rounds unrolled as
-    // materialized CTE levels (the q288 peel discipline).
-    "q336_markov_attribution" ->
-      (raw"""WITH r AS (SELECT user_id AS u, event_type AS et,
-         |    epoch_ns(ts) AS ts, event_id AS tie FROM events),
-         |cv AS (SELECT u, ts AS cts, tie AS ctie FROM (
-         |    SELECT u, ts, tie, row_number() OVER (PARTITION BY u
-         |      ORDER BY ts, tie) AS rn
-         |    FROM r WHERE et = 'purchase') WHERE rn = 1),
-         |tc AS (SELECT r.u, r.et AS channel, r.ts, r.tie,
-         |    CASE WHEN cv.u IS NOT NULL THEN '__conv__'
-         |      ELSE '__null__' END AS absorb
-         |  FROM r LEFT JOIN cv ON cv.u = r.u
-         |  WHERE r.et <> 'purchase' AND (cv.u IS NULL
-         |    OR r.ts < cv.cts OR (r.ts = cv.cts
-         |      AND r.tie < cv.ctie))),
-         |sq AS (SELECT u, channel, absorb,
-         |    row_number() OVER (PARTITION BY u ORDER BY ts, tie)
-         |      AS pos,
-         |    lead(channel) OVER (PARTITION BY u ORDER BY ts, tie)
-         |      AS nxt
-         |  FROM tc),
-         |ed AS (SELECT channel AS src, COALESCE(nxt, absorb) AS dst
-         |    FROM sq
-         |  UNION ALL SELECT '__start__', channel FROM sq
-         |    WHERE pos = 1
-         |  UNION ALL SELECT '__start__', '__conv__' FROM cv
-         |    WHERE u NOT IN (SELECT u FROM tc)),
-         |tr AS (SELECT src, dst, CAST(count(*) AS BIGINT) AS n
-         |  FROM ed GROUP BY 1, 2),
-         |chans AS (SELECT DISTINCT c FROM (
-         |    SELECT src AS c FROM tr UNION ALL SELECT dst FROM tr)
-         |  WHERE c NOT IN ('__start__', '__conv__', '__null__')),
-         |st AS (SELECT s.removed, t.src,
-         |    CASE WHEN t.dst = s.removed THEN '__null__'
-         |      ELSE t.dst END AS dst,
-         |    CAST(sum(t.n) AS BIGINT) AS n
-         |  FROM (SELECT c AS removed FROM chans
-         |    UNION ALL SELECT '__none__') s
-         |  CROSS JOIN tr t WHERE t.src <> s.removed
-         |  GROUP BY 1, 2, 3),
-         |v0 AS (SELECT DISTINCT removed, src AS state,
-         |    CAST(0 AS BIGINT) AS v FROM st),
-         |""" + markovValueIterSql(8) + raw""",
-         |pf AS (SELECT v AS p_full FROM v8
-         |  WHERE removed = '__none__' AND state = '__start__'),
-         |pr AS (SELECT removed, v FROM v8
-         |  WHERE state = '__start__' AND removed <> '__none__'),
-         |re AS (SELECT chans.c AS channel, pf.p_full AS p_full_ppm,
-         |    CAST(COALESCE(pr.v, 0) AS BIGINT) AS p_removed_ppm
-         |  FROM chans CROSS JOIN pf
-         |  LEFT JOIN pr ON pr.removed = chans.c),
-         |re2 AS (SELECT channel, p_full_ppm, p_removed_ppm,
-         |    CASE WHEN p_full_ppm <= 0 THEN NULL
-         |      ELSE greatest(0, 1000000
-         |        - (1000000 * p_removed_ppm) // p_full_ppm)
-         |      END AS re_ppm FROM re),
-         |tot AS (SELECT CAST(sum(re_ppm) AS BIGINT) AS t FROM re2)
-         |SELECT channel, CAST(p_full_ppm AS BIGINT) AS p_full_ppm,
-         |  p_removed_ppm, CAST(re_ppm AS BIGINT) AS re_ppm,
-         |  CASE WHEN t IS NULL OR t <= 0 THEN NULL
-         |    ELSE CAST((1000000 * re_ppm) // t AS BIGINT)
-         |    END AS share_ppm
-         |FROM re2 CROSS JOIN tot""").stripMargin,
-
-    // q337: Mann-Kendall -- the pair join, tie fold and the one
-    // float chain (multiply, divide by the sqrt of num/18, floor)
-    // replayed operation for operation.
-    "q337_mann_kendall" ->
-      raw"""WITH dl AS (SELECT event_type AS grp,
-         |    (epoch_ns(ts) - ((epoch_ns(ts) % 86400000000000
-         |      + 86400000000000) % 86400000000000))
-         |      // 86400000000000 AS d,
-         |    CAST(floor(value * 100) AS BIGINT) AS v FROM events),
-         |dv AS (SELECT grp, CAST(d AS BIGINT) AS d,
-         |    CAST(sum(v) AS BIGINT) AS dv FROM dl GROUP BY 1, 2),
-         |sz AS (SELECT grp, CAST(count(*) AS BIGINT) AS n FROM dv
-         |  GROUP BY 1),
-         |pr AS (SELECT a.grp, CAST(sum(CASE WHEN b.dv > a.dv THEN 1
-         |      WHEN b.dv < a.dv THEN -1 ELSE 0 END) AS BIGINT) AS s
-         |  FROM dv a JOIN dv b ON a.grp = b.grp AND a.d < b.d
-         |  GROUP BY 1),
-         |tc AS (SELECT grp,
-         |    CAST(sum(c * (c - 1) * (2 * c + 5)) AS BIGINT) AS tcorr
-         |  FROM (SELECT grp, dv, CAST(count(*) AS BIGINT) AS c
-         |    FROM dv GROUP BY 1, 2) GROUP BY 1),
-         |f AS (SELECT sz.grp, sz.n, COALESCE(pr.s, 0) AS s,
-         |    sz.n * (sz.n - 1) * (2 * sz.n + 5) - tc.tcorr
-         |      AS var_num18
-         |  FROM sz LEFT JOIN pr ON pr.grp = sz.grp
-         |  JOIN tc ON tc.grp = sz.grp)
-         |SELECT grp, n, s, var_num18,
-         |  CASE WHEN var_num18 <= 0 THEN NULL
-         |    WHEN s = 0 THEN 0
-         |    ELSE CAST(floor(CAST((s - CASE WHEN s > 0 THEN 1
-         |        ELSE -1 END) * 1000 AS DOUBLE)
-         |      / sqrt(CAST(var_num18 AS DOUBLE) / 18.0::DOUBLE))
-         |      AS BIGINT) END AS z_milli
-         |FROM f""".stripMargin,
-
-    // q338: HHI -- (grp, cat) counts, one HUGEINT integral division.
-    "q338_hhi" ->
-      raw"""WITH c AS (SELECT lang AS grp, source AS cat,
-         |    CAST(count(*) AS BIGINT) AS nc FROM documents
-         |  GROUP BY 1, 2)
-         |SELECT grp, CAST(sum(nc) AS BIGINT) AS n,
-         |  CAST(count(*) AS BIGINT) AS n_categories,
-         |  CAST((1000000::HUGEINT * sum(CAST(nc AS HUGEINT) * nc))
-         |    // (CAST(sum(nc) AS HUGEINT)
-         |      * CAST(sum(nc) AS BIGINT)) AS BIGINT) AS hhi_ppm
-         |FROM c GROUP BY grp""".stripMargin,
-
-    // q339: entropy -- per-category micro-nat terms in the same
-    // fixed IEEE op order ((1e6 * p) * ln(1/p), floor), integer sum.
-    "q339_entropy" ->
-      raw"""WITH c AS (SELECT lang AS key, source AS cat,
-         |    CAST(count(*) AS BIGINT) AS nc FROM documents
-         |  GROUP BY 1, 2),
-         |w AS (SELECT key, nc,
-         |    CAST(sum(nc) OVER (PARTITION BY key) AS BIGINT) AS n
-         |  FROM c),
-         |t AS (SELECT key, n,
-         |    CAST(floor((1000000.0::DOUBLE
-         |      * (CAST(nc AS DOUBLE) / CAST(n AS DOUBLE)))
-         |      * ln(CAST(n AS DOUBLE) / CAST(nc AS DOUBLE)))
-         |      AS BIGINT) AS term
-         |  FROM w)
-         |SELECT key, CAST(max(n) AS BIGINT) AS n,
-         |  CAST(count(*) AS BIGINT) AS n_categories,
-         |  CAST(sum(term) AS BIGINT) AS entropy_micro,
-         |  CAST(floor(1000000.0::DOUBLE
-         |    * ln(CAST(count(*) AS DOUBLE))) AS BIGINT)
-         |    AS max_entropy_micro
-         |FROM t GROUP BY key""".stripMargin,
-
-    // q340: seasonal-naive backtest -- two lags, per-row floored
-    // sMAPE terms, three integral divisions.
-    "q340_backtest" ->
-      raw"""WITH hr AS (SELECT event_type AS key,
-         |    (epoch_ns(ts) - ((epoch_ns(ts) % 3600000000000
-         |      + 3600000000000) % 3600000000000)) // 3600000000000
-         |      AS h,
-         |    CAST(floor(value * 100) AS BIGINT) AS v
-         |  FROM events),
-         |hv AS (SELECT key, CAST(h AS BIGINT) AS h,
-         |    CAST(sum(v) AS BIGINT) AS hv
-         |  FROM hr GROUP BY 1, 2),
-         |lg AS (SELECT key, hv,
-         |    lag(hv, 24) OVER (PARTITION BY key ORDER BY h, h) AS f,
-         |    lag(hv, 1) OVER (PARTITION BY key ORDER BY h, h) AS p
-         |  FROM hv),
-         |ev AS (SELECT key, abs(hv - f) AS em, abs(hv - p) AS e1,
-         |    abs(hv) + abs(f) AS den
-         |  FROM lg WHERE f IS NOT NULL),
-         |sm AS (SELECT key, em, e1, CASE WHEN den = 0 THEN 0
-         |    ELSE (2000000 * em) // den END AS smt FROM ev)
-         |SELECT key, CAST(count(*) AS BIGINT) AS n_eval,
-         |  CAST((1000000::HUGEINT * sum(CAST(em AS HUGEINT)))
-         |    // CAST(count(*) AS HUGEINT) AS BIGINT) AS mae_micro,
-         |  CAST(sum(CAST(smt AS HUGEINT))
-         |    // CAST(count(*) AS HUGEINT) AS BIGINT) AS smape_ppm,
-         |  CASE WHEN CAST(sum(e1) AS BIGINT) <= 0 THEN NULL
-         |    ELSE CAST((1000000::HUGEINT * sum(CAST(em AS HUGEINT)))
-         |      // CAST(sum(e1) AS HUGEINT) AS BIGINT)
-         |    END AS mase_ppm
-         |FROM sm GROUP BY key""".stripMargin,
-
-    // q341: AMOC -- prefix sums, the HUGEINT-cleared gain per
-    // candidate, argmax by (gain DESC, pos ASC), visible null rows.
-    "q341_amoc" ->
-      raw"""WITH hr AS (SELECT event_type AS key,
-         |    (epoch_ns(ts) - ((epoch_ns(ts) % 3600000000000
-         |      + 3600000000000) % 3600000000000)) // 3600000000000
-         |      AS h,
-         |    CAST(floor(value * 100) AS BIGINT) AS v
-         |  FROM events),
-         |hv AS (SELECT key, CAST(h AS BIGINT) AS h,
-         |    CAST(sum(v) AS BIGINT) AS hv
-         |  FROM hr GROUP BY 1, 2),
-         |pre AS (SELECT key, h AS ts, h AS tie, hv,
-         |    CAST(row_number() OVER (PARTITION BY key
-         |      ORDER BY h, h) AS BIGINT) AS pos,
-         |    CAST(sum(hv) OVER (PARTITION BY key ORDER BY h, h
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS BIGINT) AS sl,
-         |    CAST(count(*) OVER (PARTITION BY key) AS BIGINT) AS n,
-         |    CAST(sum(hv) OVER (PARTITION BY key) AS BIGINT) AS s
-         |  FROM hv),
-         |cand AS (SELECT key, ts, tie, pos, n, sl, s,
-         |    (1000000::HUGEINT * (CAST(sl AS HUGEINT) * sl
-         |        * (n - pos) * n
-         |      + CAST(s - sl AS HUGEINT) * (s - sl) * pos * n
-         |      - CAST(s AS HUGEINT) * s * pos * (n - pos)))
-         |      // (CAST(pos AS HUGEINT) * (n - pos) * n) AS gain
-         |  FROM pre WHERE pos >= 24 AND pos <= n - 24),
-         |best AS (SELECT key, ts, tie, pos, sl, s, n, gain,
-         |    row_number() OVER (PARTITION BY key
-         |      ORDER BY gain DESC, pos ASC) AS rk
-         |  FROM cand),
-         |sz AS (SELECT key, CAST(count(*) AS BIGINT) AS n FROM hv
-         |  GROUP BY 1)
-         |SELECT sz.key, sz.n, b.pos AS n_left,
-         |  CAST(b.ts AS BIGINT) AS split_ts,
-         |  CAST(b.tie AS BIGINT) AS split_tie,
-         |  CAST(b.gain AS BIGINT) AS gain_micro,
-         |  CAST((1000000::HUGEINT * b.sl) // b.pos AS BIGINT)
-         |    AS mean_left_micro,
-         |  CAST((1000000::HUGEINT * (b.s - b.sl)) // (b.n - b.pos)
-         |    AS BIGINT) AS mean_right_micro
-         |FROM sz LEFT JOIN (SELECT * FROM best WHERE rk = 1) b
-         |  ON b.key = sz.key""".stripMargin,
-
-    // q342: SPRT -- the running llr walk with the same ln-ratio
-    // constants and per-row micro floor, first boundary crossing.
-    "q342_sprt" ->
-      raw"""WITH e AS (SELECT event_type AS exp, epoch_ns(ts) AS t,
-         |    event_id AS i,
-         |    CASE WHEN value >= 50 THEN 1 ELSE 0 END AS c
-         |  FROM events),
-         |w AS (SELECT exp, t, i,
-         |    CAST(sum(c) OVER (PARTITION BY exp ORDER BY t, i
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS s,
-         |    CAST(count(*) OVER (PARTITION BY exp ORDER BY t, i
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n
-         |  FROM e),
-         |l AS (SELECT exp, t, i, s, n,
-         |    CAST(floor(1000000.0::DOUBLE
-         |      * ((CAST(s AS DOUBLE)
-         |          * ln(CAST(520 AS DOUBLE) / CAST(480 AS DOUBLE)))
-         |        + (CAST(n - s AS DOUBLE)
-         |          * ln(CAST(480 AS DOUBLE) / CAST(520 AS DOUBLE)))))
-         |      AS BIGINT) AS llr
-         |  FROM w),
-         |bnd AS (SELECT
-         |    CAST(floor(1000000.0::DOUBLE * ln(CAST(900 AS DOUBLE)
-         |      / CAST(50 AS DOUBLE))) AS BIGINT) AS up,
-         |    CAST(floor(1000000.0::DOUBLE * ln(CAST(100 AS DOUBLE)
-         |      / CAST(950 AS DOUBLE))) AS BIGINT) AS lo),
-         |sm AS (SELECT exp, max(n) AS n, max(s) AS s FROM l
-         |  GROUP BY 1),
-         |fin AS (SELECT l.exp, l.llr FROM l JOIN sm
-         |  ON sm.exp = l.exp AND sm.n = l.n),
-         |cr AS (SELECT l.exp, l.t, l.i, l.n, l.llr, bnd.up, bnd.lo,
-         |    row_number() OVER (PARTITION BY l.exp
-         |      ORDER BY l.t, l.i) AS rk
-         |  FROM l CROSS JOIN bnd
-         |  WHERE l.llr >= bnd.up OR l.llr <= bnd.lo),
-         |c1 AS (SELECT * FROM cr WHERE rk = 1)
-         |SELECT sm.exp, sm.n, sm.s, fin.llr AS llr_final_micro,
-         |  bnd.up AS upper_micro, bnd.lo AS lower_micro,
-         |  COALESCE(CASE WHEN c1.llr >= bnd.up THEN 'reject_h0'
-         |    ELSE 'accept_h0' END, 'continue') AS decision,
-         |  CAST(c1.t AS BIGINT) AS decision_ts,
-         |  CAST(c1.i AS BIGINT) AS decision_tie,
-         |  c1.n AS n_at_decision, c1.llr AS llr_at_decision
-         |FROM sm CROSS JOIN bnd
-         |JOIN fin ON fin.exp = sm.exp
-         |LEFT JOIN c1 ON c1.exp = sm.exp""".stripMargin,
-
-    // q343: CMH -- 2x2 cells per stratum, per-stratum micro terms
-    // (HUGEINT for the four-way variance product), one fold.
-    "q343_cmh" ->
-      raw"""WITH e AS (SELECT event_type AS exp,
-         |    CAST(user_id % 5 AS BIGINT) AS stratum,
-         |    CAST(user_id % 2 AS BIGINT) AS g,
-         |    CASE WHEN value >= 50 THEN 1 ELSE 0 END AS c
-         |  FROM events),
-         |cl AS (SELECT exp, stratum,
-         |    CAST(sum(CASE WHEN g = 1 AND c = 1 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS a,
-         |    CAST(sum(CASE WHEN g = 1 AND c = 0 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS b,
-         |    CAST(sum(CASE WHEN g = 0 AND c = 1 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS c2,
-         |    CAST(sum(CASE WHEN g = 0 AND c = 0 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS d
-         |  FROM e GROUP BY 1, 2),
-         |t2 AS (SELECT exp, a, b, c2, d, a + b + c2 + d AS n,
-         |    (a + b + c2 + d >= 2) AS ok FROM cl),
-         |t3 AS (SELECT exp, n, ok,
-         |    CASE WHEN ok THEN (1000000 * a * d) // n END AS r,
-         |    CASE WHEN ok THEN (1000000 * b * c2) // n END AS s,
-         |    CASE WHEN ok THEN (1000000 * (a + b) * (a + c2)) // n
-         |      END AS ee,
-         |    CASE WHEN ok THEN CAST((1000000::HUGEINT * (a + b)
-         |        * (c2 + d) * (a + c2) * (b + d))
-         |      // (CAST(n AS HUGEINT) * n * (n - 1)) AS BIGINT)
-         |      END AS v,
-         |    a FROM t2)
-         |SELECT exp,
-         |  CAST(sum(CASE WHEN ok THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_strata,
-         |  CAST(sum(CASE WHEN ok THEN n ELSE 0 END) AS BIGINT) AS n,
-         |  CAST(sum(CASE WHEN NOT ok THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_excluded_strata,
-         |  CAST(sum(CASE WHEN NOT ok THEN n ELSE 0 END) AS BIGINT)
-         |    AS n_excluded_rows,
-         |  CAST(sum(CASE WHEN ok THEN a ELSE 0 END) AS BIGINT)
-         |    AS sum_a,
-         |  CAST(sum(CASE WHEN ok THEN ee ELSE 0 END) AS BIGINT)
-         |    AS e_micro,
-         |  CAST(sum(CASE WHEN ok THEN v ELSE 0 END) AS BIGINT)
-         |    AS v_micro,
-         |  CASE WHEN CAST(sum(CASE WHEN ok THEN s ELSE 0 END)
-         |      AS BIGINT) <= 0 THEN NULL
-         |    ELSE CAST((1000000::HUGEINT
-         |      * sum(CASE WHEN ok THEN r ELSE 0 END))
-         |      // sum(CASE WHEN ok THEN s ELSE 0 END)::HUGEINT
-         |      AS BIGINT) END AS or_mh_ppm
-         |FROM t3 GROUP BY exp""".stripMargin,
-
-    // q344: Nelson-Aalen -- the q282 subjects, reverse-cumulative
-    // risk sets, per-time micro terms, one ascending window sum.
-    "q344_nelson_aalen" ->
-      raw"""WITH subj AS (SELECT ((user_id % 2) + 2) % 2 AS grp,
-         |    (max(epoch_ns(ts)) - min(epoch_ns(ts)))
-         |      // 3600000000000 AS t,
-         |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-         |      AS e
-         |  FROM events GROUP BY user_id),
-         |bd AS (SELECT CAST(grp AS BIGINT) AS grp,
-         |    CAST(t AS BIGINT) AS t, CAST(count(*) AS BIGINT) AS c,
-         |    CAST(sum(e) AS BIGINT) AS d
-         |  FROM subj GROUP BY 1, 2),
-         |rk AS (SELECT grp, t, d,
-         |    CAST(sum(c) OVER (PARTITION BY grp ORDER BY t DESC
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_risk
-         |  FROM bd),
-         |et AS (SELECT grp, t, n_risk, d,
-         |    (1000000 * d) // n_risk AS term
-         |  FROM rk WHERE d >= 1)
-         |SELECT grp, t, n_risk, d,
-         |  CAST(sum(term) OVER (PARTITION BY grp ORDER BY t
-         |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS h_micro
-         |FROM et""".stripMargin,
-
-    // q345: WER -- the same tokenization, a per-pair ASCII vocab
-    // encoding (any bijection preserves edit distance), DuckDB's
-    // levenshtein on the single-byte encodings.
-    "q345_wer" ->
-      raw"""WITH d AS (SELECT doc_id,
-         |    array_to_string(string_split_regex(text, '\s+')[1:10],
-         |      ' ') AS txt
-         |  FROM documents),
-         |pr AS (SELECT a.doc_id AS id, a.txt AS hyp, b.txt AS ref
-         |  FROM d a JOIN d b ON b.doc_id = a.doc_id + 1),
-         |tk AS (SELECT id,
-         |    list_filter(string_split_regex(trim(hyp), '\s+'),
-         |      x -> x <> '') AS h,
-         |    list_filter(string_split_regex(trim(ref), '\s+'),
-         |      x -> x <> '') AS r
-         |  FROM pr),
-         |vc AS (SELECT id, h, r,
-         |    list_sort(list_distinct(list_concat(h, r))) AS vocab
-         |  FROM tk),
-         |en AS (SELECT id, h, r,
-         |    COALESCE(array_to_string(list_transform(h,
-         |      x -> chr(list_position(vocab, x) + 32)), ''), '')
-         |      AS eh,
-         |    COALESCE(array_to_string(list_transform(r,
-         |      x -> chr(list_position(vocab, x) + 32)), ''), '')
-         |      AS er
-         |  FROM vc)
-         |SELECT id, CAST(len(h) AS BIGINT) AS n_hyp,
-         |  CAST(len(r) AS BIGINT) AS n_ref,
-         |  CAST(levenshtein(eh, er) AS BIGINT) AS dist,
-         |  CASE WHEN len(r) = 0 THEN NULL
-         |    ELSE CAST((1000000 * levenshtein(eh, er))
-         |      // len(r) AS BIGINT) END AS wer_ppm
-         |FROM en""".stripMargin,
-
-    // q346: association rules -- distinct membership, basket-keyed
-    // pairs, the three ppm divisions (lift on HUGEINT).
-    "q346_assoc" ->
-      raw"""WITH m AS (SELECT DISTINCT user_id AS bk,
-         |    event_type AS item FROM events),
-         |nb AS (SELECT CAST(count(DISTINCT bk) AS BIGINT) AS nbk
-         |  FROM m),
-         |it AS (SELECT item, CAST(count(*) AS BIGINT) AS ni FROM m
-         |  GROUP BY 1),
-         |p AS (SELECT a.item AS antecedent, b.item AS consequent,
-         |    CAST(count(*) AS BIGINT) AS n_ab
-         |  FROM m a JOIN m b ON a.bk = b.bk AND a.item <> b.item
-         |  GROUP BY 1, 2)
-         |SELECT p.antecedent, p.consequent, ia.ni AS n_a,
-         |  ib.ni AS n_b, p.n_ab,
-         |  CAST((1000000 * p.n_ab) // nb.nbk AS BIGINT)
-         |    AS support_ppm,
-         |  CAST((1000000 * p.n_ab) // ia.ni AS BIGINT)
-         |    AS confidence_ppm,
-         |  CAST((1000000::HUGEINT * p.n_ab * nb.nbk)
-         |    // (CAST(ia.ni AS HUGEINT) * ib.ni) AS BIGINT)
-         |    AS lift_ppm
-         |FROM p JOIN it ia ON ia.item = p.antecedent
-         |JOIN it ib ON ib.item = p.consequent
-         |CROSS JOIN nb
-         |WHERE (1000000 * p.n_ab) // nb.nbk >= 10000""".stripMargin,
-
-    // q347: pinball loss -- the lag-24 forecast, the asymmetric
-    // per-row charge, one integral division for the mean.
-    "q347_pinball" ->
-      raw"""WITH hr AS (SELECT event_type AS key,
-         |    (epoch_ns(ts) - ((epoch_ns(ts) % 3600000000000
-         |      + 3600000000000) % 3600000000000)) // 3600000000000
-         |      AS h,
-         |    CAST(floor(value * 100) AS BIGINT) AS v
-         |  FROM events),
-         |hv AS (SELECT key, CAST(h AS BIGINT) AS h,
-         |    CAST(sum(v) AS BIGINT) AS hv
-         |  FROM hr GROUP BY 1, 2),
-         |lg AS (SELECT key, hv,
-         |    lag(hv, 24) OVER (PARTITION BY key ORDER BY h) AS f
-         |  FROM hv),
-         |ev AS (SELECT key,
-         |    CASE WHEN hv >= f THEN 900000 * (hv - f)
-         |      ELSE 100000 * (f - hv) END AS loss
-         |  FROM lg WHERE f IS NOT NULL)
-         |SELECT key, CAST(count(*) AS BIGINT) AS n,
-         |  CAST(sum(loss) AS BIGINT) AS sum_loss_ppm,
-         |  CAST(sum(CAST(loss AS HUGEINT))
-         |    // CAST(count(*) AS HUGEINT) AS BIGINT)
-         |    AS mean_loss_ppm
-         |FROM ev GROUP BY key""".stripMargin,
-
-    // q348: Hosmer-Lemeshow -- the rank window, integer decile
-    // bucketing, exact O and sum-conf E per bucket.
-    "q348_hl_deciles" ->
-      raw"""WITH e AS (SELECT event_type AS key, event_id AS tie,
-         |    least(1000000, CAST(floor(value * 10000) AS BIGINT))
-         |      AS conf,
-         |    CAST(event_id % 2 AS BIGINT) AS lab FROM events),
-         |rk AS (SELECT key, conf, lab,
-         |    CAST(row_number() OVER (PARTITION BY key
-         |      ORDER BY conf, tie) AS BIGINT) AS r,
-         |    CAST(count(*) OVER (PARTITION BY key) AS BIGINT) AS tot
-         |  FROM e)
-         |SELECT key, CAST(((r - 1) * 10) // tot AS BIGINT) AS decile,
-         |  CAST(count(*) AS BIGINT) AS n, CAST(sum(lab) AS BIGINT)
-         |    AS o,
-         |  CAST(sum(conf) AS BIGINT) AS e_ppm
-         |FROM rk GROUP BY 1, 2""".stripMargin,
-
-    // q349: modularity -- the shared clique+chain edge CTEs, the
-    // clique-id labels, per-community integers + HUGEINT ppm
-    // contribution.
-    "q349_modularity" ->
-      (raw"""WITH """ + cliqueChainSql + raw""",
-         |lab AS (SELECT c AS node, g AS l FROM c),
-         |j AS (SELECT la.l AS la, lb.l AS lb FROM e
-         |  JOIN lab la ON la.node = e.a
-         |  JOIN lab lb ON lb.node = e.b),
-         |mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM j),
-         |ein AS (SELECT la AS community,
-         |    CAST(count(*) AS BIGINT) AS e_in
-         |  FROM j WHERE la = lb GROUP BY 1),
-         |ds AS (SELECT community,
-         |    CAST(count(*) AS BIGINT) AS deg_sum
-         |  FROM (SELECT la AS community FROM j
-         |    UNION ALL SELECT lb FROM j) GROUP BY 1)
-         |SELECT ds.community, ds.deg_sum,
-         |  CAST(COALESCE(ein.e_in, 0) AS BIGINT) AS e_in, mm.m,
-         |  CAST((1000000::HUGEINT
-         |    * (4::HUGEINT * mm.m * COALESCE(ein.e_in, 0)
-         |      - CAST(ds.deg_sum AS HUGEINT) * ds.deg_sum))
-         |    // (4::HUGEINT * mm.m * mm.m) AS BIGINT) AS contrib_ppm
-         |FROM ds LEFT JOIN ein ON ein.community = ds.community
-         |CROSS JOIN mm""").stripMargin,
-
-    // q350: isotonic minimax -- prefix sums, the (j,k) segment-mean
-    // lattice, min over k >= i then max over j <= i, replayed with
-    // the same integral truncations.
-    "q350_isotonic" ->
-      raw"""WITH dl AS (SELECT event_type AS grp,
-         |    (epoch_ns(ts) - ((epoch_ns(ts) % 86400000000000
-         |      + 86400000000000) % 86400000000000))
-         |      // 86400000000000 AS d,
-         |    CAST(floor(value * 100) AS BIGINT) AS v FROM events),
-         |dv2 AS (SELECT grp, CAST(d AS BIGINT) AS d,
-         |    CAST(sum(v) AS BIGINT) AS dv FROM dl GROUP BY 1, 2),
-         |p0 AS (SELECT grp AS key, d AS ts, d AS tie, dv AS v,
-         |    CAST(row_number() OVER (PARTITION BY grp ORDER BY d)
-         |      AS BIGINT) AS pos,
-         |    CAST(sum(dv) OVER (PARTITION BY grp ORDER BY d
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS ps
-         |  FROM dv2),
-         |jj AS (SELECT key, pos AS j, ps - v AS pjm1 FROM p0),
-         |kk AS (SELECT key, pos AS k, ps AS prek FROM p0),
-         |pjk AS (SELECT jj.key, jj.j, kk.k,
-         |    (1000000 * (kk.prek - jj.pjm1)) // (kk.k - jj.j + 1)
-         |      AS av
-         |  FROM jj JOIN kk ON kk.key = jj.key AND jj.j <= kk.k),
-         |inr AS (SELECT i.key, i.pos, pjk.j, min(pjk.av) AS mn
-         |  FROM p0 i JOIN pjk ON pjk.key = i.key
-         |    AND pjk.j <= i.pos AND pjk.k >= i.pos
-         |  GROUP BY 1, 2, 3),
-         |ft AS (SELECT key, pos, CAST(max(mn) AS BIGINT)
-         |    AS iso_micro
-         |  FROM inr GROUP BY 1, 2)
-         |SELECT p0.key, p0.ts, p0.tie, p0.v, ft.iso_micro
-         |FROM p0 JOIN ft ON ft.key = p0.key
-         |  AND ft.pos = p0.pos""".stripMargin,
-
-    // q351: gains table -- the desc rank window, integer bucketing,
-    // cumulative sums, capture/lift divisions (lift on HUGEINT).
-    "q351_gains" ->
-      raw"""WITH e AS (SELECT event_type AS key, event_id AS tie,
-         |    CAST(floor(value * 10000) AS BIGINT) AS s,
-         |    CAST(event_id % 2 AS BIGINT) AS l FROM events),
-         |rk AS (SELECT key, l,
-         |    CAST(row_number() OVER (PARTITION BY key
-         |      ORDER BY s DESC, tie) AS BIGINT) AS r,
-         |    CAST(count(*) OVER (PARTITION BY key) AS BIGINT) AS tot
-         |  FROM e),
-         |bk AS (SELECT key, ((r - 1) * 10) // tot AS bucket,
-         |    CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(l) AS BIGINT) AS o,
-         |    CAST(max(tot) AS BIGINT) AS tot
-         |  FROM rk GROUP BY 1, 2),
-         |cm AS (SELECT key, bucket, n, o, tot,
-         |    CAST(sum(n) OVER (PARTITION BY key ORDER BY bucket
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_n,
-         |    CAST(sum(o) OVER (PARTITION BY key ORDER BY bucket
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_o,
-         |    CAST(sum(o) OVER (PARTITION BY key) AS BIGINT) AS toto
-         |  FROM bk)
-         |SELECT key, CAST(bucket AS BIGINT) AS bucket, n, o,
-         |  cum_n, cum_o,
-         |  CASE WHEN toto <= 0 THEN NULL
-         |    ELSE CAST((1000000 * cum_o) // toto AS BIGINT)
-         |    END AS capture_ppm,
-         |  CASE WHEN toto <= 0 THEN NULL
-         |    ELSE CAST((1000000::HUGEINT * cum_o * tot)
-         |      // (CAST(toto AS HUGEINT) * cum_n) AS BIGINT)
-         |    END AS lift_ppm
-         |FROM cm""".stripMargin,
-
-    // q352: weighted median -- cumulative-weight window, integer
-    // cross-multiplied threshold, min passing value.
-    "q352_weighted_median" ->
-      raw"""WITH e AS (SELECT event_type AS grp,
-         |    CAST(floor(value * 100) AS BIGINT) AS v,
-         |    CAST(event_id % 5 + 1 AS BIGINT) AS w FROM events),
-         |c AS (SELECT grp, v, w,
-         |    CAST(sum(w) OVER (PARTITION BY grp ORDER BY v
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cw,
-         |    CAST(sum(w) OVER (PARTITION BY grp) AS BIGINT) AS wt,
-         |    CAST(count(*) OVER (PARTITION BY grp) AS BIGINT) AS n
-         |  FROM e)
-         |SELECT grp, CAST(max(n) AS BIGINT) AS n,
-         |  CAST(max(wt) AS BIGINT) AS w_total,
-         |  CAST(min(v) AS BIGINT) AS wmedian
-         |FROM c WHERE cw * 2 >= wt GROUP BY grp""".stripMargin,
-
-    // q353: Hill -- desc rank, the k+1 threshold join, per-term
-    // micro-nat ln floors, one integral division by k.
-    "q353_hill" ->
-      raw"""WITH d AS (SELECT lang AS grp, CAST(n_chars AS BIGINT)
-         |    AS v FROM documents),
-         |rk AS (SELECT grp, v,
-         |    CAST(row_number() OVER (PARTITION BY grp
-         |      ORDER BY v DESC) AS BIGINT) AS r,
-         |    CAST(count(*) OVER (PARTITION BY grp) AS BIGINT) AS n
-         |  FROM d),
-         |th AS (SELECT grp, v AS x_k1 FROM rk WHERE r = 21),
-         |tm AS (SELECT rk.grp, th.x_k1,
-         |    CAST(floor(1000000.0::DOUBLE
-         |      * ln(CAST(rk.v AS DOUBLE) / CAST(th.x_k1 AS DOUBLE)))
-         |      AS BIGINT) AS term
-         |  FROM rk JOIN th ON th.grp = rk.grp WHERE rk.r <= 20),
-         |f AS (SELECT grp, CAST(max(x_k1) AS BIGINT) AS x_k1,
-         |    CAST(sum(term) // 20 AS BIGINT) AS hill_micro
-         |  FROM tm GROUP BY 1)
-         |SELECT s.grp, s.n, CAST(20 AS BIGINT) AS k, f.x_k1,
-         |  f.hill_micro
-         |FROM (SELECT grp, CAST(max(n) AS BIGINT) AS n FROM rk
-         |  GROUP BY 1) s
-         |LEFT JOIN f ON f.grp = s.grp""".stripMargin,
-
-    // q354: RFM -- per-user integer aggregates, three segment-
-    // partitioned rank windows with the user tie-break, quintile
-    // bucketing by integer division.
-    "q354_rfm" ->
-      raw"""WITH e AS (SELECT event_type AS seg, user_id AS u,
-         |    epoch_ns(ts) AS t,
-         |    CAST(floor(value * 100) AS BIGINT) AS v FROM events),
-         |pu AS (SELECT seg, u,
-         |    1706745600000000000 - max(t) AS recency,
-         |    CAST(count(*) AS BIGINT) AS frequency,
-         |    CAST(sum(v) AS BIGINT) AS monetary
-         |  FROM e GROUP BY 1, 2),
-         |rk AS (SELECT seg, u, recency, frequency, monetary,
-         |    CAST(count(*) OVER (PARTITION BY seg) AS BIGINT) AS n,
-         |    CAST(row_number() OVER (PARTITION BY seg
-         |      ORDER BY recency DESC, u) AS BIGINT) AS rr,
-         |    CAST(row_number() OVER (PARTITION BY seg
-         |      ORDER BY frequency ASC, u) AS BIGINT) AS rf,
-         |    CAST(row_number() OVER (PARTITION BY seg
-         |      ORDER BY monetary ASC, u) AS BIGINT) AS rm
-         |  FROM pu)
-         |SELECT seg, u AS user, CAST(recency AS BIGINT) AS recency,
-         |  frequency, monetary,
-         |  CAST(((rr - 1) * 5) // n + 1 AS BIGINT) AS r_score,
-         |  CAST(((rf - 1) * 5) // n + 1 AS BIGINT) AS f_score,
-         |  CAST(((rm - 1) * 5) // n + 1 AS BIGINT) AS m_score,
-         |  CAST((((rr - 1) * 5) // n + 1) * 25
-         |    + (((rf - 1) * 5) // n + 1) * 5
-         |    + (((rm - 1) * 5) // n + 1) AS BIGINT) AS rfm
-         |FROM rk""".stripMargin,
-
-    // q355: time decay -- the q325 converter-touch derivation, the
-    // dyadic step weights via integer shifts, per-user HUGEINT
-    // normalization, one channel fold.
-    "q355_time_decay" ->
-      raw"""WITH r AS (SELECT user_id AS u, event_type AS et,
-         |    epoch_ns(ts) AS ts, event_id AS tie FROM events),
-         |cv AS (SELECT u, ts AS cts, tie AS ctie FROM (
-         |    SELECT u, ts, tie, row_number() OVER (PARTITION BY u
-         |      ORDER BY ts, tie) AS rn
-         |    FROM r WHERE et = 'purchase') WHERE rn = 1),
-         |tc AS (SELECT r.u, r.et AS channel,
-         |    (cv.cts - r.ts) // 21600000000000 AS e
-         |  FROM r JOIN cv ON cv.u = r.u
-         |    AND (r.ts < cv.cts OR (r.ts = cv.cts
-         |      AND r.tie < cv.ctie))
-         |  WHERE r.et <> 'purchase'),
-         |sc AS (SELECT u, channel,
-         |    e - min(e) OVER (PARTITION BY u) AS s
-         |  FROM tc),
-         |wt AS (SELECT u, channel,
-         |    CASE WHEN s >= 63 THEN 0
-         |      ELSE 1::BIGINT << CAST(62 - s AS INTEGER) END AS w
-         |  FROM sc),
-         |nm AS (SELECT u, channel, w,
-         |    sum(CAST(w AS HUGEINT)) OVER (PARTITION BY u) AS ws
-         |  FROM wt)
-         |SELECT channel, CAST(count(*) AS BIGINT) AS n_touches,
-         |  CAST(sum(CAST((1000000::HUGEINT * w) // ws AS BIGINT))
-         |    AS BIGINT) AS credit_ppm
-         |FROM nm GROUP BY channel""".stripMargin,
-
-    // q356: growth accounting -- distinct daily presence, one
-    // lag/lead walk per user, churn shifted one period, full outer
-    // so a zero-active churn day survives.
-    "q356_growth" ->
-      raw"""WITH pr AS (SELECT DISTINCT user_id AS u,
-         |    epoch_ns(ts) // 86400000000000 AS p FROM events),
-         |mk AS (SELECT u, CAST(p AS BIGINT) AS p,
-         |    lag(p) OVER (PARTITION BY u ORDER BY p) AS prev,
-         |    lead(p) OVER (PARTITION BY u ORDER BY p) AS nxt
-         |  FROM pr),
-         |mx AS (SELECT CAST(max(p) AS BIGINT) AS maxp FROM mk),
-         |ac AS (SELECT p AS period,
-         |    CAST(count(*) AS BIGINT) AS n_active,
-         |    CAST(sum(CASE WHEN prev IS NULL THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n_new,
-         |    CAST(sum(CASE WHEN prev = p - 1 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n_retained,
-         |    CAST(sum(CASE WHEN prev IS NOT NULL AND prev < p - 1
-         |      THEN 1 ELSE 0 END) AS BIGINT) AS n_resurrected
-         |  FROM mk GROUP BY 1),
-         |ch AS (SELECT p + 1 AS cp,
-         |    CAST(count(*) AS BIGINT) AS n_churned
-         |  FROM mk CROSS JOIN mx
-         |  WHERE (nxt IS NULL OR nxt <> p + 1) AND p < mx.maxp
-         |  GROUP BY 1)
-         |SELECT CAST(COALESCE(ac.period, ch.cp) AS BIGINT)
-         |    AS period,
-         |  COALESCE(ac.n_active, 0) AS n_active,
-         |  COALESCE(ac.n_new, 0) AS n_new,
-         |  COALESCE(ac.n_retained, 0) AS n_retained,
-         |  COALESCE(ac.n_resurrected, 0) AS n_resurrected,
-         |  COALESCE(ch.n_churned, 0) AS n_churned,
-         |  CASE WHEN COALESCE(ch.n_churned, 0) <= 0 THEN NULL
-         |    ELSE CAST((1000000 * (COALESCE(ac.n_new, 0)
-         |      + COALESCE(ac.n_resurrected, 0)))
-         |      // ch.n_churned AS BIGINT) END AS quick_ratio_ppm
-         |FROM ac FULL OUTER JOIN ch ON ch.cp = ac.period""".stripMargin,
-
-    // q357: weighted kappa -- (i,j) cells, marginal cross grid,
-    // one HUGEINT division.
-    "q357_weighted_kappa" ->
-      raw"""WITH e AS (SELECT event_type AS key,
-         |    CAST(user_id % 4 AS BIGINT) AS i,
-         |    CAST((user_id + event_id % 3) % 4 AS BIGINT) AS j
-         |  FROM events),
-         |cl AS (SELECT key, i, j, CAST(count(*) AS BIGINT) AS o
-         |  FROM e GROUP BY 1, 2, 3),
-         |nm AS (SELECT key, CAST(sum(o) AS BIGINT) AS n,
-         |    CAST(sum((i - j) * (i - j) * o) AS BIGINT) AS num
-         |  FROM cl GROUP BY 1),
-         |rt AS (SELECT key, i, CAST(sum(o) AS BIGINT) AS ri FROM cl
-         |  GROUP BY 1, 2),
-         |ct AS (SELECT key, j, CAST(sum(o) AS BIGINT) AS cj FROM cl
-         |  GROUP BY 1, 2),
-         |dn AS (SELECT rt.key,
-         |    sum((rt.i - ct.j) * (rt.i - ct.j)
-         |      * CAST(rt.ri AS HUGEINT) * ct.cj) AS den
-         |  FROM rt JOIN ct ON ct.key = rt.key GROUP BY 1)
-         |SELECT nm.key, nm.n, nm.num,
-         |  CASE WHEN dn.den <= 0 THEN NULL
-         |    ELSE CAST(1000000 - (1000000::HUGEINT * nm.n * nm.num)
-         |      // dn.den AS BIGINT) END AS kappa_w_ppm
-         |FROM nm JOIN dn ON dn.key = nm.key""".stripMargin,
-
-    // q358: Cronbach's alpha -- the synthetic complete design, the
-    // item/total moment folds, one HUGEINT truncation.
-    "q358_cronbach" ->
-      raw"""WITH cell AS (SELECT ((user_id % 2) + 2) % 2 AS key,
-         |    ((user_id % 100) + 100) % 100 AS r,
-         |    ((event_id % 3) + 3) % 3 AS i,
-         |    CAST(floor(value * 100) AS BIGINT) AS v
-         |  FROM events),
-         |sc AS (SELECT key, r, i,
-         |    ((CAST(sum(v) AS BIGINT) % 11) + 11) % 11 AS s
-         |  FROM cell GROUP BY 1, 2, 3),
-         |ki AS (SELECT key, CAST(count(DISTINCT i) AS BIGINT) AS k
-         |  FROM sc GROUP BY 1),
-         |pr AS (SELECT key, r, CAST(sum(s) AS BIGINT) AS t
-         |  FROM sc GROUP BY 1, 2),
-         |rf AS (SELECT key, CAST(count(*) AS BIGINT) AS n,
-         |    sum(CAST(t AS HUGEINT) * t) AS st2,
-         |    CAST(sum(t) AS BIGINT) AS st
-         |  FROM pr GROUP BY 1),
-         |it1 AS (SELECT key, i, CAST(sum(s) AS BIGINT) AS si,
-         |    CAST(sum(s * s) AS BIGINT) AS qi
-         |  FROM sc GROUP BY 1, 2),
-         |it2 AS (SELECT key, sum(CAST(qi AS HUGEINT)) AS sq,
-         |    sum(CAST(si AS HUGEINT) * si) AS ss2
-         |  FROM it1 GROUP BY 1)
-         |SELECT CAST(rf.key AS BIGINT) AS key, rf.n, ki.k,
-         |  CASE WHEN ki.k < 2
-         |      OR (rf.n::HUGEINT * rf.st2
-         |        - rf.st::HUGEINT * rf.st) <= 0 THEN NULL
-         |    ELSE CAST((1000::HUGEINT * ki.k
-         |      * ((rf.n::HUGEINT * rf.st2 - rf.st::HUGEINT * rf.st)
-         |        - (rf.n::HUGEINT * it2.sq - it2.ss2)))
-         |      // ((ki.k - 1)
-         |        * (rf.n::HUGEINT * rf.st2
-         |          - rf.st::HUGEINT * rf.st)) AS BIGINT)
-         |    END AS alpha_milli
-         |FROM rf JOIN ki ON ki.key = rf.key
-         |JOIN it2 ON it2.key = rf.key""".stripMargin,
-
-    // q359: mutual information -- cells, marginals, the identical
-    // (1e6 * p) * ln(p/(pq)) per-cell chain, integer sum.
-    "q359_mi" ->
-      raw"""WITH e AS (SELECT event_type AS key,
-         |    CAST(user_id % 4 AS BIGINT) AS a,
-         |    CAST((user_id + event_id % 3) % 4 AS BIGINT) AS b
-         |  FROM events),
-         |cl AS (SELECT key, a, b, CAST(count(*) AS BIGINT) AS nab
-         |  FROM e GROUP BY 1, 2, 3),
-         |at AS (SELECT key, a, CAST(sum(nab) AS BIGINT) AS na
-         |  FROM cl GROUP BY 1, 2),
-         |bt AS (SELECT key, b, CAST(sum(nab) AS BIGINT) AS nb
-         |  FROM cl GROUP BY 1, 2),
-         |nt AS (SELECT key, CAST(sum(nab) AS BIGINT) AS n FROM cl
-         |  GROUP BY 1),
-         |tm AS (SELECT cl.key, nt.n,
-         |    CAST(floor((1000000.0::DOUBLE
-         |      * (CAST(cl.nab AS DOUBLE) / CAST(nt.n AS DOUBLE)))
-         |      * ln((CAST(cl.nab AS DOUBLE) * CAST(nt.n AS DOUBLE))
-         |        / (CAST(at.na AS DOUBLE)
-         |          * CAST(bt.nb AS DOUBLE)))) AS BIGINT) AS term
-         |  FROM cl JOIN at ON at.key = cl.key AND at.a = cl.a
-         |  JOIN bt ON bt.key = cl.key AND bt.b = cl.b
-         |  JOIN nt ON nt.key = cl.key)
-         |SELECT key, CAST(max(n) AS BIGINT) AS n,
-         |  CAST(count(*) AS BIGINT) AS n_cells,
-         |  CAST(sum(term) AS BIGINT) AS mi_micro
-         |FROM tm GROUP BY key""".stripMargin,
-
-    // q360: NPS -- band counts, one truncation toward zero.
-    "q360_nps" ->
-      raw"""WITH e AS (SELECT event_type AS grp,
-         |    ((CAST(floor(value) AS BIGINT) % 11) + 11) % 11 AS s
-         |  FROM events)
-         |SELECT grp, CAST(count(*) AS BIGINT) AS n,
-         |  CAST(sum(CASE WHEN s >= 9 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS promoters,
-         |  CAST(sum(CASE WHEN s >= 7 AND s <= 8 THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS passives,
-         |  CAST(sum(CASE WHEN s <= 6 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS detractors,
-         |  CAST((1000000 * (sum(CASE WHEN s >= 9 THEN 1 ELSE 0 END)
-         |    - sum(CASE WHEN s <= 6 THEN 1 ELSE 0 END)))
-         |    // count(*) AS BIGINT) AS nps_ppm
-         |FROM e GROUP BY grp""".stripMargin,
-
-    // q361: Gehan-Breslow -- the q310 subjects, exact weighted O/E
-    // (the weight cancels the denominator), per-time HUGEINT
-    // variance floors, the one float chi2 chain.
-    "q361_gehan" ->
-      raw"""WITH subj AS (SELECT
-         |    ((user_id % 2) + 2) % 2 AS g,
-         |    (((user_id // 2) % 3) + 3) % 3 AS exp,
-         |    (max(epoch_ns(ts)) - min(epoch_ns(ts)))
-         |      // 3600000000000 AS t,
-         |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-         |      AS e
-         |  FROM events GROUP BY user_id),
-         |bd AS (SELECT CAST(exp AS BIGINT) AS exp,
-         |    CAST(t AS BIGINT) AS t,
-         |    CAST(sum(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS c0,
-         |    CAST(sum(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS c1,
-         |    CAST(sum(CASE WHEN g = 1 THEN e ELSE 0 END) AS BIGINT)
-         |      AS d1,
-         |    CAST(sum(e) AS BIGINT) AS d
-         |  FROM subj GROUP BY 1, 2),
-         |rk AS (SELECT exp, t, d1, d,
-         |    CAST(sum(c0) OVER (PARTITION BY exp ORDER BY t DESC
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n0,
-         |    CAST(sum(c1) OVER (PARTITION BY exp ORDER BY t DESC
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n1
-         |  FROM bd),
-         |tm AS (SELECT exp, n0 + n1 AS n, n0, n1, d, d1 FROM rk
-         |  WHERE d >= 1),
-         |f AS (SELECT exp, CAST(count(*) AS BIGINT)
-         |      AS n_event_times,
-         |    CAST(sum(CAST(n AS HUGEINT) * d1) AS BIGINT) AS o1w,
-         |    CAST(sum(CAST(d AS HUGEINT) * n1) AS BIGINT) AS e1w,
-         |    CAST(sum(CASE WHEN n <= 1 THEN 0::HUGEINT
-         |      ELSE (1000000::HUGEINT * d * n1 * n0 * (n - d))
-         |        // (n - 1) END) AS BIGINT) AS vw
-         |  FROM tm GROUP BY 1)
-         |SELECT exp, n_event_times, o1w, e1w, vw AS vw_micro,
-         |  CASE WHEN vw <= 0 THEN NULL
-         |    ELSE CAST(floor(CAST(o1w - e1w AS DOUBLE)
-         |      * CAST(o1w - e1w AS DOUBLE)
-         |      * 1000000000000.0::DOUBLE
-         |      / CAST(vw AS DOUBLE)) AS BIGINT) END AS chi2_micro
-         |FROM f""".stripMargin,
-
-    // q362: cohort LTV -- first-period cohorts, per-(cohort, age)
-    // integers, one cohort-partitioned cumulative window, one
-    // HUGEINT per-user division.
-    "q362_ltv" ->
-      raw"""WITH e AS (SELECT user_id AS u,
-         |    epoch_ns(ts) // 86400000000000 AS p,
-         |    CAST(floor(value * 100) AS BIGINT) AS v FROM events),
-         |fp AS (SELECT u, CAST(min(p) AS BIGINT) AS cohort FROM e
-         |  GROUP BY 1),
-         |sz AS (SELECT cohort, CAST(count(*) AS BIGINT) AS n_cohort
-         |  FROM fp GROUP BY 1),
-         |ag AS (SELECT fp.cohort, e.p - fp.cohort AS age,
-         |    CAST(count(DISTINCT e.u) AS BIGINT) AS n_active,
-         |    CAST(sum(e.v) AS BIGINT) AS revenue
-         |  FROM e JOIN fp ON fp.u = e.u GROUP BY 1, 2),
-         |cm AS (SELECT cohort, CAST(age AS BIGINT) AS age, n_active,
-         |    revenue,
-         |    CAST(sum(revenue) OVER (PARTITION BY cohort
-         |      ORDER BY age ROWS UNBOUNDED PRECEDING) AS BIGINT)
-         |      AS cum_revenue
-         |  FROM ag)
-         |SELECT cm.cohort, cm.age, sz.n_cohort, cm.n_active,
-         |  cm.revenue, cm.cum_revenue,
-         |  CAST((1000000::HUGEINT * cm.cum_revenue) // sz.n_cohort
-         |    AS BIGINT) AS ltv_micro
-         |FROM cm JOIN sz ON sz.cohort = cm.cohort""".stripMargin,
-
-    // q363: Kruskal-Wallis -- doubled midranks over the pooled
-    // values, per-group HUGEINT terms, the exact tie correction.
-    "q363_kruskal" ->
-      raw"""WITH e AS (SELECT event_type AS exp,
-         |    CAST(user_id % 3 AS BIGINT) AS g,
-         |    CAST(floor(value * 100) AS BIGINT) AS v FROM events),
-         |bv AS (SELECT exp, v, CAST(count(*) AS BIGINT) AS c
-         |  FROM e GROUP BY 1, 2),
-         |md AS (SELECT exp, v, c,
-         |    2 * CAST(COALESCE(sum(c) OVER (PARTITION BY exp
-         |      ORDER BY v
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS BIGINT) + c + 1 AS mid2
-         |  FROM bv),
-         |gv AS (SELECT exp, g, v, CAST(count(*) AS BIGINT) AS cg
-         |  FROM e GROUP BY 1, 2, 3),
-         |r2 AS (SELECT gv.exp, gv.g,
-         |    CAST(sum(gv.cg) AS BIGINT) AS ng,
-         |    CAST(sum(gv.cg * md.mid2) AS BIGINT) AS rr
-         |  FROM gv JOIN md ON md.exp = gv.exp AND md.v = gv.v
-         |  GROUP BY 1, 2),
-         |ti AS (SELECT exp, CAST(sum(c * c * c - c) AS BIGINT) AS tc,
-         |    CAST(sum(c) AS BIGINT) AS n FROM bv GROUP BY 1),
-         |tm AS (SELECT r2.exp, ti.n, ti.tc,
-         |    CAST((3000000::HUGEINT * rr * rr)
-         |      // (CAST(ng AS HUGEINT) * ti.n * (ti.n + 1))
-         |      AS BIGINT) AS term
-         |  FROM r2 JOIN ti ON ti.exp = r2.exp),
-         |f AS (SELECT exp, CAST(max(n) AS BIGINT) AS n,
-         |    CAST(count(*) AS BIGINT) AS k_groups,
-         |    CAST(sum(term) AS BIGINT)
-         |      - 3 * (CAST(max(n) AS BIGINT) + 1) * 1000000
-         |      AS h_micro,
-         |    CAST(max(tc) AS BIGINT) AS tc
-         |  FROM tm GROUP BY 1)
-         |SELECT exp, n, k_groups, CAST(h_micro AS BIGINT) AS h_micro,
-         |  CASE WHEN n * n * n - n - tc <= 0 THEN NULL
-         |    ELSE CAST((h_micro::HUGEINT
-         |      * (CAST(n AS HUGEINT) * n * n - n))
-         |      // (CAST(n AS HUGEINT) * n * n - n - tc) AS BIGINT)
-         |    END AS h_corr_micro
-         |FROM f""".stripMargin,
-
-    // q364: Friedman -- the q358 cells, within-block midranks,
-    // per-treatment HUGEINT terms, the exact tie correction.
-    "q364_friedman" ->
-      raw"""WITH cell AS (SELECT ((user_id % 2) + 2) % 2 AS key,
-         |    ((user_id % 100) + 100) % 100 AS r,
-         |    ((event_id % 3) + 3) % 3 AS i,
-         |    CAST(floor(value * 100) AS BIGINT) AS v
-         |  FROM events),
-         |sc AS (SELECT key, r, i,
-         |    ((CAST(sum(v) AS BIGINT) % 11) + 11) % 11 AS s
-         |  FROM cell GROUP BY 1, 2, 3),
-         |bv AS (SELECT key, r, s, CAST(count(*) AS BIGINT) AS c
-         |  FROM sc GROUP BY 1, 2, 3),
-         |md AS (SELECT key, r, s, c,
-         |    2 * CAST(COALESCE(sum(c) OVER (PARTITION BY key, r
-         |      ORDER BY s
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS BIGINT) + c + 1 AS mid2
-         |  FROM bv),
-         |r2 AS (SELECT sc.key, sc.i,
-         |    CAST(sum(md.mid2) AS BIGINT) AS rr,
-         |    CAST(count(*) AS BIGINT) AS nb
-         |  FROM sc JOIN md ON md.key = sc.key AND md.r = sc.r
-         |    AND md.s = sc.s
-         |  GROUP BY 1, 2),
-         |ki AS (SELECT key, CAST(count(DISTINCT i) AS BIGINT) AS k
-         |  FROM sc GROUP BY 1),
-         |ti AS (SELECT key,
-         |    CAST(sum(c * c * c - c) AS BIGINT) AS tc
-         |  FROM bv GROUP BY 1),
-         |tm AS (SELECT r2.key, r2.nb, ki.k, ti.tc,
-         |    CAST((3000000::HUGEINT * rr * rr)
-         |      // (CAST(nb AS HUGEINT) * ki.k * (ki.k + 1))
-         |      AS BIGINT) AS term
-         |  FROM r2 JOIN ki ON ki.key = r2.key
-         |  JOIN ti ON ti.key = r2.key),
-         |f AS (SELECT key, CAST(max(nb) AS BIGINT) AS n_blocks,
-         |    CAST(max(k) AS BIGINT) AS k,
-         |    CAST(sum(term) AS BIGINT)
-         |      - 3 * CAST(max(nb) AS BIGINT)
-         |      * (CAST(max(k) AS BIGINT) + 1) * 1000000
-         |      AS chi2_micro,
-         |    CAST(max(tc) AS BIGINT) AS tc
-         |  FROM tm GROUP BY 1)
-         |SELECT CAST(key AS BIGINT) AS key, n_blocks, k,
-         |  CAST(chi2_micro AS BIGINT) AS chi2_micro,
-         |  CASE WHEN n_blocks * k * (k * k - 1) - tc <= 0 THEN NULL
-         |    ELSE CAST((chi2_micro::HUGEINT
-         |      * (CAST(n_blocks AS HUGEINT) * k * (k * k - 1)))
-         |      // (CAST(n_blocks AS HUGEINT) * k * (k * k - 1) - tc)
-         |      AS BIGINT) END AS chi2_corr_micro
-         |FROM f""".stripMargin,
-
-    // q365: Wilcoxon signed-rank -- the q281 paired derivation,
-    // |d| midranks, exact integer W2+/var numerators, the one
-    // float chain.
-    "q365_wilcoxon" ->
-      raw"""WITH pu AS (SELECT user_id AS u,
-         |    ((user_id % 3) + 3) % 3 AS exp,
-         |    COALESCE(sum(CASE WHEN event_type = 'view'
-         |      THEN CAST(floor(value * 100) AS BIGINT) END), 0)
-         |      AS pre,
-         |    COALESCE(sum(CASE WHEN event_type = 'click'
-         |      THEN CAST(floor(value * 100) AS BIGINT) END), 0)
-         |      AS post
-         |  FROM events GROUP BY 1, 2),
-         |dd AS (SELECT CAST(exp AS BIGINT) AS exp, post - pre AS d
-         |  FROM pu),
-         |ct AS (SELECT exp, CAST(count(*) AS BIGINT) AS n_pairs,
-         |    CAST(sum(CASE WHEN d = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_zero
-         |  FROM dd GROUP BY 1),
-         |nz AS (SELECT exp, d, abs(d) AS a FROM dd WHERE d <> 0),
-         |ba AS (SELECT exp, a, CAST(count(*) AS BIGINT) AS c
-         |  FROM nz GROUP BY 1, 2),
-         |md AS (SELECT exp, a,
-         |    2 * CAST(COALESCE(sum(c) OVER (PARTITION BY exp
-         |      ORDER BY a
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS BIGINT) + c + 1 AS mid2
-         |  FROM ba),
-         |fl AS (SELECT nz.exp, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(CASE WHEN nz.d > 0 THEN md.mid2 ELSE 0 END)
-         |      AS BIGINT) AS w2_plus
-         |  FROM nz JOIN md ON md.exp = nz.exp AND md.a = nz.a
-         |  GROUP BY 1),
-         |ti AS (SELECT exp, CAST(sum(c * c * c - c) AS BIGINT)
-         |    AS tc
-         |  FROM ba GROUP BY 1)
-         |SELECT ct.exp, ct.n_pairs, ct.n_zero,
-         |  COALESCE(fl.n, 0) AS n,
-         |  COALESCE(fl.w2_plus, 0) AS w2_plus,
-         |  2 * COALESCE(fl.n, 0) * (COALESCE(fl.n, 0) + 1)
-         |    * (2 * COALESCE(fl.n, 0) + 1) - COALESCE(ti.tc, 0)
-         |    AS var_num48,
-         |  CASE WHEN 2 * COALESCE(fl.n, 0) * (COALESCE(fl.n, 0) + 1)
-         |      * (2 * COALESCE(fl.n, 0) + 1)
-         |      - COALESCE(ti.tc, 0) <= 0 THEN NULL
-         |    ELSE CAST(floor(CAST((COALESCE(fl.w2_plus, 0)
-         |      - (COALESCE(fl.n, 0) * (COALESCE(fl.n, 0) + 1)) // 2)
-         |      * 500 AS DOUBLE)
-         |      / sqrt(CAST(2 * COALESCE(fl.n, 0)
-         |        * (COALESCE(fl.n, 0) + 1)
-         |        * (2 * COALESCE(fl.n, 0) + 1)
-         |        - COALESCE(ti.tc, 0) AS DOUBLE) / 48.0::DOUBLE))
-         |      AS BIGINT) END AS z_milli
-         |FROM ct LEFT JOIN fl ON fl.exp = ct.exp
-         |LEFT JOIN ti ON ti.exp = ct.exp""".stripMargin,
-
-    // q366: the q323 oracle verbatim — the O(n^2) pair SQL is the
-    // definition the inversion-count factoring must reproduce.
-    "q366_kendall_large" ->
-      raw"""WITH r AS (SELECT source AS grp, doc_id AS i,
-         |    n_chars // 100 AS x, ((doc_id % 50) + 50) % 50 AS y
-         |  FROM documents),
-         |sz AS (SELECT grp, CAST(count(*) AS BIGINT) AS n
-         |  FROM r GROUP BY grp),
-         |pr AS (SELECT a.grp,
-         |    CASE WHEN (b.x > a.x AND b.y > a.y)
-         |        OR (b.x < a.x AND b.y < a.y) THEN 1
-         |      WHEN (b.x > a.x AND b.y < a.y)
-         |        OR (b.x < a.x AND b.y > a.y) THEN -1
-         |      ELSE 0 END AS sgn,
-         |    CASE WHEN a.x = b.x THEN 1 ELSE 0 END AS tx,
-         |    CASE WHEN a.y = b.y THEN 1 ELSE 0 END AS ty
-         |  FROM r a JOIN r b ON b.grp = a.grp AND a.i < b.i),
-         |f AS (SELECT grp, CAST(count(*) AS BIGINT) AS n_pairs,
-         |    CAST(sum(CASE WHEN sgn = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS c,
-         |    CAST(sum(CASE WHEN sgn = -1 THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS d,
-         |    CAST(sum(tx) AS BIGINT) AS t1,
-         |    CAST(sum(ty) AS BIGINT) AS t2
-         |  FROM pr GROUP BY grp)
-         |SELECT sz.grp, sz.n,
-         |  CAST(COALESCE(f.n_pairs, 0) AS BIGINT) AS n_pairs,
-         |  CAST(COALESCE(f.c, 0) AS BIGINT) AS concordant,
-         |  CAST(COALESCE(f.d, 0) AS BIGINT) AS discordant,
-         |  CASE WHEN f.n_pairs IS NULL OR f.n_pairs - f.t1 <= 0
-         |      OR f.n_pairs - f.t2 <= 0 THEN NULL
-         |    ELSE CAST(floor(1000000.0 * CAST(f.c - f.d AS DOUBLE)
-         |      / sqrt(CAST((f.n_pairs - f.t1)
-         |        * (f.n_pairs - f.t2) AS DOUBLE)))
-         |      AS BIGINT) END AS tau_b_ppm
-         |FROM sz LEFT JOIN f ON f.grp = sz.grp""".stripMargin,
-
-    // q367: the q337 oracle verbatim — same pair-join definition the
-    // S = n0 - n2 - 2D inversion identity must reproduce.
-    "q367_mann_kendall_large" ->
-      raw"""WITH dl AS (SELECT event_type AS grp,
-         |    (epoch_ns(ts) - ((epoch_ns(ts) % 86400000000000
-         |      + 86400000000000) % 86400000000000))
-         |      // 86400000000000 AS d,
-         |    CAST(floor(value * 100) AS BIGINT) AS v FROM events),
-         |dv AS (SELECT grp, CAST(d AS BIGINT) AS d,
-         |    CAST(sum(v) AS BIGINT) AS dv FROM dl GROUP BY 1, 2),
-         |sz AS (SELECT grp, CAST(count(*) AS BIGINT) AS n FROM dv
-         |  GROUP BY 1),
-         |pr AS (SELECT a.grp, CAST(sum(CASE WHEN b.dv > a.dv THEN 1
-         |      WHEN b.dv < a.dv THEN -1 ELSE 0 END) AS BIGINT) AS s
-         |  FROM dv a JOIN dv b ON a.grp = b.grp AND a.d < b.d
-         |  GROUP BY 1),
-         |tc AS (SELECT grp,
-         |    CAST(sum(c * (c - 1) * (2 * c + 5)) AS BIGINT) AS tcorr
-         |  FROM (SELECT grp, dv, CAST(count(*) AS BIGINT) AS c
-         |    FROM dv GROUP BY 1, 2) GROUP BY 1),
-         |f AS (SELECT sz.grp, sz.n, COALESCE(pr.s, 0) AS s,
-         |    sz.n * (sz.n - 1) * (2 * sz.n + 5) - tc.tcorr
-         |      AS var_num18
-         |  FROM sz LEFT JOIN pr ON pr.grp = sz.grp
-         |  JOIN tc ON tc.grp = sz.grp)
-         |SELECT grp, n, s, var_num18,
-         |  CASE WHEN var_num18 <= 0 THEN NULL
-         |    WHEN s = 0 THEN 0
-         |    ELSE CAST(floor(CAST((s - CASE WHEN s > 0 THEN 1
-         |        ELSE -1 END) * 1000 AS DOUBLE)
-         |      / sqrt(CAST(var_num18 AS DOUBLE) / 18.0::DOUBLE))
-         |      AS BIGINT) END AS z_milli
-         |FROM f""".stripMargin,
-
-    // q368: k-arm stratified log-rank — the q310 derivation with a
-    // (times × arms) densification per stratum, stratum-local risk
-    // windows, integer E terms, per-arm (O−E)²/E floors.
-    "q368_logrank_k" ->
-      raw"""WITH subj AS (SELECT
-         |    (((user_id // 2) % 3) + 3) % 3 AS exp,
-         |    'arm' || CAST(((user_id % 3) + 3) % 3 AS VARCHAR)
-         |      AS grp,
-         |    (((user_id // 8) % 2) + 2) % 2 AS st,
-         |    (max(epoch_ns(ts)) - min(epoch_ns(ts)))
-         |      // 3600000000000 AS t,
-         |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-         |      AS e
-         |  FROM events GROUP BY user_id),
-         |ct AS (SELECT exp, st, t, grp, CAST(count(*) AS BIGINT) AS c,
-         |    CAST(sum(e) AS BIGINT) AS d
-         |  FROM subj GROUP BY 1, 2, 3, 4),
-         |tm AS (SELECT DISTINCT exp, st, t FROM ct),
-         |ar AS (SELECT DISTINCT exp, st, grp FROM ct),
-         |gr AS (SELECT tm.exp, tm.st, tm.t, ar.grp,
-         |    COALESCE(ct.c, 0) AS c, COALESCE(ct.d, 0) AS d
-         |  FROM tm JOIN ar ON ar.exp = tm.exp AND ar.st = tm.st
-         |  LEFT JOIN ct ON ct.exp = tm.exp AND ct.st = tm.st
-         |    AND ct.t = tm.t AND ct.grp = ar.grp),
-         |rk AS (SELECT exp, st, t, grp, d,
-         |    CAST(sum(c) OVER (PARTITION BY exp, st, grp
-         |      ORDER BY t DESC) AS BIGINT) AS ng
-         |  FROM gr),
-         |et AS (SELECT exp, st, t, grp, ng,
-         |    CAST(sum(ng) OVER (PARTITION BY exp, st, t) AS BIGINT)
-         |      AS n,
-         |    CAST(sum(d) OVER (PARTITION BY exp, st, t) AS BIGINT)
-         |      AS dt
-         |  FROM rk),
-         |eg AS (SELECT exp, grp,
-         |    CAST(sum((1000000 * (dt * ng)) // n) AS BIGINT)
-         |      AS e_micro
-         |  FROM et WHERE dt >= 1 GROUP BY 1, 2),
-         |pa AS (SELECT exp, grp, CAST(count(*) AS BIGINT) AS n_subj,
-         |    CAST(sum(e) AS BIGINT) AS o
-         |  FROM subj GROUP BY 1, 2),
-         |pe AS (SELECT pa.exp, pa.grp, pa.n_subj, pa.o,
-         |    COALESCE(eg.e_micro, 0) AS e_micro
-         |  FROM pa LEFT JOIN eg ON eg.exp = pa.exp
-         |    AND eg.grp = pa.grp),
-         |fd AS (SELECT exp,
-         |    CAST(sum(CASE WHEN e_micro <= 0 THEN 0
-         |      ELSE CAST(floor(CAST(1000000 * o - e_micro AS DOUBLE)
-         |        * CAST(1000000 * o - e_micro AS DOUBLE)
-         |        / CAST(e_micro AS DOUBLE)) AS BIGINT) END)
-         |      AS BIGINT) AS chi,
-         |    CAST(sum(o) AS BIGINT) AS ot,
-         |    CAST(count(*) AS BIGINT) AS ka
-         |  FROM pe GROUP BY 1)
-         |SELECT pe.exp, pe.grp, pe.n_subj, pe.o, pe.e_micro,
-         |  CASE WHEN fd.ka <= 1 OR fd.ot = 0 THEN NULL
-         |    ELSE fd.chi END AS chi2_micro,
-         |  fd.ka - 1 AS df
-         |FROM pe JOIN fd ON fd.exp = pe.exp""".stripMargin,
-
-    // q369: e-process — pre-row counts from exclusive-frame windows,
-    // one ln per row of the exact KT integer ratio, nano floors
-    // summed as integers, first threshold crossing decides.
-    "q369_eprocess" ->
-      raw"""WITH e AS (SELECT event_type AS exp, epoch_ns(ts) AS t,
-         |    event_id AS i,
-         |    CASE WHEN value >= 50 THEN 1 ELSE 0 END AS c
-         |  FROM events),
-         |w AS (SELECT exp, t, i, c,
-         |    CAST(COALESCE(sum(c) OVER (PARTITION BY exp
-         |      ORDER BY t, i
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS BIGINT) AS sp,
-         |    CAST(COALESCE(count(*) OVER (PARTITION BY exp
-         |      ORDER BY t, i
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS BIGINT) AS np
-         |  FROM e),
-         |tr AS (SELECT exp, t, i, c, sp, np,
-         |    CASE WHEN c = 1 THEN 1000 * (2 * sp + 1)
-         |      ELSE 1000 * (2 * (np - sp) + 1) END AS a,
-         |    CASE WHEN c = 1 THEN 2 * (np + 1) * 480
-         |      ELSE 2 * (np + 1) * 520 END AS b
-         |  FROM w),
-         |l AS (SELECT exp, t, i, np + 1 AS n, sp + c AS s,
-         |    CAST(sum(CAST(floor(1000000000.0::DOUBLE
-         |      * ln(CAST(a AS DOUBLE) / CAST(b AS DOUBLE)))
-         |      AS BIGINT)) OVER (PARTITION BY exp ORDER BY t, i
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS lnn
-         |  FROM tr),
-         |bnd AS (SELECT CAST(floor(1000000000.0::DOUBLE
-         |    * ln(CAST(1000 AS DOUBLE) / CAST(50 AS DOUBLE)))
-         |    AS BIGINT) AS th),
-         |sm AS (SELECT exp, CAST(max(n) AS BIGINT) AS n,
-         |    CAST(max(s) AS BIGINT) AS s FROM l GROUP BY 1),
-         |fin AS (SELECT l.exp, l.lnn FROM l JOIN sm
-         |  ON sm.exp = l.exp AND sm.n = l.n),
-         |cr AS (SELECT l.exp, l.t, l.i, l.n, l.lnn,
-         |    row_number() OVER (PARTITION BY l.exp
-         |      ORDER BY l.t, l.i) AS rk
-         |  FROM l CROSS JOIN bnd WHERE l.lnn >= bnd.th),
-         |c1 AS (SELECT * FROM cr WHERE rk = 1)
-         |SELECT sm.exp, sm.n, sm.s, fin.lnn AS e_final_nano,
-         |  bnd.th AS threshold_nano,
-         |  CASE WHEN c1.exp IS NULL THEN 'continue'
-         |    ELSE 'reject_h0' END AS decision,
-         |  CAST(c1.t AS BIGINT) AS decision_ts,
-         |  CAST(c1.i AS BIGINT) AS decision_tie,
-         |  CAST(c1.n AS BIGINT) AS n_at_decision,
-         |  c1.lnn AS e_at_decision
-         |FROM sm JOIN fin ON fin.exp = sm.exp
-         |CROSS JOIN bnd
-         |LEFT JOIN c1 ON c1.exp = sm.exp""".stripMargin,
-
-    // q370: rolling median w=600 — the oracle is the DEFINITION
-    // (sort each full 600-row window, take element 300), which the
-    // lattice-histogram factoring must reproduce.
-    "q370_rolling_median_large" ->
-      raw"""WITH e AS (SELECT event_type AS key, epoch_ns(ts) AS ts,
-         |    event_id AS tie,
-         |    CAST(floor(value) AS BIGINT) // 20 AS v FROM events),
-         |w AS (SELECT key, ts, tie, v,
-         |    list(v) OVER (PARTITION BY key ORDER BY ts, tie
-         |      ROWS BETWEEN 599 PRECEDING AND CURRENT ROW) AS buf,
-         |    count(*) OVER (PARTITION BY key ORDER BY ts, tie
-         |      ROWS BETWEEN 599 PRECEDING AND CURRENT ROW) AS n
-         |  FROM e)
-         |SELECT key, CAST(ts AS BIGINT) AS ts,
-         |  CAST(tie AS BIGINT) AS tie, v,
-         |  CAST(list_extract(list_sort(buf), 300) AS BIGINT) AS med
-         |FROM w WHERE n = 600""".stripMargin,
-
-    // q371: sequential PAVA — gated against the SAME n^3 minimax
-    // oracle as q350 (the definition both factorings must meet).
-    "q371_isotonic_large" ->
-      raw"""WITH dl AS (SELECT event_type AS grp,
-         |    (epoch_ns(ts) - ((epoch_ns(ts) % 86400000000000
-         |      + 86400000000000) % 86400000000000))
-         |      // 86400000000000 AS d,
-         |    CAST(floor(value * 100) AS BIGINT) AS v FROM events),
-         |dv2 AS (SELECT grp, CAST(d AS BIGINT) AS d,
-         |    CAST(sum(v) AS BIGINT) AS dv FROM dl GROUP BY 1, 2),
-         |p0 AS (SELECT grp AS key, d AS ts, d AS tie, dv AS v,
-         |    CAST(row_number() OVER (PARTITION BY grp ORDER BY d)
-         |      AS BIGINT) AS pos,
-         |    CAST(sum(dv) OVER (PARTITION BY grp ORDER BY d
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS ps
-         |  FROM dv2),
-         |jj AS (SELECT key, pos AS j, ps - v AS pjm1 FROM p0),
-         |kk AS (SELECT key, pos AS k, ps AS prek FROM p0),
-         |pjk AS (SELECT jj.key, jj.j, kk.k,
-         |    (1000000 * (kk.prek - jj.pjm1)) // (kk.k - jj.j + 1)
-         |      AS av
-         |  FROM jj JOIN kk ON kk.key = jj.key AND jj.j <= kk.k),
-         |inr AS (SELECT i.key, i.pos, pjk.j, min(pjk.av) AS mn
-         |  FROM p0 i JOIN pjk ON pjk.key = i.key
-         |    AND pjk.j <= i.pos AND pjk.k >= i.pos
-         |  GROUP BY 1, 2, 3),
-         |ft AS (SELECT key, pos, CAST(max(mn) AS BIGINT)
-         |    AS iso_micro
-         |  FROM inr GROUP BY 1, 2)
-         |SELECT p0.key, p0.ts, p0.tie, p0.v, ft.iso_micro
-         |FROM p0 JOIN ft ON ft.key = p0.key
-         |  AND ft.pos = p0.pos""".stripMargin,
-
-    // q372: MASE of the shrink forecast vs weekly seasonal naive —
-    // one lag window + one HUGEINT cross-multiplied fold.
-    "q372_mase" ->
-      raw"""WITH dl AS (SELECT event_type AS key,
-         |    (epoch_ns(ts) - ((epoch_ns(ts) % 86400000000000
-         |      + 86400000000000) % 86400000000000))
-         |      // 86400000000000 AS d,
-         |    CAST(floor(value * 100) AS BIGINT) AS v FROM events),
-         |dv2 AS (SELECT key, CAST(d AS BIGINT) AS d,
-         |    CAST(sum(v) AS BIGINT) AS dv FROM dl GROUP BY 1, 2),
-         |fc AS (SELECT key, d, dv, (dv * 9) // 10 AS f,
-         |    lag(dv, 7) OVER (PARTITION BY key ORDER BY d) AS nv
-         |  FROM dv2),
-         |ag AS (SELECT key, CAST(count(*) AS BIGINT) AS n_eval,
-         |    CAST(sum(abs(dv - f)) AS BIGINT) AS ef,
-         |    CAST(sum(abs(dv - nv)) AS BIGINT) AS en
-         |  FROM fc WHERE nv IS NOT NULL GROUP BY 1)
-         |SELECT key, n_eval,
-         |  CAST((1000000::HUGEINT * ef) // n_eval AS BIGINT)
-         |    AS mae_f_micro,
-         |  CASE WHEN en <= 0 THEN NULL
-         |    ELSE CAST((1000000::HUGEINT * ef) // en AS BIGINT)
-         |    END AS mase_ppm
-         |FROM ag""".stripMargin,
-
-    // q373: Theil-Sen at scale — gated against the SAME O(n^2) pair
-    // SQL as q316 (one definition, two factorings).
-    "q373_theil_sen_large" ->
-      raw"""WITH r AS (SELECT source AS grp, doc_id AS x,
-         |    n_chars AS y FROM documents),
-         |sz AS (SELECT grp, CAST(count(*) AS BIGINT) AS n
-         |  FROM r GROUP BY grp),
-         |pr AS (SELECT a.grp, a.x AS xi, b.x AS xj,
-         |    CAST((1000000 * (b.y - a.y)) // (b.x - a.x) AS BIGINT)
-         |      AS s
-         |  FROM r a JOIN r b ON b.grp = a.grp AND a.x < b.x),
-         |rk AS (SELECT grp, s,
-         |    row_number() OVER (PARTITION BY grp
-         |      ORDER BY s, xi, xj) AS rn,
-         |    count(*) OVER (PARTITION BY grp) AS m
-         |  FROM pr),
-         |md AS (SELECT grp, CAST(max(m) AS BIGINT) AS n_pairs,
-         |    CAST(max(s) AS BIGINT) AS slope_ppm
-         |  FROM rk WHERE rn = (m + 1) // 2 GROUP BY grp)
-         |SELECT sz.grp, sz.n,
-         |  CAST(COALESCE(md.n_pairs, 0) AS BIGINT) AS n_pairs,
-         |  md.slope_ppm
-         |FROM sz LEFT JOIN md ON md.grp = sz.grp""".stripMargin,
-
-    // q374: Jonckheere-Terpstra — the O(n^2) pair definition of 2J,
-    // the fold-based tie-corrected variance in the engine's exact
-    // IEEE op order, continuity-corrected z.
-    "q374_jonckheere" ->
-      raw"""WITH subj AS (SELECT
-         |    (((user_id // 2) % 3) + 3) % 3 AS grp,
-         |    ((user_id % 3) + 3) % 3 AS g,
-         |    (max(epoch_ns(ts)) - min(epoch_ns(ts)))
-         |      // 3600000000000 AS v
-         |  FROM events GROUP BY user_id),
-         |sz AS (SELECT grp, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(count(DISTINCT g) AS BIGINT) AS n_groups
-         |  FROM subj GROUP BY 1),
-         |pr AS (SELECT a.grp,
-         |    CAST(sum(CASE WHEN a.v < b.v THEN 2
-         |      WHEN a.v = b.v THEN 1 ELSE 0 END) AS BIGINT) AS jt2,
-         |    CAST(count(*) AS BIGINT) AS cc
-         |  FROM subj a JOIN subj b ON b.grp = a.grp AND a.g < b.g
-         |  GROUP BY 1),
-         |gf AS (SELECT grp,
-         |    CAST(sum((c * (c - 1)) // 2) AS BIGINT) AS a2,
-         |    CAST(sum(c * (c - 1) * (2 * c + 5)) AS BIGINT) AS a25,
-         |    CAST(sum(c * (c - 1) * (c - 2)) AS BIGINT) AS a3
-         |  FROM (SELECT grp, g, CAST(count(*) AS BIGINT) AS c
-         |    FROM subj GROUP BY 1, 2) GROUP BY 1),
-         |vf AS (SELECT grp,
-         |    CAST(sum((c * (c - 1)) // 2) AS BIGINT) AS b2,
-         |    CAST(sum(c * (c - 1) * (2 * c + 5)) AS BIGINT) AS b25,
-         |    CAST(sum(c * (c - 1) * (c - 2)) AS BIGINT) AS b3
-         |  FROM (SELECT grp, v, CAST(count(*) AS BIGINT) AS c
-         |    FROM subj GROUP BY 1, 2) GROUP BY 1),
-         |f AS (SELECT sz.grp, sz.n, sz.n_groups,
-         |    COALESCE(pr.jt2, 0) AS jt2, COALESCE(pr.cc, 0) AS cc,
-         |    COALESCE(pr.jt2, 0) - COALESCE(pr.cc, 0) AS num2,
-         |    CASE WHEN sz.n <= 2 THEN NULL ELSE
-         |      CAST(sz.n * (sz.n - 1) * (2 * sz.n + 5)
-         |        - gf.a25 - vf.b25 AS DOUBLE) / 72.0::DOUBLE
-         |      + CAST(gf.a3 AS DOUBLE) * CAST(vf.b3 AS DOUBLE)
-         |        / (36.0::DOUBLE * CAST(sz.n * (sz.n - 1)
-         |          * (sz.n - 2) AS DOUBLE))
-         |      + (2.0::DOUBLE * CAST(gf.a2 AS DOUBLE))
-         |        * (2.0::DOUBLE * CAST(vf.b2 AS DOUBLE))
-         |        / (8.0::DOUBLE * CAST(sz.n * (sz.n - 1) AS DOUBLE))
-         |      END AS var
-         |  FROM sz LEFT JOIN pr ON pr.grp = sz.grp
-         |  JOIN gf ON gf.grp = sz.grp JOIN vf ON vf.grp = sz.grp)
-         |SELECT grp, n, n_groups, jt2, cc AS e2,
-         |  CASE WHEN n <= 2 OR var IS NULL OR var <= 0.0 THEN NULL
-         |    WHEN num2 = 0 THEN 0
-         |    ELSE CAST(floor(CAST((num2 - CASE WHEN num2 > 0 THEN 1
-         |      ELSE -1 END) * 500 AS DOUBLE) / sqrt(var)) AS BIGINT)
-         |    END AS z_milli
-         |FROM f""".stripMargin,
-
-    // q375: betting e-process for a bounded mean — the WSR aGRAPA
-    // bet chain re-derived as window SQL on integer pre-row moments
-    // (DuckDB // floors where Spark div truncates, but every
-    // negative-or-zero bet quotient clips to 0 in both), one ln per
-    // row of the exact factor ratio, nano floors summed as integers,
-    // first threshold crossing decides.
-    "q375_eprocess_mean" ->
-      raw"""WITH e AS (SELECT event_type AS exp, epoch_ns(ts) AS t,
-         |    event_id AS i,
-         |    LEAST(1000, GREATEST(0,
-         |      CAST(floor(value * 10) AS BIGINT))) AS v
-         |  FROM events),
-         |w AS (SELECT exp, t, i, v,
-         |    CAST(COALESCE(sum(v) OVER (PARTITION BY exp
-         |      ORDER BY t, i
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS BIGINT) AS sp,
-         |    CAST(COALESCE(sum(v * v) OVER (PARTITION BY exp
-         |      ORDER BY t, i
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS BIGINT) AS qp,
-         |    CAST(COALESCE(count(*) OVER (PARTITION BY exp
-         |      ORDER BY t, i
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS BIGINT) AS np
-         |  FROM e),
-         |b AS (SELECT exp, t, i, v, sp, np,
-         |    (480 + sp) // (np + 1) AS muh,
-         |    (250000 + qp) // (np + 1) AS m2
-         |  FROM w),
-         |b2 AS (SELECT exp, t, i, v, sp, np,
-         |    LEAST(1041, GREATEST(0, (1000000 * (muh - 480))
-         |      // GREATEST(2500, m2 - muh * muh))) AS lam
-         |  FROM b),
-         |l AS (SELECT exp, t, i, np + 1 AS n, sp + v AS s,
-         |    CAST(sum(CAST(floor(1000000000.0::DOUBLE
-         |      * ln(CAST(1000000 + lam * (v - 480) AS DOUBLE)
-         |        / 1000000.0::DOUBLE)) AS BIGINT))
-         |      OVER (PARTITION BY exp ORDER BY t, i
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS lnn
-         |  FROM b2),
-         |bnd AS (SELECT CAST(floor(1000000000.0::DOUBLE
-         |    * ln(CAST(1000 AS DOUBLE) / CAST(50 AS DOUBLE)))
-         |    AS BIGINT) AS th),
-         |sm AS (SELECT exp, CAST(max(n) AS BIGINT) AS n,
-         |    CAST(max(s) AS BIGINT) AS sum_milli FROM l GROUP BY 1),
-         |fin AS (SELECT l.exp, l.lnn FROM l JOIN sm
-         |  ON sm.exp = l.exp AND sm.n = l.n),
-         |cr AS (SELECT l.exp, l.t, l.i, l.n, l.lnn,
-         |    row_number() OVER (PARTITION BY l.exp
-         |      ORDER BY l.t, l.i) AS rk
-         |  FROM l CROSS JOIN bnd WHERE l.lnn >= bnd.th),
-         |c1 AS (SELECT * FROM cr WHERE rk = 1)
-         |SELECT sm.exp, sm.n, sm.sum_milli, fin.lnn AS e_final_nano,
-         |  bnd.th AS threshold_nano,
-         |  CASE WHEN c1.exp IS NULL THEN 'continue'
-         |    ELSE 'reject_h0' END AS decision,
-         |  CAST(c1.t AS BIGINT) AS decision_ts,
-         |  CAST(c1.i AS BIGINT) AS decision_tie,
-         |  CAST(c1.n AS BIGINT) AS n_at_decision,
-         |  c1.lnn AS e_at_decision
-         |FROM sm JOIN fin ON fin.exp = sm.exp
-         |CROSS JOIN bnd
-         |LEFT JOIN c1 ON c1.exp = sm.exp""".stripMargin,
-
-    // q376: exact k-arm stratified log-rank — the q368 walk plus
-    // per-time covariance entries on the q310 double chain (diag
-    // positive-floored, off-diag magnitude floored on the
-    // name-ordered pair then negated) and the (k-1)=2 quadratic
-    // form as the exact 2x2 adjugate on HUGEINT.
-    "q376_logrank_k_exact" ->
-      raw"""WITH subj AS (SELECT
-         |    (((user_id // 6) % 2) + 2) % 2 AS exp,
-         |    'arm' || CAST(((user_id % 3) + 3) % 3 AS VARCHAR)
-         |      AS grp,
-         |    (((user_id // 12) % 2) + 2) % 2 AS st,
-         |    (max(epoch_ns(ts)) - min(epoch_ns(ts)))
-         |      // 3600000000000 AS t,
-         |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-         |      AS e
-         |  FROM events GROUP BY user_id),
-         |ct AS (SELECT exp, st, t, grp, CAST(count(*) AS BIGINT) AS c,
-         |    CAST(sum(e) AS BIGINT) AS d
-         |  FROM subj GROUP BY 1, 2, 3, 4),
-         |tm AS (SELECT DISTINCT exp, st, t FROM ct),
-         |ar AS (SELECT DISTINCT exp, st, grp FROM ct),
-         |gr AS (SELECT tm.exp, tm.st, tm.t, ar.grp,
-         |    COALESCE(ct.c, 0) AS c, COALESCE(ct.d, 0) AS d
-         |  FROM tm JOIN ar ON ar.exp = tm.exp AND ar.st = tm.st
-         |  LEFT JOIN ct ON ct.exp = tm.exp AND ct.st = tm.st
-         |    AND ct.t = tm.t AND ct.grp = ar.grp),
-         |rk AS (SELECT exp, st, t, grp, d,
-         |    CAST(sum(c) OVER (PARTITION BY exp, st, grp
-         |      ORDER BY t DESC) AS BIGINT) AS ng
-         |  FROM gr),
-         |et AS (SELECT exp, st, t, grp, ng,
-         |    CAST(sum(ng) OVER (PARTITION BY exp, st, t) AS BIGINT)
-         |      AS n,
-         |    CAST(sum(d) OVER (PARTITION BY exp, st, t) AS BIGINT)
-         |      AS dt
-         |  FROM rk),
-         |eg AS (SELECT exp, grp,
-         |    CAST(sum((1000000 * (dt * ng)) // n) AS BIGINT)
-         |      AS e_micro
-         |  FROM et WHERE dt >= 1 GROUP BY 1, 2),
-         |pa AS (SELECT exp, grp, CAST(count(*) AS BIGINT) AS n_subj,
-         |    CAST(sum(e) AS BIGINT) AS o
-         |  FROM subj GROUP BY 1, 2),
-         |pe AS (SELECT pa.exp, pa.grp, pa.n_subj, pa.o,
-         |    COALESCE(eg.e_micro, 0) AS e_micro
-         |  FROM pa LEFT JOIN eg ON eg.exp = pa.exp
-         |    AND eg.grp = pa.grp),
-         |cov_d AS (SELECT exp, grp AS ga, grp AS gb,
-         |    CAST(floor(CAST(dt * ng AS DOUBLE)
-         |      * CAST(n - ng AS DOUBLE) * CAST(n - dt AS DOUBLE)
-         |      / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-         |        * CAST(n - 1 AS DOUBLE)) * 1000000) AS BIGINT) AS w
-         |  FROM et WHERE dt >= 1 AND n > 1),
-         |cov_o AS (SELECT a.exp, a.grp AS ga, b.grp AS gb,
-         |    -CAST(floor(CAST(a.dt * a.ng AS DOUBLE)
-         |      * CAST(b.ng AS DOUBLE) * CAST(a.n - a.dt AS DOUBLE)
-         |      / (CAST(a.n AS DOUBLE) * CAST(a.n AS DOUBLE)
-         |        * CAST(a.n - 1 AS DOUBLE)) * 1000000) AS BIGINT)
-         |      AS w
-         |  FROM et a JOIN et b ON b.exp = a.exp AND b.st = a.st
-         |    AND b.t = a.t AND a.grp < b.grp
-         |  WHERE a.dt >= 1 AND a.n > 1),
-         |wf AS (SELECT exp, ga, gb, CAST(sum(w) AS BIGINT) AS w
-         |  FROM (SELECT * FROM cov_d UNION ALL SELECT * FROM cov_o)
-         |  GROUP BY 1, 2, 3),
-         |zr AS (SELECT exp, grp, 1000000 * o - e_micro AS z,
-         |    row_number() OVER (PARTITION BY exp ORDER BY grp) AS rn
-         |  FROM pe),
-         |ka AS (SELECT exp, CAST(count(*) AS BIGINT) AS k
-         |  FROM zr GROUP BY 1),
-         |k2 AS (SELECT exp,
-         |    max(CASE WHEN rn = 2 THEN grp END) AS g1,
-         |    max(CASE WHEN rn = 3 THEN grp END) AS g2,
-         |    CAST(max(CASE WHEN rn = 2 THEN z END) AS HUGEINT) AS z1,
-         |    CAST(max(CASE WHEN rn = 3 THEN z END) AS HUGEINT) AS z2
-         |  FROM zr GROUP BY 1),
-         |qf AS (SELECT k2.exp,
-         |    CAST(wa.w AS HUGEINT) AS w11,
-         |    CAST(wb.w AS HUGEINT) AS w22,
-         |    CAST(COALESCE(wc.w, 0) AS HUGEINT) AS w12,
-         |    k2.z1, k2.z2
-         |  FROM k2
-         |  LEFT JOIN wf wa ON wa.exp = k2.exp AND wa.ga = k2.g1
-         |    AND wa.gb = k2.g1
-         |  LEFT JOIN wf wb ON wb.exp = k2.exp AND wb.ga = k2.g2
-         |    AND wb.gb = k2.g2
-         |  LEFT JOIN wf wc ON wc.exp = k2.exp AND wc.ga = k2.g1
-         |    AND wc.gb = k2.g2),
-         |ch AS (SELECT exp,
-         |    CASE WHEN w11 IS NULL OR w22 IS NULL
-         |        OR (w11 * w22 - w12 * w12) <= 0 THEN NULL
-         |      ELSE CAST((z1 * z1 * w22 - 2 * z1 * z2 * w12
-         |          + z2 * z2 * w11)
-         |        // (w11 * w22 - w12 * w12) AS BIGINT) END
-         |      AS chi2_micro
-         |  FROM qf)
-         |SELECT pe.exp, pe.grp, pe.n_subj, pe.o, pe.e_micro,
-         |  ch.chi2_micro, ka.k - 1 AS df
-         |FROM pe JOIN ch ON ch.exp = pe.exp
-         |JOIN ka ON ka.exp = pe.exp""".stripMargin,
-
-    // q377: Page's trend test — the q364 midrank machinery with
-    // dense treatment-order ranks, exact integer L2 and
-    // tie-conditional variance sums, one IEEE z chain.
-    "q377_page_trend" ->
-      raw"""WITH cell AS (SELECT ((user_id % 2) + 2) % 2 AS key,
-         |    ((user_id % 100) + 100) % 100 AS r,
-         |    ((event_id % 3) + 3) % 3 AS i,
-         |    CAST(floor(value * 100) AS BIGINT) AS v
-         |  FROM events),
-         |sc AS (SELECT key, r, i,
-         |    ((CAST(sum(v) AS BIGINT) % 11) + 11) % 11 AS s
-         |  FROM cell GROUP BY 1, 2, 3),
-         |bv AS (SELECT key, r, s, CAST(count(*) AS BIGINT) AS c
-         |  FROM sc GROUP BY 1, 2, 3),
-         |md AS (SELECT key, r, s,
-         |    2 * CAST(COALESCE(sum(c) OVER (PARTITION BY key, r
-         |      ORDER BY s
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS BIGINT) + c + 1 AS mid2
-         |  FROM bv),
-         |cj AS (SELECT sc.key, sc.r, md.mid2,
-         |    CAST(dense_rank() OVER (PARTITION BY sc.key
-         |      ORDER BY sc.i) AS BIGINT) AS cjr
-         |  FROM sc JOIN md ON md.key = sc.key AND md.r = sc.r
-         |    AND md.s = sc.s),
-         |ki AS (SELECT key, CAST(count(DISTINCT i) AS BIGINT) AS k
-         |  FROM sc GROUP BY 1),
-         |pb AS (SELECT key, r,
-         |    CAST(sum(cjr * mid2) AS BIGINT) AS l2b,
-         |    CAST(sum(mid2 * mid2) AS BIGINT) AS ss2
-         |  FROM cj GROUP BY 1, 2),
-         |f AS (SELECT pb.key, CAST(count(*) AS BIGINT) AS n_blocks,
-         |    CAST(max(ki.k) AS BIGINT) AS k,
-         |    CAST(sum(l2b) AS BIGINT) AS l2,
-         |    CAST(sum((ki.k * ss2
-         |      - (ki.k * (ki.k + 1)) * (ki.k * (ki.k + 1)))
-         |      * (ki.k + 1)) AS BIGINT) AS var_num12
-         |  FROM pb JOIN ki ON ki.key = pb.key GROUP BY 1)
-         |SELECT CAST(key AS BIGINT) AS key, n_blocks, k, l2,
-         |  CAST((n_blocks * k * (k + 1) * (k + 1)) // 2 AS BIGINT)
-         |    AS e_l2,
-         |  var_num12,
-         |  CASE WHEN var_num12 <= 0 THEN NULL
-         |    ELSE CAST(floor(CAST(l2
-         |        - (n_blocks * k * (k + 1) * (k + 1)) // 2
-         |        AS DOUBLE) * 1000.0::DOUBLE
-         |      / sqrt(CAST(var_num12 AS DOUBLE) / 12.0::DOUBLE))
-         |      AS BIGINT) END AS z_milli
-         |FROM f""".stripMargin  )
-
-
-  /** `iters` unrolled synchronous value-iteration CTE levels over
-    * `st(removed, src, dst, n)` for the q336 oracle — v_i folds
-    * v_{i-1} through the transition counts with the absorbing
-    * rewards fixed (conv = 10⁶, null = 0), integral division per
-    * state exactly as the engine's per-round agg.
-    */
-  private def markovValueIterSql(iters: Int): String =
-    (1 to iters).map { i =>
-      raw"""v$i AS (SELECT st.removed, st.src AS state,
-         |    CAST(sum(st.n * CASE WHEN st.dst = '__conv__'
-         |        THEN 1000000
-         |      WHEN st.dst = '__null__' THEN 0
-         |      ELSE COALESCE(p.v, 0) END) // sum(st.n) AS BIGINT)
-         |      AS v
-         |  FROM st LEFT JOIN v${i - 1} p ON p.removed = st.removed
-         |    AND p.state = st.dst
-         |  GROUP BY 1, 2)""".stripMargin
-    }.mkString(",\n")
-
-  /** Shared clique+chain edge CTE chain (ends at `e` = canonical
-    * undirected edges) — the q280/q288/q292 derivation, one source of
-    * truth mirroring [[cliqueChainEdges]].
-    */
-  private def cliqueChainSqlWith(extra: String): String =
-    raw"""c AS (SELECT CAST(c_custkey AS BIGINT) AS c,
-       |    c_custkey // 4 AS g FROM customer),
-       |cl AS (SELECT a.c AS s, b.c AS d
-       |  FROM c a JOIN c b ON a.g = b.g AND a.c < b.c),
-       |ch AS (SELECT a.c AS s, a.c + 1 AS d FROM c a
-       |  WHERE EXISTS (SELECT 1 FROM c x WHERE x.c = a.c + 1)),
-       |e AS (SELECT DISTINCT least(s, d) AS a, greatest(s, d) AS b
-       |  FROM (SELECT * FROM cl UNION ALL SELECT * FROM ch)
-       |  WHERE s <> d$extra)""".stripMargin
-  private def cliqueChainSql: String = cliqueChainSqlWith("")
-  private def cliqueChainSqlSparse: String =
-    cliqueChainSqlWith(" AND (s + d) % 3 <> 0")
-
-  /** `iters` unconditional synchronous k-core peels over `e`:
-    * s0 = all nodes, s_i = nodes with induced degree ≥ k in s_{i−1} —
-    * idempotent once the fixpoint is reached, so a fixed chain equals
-    * the engine's detected-convergence result whenever the engine ran
-    * green (it refuses past maxIters).
-    */
-  private def kCorePeelSql(iters: Int, k: Int): String = {
-    // every s_i is referenced TWICE by e_{i+1}: without MATERIALIZED,
-    // CTE inlining doubles the plan per peel (2^iters scans of the
-    // base table — blew the open-file limit at 8 peels).
-    val sb = new StringBuilder(
-      "n0 AS (SELECT a AS node FROM e UNION SELECT b FROM e),\n" +
-        "s0 AS MATERIALIZED (SELECT node FROM n0)")
-    for (i <- 1 to iters) {
-      val p = i - 1
-      sb ++= s""",
-e$i AS (SELECT e.a, e.b FROM e JOIN s$p x ON x.node = e.a
-  JOIN s$p y ON y.node = e.b),
-d$i AS (SELECT node, count(*) AS dg FROM (SELECT a AS node FROM e$i
-  UNION ALL SELECT b FROM e$i) GROUP BY node),
-s$i AS MATERIALIZED (SELECT node FROM d$i WHERE dg >= $k)"""
-    }
-    sb.toString
-  }
+  /** Every declared query, family by family. */
+  private[graft] val specs: Seq[QuerySpec] =
+    RelationalQueries.specs ++
+    GeoQueries.specs ++
+    DedupQueries.specs ++
+    RetrievalQueries.specs ++
+    CurationQueries.specs ++
+    TextQueries.specs ++
+    TrainPrepQueries.specs ++
+    GraphQueries.specs ++
+    ExperimentQueries.specs ++
+    EvalQueries.specs
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(q => q.name -> q.build).toMap
+
+  val oracleSql: Map[String, String] =
+    specs.map(q => q.name -> q.oracleSql).toMap
 }

@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   * layout gives every file a TIGHT envelope on BOTH dimensions (each
   * fixed zkey prefix is an axis-aligned square of the key grid), so
   * `WHERE x BETWEEN …` and `WHERE y BETWEEN …` each skip ~√-fraction
-  * of files instead of none. [[graft.SparkEntry]] q201 gates the key
-  * arithmetic and the per-bucket envelope tightness under the DuckDB
-  * oracle; `LayoutSpec` pins the curve properties.
+  * of files instead of none. [[graft.queries.RelationalQueries]] q201
+  * gates the key arithmetic and the per-bucket envelope tightness under
+  * the DuckDB oracle; `LayoutSpec` pins the curve properties.
   *
   * Spark-first shape: the key is a chain of BUILTIN shift/mask ops (the
   * standard magic-number bit spread, 6 ops per dimension) — whole-stage

@@ -1025,10 +1025,9 @@ object Similarity {
     * monotone sequence (`min(batch) > meta.maxId`), the same
     * never-reuse-ids contract as the signature index. Crash safety: the
     * pending-append marker of [[IndexStore]].
-    * Into an index built with `assignGroups = 0` (the default), a vector
-    * with a null element is refused: the native nearest-centroid kernel
-    * fails the job with `IllegalArgumentException` rather than read the
-    * slot as a number.
+    * A batch holding a vector with a null element is refused with
+    * `IllegalArgumentException` before the marker goes down: nothing is
+    * written and the index keeps serving.
     */
   def appendToIvfPqIndex(newVecs: DataFrame, idCol: String, vecCol: String,
       path: String): Unit = {
@@ -1039,18 +1038,25 @@ object Similarity {
         newVecs.schema(idCol).dataType.simpleString)
     val store = ivfPqStore(spark, path)
     val meta = IvfPqMeta.parse(path, store.readSidecarForUpdate())
-    // balanced index: the batch joins the index's permuted space here
-    val clean = applyRot(applyPerm(newVecs.filter(col(vecCol).isNotNull)
+    val batch = newVecs.filter(col(vecCol).isNotNull)
       .select(col(idCol).cast("long").as(idCol),
-        col(vecCol).cast("array<double>").as("__v")), "__v", meta.perm),
-      "__v", meta.rot)
-    val s = clean.agg(coalesce(min(col(idCol)), lit(Long.MaxValue)),
+        col(vecCol).cast("array<double>").as("__v"))
+    // balanced index: the batch joins the index's permuted space here
+    val clean = applyRot(applyPerm(batch, "__v", meta.perm), "__v", meta.rot)
+    // column 5: the lowest 1-based position of a null slot in any vector
+    val nullPos = array_position(transform(col("__v"), _.isNull), true)
+    val s = batch.agg(coalesce(min(col(idCol)), lit(Long.MaxValue)),
       coalesce(max(col(idCol)), lit(Long.MinValue)),
       sum(when(col(idCol).isNull, 1).otherwise(0)), count(lit(1)),
-      expr(s"bit_xor(xxhash64(`$idCol`))")).head()
+      expr(s"bit_xor(xxhash64(`$idCol`))"),
+      min(when(nullPos > 0, nullPos))).head()
     if (s.getLong(3) == 0) return // empty batch: nothing to append
     require(s.getLong(2) == 0L,
       s"appendToIvfPqIndex requires numeric ids: ${s.getLong(2)} cast to null")
+    // refused before the marker, so the index keeps serving
+    require(s.isNullAt(5),
+      s"appendToIvfPqIndex: null array element at index ${s.getLong(5) - 1}" +
+        " — clean embeddings upstream")
     // replay idempotence (at-least-once foreachBatch sinks): a batch whose
     // exact (minId, maxId, n) AND id fingerprint (xor of id hashes) match
     // the LAST committed append is already fully reflected — no-op so a

@@ -49,8 +49,9 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * The sink writes one `part-NNNNN.warc[.gz]` file per partition, each
   * opening with a `warcinfo` record, response records framed exactly as
-  * above — [[graft.SparkEntry]] q199 gates the write→read→HTTP-parse
-  * round trip value-exactly against a closed-form DuckDB oracle.
+  * above — [[graft.queries.TextQueries]] q199 gates the
+  * write→read→HTTP-parse round trip value-exactly against a closed-form
+  * DuckDB oracle.
   */
 object Warc {
 

@@ -702,6 +702,17 @@ class DedupSimilaritySpec extends AnyFunSuite {
       assert(e.isInstanceOf[IllegalArgumentException] &&
         e.getMessage.contains("null array element at index 5"), e.toString)
     }
+    // the refused append wrote nothing: no pending marker is left, the
+    // index answers exactly as before, and a later valid append commits
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(idx, "_pending_append.json")))
+    val after = Similarity.ivfPqTopKIndexed(spark, idx, "vec_id", q,
+      k = 10, nProbe = 2).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(after == indexed, s"after refused append $after vs $indexed")
+    Similarity.appendToIvfPqIndex(spark.range(80, 82).select(
+      col("id").as("vec_id"), expr("transform(sequence(0, 63), d -> " +
+        "CAST(d AS DOUBLE) / 64.0)").as("embedding")), "vec_id", "embedding", idx)
+    assert(spark.read.parquet(s"$idx/codes").count() == 82)
   }
 
   test("rolling IVF-PQ index: append == rebuild-with-frozen-codebooks, " +

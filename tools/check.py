@@ -1,6 +1,8 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate: compare Verify's parquet
 dumps against DuckDB running oracle_sql.json on the same sf directory.
+Every key of oracle_sql.json must have an output directory; one without
+(the query threw in Verify) counts as NO OUTPUT, a FAIL.
 Usage: python3 tools/check.py /tmp/verify_out /root/testdata/sf0.01
 """
 import sys, json, glob, os
@@ -28,6 +30,9 @@ def main(outdir, sfdir):
     qdirs = sorted(d for d in os.listdir(outdir)
                    if os.path.isdir(os.path.join(outdir, d)))
     n_pass = n_fail = n_rowsonly = 0
+    # a query that threw in Verify leaves no directory: it still counts
+    for q in sorted(set(oracle) - set(qdirs)):
+        print(f"{q}: NO OUTPUT"); n_fail += 1
     for q in qdirs:
         files = glob.glob(os.path.join(outdir, q, "*.parquet"))
         if not files:
