@@ -65,8 +65,7 @@ object Dedup {
       try rel.queryExecution.optimizedPlan.stats.sizeInBytes
       catch { case _: Exception => BigInt(Long.MaxValue) }
     if (!udfUpstream && est < PinThresholdBytes) rel
-    else rel.repartition(
-      rel.sparkSession.sessionState.conf.numShufflePartitions, keys: _*)
+    else Ops.pinPartitions(rel, keys: _*)
   }
 
   /** The size estimate below which [[pinIfLarge]] skips the pin. */

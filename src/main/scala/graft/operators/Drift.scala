@@ -203,9 +203,11 @@ object Drift {
     * when the period is empty — an absent period has no rate), and
     * `delta_ppm = rate1 − rate0` (null if either side is). ONE
     * aggregation pass computes every column's four counts (no
-    * per-column scans — the [[graft.operators.Ops.profile]]
-    * discipline), melted via explode-of-structs. Periods must be 0/1,
-    * refused loudly row-by-row.
+    * per-column scans: plain conditional sums need no distinct
+    * rewrite, unlike the distinct counts that make
+    * [[graft.operators.Ops.profile]] aggregate per column), melted via
+    * explode-of-structs. Periods must be 0/1, refused loudly
+    * row-by-row.
     */
   def nullRateDrift(df: DataFrame, cols: Seq[String],
       periodCol: String): DataFrame = {

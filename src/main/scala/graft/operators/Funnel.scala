@@ -499,28 +499,8 @@ object Funnel {
         .collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2),
           r.getLong(3)))
-      val grouped: Map[(String, String), Array[(String, Long)]] =
-        rows.groupBy(r => (r._1, r._2))
-          .view.mapValues(_.map(r => (r._3, r._4))).toMap
-      var v: Map[(String, String), Long] =
-        grouped.keysIterator.map(_ -> 0L).toMap
-      for (_ <- 1 to iters) {
-        v = grouped.map { case ((rm, src), outs) =>
-          var num = 0L
-          var den = 0L
-          outs.foreach { case (dst, n) =>
-            val wj =
-              if (dst == "__conv__") 1000000L
-              else if (dst == "__null__") 0L
-              else v.getOrElse((rm, dst), 0L)
-            // exact ops: overflow fails loudly like the ANSI sum it replaces
-            num = Math.addExact(num, Math.multiplyExact(n, wj))
-            den += n
-          }
-          (rm, src) -> (num / den)
-        }
-      }
-      vals = v.toSeq.map { case ((rm, st), vv) => (rm, st, vv) }
+      vals = markovDriverIterate(rows, iters)
+        .toSeq.map { case ((rm, st), vv) => (rm, st, vv) }
         .toDF("removed", "state", "v")
     } else {
       vals = scenTrans.select(col("removed"), col("src").as("state"))
@@ -566,6 +546,38 @@ object Funnel {
           lit(null).cast("long"))
           .otherwise(expr("(1000000L * re_ppm) div __tot"))
           .as("share_ppm"))
+  }
+
+  /** The driver-side value iteration of [[markovRemovalEffect]] over
+    * collected `(removed, src, dst, n)` transitions: `iters` synchronous
+    * rounds of `v(src) = (Σ n·w_dst) div Σ n` per scenario. Both sums use
+    * exact ops, so an overflow fails loudly like the ANSI sums of the
+    * Spark loop it replaces.
+    */
+  private[graft] def markovDriverIterate(
+      rows: Array[(String, String, String, Long)],
+      iters: Int): Map[(String, String), Long] = {
+    val grouped: Map[(String, String), Array[(String, Long)]] =
+      rows.groupBy(r => (r._1, r._2))
+        .view.mapValues(_.map(r => (r._3, r._4))).toMap
+    var v: Map[(String, String), Long] =
+      grouped.keysIterator.map(_ -> 0L).toMap
+    for (_ <- 1 to iters) {
+      v = grouped.map { case ((rm, src), outs) =>
+        var num = 0L
+        var den = 0L
+        outs.foreach { case (dst, n) =>
+          val wj =
+            if (dst == "__conv__") 1000000L
+            else if (dst == "__null__") 0L
+            else v.getOrElse((rm, dst), 0L)
+          num = Math.addExact(num, Math.multiplyExact(n, wj))
+          den = Math.addExact(den, n)
+        }
+        (rm, src) -> (num / den)
+      }
+    }
+    v
   }
 
   /** RFM (recency / frequency / monetary) scores per user WITHIN a

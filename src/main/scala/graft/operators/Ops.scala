@@ -325,6 +325,16 @@ object Ops {
       .drop("__from", "__to")
   }
 
+  /** `df` hash-partitioned by `keys` into exactly the session's shuffle
+    * partition count. The explicit count keeps the width: AQE coalesces
+    * an advisory `repartition(keys)` of a small relation back to one
+    * task even when a large fan-out follows it (a broadcast expansion,
+    * a pair join), and leaves an exchange with a stated count alone.
+    */
+  def pinPartitions(df: DataFrame, keys: Column*): DataFrame =
+    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
+      keys: _*)
+
   // ── A3: normalize to group total ────────────────────────────────────────
   /** value / sum(value) over the group — profile normalization
     * (code/lib/correction_functions.py:46-47,370-378). Window-sum keeps it
@@ -424,29 +434,35 @@ object Ops {
   /** Per-column data-quality profile of a relation — the first report
     * run against any new table: rows, nulls, EXACT distincts, and
     * min/max rendered as strings (type-erased so one relation profiles
-    * every column type). One aggregation pass computes every column's
-    * statistics together (no per-column scans); the melt to one row
-    * per column happens on the 1×(4·cols) aggregate row. Exact
-    * distincts make the report oracle-checkable; at 100 TB swap in
-    * `approx_count_distinct` consciously — the report is the place
-    * where ±2% matters least.
+    * every column type). One row per column, in `cols` order.
+    *
+    * Each column is one grouped aggregation keyed by the column (count,
+    * min, max per value), folded to its report row: rows = Σ counts,
+    * nulls = the null group's count (null on an empty relation, as a
+    * `sum` over zero rows is), distincts = the non-null groups, min/max
+    * over the groups' own min/max. The k aggregations are independent
+    * shuffle stages that AQE runs concurrently; one aggregation computing
+    * k `countDistinct`s would instead be rewritten into an `Expand` that
+    * copies every row k+1 times into one hash aggregate. Each column is
+    * one scan of `df`, so a caller whose `df` has an expensive lineage
+    * should persist it first. Exact distincts make the report
+    * oracle-checkable; at 100 TB swap in `approx_count_distinct`
+    * consciously — the report is the place where ±2% matters least.
     */
   def profile(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "profile needs at least one column")
-    val aggs = cols.flatMap { c =>
-      Seq(count(lit(1)).as(s"__n_$c"),
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__nn_$c"),
-        countDistinct(col(c)).as(s"__nd_$c"),
-        min(col(c)).cast("string").as(s"__mn_$c"),
-        max(col(c)).cast("string").as(s"__mx_$c"))
-    }
-    val one = df.agg(aggs.head, aggs.tail: _*)
-    val structs = cols.map { c =>
-      struct(lit(c).as("column"), col(s"__n_$c").as("n_rows"),
-        col(s"__nn_$c").as("n_null"), col(s"__nd_$c").as("n_distinct"),
-        col(s"__mn_$c").as("min_s"), col(s"__mx_$c").as("max_s"))
-    }
-    one.select(explode(array(structs: _*)).as("__p")).select(col("__p.*"))
+    cols.map { c =>
+      df.groupBy(col(c).as("__k"))
+        .agg(count(lit(1)).as("__n"), min(col(c)).as("__mn"),
+          max(col(c)).as("__mx"))
+        .agg(coalesce(sum(col("__n")), lit(0L)).as("n_rows"),
+          sum(when(col("__k").isNull, col("__n")).otherwise(0L)).as("n_null"),
+          count(col("__k")).as("n_distinct"),
+          min(col("__mn")).cast("string").as("min_s"),
+          max(col("__mx")).cast("string").as("max_s"))
+        .select(lit(c).as("column"), col("n_rows"), col("n_null"),
+          col("n_distinct"), col("min_s"), col("max_s"))
+    }.reduce(_ union _)
   }
 
   /** Trimmed (winsor-style robust) mean per group on the ppm lattice:

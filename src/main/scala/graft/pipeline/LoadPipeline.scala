@@ -11,9 +11,9 @@ import graft.operators.Ops
   * instead of 8760-column wide matrices (SURVEY §1.1).
   *
   * Scale posture: the TS fact is long-format and partitioned by key;
-  * shares/profiles/weights are broadcast dimensions. Disaggregation from
-  * countries to regions is one broadcast join + one keyed agg — at 100 TB
-  * of TS the plan shape does not change.
+  * shares and weights are broadcast dimensions. The hour-keyed fan-outs
+  * are pinned to the session's shuffle width (`Ops.pinPartitions`), so
+  * their parallelism does not depend on how many files fed them.
   */
 object LoadPipeline {
 
@@ -28,6 +28,12 @@ object LoadPipeline {
     * - recode country names via the mapping table (J10)
     * - sum duplicate countries (A1, :309-313)
     * - gap-fill zeros from the previous day scaled by trend (W1, :315-318)
+    *
+    * The recoded rows are pinned by country to the session's shuffle
+    * width, so the (country, t) sum and the per-country gap-fill window
+    * share that one exchange and run that many tasks wide; an unpinned
+    * plan has two exchanges that AQE coalesces to one task each on a
+    * single-file export.
     */
   def cleanLoad(raw: DataFrame, year: Int, countryMap: DataFrame): DataFrame = {
     // try_make_timestamp_ntz, not make_date: the reference's month×day×hour
@@ -42,7 +48,8 @@ object LoadPipeline {
         when(col("coverage") > 0, col("value") / col("coverage") * 100).otherwise(col("value")))
       .withColumn("t", dayofyear(tsDay) * 24 - 24 + col("hour"))
       .filter(col("t").isNotNull)
-    val recoded = Ops.recode(scaled, "country", countryMap, "from_name", "to_name")
+    val recoded = Ops.pinPartitions(
+      Ops.recode(scaled, "country", countryMap, "from_name", "to_name"), col("country"))
     val summed = recoded.groupBy(col("country"), col("t"))
       .agg(sum(col("value")).as("value"))
     Ops.gapFillDayTrend(summed, Seq("country"), "t", "value")
@@ -91,22 +98,32 @@ object LoadPipeline {
     * profiles: (t, sector, weight) normalized per sector (A3 upstream);
     * regionWeights: (region, country, sector, w) from zonal statistics
     *   (A6), w normalized per (country, sector).
+    *
+    * Scale posture: the large side is the hourly expansion, |regions| ×
+    * |sectors| × |hours| rows, while everything that drives it is small.
+    * So the country-level factors fold first into a coefficient table
+    * with one row per (region, country, sector) — totals ⋈ shares ⋈
+    * weights — which is broadcast into the hourly profiles. The profiles
+    * are pinned by `t` to the session's shuffle width; that partitioning
+    * already satisfies the (region, t) sum, so the expansion and the sum
+    * run that many tasks wide behind one exchange, at any number of
+    * countries. Each term keeps the product order
+    * `((year_total × share) × profile) × w`; only the order in which one
+    * (region, t)'s terms are added depends on the plan.
     */
   def loadTimeseries(load: DataFrame, shares: DataFrame, profiles: DataFrame,
       regionWeights: DataFrame): DataFrame = {
     // A9: yearly totals per country — single definition shared with the
     // exported stats_countries dataset.
     val totals = loadStats(load).select(col("country"), col("year_total"))
-    // country × sector yearly demand, then hourly via the sector profile.
-    val sectorHourly = totals
+    val coefficients = totals
       .join(broadcast(shares), Seq("country"))
-      .join(broadcast(profiles), Seq("sector"))
-      .withColumn("sector_value", col("year_total") * col("share") * col("weight"))
-      .select(col("country"), col("sector"), col("t"), col("sector_value"))
-    // disaggregate to regions and re-aggregate per (region, t).
-    sectorHourly
       .join(broadcast(regionWeights), Seq("country", "sector"))
-      .withColumn("v", col("sector_value") * col("w"))
+      .select(col("region"), col("sector"),
+        (col("year_total") * col("share")).as("__yearly"), col("w"))
+    Ops.pinPartitions(profiles.select(col("t"), col("sector"), col("weight")), col("t"))
+      .join(broadcast(coefficients), Seq("sector"))
+      .withColumn("v", col("__yearly") * col("weight") * col("w"))
       .groupBy(col("region"), col("t"))
       .agg(sum(col("v")).as("value"))
   }

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.ScalarFns
 import graft.geo.GeoFns
@@ -36,21 +35,20 @@ object SitesPipeline {
       .withColumn("lat", GeoFns.stCentroidY(col(wktCol)))
       .withColumn("long", GeoFns.stCentroidX(col(wktCol)))
       .withColumn("area_km2", areaKm2(col(wktCol)))
-    // alphabetic site_id as a rank-by-self-join on the distinct (tiny)
-    // name set instead of a partitionless row_number window: identical
-    // ids for unique names, and the bench log stays free of global-
-    // WindowExec warnings so a real regression is visible.
-    val names = base.select(col("Site")).distinct()
-    // names must be unique after cleaning: the old row_number silently
-    // gave colliding names distinct ids; the rank join would give them
-    // the SAME site_id and merge two geometries downstream — refuse loudly
-    require(names.count() == base.count(),
+    // alphabetic site_id, ranked on the driver: one cleaned name per
+    // region is small enough to collect once. Names must be unique after
+    // cleaning, or two geometries would share a site_id downstream —
+    // refuse loudly (a null name counts as a name here; its row is
+    // dropped below).
+    val names = base.select(col("Site")).collect().map(_.getString(0))
+    require(names.distinct.length == names.length,
       "generateSites: region names collide after clean_names — site_id " +
         "would no longer be unique; disambiguate the input names")
-    val ranked = names.as("a")
-      .join(names.select(col("Site").as("__s")), col("__s") <= col("Site"))
-      .groupBy(col("Site")).agg(count(lit(1)).cast("int").as("site_id"))
-    base.join(broadcast(ranked), "Site")
+    // cleanName emits ASCII, where String order equals Spark's byte order
+    val ids = names.filter(_ != null).sorted.zipWithIndex
+      .map { case (n, i) => n -> (i + 1) }.toMap
+    base.filter(col("Site").isNotNull)
+      .withColumn("site_id", element_at(typedLit(ids), col("Site")))
       .withColumn("slacknode", when(col("site_id") === 1, 1).otherwise(0))
       .select(col("Site"), col("site_id"), col("slacknode"), col("lat"),
         col("long"), col("area_km2"), col(wktCol))

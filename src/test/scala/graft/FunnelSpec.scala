@@ -391,6 +391,23 @@ class FunnelSpec extends AnyFunSuite {
     assert(got(3L) == ((2L, 1L, 0L, 1L, 0L, null)))
   }
 
+  test("markovRemovalEffect: an overflowing transition-count " +
+      "denominator throws instead of wrapping") {
+    // both edges lead to the null absorber (weight 0), so the numerator
+    // stays 0 and only the denominator Σ n can overflow
+    val half = Long.MaxValue / 2 + 1
+    val rows = Array(("__none__", "__start__", "A", half),
+      ("__none__", "A", "__null__", half),
+      ("__none__", "A", "__null__", half))
+    intercept[ArithmeticException] {
+      Funnel.markovDriverIterate(rows, iters = 1)
+    }
+    // the same edges below the overflow iterate normally
+    val ok = Funnel.markovDriverIterate(rows.map(r => r.copy(_4 = 3L)), 2)
+    assert(ok == Map(("__none__", "__start__") -> 0L,
+      ("__none__", "A") -> 0L))
+  }
+
   private def rootCause(t: Throwable): Throwable =
     if (t.getCause == null) t else rootCause(t.getCause)
 }

@@ -20,6 +20,34 @@ class GoldenPipelineSpec extends AnyFunSuite {
     ("R1", "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))"),
     ("R2", "POLYGON ((1 0, 2 0, 2 2, 1 2, 1 0))")).toDF("region", "wkt")
 
+  /** The load chain's inputs: cleaned load, shares, profiles, and region
+    * weights from zonal stats over a rasterized population layer. */
+  private lazy val loadChain = {
+    val rawLoad = (1 to 2).flatMap(day => (1 to 24).flatMap(h => Seq(
+      ("Deutschland", 2015, 1, day, h, 100.0, 10.0 + h),
+      ("France", 2015, 1, day, h, 50.0, 3.0 + h))))
+      .toDF("country", "year", "month", "day", "hour", "coverage", "value")
+    val cmap = Seq(("Deutschland", "DE"), ("France", "FR")).toDF("from_name", "to_name")
+    val load = LoadPipeline.cleanLoad(rawLoad, 2015, cmap)
+    val shares = LoadPipeline.sectorShares(
+      Seq(("DE", 2015, "households", "40"), ("DE", 2015, "industry", "60"),
+        ("FR", 2015, "households", "100")).toDF("country", "year", "sector", "value"),
+      2015, cmap, cmap)
+    val profiles = (1 to 48).flatMap(t => Seq(("households", t, 1.0 / 48), ("industry", t, 1.0 / 48)))
+      .toDF("sector", "t", "weight")
+    val grid10 = InputMaps.pixelGrid(spark, 10, 20, 0, 0, 2, 1) // strip across both regions
+      .withColumn("pop", lit(1.0))
+    val zonal = graft.operators.SpatialOps.zonalStats(grid10, "x", "y", "pop",
+      regions, "wkt", "region")
+    val weights = zonal
+      .withColumn("w", col("zonal_sum") / sum(col("zonal_sum")).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(lit(1))))
+      .crossJoin(Seq("DE", "FR").toDF("country"))
+      .crossJoin(Seq("households", "industry").toDF("sector"))
+      .select(col("region"), col("country"), col("sector"), col("w"))
+    (load, shares, profiles, weights)
+  }
+
   test("micro-Europe: raw inputs -> intermediates -> urbs sheets") {
     // ── grid chain ──
     val rawGrid = Seq(
@@ -37,33 +65,11 @@ class GoldenPipelineSpec extends AnyFunSuite {
       Schemas.transmission, "grid_completed")
 
     // ── load chain ──
-    val rawLoad = (1 to 2).flatMap(day => (1 to 24).flatMap(h => Seq(
-      ("Deutschland", 2015, 1, day, h, 100.0, 10.0 + h),
-      ("France", 2015, 1, day, h, 50.0, 3.0 + h))))
-      .toDF("country", "year", "month", "day", "hour", "coverage", "value")
-    val cmap = Seq(("Deutschland", "DE"), ("France", "FR")).toDF("from_name", "to_name")
-    val load = LoadPipeline.cleanLoad(rawLoad, 2015, cmap)
+    val (load, shares, profiles, weights) = loadChain
     // FR coverage 50 => doubled
     val frT1 = load.filter($"country" === "FR" && $"t" === 1).head.getDouble(2)
     assert(frT1 == 8.0)
 
-    val shares = LoadPipeline.sectorShares(
-      Seq(("DE", 2015, "households", "40"), ("DE", 2015, "industry", "60"),
-        ("FR", 2015, "households", "100")).toDF("country", "year", "sector", "value"),
-      2015, cmap, cmap)
-    val profiles = (1 to 48).flatMap(t => Seq(("households", t, 1.0 / 48), ("industry", t, 1.0 / 48)))
-      .toDF("sector", "t", "weight")
-    // region weights from zonal stats over a rasterized population layer:
-    val grid10 = InputMaps.pixelGrid(spark, 10, 20, 0, 0, 2, 1) // strip across both regions
-      .withColumn("pop", lit(1.0))
-    val zonal = graft.operators.SpatialOps.zonalStats(grid10, "x", "y", "pop",
-      regions, "wkt", "region")
-    val weights = zonal
-      .withColumn("w", col("zonal_sum") / sum(col("zonal_sum")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(lit(1))))
-      .crossJoin(Seq("DE", "FR").toDF("country"))
-      .crossJoin(Seq("households", "industry").toDF("sector"))
-      .select(col("region"), col("country"), col("sector"), col("w"))
     val demand = Schemas.requireSchema(
       LoadPipeline.loadTimeseries(load, shares, profiles, weights)
         .withColumn("t", col("t").cast("int")),
@@ -124,5 +130,11 @@ class GoldenPipelineSpec extends AnyFunSuite {
     assert(trBack.columns.toSeq ==
       Seq("Site In", "Site Out", "Transmission", "Commodity", "eff", "inv-cost", "inst-cap", "cap-up"))
     assert(trBack.count() == sheets("Transmission").count())
+  }
+
+  test("micro-Europe loadTimeseries matches the unpinned formulation to 1e-12 relative") {
+    val (load, shares, profiles, weights) = loadChain
+    LoadTimeseriesReference.assertMatches(
+      LoadPipeline.loadTimeseries(load, shares, profiles, weights), load, shares, profiles, weights)
   }
 }

@@ -105,7 +105,7 @@ class PipelineSpec extends AnyFunSuite {
       ("FR", "households", 1.0)))
   }
 
-  test("loadTimeseries conserves energy through disaggregation") {
+  private lazy val loadChain = {
     val load = (1 to 48).map(t => ("A", t, 10.0)).toDF("country", "t", "value")
     val shares = Seq(("A", "res", 0.6), ("A", "ind", 0.4)).toDF("country", "sector", "share")
     val profiles = (1 to 48).flatMap(t =>
@@ -113,12 +113,23 @@ class PipelineSpec extends AnyFunSuite {
     val weights = Seq(("r1", "A", "res", 0.7), ("r2", "A", "res", 0.3),
       ("r1", "A", "ind", 0.7), ("r2", "A", "ind", 0.3))
       .toDF("region", "country", "sector", "w")
+    (load, shares, profiles, weights)
+  }
+
+  test("loadTimeseries conserves energy through disaggregation") {
+    val (load, shares, profiles, weights) = loadChain
     val got = LoadPipeline.loadTimeseries(load, shares, profiles, weights)
     val total = got.agg(sum($"value")).head.getDouble(0)
     assert(math.abs(total - 480.0) < 1e-9, s"total $total")
     val r1 = got.filter($"region" === "r1").agg(sum($"value")).head.getDouble(0)
     assert(math.abs(r1 - 336.0) < 1e-9)
     assert(got.count() == 96, "48 h x 2 regions")
+  }
+
+  test("loadTimeseries matches the unpinned formulation to 1e-12 relative") {
+    val (load, shares, profiles, weights) = loadChain
+    LoadTimeseriesReference.assertMatches(
+      LoadPipeline.loadTimeseries(load, shares, profiles, weights), load, shares, profiles, weights)
   }
 
   // ── plants chain ───────────────────────────────────────────────────────

@@ -52,6 +52,24 @@ class ProfilesSitesRenewSpec extends AnyFunSuite {
     assert(sites(0).getAs[Double]("area_km2") > 0)
   }
 
+  test("generateSites: names that collide after cleaning refuse; a null " +
+      "name is dropped and the rest are ranked from 1") {
+    val square = "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))"
+    val clash = Seq(("Bayern Süd", square), ("Bayern Sd", square), ("Alsace", square))
+      .toDF("region", "wkt")
+    val err = intercept[IllegalArgumentException] {
+      SitesPipeline.generateSites(clash)
+    }
+    assert(err.getMessage.contains("collide after clean_names"), err.getMessage)
+    val withNull = Seq((Some("Zeeland"), square), (None, square), (Some("Alsace"), square))
+      .toDF("region", "wkt")
+    val sites = SitesPipeline.generateSites(withNull)
+    assert(sites.schema("site_id").dataType == org.apache.spark.sql.types.IntegerType)
+    val got = sites.collect().map(r => (r.getAs[String]("Site"), r.getAs[Int]("site_id"),
+      r.getAs[Int]("slacknode"))).toSet
+    assert(got == Set(("Alsace", 1, 1), ("Zeeland", 2, 0)))
+  }
+
   test("idx<->crd transforms round-trip on the pixel grid") {
     import graft.sources.InputMaps
     val px = Seq((3, 7)).toDF("row", "col")
