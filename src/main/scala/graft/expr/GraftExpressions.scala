@@ -119,8 +119,9 @@ object VecMath {
   }
 
   /** Squared L2 between a row vector (ArrayData) and a centroid, over the
-    * SHORTER length — mirrors the UDF-side `sqDistArr` exactly. Loud on
-    * null slots like [[cosine]].
+    * SHORTER length, accumulated in index order — the same arithmetic as
+    * the interpreted `Similarity` kernels that remain (two-level assign,
+    * k-means init). Loud on null slots like [[cosine]].
     */
   private def sqDist(v: org.apache.spark.sql.catalyst.util.ArrayData,
       c: Array[Double]): Double = {
@@ -139,10 +140,10 @@ object VecMath {
   }
 
   /** Id of the centroid nearest `v` by (squared L2, id) — the coarse
-    * quantizer argmin, bit-identical to the broadcast-UDF form it
-    * replaces (`Similarity.assignByIdUdf`): strict double comparison, ids
-    * break ties, order-independent over distinct ids. Long.MaxValue on an
-    * empty codebook (the UDF's fold identity).
+    * quantizer argmin of every exact IVF/IVF-PQ assignment in
+    * `Similarity`: strict double comparison, ids break ties,
+    * order-independent over distinct ids. Long.MaxValue when no distance
+    * compares — an empty codebook, or a NaN element in `v`.
     */
   def nearestCentroidId(v: org.apache.spark.sql.catalyst.util.ArrayData,
       ids: Array[Long], vecs: Array[Array[Double]]): Long = {

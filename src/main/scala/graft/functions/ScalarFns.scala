@@ -21,6 +21,16 @@ import org.apache.spark.sql.functions._
   */
 object ScalarFns {
 
+  /** The Lehmer/MINSTD modulus, 2^31 − 1. */
+  private[graft] final val LehmerM = 2147483647L
+
+  /** Lehmer/MINSTD step — `(x % M) * 48271 % M` with M = [[LehmerM]].
+    * 48271 · 2^31 < 2^63, so the product never overflows a long under
+    * ANSI mode, and the identical expression replays in the oracle.
+    */
+  private[graft] def lehmer(x: Column): Column =
+    pmod(pmod(x, lit(LehmerM)) * lit(48271L), lit(LehmerM))
+
   /** Parse a European-formatted number ("1 234,56", "1.234,56", "inf") into
     * a double. Thousands separators (space / dot) are stripped, the decimal
     * comma becomes a dot, literal "inf" becomes +Infinity

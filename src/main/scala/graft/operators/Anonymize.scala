@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.ScalarFns.lehmer
 
 /** Privacy-preserving release primitives — the redaction-adjacent
   * half of corpus governance ([[Curation]] removes PII from text;
@@ -429,10 +430,6 @@ object Anonymize {
       .select(col("user"),
         coalesce(col("__n"), lit(0L)).as("n_removed"))
   }
-
-  private val M = 2147483647L // Lehmer/MINSTD modulus, 2^31 - 1
-  private def lehmer(x: Column): Column =
-    pmod(pmod(x, lit(M)) * lit(48271L), lit(M))
 
   /** Noisy group counts in the geometric mechanism's SHAPE: per key,
     * the true count plus two-sided noise with geometric(1/2)

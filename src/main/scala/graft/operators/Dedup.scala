@@ -1023,10 +1023,7 @@ object Dedup {
       nBuckets: Int, maxId: Long, nDocs: Long,
       last: Option[(Long, Long, Long)], lastFp: Option[Long]) {
     def json: String = {
-      val lastJson = last
-        .map { case (mn, mx, c) => s""","lastMin":$mn,"lastMax":$mx,"lastN":$c""" }
-        .getOrElse("") +
-        lastFp.map(f => s""","lastFp":$f""").getOrElse("")
+      val lastJson = IndexStore.replayFields(last, lastFp).map("," + _).mkString
       s"""{"shingleN":$shingleN,"k":$k,"bands":$bands,""" +
         s""""nBuckets":$nBuckets,"maxId":$maxId,"nDocs":$nDocs$lastJson}"""
     }
@@ -1034,18 +1031,11 @@ object Dedup {
 
   private object SigIndexMeta {
     def parse(path: String, raw: String): SigIndexMeta = {
-      def num(key: String): Long =
-        ("\"" + key + "\":(-?[0-9]+)").r.findFirstMatchIn(raw)
-          .map(_.group(1).toLong)
-          .getOrElse(throw new IllegalStateException(s"$path: no '$key' in index meta"))
-      def optLong(key: String): Option[Long] =
-        ("\"" + key + "\":(-?[0-9]+)").r.findFirstMatchIn(raw)
-          .map(_.group(1).toLong)
+      def num(key: String): Long = IndexStore.optLong(raw, key).getOrElse(
+        throw new IllegalStateException(s"$path: no '$key' in index meta"))
+      val (last, lastFp) = IndexStore.parseReplay(raw)
       SigIndexMeta(num("shingleN").toInt, num("k").toInt, num("bands").toInt,
-        num("nBuckets").toInt, num("maxId"), num("nDocs"),
-        for (mn <- optLong("lastMin"); mx <- optLong("lastMax");
-          c <- optLong("lastN")) yield (mn, mx, c),
-        optLong("lastFp"))
+        num("nBuckets").toInt, num("maxId"), num("nDocs"), last, lastFp)
     }
   }
 

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.ScalarFns.{LehmerM, lehmer}
 
 /** Experiment / longitudinal analytics over the event stream — the
   * measurement half of a data-driven pipeline ([[Funnel]] asks "where
@@ -1168,10 +1169,6 @@ object Experiment {
       .select(col("exp"), col("grp"), col("n_subj"), col("o"),
         col("e_micro"), col("chi2_micro"), col("df"))
   }
-
-  private val LehmerM = 2147483647L // MINSTD modulus, 2^31 - 1
-  private def lehmer(x: Column): Column =
-    pmod(pmod(x, lit(LehmerM)) * lit(48271L), lit(LehmerM))
 
   /** Poisson(1) bootstrap cumulative thresholds on the Lehmer [0, M)
     * lattice: tₖ = floor(P(X ≤ k)·M) for k = 0..7, the tail mass

@@ -170,6 +170,25 @@ private[graft] final case class IndexStore(spark: SparkSession, root: String,
 
 private[graft] object IndexStore {
 
+  /** The replay record of the last committed append, as sidecar fields:
+    * `"lastMin"`, `"lastMax"`, `"lastN"` (the batch's id range and size)
+    * and `"lastFp"` (its id fingerprint), each group only when set. The
+    * three index sidecars embed it; [[parseReplay]] reads it back.
+    */
+  def replayFields(last: Option[(Long, Long, Long)],
+      lastFp: Option[Long]): Seq[String] =
+    last.toSeq.flatMap { case (mn, mx, c) =>
+      Seq(s""""lastMin":$mn""", s""""lastMax":$mx""", s""""lastN":$c""")
+    } ++ lastFp.map(f => s""""lastFp":$f""")
+
+  def parseReplay(raw: String): (Option[(Long, Long, Long)], Option[Long]) =
+    (for (mn <- optLong(raw, "lastMin"); mx <- optLong(raw, "lastMax");
+      c <- optLong(raw, "lastN")) yield (mn, mx, c), optLong(raw, "lastFp"))
+
+  /** The integer field `key` of a sidecar's text, when present. */
+  def optLong(raw: String, key: String): Option[Long] =
+    ("\"" + key + "\":(-?[0-9]+)").r.findFirstMatchIn(raw).map(_.group(1).toLong)
+
   // Spark skips `_`/`.` names (`_SUCCESS`, checksums, staging) when it reads
   private def visible(p: Path): Boolean =
     !p.getName.startsWith("_") && !p.getName.startsWith(".")

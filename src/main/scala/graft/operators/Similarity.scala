@@ -1,8 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
+import graft.expr.{ColumnBridge, GraftExpressions, VecMath}
 import graft.functions.VectorFns
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -69,9 +73,9 @@ object Similarity {
     * them just to take an argmin; at 100 TB that shuffle would have been
     * the whole job.) At scale the assignment is computed once and persisted
     * as a partition column, making the probe a partition-pruned scan.
-    * A null element in any vector the cosine rerank scores is refused: the
-    * native kernel fails the job with `IllegalArgumentException` rather than
-    * read the slot as a number.
+    * A vector with a null element is refused: the native nearest-centroid
+    * kernel fails the job with `IllegalArgumentException` rather than read
+    * the slot as a number.
     */
   def ivfTopK(vecs: DataFrame, idCol: String, vecCol: String,
       query: Seq[Double], k: Int, nLists: Int = 16, nProbe: Int = 4): DataFrame = {
@@ -92,26 +96,11 @@ object Similarity {
           s"ivfTopK requires numeric (long-castable) ids; '$idCol' cast to null")
         (r.getLong(0), r.getSeq[Double](1).toArray)
       }
-    def sqDist(a: Seq[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0; val n = math.min(a.length, b.length)
-      while (i < n) { val t = a(i) - b(i); s += t * t; i += 1 }
-      s
-    }
-    // one map-side pass: argmin by squared L2 (ties on smaller cid)
-    val bc = vecs.sparkSession.sparkContext.broadcast(centroids)
-    val assign = udf { (v: Seq[Double]) =>
-      var best = Long.MaxValue; var bestD = Double.PositiveInfinity
-      bc.value.foreach { case (cid, cv) =>
-        val d = sqDist(v, cv)
-        if (d < bestD || (d == bestD && cid < best)) { bestD = d; best = cid }
-      }
-      best
-    }
-    // probe lists nearest to the query — same argmin order, driver-side
-    val probeLists: Seq[Long] = centroids
-      .map { case (cid, cv) => (sqDist(query, cv), cid) }
-      .sorted.take(nProbe).map(_._2).toSeq
-    clean.withColumn("__list", assign(col(vecCol).cast("array<double>")))
+    // one map-side native argmin by squared L2 (ties on smaller cid); the
+    // probe lists nearest the query are the same order, driver-side
+    val probeLists = nearestIds(query, centroids, nProbe)
+    clean.withColumn("__list",
+        GraftExpressions.nearestCentroidId(col(vecCol), centroids))
       .filter(col("__list").isin(probeLists: _*))
       .select(col(idCol), VectorFns.cosine(col(vecCol), q).as("cosine"))
       .orderBy(col("cosine").desc, col(idCol).asc)
@@ -155,31 +144,30 @@ object Similarity {
     s
   }
 
-  /** Map-side argmin of squared L2 against broadcast centroids — returns
-    * the list INDEX (first index wins ties). One shared definition keeps
-    * index build, trained probe and k-means assignment bit-consistent.
+  /** Each vector's coarse list INDEX (0..n-1, INT): the native argmin
+    * over the ids 0..n-1, so ties go to the first index. One shared
+    * definition keeps index build, trained probe and k-means assignment
+    * bit-consistent. A vector at NaN distance from every centroid (a NaN
+    * element) gets -1: the kernel's no-winner `Long.MaxValue` truncates
+    * to -1 under the non-ANSI cast, which no id 0..n-1 is affected by.
+    * A null element is refused with `IllegalArgumentException`.
     */
-  private def assignUdf(spark: org.apache.spark.sql.SparkSession,
-      centroids: Array[Array[Double]]) = {
-    val bc = spark.sparkContext.broadcast(centroids)
-    val fn = udf { (v: Seq[Double]) =>
-      var best = -1; var bestD = Double.PositiveInfinity; var i = 0
-      val cs = bc.value
-      while (i < cs.length) {
-        val d = sqDistArr(v, cs(i))
-        if (d < bestD) { bestD = d; best = i }
-        i += 1
-      }
-      best
-    }
-    (fn, bc)
-  }
+  private def listIndex(v: Column, centroids: Array[Array[Double]]): Column =
+    ColumnBridge.column(Cast(ColumnBridge.expression(
+        GraftExpressions.nearestCentroidId(v, byIndex(centroids))),
+      IntegerType, None, EvalMode.LEGACY))
 
-  /** The nProbe list indices nearest the query (same tie rule). */
-  private def nearestLists(query: Seq[Double],
-      centroids: Array[Array[Double]], nProbe: Int): Seq[Int] =
-    centroids.indices.map(i => (sqDistArr(query, centroids(i)), i))
-      .sorted.take(nProbe).map(_._2)
+  private def byIndex(centroids: Array[Array[Double]]): Array[(Long, Array[Double])] =
+    centroids.zipWithIndex.map { case (c, i) => (i.toLong, c) }
+
+  /** The `nProbe` centroid ids nearest `query` by (squared L2, id),
+    * ascending — the driver-side probe-list pick, through the kernel the
+    * map-side assignment runs, so probe and assignment agree bit-for-bit.
+    */
+  private def nearestIds(query: Seq[Double],
+      centroids: Array[(Long, Array[Double])], nProbe: Int): Seq[Long] =
+    VecMath.nearestCentroidIds(ArrayData.toArrayData(query.toArray),
+      centroids.map(_._1), centroids.map(_._2), nProbe).toLongArray().toSeq
 
   /** Lloyd k-means over the embedding column. Each iteration is one
     * map-side argmin against the broadcast centroids plus one k-row
@@ -188,6 +176,9 @@ object Similarity {
     * the data never re-shuffles). Init is the same deterministic hash
     * sample as [[ivfTopK]], so training is reproducible run-to-run.
     * Empty clusters keep their previous centroid.
+    * A vector with a null element is refused: the farthest-first init's
+    * distance UDF fails the job with Spark's `NOT_NULL_ASSERT_VIOLATION`,
+    * the Lloyd iterations' native kernel with `IllegalArgumentException`.
     */
   def kmeansCentroids(vecs: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int = 5): Array[Array[Double]] = {
@@ -226,13 +217,9 @@ object Similarity {
     val meanAgg = org.apache.spark.sql.functions.udaf(new ArrayMean)
     var it = 0
     while (it < iters) {
-      // eager collect per iteration -> the broadcast can be released
-      // deterministically instead of waiting for the ContextCleaner
-      val (assign, bc) = assignUdf(spark, cents)
-      val means = clean.groupBy(assign(col("v")).as("list"))
+      val means = clean.groupBy(listIndex(col("v"), cents).as("list"))
         .agg(meanAgg(col("v")).as("c"))
         .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
-      bc.unpersist()
       cents = cents.indices.map(i => means.getOrElse(i, cents(i))).toArray
       it += 1
     }
@@ -244,20 +231,18 @@ object Similarity {
     * [[kmeansCentroids]]): map-side argmin assignment, probe the nProbe
     * nearest lists, exact cosine rerank inside them. Same zero-shuffle
     * shape as [[ivfTopK]] — only the centroid source differs.
-    * A null element in any vector the cosine rerank scores is refused: the
-    * native kernel fails the job with `IllegalArgumentException` rather than
-    * read the slot as a number.
+    * A vector with a null element is refused: the native nearest-centroid
+    * kernel fails the job with `IllegalArgumentException` rather than read
+    * the slot as a number. A vector with a NaN element is assigned list
+    * -1, which no probe reads.
     */
   def ivfTopKTrained(vecs: DataFrame, idCol: String, vecCol: String,
       query: Seq[Double], k: Int, centroids: Array[Array[Double]],
       nProbe: Int = 4): DataFrame = {
     val q = array(query.map(lit): _*)
     val clean = vecs.filter(col(vecCol).isNotNull)
-    // lazy result: the broadcast must outlive the returned plan (GC'd by
-    // the ContextCleaner once the DataFrame is unreachable)
-    val (assign, _) = assignUdf(vecs.sparkSession, centroids)
-    val probeLists = nearestLists(query, centroids, nProbe)
-    clean.withColumn("__list", assign(col(vecCol).cast("array<double>")))
+    val probeLists = nearestIds(query, byIndex(centroids), nProbe).map(_.toInt)
+    clean.withColumn("__list", listIndex(col(vecCol), centroids))
       .filter(col("__list").isin(probeLists: _*))
       .select(col(idCol), VectorFns.cosine(col(vecCol), q).as("cosine"))
       .orderBy(col("cosine").desc, col(idCol).asc)
@@ -270,18 +255,20 @@ object Similarity {
     * afterwards is a partition-pruned scan of nProbe/nLists of the data
     * (`PartitionFilters` in the plan, directories never listed for
     * unprobed lists).
+    * A vector with a null element is refused: the native nearest-centroid
+    * kernel fails the job with `IllegalArgumentException` rather than read
+    * the slot as a number. A vector with a NaN element is written to list
+    * `-1`, which no probe reads.
     */
   def writeIvfIndex(vecs: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Double]], path: String): Unit = {
     val spark = vecs.sparkSession
-    val (assign, bcW) = assignUdf(spark, centroids)
     vecs.filter(col(vecCol).isNotNull)
-      .withColumn("__list", assign(col(vecCol).cast("array<double>")))
+      .withColumn("__list", listIndex(col(vecCol), centroids))
       // cluster on the list before the partitioned write: file count
       // bounded by nLists instead of tasks×nLists
       .repartition(col("__list"))
       .write.mode("overwrite").partitionBy("__list").parquet(path)
-    bcW.unpersist() // write is eager; release the centroid copy now
     val sidecar = centroids.map(_.mkString("[", ",", "]"))
       .mkString("{\"centroids\":[", ",", "]}")
     val p = new org.apache.hadoop.fs.Path(path, "_ivf_centroids.json")
@@ -311,7 +298,7 @@ object Similarity {
       "\\[([-0-9.,eE]+)\\]".r.findAllMatchIn(raw)
         .map(_.group(1).split(",").map(_.toDouble)).toArray
     require(centroids.nonEmpty, s"$path: no centroids in _ivf_centroids.json")
-    val probeLists = nearestLists(query, centroids, nProbe)
+    val probeLists = nearestIds(query, byIndex(centroids), nProbe).map(_.toInt)
     val q = array(query.map(lit): _*)
     spark.read.parquet(path)
       .filter(col("__list").isin(probeLists: _*))
@@ -371,18 +358,40 @@ object Similarity {
     require(dim % m == 0, s"m=$m must divide dim=$dim")
     val sub = dim / m
     val bc = spark.sparkContext.broadcast(donors)
-    udf { (v: Seq[Double]) =>
-      Array.tabulate(m) { j =>
-        var best = -1L; var bd = Double.PositiveInfinity
-        bc.value.foreach { case (did, dv) =>
-          var s = 0.0; var i = 0
-          while (i < sub) {
-            val t = v(j * sub + i) - dv(j * sub + i); s += t * t; i += 1
-          }
-          if (s < bd) { bd = s; best = did } // donors id-sorted: ties → min id
-        }
-        best
-      }
+    udf { (v: Seq[Double]) => pqCodes(v.toArray, m, sub, bc.value) }
+  }
+
+  /** The donor nearest subspace `j` of `base` by squared L2 over its `sub`
+    * dims — the PQ encode step of every IVF-PQ write, append and drift
+    * scan. Returns the donor's INDEX in `donors` (-1 when no distance
+    * compares below +∞) and leaves the distance in `dist(0)`; the first
+    * of equal distances wins, so id-sorted donors break ties to the
+    * smaller id. Allocation-free: it runs m times per row.
+    */
+  private def nearestDonor(base: Array[Double], j: Int, sub: Int,
+      donors: Array[(Long, Array[Double])], dist: Array[Double]): Int = {
+    val off = j * sub
+    var best = -1; var bd = Double.PositiveInfinity
+    var k = 0
+    while (k < donors.length) {
+      val dv = donors(k)._2
+      var s = 0.0; var i = 0
+      while (i < sub) { val t = base(off + i) - dv(off + i); s += t * t; i += 1 }
+      if (s < bd) { bd = s; best = k }
+      k += 1
+    }
+    dist(0) = bd
+    best
+  }
+
+  /** The m PQ codes of `base`: each subspace's nearest donor id, -1 where
+    * none compares. */
+  private def pqCodes(base: Array[Double], m: Int, sub: Int,
+      donors: Array[(Long, Array[Double])]): Array[Long] = {
+    val dist = new Array[Double](1)
+    Array.tabulate(m) { j =>
+      val k = nearestDonor(base, j, sub, donors, dist)
+      if (k < 0) -1L else donors(k)._1
     }
   }
 
@@ -405,6 +414,8 @@ object Similarity {
     * runs over sliced vectors — a build-time pass, never per-query.
     * Centroid count is clamped to the smallest subspace's distinct-point
     * yield so every subspace contributes exactly one slice per donor.
+    * A vector with a null element is refused as [[kmeansCentroids]]
+    * refuses it.
     */
   def pqSubspaceCodebooks(vecs: DataFrame, idCol: String, vecCol: String,
       m: Int, nCodes: Int, iters: Int = 5): Array[(Long, Array[Double])] = {
@@ -434,22 +445,48 @@ object Similarity {
   def pqSearchCodes(codes: DataFrame, idCol: String,
       donors: Array[(Long, Array[Double])], query: Seq[Double], k: Int,
       m: Int): DataFrame = {
-    val dim = donors.head._2.length
-    val sub = dim / m
-    val table: Map[(Int, Long), Double] = (for {
-      j <- 0 until m; (did, dv) <- donors
+    adcTopK(codes, idCol, lit(-1L),
+      adcTable(query.toArray, donors, m, Seq(-1L -> null)), k)
+  }
+
+  /** The asymmetric-distance table of one query: entry (list, j, code) is
+    * the squared L2 between subspace j of the query — of its residual
+    * `q − c` for each `(list, c)` of `lists`, or of `q` itself when `c` is
+    * null (plain index, list -1) — and that subspace of donor `code`. The
+    * one table builder of the single-query and batched probes.
+    */
+  private def adcTable(query: Array[Double],
+      donors: Array[(Long, Array[Double])], m: Int,
+      lists: Seq[(Long, Array[Double])]): Map[(Long, Int, Long), Double] = {
+    val sub = donors.head._2.length / m
+    (for {
+      (lst, cv) <- lists
+      j <- 0 until m
+      (did, dv) <- donors
     } yield {
       var s = 0.0; var i = 0
-      while (i < sub) { val t = query(j * sub + i) - dv(j * sub + i); s += t * t; i += 1 }
-      ((j, did), s)
+      while (i < sub) {
+        val qi = j * sub + i
+        val qc = if (cv == null) query(qi) else query(qi) - cv(qi)
+        val t = qc - dv(qi); s += t * t; i += 1
+      }
+      ((lst, j, did), s)
     }).toMap
+  }
+
+  /** ADC top-k of a coded relation: each row's score is the sum of its m
+    * table lookups keyed by its `list`; ascending score, ties on id — a
+    * `TakeOrderedAndProject`.
+    */
+  private def adcTopK(codes: DataFrame, idCol: String, list: Column,
+      table: Map[(Long, Int, Long), Double], k: Int): DataFrame = {
     val bt = codes.sparkSession.sparkContext.broadcast(table)
-    val adc = udf { (cs: Seq[Long]) =>
+    val adc = udf { (lst: Long, cs: Seq[Long]) =>
       var s = 0.0; var j = 0
-      while (j < cs.length) { s += bt.value((j, cs(j))); j += 1 }
+      while (j < cs.length) { s += bt.value((lst, j, cs(j))); j += 1 }
       s
     }
-    codes.select(col(idCol), adc(col("pq_codes")).as("adc"))
+    codes.select(col(idCol), adc(list, col("pq_codes")).as("adc"))
       .orderBy(col("adc").asc, col(idCol).asc)
       .limit(k)
   }
@@ -465,83 +502,88 @@ object Similarity {
       query, k, m)
   }
 
-  /** IVF-PQ: the combined serving shape (FAISS's IVFPQ) — coarse
-    * quantizer prunes to `nProbe` of `nLists` inverted lists, PQ codes
-    * rank within them by asymmetric distance. Both codebooks come from
-    * the same SQL-reproducible hash-donor selection ([[pqDonors]]);
-    * list assignment is one map-side argmin, candidate filtering is an
-    * isin on the list id (partition pruning once the coded relation is
-    * persisted partitioned by `ivf_list`, as [[writeIvfIndex]] does for
-    * raw vectors), and the ADC scan costs m lookups per surviving row.
-    * At billion-vector scale: nProbe/nLists of the corpus scanned, m
-    * bytes per row held — the two savings multiply.
-    */
-  /** Map-side argmin against ID-KEYED centroids (ties → smaller id) — the
-    * coarse quantizer shared by [[ivfPqTopK]] and [[writeIvfPqIndex]], one
-    * definition so build and one-shot agree bit-for-bit. Round-20: a
-    * native codegen expression ([[graft.expr.NearestCentroidIdExpr]] —
-    * same strict-compare/tie arithmetic, order-independent over distinct
-    * ids) instead of an interpreted UDF that converted every vector to
-    * Seq[Double]; the nLists-bounded codebook rides in the expression, so
-    * the broadcast plumbing goes too.
-    */
-  private def assignByIdUdf(spark: org.apache.spark.sql.SparkSession,
-      centroids: Array[(Long, Array[Double])]): Column => Column =
-    v => graft.expr.GraftExpressions.nearestCentroidId(v, centroids)
-
-  /** TWO-LEVEL approximate coarse assignment for huge list counts (the
-    * inverted-multi-index idea, Babenko & Lempitsky 2012, reduced to one
-    * extra level): the centroids are themselves grouped under
+  /** Coarse assignment of one row vector for the UDF paths: the centroid
+    * nearest `v` by (squared L2, id) — strict compare, smaller id on
+    * ties — searched over every centroid (`wGroups` = 0) or TWO-LEVEL
+    * (`wGroups` > 0): the approximate assignment for huge list counts
+    * (the inverted-multi-index idea, Babenko & Lempitsky 2012, reduced
+    * to one extra level). There the centroids are grouped under
     * g ≈ √nLists hash-drawn representatives; a row finds its `wGroups`
     * nearest representatives (O(g)) and scans only those groups'
     * centroids (O(wGroups·nLists/g)) — ~√nLists distance evaluations per
     * row instead of nLists. Approximate: exact whenever the true nearest
     * centroid's group is probed (spec: ≥99% agreement on clustered data
     * at wGroups=4). Ties break identically to the exact assigner, so
-    * agreement cases are bit-identical.
+    * agreement cases are bit-identical. The grouping runs the native
+    * argmin, whose +∞/NaN answers (smallest id at +∞; `Long.MaxValue`,
+    * a group no row probes, when every distance is NaN) are the ones the
+    * earlier hand-written grouping loop gave. Built once on the driver
+    * and broadcast.
     */
-  private def hierarchicalAssignUdf(spark: org.apache.spark.sql.SparkSession,
-      centroids: Array[(Long, Array[Double])], wGroups: Int) = {
-    val g = math.max(1, math.round(math.sqrt(centroids.length.toDouble)).toInt)
-    def knuth(id: Long): Long =
-      (((id % 2147483648L) + 2147483648L) % 2147483648L) * 2654435761L % 4294967296L
-    val reps = centroids.sortBy(c => (knuth(c._1), c._1)).take(g)
-    def nearestRep(v: Array[Double]): Long = {
-      var best = Long.MaxValue; var bd = Double.PositiveInfinity
-      reps.foreach { case (rid, rv) =>
-        val d = sqDistArr(v.toSeq, rv)
-        if (d < bd || (d == bd && rid < best)) { bd = d; best = rid }
+  private final class CoarseAssigner(centroids: Array[(Long, Array[Double])],
+      wGroups: Int) extends Serializable {
+    // the answer when no distance compares (a NaN element): the sentinel
+    // id, and the first centroid for a residual
+    private val none = (Long.MaxValue, centroids.head._2)
+    // representatives: the g smallest Knuth id-hashes, ties on id
+    private val reps: Array[(Long, Array[Double])] =
+      if (wGroups <= 0) Array.empty
+      else {
+        def knuth(id: Long): Long = (((id % 2147483648L) + 2147483648L) %
+          2147483648L) * 2654435761L % 4294967296L
+        val g = math.max(1, math.round(math.sqrt(centroids.length.toDouble)).toInt)
+        centroids.sortBy(c => (knuth(c._1), c._1)).take(g)
       }
-      best
-    }
-    val grouped: Map[Long, Array[(Long, Array[Double])]] =
-      centroids.groupBy(c => nearestRep(c._2))
-    val bcReps = spark.sparkContext.broadcast(reps)
-    val bcGroups = spark.sparkContext.broadcast(grouped)
-    udf { (v: Seq[Double]) =>
-      val near = bcReps.value
-        .map { case (rid, rv) => (sqDistArr(v, rv), rid) }
-        .sorted.take(wGroups)
-      var best = Long.MaxValue; var bd = Double.PositiveInfinity
-      near.foreach { case (_, rid) =>
-        bcGroups.value.getOrElse(rid, Array.empty).foreach { case (cid, cv) =>
-          val d = sqDistArr(v, cv)
-          if (d < bd || (d == bd && cid < best)) { bd = d; best = cid }
+    // each centroid under its nearest representative, same tie rule
+    private val groups: Map[Long, Array[(Long, Array[Double])]] =
+      if (reps.isEmpty) Map.empty
+      else {
+        val ids = reps.map(_._1); val vecs = reps.map(_._2)
+        centroids.groupBy(c =>
+          VecMath.nearestCentroidId(ArrayData.toArrayData(c._2), ids, vecs))
+      }
+
+    def nearest(v: Seq[Double]): (Long, Array[Double]) = {
+      var best = none; var bd = Double.PositiveInfinity
+      def scan(cands: Array[(Long, Array[Double])]): Unit =
+        cands.foreach { c =>
+          val d = sqDistArr(v, c._2)
+          if (d < bd || (d == bd && c._1 < best._1)) { bd = d; best = c }
         }
-      }
+      if (reps.isEmpty) scan(centroids)
+      else reps.map { case (rid, rv) => (sqDistArr(v, rv), rid) }
+        .sorted.take(wGroups)
+        .foreach { case (_, rid) => scan(groups.getOrElse(rid, Array.empty)) }
       best
     }
   }
 
-  /** The nProbe centroid IDS nearest the query (ties → smaller id). */
-  private def nearestListIds(query: Seq[Double],
-      centroids: Array[(Long, Array[Double])], nProbe: Int): Seq[Long] =
-    centroids.map { case (cid, cv) => (sqDistArr(query, cv), cid) }
-      .sorted.take(nProbe).map(_._2).toSeq
+  /** Coarse list ids for an IVF-PQ write, append or drift scan: the
+    * two-level [[CoarseAssigner]] when `assignGroups` > 0 (Long.MaxValue
+    * when no distance compares), else the native exact argmin, which
+    * refuses a null element with `IllegalArgumentException`. */
+  private def coarseAssign(spark: org.apache.spark.sql.SparkSession,
+      centroids: Array[(Long, Array[Double])], assignGroups: Int): Column => Column =
+    if (assignGroups <= 0) GraftExpressions.nearestCentroidId(_, centroids)
+    else {
+      val bc = spark.sparkContext.broadcast(new CoarseAssigner(centroids, assignGroups))
+      val fn = udf { (v: Seq[Double]) => bc.value.nearest(v)._1 }
+      fn(_)
+    }
 
   /** One-shot IVF-PQ top-k: hash-donor coarse lists and PQ codebooks, the
-    * `nProbe` nearest lists scored by ADC. A vector with a null element
-    * is refused: the native nearest-centroid kernel fails the job with
+    * `nProbe` nearest lists scored by ADC. This is the combined serving
+    * shape (FAISS's IVFPQ): the coarse quantizer prunes to `nProbe` of
+    * `nLists` inverted lists, PQ codes rank within them by asymmetric
+    * distance. Both codebooks come from the same SQL-reproducible
+    * hash-donor selection ([[pqDonors]]); list assignment is one map-side
+    * argmin, candidate filtering is an isin on the list id (partition
+    * pruning once the coded relation is persisted partitioned by
+    * `ivf_list`, as [[writeIvfIndex]] does for raw vectors), and the ADC
+    * scan costs m lookups per surviving row. At billion-vector scale:
+    * nProbe/nLists of the corpus scanned, m bytes per row held — the two
+    * savings multiply. A vector with a null element is refused: the
+    * native nearest-centroid kernel fails the job with
     * `IllegalArgumentException` rather than read the slot as a number.
     */
   def ivfPqTopK(vecs: DataFrame, idCol: String, vecCol: String,
@@ -550,14 +592,14 @@ object Similarity {
     val clean = vecs.filter(col(vecCol).isNotNull)
     val centroids = pqDonors(clean, idCol, vecCol, nLists)
     val donors = pqDonors(clean, idCol, vecCol, nCodes)
-    val assign = assignByIdUdf(clean.sparkSession, centroids)
-    val probed = nearestListIds(query, centroids, nProbe)
+    val probed = nearestIds(query, centroids, nProbe)
     // ONE scan: assign → probe filter → encode, so codes are computed
     // only for rows inside the probed lists
     val encode = pqEncodeUdf(clean.sparkSession, donors, m)
     val coded = clean.select(col(idCol),
         col(vecCol).cast("array<double>").as("__v"),
-        assign(col(vecCol).cast("array<double>")).as("ivf_list"))
+        GraftExpressions.nearestCentroidId(col(vecCol).cast("array<double>"),
+          centroids).as("ivf_list"))
       .filter(col("ivf_list").isin(probed: _*))
       .select(col(idCol), encode(col("__v")).as("pq_codes"))
     pqSearchCodes(coded, idCol, donors, query, k, m)
@@ -648,10 +690,7 @@ object Similarity {
           .select(col(idCol), col("__le._1").as("ivf_list"),
             col("__le._2").as("pq_codes"))
       } else {
-        val assign: Column => Column =
-          if (assignGroups > 0)
-            hierarchicalAssignUdf(spark, centroids, assignGroups)(_)
-          else assignByIdUdf(spark, centroids)
+        val assign = coarseAssign(spark, centroids, assignGroups)
         val encode = pqEncodeUdf(spark, donors, m)
         clean.select(col(idCol).cast("long").as(idCol),
           assign(col(vecCol).cast("array<double>")).as("ivf_list"),
@@ -758,28 +797,24 @@ object Similarity {
 
   /** Each donor replaced by its residual against its own nearest centroid
     * (same argmin + tie-break as assignment — bit-consistent with the SQL
-    * oracle). Driver-side over nCodes rows.
+    * oracle). Driver-side over nCodes rows. A donor at +∞ from every
+    * centroid takes the smallest id at +∞, one at NaN from all of them
+    * the first centroid — as the earlier hand-written loop did.
     */
   private def residualizeDonors(donors: Array[(Long, Array[Double])],
-      centroids: Array[(Long, Array[Double])]): Array[(Long, Array[Double])] =
+      centroids: Array[(Long, Array[Double])]): Array[(Long, Array[Double])] = {
+    val ids = centroids.map(_._1); val vecs = centroids.map(_._2)
     donors.map { case (id, v) =>
-      (id, Array.tabulate(v.length)(i => v(i) - nearestCentroidVec(v, centroids)(i)))
+      val cid = VecMath.nearestCentroidId(ArrayData.toArrayData(v), ids, vecs)
+      // no winner (a NaN element): the first centroid
+      val cv = centroids.find(_._1 == cid).getOrElse(centroids.head)._2
+      (id, Array.tabulate(v.length)(i => v(i) - cv(i)))
     }
-
-  private def nearestCentroidVec(v: Array[Double],
-      centroids: Array[(Long, Array[Double])]): Array[Double] = {
-    var best = Long.MaxValue; var bd = Double.PositiveInfinity
-    var bv: Array[Double] = centroids.head._2
-    centroids.foreach { case (cid, cv) =>
-      val d = sqDistArr(v.toSeq, cv)
-      if (d < bd || (d == bd && cid < best)) { bd = d; best = cid; bv = cv }
-    }
-    bv
   }
 
   /** Fused assign-subtract-encode for residual indexes: one pass computes
     * the coarse list (exact, or two-level when `assignGroups` > 0 — see
-    * [[hierarchicalAssignUdf]]), the residual, and its m codes against
+    * [[CoarseAssigner]]), the residual, and its m codes against
     * the residual codebooks. Returns (list, codes). Fused because a
     * separate assign column would be double-evaluated once Catalyst
     * collapses the projections (deterministic UDFs inline into consumers).
@@ -791,54 +826,12 @@ object Similarity {
     val dim = donorsRes.head._2.length
     require(dim % m == 0, s"m=$m must divide dim=$dim")
     val sub = dim / m
-    val g = math.max(1, math.round(math.sqrt(centroids.length.toDouble)).toInt)
-    def knuth(id: Long): Long =
-      (((id % 2147483648L) + 2147483648L) % 2147483648L) * 2654435761L % 4294967296L
-    val reps: Array[(Long, Array[Double])] =
-      if (assignGroups > 0) centroids.sortBy(c => (knuth(c._1), c._1)).take(g)
-      else Array.empty
-    val grouped: Map[Long, Array[(Long, Array[Double])]] =
-      if (assignGroups > 0) centroids.groupBy { c =>
-        var best = Long.MaxValue; var bd = Double.PositiveInfinity
-        reps.foreach { case (rid, rv) =>
-          val d = sqDistArr(c._2.toSeq, rv)
-          if (d < bd || (d == bd && rid < best)) { bd = d; best = rid }
-        }
-        best
-      }
-      else Map.empty
-    val bcC = spark.sparkContext.broadcast(centroids)
-    val bcReps = spark.sparkContext.broadcast(reps)
-    val bcGroups = spark.sparkContext.broadcast(grouped)
+    val bcA = spark.sparkContext.broadcast(new CoarseAssigner(centroids, assignGroups))
     val bcD = spark.sparkContext.broadcast(donorsRes)
     udf { (v: Seq[Double]) =>
-      var bestC = Long.MaxValue; var bd = Double.PositiveInfinity
-      var bv: Array[Double] = bcC.value.head._2
-      def scan(cands: Array[(Long, Array[Double])]): Unit =
-        cands.foreach { case (cid, cv) =>
-          var s = 0.0; var i = 0; val n = math.min(v.length, cv.length)
-          while (i < n) { val t = v(i) - cv(i); s += t * t; i += 1 }
-          if (s < bd || (s == bd && cid < bestC)) { bd = s; bestC = cid; bv = cv }
-        }
-      if (assignGroups > 0)
-        bcReps.value.map { case (rid, rv) => (sqDistArr(v, rv), rid) }
-          .sorted.take(assignGroups)
-          .foreach { case (_, rid) =>
-            scan(bcGroups.value.getOrElse(rid, Array.empty)) }
-      else scan(bcC.value)
-      val r = Array.tabulate(v.length)(i => v(i) - bv(i))
-      val codes = Array.tabulate(m) { j =>
-        var best = -1L; var bdj = Double.PositiveInfinity
-        bcD.value.foreach { case (did, dv) =>
-          var s = 0.0; var i = 0
-          while (i < sub) {
-            val t = r(j * sub + i) - dv(j * sub + i); s += t * t; i += 1
-          }
-          if (s < bdj) { bdj = s; best = did } // donors id-sorted: ties → min id
-        }
-        best
-      }
-      (bestC, codes)
+      val (lst, cv) = bcA.value.nearest(v)
+      val r = Array.tabulate(v.length)(i => v(i) - cv(i))
+      (lst, pqCodes(r, m, sub, bcD.value))
     }
   }
 
@@ -867,17 +860,11 @@ object Similarity {
           val cv = bcC.value(lst)
           Array.tabulate(v.length)(i => v(i) - cv(i))
         }
+      val dist = new Array[Double](1)
       var tot = 0.0; var j = 0
       while (j < m) {
-        var bdj = Double.PositiveInfinity
-        bcD.value.foreach { case (_, dv) =>
-          var s = 0.0; var i = 0
-          while (i < sub) {
-            val t = base(j * sub + i) - dv(j * sub + i); s += t * t; i += 1
-          }
-          if (s < bdj) bdj = s
-        }
-        tot += bdj; j += 1
+        nearestDonor(base, j, sub, bcD.value, dist)
+        tot += dist(0); j += 1
       }
       tot
     }
@@ -885,10 +872,7 @@ object Similarity {
     // residual error needs the row's coarse list; plain-mode error is
     // list-independent (lst unused — pass a constant)
     val lstCol =
-      if (!residual) lit(-1L)
-      else if (assignGroups > 0)
-        hierarchicalAssignUdf(spark, centroids, assignGroups)(vcol)
-      else assignByIdUdf(spark, centroids)(vcol)
+      if (!residual) lit(-1L) else coarseAssign(spark, centroids, assignGroups)(vcol)
     rel.filter(col(vecCol).isNotNull)
       .select(err(vcol, lstCol).as("__qe"))
       .agg(avg(col("__qe"))).head().getDouble(0)
@@ -931,10 +915,7 @@ object Similarity {
       def enc(arr: Array[(Long, Array[Double])]): String = arr
         .map { case (id, v) => s"""{"id":$id,"v":${v.mkString("[", ",", "]")}}""" }
         .mkString("[", ",", "]")
-      val lastJson = last
-        .map { case (mn, mx, c) => s""""lastMin":$mn,"lastMax":$mx,"lastN":$c,""" }
-        .getOrElse("") +
-        lastFp.map(f => s""""lastFp":$f,""").getOrElse("")
+      val lastJson = IndexStore.replayFields(last, lastFp).map(_ + ",").mkString
       // drift telemetry (NaN baseErr = pre-telemetry index, field omitted)
       val driftJson = (if (baseErr.isNaN) "" else s""""baseErr":$baseErr,""") +
         (if (appendErrs.isEmpty) ""
@@ -952,11 +933,8 @@ object Similarity {
 
   private object IvfPqMeta {
     def parse(path: String, raw: String): IvfPqMeta = {
-      def long(key: String): Long =
-        ("\"" + key + "\":(-?[0-9]+)").r.findFirstMatchIn(raw)
-          .getOrElse(throw new IllegalStateException(
-            s"$path: no '$key' in _ivfpq_meta.json"))
-          .group(1).toLong
+      def long(key: String): Long = IndexStore.optLong(raw, key).getOrElse(
+        throw new IllegalStateException(s"$path: no '$key' in _ivfpq_meta.json"))
       val m = long("m").toInt
       def arr(key: String): Array[(Long, Array[Double])] = {
         // entries are {"id":N,"v":[...]} objects; the section runs from its
@@ -979,11 +957,7 @@ object Similarity {
         .exists(_.group(1) == "true")
       val assignGroups = "\"assignGroups\":([0-9]+)".r.findFirstMatchIn(raw)
         .map(_.group(1).toInt).getOrElse(0)
-      def optLong(key: String): Option[Long] =
-        ("\"" + key + "\":(-?[0-9]+)").r.findFirstMatchIn(raw)
-          .map(_.group(1).toLong)
-      val last = for (mn <- optLong("lastMin"); mx <- optLong("lastMax");
-        c <- optLong("lastN")) yield (mn, mx, c)
+      val (last, lastFp) = IndexStore.parseReplay(raw)
       val baseErr = "\"baseErr\":([-+0-9.eE]+)".r.findFirstMatchIn(raw)
         .map(_.group(1).toDouble).getOrElse(Double.NaN)
       val appendErrs = "\"appendErrs\":\\[([^\\]]*)\\]".r.findFirstMatchIn(raw)
@@ -1005,8 +979,7 @@ object Similarity {
         }
       }
       IvfPqMeta(m, long("maxId"), long("nVecs"), residual, assignGroups,
-        centroids, donors, last, optLong("lastFp"), baseErr, appendErrs, perm,
-        rot)
+        centroids, donors, last, lastFp, baseErr, appendErrs, perm, rot)
     }
   }
 
@@ -1086,10 +1059,7 @@ object Similarity {
           .select(col(idCol), col("__le._1").as("ivf_list"),
             col("__le._2").as("pq_codes"))
       } else {
-        val assign: Column => Column =
-          if (meta.assignGroups > 0)
-            hierarchicalAssignUdf(spark, meta.centroids, meta.assignGroups)(_)
-          else assignByIdUdf(spark, meta.centroids)
+        val assign = coarseAssign(spark, meta.centroids, meta.assignGroups)
         val encode = pqEncodeUdf(spark, meta.donors, meta.m)
         clean.select(col(idCol), assign(col("__v")).as("ivf_list"),
           encode(col("__v")).as("pq_codes"))
@@ -1183,43 +1153,17 @@ object Similarity {
     val meta = readIvfPqMeta(spark, path)
     // balanced/opq index: the query joins the stored space here
     val query = rotQuery(permQuery(rawQuery, meta.perm), meta.rot)
-    val probed = nearestListIds(query, meta.centroids, nProbe)
-    if (!meta.residual) {
-      val codes = IndexStore.read(spark, s"$path/codes")
-        .filter(col("ivf_list").isin(probed: _*))
-        .select(col(idCol), col("pq_codes"))
-      return pqSearchCodes(codes, idCol, meta.donors, query, k, meta.m)
-    }
-    // residual probe: one ADC table PER PROBED LIST — the query residual
-    // against list l is (q − c_l), so a row's m lookups are keyed by its
-    // own list. nProbe·m·nCodes entries, driver-built and broadcast.
-    val dim = meta.donors.head._2.length
-    val sub = dim / meta.m
+    val probed = nearestIds(query, meta.centroids, nProbe)
+    // a residual index scores each row against the table of ITS list —
+    // the query residual against list l is (q − c_l): nProbe·m·nCodes
+    // entries, driver-built and broadcast; a plain one has one table
     val cmap = meta.centroids.toMap
-    val table: Map[(Long, Int, Long), Double] = (for {
-      lst <- probed
-      cv = cmap(lst)
-      j <- 0 until meta.m
-      (did, dv) <- meta.donors
-    } yield {
-      var s = 0.0; var i = 0
-      while (i < sub) {
-        val qi = j * sub + i
-        val t = (query(qi) - cv(qi)) - dv(qi); s += t * t; i += 1
-      }
-      ((lst, j, did), s)
-    }).toMap
-    val bt = spark.sparkContext.broadcast(table)
-    val adc = udf { (lst: Long, cs: Seq[Long]) =>
-      var s = 0.0; var j = 0
-      while (j < cs.length) { s += bt.value((lst, j, cs(j))); j += 1 }
-      s
-    }
-    IndexStore.read(spark, s"$path/codes")
-      .filter(col("ivf_list").isin(probed: _*))
-      .select(col(idCol), adc(col("ivf_list"), col("pq_codes")).as("adc"))
-      .orderBy(col("adc").asc, col(idCol).asc)
-      .limit(k)
+    val (list, lists) =
+      if (meta.residual) (col("ivf_list"), probed.map(l => l -> cmap(l)))
+      else (lit(-1L), Seq(-1L -> null))
+    adcTopK(IndexStore.read(spark, s"$path/codes")
+        .filter(col("ivf_list").isin(probed: _*)),
+      idCol, list, adcTable(query.toArray, meta.donors, meta.m, lists), k)
   }
 
   /** k-nearest-neighbor GRAPH: every vector's k most-cosine-similar
@@ -2063,40 +2007,30 @@ object Similarity {
     require(qs.map(_._1).distinct.length == qs.length,
       "ivfPqTopKIndexedBatch: duplicate query ids in the batch — two rows " +
         "sharing an id would silently shadow each other's vectors")
-    val dim = meta.donors.head._2.length
-    val sub = dim / meta.m
     val probedBy: Map[Long, Seq[Long]] = qs.map { case (qid, qv) =>
-      qid -> nearestListIds(qv.toSeq, meta.centroids, nProbe)
+      qid -> nearestIds(qv.toSeq, meta.centroids, nProbe)
     }.toMap
     val listToQids: Map[Long, Array[Long]] = probedBy.toSeq
       .flatMap { case (qid, ls) => ls.map(_ -> qid) }
       .groupBy(_._1).map { case (l, ps) => l -> ps.map(_._2).sorted.toArray }
     val allLists = listToQids.keys.toSeq
     val cmap = meta.centroids.toMap
-    // table key: (qid, lst, j, code) for residual; lst folded to -1 for
-    // plain (the query-donor distance is list-independent there)
-    val table: Map[(Long, Long, Int, Long), Double] = (for {
-      (qid, qv) <- qs.toSeq
-      lst <- if (meta.residual) probedBy(qid) else Seq(-1L)
-      j <- 0 until meta.m
-      (did, dv) <- meta.donors
-    } yield {
-      var s = 0.0; var i = 0
-      while (i < sub) {
-        val qi = j * sub + i
-        val qc = if (meta.residual) qv(qi) - cmap(lst)(qi) else qv(qi)
-        val t = qc - dv(qi); s += t * t; i += 1
-      }
-      ((qid, lst, j, did), s)
-    }).toMap
-    val bt = spark.sparkContext.broadcast(table)
+    // one table per query, keyed (list, j, code); list -1 for a plain
+    // index (the query-donor distance is list-independent there)
+    val tables: Map[Long, Map[(Long, Int, Long), Double]] = qs.map {
+      case (qid, qv) => qid -> adcTable(qv, meta.donors, meta.m,
+        if (meta.residual) probedBy(qid).map(l => l -> cmap(l))
+        else Seq(-1L -> null))
+    }.toMap
+    val bt = spark.sparkContext.broadcast(tables)
     val bq = spark.sparkContext.broadcast(listToQids)
     val residual = meta.residual
     val score = udf { (lst: Long, cs: Seq[Long]) =>
       bq.value.getOrElse(lst, Array.empty[Long]).map { qid =>
+        val t = bt.value(qid)
         val tl = if (residual) lst else -1L
         var s = 0.0; var j = 0
-        while (j < cs.length) { s += bt.value((qid, tl, j, cs(j))); j += 1 }
+        while (j < cs.length) { s += t((tl, j, cs(j))); j += 1 }
         (qid, s)
       }.toSeq
     }

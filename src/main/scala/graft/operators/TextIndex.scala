@@ -87,10 +87,7 @@ object TextIndex {
   private case class Stats(n: Double, avgdl: Double, nBuckets: Int,
       maxId: Long, last: Option[(Long, Long, Long)], lastFp: Option[Long]) {
     def json: String = {
-      val lastJson = last
-        .map { case (mn, mx, c) => s""","lastMin":$mn,"lastMax":$mx,"lastN":$c""" }
-        .getOrElse("") +
-        lastFp.map(f => s""","lastFp":$f""").getOrElse("")
+      val lastJson = IndexStore.replayFields(last, lastFp).map("," + _).mkString
       s"""{"n":$n,"avgdl":$avgdl,"nBuckets":$nBuckets,"maxId":$maxId$lastJson}"""
     }
   }
@@ -101,16 +98,12 @@ object TextIndex {
         ("\"" + key + "\":([-0-9.eE]+)").r.findFirstMatchIn(raw)
           .map(_.group(1).toDouble)
           .getOrElse(throw new IllegalStateException(s"$path: no '$key' in stats"))
-      def optLong(key: String): Option[Long] =
-        ("\"" + key + "\":(-?[0-9]+)").r.findFirstMatchIn(raw)
-          .map(_.group(1).toLong)
+      val (last, lastFp) = IndexStore.parseReplay(raw)
       Stats(num("n"), num("avgdl"), num("nBuckets").toInt,
         // pre-rolling sidecars have no maxId: treat as unavailable — append
         // refuses with a rebuild hint, search never needs it
-        optLong("maxId").getOrElse(Long.MaxValue),
-        for (mn <- optLong("lastMin"); mx <- optLong("lastMax");
-          c <- optLong("lastN")) yield (mn, mx, c),
-        optLong("lastFp"))
+        IndexStore.optLong(raw, "maxId").getOrElse(Long.MaxValue),
+        last, lastFp)
     }
   }
 

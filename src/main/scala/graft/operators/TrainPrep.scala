@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.ScalarFns.{LehmerM, lehmer}
 
 /** Trainer-side data preparation — the operators that turn a curated,
   * tokenized corpus into what a training loop actually consumes:
@@ -18,14 +19,6 @@ import org.apache.spark.sql.functions._
   * a window frame.
   */
 object TrainPrep {
-
-  /** Lehmer/MINSTD step — `(x % M) * 48271 % M` with M = 2^31 − 1.
-    * 48271 · 2^31 < 2^63, so the product never overflows a long under
-    * ANSI mode, and the identical expression replays in the oracle.
-    */
-  private val M = 2147483647L
-  private def lehmer(x: Column): Column =
-    pmod(pmod(x, lit(M)) * lit(48271L), lit(M))
 
   /** T5-style span corruption: deterministically mask ~10% of word
     * positions (`(docId·31 + pos·7) % 10 == 0` — seeded, replayable),
@@ -451,7 +444,7 @@ object TrainPrep {
       .crossJoin(broadcast(p0.join(qdf, Seq("label"))))
       .filter(col("ex_id") =!= col("test_id"))
       .withColumn("h", lehmer(pmod(col("test_id") * lit(131L)
-        + col("ex_id") * lit(17L) + lit(seed), lit(M))))
+        + col("ex_id") * lit(17L) + lit(seed), lit(LehmerM))))
       .withColumn("ex_rank", row_number().over(byTestLabel).cast("int") - 1)
       .filter(col("ex_rank") < col("quota"))
       .select(col("test_id"), col("label"), col("ex_rank"), col("ex_id"))

@@ -693,14 +693,40 @@ class DedupSimilaritySpec extends AnyFunSuite {
         "CAST(d AS DOUBLE) / 64.0))").as("embedding"))
     val idxHoled = java.nio.file.Files.createTempDirectory("graft_pqnull")
       .resolve("idx").toString
-    for (refused <- Seq(
+    val withHole = vecs.unionByName(holed)
+    val cents = Similarity.pqDonors(vecs, "vec_id", "embedding", 8).map(_._2)
+    val ivfHoled = java.nio.file.Files.createTempDirectory("graft_ivfnull")
+      .resolve("idx").toString
+    for (refused <- Seq[() => Any](
         () => Similarity.writeIvfPqIndex(vecs.unionByName(holed), "vec_id",
           "embedding", idxHoled, nLists = 8, m = 8, nCodes = 8),
         () => Similarity.appendToIvfPqIndex(holed, "vec_id", "embedding",
-          idx))) {
+          idx),
+        // the IVF paths routed through the same kernel refuse it too
+        () => Similarity.ivfTopK(withHole, "vec_id", "embedding", q, k = 5,
+          nLists = 8, nProbe = 2).collect(),
+        () => Similarity.ivfTopKTrained(withHole, "vec_id", "embedding", q,
+          k = 5, centroids = cents, nProbe = 2).collect(),
+        () => Similarity.writeIvfIndex(withHole, "vec_id", "embedding", cents,
+          ivfHoled),
+        () => Similarity.kmeansCentroids(withHole, "vec_id", "embedding",
+          k = 1, iters = 1))) {
       val e = rc(intercept[Exception](refused()))
       assert(e.isInstanceOf[IllegalArgumentException] &&
         e.getMessage.contains("null array element at index 5"), e.toString)
+    }
+    // k-means with k > 1 (and so the PQ codebook training) meets the null
+    // slot first in its farthest-first init; it must refuse it too, either
+    // naming the slot or with Spark's not-null assertion from that UDF
+    for (refused <- Seq[() => Any](
+        () => Similarity.kmeansCentroids(withHole, "vec_id", "embedding",
+          k = 4, iters = 1),
+        () => Similarity.pqSubspaceCodebooks(withHole, "vec_id", "embedding",
+          m = 8, nCodes = 4, iters = 1))) {
+      val e = rc(intercept[Exception](refused()))
+      assert((e.isInstanceOf[IllegalArgumentException] &&
+        e.getMessage.contains("null array element at index 5")) ||
+        e.getMessage.contains("NOT_NULL_ASSERT_VIOLATION"), e.toString)
     }
     // the refused append wrote nothing: no pending marker is left, the
     // index answers exactly as before, and a later valid append commits
